@@ -112,6 +112,7 @@ object GraftSession {
       Seq(ShingleFunctions.ShingleName, ShingleFunctions.ShingleSeqName,
         ShingleFunctions.SimHashName, ShingleFunctions.MinHashName) -> (ShingleFunctions.register _),
       Seq(TokenStats.Name) -> (TokenStats.register _),
+      Seq(WordTokens.Name) -> (WordTokens.register _),
       Seq(RepetitionStats.Name) -> (RepetitionStats.register _),
       Seq(LshBuckets.Name) -> (LshBuckets.register _))
     for ((names, reg) <- regs if !names.forall(s.catalog.functionExists))

@@ -25,12 +25,19 @@ object Shingles {
   private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
-  /** Whitespace tokens of `s` (empties dropped) — THE tokenizer every
-    * native text expression shares ([[TokenStats]] included), so the
-    * \s+-equivalence invariant lives in exactly one place. Returns java
-    * Strings: consumers that need hashing parity convert the individual
-    * token (one conversion), instead of every token paying an encode AND
-    * a decode.
+  /** Whitespace tokens of `s` (empties dropped) — the tokenizer every
+    * native text expression that keeps tokens VERBATIM shares
+    * ([[TokenStats]] included), so the \s+-equivalence invariant lives
+    * in exactly one place. Returns java Strings: consumers that need
+    * hashing parity convert the individual token (one conversion),
+    * instead of every token paying an encode AND a decode.
+    *
+    * Word count's sanitizing tokenizer is a separate kernel,
+    * [[WordTokens]]: it also deletes every byte outside [0-9a-zA-Z\s],
+    * so its words are not these tokens (a token that sanitizes to "" is
+    * dropped, "don't" becomes "dont"), and it works on the UTF-8 bytes
+    * and returns UTF8Strings, because its consumer groups the words and
+    * never needs a java String.
     */
   private[functions] def tokenize(s: UTF8String): java.util.ArrayList[String] = {
     val str = s.toString

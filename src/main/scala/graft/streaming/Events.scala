@@ -221,28 +221,17 @@ object Events {
     */
   private def detach(target: SparkSession, result: DataFrame): DataFrame = {
     val t0 = System.nanoTime()
-    val r =
-      if (sys.env.get("SPARK_GRAFT_DETACH_COLLECT").contains("1")) {
-        // Diagnostic-only fallback (the pre-r19 shape): collect to the
-        // driver and re-root as a local relation. Holds a SECOND driver
-        // copy of the result (VERDICT r18 #3) — never the default; it
-        // exists so a bench A/B can attribute detach's own cost.
-        val rows = result.collect()
-        target.createDataFrame(
-          java.util.Arrays.asList(rows: _*), result.schema)
-      } else {
-        val dir = java.nio.file.Files.createTempDirectory("graft_detach")
-        detachDirs.add(dir)
-        val out = dir.resolve("result").toString
-        // coalesce(1): ONE file, so the read-back preserves the consumer
-        // views' ORDER BY (multi-file read-back packs FilePartitions by
-        // size, not name — the specs' ordered comparisons would flake).
-        // Safe by the same bounded-result contract that let the old code
-        // collect(); a single-partition write of a sorted frame keeps
-        // global order, and a one-file scan reads splits in offset order.
-        result.coalesce(1).write.mode("overwrite").parquet(out)
-        target.read.parquet(out)
-      }
+    val dir = java.nio.file.Files.createTempDirectory("graft_detach")
+    detachDirs.add(dir)
+    val out = dir.resolve("result").toString
+    // coalesce(1): ONE file, so the read-back preserves the consumer
+    // views' ORDER BY (multi-file read-back packs FilePartitions by
+    // size, not name — the specs' ordered comparisons would flake).
+    // Safe by the same bounded-result contract that let the old code
+    // collect(); a single-partition write of a sorted frame keeps
+    // global order, and a one-file scan reads splits in offset order.
+    result.coalesce(1).write.mode("overwrite").parquet(out)
+    val r = target.read.parquet(out)
     if (sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1"))
       System.err.println(f"[stream-debug] detach took ${(System.nanoTime()-t0)/1e9}%.3f s")
     r
@@ -263,10 +252,12 @@ object Events {
     * never consulted (callers gate on it). Bounded by LRU eviction
     * (r20, ADVICE r19: the clear-all eviction dropped hot entries and
     * forced a reload burst), and the fingerprint walks the WHOLE tree
-    * (file count + summed size + max mtime over every regular file) so
+    * (file count, summed size and max mtime over every regular file) so
     * a nested/partitioned store layout — where a data-file change
     * would not move the top-level directory listing — still rotates
-    * the key.
+    * the key. The three are separate key fields: folded into one sum,
+    * a tree with fewer bytes and a newer mtime could collide with the
+    * tree it replaced.
     */
   private[graft] object FrozenStoreMemo {
     private val MaxEntries = 64
@@ -274,13 +265,15 @@ object Events {
     // concurrent callers exist (pool-submitted epoch jobs). A duplicate
     // load under the get/put race is one extra read, never a wrong
     // value — the key pins the store's content.
+    // (_SUCCESS mtime, file count, summed bytes, newest mtime)
+    private type Fingerprint = (Long, Long, Long, Long)
     private val cache = java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), AnyRef](16, 0.75f, true) {
+      new java.util.LinkedHashMap[(String, Fingerprint), AnyRef](16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), AnyRef]): Boolean =
+            e: java.util.Map.Entry[(String, Fingerprint), AnyRef]): Boolean =
           size() > MaxEntries
       })
-    private def fingerprint(dir: String): Option[(Long, Long)] = {
+    private def fingerprint(dir: String): Option[Fingerprint] = {
       val d = new java.io.File(dir)
       val ok = new java.io.File(d, "_SUCCESS")
       if (!ok.exists) None
@@ -289,20 +282,17 @@ object Events {
           if (f.isDirectory)
             Option(f.listFiles()).toSeq.flatten.iterator.flatMap(walk)
           else Iterator.single(f)
-        // count, bytes and newest mtime folded into one Long: any
-        // file added, removed, resized or rewritten moves it (Long
-        // wrap-around is fine — equality is all the key needs)
+        // any file added, removed, resized or rewritten moves a field
         val files = walk(d).toList
-        Some((ok.lastModified,
-          files.size.toLong * 1000003L + files.map(_.length()).sum +
-            files.map(_.lastModified()).foldLeft(0L)(math.max)))
+        Some((ok.lastModified, files.size.toLong, files.map(_.length()).sum,
+          files.map(_.lastModified()).foldLeft(0L)(math.max)))
       }
     }
     def cached[T <: AnyRef](dir: String)(load: => T): T =
       fingerprint(dir) match {
         case None => load // no commit marker: defer to the caller's read
-        case Some((m, s)) =>
-          val k = (dir, m, s)
+        case Some(fp) =>
+          val k = (dir, fp)
           Option(cache.get(k)).getOrElse {
             val v = load; cache.put(k, v); v
           }.asInstanceOf[T]
@@ -334,35 +324,54 @@ object Events {
     * StreamingSpec's post-stores crash leg pins it.
     *
     * Every submitted task is awaited even when one fails (no ambiguity
-    * about which writes ran); the first failure is rethrown. Job
+    * about which writes ran); the first failure (in submission order)
+    * is rethrown with every later one attached as suppressed. If the
+    * CALLER is interrupted while waiting, the writes still running are
+    * cancelled (their threads interrupted), the pool is awaited so no
+    * write thread outlives the call, and the InterruptedException is
+    * rethrown carrying the tasks' failures as suppressed. Job
     * group/description are InheritableThreadLocals, so pool threads —
-    * created at submit time by this thread — carry the caller's
-    * labels.
+    * created at submit time by this thread — carry the caller's labels.
     */
   private[graft] def concurrentWrites(tasks: Seq[() => Unit]): Unit =
-    // Diagnostic-only fallback (never the default): run the group
-    // sequentially on the SAME binary so a bench A/B can attribute the
-    // overlap's own delta (the r19 CAP_RESHINGLE pattern).
-    if (sys.env.get("SPARK_GRAFT_SEQ_WRITES").contains("1")) tasks.foreach(_())
-    else if (tasks.sizeIs <= 1) tasks.foreach(_())
+    if (tasks.sizeIs <= 1) tasks.foreach(_())
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
-      try {
-        val futs = tasks.map(t =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = t()
-          }))
-        var firstFailure: Option[Throwable] = None
-        futs.foreach { f =>
-          try f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              if (firstFailure.isEmpty)
-                firstFailure = Some(Option(e.getCause).getOrElse(e))
-          }
+      val futs = tasks.map(t =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = t()
+        }))
+      // failures of the tasks that ran to completion, in submission order
+      def failures(): Seq[Throwable] = futs.filter(f => f.isDone && !f.isCancelled)
+        .flatMap { f =>
+          try { f.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException =>
+            Some(Option(e.getCause).getOrElse(e)) }
         }
-        firstFailure.foreach(t => throw t)
+      def attach(to: Throwable, ts: Seq[Throwable]): Unit =
+        ts.foreach(t => if (t ne to) to.addSuppressed(t))
+      try {
+        futs.foreach { f =>
+          try f.get() catch { case _: java.util.concurrent.ExecutionException => () }
+        }
+      } catch {
+        case ie: InterruptedException =>
+          futs.foreach(_.cancel(true))
+          pool.shutdown()
+          // a second interrupt while awaiting must not let a write
+          // thread outlive the call; it re-arms the flag afterwards
+          var reinterrupt = false
+          while (!pool.isTerminated)
+            try pool.awaitTermination(1, java.util.concurrent.TimeUnit.SECONDS)
+            catch { case _: InterruptedException => reinterrupt = true }
+          if (reinterrupt) Thread.currentThread().interrupt()
+          attach(ie, failures())
+          throw ie
       } finally pool.shutdown()
+      failures() match {
+        case first +: later => attach(first, later); throw first
+        case _ => ()
+      }
     }
 
   /** Opt-in per-batch diagnostics (SPARK_GRAFT_STREAM_DEBUG=1): batch

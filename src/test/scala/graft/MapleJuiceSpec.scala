@@ -34,6 +34,38 @@ class MapleJuiceSpec extends AnyFunSuite {
     assert(got == Map("a" -> 2L, "b" -> 2L, "c" -> 1L))
   }
 
+  test("wordCount's native tokenizer keeps the regex form's word counts on adversarial text") {
+    import spark.implicits._
+    // tabs, \u000B, CRLF, NBSP and U+2028 (not Java \s), é, CJK, an
+    // emoji (surrogate pair), NUL, "--", empty and null text
+    val texts = Seq(
+      Some("a\tb\u000Bc\r\nd\fe"), Some("café naïve 中文 😀ok"),
+      Some("x y\u00A0z w\u2028v"), Some("nul\u0000byte -- !!"), Some("  lead and trail  "),
+      Some(""), None, Some("don't stop--now"), Some("éé 中"))
+    val docs = texts.toDF("text")
+    val got = MapleJuice.wordCount(docs)
+    val want = docs
+      .select(explode(split(regexp_replace(col("text"), "[^0-9a-zA-Z\\s]", ""), "\\s+")).as("word"))
+      .filter(col("word") =!= "")
+      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      s"got ${got.collect().toSeq} want ${want.collect().toSeq}")
+    val counts = got.as[(String, Long)].collect().toMap
+    assert(counts("x") == 1L && counts("yz") == 1L && counts("wv") == 1L && counts("dont") == 1L &&
+      counts("nulbyte") == 1L && counts("ok") == 1L && !counts.contains(""))
+  }
+
+  test("wordCount runs on a session that never registered graft's functions") {
+    import spark.implicits._
+    // a fresh child session has its own function registry, like a
+    // session built by the caller without GraftSession
+    val bare = spark.newSession()
+    assert(!bare.catalog.functionExists(graft.functions.WordTokens.Name))
+    val docs = bare.createDataFrame(Seq(Tuple1("a b a"), Tuple1("b! c"))).toDF("text")
+    val got = MapleJuice.wordCount(docs).as[(String, Long)].collect().toMap
+    assert(got == Map("a" -> 2L, "b" -> 2L, "c" -> 1L))
+  }
+
   test("run() = maple + partitioner + juice in one job submission") {
     import spark.implicits._
     val docs = Seq("x y x", "y z").toDS()

@@ -308,6 +308,61 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** Text pieces for the word-count tokenizer: ASCII alphanumerics and
+    * punctuation, the six Java `\s` chars, NBSP and U+2028 (which Java's
+    * `\s` does NOT match), multi-byte UTF-8 (2-, 3- and 4-byte, the last
+    * a surrogate pair), a lone surrogate, NUL and "--".
+    */
+  private val wcPiece: org.scalacheck.Gen[String] = {
+    import org.scalacheck.Gen
+    Gen.frequency(
+      8 -> Gen.alphaNumChar.map(_.toString),
+      2 -> Gen.oneOf("!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~".map(_.toString)),
+      4 -> Gen.oneOf(WsChars.map(_.toString)),
+      1 -> Gen.oneOf("\u00A0", "\u2028", "é", "中", "😀", "\uD800", "\u0000", "--", "\r\n"))
+  }
+  private val wcText: org.scalacheck.Gen[String] =
+    org.scalacheck.Gen.frequency(
+      1 -> org.scalacheck.Gen.const(""),
+      9 -> org.scalacheck.Gen.listOf(wcPiece).map(_.mkString))
+
+  /** The composed regex form the kernel replaces, on the JVM. */
+  private def regexWords(t: String): Seq[String] =
+    t.replaceAll("[^0-9a-zA-Z\\s]", "").split("\\s+", -1).toSeq.filter(_.nonEmpty)
+
+  test("WordTokens kernel equals the regexp_replace/split/filter word count tokens on random strings") {
+    import org.scalacheck.{Prop, Test}
+    import org.scalacheck.rng.Seed
+    val prop = Prop.forAll(wcText) { t =>
+      val got = graft.functions.WordTokens.tokenize(UTF8String.fromString(t))
+        .array.toSeq.map(_.toString)
+      Prop(got == regexWords(t)) :| s"text=${t.map(c => f"\\u${c.toInt}%04x").mkString}"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(2000)
+      .withInitialSeed(Seed(21L)), prop)
+    assert(res.passed, s"$res")
+    // the same relation through Spark, null texts included: the kernel's
+    // column equals the composed column row for row (null for null)
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val texts = org.scalacheck.Gen.listOfN(400, org.scalacheck.Gen.option(wcText))
+      .apply(org.scalacheck.Gen.Parameters.default, Seed(22L)).get
+    val df = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("i", "t")
+    val rows = df.select(col("i"),
+        graft.functions.WordTokens.wordTokens(col("t")).as("k"),
+        filter(split(regexp_replace(col("t"), "[^0-9a-zA-Z\\s]", ""), "\\s+"),
+          w => w =!= "").as("r"))
+      .collect()
+    assert(rows.length == texts.length && texts.contains(None))
+    for (r <- rows) {
+      val k = Option(r.getSeq[String](1))
+      val want = Option(r.getSeq[String](2))
+      assert(k == want, s"row ${r.getInt(0)}: text=${texts(r.getInt(0))}")
+      assert(k.isEmpty == texts(r.getInt(0)).isEmpty)
+    }
+  }
+
   test("TopKAgg buffer equals sort-take on random score streams") {
     val rng = new scala.util.Random(3L)
     for (_ <- 0 until 300) {

@@ -755,6 +755,39 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("FrozenStoreMemo: trees with equal summed count/bytes/mtime still get distinct entries") {
+    // a key that folds count·1000003 + bytes + max mtime into one Long
+    // lets a rewrite with 5 fewer bytes and an mtime 5 ms newer (same
+    // _SUCCESS mtime) alias the tree it replaced
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo_collide")
+    try {
+      Events.FrozenStoreMemo.clear()
+      val data = dir.resolve("part-0").toFile
+      val ok = dir.resolve("_SUCCESS").toFile
+      val t0 = 1700000000000L
+      java.nio.file.Files.write(data.toPath, "0123456789".getBytes("UTF-8"))
+      java.nio.file.Files.write(ok.toPath, Array.emptyByteArray)
+      assert(ok.setLastModified(t0) && data.setLastModified(t0 + 10000L))
+      var loads = 0
+      def get(): String =
+        Events.FrozenStoreMemo.cached(dir.toString) { loads += 1; s"v$loads" }
+      assert(get() == "v1" && get() == "v1")
+      // old folded value: 2·1000003 + 10 + (t0+10000) for the first
+      // tree, 2·1000003 + 5 + (t0+10005) for the second — equal
+      java.nio.file.Files.write(data.toPath, "01234".getBytes("UTF-8"))
+      assert(data.setLastModified(t0 + 10005L) && ok.setLastModified(t0))
+      assert(data.lastModified == t0 + 10005L && ok.lastModified == t0,
+        "the filesystem must keep millisecond mtimes for this leg")
+      assert(get() == "v2",
+        "a different tree with the same summed fingerprint shared a cache entry")
+    } finally {
+      Events.FrozenStoreMemo.clear()
+      Seq("part-0", "_SUCCESS").foreach(f =>
+        java.nio.file.Files.deleteIfExists(dir.resolve(f)))
+      java.nio.file.Files.deleteIfExists(dir)
+    }
+  }
+
   test("concurrentWrites: every task runs even when one fails, the first failure propagates, single-task falls back inline") {
     // r20 (guide §2.6): the loops submit independent per-epoch store
     // writes from a pool. The harness contract the epochs lean on: ALL
@@ -779,6 +812,44 @@ class StreamingSpec extends AnyFunSuite {
     Events.concurrentWrites(Seq(() => { ran3.incrementAndGet(); () }))
     Events.concurrentWrites(Seq.empty)
     assert(ran3.get == 1)
+  }
+
+  test("concurrentWrites: later failures ride as suppressed; an interrupted caller cancels, awaits the pool and rethrows") {
+    // two failures: the first in submission order surfaces, the second
+    // is attached to it instead of dropped
+    val e = intercept[RuntimeException](Events.concurrentWrites(Seq(
+      () => throw new RuntimeException("first"),
+      () => (),
+      () => throw new IllegalStateException("later"))))
+    assert(e.getMessage == "first" &&
+      e.getSuppressed.map(_.getMessage).toSeq == Seq("later"), s"$e ${e.getSuppressed.toSeq}")
+    // interrupt leg: one write blocks until interrupted, one has failed,
+    // then the CALLER is interrupted while it waits on the group
+    val blocked = new java.util.concurrent.CountDownLatch(1)
+    val failed = new java.util.concurrent.CountDownLatch(1)
+    val blockerExited = new java.util.concurrent.atomic.AtomicBoolean(false)
+    @volatile var caught: Throwable = null
+    @volatile var exitedBeforeReturn = false
+    val caller = new Thread(() =>
+      try Events.concurrentWrites(Seq(
+        () => try { blocked.countDown(); Thread.sleep(120000L) }
+              finally blockerExited.set(true),
+        () => try throw new RuntimeException("write failed") finally failed.countDown()))
+      catch { case t: Throwable =>
+        exitedBeforeReturn = blockerExited.get
+        caught = t
+      })
+    caller.start()
+    assert(blocked.await(30, java.util.concurrent.TimeUnit.SECONDS) &&
+      failed.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    Thread.sleep(500) // let the failed future settle to done: cancel only takes a running one
+    caller.interrupt()
+    caller.join(30000L)
+    assert(!caller.isAlive, "an interrupted caller must not wait out the blocked write")
+    assert(caught.isInstanceOf[InterruptedException], s"wrong exception surfaced: $caught")
+    assert(exitedBeforeReturn, "the blocked write was still running when the call returned")
+    assert(caught.getSuppressed.map(_.getMessage).toSeq == Seq("write failed"),
+      s"the failed write was dropped: ${caught.getSuppressed.toSeq}")
   }
 
   test("stream_ingest_neardup survives a crash BETWEEN the concurrent store group and the verdict write") {
