@@ -60,10 +60,6 @@ object Bench {
     // lands on DIFFERENT queries each pass, so the per-query median
     // survives any single throttled pass.
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3).max(1)
-    // r6 drift bisect switch: "1" runs the suite WITHOUT the between-query
-    // clearCache (r5's protocol) so the two protocols can be compared on
-    // identical code. Default is the fair, cold-cache protocol.
-    val clearCacheOff = sys.env.get("SPARK_GRAFT_BENCH_NO_CLEARCACHE").contains("1")
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -174,10 +170,8 @@ object Bench {
           // shared pass and return lazily (no post-materialization point to
           // unpersist at); without this hook those evictable blocks
           // accumulate across the 69-query suite and crowd the storage
-          // pool of every LATER query's run. Disable-able for the r6
-          // drift bisect: the same suite run with the hook off reproduces
-          // r5's cache-flattered protocol for attribution.
-          if (!clearCacheOff) spark.catalog.clearCache()
+          // pool of every LATER query's run.
+          spark.catalog.clearCache()
         }
       }
     }
@@ -214,7 +208,7 @@ object Bench {
                   false
                 }
               val t = (System.nanoTime() - t0) / 1e9
-              if (!clearCacheOff) spark.catalog.clearCache()
+              spark.catalog.clearCache()
               name -> (if (ok) t else -1.0)
             }
           }
@@ -309,7 +303,7 @@ object Bench {
     // samples (a 1-sample "median" is just that pass's reading)
     val budgetJson = budgetSkips
       .map { case (k, v) => q(k) + ":" + v }.mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","errors":$errs,"clear_cache":${!clearCacheOff},"reps":$repsJson,"canary":$canaryJson,"canary_median":${fmt(canaryMedian)},"canary_spread":${fmt(canarySpread)},"latency_canary":$latencyJson,"latency_canary_median":${fmt(latencyMedian)},"rocksdb_stream":$rocksdbJson,"laps_passes":$lapsPassesJson,"laps":$lapsJson,"budget_secs":${fmt(budgetSecs)},"elapsed_secs":${fmt(elapsedSecs)},"budget_degraded":$budgetJson,"queries":$qs,"mins":$minsJson,"normalized":$normJson}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","errors":$errs,"reps":$repsJson,"canary":$canaryJson,"canary_median":${fmt(canaryMedian)},"canary_spread":${fmt(canarySpread)},"latency_canary":$latencyJson,"latency_canary_median":${fmt(latencyMedian)},"rocksdb_stream":$rocksdbJson,"laps_passes":$lapsPassesJson,"laps":$lapsJson,"budget_secs":${fmt(budgetSecs)},"elapsed_secs":${fmt(elapsedSecs)},"budget_degraded":$budgetJson,"queries":$qs,"mins":$minsJson,"normalized":$normJson}"""
     println(json)
     // Belt-and-braces for the same truncation: the COMPLETE record also
     // lands in a file the driver never trims (cwd-resolved — the driver

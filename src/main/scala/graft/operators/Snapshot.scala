@@ -126,38 +126,34 @@ object Snapshot {
 
   // ------------------------------------------- incremental clean pipeline
 
-  /** True when SPARK_GRAFT_INCR_DEBUG=1: the incremental pipeline's
-    * per-stage stderr timing (and closure-size counts) — the knob that
-    * attributes a drift to the harness-only prior-ledger derivation vs
-    * the real incremental work.
+  /** The incremental pipeline's per-stage timing (and closure-size
+    * counts) at DEBUG — what attributes a drift to the harness-only
+    * prior-ledger derivation vs the real incremental work.
     */
-  private def incrDebug: Boolean =
-    sys.env.get("SPARK_GRAFT_INCR_DEBUG").contains("1")
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** A fresh stage-timer: each call to the returned function records
     * the elapsed time since the previous call into [[graft.Laps]]
     * (collected only inside a Bench begin/end window — a volatile read
-    * otherwise) and, under SPARK_GRAFT_INCR_DEBUG=1, prints it to
-    * stderr. Shared by the four streaming ingest loops' stage marks and
-    * [[pairGraphClosure]]'s per-round attribution — one timer for the
-    * whole incremental family.
+    * otherwise) and logs it at DEBUG. Shared by the four streaming
+    * ingest loops' stage marks and [[pairGraphClosure]]'s per-round
+    * attribution — one timer for the whole incremental family.
     */
   private[graft] def incrLap(): String => Unit = incrLap(detail = false)
 
   /** `detail = true` marks every lap as INTERNAL DETAIL of an
     * enclosing stage ([[graft.Laps.DetailPrefix]] on the recorded
-    * label; stderr keeps the plain label): the incremental pipeline's
+    * label; the log keeps the plain label): the incremental pipeline's
     * marks land INSIDE a streaming loop's drain window, and the bench
     * split must exclude them structurally rather than by label
     * spelling (ADVICE r14). */
   private[graft] def incrLap(detail: Boolean): String => Unit = {
-    val debug = incrDebug
     var t0 = System.nanoTime()
     stage => {
       val t = System.nanoTime()
       val secs = (t - t0) / 1e9
       graft.Laps.record(if (detail) graft.Laps.DetailPrefix + stage else stage, secs)
-      if (debug) System.err.println(f"[incr-debug] $stage: $secs%.2fs")
+      log.debug(f"[incr-debug] $stage: $secs%.2fs")
       t0 = t
     }
   }
@@ -322,7 +318,8 @@ object Snapshot {
     * same-round pairs. Pruning dst to unvisited would save candidate
     * rows but lose those edges, forcing callers to re-join pairs.
     *
-    * Per-round stage timing to stderr under SPARK_GRAFT_INCR_DEBUG=1.
+    * Per-round stage timing at DEBUG; the frontier-size counts run only
+    * when DEBUG is on, so a default run starts no extra jobs.
     */
   private[graft] def pairGraphClosure(seeds: DataFrame, postings: DataFrame,
                                       maxRounds: Int): (DataFrame, Seq[DataFrame]) =
@@ -333,7 +330,7 @@ object Snapshot {
 
   private[graft] def pairGraphClosure(seeds: DataFrame, postings: PostingsProbe,
                                       maxRounds: Int): (DataFrame, Seq[DataFrame]) = {
-    val debug = incrDebug
+    val debug = log.isDebugEnabled
     val lap = incrLap(detail = true)
     val roundEdges = scala.collection.mutable.ListBuffer.empty[DataFrame]
     // Visited = the lazy UNION of the per-round frontier checkpoints
@@ -799,7 +796,7 @@ object Snapshot {
       postings: PostingsProbe, docsFor: DataFrame => DataFrame,
       maxRounds: Int, maxDf: Int, hotPrior: DataFrame,
       oldPostingsFor: DataFrame => DataFrame,
-      newPostingsFor: Option[DataFrame => DataFrame] = None): (DataFrame, DataFrame) = {
+      newPostingsFor: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     val lap = incrLap(detail = true)
     val delta = diff(oldManifest, newManifest).localCheckpoint(true)
     lap("manifest diff")
@@ -810,18 +807,16 @@ object Snapshot {
       val deltaIds = delta.select(col("doc_id"))
       // NEW-side delta postings: a maintained-index caller already WROTE
       // this epoch's posting rows to its chain before calling here (the
-      // index-maintenance contract), so `newPostingsFor` lets it hand
-      // back that bounded delta (a file read + delta-id semi-join)
-      // instead of paying the kernel's SECOND shingle pass over the
-      // arrival text this epoch (r19 optimization — the r15 bootstrap
-      // "file is the materialization" rule, applied to the crossing
-      // stage; provably the same relation: the delta ids' corpus rows
-      // at this epoch ARE the arrival's, and removed ids have no rows
-      // either way). Default keeps the probe's re-shingle for callers
-      // without a stored delta.
+      // index-maintenance contract), so `newPostingsFor` hands back that
+      // bounded delta (a file read + delta-id semi-join) instead of
+      // paying the kernel's SECOND shingle pass over the arrival text
+      // this epoch (the bootstrap "file is the materialization" rule,
+      // applied to the crossing stage; provably the same relation: the
+      // delta ids' corpus rows at this epoch ARE the arrival's, and
+      // removed ids have no rows either way). A caller without a stored
+      // delta passes `postings.forDocs`.
       val (extra, hot, c) =
-        capCrossings(deltaIds, postings,
-          newPostingsFor.getOrElse(postings.forDocs _)(deltaIds),
+        capCrossings(deltaIds, postings, newPostingsFor(deltaIds),
           oldPostingsFor(deltaIds), hotPrior, maxDf)
       hotNext = hot; extraSeeds = extra; caches = c
       // own mark: the hot-advance + crossing-seed checkpoints

@@ -31,6 +31,10 @@ case class SessionOut(user_id: Long, sid: Long, start_us: Long, end_us: Long,
   */
 object Events {
 
+  /** The harness diagnostics ([[detach]] timing, [[dumpProgress]]) log
+    * at DEBUG here; they are off unless the `graft` loggers are. */
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   private val GapMs = 30L * 60 * 1000
   /** The same gap as a window-duration string — session_window and the
     * session_end back-shift MUST agree, so both derive from GapMs. */
@@ -71,16 +75,27 @@ object Events {
     * so a concurrent batch query on the caller's session can never be
     * planned with the temporary value (ADVICE r2 — the old save/restore
     * of the session-global conf raced with other users of the session).
+    *
+    * A child session has its OWN temp-function registry, so graft's
+    * native functions are registered here, once, on whichever session
+    * is returned. Every foreachBatch micro-batch session is a
+    * `cloneSession()` of the streaming query's session and inherits its
+    * registry, so the loops never re-register per batch (StreamingSpec
+    * pins the inheritance).
     */
   private def sessionFor(spark: SparkSession, n: Option[Int],
-                         extraConf: Map[String, String] = Map.empty): SparkSession =
-    if (n.isEmpty && extraConf.isEmpty) spark
-    else {
-      val ss = spark.newSession()
-      n.foreach(p => ss.conf.set("spark.sql.shuffle.partitions", p.toString))
-      extraConf.foreach { case (k, v) => ss.conf.set(k, v) }
-      ss
-    }
+                         extraConf: Map[String, String] = Map.empty): SparkSession = {
+    val ss =
+      if (n.isEmpty && extraConf.isEmpty) spark
+      else {
+        val child = spark.newSession()
+        n.foreach(p => child.conf.set("spark.sql.shuffle.partitions", p.toString))
+        extraConf.foreach { case (k, v) => child.conf.set(k, v) }
+        child
+      }
+    graft.GraftSession.registerFunctions(ss)
+    ss
+  }
 
   // -------------------------------------------------- bounded-run harness
 
@@ -162,9 +177,6 @@ object Events {
     val conf = Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++
       providerConf ++ extraConf
     val ss = sessionFor(spark, statePartitions, conf)
-    // the child session has its OWN temp-function registry — graft's
-    // native expressions (the ingest quality gate) must resolve there too
-    graft.GraftSession.registerFunctions(ss)
     val staged = java.nio.file.Paths.get(s"$sfDir/$table.parquet")
     val dir = scratchDir(prefix, java.nio.file.Files.size(staged))
     try {
@@ -232,8 +244,7 @@ object Events {
     // global order, and a one-file scan reads splits in offset order.
     result.coalesce(1).write.mode("overwrite").parquet(out)
     val r = target.read.parquet(out)
-    if (sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1"))
-      System.err.println(f"[stream-debug] detach took ${(System.nanoTime()-t0)/1e9}%.3f s")
+    log.debug(f"[stream-debug] detach took ${(System.nanoTime()-t0)/1e9}%.3f s")
     r
   }
 
@@ -374,21 +385,21 @@ object Events {
       }
     }
 
-  /** Opt-in per-batch diagnostics (SPARK_GRAFT_STREAM_DEBUG=1): batch
-    * duration breakdown + state-store op counts per micro-batch, straight
-    * off the engine's own StreamingQueryProgress — the data needed to
-    * tell "the first drain is slow" from "the sentinel flush batches are
-    * slow" without attaching a listener to the child session.
+  /** Per-batch diagnostics at DEBUG: batch duration breakdown +
+    * state-store op counts per micro-batch, straight off the engine's
+    * own StreamingQueryProgress — the data needed to tell "the first
+    * drain is slow" from "the sentinel flush batches are slow" without
+    * attaching a listener to the child session.
     */
   private def dumpProgress(name: String, q: StreamingQuery): Unit =
-    if (sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1"))
+    if (log.isDebugEnabled)
       q.recentProgress.foreach { p =>
         val d = p.durationMs
         val state = p.stateOperators.map { s =>
           s"op=${s.operatorName} rowsTotal=${s.numRowsTotal} upd=${s.numRowsUpdated}" +
             s" rm=${s.numRowsRemoved} commitMs=${s.commitTimeMs} mem=${s.memoryUsedBytes}"
         }.mkString("; ")
-        System.err.println(
+        log.debug(
           s"[stream-debug] $name batch=${p.batchId} rows=${p.numInputRows}" +
             s" triggerMs=${d.get("triggerExecution")} addBatchMs=${d.get("addBatch")}" +
             s" stateMs=[getBatch=${d.get("getBatch")} wal=${d.get("walCommit")}" +
@@ -962,14 +973,13 @@ object Events {
     * kernel must not run over the whole corpus here: each side shingles
     * only the docs it needs (suspects after a cheap md5 gate; test docs
     * after the split filter), so the confirm cost follows the
-    * contamination rate, not the corpus.
+    * contamination rate, not the corpus. `df` belongs to a session
+    * [[sessionFor]] returned, whose registry the kernel resolves in.
     */
   private def confirmSuspects(df: DataFrame, docsPath: String): DataFrame = {
     import graft.operators.Corpus
-    val ss2 = df.sparkSession
-    graft.GraftSession.registerFunctions(ss2)
     val suspects = df.filter(col("suspect") === 1).select(col("text_hash"))
-    val sdocs = ss2.read.parquet(docsPath)
+    val sdocs = df.sparkSession.read.parquet(docsPath)
     val testSh = sdocs
       .filter(Corpus.splitOfBucket(Corpus.splitBucket(col("text"))) === "test")
       .select(explode(
@@ -1005,7 +1015,6 @@ object Events {
                             deltaProbe: Option[scala.collection.mutable.Buffer[(Long, Long)]] = None): DataFrame = {
     val ss = sessionFor(spark, statePartitions,
       Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
-    graft.GraftSession.registerFunctions(ss)
     val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
     val docsPath = staged.toString
     val stagedBytes = java.nio.file.Files.size(staged)
@@ -1038,8 +1047,10 @@ object Events {
               q.processAllAvailable()
             } finally { dumpProgress("graft_idecon_files", q); q.stop() }
             // consumer view: LWW per key across the delta chain, then
-            // the exact confirm drops Bloom false positives
-            val lww = resolveLww(spark.read.parquet(sink.toString), Seq("text_hash"))
+            // the exact confirm drops Bloom false positives — on the
+            // loop's session, whose registry the confirm's shingle
+            // kernel resolves in
+            val lww = resolveLww(ss.read.parquet(sink.toString), Seq("text_hash"))
             detach(spark, confirmSuspects(lww, docsPath))
           } finally deleteDirQuietly(ckpt)
         } finally deleteDirQuietly(sink)
@@ -1217,7 +1228,6 @@ object Events {
     import graft.operators.{Corpus, Snapshot}
     val ss = sessionFor(spark, statePartitions,
       Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
-    graft.GraftSession.registerFunctions(ss)
     val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
     val stagedBytes = java.nio.file.Files.size(staged)
     val src = scratchDir("graft_iclean_src", stagedBytes)
@@ -1315,7 +1325,6 @@ object Events {
             .option("checkpointLocation", ckpt.toString)
             .foreachBatch { (batch: DataFrame, epoch: Long) =>
               val bss = batch.sparkSession
-              graft.GraftSession.registerFunctions(bss)
               val lap = Snapshot.incrLap()
               // a crash mid-swap of the in-stream compaction below can
               // leave a chain whose newest prefix lives only in the
@@ -1583,17 +1592,9 @@ object Events {
                               .parquet(s"$postingsByShingleDir/batch=$epoch")
                               .drop("bucket")
                               .join(ids, Seq("doc_id"), "left_semi")
-                          // Diagnostic-only fallback (never the default):
-                          // restores the pre-r19 re-shingle on the SAME
-                          // binary so a bench A/B can attribute the
-                          // read-back's own delta (the detach-A/B
-                          // pattern).
-                          val newOpt =
-                            if (sys.env.get("SPARK_GRAFT_CAP_RESHINGLE").contains("1")) None
-                            else Some(newPostingsFor)
                           val (d, h) = Snapshot.incrementalLedgerDeltaCheckpointedCapped(
                             prior, priorManifest, nextManifest, probe, docsFor,
-                            25, capDf, hotPrior, oldPostingsFor, newOpt)
+                            25, capDf, hotPrior, oldPostingsFor, newPostingsFor)
                           (d, Some(h))
                         } finally tombAggPrev.foreach(_.unpersist(blocking = false))
                     }
@@ -1762,7 +1763,6 @@ object Events {
                          deltaProbe: Option[scala.collection.mutable.Buffer[(Long, Long)]] = None): DataFrame = {
     val ss = sessionFor(spark, statePartitions,
       Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
-    graft.GraftSession.registerFunctions(ss)
     val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
     val stagedBytes = java.nio.file.Files.size(staged)
     val src = scratchDir("graft_ingest_file_src", stagedBytes)
@@ -1903,7 +1903,15 @@ object Events {
     * the SAME checkpoint, so the epoch replays over the already-written
     * (and possibly just-compacted) store and must overwrite only its
     * own deltas — the triple-hardening leg (RocksDB × compaction ×
-    * replay) StreamingSpec pins against the batch oracle. */
+    * replay) StreamingSpec pins against the batch oracle.
+    *
+    * `priorFetchProbe` (spec hook) receives (epoch, requested ids, chain
+    * rows entering LWW) for the epoch's prior-verdict fetch. A
+    * retirement epoch fetches ONCE, for |cands ∪ touchIds| (the
+    * candidate ids and the retirement blast radius's touched ids), and
+    * records that one fetch — not one fetch per leg. Its counts are
+    * therefore at most the two per-leg fetches' sum that records taken
+    * before the fusion show, and below it when the legs overlap. */
   def ingestNearDup(spark: SparkSession, sfDir: String,
                     statePartitions: Option[Int] = Some(4),
                     threshold: Double = graft.operators.Dedup.DefaultThreshold,
@@ -1918,7 +1926,6 @@ object Events {
     import graft.operators.Dedup
     val ss = sessionFor(spark, statePartitions,
       Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
-    graft.GraftSession.registerFunctions(ss)
     val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
     val stagedBytes = java.nio.file.Files.size(staged)
     val src = scratchDir("graft_neardup_src", stagedBytes)
@@ -2021,7 +2028,6 @@ object Events {
             .option("checkpointLocation", ckpt.toString)
             .foreachBatch { (batch: DataFrame, epoch: Long) =>
               val bss = batch.sparkSession
-              graft.GraftSession.registerFunctions(bss)
               // per-epoch DETAIL laps (r18, VERDICT r17 #5): the drains
               // were this loop's only timing granularity, so grinding
               // the capped harness's cost centers needed hand-run
@@ -2415,13 +2421,8 @@ object Events {
                       // fetch has ONE consumer and materializing it
                       // would ADD a job.
                       var priorFetchedRelease: Option[DataFrame] = None
-                      // Diagnostic-only fallback (never the default):
-                      // SPARK_GRAFT_SPLIT_PRIOR_FETCH=1 restores the
-                      // pre-r20 two-fetch shape on the SAME binary for
-                      // the matched-canary bench A/B.
                       val priorFetchedUnion: Option[DataFrame] =
-                        if (sys.env.get("SPARK_GRAFT_SPLIT_PRIOR_FETCH").contains("1")) None
-                        else for { cands <- candsOpt; touchIds <- touchIdsOpt } yield {
+                        for { cands <- candsOpt; touchIds <- touchIdsOpt } yield {
                           val f = priorLwwFor(cands.select(col("doc_id"))
                               .unionByName(touchIds).distinct())
                             .localCheckpoint(true)
@@ -2457,20 +2458,16 @@ object Events {
                       // their retraction) and so are batch docs
                       // (batchVerdict is authoritative for them).
                       val removalAffected: Option[DataFrame] =
-                        touchIdsOpt.map { touchIds =>
+                        for { fetched <- priorFetchedUnion; touchIds <- touchIdsOpt } yield {
                           // the union fetch restricted back to this
                           // leg's ids — the semi-join makes the subset
                           // argument local (a cands-only id whose LWW
                           // row named a retired partner would be in
                           // touchIds by definition anyway, but the
                           // restriction keeps the legs' equivalence
-                          // line-by-line). touchIdsOpt defined implies
-                          // priorFetchedUnion defined, except under the
-                          // diagnostic split-fetch flag, whose fallback
-                          // is the pre-r20 direct fetch.
-                          priorFetchedUnion
-                            .map(_.join(touchIds, Seq("doc_id"), "left_semi"))
-                            .getOrElse(priorLwwFor(touchIds))
+                          // line-by-line). Defined exactly when
+                          // touchIdsOpt is (touchIdsOpt ⇒ candsOpt).
+                          fetched.join(touchIds, Seq("doc_id"), "left_semi")
                             .join(retired.select(col("doc_id").as("partner_id")),
                               Seq("partner_id"), "left_semi")
                             .join(removals, Seq("doc_id"), "left_anti")
@@ -3021,7 +3018,6 @@ object Events {
     import graft.operators.Similarity
     val ss = sessionFor(spark, statePartitions,
       Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
-    graft.GraftSession.registerFunctions(ss)
     val staged = java.nio.file.Paths.get(s"$sfDir/embeddings.parquet")
     val stagedBytes = java.nio.file.Files.size(staged)
     val src = scratchDir("graft_annstream_src", stagedBytes)
@@ -3119,7 +3115,6 @@ object Events {
             .foreachBatch { (batch: DataFrame, epoch: Long) =>
               val bss = batch.sparkSession
               import bss.implicits._
-              graft.GraftSession.registerFunctions(bss)
               // a crash mid-swap of the in-stream compaction below can
               // leave a chain whose newest prefix lives only in the
               // stranded snapshot — repair before any chain read (every
@@ -3840,7 +3835,6 @@ object Events {
     import graft.operators.Classifier
     val ss = sessionFor(spark, statePartitions,
       Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
-    graft.GraftSession.registerFunctions(ss)
     val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
     val stagedBytes = java.nio.file.Files.size(staged)
     val src = scratchDir("graft_classify_src", stagedBytes)
@@ -3914,7 +3908,6 @@ object Events {
             .foreachBatch { (batch: DataFrame, epoch: Long) =>
               val bss = batch.sparkSession
               import bss.implicits._
-              graft.GraftSession.registerFunctions(bss)
               // spec hook: external interference with the durable store
               // (marker/baseline deletion) injected at an epoch boundary
               // — the window a co-located operator or cleanup job would

@@ -70,4 +70,26 @@ class EntrySpec extends AnyFunSuite {
     assert(misclaimed.isEmpty,
       s"SURVEY oracle-column drift: ${misclaimed.toSeq.sorted.mkString("; ")}")
   }
+
+  test("main code names exactly the eight documented SPARK_GRAFT_* variables") {
+    // Deployment and bench settings only (README's table): a new A/B or
+    // debug switch must not land unlisted. Comments count too, so a
+    // stale mention of a deleted switch fails here as well.
+    import scala.jdk.CollectionConverters._
+    val documented = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_WARM_DIR",
+      "SPARK_GRAFT_CPUS", "SPARK_GRAFT_STATE_STORE", "SPARK_GRAFT_BENCH_OUT",
+      "SPARK_GRAFT_BENCH_REPS", "SPARK_GRAFT_BENCH_BUDGET_SECS",
+      "SPARK_GRAFT_BENCH_ROCKSDB")
+    val name = "SPARK_GRAFT_[A-Z_]+".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val found =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+        name.findAllIn(new String(java.nio.file.Files.readAllBytes(f),
+          java.nio.charset.StandardCharsets.UTF_8))
+      }.toSet
+      finally walk.close()
+    assert(found == documented,
+      s"undocumented: ${(found -- documented).toSeq.sorted.mkString(", ")}; " +
+        s"documented but unread: ${(documented -- found).toSeq.sorted.mkString(", ")}")
+  }
 }

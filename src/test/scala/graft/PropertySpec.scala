@@ -616,7 +616,8 @@ class PropertySpec extends AnyFunSuite {
         Snapshot.InMemoryPostings(idx),
         ids => newDocs.join(ids, Seq("doc_id"), "left_semi"),
         25, cap, hot,
-        ids => Snapshot.postings(oldSnap).join(ids, Seq("doc_id"), "left_semi"))
+        ids => Snapshot.postings(oldSnap).join(ids, Seq("doc_id"), "left_semi"),
+        Snapshot.InMemoryPostings(idx).forDocs)
       // the advanced hot set must equal the from-scratch derivation —
       // the induction's per-epoch exactness claim, checked directly
       val wantHot = Dedup.hotShingles(idx, cap).collect().map(_.getLong(0)).toSet

@@ -1501,6 +1501,53 @@ class StreamingSpec extends AnyFunSuite {
       s"second delta not incremental: ${emitted(1L)} of ${fromFiles.size} keys")
   }
 
+  test("a foreachBatch session inherits every function registered once on its stream's session") {
+    // the loops register graft's native functions once, on the session
+    // sessionFor returns, never per micro-batch: each batch runs on a
+    // clone of the stream's session, and the clone copies its registry
+    val ss = spark.newSession()
+    def names = ss.catalog.listFunctions().collect().map(_.name).toSet
+    val before = names
+    GraftSession.registerFunctions(ss)
+    val registered = names -- before
+    assert(Set(graft.functions.WordTokens.Name, graft.functions.ShingleFunctions.MinHashName)
+      .subsetOf(registered), s"registered: $registered")
+    val dir = java.nio.file.Files.createTempDirectory("graft_fn_inherit")
+    try {
+      val in = dir.resolve("in").toString
+      ss.range(3).write.parquet(in)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Set[String])]()
+      val q = ss.readStream.schema("id LONG").parquet(in).writeStream
+        .option("checkpointLocation", dir.resolve("ckpt").toString)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          val bss = batch.sparkSession
+          seen.add((bss ne ss, registered.filterNot(bss.catalog.functionExists)))
+          ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      assert(!seen.isEmpty, "no micro-batch ran")
+      seen.forEach { case (cloned, missing) =>
+        assert(cloned, "the batch ran on the stream's own session, not a clone")
+        assert(missing.isEmpty, s"batch session lacks $missing")
+      }
+    } finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
+    }
+  }
+
+  test("an Events loop runs on a session that never registered graft's functions") {
+    // the decontam loop's Bloom gate and exact confirm both call the
+    // shingle kernel; the loop registers it on its own session
+    val bare = spark.newSession()
+    assert(!bare.catalog.functionExists(graft.functions.ShingleFunctions.ShingleName))
+    val got = Events.ingestDecontamToFiles(bare, TestSpark.sf).collect().toSeq
+    val want = Events.ingestDecontam(spark, TestSpark.sf).collect().toSeq
+    assert(got.nonEmpty && got == want)
+  }
+
   test("update-mode delta-chain sink resolves to the complete-mode dedup relation") {
     // the production twin: per-batch foreachBatch deltas + last-write-wins
     // read-back must equal the memory-sink Complete-mode verify relation
