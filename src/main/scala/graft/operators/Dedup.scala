@@ -233,10 +233,6 @@ object Dedup {
     // rationale (evictable cache vs pinned-until-GC blocks)
     minhashLshPairs(shingleHashSets(docs).persist(), threshold, numPerms, bands, maxBandDf)
 
-  /** The banding + exact-verify core of [[minhashLsh]] over a
-    * PRE-SHINGLED (and ideally persisted) input — shared with
-    * [[minhashLshCheck]], which reuses the same pass for the exact side.
-    */
   /** The LSH band-bucket relation for a signature relation — one row
     * per (doc, band): `(doc_id, band_id, band_hash)`, band_hash =
     * xxhash64 over the band's `numPerms / bands` signature positions.
@@ -325,6 +321,10 @@ object Dedup {
     banded.join(broadcast(hotBandBuckets(banded, maxDf)),
       Seq("band_id", "band_hash"), "left_anti")
 
+  /** The banding + exact-verify core of [[minhashLsh]] over a
+    * PRE-SHINGLED (and ideally persisted) input — shared with
+    * [[minhashLshCheck]], which reuses the same pass for the exact side.
+    */
   private[operators] def minhashLshPairs(shingled: DataFrame, threshold: Double = DefaultThreshold,
                                          numPerms: Int = 128, bands: Int = 16,
                                          maxBandDf: Option[Int] = None): DataFrame = {
@@ -457,6 +457,14 @@ object Dedup {
   private[graft] val BandCapDf = 8
   private[graft] val BandFloodCopies = BandCapDf + 2
 
+  /** The corpus's deterministic template — the 1-row `text` relation
+    * [[templateFlood]] replicates (exposed so a caller needing both
+    * the flood and the template's text derives the scan once). */
+  private[graft] def templateText(docs: DataFrame): DataFrame = {
+    val nTok = size(filter(split(col("text"), "\\s+"), t => t =!= ""))
+    docs.filter(nTok >= 3).orderBy(col("doc_id")).limit(1).select(col("text"))
+  }
+
   /** A planted TEMPLATE FLOOD: `copies` byte-identical replicas of the
     * corpus's deterministic template doc (min doc_id among docs with ≥3
     * whitespace tokens — the shingleable minimum), ids shifted past
@@ -466,14 +474,6 @@ object Dedup {
     * DuckDB (the capped check's oracle builds the same flood). Shared
     * by [[minhashLshCappedCheck]], the streamed capped staging and the
     * specs' non-vacuity meters — one definition of "the flood". */
-  /** The corpus's deterministic template — the 1-row `text` relation
-    * [[templateFlood]] replicates (exposed so a caller needing both
-    * the flood and the template's text derives the scan once). */
-  private[graft] def templateText(docs: DataFrame): DataFrame = {
-    val nTok = size(filter(split(col("text"), "\\s+"), t => t =!= ""))
-    docs.filter(nTok >= 3).orderBy(col("doc_id")).limit(1).select(col("text"))
-  }
-
   private[graft] def templateFlood(docs: DataFrame, copies: Int): DataFrame =
     templateText(docs)
       .crossJoin(broadcast(docs.agg(max(col("doc_id")).as("mx"))))

@@ -63,18 +63,6 @@ object Training {
 
   // ------------------------------------------------ n-gram decontamination
 
-  /** Benchmark decontamination: which TRAIN docs share at least one
-    * word-`n`-gram with any TEST doc (split per [[Corpus.sampleSplit]])?
-    * The standard pretraining hygiene check (GPT-3 appendix C / PaLM
-    * style, 8-13-gram overlap; n=5 here because the test corpus is
-    * short-doc). Inverted-index aggregation on the 64-bit shingle hash —
-    * the §2.3 scale shape, single-pass: one scan computes split +
-    * shingles together, one shuffle groups by hash, and only shingles
-    * with BOTH a train and a test posting expand into pairs — cost
-    * bounded by shingle selectivity, never |train|·|test|. Output: one
-    * row per contaminated train doc with how many test docs it collides
-    * with and how many of its distinct shingles are shared.
-    */
   /** Per-doc (split, distinct word-n-gram hash array) in ONE projection —
     * split + shingles both derive from `text`, so computing them together
     * avoids joining [[Corpus.sampleSplit]] back by doc_id (which would
@@ -89,6 +77,18 @@ object Training {
         graft.functions.ShingleFunctions.shingleHashes(col("text"), n).as("shingles"))
       .filter(size(col("shingles")) > 0)
 
+  /** Benchmark decontamination: which TRAIN docs share at least one
+    * word-`n`-gram with any TEST doc (split per [[Corpus.sampleSplit]])?
+    * The standard pretraining hygiene check (GPT-3 appendix C / PaLM
+    * style, 8-13-gram overlap; n=5 here because the test corpus is
+    * short-doc). Inverted-index aggregation on the 64-bit shingle hash —
+    * the §2.3 scale shape, single-pass: one scan computes split +
+    * shingles together, one shuffle groups by hash, and only shingles
+    * with BOTH a train and a test posting expand into pairs — cost
+    * bounded by shingle selectivity, never |train|·|test|. Output: one
+    * row per contaminated train doc with how many test docs it collides
+    * with and how many of its distinct shingles are shared.
+    */
   def decontamNgram(docs: DataFrame, n: Int = 5,
                     maxShingleDf: Option[Int] = None): DataFrame = {
     val ex = splitShingled(docs, n)
@@ -393,31 +393,6 @@ object Training {
     } finally graft.functions.BloomProbe.release(spark, bfB)
   }
 
-  /** FUZZY decontamination: train docs NEAR-DUPLICATING any test doc by
-    * word-`n`-gram Jaccard ≥ `threshold` — the third member of the
-    * decontamination family. [[decontamNgram]]/[[decontamBloom]] flag
-    * ANY shared n-gram (maximum recall, noisy: one quoted sentence
-    * flags a doc); this one flags only docs that are substantially the
-    * test doc (the Llama/GPT-4-report style "near-duplicate of an eval
-    * example" criterion), emitting per train doc how many test docs it
-    * near-duplicates and the worst overlap. Same exact-Jaccard
-    * semantics as [[Dedup.ngramJaccard]], restricted train×test.
-    *
-    * Scale shape: the [[decontamBloom]] discipline, not the
-    * [[Dedup.ngramJaccard]] one — a corpus-wide persist of the shingled
-    * relation would pin shingled-corpus-sized blocks with no release
-    * point (the return is lazy), which is exactly the cache-hygiene
-    * leak the `_check` queries were cured of. Instead the TEST side
-    * (fixed-size heldout benchmark — ~10⁶ shingles no matter how big
-    * train gets) is materialized ONCE with an eager localCheckpoint and
-    * broadcast into the join; the TRAIN side streams map-only straight
-    * from its own scan. Two column-pruned scans of the corpus, zero
-    * corpus-sized pinned blocks, train never shuffled: the only
-    * exchange carries the matched (train, test, shingle) rows, bounded
-    * by real overlap. The same `maxShingleDf` posting cap as the dedup
-    * family applies at 100 TB if boilerplate shingles get hot; off here
-    * because the exact oracle needs the uncapped join.
-    */
   /** SEMANTIC decontamination — the FOURTH family member, over
     * EMBEDDINGS instead of shingles: flag train docs whose embedding is
     * cosine-≥`threshold` to ANY test-split doc's embedding. This is the
@@ -463,6 +438,31 @@ object Training {
       .orderBy(col("doc_id"))
   }
 
+  /** FUZZY decontamination: train docs NEAR-DUPLICATING any test doc by
+    * word-`n`-gram Jaccard ≥ `threshold` — the third member of the
+    * decontamination family. [[decontamNgram]]/[[decontamBloom]] flag
+    * ANY shared n-gram (maximum recall, noisy: one quoted sentence
+    * flags a doc); this one flags only docs that are substantially the
+    * test doc (the Llama/GPT-4-report style "near-duplicate of an eval
+    * example" criterion), emitting per train doc how many test docs it
+    * near-duplicates and the worst overlap. Same exact-Jaccard
+    * semantics as [[Dedup.ngramJaccard]], restricted train×test.
+    *
+    * Scale shape: the [[decontamBloom]] discipline, not the
+    * [[Dedup.ngramJaccard]] one — a corpus-wide persist of the shingled
+    * relation would pin shingled-corpus-sized blocks with no release
+    * point (the return is lazy), which is exactly the cache-hygiene
+    * leak the `_check` queries were cured of. Instead the TEST side
+    * (fixed-size heldout benchmark — ~10⁶ shingles no matter how big
+    * train gets) is materialized ONCE with an eager localCheckpoint and
+    * broadcast into the join; the TRAIN side streams map-only straight
+    * from its own scan. Two column-pruned scans of the corpus, zero
+    * corpus-sized pinned blocks, train never shuffled: the only
+    * exchange carries the matched (train, test, shingle) rows, bounded
+    * by real overlap. The same `maxShingleDf` posting cap as the dedup
+    * family applies at 100 TB if boilerplate shingles get hot; off here
+    * because the exact oracle needs the uncapped join.
+    */
   def decontamFuzzy(docs: DataFrame, threshold: Double = 0.8, n: Int = 5): DataFrame = {
     val tr = splitShingled(docs, n).filter(col("split") === "train")
       .select(col("doc_id"), size(col("shingles")).as("n1"), explode(col("shingles")).as("s"))
@@ -683,8 +683,8 @@ object Training {
     * filter, both keyed on doc_id. The contaminated list and the packed
     * offsets are contamination-/train-sized, never corpus-wide
     * relations.
-    */
-  /** `bpeMerges = Some(n)` swaps the token counter (VERDICT r5 #4): a
+    *
+    * `bpeMerges = Some(n)` swaps the token counter (VERDICT r5 #4): a
     * BPE table of n merges is learned on the KEPT TRAIN docs only (the
     * tokenizer must not see validation/test text — the same hygiene
     * direction as decontamination), the whole kept corpus is tokenized

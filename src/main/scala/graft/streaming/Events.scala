@@ -4,7 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** One raw event for stateful processing (ts in epoch micros). */
 case class RawEvent(user_id: Long, ts_us: Long, value: Double)
@@ -508,7 +508,7 @@ object Events {
   /** Best-effort delete for cleanup paths: one stubborn file must not
     * abort the remaining cleanup or mask the query's real exception.
     */
-  private def deleteDirQuietly(dir: java.nio.file.Path): Unit =
+  private[streaming] def deleteDirQuietly(dir: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(dir)) // absent dir = nothing to clean, not a failure
       try deleteDir(dir)
       catch { case e: Exception =>
@@ -1894,8 +1894,8 @@ object Events {
     * [[ingestNearDupCheck]]. `deltaProbe` receives (epoch, verdict
     * delta rows) per batch — the write-amplification counter a
     * deployment monitors.
-    */
-  /** `crashAtEpoch` (spec hook): throw once at the very END of that
+    *
+    * `crashAtEpoch` (spec hook): throw once at the very END of that
     * epoch's foreachBatch — after every chain delta, the tombstones and
     * the in-stream compaction landed, but before the streaming
     * checkpoint commits the offsets (the worst replay state: output
@@ -2106,28 +2106,9 @@ object Events {
                 val haveRetired = !retired.isEmpty
                 ndLap(s"retire probe (epoch $epoch)")
                 // the epoch's aggregate = prior aggregate ⊕ this batch's
-                // retired set at epoch e — no second chain read; e
-                // exceeds every prior epoch so the max is exact (and a
-                // crashed attempt's own-epoch dir holds the same
-                // recomputed set, so excluding it from tombAggPrior
-                // loses nothing on replay)
-                tombAgg =
-                  if (!haveRetired) tombAggPrior
-                  else {
-                    val ours = retired.select(col("doc_id"))
-                      .withColumn("tomb_epoch", lit(epoch))
-                    // BOTH arms end in the per-key groupBy (ADVICE r13):
-                    // the aggregate's invariant is one row per doc_id,
-                    // and a micro-batch carrying duplicate rows for one
-                    // doc would otherwise seed duplicate keys on the
-                    // first-ever retirement epoch — fanning out every
-                    // chain row for that doc in the left_outer liveness
-                    // probes downstream
-                    Some(tombAggPrior.fold(ours)(p => p.unionByName(ours))
-                      .groupBy(col("doc_id"))
-                      .agg(max(col("tomb_epoch")).as("tomb_epoch"))
-                      .persist())
-                  }
+                // retired set at epoch e — no second chain read
+                tombAgg = ChainStore.epochTombstones(tombAggPrior, retired, haveRetired,
+                  epoch, "doc_id")
                 // the probe read shape every index read below shares:
                 // bucket-pruned files, then tombstone-resolved rows
                 // (the two compose — tombstones are per-doc, buckets
@@ -2867,34 +2848,30 @@ object Events {
         lit(cold).as("cap_cold_at_convergence")))
   }
 
-  /** Compact a `batch=<epoch>` delta-chain sink (the layout
-    * [[ingestDedupToFiles]] writes): resolve last-write-wins per
-    * `keyCols`, rewrite it as the newest epoch's directory, and prune
-    * every older delta — read amplification drops from O(#deltas) back
-    * to one directory, which is exactly the periodic job the
-    * merge-on-read layout requires at 100 TB. The snapshot keeps the
-    * NEWEST EXISTING epoch number, so a stream resuming from its
-    * checkpoint (next epoch = max + 1) can never collide with it, and
-    * repeated compaction is a no-op by construction (one dir in, the
-    * same relation out).
-    *
-    * Swap discipline (crash-safe, ADVICE r6): the snapshot materializes
-    * into a temp dir OUTSIDE the partition layout (forcing the read of
-    * every delta it's about to replace) and is stamped with a
-    * target-epoch marker; the newest delta is then moved ASIDE (a
-    * single atomic directory rename — never deleted while it is the
-    * only copy), the snapshot renamed into its place, and only then are
-    * the aside copy and the older deltas pruned. Every intermediate
-    * state is recoverable: [[recoverInterruptedCompaction]] runs on
-    * entry and either finishes an interrupted swap (marker present,
-    * target missing → the snapshot IS the data, complete the rename) or
-    * discards a redundant/incomplete snapshot (target present → the
-    * chain is intact). A reader racing the rename pair can still
-    * briefly miss the newest delta (the documented harness caveat); a
-    * production deployment commits the same swap through a table
-    * format's transaction log (Delta/Iceberg) instead, with identical
-    * relational semantics — but no crash point here loses data.
-    */
+  /** The engineered drift wave's per-dimension shift — far outside the
+    * unit-ish embedding range, so a shifted cloud funnels into one or
+    * two frozen-quantizer cells and [[graft.operators.Similarity
+    * .maxCellShare]] visibly jumps. ONE definition: the staged wave,
+    * the check twin's reconstruction and the specs all shift with it. */
+  private[graft] val DriftWaveShift = 8.0f
+
+  /** Default re-train trigger for the migrating loop: a fifth of the
+    * corpus landing in one cell reads ~0.2 share against a ~1/16
+    * stable baseline — 0.15 sits between them with margin both ways. */
+  private[graft] val DriftMaxCellShareDefault = 0.15
+
+  /** Apply the drift wave to a vector relation (the `embedding` column
+    * shifted by [[DriftWaveShift]] per dimension, float-preserved). */
+  private[graft] def driftShift(df: DataFrame): DataFrame =
+    driftShiftBy(df, DriftWaveShift)
+
+  /** [[driftShift]] with a caller-chosen per-dimension delta — the
+    * second-wave staging shifts to the OPPOSITE side of the base cloud
+    * (−[[DriftWaveShift]]), outside every generation-2 centroid. */
+  private[graft] def driftShiftBy(df: DataFrame, delta: Float): DataFrame =
+    df.withColumn("embedding",
+      transform(col("embedding"), x => (x + lit(delta)).cast("float")))
+
   /** Continuous EMBEDDING ingestion with the IVF index maintained as
     * stored state — the vector-side sibling of [[ingestNearDup]] and
     * the streaming loop of
@@ -2905,7 +2882,7 @@ object Events {
     * file-scan order), stores it once, and FREEZES it: every batch then
     * assigns ONLY its own vectors against the stored centroids
     * (map-only, O(|batch|)) and appends the `(neighbor_id, cell)` delta
-    * as `assign/batch=e` — nothing corpus-sized is ever recomputed or
+    * as `assign_g1/batch=e` — nothing corpus-sized is ever recomputed or
     * re-assigned, and the assignment write commits the epoch (replay
     * overwrites idempotently; a replayed epoch 0 re-trains on its own
     * arrival and rewrites the same centroids).
@@ -2920,13 +2897,13 @@ object Events {
     * saw the later arrivals — the `ivf_incr` discipline).
     *
     * Store layout (the r11 bucketing discipline, applied here r12):
-    * `assign/batch=e/bucket=b` hash-buckets the chain by neighbor_id
+    * `assign_g1/batch=e/bucket=b` hash-buckets the chain by neighbor_id
     * ([[chainBucket]]) so a point lookup ("which cell holds vector v")
     * file-prunes to one bucket — the query side reads the chain whole
     * ONCE, but any recurring per-id probe gets the same skip the other
     * bucketed stores have (poisoned-file proof in StreamingSpec). The
     * drift monitor is maintained INCREMENTALLY (VERDICT r10 ask, r12):
-    * each epoch appends `cellstats/batch=e` — this BATCH's per-cell
+    * each epoch appends `cellstats_g1/batch=e` — this BATCH's per-cell
     * counts, O(nCells) rows — and the monitor sums the stats chain
     * (O(epochs × nCells) scalar rows) instead of re-aggregating the
     * full O(corpus) assignment chain per epoch; max-cell share growing
@@ -2976,30 +2953,6 @@ object Events {
     * and the tombstone aggregate's growth for a loop that would
     * otherwise append one delta per epoch forever.
     */
-  /** The engineered drift wave's per-dimension shift — far outside the
-    * unit-ish embedding range, so a shifted cloud funnels into one or
-    * two frozen-quantizer cells and [[graft.operators.Similarity
-    * .maxCellShare]] visibly jumps. ONE definition: the staged wave,
-    * the check twin's reconstruction and the specs all shift with it. */
-  private[graft] val DriftWaveShift = 8.0f
-
-  /** Default re-train trigger for the migrating loop: a fifth of the
-    * corpus landing in one cell reads ~0.2 share against a ~1/16
-    * stable baseline — 0.15 sits between them with margin both ways. */
-  private[graft] val DriftMaxCellShareDefault = 0.15
-
-  /** Apply the drift wave to a vector relation (the `embedding` column
-    * shifted by [[DriftWaveShift]] per dimension, float-preserved). */
-  private[graft] def driftShift(df: DataFrame): DataFrame =
-    driftShiftBy(df, DriftWaveShift)
-
-  /** [[driftShift]] with a caller-chosen per-dimension delta — the
-    * second-wave staging shifts to the OPPOSITE side of the base cloud
-    * (−[[DriftWaveShift]]), outside every generation-2 centroid. */
-  private[graft] def driftShiftBy(df: DataFrame, delta: Float): DataFrame =
-    df.withColumn("embedding",
-      transform(col("embedding"), x => (x + lit(delta)).cast("float")))
-
   def ingestAnnIvf(spark: SparkSession, sfDir: String,
                    statePartitions: Option[Int] = Some(4),
                    k: Int = 5, nprobe: Int = 8,
@@ -3026,79 +2979,51 @@ object Events {
       try {
         val ckpt = scratchDir("graft_annstream_ckpt", stagedBytes)
         try {
-          val centroidsDir = s"$store/centroids"
-          val assignDir = s"$store/assign"
-          val cellStatsDir = s"$store/cellstats"
-          val tombstoneDir = s"$store/tombstones"
-          // MIGRATION mode's extra stored state (VERDICT r15 #1, made
-          // REPEATABLE r17 — the loop OPERATES migrations, it doesn't
-          // perform one):
-          //  - `vectors/batch=e` — the live corpus VECTOR chain
-          //    (neighbor-id-bucketed, shares the tombstone dir): the
-          //    store the background re-assignment reads old vectors
-          //    from, and the rerank source once the raw table's rows
-          //    can be stale (a drifted wave). Generation-independent —
-          //    every migration reads the same chain;
-          //  - PER-GENERATION centroid/assign/cellstats chains
-          //    ([[centroidsDirG]] etc. — generation 1 keeps the plain
-          //    names, so the non-migrating loop's layout is
-          //    unchanged): each migration trains generation T = S+1
-          //    and builds its chains in the background — each
-          //    post-trip epoch T-assigns its own arrivals plus one
-          //    bucket-cursor CHUNK of old vectors (the cursor is a
-          //    pure function of epoch − trip epoch — replay-safe, no
-          //    mutable state). The target keeps its OWN additive
-          //    cellstats chain from the trip epoch on, so the
-          //    completeness gate is two scalar-chain sums (r16 #2) —
-          //    and so the NEXT migration's trip check has a stats
-          //    chain to poll once T is active;
-          //  - `active_gen` ("N@cutoverEpoch") / `migration` ("T@m0")
-          //    markers (atomic tmp+move): which generation serves
-          //    queries (and since when), and the in-flight migration's
-          //    target + trip epoch. The migration marker outlives its
-          //    cutover by exactly one epoch (deleted at the first
-          //    epoch STRICTLY past it — a replay of the cutover epoch
-          //    must reconstruct in-flight roles, or its arrival-only
-          //    commit write would overwrite the chunk rows); the
-          //    deletion IS the re-arm: the trip check runs again off
-          //    the active generation's stats chain, so v2→v3 and
-          //    beyond are the same code path. Drained generations'
-          //    chains are deleted on the compaction cadence.
-          val vectorsDir = s"$store/vectors"
-          def centroidsDirG(g: Int): String =
-            if (g == 1) centroidsDir else s"$store/centroids_g$g"
-          def assignDirG(g: Int): String =
-            if (g == 1) assignDir else s"$store/assign_g$g"
-          def cellStatsDirG(g: Int): String =
-            if (g == 1) cellStatsDir else s"$store/cellstats_g$g"
-          val activeGenPath = java.nio.file.Paths.get(s"$store/active_gen")
-          val migrationPath = java.nio.file.Paths.get(s"$store/migration")
-          // the assignment chain's value schema — explicit-schema reads
-          // of possibly-empty delta dirs (a removal-only epoch assigns
-          // nothing)
-          val assignSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("neighbor_id", LongType),
-            org.apache.spark.sql.types.StructField("cell",
-              org.apache.spark.sql.types.IntegerType)))
-          val cellStatsSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("cell",
-              org.apache.spark.sql.types.IntegerType),
-            org.apache.spark.sql.types.StructField("n", LongType)))
-          val vectorsSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("neighbor_id", LongType),
-            org.apache.spark.sql.types.StructField("embedding",
-              rawSchema(ss, sfDir, "embeddings")("embedding").dataType)))
+          // Store layout and migration protocol: [[GenerationalStore]].
+          // Generation g keeps `assign_g<g>` (the neighbor-id-bucketed
+          // assignment chain; its delta commits the epoch),
+          // `cellstats_g<g>` (per-cell counts: the drift monitor and the
+          // completeness gate) and `centroids_g<g>` (its frozen
+          // quantizer). MIGRATION mode (VERDICT r15 #1, repeatable r17)
+          // adds `vectors/batch=e`, the live corpus VECTOR chain
+          // (neighbor-id-bucketed, tombstone-shared, generation-
+          // independent, written from epoch 0): the store the background
+          // re-assignment reads old vectors from, and the rerank source
+          // once the raw table's rows can be stale (a drifted wave).
+          // Value schemas are explicit: a removal-only epoch assigns
+          // nothing, and inference over an empty delta dir fails.
+          val assignSchema = StructType(Seq(
+            StructField("neighbor_id", LongType), StructField("cell", IntegerType)))
+          val vectorsSchema = StructType(Seq(
+            StructField("neighbor_id", LongType),
+            StructField("embedding", rawSchema(ss, sfDir, "embeddings")("embedding").dataType)))
+          val chains = new GenerationalStore(store, "neighbor_id",
+            "assign", assignSchema, "cellstats", "vectors", vectorsSchema)
           // column selected BY NAME: a positional read would silently
           // return wrong vectors if the stored column order ever changed
           // resident across epochs via FrozenStoreMemo (r19): a
           // generation's centroids are written once and FROZEN, yet
           // were re-collected from parquet every epoch
-          def loadCentroids(s2: SparkSession, dir: String = centroidsDir): Array[Array[Double]] =
+          def loadCentroids(s2: SparkSession, g: Int): Array[Array[Double]] = {
+            val dir = chains.genDir("centroids", g)
             FrozenStoreMemo.cached(dir) {
               s2.read.parquet(dir).orderBy(col("cell"))
                 .select(col("centroid"))
                 .collect().map(_.getSeq[Double](0).toArray)
             }
+          }
+          // train generation g's quantizer on `vecs` — a bounded sample
+          // taken in vec_id order, so the centroids are a deterministic
+          // function of the data, not of file-scan order — and store it
+          // (a replayed training epoch rewrites the same centroids)
+          def trainCentroids(s2: SparkSession, vecs: DataFrame, g: Int): Array[Array[Double]] = {
+            import s2.implicits._
+            val c = Similarity.ivfTrain(vecs.orderBy(col("vec_id")))
+            c.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
+              .toDF("cell", "centroid")
+              .write.mode("overwrite").parquet(chains.genDir("centroids", g))
+            c
+          }
           val outerLap = graft.operators.Snapshot.incrLap()
           val emb = ss.read.parquet(staged.toString)
           // the stream carries CORPUS vectors; the query set is static
@@ -3114,60 +3039,19 @@ object Events {
             .option("checkpointLocation", ckpt.toString)
             .foreachBatch { (batch: DataFrame, epoch: Long) =>
               val bss = batch.sparkSession
-              import bss.implicits._
-              // a crash mid-swap of the in-stream compaction below can
-              // leave a chain whose newest prefix lives only in the
-              // stranded snapshot — repair before any chain read (every
-              // generation chain present, whatever the marker state)
-              (Seq(assignDir, cellStatsDir, vectorsDir) ++
-                Option(new java.io.File(store.toString).listFiles()).toSeq.flatten
-                  .filter(f => f.isDirectory && (f.getName.startsWith("assign_g") ||
-                    f.getName.startsWith("cellstats_g")))
-                  .map(_.getPath))
-                .foreach(d => recoverInterruptedCompaction(java.nio.file.Paths.get(d)))
-              // ---- generation roles (r17: repeatable migrations —
-              // see [[generationRoles]], the ONE copy of the
-              // replay-critical marker logic) ----
-              val (activeGen, migInFlight, commitGen) =
-                generationRoles(activeGenPath, migrationPath, epoch)
+              val roles = chains.beginEpoch(epoch)
+              val commitGen = roles.commit
               // removals (embedding IS NULL) vs adds — see the query doc
               val removals = batch.filter(col("embedding").isNull)
                 .select(col("vec_id").as("neighbor_id")).persist()
               val arrived = batch.filter(col("embedding").isNotNull).persist()
-              // PRIOR epochs' tombstone aggregate, shared by the
-              // re-delivery membership probe and the superseded-
-              // assignment lookup below (one chain read per epoch —
-              // the near-dup discipline)
-              val tombAggPrior = tombstoneAggregate(bss, tombstoneDir,
-                keyCol = "neighbor_id", upTo = Some(epoch - 1)).map(_.persist())
-              // RE-DELIVERED ids (r13): batch vectors the assignment
-              // chain already holds — superseded wholesale via the same
-              // tombstone write (old rows die, the batch's own epoch-e
-              // rows survive). Membership is probed against the
-              // neighbor-id-bucketed chain pruned to the batch's own
-              // buckets and resolved through the PRIOR tombstones, so a
-              // removed-then-re-added id is classified NEW whatever the
-              // compaction timing.
-              val committedPrior =
-                committedEpochsBelow(assignDirG(commitGen), epoch).nonEmpty
-              val redelivered =
-                if (!committedPrior) removals.limit(0)
-                else arrived.select(col("vec_id").as("neighbor_id"))
-                  .join(tombstoneResolvedRowsWith(
-                      prunedChainRows(bss, assignDirG(commitGen), epoch - 1,
-                        collectBuckets(arrived, col("vec_id")), Some(assignSchema)),
-                      tombAggPrior, keyCol = "neighbor_id")
-                    .select(col("neighbor_id")), Seq("neighbor_id"), "left_semi")
-              // retired = removed ∪ re-delivered: one tombstone delta
-              // retracts both kinds' old rows
-              val retired = removals.unionByName(redelivered).persist()
+              val arrivedIds = arrived.select(col("vec_id").as("neighbor_id"))
+              // retired = removed ∪ RE-DELIVERED (r13): a batch vector
+              // the assignment chain already holds is superseded
+              // wholesale by the same tombstone (old rows die, the
+              // batch's own epoch-e rows survive)
+              val ret = chains.retirements(bss, epoch, commitGen, removals, arrivedIds)
               try {
-                // tombstones written only when non-empty: a
-                // retirement-free run never grows the chain and every
-                // reader takes the no-tombstone fast path (r12 review;
-                // replay recomputes the same set, so the conditional is
-                // idempotent)
-                val haveRetired = !retired.isEmpty
                 // gate on COMMITTED stored state, not `epoch == 0` (the
                 // ingestNearDup ADVICE-r10 rule): a reused streaming
                 // checkpoint over a recreated store starts at epoch > 0
@@ -3178,344 +3062,111 @@ object Events {
                 // waits for the first real arrival (r12 review).
                 val haveAdds = !arrived.isEmpty
                 val centroidsOpt: Option[Array[Array[Double]]] =
-                  if (new java.io.File(s"${centroidsDirG(commitGen)}/_SUCCESS").exists &&
-                      epoch != 0L) Some(loadCentroids(bss, centroidsDirG(commitGen)))
-                  else if (haveAdds) {
-                    val c = Similarity.ivfTrain(arrived.orderBy(col("vec_id")))
-                    c.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-                      .toDF("cell", "centroid")
-                      .write.mode("overwrite").parquet(centroidsDirG(commitGen))
-                    Some(c)
-                  } else None
+                  if (new java.io.File(s"${chains.genDir("centroids", commitGen)}/_SUCCESS").exists &&
+                      epoch != 0L) Some(loadCentroids(bss, commitGen))
+                  else if (haveAdds) Some(trainCentroids(bss, arrived, commitGen))
+                  else None
                 // the epoch's independent non-committing deltas — the
-                // tombstone, the neighbor-id-bucketed assignment delta
-                // (the same store shape as every other chain; schema-
-                // correct empty when there is nothing to assign) and,
-                // in MIGRATION mode, the corpus vector chain (written
-                // from epoch 0: the background re-assignment reads
-                // PRE-trip vectors from it, and it doubles as the
-                // rerank source once table rows can be stale) — as ONE
-                // concurrent group (r20, guide §2.6 / VERDICT r19 #4).
-                // No read-after-write edge: the stats delta reads the
+                // tombstone, the assignment delta (schema-correct empty
+                // when there is nothing to assign) and, in MIGRATION
+                // mode, the corpus vector chain — as ONE concurrent
+                // group (r20, guide §2.6 / VERDICT r19 #4). No
+                // read-after-write edge: the stats delta reads the
                 // assignment delta back AFTER this barrier, the
                 // centroid train/store above stays sequential (the
                 // assign write consumes its result), and the committing
-                // stats write stays last. Crash subsets replay exactly
-                // like the sequential prefixes did (idempotent
-                // overwrites; the existing trip-epoch crash legs).
-                concurrentWrites(
-                  (if (haveRetired) Seq(() =>
-                    retired.write.mode("overwrite")
-                      .parquet(s"$tombstoneDir/batch=$epoch")) else Seq.empty) ++
-                  Seq(() =>
-                    centroidsOpt.fold(
-                      bss.createDataFrame(bss.sparkContext
-                        .emptyRDD[org.apache.spark.sql.Row], assignSchema))(
-                      c => Similarity.ivfAssign(arrived, c))
-                      .withColumn("bucket", chainBucket(col("neighbor_id")))
-                      .repartition(col("bucket"))
-                      .write.partitionBy("bucket").mode("overwrite")
-                      .parquet(s"${assignDirG(commitGen)}/batch=$epoch")) ++
+                // stats write stays last. Crash subsets replay like the
+                // sequential prefixes did (idempotent overwrites).
+                concurrentWrites(chains.tombstoneWrite(ret, epoch) ++
+                  Seq(() => chains.writeDelta(chains.primaryDir(commitGen), epoch,
+                    centroidsOpt.fold(chains.emptyDelta(bss))(c => Similarity.ivfAssign(arrived, c)))) ++
                   (if (driftMaxCellShare.isDefined) Seq(() =>
-                    arrived.select(col("vec_id").as("neighbor_id"), col("embedding"))
-                      .withColumn("bucket", chainBucket(col("neighbor_id")))
-                      .repartition(col("bucket"))
-                      .write.partitionBy("bucket").mode("overwrite")
-                      .parquet(s"$vectorsDir/batch=$epoch")) else Seq.empty))
-                // the monitor's per-epoch state delta: THIS batch's
+                    chains.writeDelta(chains.sourceDir, epoch,
+                      arrived.select(col("vec_id").as("neighbor_id"), col("embedding"))))
+                  else Seq.empty))
+                // generation `gen`'s per-epoch stats delta: THIS batch's
                 // per-cell counts, O(nCells) rows — never the corpus —
                 // PLUS negative counts for the RETIRED vectors' prior
-                // cells (removed AND superseded re-deliveries — a
-                // re-assigned vector must leave its old cell's count),
-                // looked up from the chain's PRIOR epochs bucket-pruned
-                // (file skip; epoch-1 bounds the row scan so the
-                // re-delivered batch's own fresh rows are never
-                // subtracted) and tombstone-resolved so a doubly-
-                // retired id can never be double-subtracted
-                // per-generation stats delta: the adds' cells PLUS
-                // negatives for the retired docs' prior rows in THAT
-                // generation's chain — shared by the commit chain here
-                // and the migration target below (whose sums feed the
-                // scalar completeness gate, r16 #2)
+                // cells in that generation's chain (removed AND
+                // superseded re-deliveries — a re-assigned vector must
+                // leave its old cell's count). Shared by the commit
+                // chain and the migration target, so sum(n) over either
+                // chain is its live row count (the cellStatsProbe spec
+                // pins it against the one-shot live occupancy).
                 def statsDelta(gen: Int): DataFrame = {
-                  val addStats = graft.operators.Similarity.ivfCellStats(
-                    bss.read.schema(assignSchema)
-                      .parquet(s"${assignDirG(gen)}/batch=$epoch"))
-                  val remStats =
-                    if (!haveRetired ||
-                        committedEpochsBelow(assignDirG(gen), epoch).isEmpty)
-                      addStats.limit(0)
-                    else tombstoneResolvedRowsWith(
-                        prunedChainRows(bss, assignDirG(gen), epoch - 1,
-                          collectBuckets(retired, col("neighbor_id")),
-                          Some(assignSchema)),
-                        tombAggPrior, keyCol = "neighbor_id")
-                      .join(retired, Seq("neighbor_id"), "left_semi")
-                      .groupBy(col("cell"))
-                      .agg((-count(lit(1))).as("n"))
-                  addStats.unionByName(remStats)
+                  val addStats = Similarity.ivfCellStats(chains.delta(bss, gen, epoch))
+                  addStats.unionByName(chains.retiredPriorRows(bss, gen, epoch, ret)
+                    .fold(addStats.limit(0))(_.groupBy(col("cell")).agg((-count(lit(1))).as("n"))))
                 }
-                statsDelta(commitGen)
-                  .write.mode("overwrite")
-                  .parquet(s"${cellStatsDirG(commitGen)}/batch=$epoch")
-                // ---- IVF re-train / cutover (VERDICT r15 #1; made
-                // REPEATABLE + scalar-gated r17, VERDICT r16 #2/#3) ---
-                // The consumer the drift monitor exists for. Trip (only
-                // when no migration is in flight — the marker deletion
-                // at epoch start is the re-arm): the ACTIVE
-                // generation's summed stats chain's max-cell share over
-                // the threshold. Response: train generation T = S+1
-                // ONCE on a bounded deterministic sample of the LIVE
-                // corpus, then build T's own epoch chains in the
-                // BACKGROUND — each epoch T-assigns its arrivals plus
-                // one bucket-cursor chunk of old vectors (cursor =
-                // f(epoch − trip epoch), no mutable state, replay
-                // recomputes its own chunk) and appends T's own
-                // additive stats delta — and flip the query side only
-                // when T's live count equals the live corpus count.
-                // The completeness gate is TWO SCALAR-CHAIN SUMS
-                // (O(epochs × nCells) rows each, r16 #2 — previously
-                // two corpus-width counts): sum(n) over a generation's
-                // stats chain IS its live row count (adds +1,
-                // retirements −1, re-deliveries net 0 — the invariant
-                // the cellStatsProbe spec pins against the one-shot
-                // live occupancy).
-                if (driftMaxCellShare.isDefined) {
-                  val note = new StringBuilder
-                  // per-stage soak laps (r17, VERDICT r16 #4: the
-                  // migration's epochs get their own three-point growth
-                  // record). Labels deliberately do NOT start with
-                  // "epoch N" — the soak classifies those as removal-
-                  // epoch blast-radius stages, while the chunk re-assign
-                  // is arrival-plus-chunk-proportional by design.
-                  val migLap = graft.operators.Snapshot.incrLap()
-                  // the epoch's tombstone aggregate = prior ⊕ this
-                  // batch's retired set (the ingestNearDup merge — no
-                  // second chain read); may BE tombAggPrior
-                  val tombAggE =
-                    if (!haveRetired) tombAggPrior
-                    else {
-                      val ours = retired.select(col("neighbor_id"))
-                        .withColumn("tomb_epoch", lit(epoch))
-                      Some(tombAggPrior.fold(ours)(p => p.unionByName(ours))
-                        .groupBy(col("neighbor_id"))
-                        .agg(max(col("tomb_epoch")).as("tomb_epoch"))
-                        .persist())
-                    }
-                  try {
-                    def liveVectors(): DataFrame = tombstoneResolvedRowsWith(
-                      withChainPartitionCols(
-                        bss.read.schema(vectorsSchema).parquet(vectorsDir),
-                        "batch", "bucket")
-                        .filter(col("batch") <= lit(epoch)).drop("bucket"),
-                      tombAggE, keyCol = "neighbor_id")
-                    // a generation's LIVE row count off its additive
-                    // stats chain — the scalar read the completeness
-                    // gate runs instead of corpus-width counts (r16
-                    // #2). gateInputProbe accumulates the rows entering
-                    // each sum: the spec pins them to the stats chain's
-                    // size, never the corpus's.
-                    def statsLiveN(gen: Int): Long = {
-                      val chain = withChainPartitionCols(
-                          bss.read.schema(cellStatsSchema)
-                            .parquet(cellStatsDirG(gen)), "batch")
-                        .filter(col("batch") <= lit(epoch))
-                      // probe-only count job (see probeAddGen)
-                      gateInputProbe.foreach(probeAddGen(_, epoch, gen, chain.count()))
-                      chain.agg(coalesce(sum(col("n")), lit(0L)).as("n"))
-                        .head().getLong(0)
-                    }
-                    // trip check — re-armed automatically once the
-                    // previous migration's marker is deleted: the poll
-                    // then reads the NEW active generation's own chain,
-                    // so generation N+1 drifting years later triggers
-                    // the next migration through this same branch
-                    val mig: Option[(Int, Long)] = migInFlight.orElse {
+                chains.writeAdditive(commitGen, epoch, statsDelta(commitGen))
+                // ---- IVF re-train / cutover (VERDICT r15 #1; repeatable
+                // and scalar-gated r17) ---- the consumer the drift
+                // monitor exists for. Trip: the commit generation's
+                // summed stats chain's max-cell share over the
+                // threshold. Response: train generation T = S+1 ONCE on
+                // a bounded deterministic sample of the LIVE corpus,
+                // then build T's chains in the background (arrivals plus
+                // one bucket-cursor chunk of old vectors per epoch) and
+                // flip the query side on the completeness gate.
+                if (driftMaxCellShare.isDefined)
+                  chains.migrationEpoch(bss, epoch, roles, ret, migrationProbe) { m =>
+                    val mig = m.target {
                       val share = Similarity.maxCellShare(
-                        withChainPartitionCols(
-                          bss.read.schema(cellStatsSchema)
-                            .parquet(cellStatsDirG(commitGen)), "batch")
-                          .filter(col("batch") <= lit(epoch))
+                        chains.additiveRows(bss, commitGen, epoch)
                           .groupBy(col("cell")).agg(sum(col("n")).as("n"))
                           .filter(col("n") > 0))
-                      note ++= f"share=$share%.3f "
-                      migLap(s"migration drift poll (epoch $epoch)")
-                      if (share > driftMaxCellShare.get) {
-                        writeGenMarker(migrationPath, s"${commitGen + 1}@$epoch")
-                        note ++= "trip "
-                        Some((commitGen + 1, epoch))
-                      } else None
+                      m.note ++= f"share=$share%.3f "
+                      m.lap(s"migration drift poll (epoch $epoch)")
+                      share > driftMaxCellShare.get
                     }
                     mig.foreach { case (t, m0) =>
                       // generation T: trained at the trip epoch on the
-                      // live corpus (bounded sample inside ivfTrain,
-                      // deterministic order) — replay of m0 retrains
-                      // identically and overwrites idempotently
+                      // live corpus — replay of m0 retrains identically
                       val vT =
                         if (epoch == m0) {
-                          val c = Similarity.ivfTrain(liveVectors()
-                            .select(col("neighbor_id").as("vec_id"), col("embedding"))
-                            .orderBy(col("vec_id")))
-                          c.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-                            .toDF("cell", "centroid")
-                            .write.mode("overwrite").parquet(centroidsDirG(t))
-                          note ++= s"g$t-trained "
-                          migLap(s"migration train (epoch $epoch)")
+                          val c = trainCentroids(bss, m.liveSource()
+                            .select(col("neighbor_id").as("vec_id"), col("embedding")), t)
+                          m.note ++= s"g$t-trained "
+                          m.lap(s"migration train (epoch $epoch)")
                           c
-                        } else loadCentroids(bss, centroidsDirG(t))
+                        } else loadCentroids(bss, t)
                       // the epoch's T delta: its own arrivals + the
-                      // cursor's chunk of OLD vectors — file-pruned to
-                      // the cursor buckets, tombstone-resolved, and
-                      // anti-joined against T's PRIOR-epoch ids (a
-                      // replay must redo its own chunk) and this
-                      // epoch's arrivals (assigned with the batch
-                      // below). Anti-join (not a batch<m0 filter)
-                      // keeps the chunk correct across compactions,
-                      // which fold old rows up to newer batch values.
-                      val b0 = ((epoch - m0) * migrateBucketsPerEpoch).toInt
-                      val chunkBuckets =
-                        (b0 until math.min(b0 + migrateBucketsPerEpoch, ChainBuckets)).toList
-                      val chunkVecs =
-                        if (chunkBuckets.isEmpty)
-                          liveVectors().limit(0)
-                        else {
-                          val tPriorIds =
-                            if (committedEpochsBelow(assignDirG(t), epoch).isEmpty)
-                              arrived.select(col("vec_id").as("neighbor_id")).limit(0)
-                            else tombstoneResolvedRowsWith(
-                              prunedChainRows(bss, assignDirG(t), epoch - 1,
-                                chunkBuckets, Some(assignSchema)),
-                              tombAggE, keyCol = "neighbor_id")
-                              .select(col("neighbor_id"))
-                          tombstoneResolvedRowsWith(
-                            prunedChainRows(bss, vectorsDir, epoch,
-                              chunkBuckets, Some(vectorsSchema)),
-                            tombAggE, keyCol = "neighbor_id")
-                            .join(tPriorIds, Seq("neighbor_id"), "left_anti")
-                            .join(arrived.select(col("vec_id").as("neighbor_id")),
-                              Seq("neighbor_id"), "left_anti")
-                        }
-                      if (chunkBuckets.nonEmpty)
-                        note ++= s"chunk=[${chunkBuckets.head},${chunkBuckets.last}] "
-                      Similarity.ivfAssign(arrived, vT)
-                        .unionByName(Similarity.ivfAssign(
-                          chunkVecs.select(col("neighbor_id").as("vec_id"),
-                            col("embedding")), vT))
-                        .withColumn("bucket", chainBucket(col("neighbor_id")))
-                        .repartition(col("bucket"))
-                        .write.partitionBy("bucket").mode("overwrite")
-                        .parquet(s"${assignDirG(t)}/batch=$epoch")
-                      // T's own additive stats delta — the same
-                      // statsDelta kernel as the commit chain's, so
-                      // sum(n) over T's chain is T's live row count:
-                      // the gate's right-hand side, and the chain the
-                      // NEXT migration's trip check polls once T is
-                      // active
-                      migLap(s"migration chunk re-assign (epoch $epoch)")
-                      statsDelta(t)
-                        .write.mode("overwrite")
-                        .parquet(s"${cellStatsDirG(t)}/batch=$epoch")
-                      migLap(s"migration target stats (epoch $epoch)")
-                      // cutover: T is complete exactly when its live
-                      // count equals the live corpus count — two
-                      // scalar-chain sums (r16 #2). Flip the query
-                      // side once, atomically (replay of the cutover
-                      // epoch sees the marker and just re-lands its
-                      // idempotent T delta).
-                      if (activeGen != t) {
-                        val liveN = statsLiveN(commitGen)
-                        val tN = statsLiveN(t)
-                        note ++= s"g$t=$tN/$liveN "
-                        migLap(s"migration completeness gate (epoch $epoch)")
-                        if (tN == liveN) {
-                          writeGenMarker(activeGenPath, s"$t@$epoch")
-                          note ++= "cutover "
-                        }
-                      }
+                      // cursor's chunk of OLD vectors
+                      val chunkVecs = m.chunk(t, m0, migrateBucketsPerEpoch, arrivedIds)
+                      chains.writeDelta(chains.primaryDir(t), epoch,
+                        Similarity.ivfAssign(arrived, vT)
+                          .unionByName(Similarity.ivfAssign(
+                            chunkVecs.select(col("neighbor_id").as("vec_id"),
+                              col("embedding")), vT)))
+                      m.lap(s"migration chunk re-assign (epoch $epoch)")
+                      // T's own stats delta: the gate's right-hand
+                      // side, and the chain the NEXT migration's trip
+                      // check polls once T is active
+                      chains.writeAdditive(t, epoch, statsDelta(t))
+                      m.lap(s"migration target stats (epoch $epoch)")
+                      m.gate(t, gateInputProbe)
                     }
-                  } finally tombAggE
-                    .filterNot(t => tombAggPrior.exists(_ eq t))
-                    .foreach(_.unpersist(blocking = false))
-                  migrationProbe.foreach(probeAdd(_, (epoch, note.toString.trim)))
-                }
+                  }
               } finally {
                 arrived.unpersist(blocking = false)
                 removals.unpersist(blocking = false)
-                retired.unpersist(blocking = false)
-                tombAggPrior.foreach(_.unpersist(blocking = false))
+                ret.release()
               }
-              // in-stream compaction (r13 — the near-dup discipline,
-              // previously missing here: at 100 TB the assign chain and
-              // its tombstones would otherwise grow one delta per epoch
-              // forever). PREFIX-BOUNDED to epochs < the one just
-              // committed; the assign chain folds tombstone-resolved
-              // with its bucket layout preserved, and the cellstats
-              // chain — ADDITIVE, not last-write-wins — folds through
-              // the sum-merge compactor (per-cell totals are the
-              // resolution its consumers apply).
-              if (epoch > 0 && epoch % compactEvery.toLong == 0) {
-                // migration mode's chains fold in the SAME call — the
-                // multi-chain compactor consumes the shared tombstones
-                // only after every chain swapped, so a second call
-                // would find them already gone (the chunk reads are
-                // anti-join-based, so folding old vector rows up to
-                // newer batch values is harmless). The in-flight
-                // TARGET generation (read off the marker — a trip this
-                // epoch already wrote it) folds alongside.
-                val targetGen = readGenMarker(migrationPath).map(_._1)
-                  .filter(_ != commitGen)
-                val migChains =
-                  (if (java.nio.file.Files.isDirectory(
-                    java.nio.file.Paths.get(vectorsDir))) Seq(vectorsDir) else Nil) ++
-                  targetGen.map(assignDirG).filter(d =>
-                    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
-                compactTombstonedChains(bss,
-                  Seq(assignDirG(commitGen)) ++ migChains, tombstoneDir,
-                  keyCol = "neighbor_id",
-                  partitionColsFor = _ => Seq("bucket"),
-                  upTo = Some(epoch - 1),
-                  dataSchemaFor = d =>
-                    Some(if (d == vectorsDir) vectorsSchema else assignSchema))
-                (Seq(commitGen) ++ targetGen).foreach { g =>
-                  if (java.nio.file.Files.isDirectory(
-                      java.nio.file.Paths.get(cellStatsDirG(g))))
-                    compactAdditiveChain(bss, cellStatsDirG(g), Seq("cell"), "n",
-                      upTo = Some(epoch - 1), dataSchema = Some(cellStatsSchema))
-                }
-                // retire DRAINED generations (r17, VERDICT r16 #1):
-                // every generation strictly below the COMMIT generation
-                // is unreadable by any future epoch (the commit,
-                // target and query roles all sit at or above it), so
-                // its centroid/assign/cellstats chains are deleted on
-                // this cadence — idempotent, replay-safe (a replayed
-                // epoch reconstructs the same roles and never reads
-                // below its commit generation)
-                retireDrainedGenerations(commitGen,
-                  g => Seq(centroidsDirG(g), assignDirG(g), cellStatsDirG(g)),
-                  _ => Nil)
-              }
+              // in-stream compaction (r13): at 100 TB the assign chain
+              // and its tombstones would otherwise grow one delta per
+              // epoch forever
+              chains.compact(bss, commitGen, epoch, compactEvery)
               // spec probe: which generations' assign chains survive on
               // disk after this epoch's compaction — the drained-
               // generation retirement meter (a dir listing, no jobs)
-              generationsProbe.foreach(buf => probeAdd(buf, (epoch,
-                (1 to 8).filter(g => java.nio.file.Files.isDirectory(
-                  java.nio.file.Paths.get(assignDirG(g)))))))
-              deltaProbe.foreach(probeAdd(_, (epoch,
-                bss.read.schema(assignSchema)
-                  .parquet(s"${assignDirG(commitGen)}/batch=$epoch").count())))
+              generationsProbe.foreach(buf => probeAdd(buf, (epoch, chains.generations)))
+              deltaProbe.foreach(probeAdd(_, (epoch, chains.delta(bss, commitGen, epoch).count())))
               // the drift monitor a deployment polls after every append:
               // running per-cell occupancy summed off the STATS chain —
               // O(epochs × nCells) scalar rows per poll, with the full
               // assignment chain never re-read (VERDICT r10 ask #4)
               cellStatsProbe.foreach { buf =>
-                // partition-col guard: pure-removal head epochs commit
-                // zero-file stats deltas (nothing assigned, no prior
-                // cells to subtract) — the monitor must read empty,
-                // not fail analysis
-                val statsChain = withChainPartitionCols(
-                    bss.read.schema(cellStatsSchema)
-                      .parquet(cellStatsDirG(commitGen)), "batch")
-                  .filter(col("batch") <= lit(epoch))
+                val statsChain = chains.additiveRows(bss, commitGen, epoch)
                 cellStatsInputProbe.foreach(probeAdd(_, (epoch, statsChain.count())))
                 // n > 0: a cell fully drained by removals drops out,
                 // matching the one-shot groupBy-count over the live set
@@ -3624,22 +3275,17 @@ object Events {
           // against the LIVE vector chain (table rows are stale for a
           // drifted wave), with the static query set still from the
           // table.
-          val qGen = readGenMarker(activeGenPath).map(_._1).getOrElse(1)
-          val (qAssignDir, qCentroidsDir) = (assignDirG(qGen), centroidsDirG(qGen))
-          val assigned = tombstoneResolvedRows(spark,
-            spark.read.schema(assignSchema).parquet(qAssignDir).drop("bucket"),
-            tombstoneDir, keyCol = "neighbor_id")
+          val qGen = chains.activeGeneration
+          val assigned = chains.resolvedChain(spark, chains.primaryDir(qGen))
           val embForQuery =
             if (driftMaxCellShare.isEmpty) Tables.embeddings(spark, sfDir)
             else Tables.embeddings(spark, sfDir)
               .filter(col("vec_id") < Similarity.NumQueries)
               .select(col("vec_id"), col("embedding"))
-              .unionByName(tombstoneResolvedRows(spark,
-                spark.read.schema(vectorsSchema).parquet(vectorsDir).drop("bucket"),
-                tombstoneDir, keyCol = "neighbor_id")
+              .unionByName(chains.resolvedChain(spark, chains.sourceDir)
                 .select(col("neighbor_id").as("vec_id"), col("embedding")))
           val topk = Similarity.ivfTopKFromIndex(
-            embForQuery, assigned, loadCentroids(spark, qCentroidsDir), k, nprobe)
+            embForQuery, assigned, loadCentroids(spark, qGen), k, nprobe)
           val out = detach(spark, topk)
           outerLap("consumer read-back (maintained-index top-k)")
           out
@@ -3755,12 +3401,12 @@ object Events {
     * zero), so a stored-layout change can never silently transpose the
     * vector, plus an `idx = -1` sentinel carrying the weight-row count
     * so a writer that changes the sparsity invariant fails loudly at
-    * load. The score chain is `scores/batch=e/bucket=b`, doc-id-
+    * load. The score chain is `scores_g1/batch=e/bucket=b`, doc-id-
     * bucketed ([[chainBucket]]) like every other store here, so a
     * recurring per-doc probe file-prunes to one bucket. Every batch then
     * featurizes + scores ONLY its own docs against the broadcast stored
     * model (O(|batch|·features), no shuffle, nothing corpus-sized ever
-    * recomputed) and appends `scores/batch=e`; the score write commits
+    * recomputed) and appends `scores_g1/batch=e`; the score write commits
     * the epoch (replay overwrites idempotently; a replayed epoch 0
     * re-trains on its own arrival and rewrites the same weights).
     *
@@ -3791,8 +3437,8 @@ object Events {
     * (same check-twin oracle). In-stream compaction (r13, every
     * `compactEvery` epochs, prefix-bounded) folds the score chain
     * tombstone-resolved with its bucket layout preserved.
-    */
-  /** `driftPosRateJump` arms the RE-TRAIN/CUTOVER loop (r17, VERDICT
+    *
+    * `driftPosRateJump` arms the RE-TRAIN/CUTOVER loop (r17, VERDICT
     * r16 top ask — the consumer the positive-rate drift alarm exists
     * for, closing the last monitor-without-consumer): each epoch's
     * delta pred-positive rate is compared against the ACTIVE model's
@@ -3843,54 +3489,39 @@ object Events {
       try {
         val ckpt = scratchDir("graft_classify_ckpt", stagedBytes)
         try {
-          val modelDir = s"$store/model"
-          val scoresDir = s"$store/scores"
-          val tombstoneDir = s"$store/tombstones"
-          // migration mode's extra state (see the driftPosRateJump
-          // doc): the live corpus FEATURE chain, per-generation model
-          // dirs / score chains / 1-row additive count chains, and the
-          // generation markers — the ingestAnnIvf layout, scores for
-          // assignments
-          val featsDir = s"$store/feats"
-          def modelDirG(g: Int): String =
-            if (g == 1) modelDir else s"$store/model_g$g"
-          def scoresDirG(g: Int): String =
-            if (g == 1) scoresDir else s"$store/scores_g$g"
-          def countsDirG(g: Int): String = s"$store/counts_g$g"
-          // the active model's training-time pred-positive rate — the
-          // drift monitor's baseline, written beside the model
-          def posRatePath(g: Int): java.nio.file.Path =
-            java.nio.file.Paths.get(s"$store/posrate_g$g")
-          // a generation's training epoch, durable beside its model —
-          // written for EVERY generation (the bootstrap too, r19), so
-          // the baseline replay-repair below can tell a genuine
-          // training-epoch replay from external baseline deletion
-          def trainedPathG(g: Int): java.nio.file.Path =
-            java.nio.file.Paths.get(s"$store/trained_g$g")
-          val activeGenPath = java.nio.file.Paths.get(s"$store/active_gen")
-          val migrationPath = java.nio.file.Paths.get(s"$store/migration")
-          // the score chain's value schema — explicit-schema reads of a
-          // possibly-empty delta dir (a removal-only epoch scores nothing)
-          val scoreSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id", LongType),
-            org.apache.spark.sql.types.StructField("label",
-              org.apache.spark.sql.types.BooleanType),
-            org.apache.spark.sql.types.StructField("split",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("prob",
-              org.apache.spark.sql.types.DoubleType),
-            org.apache.spark.sql.types.StructField("pred",
-              org.apache.spark.sql.types.BooleanType)))
-          val countsSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("cell",
-              org.apache.spark.sql.types.IntegerType),
-            org.apache.spark.sql.types.StructField("n", LongType)))
+          // Store layout and migration protocol: [[GenerationalStore]].
+          // Generation g keeps `scores_g<g>` (the doc-id-bucketed score
+          // chain; its delta commits the epoch), `model_g<g>` (its frozen
+          // weights) and, in migration mode, `counts_g<g>` (1-row-per-
+          // epoch live-count deltas, the completeness gate's input),
+          // beside two markers: `posrate_g<g>`, the model's training-time
+          // pred-positive rate (the drift monitor's baseline), and
+          // `trained_g<g>`, its training epoch — written for EVERY
+          // generation (the bootstrap too, r19), so the baseline
+          // replay-repair below can tell a genuine training-epoch replay
+          // from external baseline deletion. Migration mode also keeps
+          // `feats/batch=e`, the live corpus FEATURE chain (see the
+          // driftPosRateJump doc).
+          // The score chain's value schema is explicit: a removal-only
+          // epoch scores nothing, and inference over an empty delta
+          // dir fails.
+          val scoreSchema = StructType(Seq(
+            StructField("doc_id", LongType),
+            StructField("label", org.apache.spark.sql.types.BooleanType),
+            StructField("split", org.apache.spark.sql.types.StringType),
+            StructField("prob", org.apache.spark.sql.types.DoubleType),
+            StructField("pred", org.apache.spark.sql.types.BooleanType)))
           val outerLap = graft.operators.Snapshot.incrLap()
           val docs = ss.read.parquet(staged.toString)
           // the feature chain's value schema, derived at setup
           // (analysis-only)
           val featsSchema = Classifier.featurized(
             docs.limit(0).select(col("doc_id"), col("text"))).schema
+          val chains = new GenerationalStore(store, "doc_id",
+            "scores", scoreSchema, "counts", "feats", featsSchema)
+          def modelDirG(g: Int): String = chains.genDir("model", g)
+          def posRatePath(g: Int): java.nio.file.Path = chains.genPath("posrate", g)
+          def trainedPathG(g: Int): java.nio.file.Path = chains.genPath("trained", g)
           // negative-id shadow copies, staged in arrival 2 — AFTER the
           // model froze on arrival 1, so the fitted weights equal the
           // batch twin's — and retracted in arrival 3 (query doc)
@@ -3914,55 +3545,28 @@ object Events {
               // hit; the defensive guards below must fail LOUDLY, never
               // silently disarm (ADVICE r18 medium's falsifiability leg)
               storeTamper.foreach(f => f(epoch, store))
-              // repair a crash-stranded compaction swap before any read
-              // (every generation chain present, whatever the markers)
-              (Seq(scoresDir, featsDir) ++
-                Option(new java.io.File(store.toString).listFiles()).toSeq.flatten
-                  .filter(f => f.isDirectory && (f.getName.startsWith("scores_g") ||
-                    f.getName.startsWith("counts_g")))
-                  .map(_.getPath))
-                .foreach(d => recoverInterruptedCompaction(java.nio.file.Paths.get(d)))
-              // ---- generation roles (r17 — see [[generationRoles]],
-              // the ONE copy of the replay-critical marker logic) ----
-              val (activeGen, migInFlight, commitGen) =
-                generationRoles(activeGenPath, migrationPath, epoch)
+              val roles = chains.beginEpoch(epoch)
+              val commitGen = roles.commit
               // removals (text IS NULL): tombstone-only, no scoring
-              // work. RE-DELIVERED ids (r13): batch docs the score
-              // chain already holds — the same tombstone supersedes
-              // their old rows wholesale (the batch's own epoch-e
-              // scores survive; without this the consumer emitted
-              // duplicate rows for a re-scored doc, VERDICT r12 #1).
-              // Membership is probed against the doc-id-bucketed chain
-              // pruned to the batch's own buckets and resolved through
-              // the PRIOR tombstones. Written only when non-empty, so
-              // a retirement-free run never grows the chain (r12
-              // review). Scoring stays per-doc independent: the
-              // tombstone IS the entire update, no blast radius.
+              // work. RE-DELIVERED ids (r13): batch docs the score chain
+              // already holds — the same tombstone supersedes their old
+              // rows wholesale (the batch's own epoch-e scores survive;
+              // without this the consumer emitted duplicate rows for a
+              // re-scored doc, VERDICT r12 #1). Scoring stays per-doc
+              // independent: the tombstone IS the entire update, no
+              // blast radius.
               val removalsC = batch.filter(col("text").isNull)
                 .select(col("doc_id"))
               val addIds = batch.filter(col("text").isNotNull)
                 .select(col("doc_id"))
-              val tombAggPrior = tombstoneAggregate(bss, tombstoneDir,
-                upTo = Some(epoch - 1)).map(_.persist())
-              val committedPrior =
-                committedEpochsBelow(scoresDirG(commitGen), epoch).nonEmpty
-              val redelivered =
-                if (!committedPrior) removalsC.limit(0)
-                else addIds.join(tombstoneResolvedRowsWith(
-                    prunedChainRows(bss, scoresDirG(commitGen), epoch - 1,
-                      collectBuckets(addIds, col("doc_id")), Some(scoreSchema)),
-                    tombAggPrior)
-                  .select(col("doc_id")), Seq("doc_id"), "left_semi")
-              val retired = removalsC.unionByName(redelivered).persist()
-              val haveRetired = !retired.isEmpty
+              val ret = chains.retirements(bss, epoch, commitGen, removalsC, addIds)
               val feats = Classifier.featurized(
                 batch.filter(col("text").isNotNull)
                   .select(col("doc_id"), col("text"))).persist()
               try {
                 // the epoch's independent non-committing deltas — the
                 // tombstone and, in migration mode, the live corpus
-                // FEATURE chain (O(|batch|) per epoch, doc-id-bucketed,
-                // tombstone-shared; the store the background re-scoring
+                // FEATURE chain (the store the background re-scoring
                 // reads old docs from — features, not text: scoring
                 // consumes featurized rows, so the chain never
                 // re-tokenizes) — as ONE concurrent group (r20, guide
@@ -3970,15 +3574,9 @@ object Events {
                 // consumes the persisted in-memory `feats`, every chain
                 // read of either dir runs after this barrier, and the
                 // committing scores write stays last.
-                concurrentWrites(
-                  (if (haveRetired) Seq(() =>
-                    retired.write.mode("overwrite")
-                      .parquet(s"$tombstoneDir/batch=$epoch")) else Seq.empty) ++
+                concurrentWrites(chains.tombstoneWrite(ret, epoch) ++
                   (if (driftPosRateJump.isDefined) Seq(() =>
-                    feats.withColumn("bucket", chainBucket(col("doc_id")))
-                      .repartition(col("bucket"))
-                      .write.partitionBy("bucket").mode("overwrite")
-                      .parquet(s"$featsDir/batch=$epoch")) else Seq.empty))
+                    chains.writeDelta(chains.sourceDir, epoch, feats)) else Seq.empty))
                 // committed-state gate, not `epoch == 0` — see
                 // ingestAnnIvf's note (reused-checkpoint starts).
                 // The store/load pair carries the sparse-weight
@@ -4003,59 +3601,25 @@ object Events {
                     writeGenMarker(trainedPathG(commitGen), s"$commitGen@$epoch")
                     (Some(m), true)
                   } else (None, false)
-                modelOpt match {
-                  case Some(model) =>
-                    // scoring via the handle form: the per-epoch model
-                    // broadcast is DESTROYED once the delta is written —
-                    // score()'s GC-released broadcast would otherwise
-                    // accumulate one per epoch for the loop's lifetime
-                    // (ADVICE r11)
-                    val (scored, bcModel) = Classifier.scoreWithHandle(feats, model)
-                    try scored
-                      .withColumn("bucket", chainBucket(col("doc_id")))
-                      .repartition(col("bucket")) // one file per bucket per epoch
-                      .write.partitionBy("bucket").mode("overwrite")
-                      .parquet(s"${scoresDirG(commitGen)}/batch=$epoch")
-                    finally bcModel.destroy()
-                  case None =>
-                    // schema-correct empty delta commits the epoch —
-                    // routed through the SAME bucket layout as a real
-                    // delta: a non-partitioned empty write would land
-                    // a part file at a different directory depth and
-                    // break partition discovery over the whole chain
-                    // (r12 review #2)
-                    bss.createDataFrame(bss.sparkContext
-                      .emptyRDD[org.apache.spark.sql.Row], scoreSchema)
-                      .withColumn("bucket", chainBucket(col("doc_id")))
-                      .write.partitionBy("bucket").mode("overwrite")
-                      .parquet(s"${scoresDirG(commitGen)}/batch=$epoch")
-                }
+                // scoring via the handle form: the per-epoch model
+                // broadcast is DESTROYED once the delta is written —
+                // score()'s GC-released broadcast would otherwise
+                // accumulate one per epoch for the loop's lifetime
+                // (ADVICE r11). No model: a schema-correct empty delta
+                // still commits the epoch.
+                val scoredOpt = modelOpt.map(Classifier.scoreWithHandle(feats, _))
+                try chains.writeDelta(chains.primaryDir(commitGen), epoch,
+                  scoredOpt.fold(chains.emptyDelta(bss))(_._1))
+                finally scoredOpt.foreach(_._2.destroy())
                 // ---- classifier re-train / cutover (r17, VERDICT r16
                 // top ask — see the driftPosRateJump doc) ----
-                if (driftPosRateJump.isDefined) {
-                  val note = new StringBuilder
-                  // per-stage soak laps (r17, VERDICT r16 #4) — labels
-                  // avoid the "epoch N" prefix, see ingestAnnIvf's note
-                  val migLap = graft.operators.Snapshot.incrLap()
-                  // the epoch's tombstone aggregate = prior ⊕ this
-                  // batch's retired set (the ingestNearDup merge)
-                  val tombAggE =
-                    if (!haveRetired) tombAggPrior
-                    else {
-                      val ours = retired.select(col("doc_id"))
-                        .withColumn("tomb_epoch", lit(epoch))
-                      Some(tombAggPrior.fold(ours)(p => p.unionByName(ours))
-                        .groupBy(col("doc_id"))
-                        .agg(max(col("tomb_epoch")).as("tomb_epoch"))
-                        .persist())
-                    }
-                  try {
+                if (driftPosRateJump.isDefined)
+                  chains.migrationEpoch(bss, epoch, roles, ret, migrationProbe) { m =>
                     // ONE persisted read of the commit generation's
                     // epoch delta serves its count delta, the baseline
                     // write and the drift rate (r17 review: three
                     // separate directory reads of the same delta)
-                    val commitDelta = bss.read.schema(scoreSchema)
-                      .parquet(s"${scoresDirG(commitGen)}/batch=$epoch").persist()
+                    val commitDelta = chains.delta(bss, commitGen, epoch).persist()
                     // ONE agg job for the delta's two scalars (r19: the
                     // count and the pred-positive count previously ran
                     // as separate jobs per epoch — same cached relation,
@@ -4070,33 +3634,10 @@ object Events {
                     // caller's persisted delta, never a re-open of the
                     // parquet it just wrote; VERDICT r17 #3), − the
                     // retired docs' live rows in THAT generation's chain
-                    // (bucket-pruned, prior epochs only) — sum(n) over
-                    // the chain IS its live row count, the scalar the
-                    // completeness gate reads
-                    def countsDelta(gen: Int, added: Long): DataFrame = {
-                      val removedN =
-                        if (!haveRetired ||
-                            committedEpochsBelow(scoresDirG(gen), epoch).isEmpty) 0L
-                        else tombstoneResolvedRowsWith(
-                            prunedChainRows(bss, scoresDirG(gen), epoch - 1,
-                              collectBuckets(retired, col("doc_id")),
-                              Some(scoreSchema)),
-                            tombAggPrior)
-                          .join(retired, Seq("doc_id"), "left_semi").count()
-                      Seq((0, added - removedN)).toDF("cell", "n")
-                    }
-                    countsDelta(commitGen, nCommitDelta).write.mode("overwrite")
-                      .parquet(s"${countsDirG(commitGen)}/batch=$epoch")
-                    def liveCount(gen: Int): Long = {
-                      val chain = withChainPartitionCols(
-                          bss.read.schema(countsSchema)
-                            .parquet(countsDirG(gen)), "batch")
-                        .filter(col("batch") <= lit(epoch))
-                      // probe-only count job (see probeAddGen)
-                      gateInputProbe.foreach(probeAddGen(_, epoch, gen, chain.count()))
-                      chain.agg(coalesce(sum(col("n")), lit(0L)).as("n"))
-                        .head().getLong(0)
-                    }
+                    def countsDelta(gen: Int, added: Long): DataFrame =
+                      Seq((0, added - chains.retiredPriorRows(bss, gen, epoch, ret)
+                        .fold(0L)(_.count()))).toDF("cell", "n")
+                    chains.writeAdditive(commitGen, epoch, countsDelta(commitGen, nCommitDelta))
                     // the active model's drift baseline: its pred-
                     // positive rate on ITS OWN labeled training arrival
                     // — written once beside the model (the observable a
@@ -4150,15 +3691,12 @@ object Events {
                       if (nCommitDelta == 0) None
                       else Some(nCommitPred.toDouble / nCommitDelta)
                     commitDelta.unpersist(blocking = false)
-                    // trip check — only when no migration is in flight
-                    // (the marker deletion at epoch start is the re-arm)
-                    val mig: Option[(Int, Long)] = migInFlight.orElse {
-                      if (modelOpt.isEmpty) None
-                      else rateE.flatMap { r =>
+                    val mig = m.target {
+                      modelOpt.isDefined && rateE.exists { rate =>
                         // a scored delta means this epoch had adds, so the
                         // baseline write (or its replay repair) above has
                         // already run — absence here is external marker
-                        // deletion, and silently returning None would
+                        // deletion, and silently not tripping would
                         // disarm the monitor FOREVER: fail loudly instead
                         // (ADVICE r17)
                         if (!java.nio.file.Files.exists(posRatePath(commitGen)))
@@ -4168,13 +3706,9 @@ object Events {
                               "monitor would be permanently unarmed")
                         val base = new String(java.nio.file.Files
                           .readAllBytes(posRatePath(commitGen)), "UTF-8").trim.toDouble
-                        note ++= f"rate=$r%.3f base=$base%.3f "
-                        migLap(s"migration drift poll (epoch $epoch)")
-                        if (math.abs(r - base) > driftPosRateJump.get) {
-                          writeGenMarker(migrationPath, s"${commitGen + 1}@$epoch")
-                          note ++= "trip "
-                          Some((commitGen + 1, epoch))
-                        } else None
+                        m.note ++= f"rate=$rate%.3f base=$base%.3f "
+                        m.lap(s"migration drift poll (epoch $epoch)")
+                        math.abs(rate - base) > driftPosRateJump.get
                       }
                     }
                     mig.foreach { case (t, m0) =>
@@ -4187,50 +3721,24 @@ object Events {
                       // marker) so the backfill cursor is a pure
                       // function of epoch − t0; a replay of t0 retrains
                       // on its own arrival and overwrites idempotently.
-                      val trainedPath = trainedPathG(t)
-                      val t0Opt = readGenMarker(trainedPath).map(_._2)
+                      val t0Opt = readGenMarker(trainedPathG(t)).map(_._2)
                       if (t0Opt.isEmpty && (epoch == m0 || feats.isEmpty)) {
-                        note ++= "awaiting-relabel "
+                        m.note ++= "awaiting-relabel "
                       } else {
                         val (mT, t0) =
                           if (t0Opt.isEmpty || t0Opt.contains(epoch)) {
-                            val m = Classifier.fit(feats)
-                            Classifier.storeModel(bss, m, modelDirG(t))
-                            writeGenMarker(trainedPath, s"$t@$epoch")
-                            note ++= s"g$t-trained "
-                            migLap(s"migration train (epoch $epoch)")
-                            (m, epoch)
+                            val fitted = Classifier.fit(feats)
+                            Classifier.storeModel(bss, fitted, modelDirG(t))
+                            writeGenMarker(trainedPathG(t), s"$t@$epoch")
+                            m.note ++= s"g$t-trained "
+                            m.lap(s"migration train (epoch $epoch)")
+                            (fitted, epoch)
                           } else
                             (FrozenStoreMemo.cached(modelDirG(t))(
                               Classifier.loadModel(bss, modelDirG(t))), t0Opt.get)
                         // the epoch's T delta: its own arrivals + the
-                        // cursor's chunk of OLD docs' stored features —
-                        // file-pruned to the cursor buckets, tombstone-
-                        // resolved, anti-joined against T's prior ids
-                        // (a replay redoes its own chunk) and this
-                        // epoch's arrivals
-                        val b0 = ((epoch - t0) * migrateBucketsPerEpoch).toInt
-                        val chunkBuckets =
-                          (b0 until math.min(b0 + migrateBucketsPerEpoch, ChainBuckets)).toList
-                        val chunkFeats =
-                          if (chunkBuckets.isEmpty) feats.limit(0)
-                          else {
-                            val tPriorIds =
-                              if (committedEpochsBelow(scoresDirG(t), epoch).isEmpty)
-                                addIds.limit(0)
-                              else tombstoneResolvedRowsWith(
-                                prunedChainRows(bss, scoresDirG(t), epoch - 1,
-                                  chunkBuckets, Some(scoreSchema)),
-                                tombAggE).select(col("doc_id"))
-                            tombstoneResolvedRowsWith(
-                              prunedChainRows(bss, featsDir, epoch,
-                                chunkBuckets, Some(featsSchema)),
-                              tombAggE)
-                              .join(tPriorIds, Seq("doc_id"), "left_anti")
-                              .join(addIds, Seq("doc_id"), "left_anti")
-                          }
-                        if (chunkBuckets.nonEmpty)
-                          note ++= s"chunk=[${chunkBuckets.head},${chunkBuckets.last}] "
+                        // cursor's chunk of OLD docs' stored features
+                        val chunkFeats = m.chunk(t, t0, migrateBucketsPerEpoch, addIds)
                         // ONE model broadcast scores arrivals + chunk;
                         // the scored delta is PERSISTED (the commit
                         // path's commitDelta treatment, VERDICT r17 #3)
@@ -4242,15 +3750,10 @@ object Events {
                             chunkFeats.select(feats.columns.map(col): _*)), mT)
                         val scoredT = scoredTRaw.persist()
                         try {
-                          scoredT
-                            .withColumn("bucket", chainBucket(col("doc_id")))
-                            .repartition(col("bucket"))
-                            .write.partitionBy("bucket").mode("overwrite")
-                            .parquet(s"${scoresDirG(t)}/batch=$epoch")
-                          migLap(s"migration chunk re-score (epoch $epoch)")
-                          countsDelta(t, scoredT.count()).write.mode("overwrite")
-                            .parquet(s"${countsDirG(t)}/batch=$epoch")
-                          migLap(s"migration target counts (epoch $epoch)")
+                          chains.writeDelta(chains.primaryDir(t), epoch, scoredT)
+                          m.lap(s"migration chunk re-score (epoch $epoch)")
+                          chains.writeAdditive(t, epoch, countsDelta(t, scoredT.count()))
+                          m.lap(s"migration target counts (epoch $epoch)")
                           // T's own drift baseline, off its training
                           // arrival alone (the chunk is old-corpus mix —
                           // not the steady-state observable)
@@ -4259,71 +3762,25 @@ object Events {
                           bcT.destroy()
                           scoredT.unpersist(blocking = false)
                         }
-                        // cutover: T is complete exactly when its live
-                        // count equals the live corpus count — two
-                        // scalar-chain sums
-                        if (activeGen != t) {
-                          val liveN = liveCount(commitGen)
-                          val tN = liveCount(t)
-                          note ++= s"g$t=$tN/$liveN "
-                          migLap(s"migration completeness gate (epoch $epoch)")
-                          if (tN == liveN) {
-                            writeGenMarker(activeGenPath, s"$t@$epoch")
-                            note ++= "cutover "
-                          }
-                        }
+                        m.gate(t, gateInputProbe)
                       }
                     }
-                  } finally tombAggE
-                    .filterNot(t => tombAggPrior.exists(_ eq t))
-                    .foreach(_.unpersist(blocking = false))
-                  migrationProbe.foreach(probeAdd(_, (epoch, note.toString.trim)))
-                }
+                  }
               } finally {
                 feats.unpersist(blocking = false)
-                retired.unpersist(blocking = false)
-                tombAggPrior.foreach(_.unpersist(blocking = false))
+                ret.release()
               }
               // in-stream compaction (r13): the score chain folds
               // tombstone-resolved (supersede tombstones leave one live
               // row per doc — no LWW needed) with its bucket layout
-              // preserved; prefix-bounded like every other loop. In
-              // migration mode the feature chain and the in-flight
-              // target's score chain fold alongside, the count chains
-              // fold additively, and DRAINED generations' stores are
-              // deleted (r17 — the ingestAnnIvf retirement rule).
-              if (epoch > 0 && epoch % compactEvery.toLong == 0) {
-                val targetGen = readGenMarker(migrationPath).map(_._1)
-                  .filter(_ != commitGen)
-                val migChains =
-                  (if (java.nio.file.Files.isDirectory(
-                    java.nio.file.Paths.get(featsDir))) Seq(featsDir) else Nil) ++
-                  targetGen.map(scoresDirG).filter(d =>
-                    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
-                compactTombstonedChains(bss,
-                  Seq(scoresDirG(commitGen)) ++ migChains, tombstoneDir,
-                  partitionColsFor = _ => Seq("bucket"),
-                  upTo = Some(epoch - 1),
-                  dataSchemaFor = d =>
-                    Some(if (d == featsDir) featsSchema else scoreSchema))
-                (Seq(commitGen) ++ targetGen).foreach { g =>
-                  if (java.nio.file.Files.isDirectory(
-                      java.nio.file.Paths.get(countsDirG(g))))
-                    compactAdditiveChain(bss, countsDirG(g), Seq("cell"), "n",
-                      upTo = Some(epoch - 1), dataSchema = Some(countsSchema))
-                }
-                retireDrainedGenerations(commitGen,
-                  g => Seq(modelDirG(g), scoresDirG(g), countsDirG(g)),
-                  g => Seq(posRatePath(g), trainedPathG(g)))
-              }
+              // preserved; in migration mode with the feature chain,
+              // the target's score chain and the count chains
+              chains.compact(bss, commitGen, epoch, compactEvery)
               // spec probe: surviving generations' score chains (the
               // drained-generation retirement meter — a dir listing)
-              generationsProbe.foreach(buf => probeAdd(buf, (epoch,
-                (1 to 8).filter(g => java.nio.file.Files.isDirectory(
-                  java.nio.file.Paths.get(scoresDirG(g)))))))
+              generationsProbe.foreach(buf => probeAdd(buf, (epoch, chains.generations)))
               deltaProbe.foreach { buf =>
-                val d = bss.read.schema(scoreSchema)
-                  .parquet(s"${scoresDirG(commitGen)}/batch=$epoch")
+                val d = chains.delta(bss, commitGen, epoch)
                 // (epoch, delta rows, delta positives): the positive-rate
                 // drift alarm a frozen-filter deployment re-trains on
                 probeAdd(buf, (epoch, d.count(), d.filter(col("pred")).count()))
@@ -4465,10 +3922,7 @@ object Events {
           // consumer: the ACTIVE generation's tombstone-resolved chain —
           // removed docs absent; post-cutover this is the migrated
           // generation's scoring
-          val qGen = readGenMarker(activeGenPath).map(_._1).getOrElse(1)
-          val scored = tombstoneResolvedRows(spark,
-            spark.read.schema(scoreSchema).parquet(scoresDirG(qGen)).drop("bucket"),
-            tombstoneDir)
+          val scored = chains.resolvedChain(spark, chains.primaryDir(chains.activeGeneration))
             .select(col("doc_id"), col("label"), col("split"), col("prob"), col("pred"))
             .orderBy(col("doc_id"))
           val out = detach(spark, scored)
@@ -4652,17 +4106,6 @@ object Events {
       .count()
   }
 
-  /** Resolve a `batch=<epoch>` changelog chain last-write-wins per
-    * `keyCols` — THE merge-on-read reader every Update-mode delta-chain
-    * sink in this file shares ([[ingestDedupToFiles]],
-    * [[ingestDecontamToFiles]], [[ingestNearDup]]'s verdict chain,
-    * [[streamIncrementalClean]]'s ledger view) and the resolution
-    * [[compactDeltaChain]] materializes when it rewrites the chain as
-    * its base snapshot — one definition, so a reader and the compactor
-    * can never drift. Value columns come off the stored schema, so a
-    * sink schema change can never be silently projected away; cost is
-    * one partial-agg'd shuffle of scalar rows.
-    */
   /** Bucket count for hash-bucketed delta-chain stores. 32 here; a
     * 100 TB store raises it so one bucket ≈ a few GB — the pruning
     * ratio at trickle batch sizes is (buckets touched)/(total), so more
@@ -4748,7 +4191,7 @@ object Events {
     * probes' own `count()` calls re-execute the counted plans; those
     * are spec-only extra jobs, never part of the loop's work.
     */
-  private def probeAdd[T <: Product](buf: scala.collection.mutable.Buffer[T], entry: T): Unit = {
+  private[streaming] def probeAdd[T <: Product](buf: scala.collection.mutable.Buffer[T], entry: T): Unit = {
     // keyed by the entry's first element (the epoch): crash replay
     // re-delivers an epoch and must supersede its earlier entry, not
     // duplicate it. In-place index update (the old filter+clear+rebuild
@@ -4764,14 +4207,12 @@ object Events {
   private[graft] def chainBucket(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(xxhash64(key), lit(ChainBuckets.toLong)).cast("int")
 
-  // ---- generational-migration scaffolding (r17), shared VERBATIM by
-  // the two migrating loops ([[ingestAnnIvf]], [[ingestClassify]]) —
-  // the marker format, the strict epoch > cutEpoch deletion rule and
-  // the t == activeGen guard are crash-replay-critical, so they live
-  // in exactly one place (r17 review) ----
+  // ---- generation markers: the durable "gen@epoch" files of
+  // [[GenerationalStore]] (streaming/ChainStore.scala), which holds the
+  // migration protocol both migrating loops run ----
 
   /** Atomic tmp+move marker write. */
-  private def writeGenMarker(p: java.nio.file.Path, content: String): Unit = {
+  private[streaming] def writeGenMarker(p: java.nio.file.Path, content: String): Unit = {
     val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
     java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
     java.nio.file.Files.move(tmp, p,
@@ -4798,57 +4239,6 @@ object Events {
       }
     }
 
-  /** Generation roles for one epoch of a migrating loop — a pure
-    * function of the durable markers plus the epoch number, so a
-    * crash-replayed epoch reconstructs the SAME roles its original run
-    * used: in particular a replay of the cutover epoch still sees
-    * in-flight roles (the migration marker outlives the cutover by one
-    * epoch — deleting it at the cutover would flip the replay's commit
-    * chain to the target and its arrival-only overwrite would lose the
-    * epoch's chunk rows). The lazy deletion here is also the trip
-    * RE-ARM: with the marker gone, the trip check polls the active
-    * generation's own stats chain, so a second drift triggers the next
-    * migration through the identical path.
-    *
-    * Returns (active generation, in-flight migration (target, trip
-    * epoch) if any, COMMIT generation — the migration source while one
-    * is in flight, the active generation otherwise).
-    */
-  private def generationRoles(activeGenPath: java.nio.file.Path,
-                              migrationPath: java.nio.file.Path,
-                              epoch: Long): (Int, Option[(Int, Long)], Int) = {
-    val (activeGen, cutEpoch) = readGenMarker(activeGenPath).getOrElse((1, -1L))
-    val migInFlight: Option[(Int, Long)] = readGenMarker(migrationPath) match {
-      case Some((t, _)) if t == activeGen && epoch > cutEpoch =>
-        java.nio.file.Files.deleteIfExists(migrationPath); None
-      case other => other
-    }
-    (activeGen, migInFlight, migInFlight.map(_._1 - 1).getOrElse(activeGen))
-  }
-
-  /** Retire every generation strictly below the commit generation:
-    * unreadable by any future epoch (the commit, target and query roles
-    * all sit at or above it) — chains deleted, markers removed;
-    * idempotent, replay-safe. Runs on the compaction cadence. */
-  private def retireDrainedGenerations(commitGen: Int,
-                                       chainDirsFor: Int => Seq[String],
-                                       markerPathsFor: Int => Seq[java.nio.file.Path]): Unit =
-    (1 until commitGen).foreach { g =>
-      chainDirsFor(g).map(java.nio.file.Paths.get(_))
-        .filter(java.nio.file.Files.isDirectory(_))
-        .foreach(deleteDirQuietly)
-      markerPathsFor(g).foreach(java.nio.file.Files.deleteIfExists)
-    }
-
-  /** Probe-only (epoch, generation)-keyed insert for the completeness
-    * gates' input-row counters — a crash-replayed epoch supersedes its
-    * own entry per generation (the [[probeAdd]] rule, two-level key). */
-  private def probeAddGen(buf: scala.collection.mutable.Buffer[(Long, Int, Long)],
-                          epoch: Long, gen: Int, rows: Long): Unit = {
-    val i = buf.indexWhere(p => p._1 == epoch && p._2 == gen)
-    if (i >= 0) buf(i) = (epoch, gen, rows) else buf += ((epoch, gen, rows))
-  }
-
   /** Distinct store buckets a delta's keys land in — bounded by
     * min(|delta|, [[ChainBuckets]]) values, so the collect is a
     * constant-sized driver hop, never corpus state. */
@@ -4856,17 +4246,6 @@ object Events {
     delta.select(chainBucket(key).as("bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq
 
-  /** Probe-side read of a hash-bucketed `batch=e/bucket=b` delta chain,
-    * pruned to epochs ≤ `epoch` AND the given buckets — both partition
-    * columns, so the skip happens at FILE level (PartitionFilters in
-    * the scan), not per-row: the index-lookup read shape that keeps a
-    * recurring probe's bytes proportional to the buckets it touches
-    * instead of the whole store (the r10 `stream_ingest_neardup` weak).
-    * An empty bucket list reads nothing (empty `In` folds to false).
-    * `dataSchema` (the stored columns MINUS the partition dirs), when
-    * the caller knows it — and a probe loop does, it WROTE the store —
-    * skips per-probe footer inference entirely: no non-matching file is
-    * opened even at planning time. */
   /** Guard for explicit-schema chain scans: partition discovery is
     * FILE-driven, so a chain whose committed deltas are all zero-file
     * (reachable since pure-removal head-of-stream epochs commit empty
@@ -4899,6 +4278,17 @@ object Events {
     }
   }
 
+  /** Probe-side read of a hash-bucketed `batch=e/bucket=b` delta chain,
+    * pruned to epochs ≤ `epoch` AND the given buckets — both partition
+    * columns, so the skip happens at FILE level (PartitionFilters in
+    * the scan), not per-row: the index-lookup read shape that keeps a
+    * recurring probe's bytes proportional to the buckets it touches
+    * instead of the whole store (the r10 `stream_ingest_neardup` weak).
+    * An empty bucket list reads nothing (empty `In` folds to false).
+    * `dataSchema` (the stored columns MINUS the partition dirs), when
+    * the caller knows it — and a probe loop does, it WROTE the store —
+    * skips per-probe footer inference entirely: no non-matching file is
+    * opened even at planning time. */
   private[graft] def prunedChainScan(spark: SparkSession, dir: String, epoch: Long,
                                      buckets: Seq[Int],
                                      dataSchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
@@ -4999,6 +4389,17 @@ object Events {
       .filter(e => e < epoch && new java.io.File(s"$dir/batch=$e/_SUCCESS").exists)
   }
 
+  /** Resolve a `batch=<epoch>` changelog chain last-write-wins per
+    * `keyCols` — THE merge-on-read reader every Update-mode delta-chain
+    * sink in this file shares ([[ingestDedupToFiles]],
+    * [[ingestDecontamToFiles]], [[ingestNearDup]]'s verdict chain,
+    * [[streamIncrementalClean]]'s ledger view) and the resolution
+    * [[compactDeltaChain]] materializes when it rewrites the chain as
+    * its base snapshot — one definition, so a reader and the compactor
+    * can never drift. Value columns come off the stored schema, so a
+    * sink schema change can never be silently projected away; cost is
+    * one partial-agg'd shuffle of scalar rows.
+    */
   private[graft] def resolveLww(chain: DataFrame, keyCols: Seq[String]): DataFrame = {
     val valueCols = chain.columns.filterNot(c => keyCols.contains(c) || c == "batch").toSeq
     chain.groupBy(keyCols.map(col): _*)
@@ -5023,6 +4424,34 @@ object Events {
       .map(_.getName.takeWhile(_ != '=')).distinct
   }
 
+  /** Compact a `batch=<epoch>` delta-chain sink (the layout
+    * [[ingestDedupToFiles]] writes): resolve last-write-wins per
+    * `keyCols`, rewrite it as the newest epoch's directory, and prune
+    * every older delta — read amplification drops from O(#deltas) back
+    * to one directory, which is exactly the periodic job the
+    * merge-on-read layout requires at 100 TB. The snapshot keeps the
+    * NEWEST EXISTING epoch number, so a stream resuming from its
+    * checkpoint (next epoch = max + 1) can never collide with it, and
+    * repeated compaction is a no-op by construction (one dir in, the
+    * same relation out).
+    *
+    * Swap discipline (crash-safe, ADVICE r6): the snapshot materializes
+    * into a temp dir OUTSIDE the partition layout (forcing the read of
+    * every delta it's about to replace) and is stamped with a
+    * target-epoch marker; the newest delta is then moved ASIDE (a
+    * single atomic directory rename — never deleted while it is the
+    * only copy), the snapshot renamed into its place, and only then are
+    * the aside copy and the older deltas pruned. Every intermediate
+    * state is recoverable: [[recoverInterruptedCompaction]] runs on
+    * entry and either finishes an interrupted swap (marker present,
+    * target missing → the snapshot IS the data, complete the rename) or
+    * discards a redundant/incomplete snapshot (target present → the
+    * chain is intact). A reader racing the rename pair can still
+    * briefly miss the newest delta (the documented harness caveat); a
+    * production deployment commits the same swap through a table
+    * format's transaction log (Delta/Iceberg) instead, with identical
+    * relational semantics — but no crash point here loses data.
+    */
   def compactDeltaChain(spark: SparkSession, sink: String, keyCols: Seq[String]): Unit =
     compactDeltaChain(spark, sink, keyCols, None, Nil)
 
@@ -5403,7 +4832,7 @@ object Events {
     *    rename consumes tmp, so `batch=<epoch>` exists) → aside is a
     *    consumed duplicate, discard it.
     */
-  private def recoverInterruptedCompaction(sinkPath: java.nio.file.Path): Unit = {
+  private[streaming] def recoverInterruptedCompaction(sinkPath: java.nio.file.Path): Unit = {
     val tmp = sinkPath.resolve(CompactTmp)
     val marker = tmp.resolve(CompactMarker)
     if (java.nio.file.Files.exists(marker)) {

@@ -92,4 +92,25 @@ class EntrySpec extends AnyFunSuite {
       s"undocumented: ${(found -- documented).toSeq.sorted.mkString(", ")}; " +
         s"documented but unread: ${(documented -- found).toSeq.sorted.mkString(", ")}")
   }
+
+  test("no doc comment is orphaned: a /** block is never followed by another before a definition") {
+    // Two doc blocks back to back leave the first attached to nothing:
+    // scaladoc keeps only the block nearest the definition, so the
+    // first one's text silently documents nothing. Blank lines and line
+    // comments between the two do not count as a definition.
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val orphans =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted.flatMap { f =>
+        val lines = java.nio.file.Files.readAllLines(f).asScala.map(_.trim).toIndexedSeq
+        lines.indices.filter(lines(_).startsWith("/**")).flatMap { start =>
+          val end = lines.indexWhere(_.contains("*/"), start)
+          val next = lines.indexWhere(l => l.nonEmpty && !l.startsWith("//"), end + 1)
+          if (end >= 0 && next >= 0 && lines(next).startsWith("/**")) Some(s"$f:${start + 1}")
+          else None
+        }
+      }
+      finally walk.close()
+    assert(orphans.isEmpty, s"doc comments attached to no definition: ${orphans.mkString(", ")}")
+  }
 }

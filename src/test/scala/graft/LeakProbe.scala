@@ -40,6 +40,17 @@ object LeakProbe {
     leakReport("ingest_ann") {
       graft.streaming.Events.ingestAnnIvf(spark, sf).collect()
     }
+    // the two migrate stagings: trip, background chunks, cutover
+    leakReport("ingest_ann_migrate") {
+      graft.streaming.Events.ingestAnnIvf(spark, sf,
+        driftMaxCellShare = Some(graft.streaming.Events.DriftMaxCellShareDefault),
+        driftWaveArrival2 = true).collect()
+    }
+    leakReport("ingest_classify_migrate") {
+      graft.streaming.Events.ingestClassify(spark, sf,
+        driftPosRateJump = Some(graft.streaming.Events.DriftPosRateJumpDefault),
+        labelShiftArrival2 = true).collect()
+    }
     spark.stop()
   }
 }
