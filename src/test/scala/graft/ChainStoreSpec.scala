@@ -2,24 +2,39 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import graft.streaming.{ChainStore, GenerationalStore, Roles}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.streaming.{Chain, ChainStore, Events, GenerationalStore, Retirements, Roles}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The generational chain store's protocol core over a temp dir:
-  * markers, roles, drained-generation retirement, the generation
-  * listing and the chunk cursor. File-level only — no Spark session. */
+/** The chain store over a temp dir. The generational protocol core
+  * (markers, roles, drained-generation retirement, the generation
+  * listing, the chunk cursor) and the plain store's recovery sweep,
+  * commit gate and snapshot prune are file-level only, with no Spark
+  * session; one leg compacts a small store through Spark. */
 class ChainStoreSpec extends AnyFunSuite {
   private val schema = StructType(Seq(StructField("k", LongType)))
 
-  private def withStore(body: (Path, GenerationalStore) => Unit): Unit = {
+  private def withDir(body: Path => Unit): Unit = {
     val dir = Files.createTempDirectory("graft_chainstore_spec")
-    try body(dir, new GenerationalStore(dir, "k", "primary", schema, "counts", "source", schema))
+    try body(dir)
     finally {
       val walk = Files.walk(dir)
       try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
       finally walk.close()
     }
+  }
+
+  private def withStore(body: (Path, GenerationalStore) => Unit): Unit =
+    withDir(dir => body(dir, new GenerationalStore(dir, "k", "primary", schema, "counts", "source", schema)))
+
+  /** Create `dir/batch=e` holding one placeholder part file, committed
+    * (`_SUCCESS`) when asked. */
+  private def epochDir(dir: Path, e: Long, success: Boolean): Path = {
+    val d = Files.createDirectories(dir.resolve(s"batch=$e"))
+    Files.write(d.resolve("part-0.parquet"), Array[Byte](1))
+    if (success) Files.write(d.resolve("_SUCCESS"), Array.emptyByteArray)
+    d
   }
 
   private def entries(dir: Path): Seq[String] = {
@@ -83,5 +98,121 @@ class ChainStoreSpec extends AnyFunSuite {
     assert(ChainStore.cursor(1, 2, 16) == (16 until 32))
     assert(ChainStore.cursor(1, 3, 16).isEmpty)
     assert((0 until 4).flatMap(i => ChainStore.cursor(7, 7 + i, 10)) == (0 until 32))
+  }
+
+  test("the recovery sweep repairs a stranded compaction swap in every declared chain") {
+    withDir { dir =>
+      val chains = Seq(Chain("a", schema, bucketBy = Some("k")), Chain("b", schema),
+        Chain("c", schema, lww = true, commits = true))
+      val store = new ChainStore(dir, "k", chains)
+      val marker = "_graft_target_epoch"
+      // a: an incomplete snapshot (no marker) beside the intact chain — discarded
+      epochDir(dir.resolve("a"), 0, success = true)
+      Files.createDirectories(dir.resolve("a/_compact_tmp"))
+      // b: a complete snapshot whose target was moved aside — swapped in;
+      // the aside copy and the consumed delta below it are dropped
+      epochDir(dir.resolve("b"), 0, success = true)
+      Files.write(Files.createDirectories(dir.resolve("b/_compact_old")).resolve("part-0.parquet"),
+        Array[Byte](1))
+      val tmp = Files.createDirectories(dir.resolve("b/_compact_tmp"))
+      Files.write(tmp.resolve("part-0.parquet"), Array[Byte](1))
+      Files.write(tmp.resolve(marker), "1".getBytes("UTF-8"))
+      // c: a swapped-in base whose consumed delta was never pruned
+      epochDir(dir.resolve("c"), 0, success = true)
+      Files.write(epochDir(dir.resolve("c"), 2, success = true).resolve(marker), "2".getBytes("UTF-8"))
+      store.recover()
+      assert(entries(dir.resolve("a")) == Seq("batch=0"))
+      assert(entries(dir.resolve("b")) == Seq("batch=1"))
+      assert(entries(dir.resolve("b/batch=1")) == Seq(marker, "part-0.parquet"))
+      assert(entries(dir.resolve("c")) == Seq("batch=2"))
+      store.recover()
+      assert(Seq("a", "b", "c").map(c => entries(dir.resolve(c))) ==
+        Seq(Seq("batch=0"), Seq("batch=1"), Seq("batch=2")), "the sweep is idempotent")
+    }
+  }
+
+  test("the commit gate skips an epoch where only some commit chains have _SUCCESS") {
+    withDir { dir =>
+      val store = new ChainStore(dir, "k", Seq(Chain("corpus", schema, bucketBy = Some("k")),
+        Chain("manifest", schema, commits = true), Chain("ledger", schema, lww = true, commits = true)))
+      assert(store.committedBelow(5).isEmpty, "no store yet means no prior epoch")
+      Seq("manifest", "ledger").foreach(c => epochDir(dir.resolve(c), 0, success = true))
+      // epoch 1: the manifest committed, the ledger torn (files, no marker)
+      epochDir(dir.resolve("manifest"), 1, success = true)
+      epochDir(dir.resolve("ledger"), 1, success = false)
+      // epoch 2: the ledger committed, the manifest never written;
+      // epoch 3: only a non-commit chain
+      epochDir(dir.resolve("ledger"), 2, success = true)
+      epochDir(dir.resolve("corpus"), 3, success = true)
+      assert(store.committedBelow(5).contains(0L))
+      assert(store.committedBelow(0).isEmpty, "strictly below")
+      Files.write(dir.resolve("ledger/batch=1/_SUCCESS"), Array.emptyByteArray)
+      assert(store.committedBelow(5).contains(1L))
+      assert(store.committedBelow(1).contains(0L))
+    }
+  }
+
+  test("the snapshot prune keeps exactly the current epoch and its committed predecessor") {
+    withDir { dir =>
+      val hot = Chain("hot", schema, snapshot = true)
+      val store = new ChainStore(dir, "k", Seq(Chain("ledger", schema, lww = true, commits = true), hot))
+      (0L to 2L).foreach(e => epochDir(dir.resolve("ledger"), e, success = true))
+      epochDir(dir.resolve("ledger"), 3, success = false) // torn: not a predecessor
+      (0L to 4L).foreach(e => epochDir(dir.resolve("hot"), e, success = true))
+      val kept = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+      store.pruneSnapshots(4, Some(kept))
+      assert(entries(dir.resolve("hot")) == Seq("batch=2", "batch=4"))
+      assert(kept == Seq((4L, Seq(2L, 4L))))
+      store.pruneSnapshots(4, Some(kept))
+      assert(entries(dir.resolve("hot")) == Seq("batch=2", "batch=4"), "the prune is idempotent")
+      assert(entries(dir.resolve("ledger")).size == 4, "delta chains are never pruned")
+    }
+  }
+
+  test("compaction keeps each chain's bucket layout and its resolved reads") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    withDir { dir =>
+      val docs = Chain("docs", StructType(Seq(StructField("doc_id", LongType),
+        StructField("text", StringType))), bucketBy = Some("doc_id"))
+      val index = Chain("index", StructType(Seq(StructField("doc_id", LongType),
+        StructField("h", LongType))), bucketBy = Some("h"))
+      val verdict = Chain("verdict", StructType(Seq(StructField("doc_id", LongType),
+        StructField("v", LongType))), lww = true, commits = true)
+      val store = new ChainStore(dir, "doc_id", Seq(docs, index, verdict))
+      def land(epoch: Long, ids: Seq[Long], tombs: Seq[Long], text: String, v: Long): Unit = {
+        val df = ids.toDF("doc_id")
+        store.tombstoneWrite(Retirements(None, tombs.toDF("doc_id"), tombs.nonEmpty), epoch)
+          .foreach(_())
+        store.writeDelta(docs, epoch, df.withColumn("text", org.apache.spark.sql.functions.lit(text)))
+        store.writeDelta(index, epoch, df.withColumn("h", col("doc_id") % 7)
+          .unionByName(df.withColumn("h", col("doc_id") % 5 + 100)))
+        store.writeDelta(verdict, epoch, df.withColumn("v", org.apache.spark.sql.functions.lit(v)))
+      }
+      land(0, 1L to 20L, Nil, "first", 0)
+      land(1, 1L to 5L, 1L to 5L, "second", 1) // re-deliveries supersede their old rows
+      land(2, Seq(21L), Seq(20L), "third", 2) // 20 removed (no rows), 21 added
+      // an LWW-only update: no tombstone, the newest row per key wins
+      store.writeDelta(verdict, 2, Seq((6L, 9L), (21L, 2L)).toDF("doc_id", "v"))
+      def read(c: Chain) = store.resolved(spark, c).collect().map(_.toSeq).toSeq
+        .sortBy(_.toString)
+      val before = Seq(docs, index, verdict).map(read)
+      assert(before(0).size == 20 && before(2).size == 20)
+      assert(store.compact(spark, 3, 3))
+      Seq(docs, index, verdict).foreach(c => assert(entries(dir.resolve(c.name)) == Seq("batch=2")))
+      assert(Seq(docs, index, verdict).map(read) == before)
+      // bucketed chains keep `bucket=` dirs whose rows hash to them; the
+      // LWW chain stays unbucketed
+      for (c <- Seq(docs, index)) {
+        assert(entries(dir.resolve(s"${c.name}/batch=2")).exists(_.startsWith("bucket=")))
+        assert(spark.read.parquet(store.dir(c))
+          .filter(Events.chainBucket(col(c.bucketBy.get)) =!= col("bucket")).isEmpty)
+      }
+      assert(!entries(dir.resolve("verdict/batch=2")).exists(_.startsWith("bucket=")))
+      assert(spark.read.parquet(store.dir(verdict)).groupBy(col("doc_id")).count()
+        .filter(col("count") > 1).isEmpty, "the LWW chain folds to one row per key")
+      assert(!Files.exists(dir.resolve("tombstones")) ||
+        entries(dir.resolve("tombstones")).isEmpty, "the folded tombstones are consumed")
+    }
   }
 }

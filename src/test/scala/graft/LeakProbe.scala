@@ -37,6 +37,15 @@ object LeakProbe {
     leakReport("ingest_neardup") {
       graft.streaming.Events.ingestNearDup(spark, sf).collect()
     }
+    // the two capped loops: hot-snapshot chain and cap-crossing releases
+    leakReport("stream_incremental_clean_capped") {
+      graft.streaming.Events.streamIncrementalClean(spark, sf,
+        maxShingleDf = Some(graft.streaming.Events.CleanCapDf)).collect()
+    }
+    leakReport("ingest_neardup_capped") {
+      graft.streaming.Events.ingestNearDup(spark, sf,
+        maxBandDf = Some(graft.operators.Dedup.BandCapDf)).collect()
+    }
     leakReport("ingest_ann") {
       graft.streaming.Events.ingestAnnIvf(spark, sf).collect()
     }
