@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import Events.{ChainBuckets, chainBucket, collectBuckets, committedEpochsBelow,
-  compactAdditiveChain, compactTombstonedChains, deleteDirQuietly, probeAdd,
+  compactAdditiveChain, compactTombstonedChains, deleteDirQuietly,
   prunedChainRows, pruneSnapshotChain, readGenMarker, recoverInterruptedCompaction,
   resolveLww, tombstoneAggregate, tombstoneResolvedRowsWith, withChainPartitionCols,
   writeGenMarker}
@@ -261,21 +261,19 @@ private[graft] class ChainStore(root: Path, keyCol: String, protected val declar
   /** Prune every snapshot chain to this epoch's snapshot and its
     * committed predecessor's: the one a replay of THIS epoch reads if
     * the process dies after the prune but before the stream checkpoint
-    * commits (see [[Events.pruneSnapshotChain]]). `probe` receives the
-    * kept epochs. */
-  def pruneSnapshots(epoch: Long,
-                     probe: Option[scala.collection.mutable.Buffer[(Long, Seq[Long])]]): Unit =
+    * commits (see [[Events.pruneSnapshotChain]]). The kept epochs go to
+    * the `SnapshotDirs` meter. */
+  def pruneSnapshots(epoch: Long, hooks: LoopHooks): Unit =
     declared.filter(_.snapshot).foreach(c =>
-      pruneSnapshotChain(dir(c), Set(epoch) ++ committedBelow(epoch), epoch, probe))
+      pruneSnapshotChain(dir(c), Set(epoch) ++ committedBelow(epoch), epoch, hooks))
 
-  /** In-stream compaction every `every` epochs: fold all delta chains,
-    * then prune the snapshot chains. True when it ran. */
-  def compact(spark: SparkSession, epoch: Long, every: Int,
-              snapshotProbe: Option[scala.collection.mutable.Buffer[(Long, Seq[Long])]] = None): Boolean = {
-    val due = onCadence(epoch, every)
+  /** In-stream compaction every `hooks.compactEvery` epochs: fold all
+    * delta chains, then prune the snapshot chains. True when it ran. */
+  def compact(spark: SparkSession, epoch: Long, hooks: LoopHooks): Boolean = {
+    val due = onCadence(epoch, hooks.compactEvery)
     if (due) {
       compactChains(spark, epoch, deltaChains)
-      pruneSnapshots(epoch, snapshotProbe)
+      pruneSnapshots(epoch, hooks)
     }
     due
   }
@@ -440,12 +438,12 @@ private[graft] final class GenerationalStore(root: java.nio.file.Path, keyCol: S
     if (!r.any || !committedBefore(g, epoch)) None
     else Some(liveFor(spark, primaryAt(g), epoch - 1, r.prior, r.retired))
 
-  /** In-stream compaction every `every` epochs, prefix-bounded to epochs
-    * below this one: the commit, source and in-flight target chains in
-    * one call, the additive chains by sum. Drained generations retire on
-    * the same cadence. */
-  def compact(spark: SparkSession, commitGen: Int, epoch: Long, every: Int): Unit =
-    if (onCadence(epoch, every)) {
+  /** In-stream compaction every `hooks.compactEvery` epochs,
+    * prefix-bounded to epochs below this one: the commit, source and
+    * in-flight target chains in one call, the additive chains by sum.
+    * Drained generations retire on the same cadence. */
+  def compact(spark: SparkSession, commitGen: Int, epoch: Long, hooks: LoopHooks): Unit =
+    if (onCadence(epoch, hooks.compactEvery)) {
       val targetGen = readGenMarker(migrationPath).map(_._1).filter(_ != commitGen)
       def onDisk(c: Chain) = java.nio.file.Files.isDirectory(Paths.get(dir(c)))
       compactChains(spark, epoch,
@@ -459,22 +457,22 @@ private[graft] final class GenerationalStore(root: java.nio.file.Path, keyCol: S
   // ---- migration epoch ----
 
   /** Run one migration-mode epoch's `body` with its tombstone aggregate
-    * (prior ⊕ this epoch's retirements), a note for the migration probe
-    * and a stage lap. */
+    * (prior ⊕ this epoch's retirements), a note for the `Migration`
+    * meter and a stage lap. */
   def migrationEpoch(spark: SparkSession, epoch: Long, roles: Roles, r: Retirements,
-                     probe: Option[scala.collection.mutable.Buffer[(Long, String)]])(
-                     body: Migration => Unit): Unit = {
+                     hooks: LoopHooks)(body: Migration => Unit): Unit = {
     val m = withEpochTombstones(r, epoch) { tombstones =>
-      val m = new Migration(spark, epoch, roles, tombstones)
+      val m = new Migration(spark, epoch, roles, tombstones, hooks)
       body(m)
       m
     }
-    probe.foreach(probeAdd(_, (epoch, m.note.toString.trim)))
+    hooks.record(LoopHooks.Migration, epoch)(m.note.toString.trim)
   }
 
   final class Migration private[GenerationalStore] (spark: SparkSession, epoch: Long,
                                                     roles: Roles,
-                                                    tombstones: Option[DataFrame]) {
+                                                    tombstones: Option[DataFrame],
+                                                    hooks: LoopHooks) {
     val note = new StringBuilder
     /** Per-stage soak laps. Labels avoid the "epoch N" prefix: the soak
       * reads those as removal-epoch blast-radius stages, while the
@@ -515,12 +513,12 @@ private[graft] final class GenerationalStore(root: java.nio.file.Path, keyCol: S
 
     /** The completeness gate: cut over to `t` once its live count
       * equals the commit generation's. A replay of the cutover epoch
-      * sees `t` already active and only re-lands its deltas.
-      * `gateProbe` accumulates the rows entering each sum. */
-    def gate(t: Int, gateProbe: Option[scala.collection.mutable.Buffer[(Long, Int, Long)]]): Unit =
+      * sees `t` already active and only re-lands its deltas. The
+      * `GateInput` meter counts the rows entering each sum. */
+    def gate(t: Int): Unit =
       if (roles.active != t) {
-        val liveN = liveCount(roles.commit, gateProbe)
-        val tN = liveCount(t, gateProbe)
+        val liveN = liveCount(roles.commit)
+        val tN = liveCount(t)
         note ++= s"g$t=$tN/$liveN "
         lap(s"migration completeness gate (epoch $epoch)")
         if (tN == liveN) {
@@ -529,16 +527,9 @@ private[graft] final class GenerationalStore(root: java.nio.file.Path, keyCol: S
         }
       }
 
-    private def liveCount(g: Int,
-                          gateProbe: Option[scala.collection.mutable.Buffer[(Long, Int, Long)]]): Long = {
+    private def liveCount(g: Int): Long = {
       val chain = additiveRows(spark, g, epoch)
-      // probe-only count job, keyed (epoch, generation) so a replayed
-      // epoch supersedes its own entry
-      gateProbe.foreach { buf =>
-        val rows = chain.count()
-        val i = buf.indexWhere(p => p._1 == epoch && p._2 == g)
-        if (i >= 0) buf(i) = (epoch, g, rows) else buf += ((epoch, g, rows))
-      }
+      hooks.record(LoopHooks.GateInput, (epoch, g))(chain.count())
       chain.agg(coalesce(sum(col("n")), lit(0L)).as("n")).head().getLong(0)
     }
   }

@@ -67,8 +67,8 @@ object Events {
     * PINS spark.sql.shuffle.partitions at start, and every partition is
     * one state store paying per-batch checkpoint I/O — so size it to
     * keyspace/throughput, not to the session's batch default. The
-    * defaults here fit the test keyspace (≤10k users); a production
-    * deployment passes its own or None to inherit the session setting.
+    * stateful queries here pin [[StatePartitions]], sized to the test
+    * keyspace (≤10k users); None inherits the session setting.
     *
     * The override lives on a CHILD session (`spark.newSession()`: shared
     * SparkContext + cached data, its own SQLConf and temp-view catalog),
@@ -96,6 +96,16 @@ object Events {
     graft.GraftSession.registerFunctions(ss)
     ss
   }
+
+  /** The state-store partition count every stateful query pins (see
+    * [[sessionFor]]). */
+  private val StatePartitions = Some(4)
+
+  /** A file-sink loop's session: [[StatePartitions]], no no-data
+    * micro-batches (see [[runBounded]]) and the provider override. */
+  private def loopSession(spark: SparkSession): SparkSession =
+    sessionFor(spark, StatePartitions,
+      Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
 
   // -------------------------------------------------- bounded-run harness
 
@@ -443,31 +453,11 @@ object Events {
       df.coalesce(1).write.mode("append").parquet(watched.toString)
   }
 
-  /** Marker type for the loops' crashAtEpoch spec hooks — the ONE
-    * signal [[ReplayingDrain]] restarts on. A plain message-matched
-    * RuntimeException would couple four throw sites to a magic
-    * substring (and could collide with a real error quoting it). */
-  private final class InjectedCrash(msg: String) extends RuntimeException(msg)
-
-  /** A loop's `crashAtEpoch`-style spec hook: armed once per loop run,
-    * `fire` throws an [[InjectedCrash]] the first time it is reached at
-    * the configured epoch with `when` holding, and never again — so the
-    * replay of that epoch after the restart runs through. */
-  private final class CrashPoint(at: Option[Long]) {
-    @volatile private var armed = at.isDefined
-    def configured: Boolean = at.isDefined
-    def fire(epoch: Long, where: String, when: Boolean = true): Unit =
-      if (armed && when && at.contains(epoch)) {
-        armed = false
-        throw new InjectedCrash(s"injected $where crash at epoch $epoch")
-      }
-  }
-
   /** Drain-with-replay harness around a restartable bounded streaming
     * query — ONE implementation shared by the four ingest loops
     * (VERDICT r13 #7; it previously lived inline in [[ingestNearDup]]).
     * `drain()` is `processAllAvailable()`, and when an ARMED crash
-    * injection (the loops' `crashAtEpoch` spec hook) kills the query it
+    * injection (the loop's [[LoopHooks]] crash point) kills the query it
     * restarts the stream on the SAME checkpoint exactly once, so the
     * uncommitted epoch REPLAYS over the already-written store — the
     * worst-case recovery the store mechanics must absorb (output
@@ -475,8 +465,8 @@ object Events {
     * crash injection armed a StreamingQueryException propagates (a
     * real failure must fail the run, not silently re-run an epoch).
     */
-  private final class ReplayingDrain(startQ: () => StreamingQuery, crashes: CrashPoint*) {
-    private val expectCrash = crashes.exists(_.configured)
+  private final class ReplayingDrain(startQ: () => StreamingQuery, crash: CrashPoint) {
+    private val expectCrash = crash.configured
     private var q: StreamingQuery = startQ()
     // the restart is keyed on the INJECTED crash having actually fired
     // (the marker TYPE travels in the exception's cause chain), not on
@@ -511,7 +501,7 @@ object Events {
     * mid-prune just retries. ONE definition for both capped loops
     * (r16 review: the block had grown two verbatim copies). */
   private[streaming] def pruneSnapshotChain(dir: String, keep: Set[Long], epoch: Long,
-      probe: Option[scala.collection.mutable.Buffer[(Long, Seq[Long])]]): Unit = {
+                                            hooks: LoopHooks): Unit = {
     val path = java.nio.file.Paths.get(dir)
     if (java.nio.file.Files.isDirectory(path)) {
       import scala.jdk.CollectionConverters._
@@ -522,7 +512,7 @@ object Events {
           .map(p => p -> p.getFileName.toString.stripPrefix("batch=").toLong)
         finally listing.close()
       snapshots.filterNot(s => keep.contains(s._2)).foreach(s => deleteDir(s._1))
-      probe.foreach(probeAdd(_, (epoch, snapshots.map(_._2).filter(keep.contains).sorted)))
+      hooks.record(LoopHooks.SnapshotDirs, epoch)(snapshots.map(_._2).filter(keep.contains).sorted)
     }
   }
 
@@ -597,9 +587,8 @@ object Events {
     * into a memory sink. The same plan runs unchanged against a
     * directory receiving appended files on a real cluster.
     */
-  def windowAgg(spark: SparkSession, sfDir: String,
-                statePartitions: Option[Int] = Some(4)): DataFrame =
-    runBounded(spark, sfDir, statePartitions, OutputMode.Complete, "graft_window_agg",
+  def windowAgg(spark: SparkSession, sfDir: String): DataFrame =
+    runBounded(spark, sfDir, StatePartitions, OutputMode.Complete, "graft_window_agg",
       finish = _.select(col("window.start").as("window_start"), col("event_type"),
           col("n_events"), col("total_value"))
         .orderBy(col("window_start"), col("event_type"))) { stream =>
@@ -615,9 +604,8 @@ object Events {
     * (open window × event_type), bounded by the watermark closing
     * windows.
     */
-  def slidingWindowAgg(spark: SparkSession, sfDir: String,
-                       statePartitions: Option[Int] = Some(4)): DataFrame =
-    runBounded(spark, sfDir, statePartitions, OutputMode.Complete, "graft_sliding_agg",
+  def slidingWindowAgg(spark: SparkSession, sfDir: String): DataFrame =
+    runBounded(spark, sfDir, StatePartitions, OutputMode.Complete, "graft_sliding_agg",
       finish = _.select(col("window.start").as("window_start"), col("event_type"),
           col("n_events"), col("total_value"))
         .orderBy(col("window_start"), col("event_type"))) { stream =>
@@ -642,9 +630,8 @@ object Events {
     * at-least-once redelivery); the query must emit each event exactly
     * once.
     */
-  def dedupEvents(spark: SparkSession, sfDir: String,
-                  statePartitions: Option[Int] = Some(4)): DataFrame =
-    runBounded(spark, sfDir, statePartitions, OutputMode.Append, "graft_stream_dedup",
+  def dedupEvents(spark: SparkSession, sfDir: String): DataFrame =
+    runBounded(spark, sfDir, StatePartitions, OutputMode.Append, "graft_stream_dedup",
       finish = _.orderBy(col("event_id")),
       flush = (ss, dir, q) => {
         ss.read.parquet(s"$sfDir/events.parquet")
@@ -666,12 +653,11 @@ object Events {
     * stream, and the dim can be swapped for a slowly-changing snapshot
     * between restarts.
     */
-  def enrich(spark: SparkSession, sfDir: String,
-             statePartitions: Option[Int] = None): DataFrame =
+  def enrich(spark: SparkSession, sfDir: String): DataFrame =
     // stateless + shuffle-free: no state stores to size, so no pinned
     // shuffle partitions (the child session only carries the harness's
     // shared finalization conf)
-    runBounded(spark, sfDir, statePartitions, OutputMode.Append, "graft_stream_enrich",
+    runBounded(spark, sfDir, None, OutputMode.Append, "graft_stream_enrich",
       finish = _.orderBy(col("event_id"))) { stream =>
       val dim = broadcast(Tables.customer(stream.sparkSession, sfDir)
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment")))
@@ -695,9 +681,8 @@ object Events {
     * bounded input arriving in one batch, the first drain already yields
     * the complete relation.
     */
-  def streamStreamJoin(spark: SparkSession, sfDir: String,
-                       statePartitions: Option[Int] = Some(4)): DataFrame =
-    runBounded(spark, sfDir, statePartitions, OutputMode.Append, "graft_ss_join",
+  def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame =
+    runBounded(spark, sfDir, StatePartitions, OutputMode.Append, "graft_ss_join",
       finish = _.orderBy(col("purchase_id"), col("click_id"))) { raw =>
       val clicks = raw.filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
@@ -735,12 +720,10 @@ object Events {
     * the sink files, clearly tagged. Returns the finalized windows READ
     * BACK FROM THE SINK FILES — the downstream consumer's view.
     */
-  def windowAggToFiles(spark: SparkSession, sfDir: String,
-                       statePartitions: Option[Int] = Some(4)): DataFrame = {
+  def windowAggToFiles(spark: SparkSession, sfDir: String): DataFrame = {
     // same rationale as runBounded: sentinel data batches carry the
     // watermark advance; no-data batches only add per-batch overhead
-    val ss = sessionFor(spark, statePartitions,
-      Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
+    val ss = loopSession(spark)
     val SentinelType = "__sentinel"
     val staged = java.nio.file.Paths.get(s"$sfDir/events.parquet")
     val stagedBytes = java.nio.file.Files.size(staged)
@@ -781,10 +764,9 @@ object Events {
     * filter below the watermark operator) into their own marker-user
     * sessions, dropped on read-back.
     */
-  def sessionWindowAgg(spark: SparkSession, sfDir: String,
-                       statePartitions: Option[Int] = Some(4)): DataFrame = {
+  def sessionWindowAgg(spark: SparkSession, sfDir: String): DataFrame = {
     val SentinelUser = -1L
-    runBounded(spark, sfDir, statePartitions, OutputMode.Append, "graft_session_window",
+    runBounded(spark, sfDir, StatePartitions, OutputMode.Append, "graft_session_window",
       finish = _.filter(col("user_id") =!= SentinelUser)
         .orderBy(col("user_id"), col("session_start")),
       flush = sentinelFlush(sfDir, "user_id", lit(SentinelUser)),
@@ -822,10 +804,9 @@ object Events {
     * callers needing globally unique ids should key on
     * (user_id, session_start).
     */
-  def sessionize(spark: SparkSession, sfDir: String,
-                 statePartitions: Option[Int] = Some(4)): DataFrame = {
+  def sessionize(spark: SparkSession, sfDir: String): DataFrame = {
     val SentinelUser = -1L
-    runBounded(spark, sfDir, statePartitions, OutputMode.Append, "graft_sessionize",
+    runBounded(spark, sfDir, StatePartitions, OutputMode.Append, "graft_sessionize",
       finish = _.select(col("user_id"), col("sid"),
           timestamp_micros(col("start_us")).as("session_start"),
           timestamp_micros(col("end_us")).as("session_end"),
@@ -901,14 +882,12 @@ object Events {
     * mode keep the emitted relation deterministic (arrival-order-free),
     * which is what makes the query oracle-checkable.
     */
-  def ingestDedup(spark: SparkSession, sfDir: String,
-                  statePartitions: Option[Int] = Some(4),
-                  minTokens: Int = 10): DataFrame =
-    runBounded(spark, sfDir, statePartitions, OutputMode.Complete, "graft_ingest",
+  def ingestDedup(spark: SparkSession, sfDir: String): DataFrame =
+    runBounded(spark, sfDir, StatePartitions, OutputMode.Complete, "graft_ingest",
       finish = _.orderBy(col("text_hash")), table = "documents") { docs =>
       docs
         .filter(graft.functions.TokenStats.tokenStats(col("text"))
-          .getField("n_tokens") >= minTokens)
+          .getField("n_tokens") >= MinTokens)
         .groupBy(md5(col("text").cast("binary")).as("text_hash"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_arrivals"))
     }
@@ -929,12 +908,11 @@ object Events {
     * and oracle-checkable — FP rate stays a pure performance knob, the
     * decontamBloom pairing discipline carried into streaming.
     */
-  def ingestDecontam(spark: SparkSession, sfDir: String,
-                     statePartitions: Option[Int] = Some(4)): DataFrame = {
+  def ingestDecontam(spark: SparkSession, sfDir: String): DataFrame = {
     val docsPath = s"$sfDir/documents.parquet"
     val (testShingles, bfB) = testBloom(spark, docsPath)
     try {
-      runBounded(spark, sfDir, statePartitions, OutputMode.Complete, "graft_idecon",
+      runBounded(spark, sfDir, StatePartitions, OutputMode.Complete, "graft_idecon",
         finish = df => confirmSuspects(df, docsPath),
         table = "documents")(docs => decontamGate(docs, bfB))
     } finally graft.operators.Corpus.releaseCheckpoint(testShingles)
@@ -1032,12 +1010,12 @@ object Events {
     * + agg (the confirm needs the static corpus, which a sink executor
     * shouldn't re-open per batch). Converges to the memory-sink
     * [[ingestDecontam]] relation exactly (spec-pinned), same oracle.
+    * The `DeltaRows` meter of `hooks` ([[LoopHooks]]) counts each
+    * batch's delta rows.
     */
   def ingestDecontamToFiles(spark: SparkSession, sfDir: String,
-                            statePartitions: Option[Int] = Some(4),
-                            deltaProbe: Option[scala.collection.mutable.Buffer[(Long, Long)]] = None): DataFrame = {
-    val ss = sessionFor(spark, statePartitions,
-      Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
+                            hooks: LoopHooks = LoopHooks.none): DataFrame = {
+    val ss = loopSession(spark)
     val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
     val docsPath = staged.toString
     val stagedBytes = java.nio.file.Files.size(staged)
@@ -1048,15 +1026,15 @@ object Events {
         // two arrivals (doc_id % 5) — the second drain must be a
         // genuinely incremental micro-batch, as in ingestDedupToFiles
         docs.filter(col("doc_id") % 5 =!= 0).stageArrival(src)
-        val stream = ss.readStream.schema(rawSchema(ss, sfDir, "documents")).parquet(src.toString)
+        val stream = ss.readStream.schema(docs.schema).parquet(src.toString)
         val gated = decontamGate(stream, bfB)
         val q = gated.writeStream
           .outputMode(OutputMode.Update)
           .option("checkpointLocation", ckpt.toString)
           .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            val delta = if (deltaProbe.isDefined) batch.persist() else batch
+            val delta = if (hooks.wants(LoopHooks.DeltaRows)) batch.persist() else batch
             delta.write.mode("overwrite").parquet(s"$sink/batch=$epoch")
-            deltaProbe.foreach { p => probeAdd(p, (epoch, delta.count())); delta.unpersist() }
+            hooks.record(LoopHooks.DeltaRows, epoch) { try delta.count() finally delta.unpersist() }
           }
           .start()
         try {
@@ -1085,9 +1063,8 @@ object Events {
     * streaming query can't join two aggregations of itself. Converges to
     * the batch `corpus_report` relation exactly — same oracle SQL.
     */
-  def streamCorpusReport(spark: SparkSession, sfDir: String,
-                         statePartitions: Option[Int] = Some(4)): DataFrame =
-    runBounded(spark, sfDir, statePartitions, OutputMode.Complete, "graft_creport",
+  def streamCorpusReport(spark: SparkSession, sfDir: String): DataFrame =
+    runBounded(spark, sfDir, StatePartitions, OutputMode.Complete, "graft_creport",
       finish = df => {
         val total = df.agg(sum(col("n_docs")).as("total_docs"))
         df.crossJoin(broadcast(total))
@@ -1203,30 +1180,26 @@ object Events {
     * an incremental operator can have): stale text surviving any chain,
     * a shadow surviving retraction, OR a demoted original that the
     * removal failed to restore all hash-mismatch that oracle.
-    * `epochProbe` receives (epoch, batch rows) per batch for the spec;
-    * `ledgerDeltaProbe` receives (epoch, ledger delta rows) — the
-    * counter that PROVES the per-epoch ledger write is
-    * blast-radius-sized, not corpus-sized (and that a deployment
-    * monitors as its per-batch write amplification).
+    *
+    * `hooks` ([[LoopHooks]]): meters `BatchRows`, `LedgerDeltaRows` and
+    * `SnapshotDirs`. Its `EpochEnd` crash fires between the two commit
+    * markers (manifest written, ledger not), or in capped incremental
+    * epochs after the hot snapshot, before the ledger. That first point
+    * is also the uncapped loop's after-stores state: it sits right after
+    * the concurrent store group.
     */
   def streamIncrementalClean(spark: SparkSession, sfDir: String,
-                             statePartitions: Option[Int] = Some(4),
-                             epochProbe: Option[scala.collection.mutable.Buffer[(Long, Long)]] = None,
-                             ledgerDeltaProbe: Option[scala.collection.mutable.Buffer[(Long, Long)]] = None,
-                             compactEvery: Int = 8,
-                             crashAtEpoch: Option[Long] = None,
                              maxShingleDf: Option[Int] = None,
-                             hotDirsProbe: Option[scala.collection.mutable.Buffer[(Long, Seq[Long])]] = None): DataFrame = {
+                             hooks: LoopHooks = LoopHooks.none): DataFrame = {
     import graft.operators.{Corpus, Snapshot}
-    val ss = sessionFor(spark, statePartitions,
-      Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
+    val ss = loopSession(spark)
     val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
     val stagedBytes = java.nio.file.Files.size(staged)
     withScratchDirs("graft_iclean", stagedBytes, "store") { (src, storeDir, ckpt) =>
       val outerLap = graft.operators.Snapshot.incrLap()
       val docs = ss.read.parquet(staged.toString)
       // chain value schemas, derived ONCE at setup (analysis only)
-      val corpus = Chain("corpus", rawSchema(ss, sfDir, "documents"), bucketBy = Some("doc_id"))
+      val corpus = Chain("corpus", docs.schema, bucketBy = Some("doc_id"))
       val postings = Chain("postings_by_shingle", Snapshot.postings(docs.limit(0)).schema,
         bucketBy = Some("s"))
       val manifest = Chain("manifest", Snapshot.ManifestSchema, commits = true)
@@ -1249,9 +1222,8 @@ object Events {
         .unionByName(shadows)
         .stageArrival(src)
       outerLap("stage arrival 1")
-      val stream = ss.readStream.schema(rawSchema(ss, sfDir, "documents"))
-        .parquet(src.toString)
-      val crash = new CrashPoint(crashAtEpoch)
+      val stream = ss.readStream.schema(docs.schema).parquet(src.toString)
+      val crash = hooks.crashPoint
       def startQ(): StreamingQuery = stream.writeStream
         .outputMode(OutputMode.Append)
         .option("checkpointLocation", ckpt.toString)
@@ -1320,7 +1292,8 @@ object Events {
             // epoch. CAPPED incremental epochs defer to their own,
             // strictly-worse hook below; a capped epoch-0 crash still
             // fires here (a crash-armed run must always crash).
-            crash.fire(epoch, "between-commit-markers", maxShingleDf.isEmpty || epoch == 0L)
+            crash.fire(epoch, LoopHooks.EpochEnd, "between-commit-markers",
+              maxShingleDf.isEmpty || epoch == 0L)
             // 5. the ledger write — the write that commits the epoch.
             // Epoch 0 is the PRODUCTION bootstrap (see the query doc):
             // gated on epoch == 0 (which implies no committed
@@ -1441,7 +1414,8 @@ object Events {
                   // the replay must re-advance from the committed
                   // PREDECESSOR's snapshot (StreamingSpec's capped
                   // crash leg lands exactly here)
-                  crash.fire(epoch, "post-hot-write pre-ledger", hotNextOpt.isDefined)
+                  crash.fire(epoch, LoopHooks.EpochEnd, "post-hot-write pre-ledger",
+                    hotNextOpt.isDefined)
                   store.writeDelta(ledger, epoch, deltaRows.unionByName(carry))
                 } finally {
                   graft.operators.Corpus.releaseCheckpoint(deltaRows)
@@ -1462,9 +1436,9 @@ object Events {
           }
           // in-stream compaction of all four chains, plus capped
           // mode's hot-snapshot prune (VERDICT r15 #4)
-          store.compact(bss, epoch, compactEvery, hotDirsProbe)
-          epochProbe.foreach(probeAdd(_, (epoch, batch.count())))
-          ledgerDeltaProbe.foreach(probeAdd(_, (epoch, store.delta(bss, ledger, epoch).count())))
+          store.compact(bss, epoch, hooks)
+          hooks.record(LoopHooks.BatchRows, epoch)(batch.count())
+          hooks.record(LoopHooks.LedgerDeltaRows, epoch)(store.delta(bss, ledger, epoch).count())
         }
         .start()
       val dr = new ReplayingDrain(() => startQ(), crash)
@@ -1528,16 +1502,13 @@ object Events {
     * The bounded harness stages the corpus in two arrivals (doc_id % 5
     * split) so the run demonstrably exercises the incremental path: the
     * second delta must touch only the second arrival's keys.
-    * `deltaProbe`, when set, receives (epoch, emitted rows) per batch —
-    * the counter a deployment monitors (and the spec asserts on).
-    * Returns the CONSUMER's view read back from the delta chain.
+    * The `DeltaRows` meter of `hooks` ([[LoopHooks]]) counts each
+    * batch's emitted rows. Returns the CONSUMER's view read back from
+    * the delta chain.
     */
   def ingestDedupToFiles(spark: SparkSession, sfDir: String,
-                         statePartitions: Option[Int] = Some(4),
-                         minTokens: Int = 10,
-                         deltaProbe: Option[scala.collection.mutable.Buffer[(Long, Long)]] = None): DataFrame = {
-    val ss = sessionFor(spark, statePartitions,
-      Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
+                         hooks: LoopHooks = LoopHooks.none): DataFrame = {
+    val ss = loopSession(spark)
     val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
     val stagedBytes = java.nio.file.Files.size(staged)
     withScratchDirs("graft_ingest_file", stagedBytes, "sink") { (src, sink, ckpt) =>
@@ -1545,19 +1516,19 @@ object Events {
       // arrival 1: most of the corpus; arrival 2 lands after the
       // first drain, forcing a second (incremental) micro-batch
       docs.filter(col("doc_id") % 5 =!= 0).stageArrival(src)
-      val stream = ss.readStream.schema(rawSchema(ss, sfDir, "documents")).parquet(src.toString)
+      val stream = ss.readStream.schema(docs.schema).parquet(src.toString)
       val deduped = stream
         .filter(graft.functions.TokenStats.tokenStats(col("text"))
-          .getField("n_tokens") >= minTokens)
+          .getField("n_tokens") >= MinTokens)
         .groupBy(md5(col("text").cast("binary")).as("text_hash"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_arrivals"))
       val q = deduped.writeStream
         .outputMode(OutputMode.Update)
         .option("checkpointLocation", ckpt.toString)
         .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          val delta = if (deltaProbe.isDefined) batch.persist() else batch
+          val delta = if (hooks.wants(LoopHooks.DeltaRows)) batch.persist() else batch
           delta.write.mode("overwrite").parquet(s"$sink/batch=$epoch")
-          deltaProbe.foreach { p => probeAdd(p, (epoch, delta.count())); delta.unpersist() }
+          hooks.record(LoopHooks.DeltaRows, epoch) { try delta.count() finally delta.unpersist() }
         }
         .start()
       try {
@@ -1577,7 +1548,8 @@ object Events {
     * [[ingestDedup]]'s exact hashes and the full clean ledger
     * ([[streamIncrementalClean]]): an arriving doc is kept iff no
     * already-ingested (or batch-mate) doc with a SMALLER id is an
-    * LSH-candidate near-dup verified by exact Jaccard ≥ `threshold`
+    * LSH-candidate near-dup verified by exact Jaccard ≥
+    * [[graft.operators.Dedup.DefaultThreshold]]
     * ([[graft.operators.Dedup.minhashNearDupVerdict]]'s criterion).
     * State is a [[ChainStore]] (its doc states the layout, the shared
     * tombstone chain, the commit gate, compaction and the crash-replay
@@ -1644,41 +1616,22 @@ object Events {
     * verdict equals [[graft.operators.Dedup.minhashNearDupVerdict]]
     * EXACTLY, independent of arrival order — StreamingSpec pins the
     * equality; the SQL-checkable invariants live in
-    * [[ingestNearDupCheck]]. `deltaProbe` receives (epoch, verdict
-    * delta rows) per batch — the write-amplification counter a
-    * deployment monitors.
+    * [[ingestNearDupCheck]].
     *
-    * `crashAtEpoch` (spec hook): throw once at the very END of that
-    * epoch's foreachBatch — after every chain delta, the tombstones and
-    * the in-stream compaction landed, but before the streaming
-    * checkpoint commits the offsets (the worst replay state: output
-    * present, commit missing). The harness then restarts the query on
-    * the SAME checkpoint, so the epoch replays over the already-written
-    * (and possibly just-compacted) store and must overwrite only its
-    * own deltas — the triple-hardening leg (RocksDB × compaction ×
-    * replay) StreamingSpec pins against the batch oracle.
-    *
-    * `priorFetchProbe` (spec hook) receives (epoch, requested ids, chain
-    * rows entering LWW) for the epoch's prior-verdict fetch. A
-    * retirement epoch fetches ONCE, for |cands ∪ touchIds| (the
-    * candidate ids and the retirement blast radius's touched ids), and
-    * records that one fetch — not one fetch per leg. Its counts are
-    * therefore at most the two per-leg fetches' sum that records taken
-    * before the fusion show, and below it when the legs overlap. */
+    * `hooks` ([[LoopHooks]]): meters `DeltaRows` (the verdict delta),
+    * `PriorFetch`, `CapCrossings` and `SnapshotDirs`. Its `EpochEnd`
+    * crash fires at the very end of the epoch — after every chain
+    * delta, the tombstones and the in-stream compaction landed, before
+    * the streaming checkpoint commits (output present, commit missing),
+    * so the replay runs over the already-written, possibly just
+    * compacted store — or in capped mode after the hot snapshot, before
+    * the verdict write. Its `AfterStores` crash fires after the
+    * concurrent tombstone/shingle/band group. */
   def ingestNearDup(spark: SparkSession, sfDir: String,
-                    statePartitions: Option[Int] = Some(4),
-                    threshold: Double = graft.operators.Dedup.DefaultThreshold,
-                    deltaProbe: Option[scala.collection.mutable.Buffer[(Long, Long)]] = None,
-                    compactEvery: Int = 8,
-                    priorFetchProbe: Option[scala.collection.mutable.Buffer[(Long, Long, Long)]] = None,
-                    crashAtEpoch: Option[Long] = None,
                     maxBandDf: Option[Int] = None,
-                    capCrossingsProbe: Option[scala.collection.mutable.Buffer[(Long, Long, Long)]] = None,
-                    hotDirsProbe: Option[scala.collection.mutable.Buffer[(Long, Seq[Long])]] = None,
-                    crashAfterStores: Option[Long] = None): DataFrame = {
+                    hooks: LoopHooks = LoopHooks.none): DataFrame = {
     import graft.operators.Dedup
-    val ss = sessionFor(spark, statePartitions,
-      Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
+    val ss = loopSession(spark)
     val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
     val stagedBytes = java.nio.file.Files.size(staged)
     withScratchDirs("graft_neardup", stagedBytes, "store") { (src, storeDir, ckpt) =>
@@ -1745,9 +1698,8 @@ object Events {
             .unionByName(stale))(_ unionByName _)
         .stageArrival(src)
       outerLap("stage arrival 1")
-      val stream = ss.readStream.schema(rawSchema(ss, sfDir, "documents")).parquet(src.toString)
-      val crash = new CrashPoint(crashAtEpoch)
-      val storesCrash = new CrashPoint(crashAfterStores)
+      val stream = ss.readStream.schema(docs.schema).parquet(src.toString)
+      val crash = hooks.crashPoint
       def startQ(): StreamingQuery = stream.writeStream
         .outputMode(OutputMode.Append)
         .option("checkpointLocation", ckpt.toString)
@@ -1808,13 +1760,12 @@ object Events {
                   () => store.writeDelta(shingles, epoch, batchSh),
                   () => store.writeDelta(bands, epoch, batchBands)))
                 ndLap(s"store deltas (epoch $epoch, parallel)")
-                // spec hook (r20, the parallel-group replay pin): die
-                // BETWEEN the concurrent non-committing store group and
-                // everything that reads it back. The replay must
-                // re-derive the same deltas and overwrite each
-                // idempotently whatever subset order the pool landed
-                // them in.
-                storesCrash.fire(epoch, "post-stores pre-verdict")
+                // the parallel-group replay pin: die BETWEEN the
+                // concurrent non-committing store group and everything
+                // that reads it back. The replay must re-derive the
+                // same deltas and overwrite each idempotently whatever
+                // subset order the pool landed them in.
+                crash.fire(epoch, LoopHooks.AfterStores, "post-stores pre-verdict")
                 // ---- CAPPED mode: advance the hot band-bucket set,
                 // delta-stably (VERDICT r15 #2 — the maxShingleDf
                 // crossing machinery applied to the LSH index). Only
@@ -1879,16 +1830,14 @@ object Events {
                     .unionByName(touched.filter(col("df_new") > cap)
                       .select(col("band_id"), col("band_hash"))))
                   val hotNext = store.delta(bss, hotBands, epoch)
-                  capCrossingsProbe.foreach { buf =>
-                    // probe-only counts (spec non-vacuity meters): an
-                    // unprobed run never executes them — ONE agg job,
-                    // not a count per direction (r18)
+                  hooks.record(LoopHooks.CapCrossings, epoch) {
+                    // ONE agg job, not a count per direction (r18)
                     val r = touched.agg(
                       coalesce(sum(when(col("df_prior") <= cap &&
                         col("df_new") > cap, 1L).otherwise(0L)), lit(0L)),
                       coalesce(sum(when(col("df_prior") > cap &&
                         col("df_new") <= cap, 1L).otherwise(0L)), lit(0L))).head()
-                    probeAdd(buf, (epoch, r.getLong(0), r.getLong(1)))
+                    (r.getLong(0), r.getLong(1))
                   }
                   ndLap(s"cap hot advance (epoch $epoch)")
                   (touched, hotNext)
@@ -1920,7 +1869,7 @@ object Events {
                   val candIds = cand.select(col("a").as("doc_id"))
                     .union(cand.select(col("b").as("doc_id"))).distinct()
                   val shNeeded = store.liveFor(bss, shingles, epoch, tombAgg, candIds).persist()
-                  val edges = Dedup.nearDupVerify(cand, shNeeded, threshold)
+                  val edges = Dedup.nearDupVerify(cand, shNeeded)
                   // per-doc best NEW neighbor this epoch (min over the
                   // smaller side; min_by ties impossible — pairs distinct)
                   val newBest = edges.groupBy(col("b").as("doc_id"))
@@ -1937,18 +1886,15 @@ object Events {
                     // consumer instead of LWW-resolving the whole chain
                     // once per epoch (VERDICT r12 #2): each fetch reads
                     // only the requested ids' buckets and semi-joins the
-                    // exact ids BEFORE the LWW aggregate.
-                    // `priorFetchProbe` accumulates (requested ids,
-                    // chain rows entering LWW) per epoch — the spec
-                    // counter proving the prior resolution is
-                    // delta-sized, never manifest-width.
+                    // exact ids BEFORE the LWW aggregate. The
+                    // `PriorFetch` meter accumulates what they read.
                     var fetchedIds = 0L
                     var fetchedRows = 0L
                     def priorLwwFor(ids: DataFrame): DataFrame = {
                       val rows = store.liveFor(bss, verdict, epoch - 1, tombAgg, ids)
-                      // PROBE-ONLY extra jobs (ADVICE r13): an unprobed
+                      // meter-only extra jobs (ADVICE r13): an unmetered
                       // run never runs these two counts
-                      if (priorFetchProbe.isDefined) {
+                      if (hooks.wants(LoopHooks.PriorFetch)) {
                         fetchedIds += ids.count(); fetchedRows += rows.count()
                       }
                       store.latest(verdict, rows)
@@ -2077,7 +2023,7 @@ object Events {
                               val candIds2 = cand2.select(col("a").as("doc_id"))
                                 .union(cand2.select(col("b").as("doc_id"))).distinct()
                               val sh2 = store.liveFor(bss, shingles, epoch, tombAgg, candIds2)
-                              val best2 = Dedup.nearDupVerify(cand2, sh2, threshold)
+                              val best2 = Dedup.nearDupVerify(cand2, sh2)
                                 .groupBy(col("b").as("doc_id"))
                                 .agg(min(col("a")).as("partner_id"),
                                   min_by(col("jaccard"), col("a")).as("jaccard"))
@@ -2103,7 +2049,8 @@ object Events {
                     // epoch's hot snapshot is on disk, the committing
                     // verdict write never ran (the end-of-epoch hook
                     // defers to this one in capped mode)
-                    crash.fire(epoch, "post-hot-write pre-verdict", maxBandDf.isDefined)
+                    crash.fire(epoch, LoopHooks.EpochEnd, "post-hot-write pre-verdict",
+                      maxBandDf.isDefined)
                     // the verdict delta commits the epoch (last write)
                     try store.writeDelta(verdict, epoch, recomputeUpdates
                       .fold(batchVerdict.unionByName(priorUpdatesFinal))(
@@ -2119,7 +2066,7 @@ object Events {
                         graft.operators.Corpus.releaseCheckpoint)
                     }
                     ndLap(s"verdict write (epoch $epoch)")
-                    priorFetchProbe.foreach(probeAdd(_, (epoch, fetchedIds, fetchedRows)))
+                    hooks.record(LoopHooks.PriorFetch, epoch)((fetchedIds, fetchedRows))
                   } finally {
                     newBest.unpersist(blocking = false)
                     shNeeded.unpersist(blocking = false)
@@ -2135,17 +2082,16 @@ object Events {
           }
           // in-stream compaction of all three chains, plus capped
           // mode's hot-snapshot prune
-          if (store.compact(bss, epoch, compactEvery, hotDirsProbe))
+          if (store.compact(bss, epoch, hooks))
             ndLap(s"compaction (epoch $epoch)")
-          deltaProbe.foreach(probeAdd(_, (epoch, store.delta(bss, verdict, epoch).count())))
-          // spec hook: die AFTER everything landed (deltas,
-          // tombstones, compaction) but BEFORE the streaming
-          // checkpoint commits (see the crashAtEpoch doc). CAPPED runs
-          // defer to their own, strictly-worse hook above.
-          crash.fire(epoch, "post-write", maxBandDf.isEmpty)
+          hooks.record(LoopHooks.DeltaRows, epoch)(store.delta(bss, verdict, epoch).count())
+          // die AFTER everything landed (deltas, tombstones,
+          // compaction) but BEFORE the streaming checkpoint commits.
+          // CAPPED runs defer to their own, strictly-worse point above.
+          crash.fire(epoch, LoopHooks.EpochEnd, "post-write", maxBandDf.isEmpty)
         }
         .start()
-      val dr = new ReplayingDrain(() => startQ(), crash, storesCrash)
+      val dr = new ReplayingDrain(() => startQ(), crash)
       try {
         dr.drain()
         outerLap("drain 1 (bootstrap epoch)")
@@ -2199,14 +2145,12 @@ object Events {
     *  - `n_exact_dup_missed` — identical texts hash to identical bands,
     *    so every doc with a smaller-id IDENTICAL-text mate must be
     *    flagged (pigeonhole, hash-independent) — pinned 0;
-    *  - `recall_ok` — flagged docs ≥ `recallFloor` × the exact
-    *    denominator (banding math: ≥0.95 expected per pair at j=0.8
-    *    with 16×8 bands) — pinned true.
+    *  - `recall_ok` — flagged docs ≥ [[NearDupRecallFloor]] × the
+    *    exact denominator — pinned true.
     */
-  def ingestNearDupCheck(spark: SparkSession, sfDir: String,
-                         recallFloor: Double = 0.9): DataFrame = {
+  def ingestNearDupCheck(spark: SparkSession, sfDir: String): DataFrame = {
     val streamed = ingestNearDup(spark, sfDir) // local relation (detached)
-    nearDupContainmentVerdict(spark, sfDir, streamed, recallFloor, Nil)
+    nearDupContainmentVerdict(spark, sfDir, streamed, Nil)
   }
 
   /** Session-scoped memo of the exact n-gram-Jaccard pair relation the
@@ -2266,8 +2210,7 @@ object Events {
     * (the capped twin's mid-stream cap-bite meters) append after the
     * shared fields. */
   private def nearDupContainmentVerdict(spark: SparkSession, sfDir: String,
-                                        streamed: DataFrame, recallFloor: Double,
-                                        extra: Seq[Column]): DataFrame = {
+                                        streamed: DataFrame, extra: Seq[Column]): DataFrame = {
     import graft.operators.Dedup
     // the check's own cost (the exact pair relation + containment
     // joins) gets a lap of its own, so the bench split doesn't lump
@@ -2307,7 +2250,7 @@ object Events {
         .agg(count(lit(1)).as("n_exact_dup_missed"))))
       .select(Seq(col("n_docs"), col("n_exact_neardup_docs"), col("n_false_dups"),
         col("n_jaccard_mismatch"), col("n_exact_dup_missed"),
-        (col("n_dups") >= lit(recallFloor) * col("n_exact_neardup_docs"))
+        (col("n_dups") >= lit(NearDupRecallFloor) * col("n_exact_neardup_docs"))
           .as("recall_ok")) ++ extra: _*)
     val out = Tables.materializeAndRelease(verdict, exact)
     oracleLap("oracle verify (exact pair containment)")
@@ -2338,17 +2281,16 @@ object Events {
     *    relation is the full-recall one the shared containment verdict
     *    (and floor) then gates (pinned true).
     */
-  def ingestNearDupCappedCheck(spark: SparkSession, sfDir: String,
-                               recallFloor: Double = 0.9): DataFrame = {
-    val crossings = scala.collection.mutable.ListBuffer.empty[(Long, Long, Long)]
+  def ingestNearDupCappedCheck(spark: SparkSession, sfDir: String): DataFrame = {
+    val hooks = new LoopHooks(meters = Set(LoopHooks.CapCrossings))
     val streamed = ingestNearDup(spark, sfDir,
-      maxBandDf = Some(graft.operators.Dedup.BandCapDf),
-      capCrossingsProbe = Some(crossings)) // local relation (detached)
-    val quietBoot = crossings.forall { case (e, up, _) => e != 0L || up == 0L }
-    val up = crossings.exists { case (e, u, _) => e >= 1L && u > 0L }
-    val down = crossings.exists { case (e, _, d) => e >= 1L && d > 0L }
-    val cold = crossings.map(_._2).sum == crossings.map(_._3).sum
-    nearDupContainmentVerdict(spark, sfDir, streamed, recallFloor,
+      maxBandDf = Some(graft.operators.Dedup.BandCapDf), hooks) // local relation (detached)
+    val crossings = hooks(LoopHooks.CapCrossings)
+    val quietBoot = crossings.forall { case (e, (up, _)) => e != 0L || up == 0L }
+    val up = crossings.exists { case (e, (u, _)) => e >= 1L && u > 0L }
+    val down = crossings.exists { case (e, (_, d)) => e >= 1L && d > 0L }
+    val cold = crossings.map(_._2._1).sum == crossings.map(_._2._2).sum
+    nearDupContainmentVerdict(spark, sfDir, streamed,
       Seq(lit(quietBoot).as("cap_quiet_at_bootstrap"),
         lit(up).as("cap_crossed_up"), lit(down).as("cap_crossed_down"),
         lit(cold).as("cap_cold_at_convergence")))
@@ -2415,10 +2357,7 @@ object Events {
     * full O(corpus) assignment chain per epoch; max-cell share growing
     * under frozen centroids is the re-train signal
     * ([[graft.operators.Similarity.ivfAssign]]'s doc). Returns the
-    * query set's top-k over the maintained index; `deltaProbe`
-    * receives (epoch, assignment delta rows) per batch;
-    * `cellStatsInputProbe` (epoch, monitor input rows) — the counter
-    * proving the monitor never reads corpus-width state.
+    * query set's top-[[AnnK]] over the maintained index.
     *
     * REMOVALS are first-class arrivals here too (r12, completing the
     * retraction discipline across all four ingest loops): a row with
@@ -2458,25 +2397,22 @@ object Events {
     * SUM, not last-write-wins) — bounding both chains' delta counts
     * and the tombstone aggregate's growth for a loop that would
     * otherwise append one delta per epoch forever.
+    *
+    * `hooks` ([[LoopHooks]]): meters `DeltaRows` (the assignment
+    * delta), `CellStats`, `CellStatsInput`, `Migration`, `GateInput` and
+    * `Generations`. Its `EpochEnd` crash fires after everything landed
+    * (assign delta, cellstats, tombstones, compaction), before the
+    * streaming checkpoint commits; its `AfterStores` crash after the
+    * concurrent tombstone/assign/vectors group, before the committing
+    * stats write.
     */
   def ingestAnnIvf(spark: SparkSession, sfDir: String,
-                   statePartitions: Option[Int] = Some(4),
-                   k: Int = 5, nprobe: Int = 8,
-                   deltaProbe: Option[scala.collection.mutable.Buffer[(Long, Long)]] = None,
-                   cellStatsProbe: Option[scala.collection.mutable.Buffer[(Long, Seq[(Int, Long)])]] = None,
-                   cellStatsInputProbe: Option[scala.collection.mutable.Buffer[(Long, Long)]] = None,
-                   compactEvery: Int = 8,
-                   crashAtEpoch: Option[Long] = None,
                    driftMaxCellShare: Option[Double] = None,
-                   migrateBucketsPerEpoch: Int = 16,
                    driftWaveArrival2: Boolean = false,
                    driftSecondWave: Boolean = false,
-                   migrationProbe: Option[scala.collection.mutable.Buffer[(Long, String)]] = None,
-                   gateInputProbe: Option[scala.collection.mutable.Buffer[(Long, Int, Long)]] = None,
-                   generationsProbe: Option[scala.collection.mutable.Buffer[(Long, Seq[Int])]] = None): DataFrame = {
+                   hooks: LoopHooks = LoopHooks.none): DataFrame = {
     import graft.operators.Similarity
-    val ss = sessionFor(spark, statePartitions,
-      Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
+    val ss = loopSession(spark)
     val staged = java.nio.file.Paths.get(s"$sfDir/embeddings.parquet")
     val stagedBytes = java.nio.file.Files.size(staged)
     withScratchDirs("graft_annstream", stagedBytes, "store") { (src, store, ckpt) =>
@@ -2493,11 +2429,13 @@ object Events {
       // once the raw table's rows can be stale (a drifted wave).
       // Value schemas are explicit: a removal-only epoch assigns
       // nothing, and inference over an empty delta dir fails.
+      val outerLap = graft.operators.Snapshot.incrLap()
+      val emb = ss.read.parquet(staged.toString)
+      val embeddingType = emb.schema("embedding").dataType
       val assignSchema = StructType(Seq(
         StructField("neighbor_id", LongType), StructField("cell", IntegerType)))
       val vectorsSchema = StructType(Seq(
-        StructField("neighbor_id", LongType),
-        StructField("embedding", rawSchema(ss, sfDir, "embeddings")("embedding").dataType)))
+        StructField("neighbor_id", LongType), StructField("embedding", embeddingType)))
       val chains = new GenerationalStore(store, "neighbor_id",
         "assign", assignSchema, "cellstats", "vectors", vectorsSchema)
       // column selected BY NAME: a positional read would silently
@@ -2525,16 +2463,13 @@ object Events {
           .write.mode("overwrite").parquet(chains.genDir("centroids", g))
         c
       }
-      val outerLap = graft.operators.Snapshot.incrLap()
-      val emb = ss.read.parquet(staged.toString)
       // the stream carries CORPUS vectors; the query set is static
       val corpus = emb.filter(col("vec_id") >= Similarity.NumQueries)
       outerLap("setup") // pre-staging boundary (ADVICE r14, see clean loop)
       corpus.filter(col("vec_id") % 5 =!= 0).stageArrival(src)
       outerLap("stage arrival 1")
-      val stream = ss.readStream.schema(rawSchema(ss, sfDir, "embeddings"))
-        .parquet(src.toString)
-      val crash = new CrashPoint(crashAtEpoch)
+      val stream = ss.readStream.schema(emb.schema).parquet(src.toString)
+      val crash = hooks.crashPoint
       def startQ(): StreamingQuery = stream.writeStream
         .outputMode(OutputMode.Append)
         .option("checkpointLocation", ckpt.toString)
@@ -2586,6 +2521,7 @@ object Events {
                 chains.writeDelta(chains.sourceChain, epoch,
                   arrived.select(col("vec_id").as("neighbor_id"), col("embedding"))))
               else Seq.empty))
+            crash.fire(epoch, LoopHooks.AfterStores, "post-stores pre-stats")
             // generation `gen`'s per-epoch stats delta: THIS batch's
             // per-cell counts, O(nCells) rows — never the corpus —
             // PLUS negative counts for the RETIRED vectors' prior
@@ -2593,8 +2529,8 @@ object Events {
             // superseded re-deliveries — a re-assigned vector must
             // leave its old cell's count). Shared by the commit
             // chain and the migration target, so sum(n) over either
-            // chain is its live row count (the cellStatsProbe spec
-            // pins it against the one-shot live occupancy).
+            // chain is its live row count (the spec pins the
+            // `CellStats` meter against the one-shot live occupancy).
             def statsDelta(gen: Int): DataFrame = {
               val addStats = Similarity.ivfCellStats(chains.delta(bss, chains.primaryAt(gen), epoch))
               addStats.unionByName(chains.retiredPriorRows(bss, gen, epoch, ret)
@@ -2611,7 +2547,7 @@ object Events {
             // one bucket-cursor chunk of old vectors per epoch) and
             // flip the query side on the completeness gate.
             if (driftMaxCellShare.isDefined)
-              chains.migrationEpoch(bss, epoch, roles, ret, migrationProbe) { m =>
+              chains.migrationEpoch(bss, epoch, roles, ret, hooks) { m =>
                 val mig = m.target {
                   val share = Similarity.maxCellShare(
                     chains.additiveRows(bss, commitGen, epoch)
@@ -2634,7 +2570,7 @@ object Events {
                     } else loadCentroids(bss, t)
                   // the epoch's T delta: its own arrivals + the
                   // cursor's chunk of OLD vectors
-                  val chunkVecs = m.chunk(t, m0, migrateBucketsPerEpoch, arrivedIds)
+                  val chunkVecs = m.chunk(t, m0, MigrateBucketsPerEpoch, arrivedIds)
                   chains.writeDelta(chains.primaryAt(t), epoch,
                     Similarity.ivfAssign(arrived, vT)
                       .unionByName(Similarity.ivfAssign(
@@ -2646,7 +2582,7 @@ object Events {
                   // check polls once T is active
                   chains.writeAdditive(t, epoch, statsDelta(t))
                   m.lap(s"migration target stats (epoch $epoch)")
-                  m.gate(t, gateInputProbe)
+                  m.gate(t)
                 }
               }
           } finally {
@@ -2657,33 +2593,27 @@ object Events {
           // in-stream compaction (r13): at 100 TB the assign chain
           // and its tombstones would otherwise grow one delta per
           // epoch forever
-          chains.compact(bss, commitGen, epoch, compactEvery)
-          // spec probe: which generations' assign chains survive on
-          // disk after this epoch's compaction — the drained-
-          // generation retirement meter (a dir listing, no jobs)
-          generationsProbe.foreach(buf => probeAdd(buf, (epoch, chains.generations)))
-          deltaProbe.foreach(probeAdd(_, (epoch, chains.delta(bss, chains.primaryAt(commitGen), epoch).count())))
+          chains.compact(bss, commitGen, epoch, hooks)
+          hooks.record(LoopHooks.Generations, epoch)(chains.generations)
+          hooks.record(LoopHooks.DeltaRows, epoch)(
+            chains.delta(bss, chains.primaryAt(commitGen), epoch).count())
           // the drift monitor a deployment polls after every append:
           // running per-cell occupancy summed off the STATS chain —
           // O(epochs × nCells) scalar rows per poll, with the full
           // assignment chain never re-read (VERDICT r10 ask #4)
-          cellStatsProbe.foreach { buf =>
-            val statsChain = chains.additiveRows(bss, commitGen, epoch)
-            cellStatsInputProbe.foreach(probeAdd(_, (epoch, statsChain.count())))
-            // n > 0: a cell fully drained by removals drops out,
-            // matching the one-shot groupBy-count over the live set
-            probeAdd(buf, (epoch,
-              statsChain.groupBy(col("cell")).agg(sum(col("n")).as("n"))
-                .filter(col("n") > 0).orderBy(col("cell"))
-                .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq))
-          }
-          // spec hook (VERDICT r13 #3 — the ingestNearDup shape):
+          def statsChain = chains.additiveRows(bss, commitGen, epoch)
+          hooks.record(LoopHooks.CellStatsInput, epoch)(statsChain.count())
+          // n > 0: a cell fully drained by removals drops out,
+          // matching the one-shot groupBy-count over the live set
+          hooks.record(LoopHooks.CellStats, epoch)(
+            statsChain.groupBy(col("cell")).agg(sum(col("n")).as("n"))
+              .filter(col("n") > 0).orderBy(col("cell"))
+              .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq)
           // die AFTER everything landed (assign delta, cellstats,
           // tombstones, compaction) but BEFORE the streaming
-          // checkpoint commits; the harness restarts on the same
-          // checkpoint and this epoch REPLAYS over the
+          // checkpoint commits; the epoch REPLAYS over the
           // already-written store
-          crash.fire(epoch, "post-write")
+          crash.fire(epoch, LoopHooks.EpochEnd, "post-write")
         }
         .start()
       val dr = new ReplayingDrain(() => startQ(), crash)
@@ -2721,8 +2651,7 @@ object Events {
         // what arrived, or the re-crawl would silently change the
         // corpus.
         corpus.filter(col("vec_id") % AnnRemovalMod === 0)
-          .withColumn("embedding",
-            lit(null).cast(rawSchema(ss, sfDir, "embeddings")("embedding").dataType))
+          .withColumn("embedding", lit(null).cast(embeddingType))
           .unionByName {
             val redel = corpus.filter(col("vec_id") % RedeliveryMod === 0 &&
               col("vec_id") % AnnRemovalMod =!= 0)
@@ -2784,7 +2713,7 @@ object Events {
           .unionByName(chains.resolved(spark, chains.sourceChain)
             .select(col("neighbor_id").as("vec_id"), col("embedding")))
       val topk = Similarity.ivfTopKFromIndex(
-        embForQuery, assigned, loadCentroids(spark, qGen), k, nprobe)
+        embForQuery, assigned, loadCentroids(spark, qGen), AnnK, AnnNprobe)
       val out = detach(spark, topk)
       outerLap("consumer read-back (maintained-index top-k)")
       out
@@ -2796,12 +2725,10 @@ object Events {
     * quantizer-seeded (rows-only), but the relation must have exactly k
     * rows per query (real `n_rows`, derived by the oracle from the
     * query-set size) and clear the maintained-index recall floor
-    * against the exact brute baseline (pinned `recall_ok`, floor 0.7 at
-    * nprobe 8 — the `ivf_incr` floor, since the frozen quantizer never
-    * saw the second arrival).
+    * against the exact brute baseline (pinned `recall_ok`,
+    * [[AnnRecallFloor]]).
     */
-  def ingestAnnCheck(spark: SparkSession, sfDir: String,
-                     recallFloor: Double = 0.7): DataFrame = {
+  def ingestAnnCheck(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Similarity
     val streamed = ingestAnnIvf(spark, sfDir) // local relation (detached)
     val oracleLap = graft.operators.Snapshot.incrLap()
@@ -2819,7 +2746,7 @@ object Events {
         .agg(count(lit(1)).as("hits"))))
       .crossJoin(broadcast(b.agg(count(lit(1)).as("n_brute"))))
       .select(col("n_rows"),
-        (col("hits") >= lit(recallFloor) * col("n_brute")).as("recall_ok"))
+        (col("hits") >= lit(AnnRecallFloor) * col("n_brute")).as("recall_ok"))
     val out = Tables.materializeAndRelease(verdict, b)
     oracleLap("oracle verify (brute-force recall)")
     out
@@ -2846,15 +2773,12 @@ object Events {
     *    floor against brute force over the same live corpus: the
     *    `ivf_incr` contract held THROUGH a migration (pinned true).
     */
-  def ingestAnnMigrateCheck(spark: SparkSession, sfDir: String,
-                            k: Int = 5, nprobe: Int = 8,
-                            recallFloor: Double = 0.7): DataFrame = {
+  def ingestAnnMigrateCheck(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Similarity
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, String)]
-    val streamed = ingestAnnIvf(spark, sfDir,
-      driftMaxCellShare = Some(DriftMaxCellShareDefault),
-      driftWaveArrival2 = true, migrationProbe = Some(probe),
-      k = k, nprobe = nprobe) // local relation (detached)
+    val hooks = new LoopHooks(meters = Set(LoopHooks.Migration))
+    val streamed = ingestAnnIvf(spark, sfDir, driftMaxCellShare = Some(DriftMaxCellShareDefault),
+      driftWaveArrival2 = true, hooks = hooks) // local relation (detached)
+    val probe = hooks(LoopHooks.Migration)
     val oracleLap = graft.operators.Snapshot.incrLap()
     val emb = Tables.embeddings(spark, sfDir)
     val corpus = emb.filter(col("vec_id") >= Similarity.NumQueries)
@@ -2865,8 +2789,8 @@ object Events {
       .unionByName(finalCorpus)
     val v2 = Similarity.ivfTrain(m0Corpus.orderBy(col("vec_id")))
     val fresh = Similarity.ivfTopKFromIndex(embLive,
-      Similarity.ivfAssign(finalCorpus, v2), v2, k, nprobe)
-    val b = Similarity.bruteTopK(embLive, k)
+      Similarity.ivfAssign(finalCorpus, v2), v2, AnnK, AnnNprobe)
+    val b = Similarity.bruteTopK(embLive, AnnK)
       .select(col("query_id"), col("neighbor_id")).persist()
     val tripped = probe.exists { case (e, s) => e >= 1 && s.contains("trip") }
     val cutover = probe.exists(_._2.contains("cutover"))
@@ -2879,7 +2803,7 @@ object Events {
       .select(col("n_rows"), lit(tripped).as("drift_tripped"),
         lit(cutover).as("cutover_done"),
         lit(sameAsFresh).as("migrated_equals_fresh"),
-        (col("hits") >= lit(recallFloor) * col("n_brute")).as("recall_ok"))
+        (col("hits") >= lit(AnnRecallFloor) * col("n_brute")).as("recall_ok"))
     val out = Tables.materializeAndRelease(verdict, b)
     oracleLap("oracle verify (fresh-v2 equality + brute recall)")
     out
@@ -2913,8 +2837,8 @@ object Events {
     * equality (probs to 1e-6: treeAggregate combine order perturbs
     * weights at ~1e-12). Model drift (arrival distribution shifting
     * under a frozen filter) is monitored exactly like IVF occupancy:
-    * the per-epoch positive-rate in `deltaProbe` is the alarm a
-    * deployment re-trains on.
+    * the per-epoch positive rate (the `ScoreDelta` meter) is the alarm
+    * a deployment re-trains on.
     *
     * REMOVALS (text IS NULL — r12, the shared retraction discipline):
     * the epoch tombstones the removed doc_ids against the score chain;
@@ -2961,23 +2885,20 @@ object Events {
     * the converged relation equals a fresh generation-T batch scoring
     * of the live corpus (probs to the treeAggregate combine-order
     * tolerance), which is what the `_check` twin pins.
+    *
+    * `hooks` ([[LoopHooks]]): meters `ScoreDelta`, `Migration`,
+    * `GateInput` and `Generations`, and the tamper hook. Its `EpochEnd`
+    * crash fires after everything landed, before the streaming
+    * checkpoint commits; its `AfterStores` crash after the concurrent
+    * tombstone/feature group, before the committing score write.
     */
   def ingestClassify(spark: SparkSession, sfDir: String,
-                     statePartitions: Option[Int] = Some(4),
-                     deltaProbe: Option[scala.collection.mutable.Buffer[(Long, Long, Long)]] = None,
-                     compactEvery: Int = 8,
-                     crashAtEpoch: Option[Long] = None,
                      driftPosRateJump: Option[Double] = None,
-                     migrateBucketsPerEpoch: Int = 16,
                      labelShiftArrival2: Boolean = false,
                      labelSecondWave: Boolean = false,
-                     migrationProbe: Option[scala.collection.mutable.Buffer[(Long, String)]] = None,
-                     gateInputProbe: Option[scala.collection.mutable.Buffer[(Long, Int, Long)]] = None,
-                     generationsProbe: Option[scala.collection.mutable.Buffer[(Long, Seq[Int])]] = None,
-                     storeTamper: Option[(Long, java.nio.file.Path) => Unit] = None): DataFrame = {
+                     hooks: LoopHooks = LoopHooks.none): DataFrame = {
     import graft.operators.Classifier
-    val ss = sessionFor(spark, statePartitions,
-      Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ providerConf)
+    val ss = loopSession(spark)
     val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
     val stagedBytes = java.nio.file.Files.size(staged)
     withScratchDirs("graft_classify", stagedBytes, "store") { (src, store, ckpt) =>
@@ -3023,20 +2944,20 @@ object Events {
       docs.filter(col("doc_id") % 5 =!= 0)
         .stageArrival(src)
       outerLap("stage arrival 1")
-      val stream = ss.readStream.schema(rawSchema(ss, sfDir, "documents")).parquet(src.toString)
-      val crash = new CrashPoint(crashAtEpoch)
+      val stream = ss.readStream.schema(docs.schema).parquet(src.toString)
+      val crash = hooks.crashPoint
       def startQ(): StreamingQuery = stream.writeStream
         .outputMode(OutputMode.Append)
         .option("checkpointLocation", ckpt.toString)
         .foreachBatch { (batch: DataFrame, epoch: Long) =>
           val bss = batch.sparkSession
           import bss.implicits._
-          // spec hook: external interference with the durable store
+          // external interference with the durable store
           // (marker/baseline deletion) injected at an epoch boundary
           // — the window a co-located operator or cleanup job would
           // hit; the defensive guards below must fail LOUDLY, never
           // silently disarm (ADVICE r18 medium's falsifiability leg)
-          storeTamper.foreach(f => f(epoch, store))
+          hooks.tamper(epoch, store)
           val roles = chains.beginEpoch(epoch)
           val commitGen = roles.commit
           // removals (text IS NULL): tombstone-only, no scoring
@@ -3069,6 +2990,7 @@ object Events {
             concurrentWrites(chains.tombstoneWrite(ret, epoch) ++
               (if (driftPosRateJump.isDefined) Seq(() =>
                 chains.writeDelta(chains.sourceChain, epoch, feats)) else Seq.empty))
+            crash.fire(epoch, LoopHooks.AfterStores, "post-stores pre-scores")
             // committed-state gate, not `epoch == 0` — see
             // ingestAnnIvf's note (reused-checkpoint starts).
             // The store/load pair carries the sparse-weight
@@ -3106,7 +3028,7 @@ object Events {
             // ---- classifier re-train / cutover (r17, VERDICT r16
             // top ask — see the driftPosRateJump doc) ----
             if (driftPosRateJump.isDefined)
-              chains.migrationEpoch(bss, epoch, roles, ret, migrationProbe) { m =>
+              chains.migrationEpoch(bss, epoch, roles, ret, hooks) { m =>
                 // ONE persisted read of the commit generation's
                 // epoch delta serves its count delta, the baseline
                 // write and the drift rate (r17 review: three
@@ -3230,7 +3152,7 @@ object Events {
                           Classifier.loadModel(bss, modelDirG(t))), t0Opt.get)
                     // the epoch's T delta: its own arrivals + the
                     // cursor's chunk of OLD docs' stored features
-                    val chunkFeats = m.chunk(t, t0, migrateBucketsPerEpoch, addIds)
+                    val chunkFeats = m.chunk(t, t0, MigrateBucketsPerEpoch, addIds)
                     // ONE model broadcast scores arrivals + chunk;
                     // the scored delta is PERSISTED (the commit
                     // path's commitDelta treatment, VERDICT r17 #3)
@@ -3254,7 +3176,7 @@ object Events {
                       bcT.destroy()
                       scoredT.unpersist(blocking = false)
                     }
-                    m.gate(t, gateInputProbe)
+                    m.gate(t)
                   }
                 }
               }
@@ -3267,19 +3189,15 @@ object Events {
           // row per doc — no LWW needed) with its bucket layout
           // preserved; in migration mode with the feature chain,
           // the target's score chain and the count chains
-          chains.compact(bss, commitGen, epoch, compactEvery)
-          // spec probe: surviving generations' score chains (the
-          // drained-generation retirement meter — a dir listing)
-          generationsProbe.foreach(buf => probeAdd(buf, (epoch, chains.generations)))
-          deltaProbe.foreach { buf =>
+          chains.compact(bss, commitGen, epoch, hooks)
+          hooks.record(LoopHooks.Generations, epoch)(chains.generations)
+          hooks.record(LoopHooks.ScoreDelta, epoch) {
             val d = chains.delta(bss, chains.primaryAt(commitGen), epoch)
-            // (epoch, delta rows, delta positives): the positive-rate
-            // drift alarm a frozen-filter deployment re-trains on
-            probeAdd(buf, (epoch, d.count(), d.filter(col("pred")).count()))
+            (d.count(), d.filter(col("pred")).count())
           }
-          // spec hook (VERDICT r13 #3): die post-write, pre-commit —
-          // replay over the already-written store on restart
-          crash.fire(epoch, "post-write")
+          // die post-write, pre-commit — replay over the
+          // already-written store on restart
+          crash.fire(epoch, LoopHooks.EpochEnd, "post-write")
         }
         .start()
       val dr = new ReplayingDrain(() => startQ(), crash)
@@ -3507,10 +3425,10 @@ object Events {
     */
   def ingestClassifyMigrateCheck(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Classifier
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, String)]
-    val streamed = ingestClassify(spark, sfDir,
-      driftPosRateJump = Some(DriftPosRateJumpDefault),
-      labelShiftArrival2 = true, migrationProbe = Some(probe)).persist()
+    val hooks = new LoopHooks(meters = Set(LoopHooks.Migration))
+    val streamed = ingestClassify(spark, sfDir, driftPosRateJump = Some(DriftPosRateJumpDefault),
+      labelShiftArrival2 = true, hooks = hooks).persist()
+    val probe = hooks(LoopHooks.Migration)
     val oracleLap = graft.operators.Snapshot.incrLap()
     val shifted = classifyShiftedCorpus(Tables.documents(spark, sfDir))
     val freshModel = Classifier.fit(
@@ -3601,6 +3519,25 @@ object Events {
     */
   private[graft] val ChainBuckets = 32
 
+  /** The exact-dedup ingest queries' quality gate: docs with fewer
+    * tokens are dropped. ONE definition, interpolated into
+    * [[ingestDedupOracle]]. */
+  private val MinTokens = 10
+  /** The near-dup check twins' recall floor (banding math: ≥0.95
+    * expected per pair at j=0.8 with 16×8 bands). */
+  private val NearDupRecallFloor = 0.9
+  /** The ANN loop's query side: top-k, and probed cells one notch up
+    * because the frozen quantizer never saw the later arrivals (the
+    * `ivf_incr` discipline). */
+  private val AnnK = 5
+  private val AnnNprobe = 8
+  /** The ANN check twins' recall floor: the `ivf_incr` floor at
+    * [[AnnNprobe]]. */
+  private val AnnRecallFloor = 0.7
+  /** Buckets a migration backfills per epoch: the 32 buckets take two
+    * epochs, a mid-stream migration, not a stop-the-world rebuild. */
+  private val MigrateBucketsPerEpoch = 16
+
   /** Staging knobs the retraction legs share between each loop, its
     * check twin and the batch-twin equality specs — a drifted copy
     * would silently decouple a check twin's live-corpus model from
@@ -3669,25 +3606,6 @@ object Events {
     * review: the final-epoch tombstones alone always sit above the
     * prefix bound, leaving that path unexercised). */
   private[graft] val EarlyRedeliveryRem = 3L
-
-  /** Replace-by-epoch append for the loops' spec probe buffers (first
-    * tuple element = epoch). A crash-replayed epoch re-runs its
-    * instrumentation, and a plain `+=` would record the replayed epoch
-    * twice — masked by `.toMap` in today's specs but a trap for any
-    * future assertion over buffer length or sums (ADVICE r13). The
-    * probes' own `count()` calls re-execute the counted plans; those
-    * are spec-only extra jobs, never part of the loop's work.
-    */
-  private[streaming] def probeAdd[T <: Product](buf: scala.collection.mutable.Buffer[T], entry: T): Unit = {
-    // keyed by the entry's first element (the epoch): crash replay
-    // re-delivers an epoch and must supersede its earlier entry, not
-    // duplicate it. In-place index update (the old filter+clear+rebuild
-    // churned the whole buffer per append); consumers read these as
-    // per-epoch maps, so replacement position is immaterial.
-    val ep = entry.productElement(0)
-    val i = buf.indexWhere(_.productElement(0) == ep)
-    if (i >= 0) buf(i) = entry else buf += entry
-  }
 
   /** The ONE bucket function both the write and the probe sides share —
     * a drifted second copy would silently prune AWAY matching files. */
@@ -3775,19 +3693,9 @@ object Events {
     * `dataSchema` (the stored columns MINUS the partition dirs), when
     * the caller knows it — and a probe loop does, it WROTE the store —
     * skips per-probe footer inference entirely: no non-matching file is
-    * opened even at planning time. */
-  private[graft] def prunedChainScan(spark: SparkSession, dir: String, epoch: Long,
-                                     buckets: Seq[Int],
-                                     dataSchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
-    withChainPartitionCols(
-      dataSchema.fold(spark.read)(s => spark.read.schema(s)).parquet(dir),
-      "batch", "bucket")
-      .filter(col("batch") <= lit(epoch) && col("bucket").isin(buckets: _*))
-      .drop("batch", "bucket")
-
-  /** [[prunedChainScan]] KEEPING the `batch` column — the read shape a
-    * tombstoned chain needs (liveness compares row epoch vs tombstone
-    * epoch, so `batch` must survive until [[tombstoneResolvedRows]]). */
+    * opened even at planning time. The `batch` column is kept: a
+    * tombstoned chain's liveness compares row epoch vs tombstone epoch
+    * ([[tombstoneResolvedRows]]). */
   private[graft] def prunedChainRows(spark: SparkSession, dir: String, epoch: Long,
                                      buckets: Seq[Int],
                                      dataSchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
@@ -3827,19 +3735,6 @@ object Events {
   private[graft] final class StoredPostingsProbe(
       docsFor: DataFrame => DataFrame, resolvedPruned: Seq[Int] => DataFrame)
     extends graft.operators.Snapshot.PostingsProbe {
-    /** Over the chain at `byShingleDir`, its live rows up to `epoch`
-      * resolved through the caller's precomputed per-epoch tombstone
-      * aggregate — per-chunk re-derivation would re-read the tombstone
-      * chain once per bucket group (r12 review). */
-    def this(bss: SparkSession, docsFor: DataFrame => DataFrame,
-             byShingleDir: String, tombAgg: Option[DataFrame], epoch: Long,
-             dataSchema: StructType) =
-      this(docsFor, {
-        val dir = java.nio.file.Paths.get(byShingleDir)
-        val postings = Chain(dir.getFileName.toString, dataSchema, bucketBy = Some("s"))
-        val store = new ChainStore(dir.getParent, "doc_id", Seq(postings))
-        buckets => store.live(bss, postings, epoch, tombAgg, Some(buckets))
-      })
     private val chunks = scala.collection.mutable.ListBuffer.empty[DataFrame]
     private val covered = scala.collection.mutable.Set.empty[Int]
     def forDocs(frontier: DataFrame): DataFrame =
@@ -4028,7 +3923,7 @@ object Events {
     }
 
   /** The crash-safe snapshot swap shared by [[compactDeltaChain]] and
-    * [[compactTombstonedChain]]: materialize `snapshot` into a hidden
+    * [[compactTombstonedChains]]: materialize `snapshot` into a hidden
     * tmp dir (forcing the read of every delta it replaces), stamp the
     * target-epoch marker, atomically swap it into `batch=maxEpoch`'s
     * place, then prune the consumed older deltas. Crash states are
@@ -4107,27 +4002,16 @@ object Events {
     * exist while the stream is quiesced, the normal compaction window)
     * are preserved verbatim.
     *
-    * This single-chain form is ONLY for a chain with a DEDICATED
-    * tombstone dir: pruning consumes the tombstones, so a store whose
-    * chains SHARE one tombstone dir must compact them together through
-    * [[compactTombstonedChains]] — see its doc for the failure mode.
-    */
-  def compactTombstonedChain(spark: SparkSession, dir: String, tombstoneDir: String,
-                             keyCol: String = "doc_id",
-                             partitionCols: Seq[String] = Nil): Unit =
-    compactTombstonedChains(spark, Seq(dir), tombstoneDir, keyCol, _ => partitionCols)
-
-  /** The multi-chain form of [[compactTombstonedChain]] — and the ONLY
-    * correct call for a store where SEVERAL data chains resolve against
-    * one shared tombstone dir, as [[streamIncrementalClean]]'s does
-    * (corpus, postings AND manifest all consult the same re-delivery
-    * tombstones): `dirs` must list EVERY such chain. Compacting one
-    * chain alone would consume tombstones its siblings still need —
-    * their stale rows would silently resurface (and a follow-up
-    * compaction would bake them into a permanent base). Here the
-    * tombstones are pruned only after every listed chain has swapped in
-    * its resolved base, and only up to the SMALLEST compacted epoch, so
-    * a lagging chain's unconsumed tombstones survive verbatim.
+    * `dirs` must list EVERY data chain that resolves against
+    * `tombstoneDir`, as in [[streamIncrementalClean]]'s store (corpus,
+    * postings AND manifest all consult the same re-delivery
+    * tombstones). Compacting one chain alone would consume tombstones
+    * its siblings still need — their stale rows would silently
+    * resurface (and a follow-up compaction would bake them into a
+    * permanent base). Here the tombstones are pruned only after every
+    * listed chain has swapped in its resolved base, and only up to the
+    * SMALLEST compacted epoch, so a lagging chain's unconsumed
+    * tombstones survive verbatim.
     */
   def compactTombstonedChains(spark: SparkSession, dirs: Seq[String], tombstoneDir: String,
                               keyCol: String = "doc_id",
@@ -4147,7 +4031,7 @@ object Events {
         // bucket). Compacting a bucketed chain WITHOUT it would not just
         // lose file skipping — it BREAKS the production probes: the
         // flattened base stores `bucket` as a plain data column, and
-        // prunedChainRows/prunedChainScan read with an explicit
+        // prunedChainRows reads with an explicit
         // dataSchema that excludes it, so col("bucket") no longer
         // resolves and the probe's next read throws (ADVICE r11). Safe
         // by construction: when the caller names nothing, detect the
@@ -4181,44 +4065,21 @@ object Events {
     }
   }
 
-  /** [[ChainStore.latestCommitted]] over a ledger and a manifest dir —
-    * the commit gate of [[streamIncrementalClean]]'s store, whose
-    * manifest and (last-written) ledger both commit an epoch. */
-  private[graft] def latestCommittedBelow(ledgerDir: String, manifestDir: String,
-                                          epoch: Long): Option[Long] =
-    ChainStore.latestCommitted(Seq(ledgerDir, manifestDir), epoch)
-
   /** Merge-on-read resolution of a tombstoned delta chain: a `batch=p`
-    * row is live iff p ≥ its key's max tombstone epoch (the tombstone
-    * aggregate is delta-sized — re-deliveries/removals only — hence
-    * broadcast; the chain scan itself never shuffles). `upTo` bounds
-    * BOTH the rows and the tombstones to epochs ≤ it (partition-pruned).
-    * This is the ONE copy of the predicate — the streaming reader and
-    * the compactor both resolve through it; a second copy would let an
-    * edit silently decouple the stream's view from the materialized
-    * base. A tombstone dir without `batch=` children (never written, or
-    * fully consumed by compaction) means no tombstones.
-    */
-  private[graft] def tombstoneResolved(spark: SparkSession, dir: String,
-                                       tombstoneDir: String, keyCol: String = "doc_id",
-                                       upTo: Option[Long] = None,
-                                       dataSchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    // dataSchema: loop readers over chains that may hold zero-file
-    // committed epochs (empty deltas) pass the stored schema so
-    // inference never has to open a footer; the partition-col guard
-    // covers the all-zero-file chain (see withChainPartitionCols)
-    val scan = withChainPartitionCols(
-      dataSchema.fold(spark.read)(s => spark.read.schema(s)).parquet(dir), "batch")
-    val rows = upTo.fold(scan)(e => scan.filter(col("batch") <= lit(e)))
-    tombstoneResolvedRows(spark, rows, tombstoneDir, keyCol, upTo)
-  }
-
-  /** [[tombstoneResolved]] over a caller-supplied `rows` relation (must
-    * still carry the `batch` partition column, already epoch-bounded) —
-    * the form a bucket-PRUNED chain scan resolves through: pruning
-    * selects files, this predicate then decides per-row liveness, and
-    * the two compose because tombstones are keyed by doc, independent
-    * of which bucket a row lives in. `keepEpoch = true` retains the
+    * row of `rows` (which must still carry the `batch` partition column,
+    * already epoch-bounded) is live iff p ≥ its key's max tombstone
+    * epoch (the tombstone aggregate is delta-sized — re-deliveries and
+    * removals only — hence broadcast; the chain scan itself never
+    * shuffles). `upTo` bounds the tombstones to epochs ≤ it. This is
+    * the ONE copy of the predicate — the streaming reader and the
+    * compactor both resolve through it; a second copy would let an edit
+    * silently decouple the stream's view from the materialized base. A
+    * tombstone dir without `batch=` children (never written, or fully
+    * consumed by compaction) means no tombstones. A bucket-PRUNED chain
+    * scan resolves through it too: pruning selects files, this
+    * predicate then decides per-row liveness, and the two compose
+    * because tombstones are keyed by doc, independent of which bucket a
+    * row lives in. `keepEpoch = true` retains the
     * `batch` column in the output — the read shape an LWW changelog
     * chain needs when it ALSO resolves tombstones (removal retractions
     * kill a doc's rows first, [[resolveLww]] then picks the newest
@@ -4394,14 +4255,14 @@ object Events {
   /** The incrementally-maintained dedup_exact relation over quality-
     * passing docs — arrival-order-free by construction. ONE definition
     * for the memory-sink verify twin AND the Update-mode delta-chain
-    * production twin: an edit to the gate (minTokens) in a lone copy
+    * production twin: an edit to the gate ([[MinTokens]]) in a lone copy
     * would silently decouple the pair.
     */
   private val ingestDedupOracle =
-    """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
+    s"""SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
       | count(*) AS n_arrivals
       |FROM documents
-      |WHERE len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) >= 10
+      |WHERE len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) >= $MinTokens
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** Decontaminated-ingest oracle, shared by the memory-sink and

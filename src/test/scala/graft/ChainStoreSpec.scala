@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import graft.streaming.{Chain, ChainStore, Events, GenerationalStore, Retirements, Roles}
+import graft.streaming.{Chain, ChainStore, Events, GenerationalStore, LoopHooks, Retirements,
+  Roles}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -152,6 +153,40 @@ class ChainStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("LoopHooks: an unrequested meter never runs, a replayed key supersedes, the crash fires once at its stage") {
+    val hooks = new LoopHooks(meters = Set(LoopHooks.DeltaRows, LoopHooks.GateInput),
+      crash = Some(LoopHooks.Crash(2L, LoopHooks.AfterStores)))
+    var evaluated = 0
+    hooks.record(LoopHooks.CellStatsInput, 0L) { evaluated += 1; 7L }
+    LoopHooks.none.record(LoopHooks.DeltaRows, 0L) { evaluated += 1; 7L }
+    assert(evaluated == 0, "an unrequested meter's value block ran")
+    assert(hooks(LoopHooks.CellStatsInput).isEmpty && LoopHooks.none(LoopHooks.DeltaRows).isEmpty)
+    // epoch 1 replays: its second entry replaces the first, in place
+    hooks.record(LoopHooks.DeltaRows, 0L)(10L)
+    hooks.record(LoopHooks.DeltaRows, 1L)(11L)
+    hooks.record(LoopHooks.DeltaRows, 2L)(12L)
+    hooks.record(LoopHooks.DeltaRows, 1L)(13L)
+    assert(hooks(LoopHooks.DeltaRows) == Seq((0L, 10L), (1L, 13L), (2L, 12L)))
+    // the gate meter keys on (epoch, generation): a replay supersedes
+    // its own generation's entry and no other
+    hooks.record(LoopHooks.GateInput, (3L, 1))(4L)
+    hooks.record(LoopHooks.GateInput, (3L, 2))(5L)
+    hooks.record(LoopHooks.GateInput, (3L, 2))(6L)
+    assert(hooks(LoopHooks.GateInput) == Seq(((3L, 1), 4L), ((3L, 2), 6L)))
+    // the crash point: only at its epoch and stage, with `when` holding,
+    // and only once per loop run
+    assert(!LoopHooks.none.crashPoint.configured)
+    val crash = hooks.crashPoint
+    assert(crash.configured)
+    crash.fire(1L, LoopHooks.AfterStores, "post-stores")
+    crash.fire(2L, LoopHooks.EpochEnd, "post-write")
+    crash.fire(2L, LoopHooks.AfterStores, "post-stores", when = false)
+    val e = intercept[RuntimeException](crash.fire(2L, LoopHooks.AfterStores, "post-stores"))
+    assert(e.getMessage == "injected post-stores crash at epoch 2")
+    crash.fire(2L, LoopHooks.AfterStores, "post-stores") // the replay runs through
+    intercept[RuntimeException](hooks.crashPoint.fire(2L, LoopHooks.AfterStores, "post-stores"))
+  }
+
   test("the snapshot prune keeps exactly the current epoch and its committed predecessor") {
     withDir { dir =>
       val hot = Chain("hot", schema, snapshot = true)
@@ -159,11 +194,11 @@ class ChainStoreSpec extends AnyFunSuite {
       (0L to 2L).foreach(e => epochDir(dir.resolve("ledger"), e, success = true))
       epochDir(dir.resolve("ledger"), 3, success = false) // torn: not a predecessor
       (0L to 4L).foreach(e => epochDir(dir.resolve("hot"), e, success = true))
-      val kept = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-      store.pruneSnapshots(4, Some(kept))
+      val hooks = new LoopHooks(meters = Set(LoopHooks.SnapshotDirs))
+      store.pruneSnapshots(4, hooks)
       assert(entries(dir.resolve("hot")) == Seq("batch=2", "batch=4"))
-      assert(kept == Seq((4L, Seq(2L, 4L))))
-      store.pruneSnapshots(4, Some(kept))
+      assert(hooks(LoopHooks.SnapshotDirs) == Seq((4L, Seq(2L, 4L))))
+      store.pruneSnapshots(4, hooks)
       assert(entries(dir.resolve("hot")) == Seq("batch=2", "batch=4"), "the prune is idempotent")
       assert(entries(dir.resolve("ledger")).size == 4, "delta chains are never pruned")
     }
@@ -198,7 +233,7 @@ class ChainStoreSpec extends AnyFunSuite {
         .sortBy(_.toString)
       val before = Seq(docs, index, verdict).map(read)
       assert(before(0).size == 20 && before(2).size == 20)
-      assert(store.compact(spark, 3, 3))
+      assert(store.compact(spark, 3, new LoopHooks(compactEvery = 3)))
       Seq(docs, index, verdict).foreach(c => assert(entries(dir.resolve(c.name)) == Seq("batch=2")))
       assert(Seq(docs, index, verdict).map(read) == before)
       // bucketed chains keep `bucket=` dirs whose rows hash to them; the

@@ -93,6 +93,49 @@ class EntrySpec extends AnyFunSuite {
         s"documented but unread: ${(documented -- found).toSeq.sorted.mkString(", ")}")
   }
 
+  test("streaming loop signatures carry no spec hooks: no def parameter list names mutable.Buffer or crashAt") {
+    // Probe buffers and crash points travel in one LoopHooks value; a
+    // def whose parameter lists name a mutable.Buffer or a crashAt*
+    // option threads a spec hook through a production signature again.
+    // Bracket-aware over every type and value parameter list of a def.
+    import scala.jdk.CollectionConverters._
+    val defName = """\bdef\s+[\w$]+""".r
+    def skipWs(src: String, i: Int): Int =
+      if (i < src.length && src(i).isWhitespace) skipWs(src, i + 1) else i
+    def closing(src: String, open: Int): Int = {
+      var depth = 0
+      var i = open
+      do {
+        src(i) match {
+          case '(' | '[' | '{' => depth += 1
+          case ')' | ']' | '}' => depth -= 1
+          case _ => ()
+        }
+        i += 1
+      } while (depth > 0 && i < src.length)
+      i
+    }
+    def paramLists(src: String, from: Int): String = {
+      val i = if (src.startsWith("[", from)) from else skipWs(src, from)
+      if (i < src.length && (src(i) == '(' || (i == from && src(i) == '['))) {
+        val end = closing(src, i)
+        src.substring(i, end) + paramLists(src, end)
+      } else ""
+    }
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/streaming"))
+    val hooked =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted.flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f),
+          java.nio.charset.StandardCharsets.UTF_8)
+        defName.findAllMatchIn(src).collect {
+          case m if Seq("mutable.Buffer", "crashAt").exists(paramLists(src, m.end).contains) =>
+            s"$f:${src.substring(0, m.start).count(_ == '\n') + 1} ${m.matched}"
+        }
+      }
+      finally walk.close()
+    assert(hooked.isEmpty, s"spec hooks in streaming signatures: ${hooked.mkString(", ")}")
+  }
+
   test("no doc comment is orphaned: a /** block is never followed by another before a definition") {
     // Two doc blocks back to back leave the first attached to nothing:
     // scaladoc keeps only the block nearest the definition, so the

@@ -194,8 +194,8 @@ class PlanSpec extends AnyFunSuite {
       Seq((1L, "v0"), (2L, "w0")).toDF("doc_id", "s").write.parquet(s"$dir/chain/batch=0")
       Seq((1L, "v1")).toDF("doc_id", "s").write.parquet(s"$dir/chain/batch=1")
       Seq(Tuple1(1L)).toDF("doc_id").write.parquet(s"$dir/tomb/batch=1")
-      val resolved = graft.streaming.Events.tombstoneResolved(
-        spark, s"$dir/chain", s"$dir/tomb")
+      val resolved = graft.streaming.Events.tombstoneResolvedRows(
+        spark, spark.read.parquet(s"$dir/chain"), s"$dir/tomb")
       resolved.collect() // AQE finalizes the executed plan
       val plan = resolved.queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin"), s"no broadcast join:\n$plan")
@@ -276,17 +276,17 @@ class PlanSpec extends AnyFunSuite {
             "NOT A PARQUET FILE".getBytes)
         }
       }
-      val pruned = Events.prunedChainScan(spark, s"$dir/chain", 1L, Seq(2), Some(schema))
+      val pruned = Events.prunedChainRows(spark, s"$dir/chain", 1L, Seq(2), Some(schema))
       assert(pruned.collect().map(_.getLong(0)).toSet == Set(2L, 12L))
       // epoch bound alone must also file-skip: batch=2/bucket=2 is poison
-      val epochPruned = Events.prunedChainScan(spark, s"$dir/chain", 0L, Seq(2), Some(schema))
+      val epochPruned = Events.prunedChainRows(spark, s"$dir/chain", 0L, Seq(2), Some(schema))
       assert(epochPruned.collect().map(_.getLong(0)).toSet == Set(2L))
       // an empty delta reads NOTHING (empty In folds to false)
-      assert(Events.prunedChainScan(spark, s"$dir/chain", 1L, Nil, Some(schema)).isEmpty)
+      assert(Events.prunedChainRows(spark, s"$dir/chain", 1L, Nil, Some(schema)).isEmpty)
       // control: an UNpruned read does hit the poison — the corruption
       // is real, so the passes above certify actual file skipping
       intercept[Throwable] {
-        Events.prunedChainScan(spark, s"$dir/chain", 2L, (0 to 3), Some(schema)).collect()
+        Events.prunedChainRows(spark, s"$dir/chain", 2L, (0 to 3), Some(schema)).collect()
       }
     } finally {
       import scala.jdk.CollectionConverters._

@@ -222,7 +222,7 @@ class PropertySpec extends AnyFunSuite {
         // the duplicate-row corruption a mid-swap/mid-prune crash can
         // produce on a whole-row chain is invisible to a Set
         def resolved(dir: String): Seq[(Long, String)] =
-          graft.streaming.Events.tombstoneResolved(spark, dir, tomb)
+          graft.streaming.Events.tombstoneResolvedRows(spark, spark.read.parquet(dir), tomb)
             .select(col("doc_id"), col("s"))
             .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
         val truth = chains.map(d => d -> resolved(d)).toMap
@@ -238,7 +238,7 @@ class PropertySpec extends AnyFunSuite {
             // consumed duplicates the entry-point recovery must prune,
             // or the re-fold bakes every pre-fold row in twice
             val fold = graft.streaming.Events
-              .tombstoneResolved(spark, victim, tomb)
+              .tombstoneResolvedRows(spark, spark.read.parquet(victim), tomb)
               .select(col("doc_id"), col("s")).collect()
               .map(r => (r.getLong(0), r.getString(1))).toSeq
             val target = java.nio.file.Paths.get(s"$victim/batch=$maxE")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.Events
+import graft.streaming.{Chain, ChainStore, Events, LoopHooks}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -78,11 +78,11 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream_ingest_neardup converges to the batch minhash verdict") {
     import graft.operators.Dedup
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-    val fetchProbe = scala.collection.mutable.ListBuffer.empty[(Long, Long, Long)]
-    val streamed = Events.ingestNearDup(spark, TestSpark.sf, deltaProbe = Some(probe),
-      priorFetchProbe = Some(fetchProbe))
+    val hooks = new LoopHooks(meters = Set(LoopHooks.DeltaRows, LoopHooks.PriorFetch))
+    val streamed = Events.ingestNearDup(spark, TestSpark.sf, hooks = hooks)
       .collect().toSeq
+    val probe = hooks(LoopHooks.DeltaRows)
+    val fetchProbe = hooks(LoopHooks.PriorFetch)
     val docs = Tables.documents(spark, TestSpark.sf)
     val batch = Dedup.minhashNearDupVerdict(docs).collect().toSeq
     // arrival-order independence: the index-maintained stream must land
@@ -125,7 +125,7 @@ class StreamingSpec extends AnyFunSuite {
     // and the rows entering LWW are bounded by one row per requested id
     // per committed epoch (the old design pushed the ENTIRE chain —
     // ≥ corpus width — through the aggregate every epoch)
-    val fetches = fetchProbe.map(t => (t._1, (t._2, t._3))).toMap
+    val fetches = fetchProbe.toMap
     assert(fetches.keySet == Set(0L, 1L, 2L), s"fetch probe epochs: $fetchProbe")
     assert(fetches(0L) == ((0L, 0L)), s"bootstrap epoch fetched prior state: $fetchProbe")
     Seq(1L, 2L).foreach { e =>
@@ -141,12 +141,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream_ingest_ann equals the batch-maintained IVF index, appends only deltas") {
     import graft.operators.Similarity
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-    val statsProbe = scala.collection.mutable.ListBuffer.empty[(Long, Seq[(Int, Long)])]
-    val statsInputProbe = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-    val streamed = Events.ingestAnnIvf(spark, TestSpark.sf, deltaProbe = Some(probe),
-      cellStatsProbe = Some(statsProbe), cellStatsInputProbe = Some(statsInputProbe))
+    val hooks = new LoopHooks(
+      meters = Set(LoopHooks.DeltaRows, LoopHooks.CellStats, LoopHooks.CellStatsInput))
+    val streamed = Events.ingestAnnIvf(spark, TestSpark.sf, hooks = hooks)
       .collect().toSeq
+    val probe = hooks(LoopHooks.DeltaRows)
+    val statsProbe = hooks(LoopHooks.CellStats)
+    val statsInputProbe = hooks(LoopHooks.CellStatsInput)
     val emb = Tables.embeddings(spark, TestSpark.sf)
     val corpus = emb.filter(col("vec_id") >= Similarity.NumQueries)
     // the third arrival REMOVES the %17 vectors — the maintained index
@@ -220,10 +221,10 @@ class StreamingSpec extends AnyFunSuite {
     // and the drift monitor summed over the FOLDED stats chain must
     // still land on the one-shot live occupancy (a duplicate or lost
     // row in the fold shifts a sum)
-    val statsProbeC = scala.collection.mutable.ListBuffer.empty[(Long, Seq[(Int, Long)])]
-    val compacted = Events.ingestAnnIvf(spark, TestSpark.sf, compactEvery = 1,
-      cellStatsProbe = Some(statsProbeC))
+    val hooksC = new LoopHooks(meters = Set(LoopHooks.CellStats), compactEvery = 1)
+    val compacted = Events.ingestAnnIvf(spark, TestSpark.sf, hooks = hooksC)
       .collect().toSeq
+    val statsProbeC = hooksC(LoopHooks.CellStats)
     assert(compacted == batch, "per-epoch compaction changed the converged ANN result")
     assert(statsProbeC.toMap.apply(2L) == oneShot,
       "folded cellstats chain diverged from the one-shot live occupancy")
@@ -254,11 +255,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("IVF drift migration: the wave trips the monitor, the loop migrates mid-stream, cutover equals a fresh v2 build") {
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, String)]
+    val hooks = new LoopHooks(meters = Set(LoopHooks.Migration))
     val streamed = Events.ingestAnnIvf(spark, TestSpark.sf,
       driftMaxCellShare = Some(Events.DriftMaxCellShareDefault),
-      driftWaveArrival2 = true, migrationProbe = Some(probe)).collect().toSeq
-    val events = probe.sortBy(_._1)
+      driftWaveArrival2 = true, hooks = hooks).collect().toSeq
+    val events = hooks(LoopHooks.Migration).sortBy(_._1)
     // the monitor must stay quiet on the stable bootstrap and trip on
     // the wave epoch — then train v2 exactly once
     assert(!events.exists(e => e._1 == 0L && e._2.contains("trip")),
@@ -288,10 +289,10 @@ class StreamingSpec extends AnyFunSuite {
   test("IVF drift migration: stable arrivals never trip; the crash-replayed cutover epoch converges") {
     // falsifiability: monitor armed, staging UNdrifted — no trip, no
     // migration, the consumer keeps serving v1
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, String)]
+    val hooks = new LoopHooks(meters = Set(LoopHooks.Migration))
     val undrifted = Events.ingestAnnIvf(spark, TestSpark.sf,
-      driftMaxCellShare = Some(Events.DriftMaxCellShareDefault),
-      migrationProbe = Some(probe)).collect().toSeq
+      driftMaxCellShare = Some(Events.DriftMaxCellShareDefault), hooks = hooks).collect().toSeq
+    val probe = hooks(LoopHooks.Migration)
     assert(undrifted.nonEmpty)
     assert(probe.nonEmpty && !probe.exists(_._2.contains("trip")),
       s"a distribution-stable corpus tripped the monitor: $probe")
@@ -300,10 +301,27 @@ class StreamingSpec extends AnyFunSuite {
     // idempotent v2 delta — converging to the same fresh build
     val crashed = Events.ingestAnnIvf(spark, TestSpark.sf,
       driftMaxCellShare = Some(Events.DriftMaxCellShareDefault),
-      driftWaveArrival2 = true, crashAtEpoch = Some(2L)).collect().toSeq
+      driftWaveArrival2 = true, hooks = new LoopHooks(crash = Some(LoopHooks.Crash(2L))))
+      .collect().toSeq
     val (fresh, _) = migrateFreshBuild()
     assert(crashed.nonEmpty && crashed == fresh,
       "crash-replayed migration diverged from the fresh v2 build")
+  }
+
+  test("IVF drift migration survives a crash BETWEEN the concurrent store group and the stats write") {
+    // Epoch 2 = the removal + re-delivery epoch mid-migration: its
+    // group holds the tombstone, the assignment delta and the vector
+    // chain delta, all on disk when the crash fires; the committing
+    // stats write never ran. The replay must re-derive and overwrite
+    // each idempotently and converge to the same fresh v2 build as the
+    // end-of-epoch crash leg above.
+    val crashed = Events.ingestAnnIvf(spark, TestSpark.sf,
+      driftMaxCellShare = Some(Events.DriftMaxCellShareDefault), driftWaveArrival2 = true,
+      hooks = new LoopHooks(crash = Some(LoopHooks.Crash(2L, LoopHooks.AfterStores))))
+      .collect().toSeq
+    val (fresh, _) = migrateFreshBuild()
+    assert(crashed.nonEmpty && crashed == fresh,
+      "post-stores crash replay of the migration diverged from the fresh v2 build")
   }
 
   test("IVF drift migration is REPEATABLE: a second wave drives v2→v3, drained generations retire, the gate reads scalar chains") {
@@ -317,15 +335,14 @@ class StreamingSpec extends AnyFunSuite {
     // compaction cadence; the completeness gate must read only the
     // additive stats chains (scalar rows), never the corpus-width
     // vector/assign chains.
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, String)]
-    val gate = scala.collection.mutable.ListBuffer.empty[(Long, Int, Long)]
-    val gens = scala.collection.mutable.ListBuffer.empty[(Long, Seq[Int])]
+    val hooks = new LoopHooks(compactEvery = 1,
+      meters = Set(LoopHooks.Migration, LoopHooks.GateInput, LoopHooks.Generations))
     val streamed = Events.ingestAnnIvf(spark, TestSpark.sf,
       driftMaxCellShare = Some(Events.DriftMaxCellShareDefault),
-      driftWaveArrival2 = true, driftSecondWave = true, compactEvery = 1,
-      migrationProbe = Some(probe), gateInputProbe = Some(gate),
-      generationsProbe = Some(gens)).collect().toSeq
-    val events = probe.sortBy(_._1)
+      driftWaveArrival2 = true, driftSecondWave = true, hooks = hooks).collect().toSeq
+    val gate = hooks(LoopHooks.GateInput).map { case ((e, g), rows) => (e, g, rows) }
+    val gens = hooks(LoopHooks.Generations)
+    val events = hooks(LoopHooks.Migration).sortBy(_._1)
     // two trips at the two wave epochs — and ONLY there
     assert(events.exists(e => e._1 == 1L && e._2.contains("trip")) &&
       events.exists(e => e._1 == 3L && e._2.contains("trip")) &&
@@ -418,17 +435,16 @@ class StreamingSpec extends AnyFunSuite {
     // the stored feature chain in bucket-cursor chunks, cut over on the
     // scalar-chain completeness gate, re-arm, and retire the drained
     // generation on the compaction cadence.
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, String)]
-    val gate = scala.collection.mutable.ListBuffer.empty[(Long, Int, Long)]
-    val gens = scala.collection.mutable.ListBuffer.empty[(Long, Seq[Int])]
+    val hooks = new LoopHooks(compactEvery = 1,
+      meters = Set(LoopHooks.Migration, LoopHooks.GateInput, LoopHooks.Generations))
     val streamed = Events.ingestClassify(spark, TestSpark.sf,
       driftPosRateJump = Some(Events.DriftPosRateJumpDefault),
-      labelShiftArrival2 = true, compactEvery = 1,
-      migrationProbe = Some(probe), gateInputProbe = Some(gate),
-      generationsProbe = Some(gens))
+      labelShiftArrival2 = true, hooks = hooks)
       .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2),
         r.getDouble(3), r.getBoolean(4))).toSeq
-    val events = probe.sortBy(_._1)
+    val gate = hooks(LoopHooks.GateInput).map { case ((e, g), rows) => (e, g, rows) }
+    val gens = hooks(LoopHooks.Generations)
+    val events = hooks(LoopHooks.Migration).sortBy(_._1)
     // quiet at bootstrap, trip exactly once at the wave epoch — and the
     // trip epoch does NOT train (the re-label contract: the labeled
     // sample arrives in RESPONSE to the alarm)
@@ -475,12 +491,12 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Classifier
     // falsifiability: monitor armed, staging UNshifted — no trip, no
     // migration, the converged relation is still the batch twin's
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, String)]
+    val hooks = new LoopHooks(meters = Set(LoopHooks.Migration))
     val undrifted = Events.ingestClassify(spark, TestSpark.sf,
-      driftPosRateJump = Some(Events.DriftPosRateJumpDefault),
-      migrationProbe = Some(probe))
+      driftPosRateJump = Some(Events.DriftPosRateJumpDefault), hooks = hooks)
       .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2),
         r.getDouble(3), r.getBoolean(4))).toSeq
+    val probe = hooks(LoopHooks.Migration)
     assert(probe.nonEmpty && !probe.exists(_._2.contains("trip")),
       s"a distribution-stable corpus tripped the monitor: $probe")
     val batch = Classifier.classify(spark, TestSpark.sf)
@@ -492,11 +508,27 @@ class StreamingSpec extends AnyFunSuite {
     // re-lands its idempotent deltas — converging to the fresh build
     val crashed = Events.ingestClassify(spark, TestSpark.sf,
       driftPosRateJump = Some(Events.DriftPosRateJumpDefault),
-      labelShiftArrival2 = true, crashAtEpoch = Some(3L))
+      labelShiftArrival2 = true, hooks = new LoopHooks(crash = Some(LoopHooks.Crash(3L))))
       .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2),
         r.getDouble(3), r.getBoolean(4))).toSeq
     assertClassifyEquals(crashed, classifyMigrateFreshBuild(),
       "crash-replayed migration vs fresh g2")
+  }
+
+  test("classifier drift migration survives a crash BETWEEN the concurrent store group and the score write") {
+    // Epoch 2 = the re-label arrival: it re-delivers live docs, so its
+    // group holds a non-empty tombstone beside the feature chain delta,
+    // both on disk when the crash fires; generation 2 has not trained
+    // and the committing score write never ran. The replay must
+    // re-derive both, train generation 2 once and converge to the same
+    // fresh build as the end-of-epoch crash leg above.
+    val crashed = Events.ingestClassify(spark, TestSpark.sf,
+      driftPosRateJump = Some(Events.DriftPosRateJumpDefault), labelShiftArrival2 = true,
+      hooks = new LoopHooks(crash = Some(LoopHooks.Crash(2L, LoopHooks.AfterStores))))
+      .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2),
+        r.getDouble(3), r.getBoolean(4))).toSeq
+    assertClassifyEquals(crashed, classifyMigrateFreshBuild(),
+      "post-stores crash replay of the migration vs fresh g2")
   }
 
   test("classifier drift migration: a crash at the TRIP epoch replays idempotently over the durable migration marker") {
@@ -508,17 +540,17 @@ class StreamingSpec extends AnyFunSuite {
     // the trip check, so the marker is never re-written and no second
     // migration starts), its deltas overwrite idempotently, and the run
     // converges to the fresh generation-2 build like the uncrashed
-    // staging. The probe's epoch-1 entry is the REPLAY's (probeAdd
-    // supersedes): no "trip" token — the replay saw in-flight roles —
+    // staging. The meter's epoch-1 entry is the REPLAY's (a replayed
+    // key supersedes): no "trip" token — the replay saw in-flight roles —
     // but still awaiting-relabel, and the trip never re-fires later.
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, String)]
+    val hooks = new LoopHooks(meters = Set(LoopHooks.Migration),
+      crash = Some(LoopHooks.Crash(1L)))
     val crashed = Events.ingestClassify(spark, TestSpark.sf,
       driftPosRateJump = Some(Events.DriftPosRateJumpDefault),
-      labelShiftArrival2 = true, crashAtEpoch = Some(1L),
-      migrationProbe = Some(probe))
+      labelShiftArrival2 = true, hooks = hooks)
       .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2),
         r.getDouble(3), r.getBoolean(4))).toSeq
-    val events = probe.sortBy(_._1)
+    val events = hooks(LoopHooks.Migration).sortBy(_._1)
     assert(events.exists(e => e._1 == 1L && e._2.contains("awaiting-relabel")),
       s"replayed trip epoch did not wait for the re-label arrival: $events")
     assert(!events.exists(e => e._1 > 1L && e._2.contains("trip")),
@@ -562,17 +594,16 @@ class StreamingSpec extends AnyFunSuite {
     // arrival, background-chunk the old corpus, cut over exactly once
     // more, and retire each drained generation on the compaction
     // cadence — all on the same code path as wave 1.
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, String)]
-    val gate = scala.collection.mutable.ListBuffer.empty[(Long, Int, Long)]
-    val gens = scala.collection.mutable.ListBuffer.empty[(Long, Seq[Int])]
+    val hooks = new LoopHooks(compactEvery = 1,
+      meters = Set(LoopHooks.Migration, LoopHooks.GateInput, LoopHooks.Generations))
     val streamed = Events.ingestClassify(spark, TestSpark.sf,
       driftPosRateJump = Some(Events.DriftPosRateJumpDefault),
-      labelShiftArrival2 = true, labelSecondWave = true, compactEvery = 1,
-      migrationProbe = Some(probe), gateInputProbe = Some(gate),
-      generationsProbe = Some(gens))
+      labelShiftArrival2 = true, labelSecondWave = true, hooks = hooks)
       .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2),
         r.getDouble(3), r.getBoolean(4))).toSeq
-    val events = probe.sortBy(_._1)
+    val gate = hooks(LoopHooks.GateInput).map { case ((e, g), rows) => (e, g, rows) }
+    val gens = hooks(LoopHooks.Generations)
+    val events = hooks(LoopHooks.Migration).sortBy(_._1)
     // two trips at the two wave epochs — and ONLY there; each trip
     // epoch waits for its re-label arrival (the re-label contract)
     assert(events.exists(e => e._1 == 1L && e._2.contains("trip")) &&
@@ -636,7 +667,7 @@ class StreamingSpec extends AnyFunSuite {
     val e = intercept[Exception] {
       Events.ingestClassify(spark, TestSpark.sf,
         driftPosRateJump = Some(Events.DriftPosRateJumpDefault),
-        storeTamper = Some(tamper))
+        hooks = new LoopHooks(tamper = tamper))
     }
     def causes(t: Throwable, seen: Set[Throwable] = Set.empty): List[Throwable] =
       if (t == null || seen(t)) Nil else t :: causes(t.getCause, seen + t)
@@ -864,7 +895,8 @@ class StreamingSpec extends AnyFunSuite {
     // Epoch 2 = the removal epoch (retirement + blast radius — the
     // epoch where all THREE group members are live).
     val got = Events.ingestNearDup(spark, TestSpark.sf,
-      crashAfterStores = Some(2L)).collect().toSeq
+      hooks = new LoopHooks(crash = Some(LoopHooks.Crash(2L, LoopHooks.AfterStores))))
+      .collect().toSeq
     val want = graft.operators.Dedup.minhashNearDupVerdict(
       Tables.documents(spark, TestSpark.sf)).collect().toSeq
     assert(got.nonEmpty && got == want,
@@ -916,10 +948,11 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream_ingest_classify converges to the batch-trained scoring, appends only deltas") {
     import graft.operators.Classifier
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, Long, Long)]
-    val streamed = Events.ingestClassify(spark, TestSpark.sf, deltaProbe = Some(probe))
+    val hooks = new LoopHooks(meters = Set(LoopHooks.ScoreDelta))
+    val streamed = Events.ingestClassify(spark, TestSpark.sf, hooks = hooks)
       .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2),
         r.getDouble(3), r.getBoolean(4))).toSeq
+    val probe = hooks(LoopHooks.ScoreDelta).map { case (e, (rows, pos)) => (e, rows, pos) }
     // batch twin: the trainer's train split IS the first arrival
     // (doc_id % 5 != 0), so classify()'s model is the stream's frozen
     // model up to treeAggregate combine order (~1e-12 on weights) —
@@ -974,7 +1007,8 @@ class StreamingSpec extends AnyFunSuite {
     // in-stream compaction every epoch (r13: score chain folded
     // tombstone-resolved, bucket layout preserved) must not perturb
     // the converged relation — probs at the refit tolerance
-    val compacted = Events.ingestClassify(spark, TestSpark.sf, compactEvery = 1)
+    val compacted = Events.ingestClassify(spark, TestSpark.sf,
+      hooks = new LoopHooks(compactEvery = 1))
       .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2),
         r.getDouble(3), r.getBoolean(4))).toSeq
     assert(compacted.size == batch.size, "per-epoch compaction changed the row count")
@@ -998,12 +1032,13 @@ class StreamingSpec extends AnyFunSuite {
     // the equality therefore proves the crossing retractions restored
     // every verdict the flood perturbed.
     import graft.operators.Dedup
-    val crossings = scala.collection.mutable.ListBuffer.empty[(Long, Long, Long)]
-    val hotProbe = scala.collection.mutable.ListBuffer.empty[(Long, Seq[Long])]
+    val hooks = new LoopHooks(compactEvery = 1,
+      meters = Set(LoopHooks.CapCrossings, LoopHooks.SnapshotDirs))
     val streamed = Events.ingestNearDup(spark, TestSpark.sf,
-      maxBandDf = Some(Dedup.BandCapDf), compactEvery = 1,
-      capCrossingsProbe = Some(crossings), hotDirsProbe = Some(hotProbe))
+      maxBandDf = Some(Dedup.BandCapDf), hooks = hooks)
       .collect().toSeq
+    val crossings = hooks(LoopHooks.CapCrossings)
+    val hotProbe = hooks(LoopHooks.SnapshotDirs)
     // ckptOut: release the capped twin's pair checkpoint once
     // collected — spec suites call this repeatedly (ADVICE r16)
     val twinCkpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
@@ -1016,7 +1051,7 @@ class StreamingSpec extends AnyFunSuite {
     // non-vacuity meters: the cap must actually CROSS, both ways, at
     // post-bootstrap epochs — otherwise this leg proves only that the
     // hot plumbing is inert
-    val byEpoch = crossings.map(c => c._1 -> ((c._2, c._3))).toMap
+    val byEpoch = crossings.toMap
     assert(byEpoch.getOrElse(1L, (0L, 0L))._1 >= 1,
       s"no up-crossing at the flood-topping epoch: $crossings")
     assert(byEpoch.getOrElse(2L, (0L, 0L))._2 >= 1,
@@ -1090,7 +1125,8 @@ class StreamingSpec extends AnyFunSuite {
     // idempotently, converging to the identical capped batch truth.
     import graft.operators.Dedup
     val streamed = Events.ingestNearDup(spark, TestSpark.sf,
-      maxBandDf = Some(Dedup.BandCapDf), crashAtEpoch = Some(1L)).collect().toSeq
+      maxBandDf = Some(Dedup.BandCapDf), hooks = new LoopHooks(crash = Some(LoopHooks.Crash(1L))))
+      .collect().toSeq
     // ckptOut: release the capped twin's pair checkpoint once collected
     // (ADVICE r16 — same as the suite's other capped twin calls)
     val twinCkpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
@@ -1121,10 +1157,11 @@ class StreamingSpec extends AnyFunSuite {
       val part = new java.io.File(stage).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
       java.nio.file.Files.move(part.toPath, dir.resolve("documents.parquet"))
-      val probe = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-      val got = Events.ingestNearDup(spark, dir.toString, deltaProbe = Some(probe))
+      val hooks = new LoopHooks(meters = Set(LoopHooks.DeltaRows))
+      val got = Events.ingestNearDup(spark, dir.toString, hooks = hooks)
         .collect().map(r => (r.getLong(0), r.getBoolean(1),
           if (r.isNullAt(2)) -1L else r.getLong(2))).toSeq
+      val probe = hooks(LoopHooks.DeltaRows)
       // final state: 11 is a dup of 5 (jaccard 1.0), everything else
       // kept — including doc 3, whose shadow partner (-4, the staged
       // %20==3 negative-id duplicate) was removed in epoch 2, forcing
@@ -1145,7 +1182,8 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == batch)
       // in-stream compaction every epoch (the swap machinery firing
       // BETWEEN micro-batches) must not perturb a single verdict
-      val compacted = Events.ingestNearDup(spark, dir.toString, compactEvery = 1)
+      val compacted = Events.ingestNearDup(spark, dir.toString,
+        hooks = new LoopHooks(compactEvery = 1))
         .collect().map(r => (r.getLong(0), r.getBoolean(1),
           if (r.isNullAt(2)) -1L else r.getLong(2))).toSeq
       assert(compacted == batch, "per-epoch compaction changed the converged verdicts")
@@ -1161,7 +1199,7 @@ class StreamingSpec extends AnyFunSuite {
     // stage each chain exactly as its loop writes it (same bucket
     // function, same layout), poison every bucket a one-id lookup does
     // not need, and prove the pruned read never opens them while an
-    // unpruned control read fails — the prunedChainScan contract,
+    // unpruned control read fails — the prunedChainRows contract,
     // pinned on THESE stores' shapes
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_bucket_proof")
@@ -1189,7 +1227,7 @@ class StreamingSpec extends AnyFunSuite {
             !need.contains(d.getName.stripPrefix("bucket=").toInt))
           .foreach(d => java.nio.file.Files.write(
             d.toPath.resolve("part-poison.parquet"), "NOT PARQUET".getBytes))
-        val got = Events.prunedChainScan(spark, s"$dir/$sub", 0L, need.toSeq, Some(schema))
+        val got = Events.prunedChainRows(spark, s"$dir/$sub", 0L, need.toSeq, Some(schema))
           .filter(col(keyCol) === lit(id)).collect()
         assert(got.length == 1, s"$sub point lookup lost the row")
         intercept[Throwable] {
@@ -1279,7 +1317,9 @@ class StreamingSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StringType)))
     val dir = java.nio.file.Files.createTempDirectory("graft_zerofile_chain")
     try {
-      val chain = s"$dir/chain"; val tomb = s"$dir/tomb"
+      val chain = s"$dir/chain"; val tomb = s"$dir/tombstones"
+      val chainC = Chain("chain", schema, bucketBy = Some("doc_id"))
+      val store = new ChainStore(dir, "doc_id", Seq(chainC))
       // two committed epochs, both zero-file: an empty bucketed write
       // (the loops' empty-delta shape) and an empty plain write
       Seq.empty[(Long, String)].toDF("doc_id", "v")
@@ -1289,12 +1329,11 @@ class StreamingSpec extends AnyFunSuite {
       // a TORN tombstone write: the dir exists, no committed files
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$tomb/batch=0"))
       assert(Events.prunedChainRows(spark, chain, 1L, Seq(0, 1), Some(schema)).isEmpty)
-      assert(Events.prunedChainScan(spark, chain, 1L, Seq(0, 1), Some(schema)).isEmpty)
+      assert(store.live(spark, chainC, 1L, None, Some(Seq(0, 1))).isEmpty)
       val agg = Events.tombstoneAggregate(spark, tomb, upTo = Some(0L))
       assert(agg.isDefined && agg.get.isEmpty,
         "torn tombstone dir must aggregate to empty, not fail analysis")
-      assert(Events.tombstoneResolved(spark, chain, tomb,
-        upTo = Some(1L), dataSchema = Some(schema)).isEmpty)
+      assert(store.resolved(spark, chainC, Some(1L)).isEmpty)
       // both compaction entry points must no-op, not throw
       Events.compactDeltaChain(spark, chain, Seq("doc_id"), Some(1L), Nil, Some(schema))
       Events.compactTombstonedChains(spark, Seq(chain), tomb,
@@ -1487,9 +1526,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("decontam delta-chain sink resolves to the complete-mode decontam relation") {
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-    val fromFiles = Events.ingestDecontamToFiles(spark, TestSpark.sf, deltaProbe = Some(probe))
+    val hooks = new LoopHooks(meters = Set(LoopHooks.DeltaRows))
+    val fromFiles = Events.ingestDecontamToFiles(spark, TestSpark.sf, hooks)
       .collect().toSeq
+    val probe = hooks(LoopHooks.DeltaRows)
     val complete = Events.ingestDecontam(spark, TestSpark.sf).collect().toSeq
     assert(fromFiles.nonEmpty && fromFiles == complete)
     // the second arrival's delta emits only its own keys — strictly
@@ -1551,9 +1591,10 @@ class StreamingSpec extends AnyFunSuite {
   test("update-mode delta-chain sink resolves to the complete-mode dedup relation") {
     // the production twin: per-batch foreachBatch deltas + last-write-wins
     // read-back must equal the memory-sink Complete-mode verify relation
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-    val fromFiles = Events.ingestDedupToFiles(spark, TestSpark.sf, deltaProbe = Some(probe))
+    val hooks = new LoopHooks(meters = Set(LoopHooks.DeltaRows))
+    val fromFiles = Events.ingestDedupToFiles(spark, TestSpark.sf, hooks)
       .collect().toSeq
+    val probe = hooks(LoopHooks.DeltaRows)
     val complete = Events.ingestDedup(spark, TestSpark.sf).collect().toSeq
     assert(fromFiles == complete)
     // the scale property the Complete-mode sink lacks: the second
@@ -1618,7 +1659,7 @@ class StreamingSpec extends AnyFunSuite {
     // over the resolved relation — including a re-delivered doc whose
     // STALE epoch-0 text would (if tombstone resolution leaked) change
     // the closure; (B) non-matching bucket files must never be opened —
-    // poisoned-file proof, the prunedChainScan discipline.
+    // poisoned-file proof, the prunedChainRows discipline.
     import spark.implicits._
     import graft.operators.Snapshot
     val dir = java.nio.file.Files.createTempDirectory("graft_probe_spec")
@@ -1656,8 +1697,13 @@ class StreamingSpec extends AnyFunSuite {
       val seeds = Seq(7L).toDF("doc_id")
       val (cMem, eMem) = Snapshot.pairGraphClosure(seeds, resolved)
       val tombAgg = Events.tombstoneAggregate(spark, tomb, upTo = Some(1L))
-      val stored = new Events.StoredPostingsProbe(spark, docsFor, bySh, tombAgg, 1L,
-        resolved.schema)
+      // the loops' chunk function: the shingle-bucketed chain's live rows
+      // in the requested buckets, resolved through the epoch's aggregate
+      val byShChain = Chain("by_shingle", resolved.schema, bucketBy = Some("s"))
+      val byShStore = new ChainStore(dir, "doc_id", Seq(byShChain))
+      val chunk: Seq[Int] => org.apache.spark.sql.DataFrame =
+        b => byShStore.live(spark, byShChain, 1L, tombAgg, Some(b))
+      val stored = new Events.StoredPostingsProbe(docsFor, chunk)
       val (cSt, eSt) = Snapshot.pairGraphClosure(seeds, stored, 25)
       val memSet = cMem.collect().map(_.getLong(0)).toSet
       val stSet = cSt.collect().map(_.getLong(0)).toSet
@@ -1683,8 +1729,7 @@ class StreamingSpec extends AnyFunSuite {
           .foreach(d => java.nio.file.Files.write(
             d.toPath.resolve("part-poison.parquet"), "NOT PARQUET".getBytes))
       poison(corpus, needDoc); poison(bySh, needSh)
-      val probe2 = new Events.StoredPostingsProbe(spark, docsFor, bySh, tombAgg, 1L,
-        resolved.schema)
+      val probe2 = new Events.StoredPostingsProbe(docsFor, chunk)
       val fp = probe2.forDocs(Seq(7L).toDF("doc_id")).persist()
       assert(fp.select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSeq == Seq(7L))
       assert(probe2.forShinglesOf(fp).collect().nonEmpty) // reads only needed buckets
@@ -1717,12 +1762,12 @@ class StreamingSpec extends AnyFunSuite {
       delta(Seq((1L, "a0", 0), (2L, "b0-stale", 1)), 0)
       delta(Seq((2L, "b1", 1), (3L, "c1", 0)), 1) // re-delivers doc 2
       Seq(2L).toDF("doc_id").write.parquet(s"$tomb/batch=1")
-      def resolved() = Events.tombstoneResolved(spark, chain, tomb)
+      def resolved() = Events.tombstoneResolvedRows(spark, spark.read.parquet(chain), tomb)
         .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
       val want = Set((1L, "a0", 0), (2L, "b1", 1), (3L, "c1", 0))
       assert(resolved() == want, "staging wrong")
-      Events.compactTombstonedChain(spark, chain, tomb,
-        partitionCols = Seq("bucket"))
+      Events.compactTombstonedChains(spark, Seq(chain), tomb,
+        partitionColsFor = _ => Seq("bucket"))
       assert(resolved() == want, "compaction changed the resolved relation")
       val root = new java.io.File(chain)
       val batchDirs = root.listFiles().filter(_.getName.startsWith("batch=")).map(_.getName).toSet
@@ -1738,7 +1783,7 @@ class StreamingSpec extends AnyFunSuite {
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("payload", org.apache.spark.sql.types.StringType)))
-      val got = Events.prunedChainScan(spark, chain, 1L, Seq(0), Some(schema))
+      val got = Events.prunedChainRows(spark, chain, 1L, Seq(0), Some(schema))
         .collect().map(_.getLong(0)).toSet
       assert(got == Set(1L, 3L))
       // ADVICE r11: a DEFAULT-ARG maintenance compaction (caller names no
@@ -1749,7 +1794,7 @@ class StreamingSpec extends AnyFunSuite {
       // the compactor has work, then compact with NO partitionCols.
       java.nio.file.Files.delete(java.nio.file.Paths.get(s"$chain/batch=1/bucket=1/poison.parquet"))
       delta(Seq((4L, "d2", 1)), 2)
-      Events.compactTombstonedChain(spark, chain, tomb)
+      Events.compactTombstonedChains(spark, Seq(chain), tomb)
       val want2 = want + ((4L, "d2", 1))
       assert(resolved() == want2, "default-arg compaction changed the resolved relation")
       assert(new java.io.File(root, "batch=2").listFiles()
@@ -1758,7 +1803,7 @@ class StreamingSpec extends AnyFunSuite {
       // and the explicit-schema pruned probe still RESOLVES and skips
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$chain/batch=2/bucket=1/poison.parquet"),
         "NOT PARQUET".getBytes)
-      val got2 = Events.prunedChainScan(spark, chain, 2L, Seq(0), Some(schema))
+      val got2 = Events.prunedChainRows(spark, chain, 2L, Seq(0), Some(schema))
         .collect().map(_.getLong(0)).toSet
       assert(got2 == Set(1L, 3L))
     } finally {
@@ -1800,7 +1845,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(dirs(new java.io.File(root, "batch=1")) == Set("bucket=0", "bucket=1"),
         "compacted base lost its bucket layout")
       // and the pruned probe still file-skips over the compacted chain
-      val probed = Events.prunedChainScan(spark, sink.toString, 2L, Seq(0))
+      val probed = Events.prunedChainRows(spark, sink.toString, 2L, Seq(0))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(probed == Set((1L, 10L), (3L, 30L)))
     } finally {
@@ -1850,7 +1895,7 @@ class StreamingSpec extends AnyFunSuite {
     // The store shape streamIncrementalClean keeps corpus/postings state
     // in: whole-row-group deltas (many rows per doc) + a tombstone chain
     // marking superseded doc versions — per-key LWW doesn't apply, so
-    // this is compactTombstonedChain's own contract: resolution
+    // this is compactTombstonedChains' own contract: resolution
     // identical before/after, one base dir left, tombstones consumed.
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_tchain")
@@ -1878,7 +1923,7 @@ class StreamingSpec extends AnyFunSuite {
           .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       }
       assert(resolved() == want, "test chain staged wrong")
-      Events.compactTombstonedChain(spark, dir.toString, tomb.toString)
+      Events.compactTombstonedChains(spark, Seq(dir.toString), tomb.toString)
       def dirs(p: java.nio.file.Path) = Option(new java.io.File(p.toString).listFiles())
         .map(_.filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).toSet)
         .getOrElse(Set.empty[String])
@@ -1886,7 +1931,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(dirs(dir) == Set("batch=1"), s"older deltas must be pruned: ${dirs(dir)}")
       assert(dirs(tomb).isEmpty, s"consumed tombstones must be pruned: ${dirs(tomb)}")
       // idempotent on a consumed chain (empty tombstone dir ≡ none)
-      Events.compactTombstonedChain(spark, dir.toString, tomb.toString)
+      Events.compactTombstonedChains(spark, Seq(dir.toString), tomb.toString)
       assert(resolved() == want && dirs(dir) == Set("batch=1"))
       // stream resumes: epoch 2 re-delivers doc 2 and tombstones it; a
       // second compaction folds the late delta exactly
@@ -1894,7 +1939,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq(Tuple1(2L)).toDF("doc_id").write.parquet(s"$tomb/batch=2")
       val want2 = want - ((2L, "bb")) + ((2L, "b2")) + ((4L, "dd"))
       assert(resolved() == want2, "post-compaction delta must supersede the base")
-      Events.compactTombstonedChain(spark, dir.toString, tomb.toString)
+      Events.compactTombstonedChains(spark, Seq(dir.toString), tomb.toString)
       assert(resolved() == want2 && dirs(dir) == Set("batch=2") && dirs(tomb).isEmpty)
     } finally {
       import scala.jdk.CollectionConverters._
@@ -1905,7 +1950,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("commit gate skips every crash state: torn ledger, missing manifest, own epoch") {
-    // latestCommittedBelow is the replay gate of the clean-ledger store
+    // the commit gate is the replay gate of the clean-ledger store
     // (ADVICE r9): an epoch counts only when BOTH manifest and ledger
     // carry _SUCCESS, and the current (possibly replaying) epoch is
     // never its own predecessor. Stage every crash prefix directly.
@@ -1918,7 +1963,7 @@ class StreamingSpec extends AnyFunSuite {
         java.nio.file.Files.write(d.toPath.resolve("part-0.parquet"), Array[Byte](1))
         if (success) java.nio.file.Files.createFile(d.toPath.resolve("_SUCCESS"))
       }
-      def gate(epoch: Long) = Events.latestCommittedBelow(ledger, manifest, epoch)
+      def gate(epoch: Long) = ChainStore.latestCommitted(Seq(ledger, manifest), epoch)
       assert(gate(5L).isEmpty, "no store yet must mean no prior epoch")
       // epoch 0 fully committed
       stage(manifest, 0, success = true); stage(ledger, 0, success = true)
@@ -1966,7 +2011,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq((1L, "b-new1"), (1L, "b-new2")).toDF("doc_id", "v").write.parquet(s"$b/batch=1")
       Seq(Tuple1(1L)).toDF("doc_id").write.parquet(s"$tomb/batch=1")
       def resolved(dir: java.nio.file.Path): Set[(Long, String)] =
-        Events.tombstoneResolved(spark, dir.toString, tomb.toString)
+        Events.tombstoneResolvedRows(spark, spark.read.parquet(dir.toString), tomb.toString)
           .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       val wantA = Set((1L, "a-new"), (2L, "a-b"))
       val wantB = Set((1L, "b-new1"), (1L, "b-new2"), (2L, "b-b"))
@@ -2124,9 +2169,10 @@ class StreamingSpec extends AnyFunSuite {
     val Rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     System.setProperty("graft.stateStore.providerClass", Rocks)
     try {
-      val probe = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-      val got = Events.ingestNearDup(spark, TestSpark.sf, compactEvery = 1,
-        deltaProbe = Some(probe), crashAtEpoch = Some(1L)).collect().toSeq
+      val hooks = new LoopHooks(meters = Set(LoopHooks.DeltaRows),
+        crash = Some(LoopHooks.Crash(1L)), compactEvery = 1)
+      val got = Events.ingestNearDup(spark, TestSpark.sf, hooks = hooks).collect().toSeq
+      val probe = hooks(LoopHooks.DeltaRows)
       val want = graft.operators.Dedup.minhashNearDupVerdict(
         Tables.documents(spark, TestSpark.sf)).collect().toSeq
       assert(got.nonEmpty && got == want,
@@ -2141,7 +2187,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("post-write crash replay converges on the ANN, classify and clean loops") {
-    // VERDICT r13 #3: the crashAtEpoch hook (throw at the worst replay
+    // VERDICT r13 #3: the EpochEnd crash point (throw at the worst replay
     // point — output present, streaming commit missing) existed only on
     // ingestNearDup; these legs pin the other three loops. Each run
     // crashes once, restarts on the SAME checkpoint (ReplayingDrain),
@@ -2161,16 +2207,16 @@ class StreamingSpec extends AnyFunSuite {
     // crash at epoch 2 — the removal + re-delivery epoch: tombstones,
     // the fresh assignment delta, the negative cellstats AND the
     // prefix-bounded compaction all land before the throw
-    val annGot = Events.ingestAnnIvf(spark, TestSpark.sf, compactEvery = 1,
-      crashAtEpoch = Some(2L)).collect().toSeq
+    val annGot = Events.ingestAnnIvf(spark, TestSpark.sf,
+      hooks = new LoopHooks(crash = Some(LoopHooks.Crash(2L)), compactEvery = 1)).collect().toSeq
     assert(annGot.nonEmpty && annGot == annBatch,
       "ANN loop diverged through a post-write crash replay")
 
     val clsBatch = Classifier.classify(spark, TestSpark.sf)
       .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2),
         r.getDouble(3), r.getBoolean(4))).toSeq
-    val clsGot = Events.ingestClassify(spark, TestSpark.sf, compactEvery = 1,
-      crashAtEpoch = Some(2L))
+    val clsGot = Events.ingestClassify(spark, TestSpark.sf,
+      hooks = new LoopHooks(crash = Some(LoopHooks.Crash(2L)), compactEvery = 1))
       .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2),
         r.getDouble(3), r.getBoolean(4))).toSeq
     assert(clsGot.nonEmpty && clsGot.size == clsBatch.size,
@@ -2184,7 +2230,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // the clean loop's crash is the two-marker window the verdict named:
     // the manifest delta's _SUCCESS is on disk, the ledger's is NOT —
-    // the one half-committed state latestCommittedBelow exists to skip.
+    // the one half-committed state the commit gate exists to skip.
     // The replayed epoch must resolve prior state from the last FULLY
     // committed epoch, rewrite its own manifest idempotently, and land
     // the ledger delta as if the crash never happened.
@@ -2194,7 +2240,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("doc_id"), col("n_tokens"), col("quality"), col("lang_pred"))
       .orderBy(col("doc_id")).collect().toSeq
     val cleanGot = Events.streamIncrementalClean(spark, TestSpark.sf,
-      compactEvery = 1, crashAtEpoch = Some(2L)).collect().toSeq
+      hooks = new LoopHooks(crash = Some(LoopHooks.Crash(2L)), compactEvery = 1)).collect().toSeq
     assert(cleanGot.nonEmpty && cleanGot == cleanBatch,
       "clean loop diverged through a manifest-committed/ledger-missing crash replay")
   }
@@ -2374,7 +2420,8 @@ class StreamingSpec extends AnyFunSuite {
     // identical capped batch truth
     import graft.operators.Corpus
     val streamed = Events.streamIncrementalClean(spark, TestSpark.sf,
-      crashAtEpoch = Some(1L), maxShingleDf = Some(Events.CleanCapDf)).collect().toSeq
+      maxShingleDf = Some(Events.CleanCapDf),
+      hooks = new LoopHooks(crash = Some(LoopHooks.Crash(1L)))).collect().toSeq
     val batch = Corpus.ledger(Tables.documents(spark, TestSpark.sf), Some(Events.CleanCapDf))
       .filter(col("doc_id") === col("cluster_id") && col("quality") >= 0.75)
       .select(col("doc_id"), col("n_tokens"), col("quality"), col("lang_pred"))
@@ -2393,10 +2440,10 @@ class StreamingSpec extends AnyFunSuite {
     // checkpoint commits — the chains survive that window via their
     // compacted base, a deleted snapshot would not).
     import graft.operators.Corpus
-    val hotProbe = scala.collection.mutable.ListBuffer.empty[(Long, Seq[Long])]
+    val hooks = new LoopHooks(meters = Set(LoopHooks.SnapshotDirs), compactEvery = 1)
     val streamed = Events.streamIncrementalClean(spark, TestSpark.sf,
-      compactEvery = 1, maxShingleDf = Some(Events.CleanCapDf),
-      hotDirsProbe = Some(hotProbe)).collect().toSeq
+      maxShingleDf = Some(Events.CleanCapDf), hooks = hooks).collect().toSeq
+    val hotProbe = hooks(LoopHooks.SnapshotDirs)
     val batchCapped = Corpus.ledger(Tables.documents(spark, TestSpark.sf),
       Some(Events.CleanCapDf))
       .filter(col("doc_id") === col("cluster_id") && col("quality") >= 0.75)
@@ -2413,11 +2460,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream_incremental_clean's maintained ledger converges to the batch clean gate") {
-    val probe = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-    val ledgerProbe = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-    val streamed = Events.streamIncrementalClean(spark, TestSpark.sf, epochProbe = Some(probe),
-      ledgerDeltaProbe = Some(ledgerProbe))
+    val hooks = new LoopHooks(meters = Set(LoopHooks.BatchRows, LoopHooks.LedgerDeltaRows))
+    val streamed = Events.streamIncrementalClean(spark, TestSpark.sf, hooks = hooks)
       .collect().toSeq
+    val probe = hooks(LoopHooks.BatchRows)
+    val ledgerProbe = hooks(LoopHooks.LedgerDeltaRows)
     // batch truth: the kept view of the from-scratch ledger over the
     // whole corpus (the same filter the stream's consumer view applies)
     val docs = Tables.documents(spark, TestSpark.sf)
@@ -2487,7 +2534,8 @@ class StreamingSpec extends AnyFunSuite {
     // bucket layouts auto-preserved) must not perturb a single row —
     // the swap machinery firing BETWEEN live micro-batches, over a
     // store that still carries un-consumed removal tombstones
-    val compacted = Events.streamIncrementalClean(spark, TestSpark.sf, compactEvery = 1)
+    val compacted = Events.streamIncrementalClean(spark, TestSpark.sf,
+      hooks = new LoopHooks(compactEvery = 1))
       .collect().toSeq
     assert(compacted == batch, "per-epoch compaction changed the converged ledger")
   }
