@@ -321,13 +321,6 @@ object Snapshot {
     * Per-round stage timing at DEBUG; the frontier-size counts run only
     * when DEBUG is on, so a default run starts no extra jobs.
     */
-  private[graft] def pairGraphClosure(seeds: DataFrame, postings: DataFrame,
-                                      maxRounds: Int): (DataFrame, Seq[DataFrame]) =
-    pairGraphClosure(seeds, InMemoryPostings(postings), maxRounds)
-
-  private[graft] def pairGraphClosure(seeds: DataFrame, postings: DataFrame): (DataFrame, Seq[DataFrame]) =
-    pairGraphClosure(seeds, InMemoryPostings(postings), 25)
-
   private[graft] def pairGraphClosure(seeds: DataFrame, postings: PostingsProbe,
                                       maxRounds: Int): (DataFrame, Seq[DataFrame]) = {
     val debug = log.isDebugEnabled
@@ -698,11 +691,12 @@ object Snapshot {
     recomputed.unionByName(carried)
   }
 
-  /** The CHANGELOG form of [[incrementalLedgerFromStoredState]]: only
-    * the rows the update actually RECOMPUTED — the delta's pair-graph
-    * closure — skipping the carried arm entirely. This is the write a
-    * ledger stored as a per-epoch delta chain appends (the
-    * merge-on-read changelog pattern of
+  /** The CHANGELOG form of [[incrementalLedgerFromStoredState]], with
+    * the checkpoint lifecycle CLOSED — what a continuously-running loop
+    * calls per epoch. It returns only the rows the update actually
+    * RECOMPUTED — the delta's pair-graph closure — skipping the carried
+    * arm entirely. This is the write a ledger stored as a per-epoch
+    * delta chain appends (the merge-on-read changelog pattern of
     * [[graft.streaming.Events.ingestDedupToFiles]]): per-epoch ledger
     * writes shrink from corpus-width to O(blast radius), and a reader
     * resolves last-write-wins per doc_id over the chain (one
@@ -712,45 +706,22 @@ object Snapshot {
     * from this relation but present in the prior chain, so
     * last-write-wins would resurface it — the caller must retract it
     * (tombstone or retraction row), using the removed ids its own
-    * manifest diff already knows, O(|delta|). Long-running loops call
-    * the lifecycle-closed [[incrementalLedgerDeltaCheckpointed]] —
-    * [[graft.streaming.Events.streamIncrementalClean]] consumes that
-    * per micro-batch.
-    */
-  def incrementalLedgerDeltaFromStoredState(prior: DataFrame, oldManifest: DataFrame,
-                                            newManifest: DataFrame, postings: DataFrame,
-                                            newDocs: DataFrame, maxRounds: Int = 25): DataFrame =
-    recomputedLedgerRows(prior, oldManifest, newManifest, postings, newDocs, maxRounds)._1
-
-  /** [[incrementalLedgerDeltaFromStoredState]] with the checkpoint
-    * lifecycle CLOSED — what a continuously-running loop calls per
-    * epoch. The raw delta form returns a LAZY relation that still reads
-    * the closure, the CC label set and the manifest-diff checkpoints,
-    * so its caller has nothing to release, and a long-running stream
-    * would pin another O(blast radius) of localCheckpoint blocks every
-    * epoch until a driver GC (the failure mode the ngramJaccard persist
-    * note documents). This form materializes the delta rows into ONE
-    * eager checkpoint, releases every intermediate block the
-    * computation pinned, and hands back that single relation — the
-    * caller consumes it (one write) and releases it with
-    * [[Corpus.releaseCheckpoint]]. Resident state per epoch: one
-    * delta-sized block set, not a growing chain.
+    * manifest diff already knows, O(|delta|).
+    *
+    * Lifecycle: the recomputed rows materialize into ONE eager
+    * checkpoint, every intermediate block the computation pinned (the
+    * closure, the CC label set, the manifest diff) is released, and
+    * that single relation comes back — the caller consumes it (one
+    * write) and releases it with [[Corpus.releaseCheckpoint]]. Resident
+    * state per epoch: one delta-sized block set, not a growing chain.
+    *
+    * The posting index arrives as a [[PostingsProbe]] (a stored probe
+    * reads only the buckets the closure's frontiers touch; an in-memory
+    * index is [[InMemoryPostings]]) and the corpus text as `docsFor` — a
+    * closure-ids → docs function, so the impl can prune the stored
+    * corpus scan to the closure's doc-id buckets before the semi gate
+    * instead of scanning every document's text per epoch.
     * [[graft.streaming.Events.streamIncrementalClean]] consumes this.
-    */
-  def incrementalLedgerDeltaCheckpointed(prior: DataFrame, oldManifest: DataFrame,
-                                         newManifest: DataFrame, postings: DataFrame,
-                                         newDocs: DataFrame, maxRounds: Int = 25): DataFrame =
-    incrementalLedgerDeltaCheckpointed(prior, oldManifest, newManifest,
-      InMemoryPostings(postings),
-      ids => newDocs.join(ids, Seq("doc_id"), "left_semi"), maxRounds)
-
-  /** The stored-state form of [[incrementalLedgerDeltaCheckpointed]]:
-    * the posting index arrives as a [[PostingsProbe]] (the closure
-    * reads only the buckets its frontiers touch) and the corpus text as
-    * `docsFor` — a closure-ids → docs function, so the impl can prune
-    * the stored corpus scan to the closure's doc-id buckets before the
-    * semi gate instead of scanning every document's text per epoch.
-    * The in-memory overload above passes the unpruned equivalents.
     */
   def incrementalLedgerDeltaCheckpointed(prior: DataFrame, oldManifest: DataFrame,
                                          newManifest: DataFrame, postings: PostingsProbe,

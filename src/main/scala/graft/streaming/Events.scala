@@ -30,6 +30,7 @@ case class SessionOut(user_id: Long, sid: Long, start_us: Long, end_us: Long,
   * O(stream).
   */
 object Events {
+  import ChainStore.{chainBucket, collectBuckets, deleteDirQuietly, readGenMarker, writeGenMarker}
 
   /** The harness diagnostics ([[detach]] timing, [[dumpProgress]]) log
     * at DEBUG here; they are off unless the `graft` loggers are. */
@@ -488,52 +489,6 @@ object Events {
     /** Terminal cleanup: progress dump + stop (the loops' `finally`). */
     def finish(name: String): Unit = { dumpProgress(name, q); q.stop() }
   }
-
-  /** Prune a per-epoch SNAPSHOT chain (the capped loops' hot_shingles /
-    * hot_bands dirs) on the compaction cadence: snapshots are not
-    * deltas — no resolution to fold, pruning is plain deletion — and
-    * exactly the epochs in `keep` survive: the just-committed epoch's
-    * snapshot (what every future epoch reads) and its committed
-    * PREDECESSOR's (what a replay of THIS epoch reads if the process
-    * dies after the prune but before the stream checkpoint commits —
-    * the delta chains survive that window via their compacted base, a
-    * deleted snapshot would not). Deletion is idempotent, so a crash
-    * mid-prune just retries. ONE definition for both capped loops
-    * (r16 review: the block had grown two verbatim copies). */
-  private[streaming] def pruneSnapshotChain(dir: String, keep: Set[Long], epoch: Long,
-                                            hooks: LoopHooks): Unit = {
-    val path = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.isDirectory(path)) {
-      import scala.jdk.CollectionConverters._
-      val listing = java.nio.file.Files.list(path)
-      val snapshots =
-        try listing.iterator().asScala.toList
-          .filter(_.getFileName.toString.startsWith("batch="))
-          .map(p => p -> p.getFileName.toString.stripPrefix("batch=").toLong)
-        finally listing.close()
-      snapshots.filterNot(s => keep.contains(s._2)).foreach(s => deleteDir(s._1))
-      hooks.record(LoopHooks.SnapshotDirs, epoch)(snapshots.map(_._2).filter(keep.contains).sorted)
-    }
-  }
-
-  private def deleteDir(dir: java.nio.file.Path): Unit = {
-    val walk = java.nio.file.Files.walk(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } finally walk.close()
-  }
-
-  /** Best-effort delete for cleanup paths: one stubborn file must not
-    * abort the remaining cleanup or mask the query's real exception.
-    */
-  private[streaming] def deleteDirQuietly(dir: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(dir)) // absent dir = nothing to clean, not a failure
-      try deleteDir(dir)
-      catch { case e: Exception =>
-        System.err.println(s"cleanup of $dir failed: ${e.getMessage}")
-      }
 
   /** The standard bounded-input flush: two micro-batches of one sentinel
     * row each, `overrideCol` replaced by the marker value and ts pushed
@@ -1001,10 +956,10 @@ object Events {
   /** The PRODUCTION sink path for [[ingestDecontam]] — the same
     * treatment [[ingestDedupToFiles]] gives the plain dedup ingest:
     * UPDATE mode + foreachBatch lands each micro-batch's CHANGED keys as
-    * an idempotent `batch=<epoch>` parquet delta (merge-on-read
-    * changelog, per-batch writes O(changed), compactable by
-    * [[compactDeltaChain]]), with the deltas carrying the suspect flag
-    * as data. The consumer's read-back resolves last-write-wins per key
+    * an idempotent delta of a one-chain LWW [[ChainStore]] (merge-on-read
+    * changelog, per-batch writes O(changed), compactable by the store's
+    * [[ChainStore.fold]]), with the deltas carrying the suspect flag as
+    * data. The consumer's read-back resolves last-write-wins per key
     * and THEN applies the suspect-sized exact confirm — deferring FP
     * elimination to read time is what keeps the hot write path pure map
     * + agg (the confirm needs the static corpus, which a sink executor
@@ -1016,40 +971,16 @@ object Events {
   def ingestDecontamToFiles(spark: SparkSession, sfDir: String,
                             hooks: LoopHooks = LoopHooks.none): DataFrame = {
     val ss = loopSession(spark)
-    val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
-    val docsPath = staged.toString
-    val stagedBytes = java.nio.file.Files.size(staged)
+    val docsPath = s"$sfDir/documents.parquet"
     val (testShingles, bfB) = testBloom(ss, docsPath)
-    try {
-      withScratchDirs("graft_idecon_file", stagedBytes, "sink") { (src, sink, ckpt) =>
-        val docs = ss.read.parquet(docsPath)
-        // two arrivals (doc_id % 5) — the second drain must be a
-        // genuinely incremental micro-batch, as in ingestDedupToFiles
-        docs.filter(col("doc_id") % 5 =!= 0).stageArrival(src)
-        val stream = ss.readStream.schema(docs.schema).parquet(src.toString)
-        val gated = decontamGate(stream, bfB)
-        val q = gated.writeStream
-          .outputMode(OutputMode.Update)
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            val delta = if (hooks.wants(LoopHooks.DeltaRows)) batch.persist() else batch
-            delta.write.mode("overwrite").parquet(s"$sink/batch=$epoch")
-            hooks.record(LoopHooks.DeltaRows, epoch) { try delta.count() finally delta.unpersist() }
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          docs.filter(col("doc_id") % 5 === 0).stageArrival(src)
-          q.processAllAvailable()
-        } finally { dumpProgress("graft_idecon_files", q); q.stop() }
-        // consumer view: LWW per key across the delta chain, then
-        // the exact confirm drops Bloom false positives — on the
-        // loop's session, whose registry the confirm's shingle
-        // kernel resolves in
-        val lww = resolveLww(ss.read.parquet(sink.toString), Seq("text_hash"))
-        detach(spark, confirmSuspects(lww, docsPath))
+    try
+      changelogLoop(ss, sfDir, "graft_idecon_files", hooks)(decontamGate(_, bfB)) { (store, chain) =>
+        // consumer view: LWW per key across the delta chain, then the
+        // exact confirm drops Bloom false positives — on the loop's
+        // session, whose registry the confirm's shingle kernel resolves in
+        detach(spark, confirmSuspects(store.resolved(ss, chain), docsPath))
       }
-    } finally graft.operators.Corpus.releaseCheckpoint(testShingles)
+    finally graft.operators.Corpus.releaseCheckpoint(testShingles)
   }
 
   /** Continuous corpus profiling during ingestion: the streaming twin of
@@ -1105,7 +1036,7 @@ object Events {
     *  - `manifest` — md5 over the batch's own text (O(|batch|) rows);
     *    the resolved chain IS the corpus manifest;
     *  - `ledger` — ONLY the rows the update recomputed (the blast
-    *    radius — [[graft.operators.Snapshot.incrementalLedgerDeltaFromStoredState]]),
+    *    radius — [[graft.operators.Snapshot.incrementalLedgerDeltaCheckpointed]]),
     *    an LWW chain: removal tombstones decide liveness first (a
     *    removed doc writes no new ledger row, so LWW alone would
     *    resurface it), then the newest surviving row per doc_id wins.
@@ -1203,7 +1134,7 @@ object Events {
       val postings = Chain("postings_by_shingle", Snapshot.postings(docs.limit(0)).schema,
         bucketBy = Some("s"))
       val manifest = Chain("manifest", Snapshot.ManifestSchema, commits = true)
-      val ledger = Chain("ledger", Corpus.LedgerSchema, lww = true, commits = true)
+      val ledger = Chain("ledger", Corpus.LedgerSchema, fold = Fold.Lww, commits = true)
       val hot = Chain("hot_shingles", StructType(Seq(StructField("s", LongType))), snapshot = true)
       val store = new ChainStore(storeDir, "doc_id",
         Seq(corpus, postings, manifest, ledger) ++ maxShingleDf.map(_ => hot))
@@ -1485,19 +1416,19 @@ object Events {
     * writes per batch, undeployable at 100 TB. This twin runs the same
     * aggregation in UPDATE mode, so each micro-batch emits only the keys
     * whose state CHANGED in that batch, and `foreachBatch` lands every
-    * delta as its own `batch=<epoch>` parquet directory keyed by
-    * `text_hash` — a merge-on-read changelog sink:
+    * delta in a one-chain LWW [[ChainStore]] keyed by `text_hash` — a
+    * merge-on-read changelog sink:
     *
     *  - per-batch writes are O(changed keys), not O(all keys);
     *  - `mode(Overwrite)` into the epoch's OWN directory makes retries
     *    idempotent (a replayed epoch rewrites its delta, never appends a
     *    duplicate) — the standard exactly-once foreachBatch recipe;
     *  - the consumer view resolves last-write-wins per key (`max_by` on
-    *    the epoch) — one partial-agg'd shuffle. At 100 TB a periodic
-    *    [[compactDeltaChain]] run rewrites this read as the new base
-    *    snapshot and prunes the consumed deltas, bounding read
-    *    amplification; swap the parquet delta dirs for Delta/Iceberg
-    *    MERGE and the plumbing is unchanged.
+    *    the epoch) — one partial-agg'd shuffle. At 100 TB the store's
+    *    [[ChainStore.fold]] rewrites this read as the new base snapshot
+    *    and prunes the consumed deltas, bounding read amplification;
+    *    swap the parquet delta dirs for Delta/Iceberg MERGE and the
+    *    plumbing is unchanged.
     *
     * The bounded harness stages the corpus in two arrivals (doc_id % 5
     * split) so the run demonstrably exercises the incremental path: the
@@ -1507,27 +1438,42 @@ object Events {
     * the delta chain.
     */
   def ingestDedupToFiles(spark: SparkSession, sfDir: String,
-                         hooks: LoopHooks = LoopHooks.none): DataFrame = {
-    val ss = loopSession(spark)
-    val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
-    val stagedBytes = java.nio.file.Files.size(staged)
-    withScratchDirs("graft_ingest_file", stagedBytes, "sink") { (src, sink, ckpt) =>
-      val docs = ss.read.parquet(staged.toString)
-      // arrival 1: most of the corpus; arrival 2 lands after the
-      // first drain, forcing a second (incremental) micro-batch
-      docs.filter(col("doc_id") % 5 =!= 0).stageArrival(src)
-      val stream = ss.readStream.schema(docs.schema).parquet(src.toString)
-      val deduped = stream
+                         hooks: LoopHooks = LoopHooks.none): DataFrame =
+    changelogLoop(loopSession(spark), sfDir, "graft_ingest_files", hooks) { stream =>
+      stream
         .filter(graft.functions.TokenStats.tokenStats(col("text"))
           .getField("n_tokens") >= MinTokens)
         .groupBy(md5(col("text").cast("binary")).as("text_hash"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_arrivals"))
-      val q = deduped.writeStream
+    } { (store, chain) =>
+      // consumer view: last-write-wins per key across the delta chain
+      detach(spark, store.resolved(spark, chain).orderBy(col("text_hash")))
+    }
+
+  /** The body of the two Update-mode file-sink loops
+    * ([[ingestDedupToFiles]], [[ingestDecontamToFiles]]) on session
+    * `ss`: stage the corpus in two arrivals (doc_id % 5 split, so the
+    * second drain is a genuinely incremental micro-batch), run
+    * `aggregate` over the stream in UPDATE mode, and land each
+    * micro-batch's changed keys as the epoch's delta of a one-chain LWW
+    * store keyed by `text_hash`. The `DeltaRows` meter counts each
+    * delta's rows. `consume` reads the store before its scratch dirs
+    * go. */
+  private def changelogLoop(ss: SparkSession, sfDir: String, name: String, hooks: LoopHooks)(
+      aggregate: DataFrame => DataFrame)(consume: (ChainStore, Chain) => DataFrame): DataFrame = {
+    val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
+    withScratchDirs(name, java.nio.file.Files.size(staged), "sink") { (src, sink, ckpt) =>
+      val docs = ss.read.parquet(staged.toString)
+      docs.filter(col("doc_id") % 5 =!= 0).stageArrival(src)
+      val changed = aggregate(ss.readStream.schema(docs.schema).parquet(src.toString))
+      val chain = Chain("changelog", changed.schema, fold = Fold.Lww)
+      val store = new ChainStore(sink, "text_hash", Seq(chain))
+      val q = changed.writeStream
         .outputMode(OutputMode.Update)
         .option("checkpointLocation", ckpt.toString)
         .foreachBatch { (batch: DataFrame, epoch: Long) =>
           val delta = if (hooks.wants(LoopHooks.DeltaRows)) batch.persist() else batch
-          delta.write.mode("overwrite").parquet(s"$sink/batch=$epoch")
+          store.writeDelta(chain, epoch, delta)
           hooks.record(LoopHooks.DeltaRows, epoch) { try delta.count() finally delta.unpersist() }
         }
         .start()
@@ -1535,11 +1481,8 @@ object Events {
         q.processAllAvailable()
         docs.filter(col("doc_id") % 5 === 0).stageArrival(src)
         q.processAllAvailable()
-      } finally { dumpProgress("graft_ingest_files", q); q.stop() }
-      // consumer view: last-write-wins per key across the delta chain
-      val lww = resolveLww(spark.read.parquet(sink.toString), Seq("text_hash"))
-        .orderBy(col("text_hash"))
-      detach(spark, lww)
+      } finally { dumpProgress(name, q); q.stop() }
+      consume(store, chain)
     }
   }
 
@@ -1647,7 +1590,7 @@ object Events {
       val shingles = Chain("shingles", shingleSets.schema, bucketBy = Some("doc_id"))
       val verdict = Chain("verdict", StructType(Seq(StructField("doc_id", LongType),
         StructField("partner_id", LongType), StructField("jaccard", DoubleType))),
-        bucketBy = Some("doc_id"), lww = true, commits = true)
+        bucketBy = Some("doc_id"), fold = Fold.Lww, commits = true)
       // CAPPED mode's one extra stored relation (the
       // streamIncrementalClean hot-shingle discipline, applied to the
       // LSH inverted index): the epoch's full hot band-bucket set —
@@ -2346,7 +2289,7 @@ object Events {
     *
     * Store layout (the r11 bucketing discipline, applied here r12):
     * `assign_g1/batch=e/bucket=b` hash-buckets the chain by neighbor_id
-    * ([[chainBucket]]) so a point lookup ("which cell holds vector v")
+    * ([[ChainStore.chainBucket]]) so a point lookup ("which cell holds vector v")
     * file-prunes to one bucket — the query side reads the chain whole
     * ONCE, but any recurring per-id probe gets the same skip the other
     * bucketed stores have (poisoned-file proof in StreamingSpec). The
@@ -2392,9 +2335,8 @@ object Events {
     *
     * In-stream compaction (r13, every `compactEvery` epochs,
     * prefix-bounded): the assign chain folds tombstone-resolved with
-    * its bucket layout preserved, and the cellstats chain folds
-    * through [[compactAdditiveChain]] (its resolution is a per-cell
-    * SUM, not last-write-wins) — bounding both chains' delta counts
+    * its bucket layout preserved, and the cellstats chain folds by its
+    * per-cell SUM, not last-write-wins ([[ChainStore.fold]]) — bounding both chains' delta counts
     * and the tombstone aggregate's growth for a loop that would
     * otherwise append one delta per epoch forever.
     *
@@ -2823,7 +2765,7 @@ object Events {
     * vector, plus an `idx = -1` sentinel carrying the weight-row count
     * so a writer that changes the sparsity invariant fails loudly at
     * load. The score chain is `scores_g1/batch=e/bucket=b`, doc-id-
-    * bucketed ([[chainBucket]]) like every other store here, so a
+    * bucketed ([[ChainStore.chainBucket]]) like every other store here, so a
     * recurring per-doc probe file-prunes to one bucket. Every batch then
     * featurizes + scores ONLY its own docs against the broadcast stored
     * model (O(|batch|·features), no shuffle, nothing corpus-sized ever
@@ -3511,14 +3453,6 @@ object Events {
       .count()
   }
 
-  /** Bucket count for hash-bucketed delta-chain stores. 32 here; a
-    * 100 TB store raises it so one bucket ≈ a few GB — the pruning
-    * ratio at trickle batch sizes is (buckets touched)/(total), so more
-    * buckets = finer file skipping, at the cost of more (small) files
-    * per epoch, which the in-stream compaction re-merges anyway.
-    */
-  private[graft] val ChainBuckets = 32
-
   /** The exact-dedup ingest queries' quality gate: docs with fewer
     * tokens are dropped. ONE definition, interpolated into
     * [[ingestDedupOracle]]. */
@@ -3607,104 +3541,6 @@ object Events {
     * prefix bound, leaving that path unexercised). */
   private[graft] val EarlyRedeliveryRem = 3L
 
-  /** The ONE bucket function both the write and the probe sides share —
-    * a drifted second copy would silently prune AWAY matching files. */
-  private[graft] def chainBucket(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    pmod(xxhash64(key), lit(ChainBuckets.toLong)).cast("int")
-
-  // ---- generation markers: the durable "gen@epoch" files of
-  // [[GenerationalStore]] (streaming/ChainStore.scala), which holds the
-  // migration protocol both migrating loops run ----
-
-  /** Atomic tmp+move marker write. */
-  private[streaming] def writeGenMarker(p: java.nio.file.Path, content: String): Unit = {
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Parse a "gen@epoch" marker; absent file = None. A malformed file
-    * fails with the path and raw contents in the message (ADVICE r17):
-    * the write side is atomic tmp+move, so corruption here means
-    * external interference — the one place the generational scheme
-    * must fail diagnosably rather than throw a bare MatchError deep
-    * inside foreachBatch. */
-  private[graft] def readGenMarker(p: java.nio.file.Path): Option[(Int, Long)] =
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val raw = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim
-      raw.split('@') match {
-        case Array(g, e) if g.nonEmpty && e.nonEmpty &&
-            g.forall(_.isDigit) && e.forall(_.isDigit) =>
-          Some((g.toInt, e.toLong))
-        case _ => throw new IllegalStateException(
-          s"malformed generation marker at $p: '$raw' (expected <gen>@<epoch>)")
-      }
-    }
-
-  /** Distinct store buckets a delta's keys land in — bounded by
-    * min(|delta|, [[ChainBuckets]]) values, so the collect is a
-    * constant-sized driver hop, never corpus state. */
-  private[graft] def collectBuckets(delta: DataFrame, key: org.apache.spark.sql.Column): Seq[Int] =
-    delta.select(chainBucket(key).as("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-
-  /** Guard for explicit-schema chain scans: partition discovery is
-    * FILE-driven, so a chain whose committed deltas are all zero-file
-    * (reachable since pure-removal head-of-stream epochs commit empty
-    * deltas, r12) yields NO `batch`/`bucket` columns and any predicate
-    * on them fails analysis. A missing partition column implies zero
-    * data files, so adding it to the (necessarily empty) scan is
-    * exact — the probe then reads nothing instead of crashing.
-    * VERIFIED, not assumed (ADVICE r13): a scan that holds ROWS yet
-    * lacks the column is not a zero-data chain — it's a reader pointed
-    * at a populated store written without the expected layout (a
-    * pre-bucketing chain, a mis-wired dir), and synthesizing a null
-    * column there would turn every probe into a silently-empty read
-    * that classifies the whole world as new. That mis-wiring must fail
-    * loudly. The emptiness probe keys on ROWS, not files: an empty
-    * unbucketed delta write legitimately leaves one zero-row part file
-    * behind (only partitioned empty writes are file-less), so the
-    * check is a head(1) job — and it runs only on the rare
-    * missing-column path. */
-  private[graft] def withChainPartitionCols(scan: DataFrame, cols: String*): DataFrame = {
-    val missing = cols.filterNot(scan.columns.contains)
-    if (missing.isEmpty) scan
-    else {
-      if (scan.inputFiles.nonEmpty && !scan.isEmpty)
-        throw new IllegalStateException(
-          s"chain scan is missing partition column(s) ${missing.mkString(", ")} " +
-            "yet holds data rows — populated chain written without the " +
-            s"expected partition layout (e.g. ${scan.inputFiles.head})")
-      missing.foldLeft(scan)((df, c) =>
-        df.withColumn(c, lit(null).cast(if (c == "bucket") "int" else "long")))
-    }
-  }
-
-  /** Probe-side read of a hash-bucketed `batch=e/bucket=b` delta chain,
-    * pruned to epochs ≤ `epoch` AND the given buckets — both partition
-    * columns, so the skip happens at FILE level (PartitionFilters in
-    * the scan), not per-row: the index-lookup read shape that keeps a
-    * recurring probe's bytes proportional to the buckets it touches
-    * instead of the whole store (the r10 `stream_ingest_neardup` weak).
-    * An empty bucket list reads nothing (empty `In` folds to false).
-    * `dataSchema` (the stored columns MINUS the partition dirs), when
-    * the caller knows it — and a probe loop does, it WROTE the store —
-    * skips per-probe footer inference entirely: no non-matching file is
-    * opened even at planning time. The `batch` column is kept: a
-    * tombstoned chain's liveness compares row epoch vs tombstone epoch
-    * ([[tombstoneResolvedRows]]). */
-  private[graft] def prunedChainRows(spark: SparkSession, dir: String, epoch: Long,
-                                     buckets: Seq[Int],
-                                     dataSchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
-    withChainPartitionCols(
-      dataSchema.fold(spark.read)(s => spark.read.schema(s)).parquet(dir),
-      "batch", "bucket")
-      .filter(col("batch") <= lit(epoch) && col("bucket").isin(buckets: _*))
-      .drop("bucket")
-
   /** The stored-state [[graft.operators.Snapshot.PostingsProbe]] over a
     * shingle-hash-bucketed postings chain plus the doc-id-bucketed
     * corpus chain:
@@ -3760,447 +3596,6 @@ object Events {
         .getOrElse(resolvedPruned(Nil))
     }
     def release(): Unit = chunks.foreach(_.unpersist(blocking = false))
-  }
-
-  /** Epochs strictly below `epoch` whose delta dir carries parquet's
-    * `_SUCCESS` marker — the listing [[ChainStore.latestCommitted]]'s
-    * commit gate starts from. */
-  private[graft] def committedEpochsBelow(dir: String, epoch: Long): Seq[Long] = {
-    val d = new java.io.File(dir)
-    if (!d.isDirectory) Seq.empty
-    else d.listFiles().toSeq.map(_.getName)
-      .filter(_.startsWith("batch="))
-      .flatMap(_.stripPrefix("batch=").toLongOption)
-      .filter(e => e < epoch && new java.io.File(s"$dir/batch=$e/_SUCCESS").exists)
-  }
-
-  /** Resolve a `batch=<epoch>` changelog chain last-write-wins per
-    * `keyCols` — THE merge-on-read reader every Update-mode delta-chain
-    * sink in this file shares ([[ingestDedupToFiles]],
-    * [[ingestDecontamToFiles]], [[ingestNearDup]]'s verdict chain,
-    * [[streamIncrementalClean]]'s ledger view) and the resolution
-    * [[compactDeltaChain]] materializes when it rewrites the chain as
-    * its base snapshot — one definition, so a reader and the compactor
-    * can never drift. Value columns come off the stored schema, so a
-    * sink schema change can never be silently projected away; cost is
-    * one partial-agg'd shuffle of scalar rows.
-    */
-  private[graft] def resolveLww(chain: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val valueCols = chain.columns.filterNot(c => keyCols.contains(c) || c == "batch").toSeq
-    chain.groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct(valueCols.map(col): _*), col("batch")).as("v"))
-      .select(keyCols.map(col) ++ valueCols.map(c => col(s"v.$c").as(c)): _*)
-  }
-
-  /** Sub-partition columns a `batch=e/<col>=v` delta chain was written
-    * under, detected from the chain's own directory layout (first level
-    * inside each `batch=` dir; the chains in this file nest exactly one
-    * sub-partition level). The compaction entry points fall back to this
-    * when the caller names no layout, so a default-arg maintenance
-    * compaction of a bucketed store can never silently flatten the
-    * layout its probes' explicit-schema reads depend on (ADVICE r11).
-    */
-  private[graft] def detectChainPartitionCols(dir: String): Seq[String] = {
-    val root = new java.io.File(dir)
-    Option(root.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      .flatMap(b => Option(b.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq)
-      .filter(f => f.isDirectory && f.getName.contains("="))
-      .map(_.getName.takeWhile(_ != '=')).distinct
-  }
-
-  /** Compact a `batch=<epoch>` delta-chain sink (the layout
-    * [[ingestDedupToFiles]] writes): resolve last-write-wins per
-    * `keyCols`, rewrite it as the newest epoch's directory, and prune
-    * every older delta — read amplification drops from O(#deltas) back
-    * to one directory, which is exactly the periodic job the
-    * merge-on-read layout requires at 100 TB. The snapshot keeps the
-    * NEWEST EXISTING epoch number, so a stream resuming from its
-    * checkpoint (next epoch = max + 1) can never collide with it, and
-    * repeated compaction is a no-op by construction (one dir in, the
-    * same relation out).
-    *
-    * Swap discipline (crash-safe, ADVICE r6): the snapshot materializes
-    * into a temp dir OUTSIDE the partition layout (forcing the read of
-    * every delta it's about to replace) and is stamped with a
-    * target-epoch marker; the newest delta is then moved ASIDE (a
-    * single atomic directory rename — never deleted while it is the
-    * only copy), the snapshot renamed into its place, and only then are
-    * the aside copy and the older deltas pruned. Every intermediate
-    * state is recoverable: [[recoverInterruptedCompaction]] runs on
-    * entry and either finishes an interrupted swap (marker present,
-    * target missing → the snapshot IS the data, complete the rename) or
-    * discards a redundant/incomplete snapshot (target present → the
-    * chain is intact). A reader racing the rename pair can still
-    * briefly miss the newest delta (the documented harness caveat); a
-    * production deployment commits the same swap through a table
-    * format's transaction log (Delta/Iceberg) instead, with identical
-    * relational semantics — but no crash point here loses data.
-    */
-  def compactDeltaChain(spark: SparkSession, sink: String, keyCols: Seq[String]): Unit =
-    compactDeltaChain(spark, sink, keyCols, None, Nil)
-
-  /** The chain-read preamble every compactor shares: repair a
-    * crash-stranded swap, read with the caller's explicit schema (an
-    * all-zero-file chain — pure-removal head epochs — crashes
-    * inference, ADVICE r12), guard the `batch` partition column (the
-    * same state's epoch filter would fail analysis before isEmpty can
-    * short-circuit), bound to epochs ≤ `upTo`, and return None when
-    * nothing is foldable. ONE definition (r13 review: three diverging
-    * copies of these guards had accumulated). */
-  private def boundedChainRead(spark: SparkSession, sink: String,
-                               upTo: Option[Long],
-                               dataSchema: Option[org.apache.spark.sql.types.StructType])
-      : Option[(DataFrame, Long)] = {
-    recoverInterruptedCompaction(java.nio.file.Paths.get(sink))
-    val all0 = withChainPartitionCols(
-      dataSchema.fold(spark.read)(s => spark.read.schema(s)).parquet(sink), "batch")
-    val all = upTo.fold(all0)(e => all0.filter(col("batch") <= lit(e)))
-    if (all.isEmpty) None
-    else {
-      // partition discovery types `batch` as int or long depending on
-      // the epoch values present — accept either
-      val maxEpoch = all.agg(max(col("batch"))).head().getAs[Number](0).longValue()
-      Some((all, maxEpoch))
-    }
-  }
-
-  /** [[compactDeltaChain]] with the two knobs a LIVE ingest loop needs
-    * (the in-stream compaction [[ingestNearDup]] schedules):
-    *
-    *  - `upTo` — compact ONLY epochs ≤ this bound, leaving later deltas
-    *    untouched. A loop compacting mid-run passes its current epoch
-    *    MINUS ONE: folding the in-flight epoch into the base would let
-    *    a crash-replay of that epoch `overwrite` the base dir — the
-    *    whole chain — with just its own delta. Prefix-bounded, the
-    *    replayed epoch only ever overwrites itself.
-    *  - `partitionCols` — sub-partition columns (e.g. the hash-bucket
-    *    column of a bucketed store) the snapshot must be rewritten
-    *    UNDER, so compaction preserves the layout the probe-side
-    *    partition pruning keys off. Without this the base dir would
-    *    flatten the buckets and every later probe would read it whole.
-    */
-  def compactDeltaChain(spark: SparkSession, sink: String, keyCols: Seq[String],
-                        upTo: Option[Long], partitionCols: Seq[String],
-                        dataSchema: Option[org.apache.spark.sql.types.StructType] = None): Unit =
-    boundedChainRead(spark, sink, upTo, dataSchema).foreach { case (all, maxEpoch) =>
-      // layout preservation is not optional on a bucketed chain (see
-      // detectChainPartitionCols) — detect when the caller named nothing
-      val pcols =
-        if (partitionCols.nonEmpty) partitionCols else detectChainPartitionCols(sink)
-      swapCompactedSnapshot(java.nio.file.Paths.get(sink),
-        resolveLww(all, keyCols), maxEpoch, pcols)
-    }
-
-  /** Compaction for an ADDITIVE delta chain — per-key signed counts
-    * whose resolution is a SUM, not last-write-wins (the IVF cellstats
-    * chain: adds append positive rows, retirements negative ones, and
-    * every consumer reads `groupBy(key).sum`). Folds epochs ≤ `upTo`
-    * into one summed base delta at the max epoch through the same
-    * crash-safe swap as the other compactors. Zero-sum keys are KEPT:
-    * the chain's contract is additive, and a consumer that filters
-    * drained keys does so itself (dropping them here would be harmless
-    * today but bakes a consumer policy into the store).
-    */
-  def compactAdditiveChain(spark: SparkSession, sink: String, keyCols: Seq[String],
-                           sumCol: String, upTo: Option[Long] = None,
-                           dataSchema: Option[org.apache.spark.sql.types.StructType] = None,
-                           partitionCols: Seq[String] = Nil): Unit =
-    boundedChainRead(spark, sink, upTo, dataSchema).foreach { case (all, maxEpoch) =>
-      // same mandatory-layout rule as the sibling compactors: detect a
-      // bucketed layout when the caller names nothing, so a future
-      // bucketed additive chain can't be silently flattened (r13
-      // review; today's only additive chain, cellstats, is unbucketed).
-      // Layout columns are hash-functions of the key, so grouping by
-      // key ∪ layout is sum-equivalent and keeps them for the write —
-      // a layout column missing from the read fails analysis loudly,
-      // exactly like the sibling compactors' partitioned writes.
-      val pcols =
-        if (partitionCols.nonEmpty) partitionCols else detectChainPartitionCols(sink)
-      val snapshot = all.groupBy((keyCols ++ pcols).distinct.map(col): _*)
-        .agg(sum(col(sumCol)).as(sumCol))
-      swapCompactedSnapshot(java.nio.file.Paths.get(sink), snapshot, maxEpoch, pcols)
-    }
-
-  /** The crash-safe snapshot swap shared by [[compactDeltaChain]] and
-    * [[compactTombstonedChains]]: materialize `snapshot` into a hidden
-    * tmp dir (forcing the read of every delta it replaces), stamp the
-    * target-epoch marker, atomically swap it into `batch=maxEpoch`'s
-    * place, then prune the consumed older deltas. Crash states are
-    * exactly those [[recoverInterruptedCompaction]] repairs.
-    */
-  private def swapCompactedSnapshot(sinkPath: java.nio.file.Path,
-                                    snapshot: DataFrame, maxEpoch: Long,
-                                    partitionCols: Seq[String] = Nil): Unit = {
-    val tmp = sinkPath.resolve(CompactTmp)
-    // materializes the full resolved read BEFORE any delta is touched;
-    // the marker lands last, so marker-present == snapshot complete.
-    // `partitionCols` preserves a bucketed store's sub-layout so the
-    // probe side's partition pruning survives compaction
-    val w = snapshot.write
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
-    java.nio.file.Files.write(tmp.resolve(CompactMarker),
-      maxEpoch.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val target = sinkPath.resolve(s"batch=$maxEpoch")
-    val aside = sinkPath.resolve(CompactAside)
-    // rename pair: each is atomic, and between them the newest delta
-    // still exists (in `aside`) alongside the complete snapshot (`tmp`)
-    java.nio.file.Files.move(target, aside)
-    java.nio.file.Files.move(tmp, target)
-    deleteDirQuietly(aside)
-    // prune ONLY epochs strictly below the snapshot's: deltas ABOVE
-    // it (a live loop's in-flight epoch under a prefix-bounded
-    // compaction) are not consumed by this snapshot and must survive
-    pruneDeltasBelow(sinkPath, maxEpoch)
-  }
-
-  /** Delete every `batch=` delta strictly below `epoch` — the consume
-    * step of a compaction swap, shared verbatim with the crash-recovery
-    * path that finishes an interrupted prune (ONE definition of the
-    * parse-compare-delete invariant; r13 review). A failed listing of
-    * an EXISTING directory THROWS instead of skipping: a skipped prune
-    * would let every reader between here and the next recovery observe
-    * the consumed deltas as duplicates (double-counted additive sums,
-    * twice-emitted whole rows) — failing the caller's epoch is the
-    * safe outcome, replay re-runs the recovery before any read. */
-  private def pruneDeltasBelow(sinkPath: java.nio.file.Path, epoch: Long): Unit = {
-    val dir = sinkPath.toFile
-    if (!dir.isDirectory) return
-    val listed = dir.listFiles()
-    if (listed == null)
-      throw new IllegalStateException(
-        s"cannot list $sinkPath to prune compaction-consumed deltas")
-    listed.foreach { f =>
-      val n = f.getName
-      if (n.startsWith("batch=") &&
-          n.stripPrefix("batch=").toLongOption.exists(_ < epoch))
-        deleteDir(f.toPath)
-    }
-  }
-
-  /** Compaction for a TOMBSTONED delta chain — the store shape
-    * [[streamIncrementalClean]] keeps its corpus and posting-index
-    * state in. Per-epoch dirs hold whole-row deltas where a
-    * re-delivered doc's rows are replaced WHOLESALE (possibly many rows
-    * per doc — a posting index has one per shingle — so
-    * [[compactDeltaChain]]'s per-key LWW does not apply), and a
-    * parallel tombstone chain records the doc_ids whose older rows each
-    * epoch superseded. Resolution: a `batch=p` row is live iff p ≥ the
-    * doc's max tombstone epoch. This pass rewrites the resolved live
-    * rows as the single base delta (the shared crash-safe swap) and
-    * then prunes the consumed tombstone epochs — bounding the chain's
-    * read amplification AND the tombstone aggregate's growth, the two
-    * quantities the merge-on-read design trades against write cost.
-    *
-    * Tombstone pruning needs no crash coupling with the swap: after the
-    * swap every surviving row carries `batch = maxEpoch` ≥ every
-    * consumed tombstone's epoch, so a stale tombstone is a semantic
-    * no-op — deleting it is pure housekeeping, safe at any crash point
-    * (a crash mid-prune leaves no-op tombstones the next compaction
-    * removes). Tombstones with epochs ABOVE the compacted base (none
-    * exist while the stream is quiesced, the normal compaction window)
-    * are preserved verbatim.
-    *
-    * `dirs` must list EVERY data chain that resolves against
-    * `tombstoneDir`, as in [[streamIncrementalClean]]'s store (corpus,
-    * postings AND manifest all consult the same re-delivery
-    * tombstones). Compacting one chain alone would consume tombstones
-    * its siblings still need — their stale rows would silently
-    * resurface (and a follow-up compaction would bake them into a
-    * permanent base). Here the tombstones are pruned only after every
-    * listed chain has swapped in its resolved base, and only up to the
-    * SMALLEST compacted epoch, so a lagging chain's unconsumed
-    * tombstones survive verbatim.
-    */
-  def compactTombstonedChains(spark: SparkSession, dirs: Seq[String], tombstoneDir: String,
-                              keyCol: String = "doc_id",
-                              partitionColsFor: String => Seq[String] = _ => Nil,
-                              upTo: Option[Long] = None,
-                              lwwKeysFor: String => Seq[String] = _ => Nil,
-                              dataSchemaFor: String => Option[org.apache.spark.sql.types.StructType] = _ => None): Unit = {
-    val maxEpochs = dirs.flatMap { dir =>
-      val sinkPath = java.nio.file.Paths.get(dir)
-      // `upTo` prefix-bounds a LIVE loop's compaction exactly as
-      // compactDeltaChain's does: never fold the in-flight epoch (the
-      // shared preamble also repairs crash states and guards the
-      // zero-file chain, see boundedChainRead)
-      boundedChainRead(spark, dir, upTo, dataSchemaFor(dir)).map { case (rows, maxEpoch) =>
-        // `partitionColsFor` names each chain's bucket layout (e.g. the
-        // corpus chain's doc bucket vs the postings chain's shingle
-        // bucket). Compacting a bucketed chain WITHOUT it would not just
-        // lose file skipping — it BREAKS the production probes: the
-        // flattened base stores `bucket` as a plain data column, and
-        // prunedChainRows reads with an explicit
-        // dataSchema that excludes it, so col("bucket") no longer
-        // resolves and the probe's next read throws (ADVICE r11). Safe
-        // by construction: when the caller names nothing, detect the
-        // layout from the chain's own delta dirs and preserve it.
-        val pcols = {
-          val named = partitionColsFor(dir)
-          if (named.nonEmpty) named else detectChainPartitionCols(dir)
-        }
-        // `lwwKeysFor` marks a chain whose rows ALSO resolve
-        // last-write-wins per key (a changelog like ingestNearDup's
-        // verdict chain, living beside whole-row-delta chains that
-        // share its tombstone dir): tombstones decide liveness first,
-        // then the newest surviving row per key wins — the exact
-        // layered read the streaming consumer applies, materialized.
-        val lwwKeys = lwwKeysFor(dir)
-        val resolved = tombstoneResolvedRows(spark, rows, tombstoneDir, keyCol,
-          upTo, keepEpoch = lwwKeys.nonEmpty)
-        val snapshot = if (lwwKeys.nonEmpty) resolveLww(resolved, lwwKeys) else resolved
-        swapCompactedSnapshot(sinkPath, snapshot, maxEpoch, pcols)
-        maxEpoch
-      }
-    }
-    if (maxEpochs.nonEmpty) {
-      val safe = maxEpochs.min
-      val td = new java.io.File(tombstoneDir)
-      if (td.isDirectory) td.listFiles().foreach { f =>
-        val n = f.getName
-        if (n.startsWith("batch=") && n.stripPrefix("batch=").toLong <= safe)
-          deleteDir(f.toPath)
-      }
-    }
-  }
-
-  /** Merge-on-read resolution of a tombstoned delta chain: a `batch=p`
-    * row of `rows` (which must still carry the `batch` partition column,
-    * already epoch-bounded) is live iff p ≥ its key's max tombstone
-    * epoch (the tombstone aggregate is delta-sized — re-deliveries and
-    * removals only — hence broadcast; the chain scan itself never
-    * shuffles). `upTo` bounds the tombstones to epochs ≤ it. This is
-    * the ONE copy of the predicate — the streaming reader and the
-    * compactor both resolve through it; a second copy would let an edit
-    * silently decouple the stream's view from the materialized base. A
-    * tombstone dir without `batch=` children (never written, or fully
-    * consumed by compaction) means no tombstones. A bucket-PRUNED chain
-    * scan resolves through it too: pruning selects files, this
-    * predicate then decides per-row liveness, and the two compose
-    * because tombstones are keyed by doc, independent of which bucket a
-    * row lives in. `keepEpoch = true` retains the
-    * `batch` column in the output — the read shape an LWW changelog
-    * chain needs when it ALSO resolves tombstones (removal retractions
-    * kill a doc's rows first, [[resolveLww]] then picks the newest
-    * survivor per key — the layered resolution
-    * [[streamIncrementalClean]]'s ledger and [[ingestNearDup]]'s
-    * verdict chain read through). */
-  private[graft] def tombstoneResolvedRows(spark: SparkSession, rows: DataFrame,
-                                           tombstoneDir: String, keyCol: String = "doc_id",
-                                           upTo: Option[Long] = None,
-                                           keepEpoch: Boolean = false): DataFrame =
-    tombstoneResolvedRowsWith(rows,
-      tombstoneAggregate(spark, tombstoneDir, keyCol, upTo), keyCol, keepEpoch)
-
-  /** The per-key max-tombstone-epoch aggregate of a tombstone chain —
-    * None when the chain has never been written. Factored out so a
-    * LOOP can compute it ONCE per epoch (persist) and share it across
-    * every probe of the batch ([[tombstoneResolvedRowsWith]]); each
-    * probe re-deriving it re-reads and re-aggregates the chain (the
-    * r12 review's repeated-resolution finding). Explicit key schema:
-    * a chain whose delta dirs are all zero-file (committed epochs with
-    * no retirements) would crash schema inference. */
-  private[graft] def tombstoneAggregate(spark: SparkSession, tombstoneDir: String,
-                                        keyCol: String = "doc_id",
-                                        upTo: Option[Long] = None): Option[DataFrame] = {
-    val haveTombs = Option(new java.io.File(tombstoneDir).listFiles())
-      .exists(_.exists(_.getName.startsWith("batch=")))
-    if (!haveTombs) None
-    else {
-      val tombSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(keyCol, LongType)))
-      // partition-col guard: a torn first-ever tombstone write (crash
-      // mid-write leaves batch=e with no committed data files) must
-      // resolve to an EMPTY aggregate on replay, not fail analysis —
-      // the replayed epoch's own overwrite then repairs the dir
-      val scan = withChainPartitionCols(
-        spark.read.schema(tombSchema).parquet(tombstoneDir), "batch")
-      Some(upTo.fold(scan)(e => scan.filter(col("batch") <= lit(e)))
-        .groupBy(col(keyCol)).agg(max(col("batch")).as("tomb_epoch")))
-    }
-  }
-
-  /** Apply a precomputed [[tombstoneAggregate]] to an epoch-tagged
-    * `rows` relation — the liveness predicate (`batch >= tomb_epoch`).
-    * `keyCol` is passed explicitly (not read off the aggregate's
-    * column order): an implicit positional contract would let a
-    * reshaped aggregate silently join on the wrong column and
-    * resurrect tombstoned rows (r12 review #2). */
-  private[graft] def tombstoneResolvedRowsWith(rows: DataFrame,
-                                               tombAgg: Option[DataFrame],
-                                               keyCol: String = "doc_id",
-                                               keepEpoch: Boolean = false): DataFrame =
-    tombAgg match {
-      case None => if (keepEpoch) rows else rows.drop("batch")
-      case Some(t) =>
-        val live = rows.join(broadcast(t), Seq(keyCol), "left_outer")
-          .filter(col("tomb_epoch").isNull || col("batch") >= col("tomb_epoch"))
-        if (keepEpoch) live.drop("tomb_epoch") else live.drop("batch", "tomb_epoch")
-    }
-
-  // leading underscore: Spark's partition discovery ignores `_`/`.`
-  // paths, so a live reader never lists these mid-compaction dirs
-  private val CompactTmp = "_compact_tmp"
-  private val CompactAside = "_compact_old"
-  private val CompactMarker = "_graft_target_epoch"
-
-  /** Repair any state an interrupted [[compactDeltaChain]] left behind.
-    * The swap writes (snapshot+marker into tmp) → (target renamed to
-    * aside) → (tmp renamed to target) → (aside + older deltas pruned),
-    * so the possible crash states are exactly:
-    *
-    *  - tmp without marker: snapshot incomplete, chain untouched →
-    *    discard tmp;
-    *  - tmp with marker, `batch=<epoch>` present: crash before the
-    *    aside rename, chain intact → discard the redundant tmp;
-    *  - tmp with marker, `batch=<epoch>` missing: crash between the
-    *    renames — tmp is the ONLY complete copy → finish the rename.
-    *    (Safe even if the stream resumed meanwhile and appended newer
-    *    epochs: the snapshot is LWW over epochs ≤ its marker, placed AT
-    *    the marker epoch, so later deltas still win per key.)
-    *  - aside without tmp: the swap-in completed (only the tmp→target
-    *    rename consumes tmp, so `batch=<epoch>` exists) → aside is a
-    *    consumed duplicate, discard it.
-    */
-  private[streaming] def recoverInterruptedCompaction(sinkPath: java.nio.file.Path): Unit = {
-    val tmp = sinkPath.resolve(CompactTmp)
-    val marker = tmp.resolve(CompactMarker)
-    if (java.nio.file.Files.exists(marker)) {
-      val epoch = new String(java.nio.file.Files.readAllBytes(marker),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      val target = sinkPath.resolve(s"batch=$epoch")
-      if (!java.nio.file.Files.exists(target)) java.nio.file.Files.move(tmp, target)
-      else deleteDirQuietly(tmp)
-    } else deleteDirQuietly(tmp)
-    deleteDirQuietly(sinkPath.resolve(CompactAside))
-    // Finish an interrupted PRUNE: the marker travels INSIDE the
-    // swapped base (it lands in tmp before the rename and nothing
-    // removes it — leading underscore, invisible to Spark reads), so a
-    // base dir carrying it is by construction the complete fold of
-    // every epoch ≤ its value, and any older delta still present is a
-    // consumed duplicate a crash between the swap-in and the prune
-    // left behind. For an LWW chain those are harmless (the base wins
-    // per key), but a WHOLE-ROW chain (bands/shingles/assign/scores)
-    // would emit each pre-fold row twice and an ADDITIVE chain would
-    // double-count — and the next compaction would bake the
-    // duplicates into its new base permanently. Deleting below the
-    // newest marker-bearing base is idempotent housekeeping, safe at
-    // any crash point (r13 review). A chain dir that does not exist
-    // yet is fine (first epoch); a listing FAILURE on an existing one
-    // throws — skipping would let this epoch read duplicates.
-    val sink = sinkPath.toFile
-    if (sink.isDirectory) {
-      val listed = sink.listFiles()
-      if (listed == null)
-        throw new IllegalStateException(
-          s"cannot list $sinkPath during compaction recovery")
-      val baseEpochs = listed.toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith("batch=") &&
-          java.nio.file.Files.exists(f.toPath.resolve(CompactMarker)))
-        .flatMap(_.getName.stripPrefix("batch=").toLongOption)
-      baseEpochs.maxOption.foreach(pruneDeltasBelow(sinkPath, _))
-    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import graft.streaming.{Chain, ChainStore, Events, GenerationalStore, LoopHooks, Retirements,
+import graft.streaming.{Chain, ChainStore, Fold, GenerationalStore, LoopHooks, Retirements,
   Roles}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -104,7 +104,7 @@ class ChainStoreSpec extends AnyFunSuite {
   test("the recovery sweep repairs a stranded compaction swap in every declared chain") {
     withDir { dir =>
       val chains = Seq(Chain("a", schema, bucketBy = Some("k")), Chain("b", schema),
-        Chain("c", schema, lww = true, commits = true))
+        Chain("c", schema, fold = Fold.Lww, commits = true))
       val store = new ChainStore(dir, "k", chains)
       val marker = "_graft_target_epoch"
       // a: an incomplete snapshot (no marker) beside the intact chain — discarded
@@ -135,7 +135,7 @@ class ChainStoreSpec extends AnyFunSuite {
   test("the commit gate skips an epoch where only some commit chains have _SUCCESS") {
     withDir { dir =>
       val store = new ChainStore(dir, "k", Seq(Chain("corpus", schema, bucketBy = Some("k")),
-        Chain("manifest", schema, commits = true), Chain("ledger", schema, lww = true, commits = true)))
+        Chain("manifest", schema, commits = true), Chain("ledger", schema, fold = Fold.Lww, commits = true)))
       assert(store.committedBelow(5).isEmpty, "no store yet means no prior epoch")
       Seq("manifest", "ledger").foreach(c => epochDir(dir.resolve(c), 0, success = true))
       // epoch 1: the manifest committed, the ledger torn (files, no marker)
@@ -190,7 +190,7 @@ class ChainStoreSpec extends AnyFunSuite {
   test("the snapshot prune keeps exactly the current epoch and its committed predecessor") {
     withDir { dir =>
       val hot = Chain("hot", schema, snapshot = true)
-      val store = new ChainStore(dir, "k", Seq(Chain("ledger", schema, lww = true, commits = true), hot))
+      val store = new ChainStore(dir, "k", Seq(Chain("ledger", schema, fold = Fold.Lww, commits = true), hot))
       (0L to 2L).foreach(e => epochDir(dir.resolve("ledger"), e, success = true))
       epochDir(dir.resolve("ledger"), 3, success = false) // torn: not a predecessor
       (0L to 4L).foreach(e => epochDir(dir.resolve("hot"), e, success = true))
@@ -204,6 +204,19 @@ class ChainStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("the epoch listing returns exactly the numeric batch= epochs") {
+    withDir { dir =>
+      assert(ChainStore.epochDirs(dir.resolve("absent")).isEmpty, "a missing chain lists nothing")
+      Seq(3L, 0L, 12L).foreach(e => epochDir(dir, e, success = e != 12L))
+      Seq("_compact_tmp", "_compact_old", "batch=x", "batch=", "batch=1e3", "bucket=4")
+        .foreach(n => Files.createDirectories(dir.resolve(n)))
+      Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
+      assert(ChainStore.epochDirs(dir) == Seq(0L, 3L, 12L).map(e => e -> dir.resolve(s"batch=$e")))
+      assert(ChainStore.committedEpochsBelow(dir.toString, 12) == Seq(0L, 3L))
+      assert(ChainStore.committedEpochsBelow(dir.toString, 13) == Seq(0L, 3L), "batch=12 is torn")
+    }
+  }
+
   test("compaction keeps each chain's bucket layout and its resolved reads") {
     val spark = TestSpark.spark
     import spark.implicits._
@@ -213,8 +226,9 @@ class ChainStoreSpec extends AnyFunSuite {
       val index = Chain("index", StructType(Seq(StructField("doc_id", LongType),
         StructField("h", LongType))), bucketBy = Some("h"))
       val verdict = Chain("verdict", StructType(Seq(StructField("doc_id", LongType),
-        StructField("v", LongType))), lww = true, commits = true)
-      val store = new ChainStore(dir, "doc_id", Seq(docs, index, verdict))
+        StructField("v", LongType))), fold = Fold.Lww, commits = true)
+      val counts = Chain("counts", ChainStore.AdditiveSchema, fold = Fold.Additive)
+      val store = new ChainStore(dir, "doc_id", Seq(docs, index, verdict, counts))
       def land(epoch: Long, ids: Seq[Long], tombs: Seq[Long], text: String, v: Long): Unit = {
         val df = ids.toDF("doc_id")
         store.tombstoneWrite(Retirements(None, tombs.toDF("doc_id"), tombs.nonEmpty), epoch)
@@ -229,23 +243,34 @@ class ChainStoreSpec extends AnyFunSuite {
       land(2, Seq(21L), Seq(20L), "third", 2) // 20 removed (no rows), 21 added
       // an LWW-only update: no tombstone, the newest row per key wins
       store.writeDelta(verdict, 2, Seq((6L, 9L), (21L, 2L)).toDF("doc_id", "v"))
+      // signed per-cell counts, newest delta below the other chains'
+      // (epoch 1): cell 9 drains to zero
+      store.writeDelta(counts, 0, Seq((1, 3L), (9, 2L), (4, 1L)).toDF("cell", "n"))
+      store.writeDelta(counts, 1, Seq((1, -1L), (9, -2L), (1, 5L)).toDF("cell", "n"))
       def read(c: Chain) = store.resolved(spark, c).collect().map(_.toSeq).toSeq
         .sortBy(_.toString)
-      val before = Seq(docs, index, verdict).map(read)
+      val before = Seq(docs, index, verdict, counts).map(read)
       assert(before(0).size == 20 && before(2).size == 20)
+      assert(before(3).map(r => (r(0), r(1))).toSet == Set[(Any, Any)]((1, 7L), (4, 1L), (9, 0L)))
       assert(store.compact(spark, 3, new LoopHooks(compactEvery = 3)))
       Seq(docs, index, verdict).foreach(c => assert(entries(dir.resolve(c.name)) == Seq("batch=2")))
-      assert(Seq(docs, index, verdict).map(read) == before)
+      assert(entries(dir.resolve("counts")) == Seq("batch=1"))
+      assert(Seq(docs, index, verdict, counts).map(read) == before, "a fold changed a resolved read")
+      // the additive base is the per-cell sum, zero sums kept
+      assert(spark.read.parquet(store.dir(counts)).collect().map(r => (r.getInt(0), r.getLong(1)))
+        .toSet == Set((1, 7L), (4, 1L), (9, 0L)))
       // bucketed chains keep `bucket=` dirs whose rows hash to them; the
       // LWW chain stays unbucketed
       for (c <- Seq(docs, index)) {
         assert(entries(dir.resolve(s"${c.name}/batch=2")).exists(_.startsWith("bucket=")))
         assert(spark.read.parquet(store.dir(c))
-          .filter(Events.chainBucket(col(c.bucketBy.get)) =!= col("bucket")).isEmpty)
+          .filter(ChainStore.chainBucket(col(c.bucketBy.get)) =!= col("bucket")).isEmpty)
       }
       assert(!entries(dir.resolve("verdict/batch=2")).exists(_.startsWith("bucket=")))
       assert(spark.read.parquet(store.dir(verdict)).groupBy(col("doc_id")).count()
         .filter(col("count") > 1).isEmpty, "the LWW chain folds to one row per key")
+      // the additive chain's lower base (epoch 1) does not hold back the
+      // epoch-2 tombstone: tombstones never touch it
       assert(!Files.exists(dir.resolve("tombstones")) ||
         entries(dir.resolve("tombstones")).isEmpty, "the folded tombstones are consumed")
     }

@@ -156,4 +156,26 @@ class EntrySpec extends AnyFunSuite {
       finally walk.close()
     assert(orphans.isEmpty, s"doc comments attached to no definition: ${orphans.mkString(", ")}")
   }
+
+  test("only ChainStore.scala builds or parses a chain path under streaming/") {
+    // The delta-chain format (`batch=e[/bucket=b]` dirs, the partitioned
+    // writes, the `_compact_` swap dirs) lives in one module; a loop that
+    // spells a chain path by hand has a second copy of it. Code only:
+    // doc and line comments may describe the layout.
+    import scala.jdk.CollectionConverters._
+    val formatTokens = Seq("/batch=", "\"batch=\"", "partitionBy(", "_compact_")
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/streaming"))
+    val sites =
+      try walk.iterator().asScala
+        .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "ChainStore.scala")
+        .toSeq.sorted.flatMap { f =>
+          java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.flatMap { case (line, i) =>
+            val t = line.trim
+            val code = if (Seq("//", "/*", "*").exists(t.startsWith)) "" else t.split(" //")(0)
+            formatTokens.filter(code.contains).map(tok => s"$f:${i + 1} $tok")
+          }
+        }
+      finally walk.close()
+    assert(sites.isEmpty, s"chain paths outside ChainStore.scala: ${sites.mkString(", ")}")
+  }
 }

@@ -194,8 +194,9 @@ class PlanSpec extends AnyFunSuite {
       Seq((1L, "v0"), (2L, "w0")).toDF("doc_id", "s").write.parquet(s"$dir/chain/batch=0")
       Seq((1L, "v1")).toDF("doc_id", "s").write.parquet(s"$dir/chain/batch=1")
       Seq(Tuple1(1L)).toDF("doc_id").write.parquet(s"$dir/tomb/batch=1")
-      val resolved = graft.streaming.Events.tombstoneResolvedRows(
-        spark, spark.read.parquet(s"$dir/chain"), s"$dir/tomb")
+      import graft.streaming.ChainStore
+      val resolved = ChainStore.tombstoneResolved(spark.read.parquet(s"$dir/chain"),
+        ChainStore.tombstoneAggregate(spark, s"$dir/tomb", "doc_id", None), "doc_id")
       resolved.collect() // AQE finalizes the executed plan
       val plan = resolved.queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin"), s"no broadcast join:\n$plan")
@@ -256,7 +257,7 @@ class PlanSpec extends AnyFunSuite {
     // skipped file was opened, at planning time (explicit data schema,
     // no footer inference) or execution time (partition pruning)
     import spark.implicits._
-    import graft.streaming.Events
+    import graft.streaming.ChainStore
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType),
@@ -276,17 +277,17 @@ class PlanSpec extends AnyFunSuite {
             "NOT A PARQUET FILE".getBytes)
         }
       }
-      val pruned = Events.prunedChainRows(spark, s"$dir/chain", 1L, Seq(2), Some(schema))
+      val pruned = ChainStore.prunedChainRows(spark, s"$dir/chain", 1L, Seq(2), Some(schema))
       assert(pruned.collect().map(_.getLong(0)).toSet == Set(2L, 12L))
       // epoch bound alone must also file-skip: batch=2/bucket=2 is poison
-      val epochPruned = Events.prunedChainRows(spark, s"$dir/chain", 0L, Seq(2), Some(schema))
+      val epochPruned = ChainStore.prunedChainRows(spark, s"$dir/chain", 0L, Seq(2), Some(schema))
       assert(epochPruned.collect().map(_.getLong(0)).toSet == Set(2L))
       // an empty delta reads NOTHING (empty In folds to false)
-      assert(Events.prunedChainRows(spark, s"$dir/chain", 1L, Nil, Some(schema)).isEmpty)
+      assert(ChainStore.prunedChainRows(spark, s"$dir/chain", 1L, Nil, Some(schema)).isEmpty)
       // control: an UNpruned read does hit the poison — the corruption
       // is real, so the passes above certify actual file skipping
       intercept[Throwable] {
-        Events.prunedChainRows(spark, s"$dir/chain", 2L, (0 to 3), Some(schema)).collect()
+        ChainStore.prunedChainRows(spark, s"$dir/chain", 2L, (0 to 3), Some(schema)).collect()
       }
     } finally {
       import scala.jdk.CollectionConverters._
@@ -304,7 +305,7 @@ class PlanSpec extends AnyFunSuite {
     // verdict chain's two prior-fetch shapes.
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    import graft.streaming.Events
+    import graft.streaming.ChainStore
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType),
@@ -316,12 +317,12 @@ class PlanSpec extends AnyFunSuite {
     try {
       for (e <- 0 to 1)
         (0L until 32L).map(i => (i, i / 2, 0.9)).toDF("doc_id", "partner_id", "jaccard")
-          .withColumn("bucket", Events.chainBucket(col("doc_id")))
+          .withColumn("bucket", ChainStore.chainBucket(col("doc_id")))
           .repartition(col("bucket"))
           .write.partitionBy("bucket").parquet(s"$dir/verdict/batch=$e")
       // (a) the LWW fetch: the bucket predicate must live in
       // PartitionFilters (planning-time file skip), not PushedFilters
-      val fetch = Events.prunedChainRows(spark, s"$dir/verdict", 1L, Seq(3, 7), Some(schema))
+      val fetch = ChainStore.prunedChainRows(spark, s"$dir/verdict", 1L, Seq(3, 7), Some(schema))
       fetch.collect()
       val scan = fetch.queryExecution.executedPlan.collectLeaves().collectFirst {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s

@@ -1,5 +1,7 @@
 package graft
 
+import graft.streaming.{Chain, ChainStore, Fold}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -88,13 +90,21 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** Fold the `(k, v, n)` LWW chain `root/sink` through its store. */
+  private def foldKvn(root: java.nio.file.Path): Unit = {
+    val chain = Chain("sink", StructType(Seq(StructField("k", StringType),
+      StructField("v", LongType), StructField("n", LongType))), fold = Fold.Lww)
+    new ChainStore(root, "k", Seq(chain)).fold(TestSpark.spark, Seq(chain), None)
+  }
+
   test("delta-chain compaction preserves random LWW relations") {
     val spark = TestSpark.spark
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, max_by, struct}
     val rng = new scala.util.Random(23L)
     for (trial <- 0 until 5) {
-      val sink = java.nio.file.Files.createTempDirectory(s"graft_compact_prop_$trial")
+      val root = java.nio.file.Files.createTempDirectory(s"graft_compact_prop_$trial")
+      val sink = root.resolve("sink")
       try {
         val nEpochs = 2 + rng.nextInt(4)
         for (e <- 0 until nEpochs) {
@@ -109,14 +119,14 @@ class PropertySpec extends AnyFunSuite {
           .select(col("k"), col("s.v"), col("s.n"))
           .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
         val before = lww()
-        graft.streaming.Events.compactDeltaChain(spark, sink.toString, Seq("k"))
+        foldKvn(root)
         assert(lww() == before, s"trial $trial: consumer relation changed")
         val dirs = new java.io.File(sink.toString).listFiles()
           .filter(f => f.isDirectory && f.getName.startsWith("batch=")).length
         assert(dirs == 1, s"trial $trial: $dirs delta dirs remain")
       } finally {
         import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(sink).sorted(java.util.Comparator.reverseOrder())
+        java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
           .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }
@@ -128,7 +138,8 @@ class PropertySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, max_by, struct}
     val rng = new scala.util.Random(31L)
     for (trial <- 0 until 6) {
-      val sink = java.nio.file.Files.createTempDirectory(s"graft_crash_prop_$trial")
+      val root = java.nio.file.Files.createTempDirectory(s"graft_crash_prop_$trial")
+      val sink = root.resolve("sink")
       try {
         val nEpochs = 2 + rng.nextInt(4)
         for (e <- 0 until nEpochs) {
@@ -167,14 +178,14 @@ class PropertySpec extends AnyFunSuite {
               java.nio.file.Paths.get(s"$sink/_compact_tmp/part-0.parquet"),
               Array[Byte](9, 9, 9))
         }
-        graft.streaming.Events.compactDeltaChain(spark, sink.toString, Seq("k"))
+        foldKvn(root)
         assert(lww() == truth, s"trial $trial: crash recovery lost data")
         val leftovers = new java.io.File(sink.toString).listFiles().map(_.getName)
           .filterNot(_ == s"batch=$maxE")
         assert(leftovers.isEmpty, s"trial $trial: $leftovers")
       } finally {
         import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(sink).sorted(java.util.Comparator.reverseOrder())
+        java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
           .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }
@@ -186,7 +197,7 @@ class PropertySpec extends AnyFunSuite {
     // of arrivals with random re-deliveries (tombstoned, as the loop
     // writes them — every chain carries the arrival's rows, so the
     // shared tombstone is consistent), a random crash state planted in
-    // one random chain, then compactTombstonedChains over all of them —
+    // one random chain, then one store fold over all of them —
     // per-chain resolution must be byte-identical before and after,
     // every chain pruned to one base dir, tombstones consumed, and a
     // second run a no-op. The single-chain fuzz above covers the plain
@@ -198,9 +209,12 @@ class PropertySpec extends AnyFunSuite {
     for (trial <- 0 until 5) {
       val root = java.nio.file.Files.createTempDirectory(s"graft_tchain_prop_$trial")
       try {
-        val tomb = s"$root/tomb"
+        val tomb = s"$root/tombstones"
         val nChains = 2 + rng.nextInt(2)
         val chains = (0 until nChains).map(c => s"$root/chain$c")
+        val schema = StructType(Seq(StructField("doc_id", LongType), StructField("s", StringType)))
+        val chainOf = chains.zipWithIndex.map { case (d, c) => d -> Chain(s"chain$c", schema) }.toMap
+        val store = new ChainStore(root, "doc_id", chainOf.values.toSeq)
         val nEpochs = 2 + rng.nextInt(3)
         val seen = scala.collection.mutable.Set.empty[Long]
         for (e <- 0 until nEpochs) {
@@ -222,7 +236,7 @@ class PropertySpec extends AnyFunSuite {
         // the duplicate-row corruption a mid-swap/mid-prune crash can
         // produce on a whole-row chain is invisible to a Set
         def resolved(dir: String): Seq[(Long, String)] =
-          graft.streaming.Events.tombstoneResolvedRows(spark, spark.read.parquet(dir), tomb)
+          store.resolved(spark, chainOf(dir))
             .select(col("doc_id"), col("s"))
             .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
         val truth = chains.map(d => d -> resolved(d)).toMap
@@ -237,8 +251,7 @@ class PropertySpec extends AnyFunSuite {
             // old deltas were deleted — on a whole-row chain they are
             // consumed duplicates the entry-point recovery must prune,
             // or the re-fold bakes every pre-fold row in twice
-            val fold = graft.streaming.Events
-              .tombstoneResolvedRows(spark, spark.read.parquet(victim), tomb)
+            val fold = store.resolved(spark, chainOf(victim))
               .select(col("doc_id"), col("s")).collect()
               .map(r => (r.getLong(0), r.getString(1))).toSeq
             val target = java.nio.file.Paths.get(s"$victim/batch=$maxE")
@@ -272,7 +285,7 @@ class PropertySpec extends AnyFunSuite {
               java.nio.file.Paths.get(s"$victim/_compact_tmp/part-0.parquet"),
               Array[Byte](9, 9, 9))
         }
-        graft.streaming.Events.compactTombstonedChains(spark, chains, tomb)
+        store.fold(spark, chains.map(chainOf), None)
         def dirsOf(p: String): Set[String] =
           Option(new java.io.File(p).listFiles())
             .map(_.filter(f => f.isDirectory && f.getName.startsWith("batch="))
@@ -283,7 +296,7 @@ class PropertySpec extends AnyFunSuite {
         }
         assert(dirsOf(tomb).isEmpty, s"trial $trial: tombstones not consumed: ${dirsOf(tomb)}")
         // idempotent on the compacted store
-        graft.streaming.Events.compactTombstonedChains(spark, chains, tomb)
+        store.fold(spark, chains.map(chainOf), None)
         chains.foreach(d => assert(resolved(d) == truth(d), s"trial $trial: recompact drifted"))
       } finally {
         import scala.jdk.CollectionConverters._
@@ -654,7 +667,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("ledger changelog delta + last-write-wins + retraction equals the full next ledger") {
-    // The delta-chain contract of incrementalLedgerDeltaFromStoredState
+    // The delta-chain contract of incrementalLedgerDeltaCheckpointed
     // (the write streamIncrementalClean appends per epoch), pinned on a
     // random edited corpus WITH removals — the one leg the streaming
     // harness can't stage (its file source only adds or re-delivers):
@@ -690,9 +703,10 @@ class PropertySpec extends AnyFunSuite {
     } ++ (1 to 3).map(j => (maxId + j) -> s"retired document body number $j with padding")
     val oldDocs = old.toDF("doc_id", "text")
     val prior = Corpus.ledger(oldDocs).localCheckpoint(true)
-    val deltaRows = Snapshot.incrementalLedgerDeltaFromStoredState(
+    val deltaRows = Snapshot.incrementalLedgerDeltaCheckpointed(
       prior, Snapshot.manifest(oldDocs), Snapshot.manifest(newDocs),
-      Snapshot.postings(newDocs), newDocs)
+      Snapshot.InMemoryPostings(Snapshot.postings(newDocs)),
+      ids => newDocs.join(ids, Seq("doc_id"), "left_semi"), 25)
     val valueCols = Seq("cluster_id", "n_tokens", "quality", "lang_pred")
     val chain = prior.withColumn("batch", lit(0))
       .unionByName(deltaRows.withColumn("batch", lit(1)))
@@ -711,7 +725,7 @@ class PropertySpec extends AnyFunSuite {
       .count()
     assert(unretracted == want.size + 3,
       s"retraction negative-check: expected ${want.size} + 3 retired rows, got $unretracted")
-    Corpus.releaseCheckpoint(prior)
+    Seq(deltaRows, prior).foreach(Corpus.releaseCheckpoint)
   }
 
   test("stored-state chains converge to the from-scratch ledger across 4 chained edit epochs") {
@@ -825,9 +839,10 @@ class PropertySpec extends AnyFunSuite {
             // the lifecycle-closed form the production loop runs — its
             // intermediates are released inside, the result arrives as
             // one eager checkpoint (released with the chain at the end)
+            val corpus = resolve(corpusChain.toSeq)
             val delta = Snapshot.incrementalLedgerDeltaCheckpointed(
-              priorCk, priorManifestCk, nextManifest, postingsView,
-              resolve(corpusChain.toSeq))
+              priorCk, priorManifestCk, nextManifest, Snapshot.InMemoryPostings(postingsView),
+              ids => corpus.join(ids, Seq("doc_id"), "left_semi"), 25)
             // the production CARRY (ADVICE r12 high): a hash-unchanged
             // re-delivery seeds no recompute row while this epoch's
             // tombstone kills its older ledger rows — carry the prior
@@ -1154,8 +1169,8 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("additive-chain compaction survives random crash states without double-counting") {
-    // compactAdditiveChain shares the crash-safe swap + recovery with
-    // the LWW compactors, but its failure mode is sharper: a consumed
+    // the additive fold shares the crash-safe swap + recovery with
+    // the LWW and whole-row folds, but its failure mode is sharper: a consumed
     // delta left beside the folded base DOUBLE-COUNTS every key (LWW
     // merely resolves the duplicate away). Random signed chains, a
     // random crash state planted — including the mid-prune state where
@@ -1165,8 +1180,11 @@ class PropertySpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, sum}
     val rng = new scala.util.Random(53L)
+    val stats = Chain("sink", ChainStore.AdditiveSchema, fold = Fold.Additive)
     for (trial <- 0 until 5) {
-      val sink = java.nio.file.Files.createTempDirectory(s"graft_addcrash_$trial")
+      val root = java.nio.file.Files.createTempDirectory(s"graft_addcrash_$trial")
+      val sink = root.resolve("sink")
+      val store = new ChainStore(root, "cell", Seq(stats))
       try {
         val nEpochs = 2 + rng.nextInt(3)
         for (e <- 0 until nEpochs) {
@@ -1221,17 +1239,17 @@ class PropertySpec extends AnyFunSuite {
               java.nio.file.Paths.get(s"$sink/_compact_tmp/part-0.parquet"),
               Array[Byte](7, 7, 7))
         }
-        graft.streaming.Events.compactAdditiveChain(spark, sink.toString, Seq("cell"), "n")
+        store.fold(spark, Seq(stats), None)
         assert(sums() == truth, s"trial $trial: per-key sums drifted after crash recovery")
         val dirs = new java.io.File(sink.toString).listFiles()
           .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).toSet
         assert(dirs == Set(s"batch=$maxE"), s"trial $trial: not folded to one base: $dirs")
         // idempotent on the compacted store
-        graft.streaming.Events.compactAdditiveChain(spark, sink.toString, Seq("cell"), "n")
+        store.fold(spark, Seq(stats), None)
         assert(sums() == truth, s"trial $trial: recompaction drifted the sums")
       } finally {
         import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(sink).sorted(java.util.Comparator.reverseOrder())
+        java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
           .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }

@@ -231,7 +231,8 @@ class SnapshotSpec extends AnyFunSuite {
     val idx = Snapshot.postings(docs).persist()
     idx.count() // materialize: the cache RDD must register BEFORE the baseline
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val delta = Snapshot.incrementalLedgerDeltaCheckpointed(prior, oldM, newM, idx, docs)
+    val delta = Snapshot.incrementalLedgerDeltaCheckpointed(prior, oldM, newM,
+      Snapshot.InMemoryPostings(idx), ids => docs.join(ids, Seq("doc_id"), "left_semi"), 25)
     assert(delta.count() > 0)
     Corpus.releaseCheckpoint(delta)
     // releaseCheckpoint unpersists asynchronously — poll briefly
@@ -312,7 +313,7 @@ class SnapshotSpec extends AnyFunSuite {
       .select(col("doc_id"), size(col("shingles")).as("nsh"),
         explode(col("shingles")).as("s"))
     val seeds = Seq(1L).toDF("doc_id")
-    val (closed, edges) = Snapshot.pairGraphClosure(seeds, postings)
+    val (closed, edges) = Snapshot.pairGraphClosure(seeds, Snapshot.InMemoryPostings(postings), 25)
     assert(closed.collect().map(_.getLong(0)).toSet == Set(1L, 2L),
       "closure must be the seed's true near-dup component, not every doc sharing a stop-gram")
     // and the rounds' edges are exactly that component's pair set

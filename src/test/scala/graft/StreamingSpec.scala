@@ -1,7 +1,8 @@
 package graft
 
-import graft.streaming.{Chain, ChainStore, Events, LoopHooks}
+import graft.streaming.{Chain, ChainStore, Events, Fold, LoopHooks}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spec for §2.7: the streaming results must equal the same computation
@@ -569,12 +570,12 @@ class StreamingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_marker_spec")
     try {
       val p = dir.resolve("active_gen")
-      assert(Events.readGenMarker(p).isEmpty, "absent marker must read None")
+      assert(ChainStore.readGenMarker(p).isEmpty, "absent marker must read None")
       java.nio.file.Files.write(p, "3@17".getBytes("UTF-8"))
-      assert(Events.readGenMarker(p).contains((3, 17L)))
+      assert(ChainStore.readGenMarker(p).contains((3, 17L)))
       for (bad <- Seq("", "3", "@", "3@", "@17", "g@17", "3@e", "3@17@4")) {
         java.nio.file.Files.write(p, bad.getBytes("UTF-8"))
-        val e = intercept[IllegalStateException](Events.readGenMarker(p))
+        val e = intercept[IllegalStateException](ChainStore.readGenMarker(p))
         assert(e.getMessage.contains(p.toString) && e.getMessage.contains(bad),
           s"marker error for '$bad' lacks the path or contents: ${e.getMessage}")
       }
@@ -1205,7 +1206,7 @@ class StreamingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_bucket_proof")
     try {
       def stage(sub: String, df: org.apache.spark.sql.DataFrame, keyCol: String): Unit =
-        df.withColumn("bucket", Events.chainBucket(col(keyCol)))
+        df.withColumn("bucket", ChainStore.chainBucket(col(keyCol)))
           .repartition(col("bucket"))
           .write.partitionBy("bucket").parquet(s"$dir/$sub/batch=0")
       // assign-chain shape: (neighbor_id, cell)
@@ -1220,14 +1221,14 @@ class StreamingSpec extends AnyFunSuite {
       def proveOne(sub: String, keyCol: String,
                    schema: org.apache.spark.sql.types.StructType, id: Long): Unit = {
         val need = Seq(id).toDF(keyCol)
-          .select(Events.chainBucket(col(keyCol)).as("b"))
+          .select(ChainStore.chainBucket(col(keyCol)).as("b"))
           .collect().map(_.getInt(0)).toSet
         new java.io.File(s"$dir/$sub/batch=0").listFiles()
           .filter(d => d.getName.startsWith("bucket=") &&
             !need.contains(d.getName.stripPrefix("bucket=").toInt))
           .foreach(d => java.nio.file.Files.write(
             d.toPath.resolve("part-poison.parquet"), "NOT PARQUET".getBytes))
-        val got = Events.prunedChainRows(spark, s"$dir/$sub", 0L, need.toSeq, Some(schema))
+        val got = ChainStore.prunedChainRows(spark, s"$dir/$sub", 0L, need.toSeq, Some(schema))
           .filter(col(keyCol) === lit(id)).collect()
         assert(got.length == 1, s"$sub point lookup lost the row")
         intercept[Throwable] {
@@ -1268,7 +1269,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("additive-chain compaction preserves per-key sums, keeps zero-sum keys, leaves later deltas") {
-    // compactAdditiveChain's contract (the IVF cellstats chain): the
+    // the additive fold's contract (the IVF cellstats chain): the
     // resolution is a per-key SUM over signed rows — folding epochs
     // ≤ upTo must not change any consumer's sum, a fully-drained key
     // (sum 0) stays in the base (the additive algebra, not a consumer
@@ -1277,6 +1278,7 @@ class StreamingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_additive_compact")
     try {
       val chain = s"$dir/stats"
+      val stats = Chain("stats", ChainStore.AdditiveSchema, fold = Fold.Additive)
       Seq((1, 5L), (2, 3L), (3, 2L)).toDF("cell", "n").write.parquet(s"$chain/batch=0")
       Seq((1, -2L), (3, -2L)).toDF("cell", "n").write.parquet(s"$chain/batch=1")
       Seq((2, 4L), (4, 7L)).toDF("cell", "n").write.parquet(s"$chain/batch=2")
@@ -1284,7 +1286,7 @@ class StreamingSpec extends AnyFunSuite {
         .groupBy(col("cell")).agg(sum(col("n")).as("n"))
         .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
       val before = sums()
-      Events.compactAdditiveChain(spark, chain, Seq("cell"), "n", upTo = Some(1L))
+      new ChainStore(dir, "cell", Seq(stats)).fold(spark, Seq(stats), upTo = Some(1L))
       assert(sums() == before, "compaction changed a per-key sum")
       val dirs = new java.io.File(chain).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).toSet
@@ -1323,21 +1325,20 @@ class StreamingSpec extends AnyFunSuite {
       // two committed epochs, both zero-file: an empty bucketed write
       // (the loops' empty-delta shape) and an empty plain write
       Seq.empty[(Long, String)].toDF("doc_id", "v")
-        .withColumn("bucket", Events.chainBucket(col("doc_id")))
+        .withColumn("bucket", ChainStore.chainBucket(col("doc_id")))
         .write.partitionBy("bucket").parquet(s"$chain/batch=0")
       Seq.empty[(Long, String)].toDF("doc_id", "v").write.parquet(s"$chain/batch=1")
       // a TORN tombstone write: the dir exists, no committed files
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$tomb/batch=0"))
-      assert(Events.prunedChainRows(spark, chain, 1L, Seq(0, 1), Some(schema)).isEmpty)
+      assert(ChainStore.prunedChainRows(spark, chain, 1L, Seq(0, 1), Some(schema)).isEmpty)
       assert(store.live(spark, chainC, 1L, None, Some(Seq(0, 1))).isEmpty)
-      val agg = Events.tombstoneAggregate(spark, tomb, upTo = Some(0L))
+      val agg = ChainStore.tombstoneAggregate(spark, tomb, "doc_id", Some(0L))
       assert(agg.isDefined && agg.get.isEmpty,
         "torn tombstone dir must aggregate to empty, not fail analysis")
       assert(store.resolved(spark, chainC, Some(1L)).isEmpty)
-      // both compaction entry points must no-op, not throw
-      Events.compactDeltaChain(spark, chain, Seq("doc_id"), Some(1L), Nil, Some(schema))
-      Events.compactTombstonedChains(spark, Seq(chain), tomb,
-        dataSchemaFor = _ => Some(schema))
+      // the fold must no-op, not throw, whole-row or LWW
+      store.fold(spark, Seq(chainC), Some(1L))
+      store.fold(spark, Seq(chainC.copy(fold = Fold.Lww)), None)
       // the CONVERSE guard (ADVICE r13): a chain that holds ROWS yet
       // lacks the expected partition column is a mis-wired or
       // pre-layout store, and synthesizing a null column there would
@@ -1347,7 +1348,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq((1L, "a"), (2L, "b")).toDF("doc_id", "v")
         .coalesce(1).write.parquet(s"$populated/batch=0")
       val ex = intercept[IllegalStateException] {
-        Events.prunedChainRows(spark, populated, 0L, Seq(0, 1), Some(schema)).isEmpty
+        ChainStore.prunedChainRows(spark, populated, 0L, Seq(0, 1), Some(schema)).isEmpty
       }
       assert(ex.getMessage.contains("without the expected partition layout"), ex.getMessage)
     } finally {
@@ -1388,7 +1389,7 @@ class StreamingSpec extends AnyFunSuite {
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
           // the loops' gate: prior committed epochs as seen over
           // whatever layout the store currently has
-          epochsSeen += ((epoch, Events.committedEpochsBelow(sink, epoch)))
+          epochsSeen += ((epoch, ChainStore.committedEpochsBelow(sink, epoch)))
           batch.write.mode("overwrite").parquet(s"$sink/batch=$epoch")
           if (crashArmed) { crashArmed = false; throw new RuntimeException("injected post-write crash") }
         }
@@ -1404,7 +1405,9 @@ class StreamingSpec extends AnyFunSuite {
         stage(("b", 2L), ("c", 2L)); q1.processAllAvailable()
       } finally q1.stop()
       // full compaction: the chain folds into batch=1 (the max epoch)
-      Events.compactDeltaChain(spark, sink, Seq("k"))
+      val sinkChain = Chain("sink", schema, fold = Fold.Lww)
+      val store = new ChainStore(root, "k", Seq(sinkChain))
+      store.fold(spark, Seq(sinkChain), None)
       def dirs() = new java.io.File(sink).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).toSet
       assert(dirs() == Set("batch=1"), s"compaction did not fold: ${dirs()}")
@@ -1430,13 +1433,13 @@ class StreamingSpec extends AnyFunSuite {
         s"gate did not resolve the compacted snapshot as prior state: $epochsSeen")
       assert(dirs() == Set("batch=1", "batch=2"), s"replay wrote outside its epoch: ${dirs()}")
       // consumer truth: LWW equals the uncompacted-uncrashed history
-      val got = Events.resolveLww(spark.read.parquet(sink), Seq("k"))
+      val got = ChainStore.resolveLww(spark.read.parquet(sink), Seq("k"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet
       assert(got == Set(("a", 3L), ("b", 2L), ("c", 2L), ("d", 3L)), s"got $got")
       // and a second compaction over the healed chain is clean
-      Events.compactDeltaChain(spark, sink, Seq("k"))
+      store.fold(spark, Seq(sinkChain), None)
       assert(dirs() == Set("batch=2"))
-      val got2 = Events.resolveLww(spark.read.parquet(sink), Seq("k"))
+      val got2 = ChainStore.resolveLww(spark.read.parquet(sink), Seq("k"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet
       assert(got2 == got)
     } finally {
@@ -1610,7 +1613,11 @@ class StreamingSpec extends AnyFunSuite {
 
   test("delta-chain compaction preserves the LWW relation and prunes to one directory") {
     import spark.implicits._
-    val sink = java.nio.file.Files.createTempDirectory("graft_compact_spec")
+    val root = java.nio.file.Files.createTempDirectory("graft_compact_spec")
+    val sink = root.resolve("sink")
+    val chain = Chain("sink", StructType(Seq(StructField("k", StringType),
+      StructField("keep", LongType), StructField("n", LongType))), fold = Fold.Lww)
+    val store = new ChainStore(root, "k", Seq(chain))
     try {
       // hand-built chain: key A updated in every epoch, B in two, C once
       Seq(("a", 1L, 1L), ("b", 2L, 1L), ("c", 3L, 1L)).toDF("k", "keep", "n")
@@ -1626,13 +1633,13 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       val before = lww()
       assert(before == Set(("a", 1L, 3L), ("b", 2L, 2L), ("c", 3L, 1L)))
-      Events.compactDeltaChain(spark, sink.toString, Seq("k"))
+      store.fold(spark, Seq(chain), None)
       assert(lww() == before, "compaction must not change the consumer relation")
       def dirs() = new java.io.File(sink.toString).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).toSet
       assert(dirs() == Set("batch=2"), s"older deltas must be pruned: ${dirs()}")
       // idempotent: compacting a compacted chain is a no-op
-      Events.compactDeltaChain(spark, sink.toString, Seq("k"))
+      store.fold(spark, Seq(chain), None)
       assert(lww() == before && dirs() == Set("batch=2"))
       // MID-STREAM compaction (VERDICT r6 #7): the stream resumes after
       // the compaction and lands a new delta at the next epoch — the
@@ -1642,12 +1649,12 @@ class StreamingSpec extends AnyFunSuite {
         .write.parquet(s"$sink/batch=3")
       assert(lww() == Set(("a", 1L, 9L), ("b", 2L, 2L), ("c", 3L, 1L), ("d", 4L, 1L)),
         "post-compaction delta must override the snapshot per key")
-      Events.compactDeltaChain(spark, sink.toString, Seq("k"))
+      store.fold(spark, Seq(chain), None)
       assert(dirs() == Set("batch=3") &&
         lww() == Set(("a", 1L, 9L), ("b", 2L, 2L), ("c", 3L, 1L), ("d", 4L, 1L)))
     } finally {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(sink).sorted(java.util.Comparator.reverseOrder())
+      java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
@@ -1677,10 +1684,10 @@ class StreamingSpec extends AnyFunSuite {
         2L -> s"$base t2", // re-delivery: true text IS a near-dup of 1
         7L -> s"$base t7").toDF("doc_id", "text")
       def writeEpoch(docs: org.apache.spark.sql.DataFrame, epoch: Int): Unit = {
-        docs.withColumn("bucket", Events.chainBucket(col("doc_id")))
+        docs.withColumn("bucket", ChainStore.chainBucket(col("doc_id")))
           .write.partitionBy("bucket").parquet(s"$corpus/batch=$epoch")
         Snapshot.postings(docs)
-          .withColumn("bucket", Events.chainBucket(col("s")))
+          .withColumn("bucket", ChainStore.chainBucket(col("s")))
           .write.partitionBy("bucket").parquet(s"$bySh/batch=$epoch")
       }
       writeEpoch(e0, 0); writeEpoch(e1, 1)
@@ -1688,15 +1695,15 @@ class StreamingSpec extends AnyFunSuite {
       val finalDocs = e0.filter(col("doc_id") =!= 2L).unionByName(e1)
       val resolved = Snapshot.postings(finalDocs).persist()
       val docsSchema = e0.schema
+      val tombAgg = ChainStore.tombstoneAggregate(spark, tomb, "doc_id", Some(1L))
       val docsFor: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        ids => Events.tombstoneResolvedRows(spark,
-          Events.prunedChainRows(spark, corpus, 1L,
-            Events.collectBuckets(ids, col("doc_id")), Some(docsSchema)),
-          tomb, upTo = Some(1L))
+        ids => ChainStore.tombstoneResolved(
+          ChainStore.prunedChainRows(spark, corpus, 1L,
+            ChainStore.collectBuckets(ids, col("doc_id")), Some(docsSchema)),
+          tombAgg, "doc_id")
           .join(ids, Seq("doc_id"), "left_semi")
       val seeds = Seq(7L).toDF("doc_id")
-      val (cMem, eMem) = Snapshot.pairGraphClosure(seeds, resolved)
-      val tombAgg = Events.tombstoneAggregate(spark, tomb, upTo = Some(1L))
+      val (cMem, eMem) = Snapshot.pairGraphClosure(seeds, Snapshot.InMemoryPostings(resolved), 25)
       // the loops' chunk function: the shingle-bucketed chain's live rows
       // in the requested buckets, resolved through the epoch's aggregate
       val byShChain = Chain("by_shingle", resolved.schema, bucketBy = Some("s"))
@@ -1719,9 +1726,9 @@ class StreamingSpec extends AnyFunSuite {
       // (B) poison every bucket a {7}-frontier probe does not need; the
       // pruned reads must succeed, an unpruned control read must not
       val needDoc = Seq(7L).toDF("doc_id")
-        .select(Events.chainBucket(col("doc_id")).as("b")).collect().map(_.getInt(0)).toSet
+        .select(ChainStore.chainBucket(col("doc_id")).as("b")).collect().map(_.getInt(0)).toSet
       val needSh = resolved.filter(col("doc_id") === 7L)
-        .select(Events.chainBucket(col("s")).as("b")).distinct().collect().map(_.getInt(0)).toSet
+        .select(ChainStore.chainBucket(col("s")).as("b")).distinct().collect().map(_.getInt(0)).toSet
       def poison(store: String, keep: Set[Int]): Unit =
         new java.io.File(store).listFiles().filter(_.getName.startsWith("batch="))
           .flatMap(_.listFiles()).filter(d => d.getName.startsWith("bucket=") &&
@@ -1747,27 +1754,31 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("tombstoned compaction preserves a bucketed chain's layout (partitionColsFor)") {
-    // the incremental-clean store's chains are bucketed; compacting one
-    // without naming its layout silently flattens the bucket dirs into
-    // plain columns — row filters keep working, FILE skipping is lost.
-    // Pin: resolution unchanged, bucket dirs survive the swap, and the
-    // pruned probe still skips a poisoned non-matching bucket.
+    // the incremental-clean store's chains are bucketed; a fold that
+    // dropped the layout would flatten the bucket dirs into plain
+    // columns — row filters keep working, FILE skipping is lost, and the
+    // probes' explicit-schema col("bucket") filter no longer resolves.
+    // Pin: resolution unchanged, bucket dirs survive the swap (each row
+    // keeps its stored bucket), and the pruned probe still resolves and
+    // skips a poisoned non-matching bucket.
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_tombbucket")
     try {
       val chain = s"$dir/chain"; val tomb = s"$dir/tombstones"
+      val schema = StructType(Seq(StructField("doc_id", LongType), StructField("payload", StringType)))
+      val chainC = Chain("chain", schema, bucketBy = Some("doc_id"))
       def delta(rows: Seq[(Long, String, Int)], e: Int): Unit =
         rows.toDF("doc_id", "payload", "bucket")
           .write.partitionBy("bucket").parquet(s"$chain/batch=$e")
       delta(Seq((1L, "a0", 0), (2L, "b0-stale", 1)), 0)
       delta(Seq((2L, "b1", 1), (3L, "c1", 0)), 1) // re-delivers doc 2
       Seq(2L).toDF("doc_id").write.parquet(s"$tomb/batch=1")
-      def resolved() = Events.tombstoneResolvedRows(spark, spark.read.parquet(chain), tomb)
+      def resolved() = ChainStore.tombstoneResolved(spark.read.parquet(chain),
+        ChainStore.tombstoneAggregate(spark, tomb, "doc_id", None), "doc_id")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
       val want = Set((1L, "a0", 0), (2L, "b1", 1), (3L, "c1", 0))
       assert(resolved() == want, "staging wrong")
-      Events.compactTombstonedChains(spark, Seq(chain), tomb,
-        partitionColsFor = _ => Seq("bucket"))
+      new ChainStore(dir, "doc_id", Seq(chainC)).fold(spark, Seq(chainC), None)
       assert(resolved() == want, "compaction changed the resolved relation")
       val root = new java.io.File(chain)
       val batchDirs = root.listFiles().filter(_.getName.startsWith("batch=")).map(_.getName).toSet
@@ -1780,32 +1791,9 @@ class StreamingSpec extends AnyFunSuite {
       // file skipping still real: poison bucket 1, read bucket 0 only
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$chain/batch=1/bucket=1/poison.parquet"),
         "NOT PARQUET".getBytes)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("payload", org.apache.spark.sql.types.StringType)))
-      val got = Events.prunedChainRows(spark, chain, 1L, Seq(0), Some(schema))
+      val got = ChainStore.prunedChainRows(spark, chain, 1L, Seq(0), Some(schema))
         .collect().map(_.getLong(0)).toSet
       assert(got == Set(1L, 3L))
-      // ADVICE r11: a DEFAULT-ARG maintenance compaction (caller names no
-      // layout) must auto-detect and preserve the bucket dirs — a
-      // flattened base would make the production probes' explicit-schema
-      // col("bucket") filter fail to resolve, crashing the loop's next
-      // epoch, not merely losing file skipping. Stage a fresh delta so
-      // the compactor has work, then compact with NO partitionCols.
-      java.nio.file.Files.delete(java.nio.file.Paths.get(s"$chain/batch=1/bucket=1/poison.parquet"))
-      delta(Seq((4L, "d2", 1)), 2)
-      Events.compactTombstonedChains(spark, Seq(chain), tomb)
-      val want2 = want + ((4L, "d2", 1))
-      assert(resolved() == want2, "default-arg compaction changed the resolved relation")
-      assert(new java.io.File(root, "batch=2").listFiles()
-        .filter(_.isDirectory).map(_.getName).toSet == Set("bucket=0", "bucket=1"),
-        "default-arg compaction flattened the auto-detectable bucket layout")
-      // and the explicit-schema pruned probe still RESOLVES and skips
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$chain/batch=2/bucket=1/poison.parquet"),
-        "NOT PARQUET".getBytes)
-      val got2 = Events.prunedChainRows(spark, chain, 2L, Seq(0), Some(schema))
-        .collect().map(_.getLong(0)).toSet
-      assert(got2 == Set(1L, 3L))
     } finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
@@ -1817,10 +1805,13 @@ class StreamingSpec extends AnyFunSuite {
     // the in-stream compaction ingestNearDup schedules: `upTo` folds
     // only epochs ≤ the bound (a crash-replay of the in-flight epoch
     // must only ever overwrite ITSELF, never a base holding the whole
-    // chain), and `partitionCols` rewrites the base UNDER the store's
-    // bucket dirs so probe-side file pruning survives the rewrite
+    // chain), and a bucketed chain's base is rewritten UNDER its bucket
+    // dirs so probe-side file pruning survives the rewrite
     import spark.implicits._
-    val sink = java.nio.file.Files.createTempDirectory("graft_compact_prefix")
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact_prefix")
+    val sink = dir.resolve("sink")
+    val chain = Chain("sink", StructType(Seq(StructField("doc_id", LongType),
+      StructField("payload", LongType))), bucketBy = Some("doc_id"), fold = Fold.Lww)
     try {
       def delta(rows: Seq[(Long, Long, Int)], e: Int): Unit =
         rows.toDF("doc_id", "payload", "bucket")
@@ -1828,13 +1819,12 @@ class StreamingSpec extends AnyFunSuite {
       delta(Seq((1L, 10L, 0), (2L, 20L, 1)), 0)
       delta(Seq((3L, 30L, 0), (2L, 21L, 1)), 1)
       delta(Seq((4L, 40L, 1)), 2) // the in-flight epoch — must survive
-      def resolved() = Events.resolveLww(
+      def resolved() = ChainStore.resolveLww(
         spark.read.parquet(sink.toString), Seq("doc_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       val before = resolved()
       assert(before == Set((1L, 10L, 0), (2L, 21L, 1), (3L, 30L, 0), (4L, 40L, 1)))
-      Events.compactDeltaChain(spark, sink.toString, Seq("doc_id"),
-        upTo = Some(1L), partitionCols = Seq("bucket"))
+      new ChainStore(dir, "doc_id", Seq(chain)).fold(spark, Seq(chain), upTo = Some(1L))
       assert(resolved() == before, "prefix compaction changed the consumer relation")
       val root = new java.io.File(sink.toString)
       def dirs(f: java.io.File) = f.listFiles()
@@ -1845,12 +1835,12 @@ class StreamingSpec extends AnyFunSuite {
       assert(dirs(new java.io.File(root, "batch=1")) == Set("bucket=0", "bucket=1"),
         "compacted base lost its bucket layout")
       // and the pruned probe still file-skips over the compacted chain
-      val probed = Events.prunedChainRows(spark, sink.toString, 2L, Seq(0))
+      val probed = ChainStore.prunedChainRows(spark, sink.toString, 2L, Seq(0))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(probed == Set((1L, 10L), (3L, 30L)))
     } finally {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(sink).sorted(java.util.Comparator.reverseOrder())
+      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
@@ -1862,7 +1852,10 @@ class StreamingSpec extends AnyFunSuite {
     // and a compaction round trip; the generic compaction tests only
     // stage non-null values
     import spark.implicits._
-    val sink = java.nio.file.Files.createTempDirectory("graft_nullchain")
+    val dir = java.nio.file.Files.createTempDirectory("graft_nullchain")
+    val sink = dir.resolve("sink")
+    val chain = Chain("sink", StructType(Seq(StructField("doc_id", LongType),
+      StructField("partner_id", LongType), StructField("jaccard", DoubleType))), fold = Fold.Lww)
     try {
       Seq((11L, Option.empty[Long], Option.empty[Double]),
         (7L, Option(3L), Option(0.9)))
@@ -1872,21 +1865,21 @@ class StreamingSpec extends AnyFunSuite {
         (7L, Option.empty[Long], Option.empty[Double])) // null overwrites value
         .toDF("doc_id", "partner_id", "jaccard").write.parquet(s"$sink/batch=1")
       def resolved(): Set[(Long, Option[Long], Option[Double])] =
-        Events.resolveLww(spark.read.parquet(sink.toString), Seq("doc_id"))
+        ChainStore.resolveLww(spark.read.parquet(sink.toString), Seq("doc_id"))
           .collect().map(r => (r.getLong(0),
             if (r.isNullAt(1)) None else Some(r.getLong(1)),
             if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
       val want = Set[(Long, Option[Long], Option[Double])](
         (5L, None, None), (11L, Some(5L), Some(1.0)), (7L, None, None))
       assert(resolved() == want, "chain staged wrong")
-      Events.compactDeltaChain(spark, sink.toString, Seq("doc_id"))
+      new ChainStore(dir, "doc_id", Seq(chain)).fold(spark, Seq(chain), None)
       assert(resolved() == want, "compaction changed the null-bearing resolution")
       val dirs = new java.io.File(sink.toString).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).toSet
       assert(dirs == Set("batch=1"), s"older deltas must be pruned: $dirs")
     } finally {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(sink).sorted(java.util.Comparator.reverseOrder())
+      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
@@ -1895,11 +1888,15 @@ class StreamingSpec extends AnyFunSuite {
     // The store shape streamIncrementalClean keeps corpus/postings state
     // in: whole-row-group deltas (many rows per doc) + a tombstone chain
     // marking superseded doc versions — per-key LWW doesn't apply, so
-    // this is compactTombstonedChains' own contract: resolution
+    // this is the whole-row fold's own contract: resolution
     // identical before/after, one base dir left, tombstones consumed.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tchain")
-    val tomb = java.nio.file.Files.createTempDirectory("graft_tchain_tomb")
+    val root = java.nio.file.Files.createTempDirectory("graft_tchain")
+    val dir = root.resolve("chain")
+    val tomb = root.resolve("tombstones")
+    val chain = Chain("chain", StructType(Seq(StructField("doc_id", LongType),
+      StructField("s", StringType))))
+    val store = new ChainStore(root, "doc_id", Seq(chain))
     try {
       // doc 1 delivered at epoch 0 (2 rows) and RE-delivered at epoch 1
       // (3 rows, tombstoning the old version); docs 2 and 3 one epoch each
@@ -1923,7 +1920,7 @@ class StreamingSpec extends AnyFunSuite {
           .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       }
       assert(resolved() == want, "test chain staged wrong")
-      Events.compactTombstonedChains(spark, Seq(dir.toString), tomb.toString)
+      store.fold(spark, Seq(chain), None)
       def dirs(p: java.nio.file.Path) = Option(new java.io.File(p.toString).listFiles())
         .map(_.filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).toSet)
         .getOrElse(Set.empty[String])
@@ -1931,7 +1928,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(dirs(dir) == Set("batch=1"), s"older deltas must be pruned: ${dirs(dir)}")
       assert(dirs(tomb).isEmpty, s"consumed tombstones must be pruned: ${dirs(tomb)}")
       // idempotent on a consumed chain (empty tombstone dir ≡ none)
-      Events.compactTombstonedChains(spark, Seq(dir.toString), tomb.toString)
+      store.fold(spark, Seq(chain), None)
       assert(resolved() == want && dirs(dir) == Set("batch=1"))
       // stream resumes: epoch 2 re-delivers doc 2 and tombstones it; a
       // second compaction folds the late delta exactly
@@ -1939,13 +1936,12 @@ class StreamingSpec extends AnyFunSuite {
       Seq(Tuple1(2L)).toDF("doc_id").write.parquet(s"$tomb/batch=2")
       val want2 = want - ((2L, "bb")) + ((2L, "b2")) + ((4L, "dd"))
       assert(resolved() == want2, "post-compaction delta must supersede the base")
-      Events.compactTombstonedChains(spark, Seq(dir.toString), tomb.toString)
+      store.fold(spark, Seq(chain), None)
       assert(resolved() == want2 && dirs(dir) == Set("batch=2") && dirs(tomb).isEmpty)
     } finally {
       import scala.jdk.CollectionConverters._
-      for (p <- Seq(dir, tomb))
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(q => java.nio.file.Files.deleteIfExists(q))
+      java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(q => java.nio.file.Files.deleteIfExists(q))
     }
   }
 
@@ -1994,14 +1990,16 @@ class StreamingSpec extends AnyFunSuite {
   test("chains sharing a tombstone dir compact together without losing resolutions") {
     // The iclean store shape: corpus + postings + manifest chains all
     // resolve against ONE tombstone dir. Compacting them in one
-    // compactTombstonedChains call must preserve every chain's resolved
+    // store fold must preserve every chain's resolved
     // relation — the single-chain call would consume the shared
     // tombstones after the first chain and let the second chain's stale
     // rows leak into its compacted base (the review finding this pins).
     import spark.implicits._
-    val a = java.nio.file.Files.createTempDirectory("graft_mchain_a")
-    val b = java.nio.file.Files.createTempDirectory("graft_mchain_b")
-    val tomb = java.nio.file.Files.createTempDirectory("graft_mchain_tomb")
+    val root = java.nio.file.Files.createTempDirectory("graft_mchain")
+    val (a, b, tomb) = (root.resolve("a"), root.resolve("b"), root.resolve("tombstones"))
+    val schema = StructType(Seq(StructField("doc_id", LongType), StructField("v", StringType)))
+    val (chainA, chainB) = (Chain("a", schema), Chain("b", schema))
+    val store = new ChainStore(root, "doc_id", Seq(chainA, chainB))
     try {
       // doc 1 re-delivered at epoch 1; each chain carries its own rows
       Seq((1L, "a-old"), (2L, "a-b")).toDF("doc_id", "v").write.parquet(s"$a/batch=0")
@@ -2011,12 +2009,12 @@ class StreamingSpec extends AnyFunSuite {
       Seq((1L, "b-new1"), (1L, "b-new2")).toDF("doc_id", "v").write.parquet(s"$b/batch=1")
       Seq(Tuple1(1L)).toDF("doc_id").write.parquet(s"$tomb/batch=1")
       def resolved(dir: java.nio.file.Path): Set[(Long, String)] =
-        Events.tombstoneResolvedRows(spark, spark.read.parquet(dir.toString), tomb.toString)
+        store.resolved(spark, if (dir == a) chainA else chainB)
           .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       val wantA = Set((1L, "a-new"), (2L, "a-b"))
       val wantB = Set((1L, "b-new1"), (1L, "b-new2"), (2L, "b-b"))
       assert(resolved(a) == wantA && resolved(b) == wantB, "staging broken")
-      Events.compactTombstonedChains(spark, Seq(a.toString, b.toString), tomb.toString)
+      store.fold(spark, Seq(chainA, chainB), None)
       assert(resolved(a) == wantA, "chain A lost rows to shared-tombstone compaction")
       assert(resolved(b) == wantB, "chain B resurrected tombstoned rows")
       def dirs(p: java.nio.file.Path) = Option(new java.io.File(p.toString).listFiles())
@@ -2026,16 +2024,20 @@ class StreamingSpec extends AnyFunSuite {
       assert(dirs(tomb).isEmpty, "tombstones must be consumed only after BOTH chains swapped")
     } finally {
       import scala.jdk.CollectionConverters._
-      for (p <- Seq(a, b, tomb))
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(q => java.nio.file.Files.deleteIfExists(q))
+      java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(q => java.nio.file.Files.deleteIfExists(q))
     }
   }
 
   test("interrupted compaction recovers without data loss (ADVICE r6 crash states)") {
     import spark.implicits._
+    val chain = Chain("sink", StructType(Seq(StructField("k", StringType),
+      StructField("keep", LongType), StructField("n", LongType))), fold = Fold.Lww)
+    def fold(sink: java.nio.file.Path): Unit =
+      new ChainStore(sink.getParent, "k", Seq(chain)).fold(spark, Seq(chain), None)
     def withChain(f: java.nio.file.Path => Unit): Unit = {
-      val sink = java.nio.file.Files.createTempDirectory("graft_compact_crash")
+      val root = java.nio.file.Files.createTempDirectory("graft_compact_crash")
+      val sink = root.resolve("sink")
       try {
         Seq(("a", 1L, 1L), ("b", 2L, 1L)).toDF("k", "keep", "n").write.parquet(s"$sink/batch=0")
         Seq(("a", 1L, 2L), ("c", 3L, 1L)).toDF("k", "keep", "n").write.parquet(s"$sink/batch=1")
@@ -2043,7 +2045,7 @@ class StreamingSpec extends AnyFunSuite {
         f(sink)
       } finally {
         import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(sink).sorted(java.util.Comparator.reverseOrder())
+        java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
           .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }
@@ -2071,7 +2073,7 @@ class StreamingSpec extends AnyFunSuite {
       snapshotInto(sink, markerEpoch = 2L)
       java.nio.file.Files.move(sink.resolve("batch=2"), sink.resolve("_compact_old"))
       assert(lww(sink) != truth, "precondition: the visible chain is damaged")
-      Events.compactDeltaChain(spark, sink.toString, Seq("k"))
+      fold(sink)
       assert(lww(sink) == truth, "recovery must restore the stranded snapshot's data")
       val dirs = new java.io.File(sink.toString).listFiles().map(_.getName).toSet
       assert(dirs == Set("batch=2"), s"aside + older deltas pruned, got $dirs")
@@ -2083,7 +2085,7 @@ class StreamingSpec extends AnyFunSuite {
       java.nio.file.Files.write(
         sink.resolve("_compact_tmp").resolve("_graft_target_epoch"),
         "2".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Events.compactDeltaChain(spark, sink.toString, Seq("k"))
+      fold(sink)
       assert(lww(sink) == truth, "an intact chain must win over a stale snapshot")
     }
     // crash DURING the snapshot write (no marker): incomplete tmp discarded
@@ -2091,7 +2093,7 @@ class StreamingSpec extends AnyFunSuite {
       java.nio.file.Files.createDirectories(sink.resolve("_compact_tmp"))
       java.nio.file.Files.write(sink.resolve("_compact_tmp").resolve("part-00000.parquet"),
         Array[Byte](1, 2, 3)) // torn write, not valid parquet
-      Events.compactDeltaChain(spark, sink.toString, Seq("k"))
+      fold(sink)
       assert(lww(sink) == truth)
     }
   }
