@@ -403,13 +403,13 @@ object Corpus {
     *
     * `maxShingleDf` is the 100 TB skew-cap recipe ([[Dedup
     * .ngramJaccard]]'s doc). The incremental loop maintains the SAME
-    * capped ledger delta-stably via the capped
-    * [[Snapshot.incrementalLedgerFromStoredState]] overload — it
-    * additionally reads the prior epoch's posting index to detect cap
-    * CROSSINGS (a delta can push a shingle's global df across the cap,
-    * flipping edges between docs the delta never names) and seeds
-    * their blast radius; SnapshotSpec pins capped-incremental equal to
-    * this from-scratch form row-for-row.
+    * capped ledger delta-stably via
+    * [[Snapshot.incrementalLedgerDeltaCheckpointedCapped]] — it
+    * additionally reads the delta docs' prior postings and the prior
+    * hot set to detect cap CROSSINGS (a delta can push a shingle's
+    * global df across the cap, flipping edges between docs the delta
+    * never names) and seeds their blast radius; SnapshotSpec pins
+    * capped-incremental equal to this from-scratch form row-for-row.
     */
   def ledger(docs: DataFrame, maxShingleDf: Option[Int] = None,
              ckptOut: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame = {

@@ -211,12 +211,12 @@ object Snapshot {
     def release(): Unit = inner.release()
   }
 
-  /** The cap-crossing machinery shared by the in-memory capped overload
-    * and the stored-chain capped delta ([[incrementalLedgerDeltaCheckpointedCapped]]):
+  /** The cap-crossing machinery of the capped chain form
+    * ([[incrementalLedgerDeltaCheckpointedCapped]]):
     * given the epoch's delta ids, the UNCAPPED new-index probe, the
     * delta docs' NEW posting rows (supplied by the caller — a
     * maintained-index deployment reads its own just-written delta back
-    * rather than re-shingling the arrival; the stored-DF form passes
+    * rather than re-shingling the arrival; a caller without one passes
     * `probe.forDocs(deltaIds)`), their OLD posting rows and the prior
     * epoch's hot set, returns (extra closure seeds, the NEXT hot set as
     * an eager checkpoint, the caches to unpersist once the closure has
@@ -547,147 +547,25 @@ object Snapshot {
     * away, or phantom shingle edges re-introduce the stale text into
     * the pair graph.
     *
-    * This overload runs the UNCAPPED pair graph. The `maxShingleDf`
-    * skew cap — the default recipe at web scale — is NOT a plain
-    * parameter here because a capped pair graph is not delta-stable
-    * from THIS state alone: the cap prunes shingles by GLOBAL document
-    * frequency, and a delta doc adding or removing one occurrence can
-    * push a shingle across the cap, creating or destroying capped
-    * edges between UNTOUCHED docs (not seeds, not mates — and the
-    * flipped shingle may exist only in a removed doc's old text, which
-    * no current-epoch relation records). The capped overload below
-    * therefore additionally takes the PRIOR epoch's posting index
-    * ([[ShingleDfCap]]) — state a maintained-index deployment already
-    * holds — and recovers exactness by seeding every cap CROSSING's
-    * blast radius; see its doc.
+    * This form runs the UNCAPPED pair graph. The `maxShingleDf` skew
+    * cap is not delta-stable from THIS state alone: a delta occurrence
+    * can push a shingle across the cap and flip capped edges between
+    * docs the delta never names. The capped loop runs the chain form,
+    * [[incrementalLedgerDeltaCheckpointedCapped]], which also reads the
+    * delta docs' prior postings and the prior hot set and seeds every
+    * cap CROSSING's blast radius; see its doc.
     */
   def incrementalLedgerFromStoredState(prior: DataFrame, oldManifest: DataFrame,
                                        newManifest: DataFrame, postings: DataFrame,
                                        newDocs: DataFrame, maxRounds: Int = 25): DataFrame = {
     val (recomputed, closure, deltaIds, _) =
-      recomputedLedgerRows(prior, oldManifest, newManifest, postings, newDocs, maxRounds)
+      recomputedLedgerRows(prior, oldManifest, newManifest, InMemoryPostings(postings),
+        ids => newDocs.join(ids, Seq("doc_id"), "left_semi"), maxRounds)
     // carry forward every prior ledger row the delta provably cannot
     // touch (not in the closure, not named by the delta)
     val carried = prior
       .join(closure, Seq("doc_id"), "left_anti")
       .join(deltaIds, Seq("doc_id"), "left_anti")
-    recomputed.unionByName(carried)
-  }
-
-  /** The extra stored state the CAPPED incremental loop reads: the
-    * `maxShingleDf` cap itself plus the PRIOR epoch's posting index
-    * (exactly [[postings]] of the old snapshot — the maintained-index
-    * chain BEFORE the epoch's delta is applied, so a deployment that
-    * maintains the index per [[incrementalLedgerFromStoredState]]'s
-    * contract already has it). The old index is what makes the cap
-    * delta-stable: a crossing shingle may survive only in a REMOVED
-    * doc's old text, visible in no current-epoch relation.
-    */
-  final case class ShingleDfCap(maxDf: Int, oldPostings: DataFrame)
-
-  /** CAPPED [[incrementalLedgerFromStoredState]]: the next ledger under
-    * the `maxShingleDf` skew cap ([[graft.operators.Dedup.ngramJaccard]]'s
-    * 100 TB recipe — shingles with document frequency > cap are excluded
-    * from the pair join; `n1`/`n2` stay full set sizes, so the capped
-    * Jaccard is the same lower bound the batch family computes).
-    * Provably equal to `Corpus.ledger(newDocs, Some(cap.maxDf))`
-    * recomputed from scratch (SnapshotSpec pins row-for-row equality
-    * across multi-epoch chains with engineered cap crossings;
-    * PropertySpec fuzzes random edit chains).
-    *
-    * Why the uncapped seeds are not enough: the capped edge predicate
-    * depends on the epoch's GLOBAL per-shingle document frequency, and
-    * a delta occurrence can push a shingle ACROSS the cap, flipping
-    * capped edges between docs the delta never names (each endpoint
-    * merely HOLDS the crossing shingle). The closure must therefore
-    * also seed every cap crossing's blast radius — and any flipped
-    * edge's endpoints hold a crossing shingle by definition, so that
-    * blast radius is exact:
-    *
-    *  1. TOUCHED shingles = shingles of delta docs' old rows
-    *     (`cap.oldPostings` ⋉ delta ids — changed/removed old text) ∪
-    *     delta docs' new rows (`postings` ⋉ delta ids). Only these can
-    *     change df: every other shingle's holder set is identical in
-    *     both snapshots.
-    *  2. Per touched shingle, `df_new` is ONE count over the new index
-    *     restricted to the touched shingles (on a hash-bucketed stored
-    *     index this prunes to the touched shingles' buckets — df
-    *     changes only in delta buckets), and `df_old = df_new − shift`
-    *     where shift = (new delta holders − old delta holders), a
-    *     delta-sized aggregate — untouched docs' contributions cancel,
-    *     so the OLD index is read only for the delta's own rows.
-    *  3. CROSSING shingles are those where `df_old > cap` and
-    *     `df_new > cap` disagree. Extra seeds = the crossing shingles'
-    *     new-corpus holders (their capped edge sets may have flipped)
-    *     — plus, through the shared core, their prior cluster mates
-    *     (canonical re-election), exactly like delta docs.
-    *  4. The closure and the recompute then run over the CAPPED new
-    *     index (hot shingles dropped; `nsh` stays the full set size) —
-    *     the identical predicate `ngramJaccardPairs` applies, so
-    *     closure components equal the from-scratch capped components.
-    *
-    * Carry soundness under the cap: a carried doc's new component
-    * contains no seed, so no member holds a crossing shingle and every
-    * member's text is unchanged — a flipped edge between two members
-    * would require a SHARED crossing shingle (inter counts only shared
-    * surviving shingles; n1/n2 are text-derived), making both seeds.
-    * Member edges are therefore identical in both epochs' capped
-    * graphs and the component (hence its min label) is unchanged.
-    *
-    * Scale shape of THIS overload: the crossing detection and closure
-    * are delta-proportional (delta-sized aggregates plus ONE
-    * touched-shingle-restricted index count), but the PRIOR hot set is
-    * derived here with one full pass over the supplied old index —
-    * the honest cost of the stateless stored-DataFrame form, which
-    * receives no hot snapshot to advance from. The chain deployment
-    * doesn't pay it: [[incrementalLedgerDeltaCheckpointedCapped]]
-    * advances a PERSISTED hot snapshot from the delta's crossings
-    * (exact by induction) and caps the bucket-pruned
-    * [[PostingsProbe]] reads against it broadcast —
-    * [[graft.streaming.Events.streamIncrementalClean]]'s capped mode
-    * runs that loop with every per-epoch read delta-shaped.
-    *
-    * No defaults on this overload (Scala permits them on only one
-    * alternative); pass `maxRounds = 25` for the standard bound.
-    */
-  def incrementalLedgerFromStoredState(prior: DataFrame, oldManifest: DataFrame,
-                                       newManifest: DataFrame, postings: DataFrame,
-                                       newDocs: DataFrame, cap: ShingleDfCap,
-                                       maxRounds: Int): DataFrame = {
-    val lap = incrLap(detail = true)
-    val delta = diff(oldManifest, newManifest)
-      .localCheckpoint(true) // delta-sized; read by seeds, crossing detection, carry fence
-    lap("manifest diff")
-    val deltaIds = delta.select(col("doc_id"))
-    val probe = InMemoryPostings(postings)
-    // PRIOR hot set, derived from the supplied old index (the stored-
-    // chain loop reads its persisted hot snapshot here instead) — the
-    // ONE shared boundary definition, Dedup.hotShingles
-    val hotPrior = Dedup.hotShingles(cap.oldPostings, cap.maxDf)
-    val (extraSeeds, hotNext, caches) =
-      try capCrossings(deltaIds, probe, probe.forDocs(deltaIds),
-        cap.oldPostings.join(deltaIds, Seq("doc_id"), "left_semi"), hotPrior, cap.maxDf)
-      catch { case t: Throwable => Corpus.releaseCheckpoint(delta); throw t }
-    val core =
-      try recomputedLedgerRowsFromDelta(prior, newManifest, CappedPostings(probe, hotNext),
-        ids => newDocs.join(ids, Seq("doc_id"), "left_semi"), maxRounds, lap, delta,
-        Some(extraSeeds))
-      catch { case t: Throwable =>
-        Seq(delta, hotNext, extraSeeds).foreach(Corpus.releaseCheckpoint)
-        throw t
-      } finally {
-        // the caches are fully consumed by the time the core returns:
-        // seeds checkpoint eagerly at closure entry, the closure rounds
-        // and CC labels checkpoint inside, and the lazy result reads
-        // only docsFor(closed) + labels — never the index
-        caches.foreach(_.unpersist(blocking = false))
-      }
-    Corpus.releaseCheckpoint(hotNext) // closure consumed it round-by-round
-    Corpus.releaseCheckpoint(extraSeeds) // folded into the seeds checkpoint
-    val (recomputed, closure, dIds, _) = core
-    val carried = prior
-      .join(closure, Seq("doc_id"), "left_anti")
-      .join(dIds, Seq("doc_id"), "left_anti")
     recomputed.unionByName(carried)
   }
 
@@ -760,7 +638,24 @@ object Snapshot {
     * [[Corpus.releaseCheckpoint]].
     * [[graft.streaming.Events.streamIncrementalClean]]'s capped mode
     * consumes this per micro-batch; spec-pinned equal to the batch
-    * `Corpus.ledger(corpus, cap)` the same way the uncapped loop is.
+    * `Corpus.ledger(corpus, cap)` the same way the uncapped loop is
+    * (SnapshotSpec's engineered up/down crossings, PropertySpec's
+    * random edit chains).
+    *
+    * Why the uncapped seeds are not enough: the capped edge predicate
+    * depends on the epoch's GLOBAL per-shingle document frequency, and
+    * a delta occurrence can push a shingle ACROSS the cap, flipping
+    * capped edges between docs the delta never names (each endpoint
+    * merely HOLDS the crossing shingle; the shingle may survive only in
+    * a removed doc's old text). [[capCrossings]] seeds every crossing
+    * shingle's new-corpus holders, and the closure and recompute run
+    * over the CAPPED new index (hot shingles dropped; `nsh` stays the
+    * full set size), the predicate `ngramJaccardPairs` applies. Carry
+    * soundness: a carried doc's new component contains no seed, so no
+    * member holds a crossing shingle and every member's text is
+    * unchanged — a flipped edge between two members would need a
+    * SHARED crossing shingle, making both seeds — so the component and
+    * its min label are unchanged.
     */
   def incrementalLedgerDeltaCheckpointedCapped(
       prior: DataFrame, oldManifest: DataFrame, newManifest: DataFrame,
@@ -826,13 +721,6 @@ object Snapshot {
     * checkpointed form releases — the full form's result reads them
     * lazily, so IT must leave them alive.
     */
-  private def recomputedLedgerRows(prior: DataFrame, oldManifest: DataFrame,
-                                   newManifest: DataFrame, postings: DataFrame,
-                                   newDocs: DataFrame, maxRounds: Int)
-      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) =
-    recomputedLedgerRows(prior, oldManifest, newManifest, InMemoryPostings(postings),
-      ids => newDocs.join(ids, Seq("doc_id"), "left_semi"), maxRounds)
-
   private def recomputedLedgerRows(prior: DataFrame, oldManifest: DataFrame,
                                    newManifest: DataFrame, postings: PostingsProbe,
                                    docsFor: DataFrame => DataFrame, maxRounds: Int)

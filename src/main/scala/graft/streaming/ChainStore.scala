@@ -408,12 +408,7 @@ private[graft] object ChainStore {
   * (persisted), the retired keys (removed ∪ re-delivered) and whether
   * there are any. */
 private[graft] final case class Retirements(prior: Option[DataFrame], retired: DataFrame,
-                                            any: Boolean) {
-  def release(): Unit = {
-    retired.unpersist(blocking = false)
-    prior.foreach(_.unpersist(blocking = false))
-  }
-}
+                                            any: Boolean)
 
 /** The tombstoned delta-chain store behind the ingest loops.
   * [[Events.streamIncrementalClean]] and [[Events.ingestNearDup]] run on
@@ -548,10 +543,10 @@ private[graft] class ChainStore(root: Path, keyCol: String, protected val declar
   def resolved(spark: SparkSession, c: Chain, upTo: Option[Long] = None): DataFrame =
     folded(c, rows(spark, c, upTo), tombstoneAggregate(spark, tombstoneDir, keyCol, upTo))
 
-  /** The per-key max tombstone epoch up to `upTo`, persisted (shared by
-    * every probe of an epoch); None without tombstones. */
-  def tombstones(spark: SparkSession, upTo: Long): Option[DataFrame] =
-    tombstoneAggregate(spark, tombstoneDir, keyCol, Some(upTo)).map(_.persist())
+  /** The per-key max tombstone epoch up to `upTo`, persisted in `scope`
+    * (shared by every probe of an epoch); None without tombstones. */
+  def tombstones(spark: SparkSession, upTo: Long, scope: EpochScope): Option[DataFrame] =
+    tombstoneAggregate(spark, tombstoneDir, keyCol, Some(upTo)).map(scope.persist)
 
   /** The epoch's retired keys: the removals plus the RE-DELIVERED
     * arrivals, i.e. those the `probe` chain already holds live. One
@@ -560,17 +555,18 @@ private[graft] class ChainStore(root: Path, keyCol: String, protected val declar
     * to the arrivals' buckets and resolved through the PRIOR tombstones,
     * so a removed-then-re-added key is new whatever the compaction
     * timing. With no `committed` prior state nothing is re-delivered.
-    * `arrivalIds` is the arrivals' key column. */
+    * `arrivalIds` is the arrivals' key column. Both caches are held in
+    * `scope`. */
   def retirements(spark: SparkSession, epoch: Long, committed: Boolean, probe: Chain,
-                  removals: DataFrame, arrivalIds: DataFrame): Retirements = {
-    val prior = tombstones(spark, epoch - 1)
+                  removals: DataFrame, arrivalIds: DataFrame, scope: EpochScope): Retirements = {
+    val prior = tombstones(spark, epoch - 1, scope)
     val redelivered =
       if (!committed) removals.limit(0)
       else arrivalIds.join(
         live(spark, probe, epoch - 1, prior, Some(bucketsOf(probe, arrivalIds)))
           .select(col(keyCol)),
         Seq(keyCol), "left_semi")
-    val retired = removals.unionByName(redelivered).persist()
+    val retired = scope.persist(removals.unionByName(redelivered))
     Retirements(prior, retired, !retired.isEmpty)
   }
 
@@ -580,9 +576,9 @@ private[graft] class ChainStore(root: Path, keyCol: String, protected val declar
     if (!r.any) Seq.empty
     else Seq(() => r.retired.write.mode("overwrite").parquet(s"$tombstoneDir/batch=$epoch"))
 
-  /** Run `body` with the epoch's tombstone aggregate = the PRIOR
-    * epochs' aggregate ⊕ this batch's retired keys at `epoch` — no
-    * second chain read — and release it afterwards. The epoch exceeds
+  /** The epoch's tombstone aggregate = the PRIOR epochs' aggregate ⊕
+    * this batch's retired keys at `epoch` — no second chain read — held
+    * in `scope`. The epoch exceeds
     * every prior one, so the per-key max is exact, and a crashed
     * attempt's own-epoch tombstone dir holds the same recomputed set, so
     * leaving it out of `prior` loses nothing on replay. Both arms of the
@@ -591,19 +587,14 @@ private[graft] class ChainStore(root: Path, keyCol: String, protected val declar
     * would otherwise seed duplicate keys on the first-ever retirement
     * epoch, fanning out every chain row of that key in the left_outer
     * liveness probes downstream. Without retirements it IS `prior`. */
-  def withEpochTombstones[T](r: Retirements, epoch: Long)(body: Option[DataFrame] => T): T = {
-    val tombs =
-      if (!r.any) r.prior
-      else {
-        val ours = r.retired.select(col(keyCol)).withColumn("tomb_epoch", lit(epoch))
-        Some(r.prior.fold(ours)(p => p.unionByName(ours))
-          .groupBy(col(keyCol))
-          .agg(max(col("tomb_epoch")).as("tomb_epoch"))
-          .persist())
-      }
-    try body(tombs)
-    finally tombs.filterNot(t => r.prior.exists(_ eq t)).foreach(_.unpersist(blocking = false))
-  }
+  def epochTombstones(r: Retirements, epoch: Long, scope: EpochScope): Option[DataFrame] =
+    if (!r.any) r.prior
+    else {
+      val ours = r.retired.select(col(keyCol)).withColumn("tomb_epoch", lit(epoch))
+      Some(scope.persist(r.prior.fold(ours)(p => p.unionByName(ours))
+        .groupBy(col(keyCol))
+        .agg(max(col("tomb_epoch")).as("tomb_epoch"))))
+    }
 
   protected def onCadence(epoch: Long, every: Int): Boolean = epoch > 0 && epoch % every.toLong == 0
 
@@ -821,9 +812,9 @@ private[graft] final class GenerationalStore(root: java.nio.file.Path, keyCol: S
   /** [[ChainStore.retirements]] probed against the commit generation's
     * chain. */
   def retirements(spark: SparkSession, epoch: Long, commitGen: Int,
-                  removals: DataFrame, arrivalIds: DataFrame): Retirements =
+                  removals: DataFrame, arrivalIds: DataFrame, scope: EpochScope): Retirements =
     retirements(spark, epoch, committedBefore(commitGen, epoch), primaryAt(commitGen),
-      removals, arrivalIds)
+      removals, arrivalIds, scope)
 
   /** The retired keys' live rows in generation g's primary chain before
     * this epoch (bucket-pruned), for the negative side of g's additive
@@ -850,15 +841,12 @@ private[graft] final class GenerationalStore(root: java.nio.file.Path, keyCol: S
   // ---- migration epoch ----
 
   /** Run one migration-mode epoch's `body` with its tombstone aggregate
-    * (prior ⊕ this epoch's retirements), a note for the `Migration`
-    * meter and a stage lap. */
+    * (prior ⊕ this epoch's retirements, held in `scope`), a note for the
+    * `Migration` meter and a stage lap. */
   def migrationEpoch(spark: SparkSession, epoch: Long, roles: Roles, r: Retirements,
-                     hooks: LoopHooks)(body: Migration => Unit): Unit = {
-    val m = withEpochTombstones(r, epoch) { tombstones =>
-      val m = new Migration(spark, epoch, roles, tombstones, hooks)
-      body(m)
-      m
-    }
+                     hooks: LoopHooks, scope: EpochScope)(body: Migration => Unit): Unit = {
+    val m = new Migration(spark, epoch, roles, epochTombstones(r, epoch, scope), hooks)
+    body(m)
     hooks.record(LoopHooks.Migration, epoch)(m.note.toString.trim)
   }
 

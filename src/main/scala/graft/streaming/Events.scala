@@ -454,9 +454,8 @@ object Events {
       df.coalesce(1).write.mode("append").parquet(watched.toString)
   }
 
-  /** Drain-with-replay harness around a restartable bounded streaming
-    * query — ONE implementation shared by the four ingest loops
-    * (VERDICT r13 #7; it previously lived inline in [[ingestNearDup]]).
+  /** Drain-with-replay around a restartable bounded streaming query,
+    * run by [[epochLoop]] for every loop on it.
     * `drain()` is `processAllAvailable()`, and when an ARMED crash
     * injection (the loop's [[LoopHooks]] crash point) kills the query it
     * restarts the stream on the SAME checkpoint exactly once, so the
@@ -466,8 +465,8 @@ object Events {
     * crash injection armed a StreamingQueryException propagates (a
     * real failure must fail the run, not silently re-run an epoch).
     */
-  private final class ReplayingDrain(startQ: () => StreamingQuery, crash: CrashPoint) {
-    private val expectCrash = crash.configured
+  private final class ReplayingDrain(startQ: () => StreamingQuery, hooks: LoopHooks) {
+    private val expectCrash = hooks.crash.isDefined
     private var q: StreamingQuery = startQ()
     // the restart is keyed on the INJECTED crash having actually fired
     // (the marker TYPE travels in the exception's cause chain), not on
@@ -488,6 +487,101 @@ object Events {
       }
     /** Terminal cleanup: progress dump + stop (the loops' `finally`). */
     def finish(name: String): Unit = { dumpProgress(name, q); q.stop() }
+  }
+
+  /** One arrival of a loop's staging script: the frame appended to the
+    * watched dir (built when its turn comes), and the outer laps marked
+    * after staging it and after draining it, where given. A grouped lap
+    * (the migrate scripts' "drains 2-5 (…)") leaves the inner arrivals'
+    * labels out. */
+  private final class Arrival(frame: => DataFrame, val stageLap: Option[String],
+                              val drainLap: Option[String]) {
+    def stage(watched: java.nio.file.Path): Unit = frame.stageArrival(watched)
+  }
+
+  private object Arrival {
+    private val Epochs = Map(1 -> "bootstrap epoch", 2 -> "incremental epoch", 3 -> "removal epoch")
+
+    /** Arrival `i` of the standard script, with the laps "stage arrival
+      * i" and "drain i (<its epoch kind>)". */
+    def standard(i: Int)(frame: => DataFrame): Arrival =
+      new Arrival(frame, Some(s"stage arrival $i"), Some(s"drain $i (${Epochs(i)})"))
+
+    /** An arrival with no stage lap, whose drain lap (if any) closes a
+      * group of drains. */
+    def grouped(drainLap: Option[String] = None)(frame: => DataFrame): Arrival =
+      new Arrival(frame, None, drainLap)
+  }
+
+  /** What [[epochLoop]] hands a loop's setup: the loop's session, its
+    * staged table, the raw stream watching the arrivals, its store dir
+    * and a scope held for the whole run. */
+  private final case class Staging(ss: SparkSession, table: DataFrame, stream: DataFrame,
+                                   store: java.nio.file.Path, scope: EpochScope)
+
+  /** What a loop's setup hands back to [[epochLoop]]: the streaming query
+    * (the raw stream or an aggregate of it), the arrival script, the
+    * consumer view read back after the last drain (`view` names it in
+    * its lap) and the epoch body. */
+  private final case class LoopPlan(query: DataFrame, arrivals: Seq[Arrival], view: String,
+                                    consumer: () => DataFrame)(
+                                    val body: (DataFrame, Epoch) => Unit)
+
+  /** THE staging harness of the streaming loops: everything a loop does
+    * around its epoch body, written once.
+    *
+    *  1. The loop session, the staged `table` read and the three scratch
+    *     dirs ([[withScratchDirs]]: `<name>_src`, `<name>_<middle>`,
+    *     `<name>_ckpt`). `setup` builds the loop's stores and script on
+    *     them; the "setup" lap closes it, so the first stage lap times
+    *     staging alone.
+    *  2. The arrival script, one [[Arrival]] at a time through
+    *     [[ArrivalStager.stageArrival]]. Arrival 1 lands before the query
+    *     starts, so the bootstrap epoch sees all of it.
+    *  3. The `foreachBatch` query on the checkpoint dir (Append, or
+    *     Update for an aggregated stream), drained after every arrival by
+    *     a [[ReplayingDrain]] built from `hooks`. Each micro-batch runs
+    *     the body inside [[EpochScope.around]], so every frame the epoch
+    *     registers is released when the body returns or throws.
+    *  4. The consumer view, [[detach]]ed onto the caller's session, with
+    *     its "consumer read-back (…)" lap; frames in the run's own scope
+    *     are released after it.
+    */
+  private def epochLoop(spark: SparkSession, sfDir: String, name: String, hooks: LoopHooks,
+                        table: String = "documents", middle: String = "store",
+                        mode: OutputMode = OutputMode.Append)(
+                        setup: Staging => LoopPlan): DataFrame = {
+    val ss = loopSession(spark)
+    val staged = java.nio.file.Paths.get(s"$sfDir/$table.parquet")
+    withScratchDirs(name, java.nio.file.Files.size(staged), middle) { (src, store, ckpt) =>
+      EpochScope.around { runScope =>
+        // stage-lap timer: the marks land in graft.Laps when Bench
+        // collects, splitting the query's cost into setup, staging,
+        // drains and read-back
+        val outerLap = graft.operators.Snapshot.incrLap()
+        val rows = ss.read.parquet(staged.toString)
+        val plan = setup(Staging(ss, rows, ss.readStream.schema(rows.schema).parquet(src.toString),
+          store, runScope))
+        outerLap("setup")
+        def stage(a: Arrival): Unit = { a.stage(src); a.stageLap.foreach(outerLap) }
+        stage(plan.arrivals.head)
+        val dr = new ReplayingDrain(() => plan.query.writeStream
+          .outputMode(mode)
+          .option("checkpointLocation", ckpt.toString)
+          .foreachBatch { (batch: DataFrame, epoch: Long) =>
+            EpochScope.around(scope => plan.body(batch, Epoch(batch.sparkSession, epoch, scope)))
+          }
+          .start(), hooks)
+        try plan.arrivals.zipWithIndex.foreach { case (a, i) =>
+          if (i > 0) stage(a)
+          dr.drain()
+          a.drainLap.foreach(outerLap)
+        } finally dr.finish(name)
+        val out = detach(spark, plan.consumer())
+        outerLap(s"consumer read-back (${plan.view})")
+        out
+      }
+    }
   }
 
   /** The standard bounded-input flush: two micro-batches of one sentinel
@@ -970,17 +1064,18 @@ object Events {
     */
   def ingestDecontamToFiles(spark: SparkSession, sfDir: String,
                             hooks: LoopHooks = LoopHooks.none): DataFrame = {
-    val ss = loopSession(spark)
     val docsPath = s"$sfDir/documents.parquet"
-    val (testShingles, bfB) = testBloom(ss, docsPath)
-    try
-      changelogLoop(ss, sfDir, "graft_idecon_files", hooks)(decontamGate(_, bfB)) { (store, chain) =>
-        // consumer view: LWW per key across the delta chain, then the
-        // exact confirm drops Bloom false positives — on the loop's
-        // session, whose registry the confirm's shingle kernel resolves in
-        detach(spark, confirmSuspects(store.resolved(ss, chain), docsPath))
-      }
-    finally graft.operators.Corpus.releaseCheckpoint(testShingles)
+    changelogLoop(spark, sfDir, "graft_idecon_files", hooks) { (stream, runScope) =>
+      // the test-shingle checkpoint lives for the whole run
+      val (testShingles, bfB) = testBloom(stream.sparkSession, docsPath)
+      runScope.adopt(testShingles)
+      decontamGate(stream, bfB)
+    } { (store, chain, ss) =>
+      // consumer view: LWW per key across the delta chain, then the
+      // exact confirm drops Bloom false positives — on the loop's
+      // session, whose registry the confirm's shingle kernel resolves in
+      confirmSuspects(store.resolved(ss, chain), docsPath)
+    }
   }
 
   /** Continuous corpus profiling during ingestion: the streaming twin of
@@ -1012,8 +1107,9 @@ object Events {
 
   /** Continuous corpus construction with the INCREMENTAL clean ledger
     * maintained per micro-batch — the streaming composition of the
-    * ingestion harness and the snapshot loop
-    * ([[graft.operators.Snapshot.incrementalLedgerFromStoredState]]):
+    * ingestion harness ([[epochLoop]]) and the snapshot loop's
+    * changelog form
+    * ([[graft.operators.Snapshot.incrementalLedgerDeltaCheckpointed]]):
     * every arrival batch IS a snapshot delta, and EVERY corpus-derived
     * state the update consumes is maintained as stored per-epoch delta
     * chains, so the per-batch TEXT work — hashing, shingling — is
@@ -1121,14 +1217,10 @@ object Events {
     */
   def streamIncrementalClean(spark: SparkSession, sfDir: String,
                              maxShingleDf: Option[Int] = None,
-                             hooks: LoopHooks = LoopHooks.none): DataFrame = {
-    import graft.operators.{Corpus, Snapshot}
-    val ss = loopSession(spark)
-    val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
-    val stagedBytes = java.nio.file.Files.size(staged)
-    withScratchDirs("graft_iclean", stagedBytes, "store") { (src, storeDir, ckpt) =>
-      val outerLap = graft.operators.Snapshot.incrLap()
-      val docs = ss.read.parquet(staged.toString)
+                             hooks: LoopHooks = LoopHooks.none): DataFrame =
+    epochLoop(spark, sfDir, "graft_iclean", hooks) { st =>
+      import graft.operators.{Corpus, Snapshot}
+      val docs = st.table
       // chain value schemas, derived ONCE at setup (analysis only)
       val corpus = Chain("corpus", docs.schema, bucketBy = Some("doc_id"))
       val postings = Chain("postings_by_shingle", Snapshot.postings(docs.limit(0)).schema,
@@ -1136,250 +1228,14 @@ object Events {
       val manifest = Chain("manifest", Snapshot.ManifestSchema, commits = true)
       val ledger = Chain("ledger", Corpus.LedgerSchema, fold = Fold.Lww, commits = true)
       val hot = Chain("hot_shingles", StructType(Seq(StructField("s", LongType))), snapshot = true)
-      val store = new ChainStore(storeDir, "doc_id",
+      val store = new ChainStore(st.store, "doc_id",
         Seq(corpus, postings, manifest, ledger) ++ maxShingleDf.map(_ => hot))
-      val stale = docs.filter(col("doc_id") % RedeliveryMod === 0)
-        .withColumn("text", concat(col("text"), lit(" [stale draft]")))
-      // negative-id shadow copies: removed again in arrival 3 — the
-      // retraction leg's staging (see the query doc)
-      val shadows = docs.filter(col("doc_id") % ShadowMod === ShadowRem)
-        .withColumn("doc_id", -(col("doc_id") + lit(1L)))
-      // boundary mark (ADVICE r14): everything since the timer's
-      // creation — staged-table reads, schema derivation — is
-      // SETUP, not staging; without this the first stage lap
-      // absorbs it and inflates the bench split's staging part
-      outerLap("setup")
-      docs.filter(col("doc_id") % 5 =!= 0).unionByName(stale)
-        .unionByName(shadows)
-        .stageArrival(src)
-      outerLap("stage arrival 1")
-      val stream = ss.readStream.schema(docs.schema).parquet(src.toString)
+      val (shadows, stale) = shadowsAndStale(docs)
       val crash = hooks.crashPoint
-      def startQ(): StreamingQuery = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          val bss = batch.sparkSession
-          val lap = Snapshot.incrLap()
-          store.recover()
-          // removals are tombstone-only arrivals (text IS NULL): they
-          // land in NO state chain — only the shared tombstone write
-          // below (and the manifest-diff machinery does the rest)
-          val removals = batch.filter(col("text").isNull)
-            .select(col("doc_id"))
-          // 1. land the arrival's ADDS, read back for the epoch's
-          // consumers
-          store.writeDelta(corpus, epoch, batch.filter(col("text").isNotNull))
-          val arrived = store.delta(bss, corpus, epoch)
-          lap(s"epoch $epoch: land arrival")
-          // 2. prior committed state: the ledger and manifest chains
-          // resolved at the commit gate, CACHED for the batch (each is
-          // consumed by several update stages; released after the
-          // epoch's write). The empty-prior arm's ledger runs the CC
-          // machinery on an empty pair graph, which still pins its
-          // edge-set checkpoint — collect and release it after the epoch
-          val bootCkpts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-          // the arrival's manifest, O(|batch|) map-only — persisted:
-          // consumed by the tombstone semi, the manifest delta write
-          // and the hash-unchanged re-delivery carry below
-          val batchManifest = Snapshot.manifest(arrived).persist()
-          val priorEpochOpt = store.committedBelow(epoch)
-          val (prior, priorManifest) = priorEpochOpt match {
-            case Some(e) => (store.resolved(bss, ledger, Some(e)).persist(),
-              store.resolved(bss, manifest, Some(e)).persist())
-            case None =>
-              // schema-correct empty state via the machinery itself —
-              // bootstrap then flows through the one verified code path
-              (Corpus.ledger(arrived.limit(0), ckptOut = Some(bootCkpts)).persist(),
-                Snapshot.manifest(arrived.limit(0)).persist())
-          }
-          try {
-            // 3. O(|batch|) state deltas — the only text hashed or
-            // shingled this epoch is the batch's own. Tombstones =
-            // re-delivered ids (already in the prior manifest) ∪
-            // REMOVED ids: one write retracts a removed doc from all
-            // four chains at once.
-            val tomb = priorManifest
-              .join(batchManifest.select(col("doc_id")), Seq("doc_id"), "left_semi")
-              .select(col("doc_id"))
-              .unionByName(removals)
-            val retirements = Retirements(None, tomb, !tomb.isEmpty)
-            lap(s"epoch $epoch: tombstones (incl. prior-state resolve)")
-            // 4. the epoch's three independent non-committing deltas
-            // — tombstones, the postings delta and the manifest delta
-            // (the commit gate's first half) — as ONE concurrent group
-            // (r20, guide §2.6 / VERDICT r19 #4): no read-after-write
-            // edge exists among them, and the committing ledger write
-            // stays last. A crash inside the group strands a SUBSET of
-            // deltas; the replay overwrites each idempotently.
-            concurrentWrites(store.tombstoneWrite(retirements, epoch) ++ Seq(
-              () => store.writeDelta(postings, epoch, Snapshot.postings(arrived)),
-              () => store.writeDelta(manifest, epoch, batchManifest)))
-            lap(s"epoch $epoch: store deltas (tombstone+postings+manifest, parallel)")
-            // spec hook (VERDICT r13 #3 — THE clean-loop crash state):
-            // die BETWEEN the two commit markers — the manifest
-            // `_SUCCESS` exists, the ledger write never starts; the
-            // replay resolves prior state from the last FULLY committed
-            // epoch. CAPPED incremental epochs defer to their own,
-            // strictly-worse hook below; a capped epoch-0 crash still
-            // fires here (a crash-armed run must always crash).
-            crash.fire(epoch, LoopHooks.EpochEnd, "between-commit-markers",
-              maxShingleDf.isEmpty || epoch == 0L)
-            // 5. the ledger write — the write that commits the epoch.
-            // Epoch 0 is the PRODUCTION bootstrap (see the query doc):
-            // gated on epoch == 0 (which implies no committed
-            // predecessor) so a later epoch with an uncommitted prior
-            // still resolves the stored chains generically.
-            if (epoch == 0L) {
-              // the bootstrap's posting relation: the epoch's OWN
-              // delta read back off the chain — re-shingling the
-              // arrival's text here would be the kernel's SECOND full
-              // pass this epoch (VERDICT r15 #6)
-              val postingsBack = store.delta(bss, postings, epoch)
-              // capped bootstrap: hot(0) off the same read-back,
-              // written BEFORE the committing ledger write so every
-              // committed epoch has its hot snapshot
-              maxShingleDf.foreach { capDf =>
-                store.writeDelta(hot, epoch, graft.operators.Dedup.hotShingles(postingsBack, capDf))
-              }
-              // release the batch compute's label checkpoint after
-              // the write — the bootstrap must leave the session as
-              // clean as every later epoch does
-              val ccOut = scala.collection.mutable.ListBuffer.empty[DataFrame]
-              try store.writeDelta(ledger, epoch, Corpus.ledgerFromPostings(arrived,
-                  postingsBack, maxShingleDf, ckptOut = Some(ccOut)))
-              finally ccOut.foreach(graft.operators.Corpus.releaseCheckpoint)
-              lap(s"epoch $epoch: ledger bootstrap (batch compute commits)")
-            } else {
-              // delta-scoped ledger update over the STORED chains —
-              // writing ONLY the recomputed rows (the epoch's changelog
-              // delta). ONE tombstone aggregate per epoch, shared by
-              // the next-manifest view (cached across its two
-              // consumers), every corpus-text read and every
-              // postings-bucket chunk of the closure
-              val tombAggE = store.tombstones(bss, epoch)
-              val nextManifest = store.live(bss, manifest, epoch, tombAggE).persist()
-              // corpus text pruned to the requested ids' doc buckets,
-              // then the exact semi gate — shared by the probe's
-              // frontier re-shingle AND the recompute's closure read
-              val docsFor: DataFrame => DataFrame = ids =>
-                store.liveFor(bss, corpus, epoch, tombAggE, ids)
-              // the stored probe: the closure reads only the buckets
-              // its frontiers touch, each at most once per epoch
-              val probe = new StoredPostingsProbe(docsFor,
-                buckets => store.live(bss, postings, epoch, tombAggE, Some(buckets)))
-              try {
-                // the CHECKPOINTED delta form: a long-running loop
-                // must not pin another blast-radius of intermediate
-                // checkpoint blocks every epoch — this one hands back
-                // a single released-after-write relation (and
-                // releases the probe's bucket chunks inside).
-                // CAPPED mode runs the capped twin, which also
-                // advances the epoch's hot-shingle snapshot from the
-                // prior committed one + the delta's cap crossings.
-                val (deltaRows, hotNextOpt) = maxShingleDf match {
-                  case None =>
-                    (Snapshot.incrementalLedgerDeltaCheckpointed(
-                      prior, priorManifest, nextManifest, probe, docsFor, 25), None)
-                  case Some(capDf) =>
-                    // prior hot snapshot: the latest committed epoch's
-                    // (an epoch-0 bootstrap always wrote one); the
-                    // no-predecessor arm is unreachable under replay
-                    // but stays schema-generic
-                    val hotPrior = store.priorSnapshot(bss, hot, epoch)
-                      .getOrElse(Snapshot.postings(arrived).select(col("s")).limit(0))
-                    // delta docs' OLD posting rows: re-shingle their
-                    // prior-epoch text off the corpus chain resolved AT
-                    // the predecessor — with its OWN tombstone bound:
-                    // the epoch's aggregate would resolve away text
-                    // this epoch superseded, which is exactly the text
-                    // whose shingles the df shift must count
-                    val priorE = priorEpochOpt.getOrElse(-1L)
-                    val tombAggPrev = store.tombstones(bss, priorE)
-                    try {
-                      val oldPostingsFor: DataFrame => DataFrame = ids =>
-                        Snapshot.postings(store.liveFor(bss, corpus, priorE, tombAggPrev, ids))
-                      // NEW-side delta postings: the epoch WROTE exactly
-                      // these rows two steps up, so hand the read-back
-                      // semi-joined to the delta ids instead of
-                      // re-shingling the arrival text a second time.
-                      // Equal by the chain contract: a delta id's
-                      // resolved corpus rows at this epoch are the
-                      // arrival's own — SnapshotSpec/StreamingSpec pin
-                      // the capped loop == batch ledger row-for-row.
-                      val newPostingsFor: DataFrame => DataFrame = ids =>
-                        store.delta(bss, postings, epoch).join(ids, Seq("doc_id"), "left_semi")
-                      val (d, h) = Snapshot.incrementalLedgerDeltaCheckpointedCapped(
-                        prior, priorManifest, nextManifest, probe, docsFor,
-                        25, capDf, hotPrior, oldPostingsFor, newPostingsFor)
-                      (d, Some(h))
-                    } finally tombAggPrev.foreach(_.unpersist(blocking = false))
-                }
-                // HASH-UNCHANGED re-deliveries (ADVICE r12, high):
-                // the manifest diff classifies a same-(doc_id, h)
-                // re-delivery as 'unchanged' — no recompute seed, no
-                // epoch-e ledger row — while this epoch's tombstone
-                // kills the doc's older rows; the layered ledger read
-                // would silently drop every unchanged re-crawled page.
-                // Carry the prior ledger row forward AT this epoch for
-                // any such doc the recompute didn't already re-emit
-                // (if its cluster neighborhood DID change it is in
-                // deltaRows and the recomputed row wins via the
-                // anti-join). Both joins are against batch-/delta-
-                // sized sides — broadcast semis over the already-cached
-                // prior, never a full shuffle.
-                val unchangedIds = priorManifest
-                  .join(batchManifest, Seq("doc_id", "h"), "left_semi")
-                  .select(col("doc_id"))
-                val carry = prior
-                  .join(unchangedIds, Seq("doc_id"), "left_semi")
-                  .join(deltaRows.select(col("doc_id")), Seq("doc_id"), "left_anti")
-                try {
-                  // capped: the epoch's hot snapshot lands BEFORE the
-                  // committing ledger write (idempotent overwrite on
-                  // replay) — inside this guard, or a failed hot write
-                  // strands both checkpoints (r15 review)
-                  hotNextOpt.foreach(store.writeDelta(hot, epoch, _))
-                  // capped mode's WORST replay point: the hot snapshot
-                  // is on disk, the committing ledger write never ran —
-                  // the replay must re-advance from the committed
-                  // PREDECESSOR's snapshot (StreamingSpec's capped
-                  // crash leg lands exactly here)
-                  crash.fire(epoch, LoopHooks.EpochEnd, "post-hot-write pre-ledger",
-                    hotNextOpt.isDefined)
-                  store.writeDelta(ledger, epoch, deltaRows.unionByName(carry))
-                } finally {
-                  graft.operators.Corpus.releaseCheckpoint(deltaRows)
-                  hotNextOpt.foreach(graft.operators.Corpus.releaseCheckpoint)
-                }
-                lap(s"epoch $epoch: ledger update (delta write commits)")
-              } finally {
-                probe.release() // idempotent; inner release is the contract
-                nextManifest.unpersist(blocking = false)
-                tombAggE.foreach(_.unpersist(blocking = false))
-              }
-            }
-          } finally {
-            prior.unpersist(blocking = false)
-            priorManifest.unpersist(blocking = false)
-            batchManifest.unpersist(blocking = false)
-            bootCkpts.foreach(graft.operators.Corpus.releaseCheckpoint)
-          }
-          // in-stream compaction of all four chains, plus capped
-          // mode's hot-snapshot prune (VERDICT r15 #4)
-          store.compact(bss, epoch, hooks)
-          hooks.record(LoopHooks.BatchRows, epoch)(batch.count())
-          hooks.record(LoopHooks.LedgerDeltaRows, epoch)(store.delta(bss, ledger, epoch).count())
-        }
-        .start()
-      val dr = new ReplayingDrain(() => startQ(), crash)
-      try {
-        dr.drain()
-        outerLap("drain 1 (bootstrap epoch)")
-        docs.filter(col("doc_id") % 5 === 0).stageArrival(src)
-        outerLap("stage arrival 2")
-        dr.drain()
-        outerLap("drain 2 (incremental epoch)")
+      LoopPlan(st.stream, Seq(
+        Arrival.standard(1)(docs.filter(col("doc_id") % 5 =!= 0).unionByName(stale)
+          .unionByName(shadows)),
+        Arrival.standard(2)(docs.filter(col("doc_id") % 5 === 0)),
         // arrival 3: RETRACT the shadows — tombstone-only rows (text
         // NULL), the crawler-delete signal — PLUS the unchanged
         // re-crawl wave: the %IdenticalRedeliveryMod docs arrive
@@ -1388,26 +1244,205 @@ object Events {
         // epoch's own re-delivery tombstone). The epoch must restore
         // the originals the shadows demoted; after it the corpus
         // equals `documents` exactly.
-        shadows.withColumn("text", lit(null).cast("string"))
-          .unionByName(docs.filter(col("doc_id") % IdenticalRedeliveryMod === 0))
-          .stageArrival(src)
-        outerLap("stage arrival 3")
-        dr.drain()
-        outerLap("drain 3 (removal epoch)")
-      } finally dr.finish("graft_iclean")
-      // consumer view: the resolved ledger chain's kept rows — the
-      // same filter incrementalCleanFromState applies
-      val last = store.committedBelow(Long.MaxValue).getOrElse(
-        throw new IllegalStateException("stream produced no committed ledger epoch"))
-      val kept = store.resolved(spark, ledger, Some(last))
-        .filter(col("doc_id") === col("cluster_id") && col("quality") >= 0.75)
-        .select(col("doc_id"), col("n_tokens"), col("quality"), col("lang_pred"))
-        .orderBy(col("doc_id"))
-      val out = detach(spark, kept)
-      outerLap("consumer read-back (resolved ledger view)")
-      out
+        Arrival.standard(3)(shadows.withColumn("text", lit(null).cast("string"))
+          .unionByName(docs.filter(col("doc_id") % IdenticalRedeliveryMod === 0)))),
+        // consumer view: the resolved ledger chain's kept rows — the
+        // same filter incrementalCleanFromState applies
+        "resolved ledger view", { () =>
+          val last = store.committedBelow(Long.MaxValue).getOrElse(
+            throw new IllegalStateException("stream produced no committed ledger epoch"))
+          store.resolved(spark, ledger, Some(last))
+            .filter(col("doc_id") === col("cluster_id") && col("quality") >= 0.75)
+            .select(col("doc_id"), col("n_tokens"), col("quality"), col("lang_pred"))
+            .orderBy(col("doc_id"))
+        }) { case (batch, Epoch(bss, epoch, scope)) =>
+        val lap = Snapshot.incrLap()
+        store.recover()
+        // removals are tombstone-only arrivals (text IS NULL): they
+        // land in NO state chain — only the shared tombstone write
+        // below (and the manifest-diff machinery does the rest)
+        val removals = batch.filter(col("text").isNull)
+          .select(col("doc_id"))
+        // 1. land the arrival's ADDS, read back for the epoch's
+        // consumers
+        store.writeDelta(corpus, epoch, batch.filter(col("text").isNotNull))
+        val arrived = store.delta(bss, corpus, epoch)
+        lap(s"epoch $epoch: land arrival")
+        // 2. prior committed state: the ledger and manifest chains
+        // resolved at the commit gate, CACHED for the batch (each is
+        // consumed by several update stages). The empty-prior arm's
+        // ledger runs the CC machinery on an empty pair graph, which
+        // still pins its edge-set checkpoint — the scope releases it.
+        // The arrival's manifest, O(|batch|) map-only, is persisted:
+        // consumed by the tombstone semi, the manifest delta write
+        // and the hash-unchanged re-delivery carry below
+        val batchManifest = scope.persist(Snapshot.manifest(arrived))
+        val priorEpochOpt = store.committedBelow(epoch)
+        // schema-correct empty state via the machinery itself —
+        // bootstrap then flows through the one verified code path
+        val prior = scope.persist(priorEpochOpt.fold(
+          Corpus.ledger(arrived.limit(0), ckptOut = scope.ckptOut))(
+          e => store.resolved(bss, ledger, Some(e))))
+        val priorManifest = scope.persist(priorEpochOpt.fold(
+          Snapshot.manifest(arrived.limit(0)))(e => store.resolved(bss, manifest, Some(e))))
+        // 3. O(|batch|) state deltas — the only text hashed or
+        // shingled this epoch is the batch's own. Tombstones =
+        // re-delivered ids (already in the prior manifest) ∪
+        // REMOVED ids: one write retracts a removed doc from all
+        // four chains at once.
+        val tomb = priorManifest
+          .join(batchManifest.select(col("doc_id")), Seq("doc_id"), "left_semi")
+          .select(col("doc_id"))
+          .unionByName(removals)
+        val retirements = Retirements(None, tomb, !tomb.isEmpty)
+        lap(s"epoch $epoch: tombstones (incl. prior-state resolve)")
+        // 4. the epoch's three independent non-committing deltas
+        // — tombstones, the postings delta and the manifest delta
+        // (the commit gate's first half) — as ONE concurrent group
+        // (r20, guide §2.6 / VERDICT r19 #4): no read-after-write
+        // edge exists among them, and the committing ledger write
+        // stays last. A crash inside the group strands a SUBSET of
+        // deltas; the replay overwrites each idempotently.
+        concurrentWrites(store.tombstoneWrite(retirements, epoch) ++ Seq(
+          () => store.writeDelta(postings, epoch, Snapshot.postings(arrived)),
+          () => store.writeDelta(manifest, epoch, batchManifest)))
+        lap(s"epoch $epoch: store deltas (tombstone+postings+manifest, parallel)")
+        // spec hook (VERDICT r13 #3 — THE clean-loop crash state):
+        // die BETWEEN the two commit markers — the manifest
+        // `_SUCCESS` exists, the ledger write never starts; the
+        // replay resolves prior state from the last FULLY committed
+        // epoch. CAPPED incremental epochs defer to their own,
+        // strictly-worse hook below; a capped epoch-0 crash still
+        // fires here (a crash-armed run must always crash).
+        crash.fire(epoch, LoopHooks.EpochEnd, "between-commit-markers",
+          maxShingleDf.isEmpty || epoch == 0L)
+        // 5. the ledger write — the write that commits the epoch.
+        // Epoch 0 is the PRODUCTION bootstrap (see the query doc):
+        // gated on epoch == 0 (which implies no committed
+        // predecessor) so a later epoch with an uncommitted prior
+        // still resolves the stored chains generically.
+        if (epoch == 0L) {
+          // the bootstrap's posting relation: the epoch's OWN
+          // delta read back off the chain — re-shingling the
+          // arrival's text here would be the kernel's SECOND full
+          // pass this epoch (VERDICT r15 #6)
+          val postingsBack = store.delta(bss, postings, epoch)
+          // capped bootstrap: hot(0) off the same read-back,
+          // written BEFORE the committing ledger write so every
+          // committed epoch has its hot snapshot
+          maxShingleDf.foreach { capDf =>
+            store.writeDelta(hot, epoch, graft.operators.Dedup.hotShingles(postingsBack, capDf))
+          }
+          // the batch compute's label checkpoint goes to the scope —
+          // the bootstrap leaves the session as clean as every later
+          // epoch does
+          store.writeDelta(ledger, epoch, Corpus.ledgerFromPostings(arrived,
+            postingsBack, maxShingleDf, ckptOut = scope.ckptOut))
+          lap(s"epoch $epoch: ledger bootstrap (batch compute commits)")
+        } else {
+          // delta-scoped ledger update over the STORED chains —
+          // writing ONLY the recomputed rows (the epoch's changelog
+          // delta). ONE tombstone aggregate per epoch, shared by
+          // the next-manifest view (cached across its two
+          // consumers), every corpus-text read and every
+          // postings-bucket chunk of the closure
+          val tombAggE = store.tombstones(bss, epoch, scope)
+          val nextManifest = scope.persist(store.live(bss, manifest, epoch, tombAggE))
+          // corpus text pruned to the requested ids' doc buckets,
+          // then the exact semi gate — shared by the probe's
+          // frontier re-shingle AND the recompute's closure read
+          val docsFor: DataFrame => DataFrame = ids =>
+            store.liveFor(bss, corpus, epoch, tombAggE, ids)
+          // the stored probe: the closure reads only the buckets
+          // its frontiers touch, each at most once per epoch, and
+          // the ledger call releases its bucket chunks inside
+          val probe = new StoredPostingsProbe(docsFor,
+            buckets => store.live(bss, postings, epoch, tombAggE, Some(buckets)))
+          // the CHECKPOINTED delta form: a long-running loop
+          // must not pin another blast-radius of intermediate
+          // checkpoint blocks every epoch — this one hands back
+          // a single relation, released with the scope.
+          // CAPPED mode runs the capped twin, which also
+          // advances the epoch's hot-shingle snapshot from the
+          // prior committed one + the delta's cap crossings.
+          val (deltaRows, hotNextOpt) = maxShingleDf match {
+            case None =>
+              (scope.adopt(Snapshot.incrementalLedgerDeltaCheckpointed(
+                prior, priorManifest, nextManifest, probe, docsFor, 25)), None)
+            case Some(capDf) =>
+              // prior hot snapshot: the latest committed epoch's
+              // (an epoch-0 bootstrap always wrote one); the
+              // no-predecessor arm is unreachable under replay
+              // but stays schema-generic
+              val hotPrior = store.priorSnapshot(bss, hot, epoch)
+                .getOrElse(Snapshot.postings(arrived).select(col("s")).limit(0))
+              // delta docs' OLD posting rows: re-shingle their
+              // prior-epoch text off the corpus chain resolved AT
+              // the predecessor — with its OWN tombstone bound:
+              // the epoch's aggregate would resolve away text
+              // this epoch superseded, which is exactly the text
+              // whose shingles the df shift must count
+              val priorE = priorEpochOpt.getOrElse(-1L)
+              val tombAggPrev = store.tombstones(bss, priorE, scope)
+              val oldPostingsFor: DataFrame => DataFrame = ids =>
+                Snapshot.postings(store.liveFor(bss, corpus, priorE, tombAggPrev, ids))
+              // NEW-side delta postings: the epoch WROTE exactly
+              // these rows two steps up, so hand the read-back
+              // semi-joined to the delta ids instead of
+              // re-shingling the arrival text a second time.
+              // Equal by the chain contract: a delta id's
+              // resolved corpus rows at this epoch are the
+              // arrival's own — SnapshotSpec/StreamingSpec pin
+              // the capped loop == batch ledger row-for-row.
+              val newPostingsFor: DataFrame => DataFrame = ids =>
+                store.delta(bss, postings, epoch).join(ids, Seq("doc_id"), "left_semi")
+              val (d, h) = Snapshot.incrementalLedgerDeltaCheckpointedCapped(
+                prior, priorManifest, nextManifest, probe, docsFor,
+                25, capDf, hotPrior, oldPostingsFor, newPostingsFor)
+              (scope.adopt(d), Some(scope.adopt(h)))
+          }
+          // HASH-UNCHANGED re-deliveries (ADVICE r12, high):
+          // the manifest diff classifies a same-(doc_id, h)
+          // re-delivery as 'unchanged' — no recompute seed, no
+          // epoch-e ledger row — while this epoch's tombstone
+          // kills the doc's older rows; the layered ledger read
+          // would silently drop every unchanged re-crawled page.
+          // Carry the prior ledger row forward AT this epoch for
+          // any such doc the recompute didn't already re-emit
+          // (if its cluster neighborhood DID change it is in
+          // deltaRows and the recomputed row wins via the
+          // anti-join). Both joins are against batch-/delta-
+          // sized sides — broadcast semis over the already-cached
+          // prior, never a full shuffle.
+          val unchangedIds = priorManifest
+            .join(batchManifest, Seq("doc_id", "h"), "left_semi")
+            .select(col("doc_id"))
+          val carry = prior
+            .join(unchangedIds, Seq("doc_id"), "left_semi")
+            .join(deltaRows.select(col("doc_id")), Seq("doc_id"), "left_anti")
+          // capped: the epoch's hot snapshot lands BEFORE the
+          // committing ledger write (idempotent overwrite on
+          // replay)
+          hotNextOpt.foreach(store.writeDelta(hot, epoch, _))
+          // capped mode's WORST replay point: the hot snapshot
+          // is on disk, the committing ledger write never ran —
+          // the replay must re-advance from the committed
+          // PREDECESSOR's snapshot (StreamingSpec's capped
+          // crash leg lands exactly here)
+          crash.fire(epoch, LoopHooks.EpochEnd, "post-hot-write pre-ledger",
+            hotNextOpt.isDefined)
+          store.writeDelta(ledger, epoch, deltaRows.unionByName(carry))
+          lap(s"epoch $epoch: ledger update (delta write commits)")
+        }
+        scope.afterRelease {
+          // in-stream compaction of all four chains, plus capped
+          // mode's hot-snapshot prune (VERDICT r15 #4)
+          store.compact(bss, epoch, hooks)
+          hooks.record(LoopHooks.BatchRows, epoch)(batch.count())
+          hooks.record(LoopHooks.LedgerDeltaRows, epoch)(store.delta(bss, ledger, epoch).count())
+        }
+      }
     }
-  }
 
   /** The PRODUCTION sink path for [[ingestDedup]] — the treatment
     * [[windowAggToFiles]] gives the windowing queries, applied to the
@@ -1439,52 +1474,43 @@ object Events {
     */
   def ingestDedupToFiles(spark: SparkSession, sfDir: String,
                          hooks: LoopHooks = LoopHooks.none): DataFrame =
-    changelogLoop(loopSession(spark), sfDir, "graft_ingest_files", hooks) { stream =>
+    changelogLoop(spark, sfDir, "graft_ingest_files", hooks) { (stream, _) =>
       stream
         .filter(graft.functions.TokenStats.tokenStats(col("text"))
           .getField("n_tokens") >= MinTokens)
         .groupBy(md5(col("text").cast("binary")).as("text_hash"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_arrivals"))
-    } { (store, chain) =>
+    } { (store, chain, _) =>
       // consumer view: last-write-wins per key across the delta chain
-      detach(spark, store.resolved(spark, chain).orderBy(col("text_hash")))
+      store.resolved(spark, chain).orderBy(col("text_hash"))
     }
 
   /** The body of the two Update-mode file-sink loops
-    * ([[ingestDedupToFiles]], [[ingestDecontamToFiles]]) on session
-    * `ss`: stage the corpus in two arrivals (doc_id % 5 split, so the
-    * second drain is a genuinely incremental micro-batch), run
-    * `aggregate` over the stream in UPDATE mode, and land each
-    * micro-batch's changed keys as the epoch's delta of a one-chain LWW
-    * store keyed by `text_hash`. The `DeltaRows` meter counts each
-    * delta's rows. `consume` reads the store before its scratch dirs
-    * go. */
-  private def changelogLoop(ss: SparkSession, sfDir: String, name: String, hooks: LoopHooks)(
-      aggregate: DataFrame => DataFrame)(consume: (ChainStore, Chain) => DataFrame): DataFrame = {
-    val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
-    withScratchDirs(name, java.nio.file.Files.size(staged), "sink") { (src, sink, ckpt) =>
-      val docs = ss.read.parquet(staged.toString)
-      docs.filter(col("doc_id") % 5 =!= 0).stageArrival(src)
-      val changed = aggregate(ss.readStream.schema(docs.schema).parquet(src.toString))
+    * ([[ingestDedupToFiles]], [[ingestDecontamToFiles]]) on
+    * [[epochLoop]]: stage the corpus in two arrivals (doc_id % 5 split,
+    * so the second drain is a genuinely incremental micro-batch), run
+    * `aggregate` over the stream in UPDATE mode (it may hold frames in
+    * the run's scope), and land each micro-batch's changed keys as the
+    * epoch's delta of a one-chain LWW store keyed by `text_hash`. The
+    * `DeltaRows` meter counts each delta's rows. `consume` builds the
+    * consumer view from the store (and the loop's session). */
+  private def changelogLoop(spark: SparkSession, sfDir: String, name: String, hooks: LoopHooks)(
+      aggregate: (DataFrame, EpochScope) => DataFrame)(
+      consume: (ChainStore, Chain, SparkSession) => DataFrame): DataFrame =
+    epochLoop(spark, sfDir, name, hooks, middle = "sink", mode = OutputMode.Update) { st =>
+      val changed = aggregate(st.stream, st.scope)
       val chain = Chain("changelog", changed.schema, fold = Fold.Lww)
-      val store = new ChainStore(sink, "text_hash", Seq(chain))
-      val q = changed.writeStream
-        .outputMode(OutputMode.Update)
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          val delta = if (hooks.wants(LoopHooks.DeltaRows)) batch.persist() else batch
+      val store = new ChainStore(st.store, "text_hash", Seq(chain))
+      LoopPlan(changed, Seq(
+        Arrival.standard(1)(st.table.filter(col("doc_id") % 5 =!= 0)),
+        Arrival.standard(2)(st.table.filter(col("doc_id") % 5 === 0))),
+        "resolved changelog view", () => consume(store, chain, st.ss)) {
+        case (batch, Epoch(_, epoch, scope)) =>
+          val delta = if (hooks.wants(LoopHooks.DeltaRows)) scope.persist(batch) else batch
           store.writeDelta(chain, epoch, delta)
-          hooks.record(LoopHooks.DeltaRows, epoch) { try delta.count() finally delta.unpersist() }
-        }
-        .start()
-      try {
-        q.processAllAvailable()
-        docs.filter(col("doc_id") % 5 === 0).stageArrival(src)
-        q.processAllAvailable()
-      } finally { dumpProgress(name, q); q.stop() }
-      consume(store, chain)
+          hooks.record(LoopHooks.DeltaRows, epoch)(delta.count())
+      }
     }
-  }
 
   /** Continuous NEAR-dup-deduplicating ingestion against a MAINTAINED
     * MinHash-LSH index — the sketch-dedup stage between
@@ -1572,17 +1598,10 @@ object Events {
     * concurrent tombstone/shingle/band group. */
   def ingestNearDup(spark: SparkSession, sfDir: String,
                     maxBandDf: Option[Int] = None,
-                    hooks: LoopHooks = LoopHooks.none): DataFrame = {
-    import graft.operators.Dedup
-    val ss = loopSession(spark)
-    val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
-    val stagedBytes = java.nio.file.Files.size(staged)
-    withScratchDirs("graft_neardup", stagedBytes, "store") { (src, storeDir, ckpt) =>
-      // stage-lap timer (VERDICT r13 #4): stage/drain/consumer marks
-      // land in graft.Laps when Bench collects, so the bench record
-      // splits this query's cost into staging vs loop vs read-back
-      val outerLap = graft.operators.Snapshot.incrLap()
-      val docs = ss.read.parquet(staged.toString)
+                    hooks: LoopHooks = LoopHooks.none): DataFrame =
+    epochLoop(spark, sfDir, "graft_neardup", hooks) { st =>
+      import graft.operators.Dedup
+      val docs = st.table
       // chain value schemas, derived once at setup (analysis only)
       val shingleSets = Dedup.shingleHashSets(docs.limit(0))
       val bands = Chain("bands", Dedup.bandRows(Dedup.minhashSignatures(shingleSets)).schema,
@@ -1599,21 +1618,14 @@ object Events {
       // full-index df pass ever runs after the bootstrap epoch.
       val hotBands = Chain("hot_bands", StructType(Seq(StructField("band_id", IntegerType),
         StructField("band_hash", LongType))), snapshot = true)
-      val store = new ChainStore(storeDir, "doc_id",
+      val store = new ChainStore(st.store, "doc_id",
         Seq(bands, shingles, verdict) ++ maxBandDf.map(_ => hotBands))
-      // negative-id shadow copies of the %20==3 docs: being the
-      // smallest ids they become their originals' verdict partners,
-      // then arrival 3 RETRACTS them — the blast-radius recompute
-      // must restore each original's true (batch-twin) verdict
-      val shadows = docs.filter(col("doc_id") % ShadowMod === ShadowRem)
-        .withColumn("doc_id", -(col("doc_id") + lit(1L)))
-      // stale drafts of the %10 docs (the streamIncrementalClean
-      // staging rule): arrival 2 RE-DELIVERS their true text, so
-      // the wholesale-supersede path runs under the batch-twin
-      // oracle — a stale band/shingle/verdict row surviving the
-      // re-delivery tombstone would shift the converged relation
-      val stale = docs.filter(col("doc_id") % RedeliveryMod === 0)
-        .withColumn("text", concat(col("text"), lit(" [stale draft]")))
+      // the shadows become their originals' verdict partners until
+      // arrival 3 RETRACTS them — the blast-radius recompute must
+      // restore each original's true (batch-twin) verdict; a stale
+      // band/shingle/verdict row surviving arrival 2's re-delivery
+      // tombstone would shift the converged relation
+      val (shadows, stale) = shadowsAndStale(docs)
       // CAPPED staging: a planted template flood that crosses the
       // cap UP mid-stream and back DOWN before convergence — every
       // copy is retracted by arrival 3, so the converged corpus is
@@ -1635,394 +1647,325 @@ object Events {
         val head = widen(Dedup.templateFlood(docs, Dedup.BandCapDf - 4))
         (head, all.join(head.select(col("doc_id")), Seq("doc_id"), "left_anti"), all)
       }
-      outerLap("setup") // pre-staging boundary (ADVICE r14, see clean loop)
-      flood.map(_._1).foldLeft(
-          docs.filter(col("doc_id") % 5 =!= 0).unionByName(shadows)
-            .unionByName(stale))(_ unionByName _)
-        .stageArrival(src)
-      outerLap("stage arrival 1")
-      val stream = ss.readStream.schema(docs.schema).parquet(src.toString)
       val crash = hooks.crashPoint
-      def startQ(): StreamingQuery = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          val bss = batch.sparkSession
-          // per-epoch DETAIL laps (r18, VERDICT r17 #5): detail-prefixed
-          // like the clean loop's closure marks — the bench split
-          // excludes them structurally, the soak profile table keeps
-          // them as stage rows
-          val ndLap = graft.operators.Snapshot.incrLap(detail = true)
-          store.recover()
-          // removals (text IS NULL) vs adds — see the query doc
-          val removals = batch.filter(col("text").isNull)
-            .select(col("doc_id")).persist()
-          val arrived = batch.filter(col("text").isNotNull)
-            .select(col("doc_id"), col("text")).persist()
-          // gate on COMMITTED prior state, not `epoch == 0`: a reused
-          // streaming checkpoint over a recreated store starts at
-          // epoch > 0 with an empty store (ADVICE r10)
-          val committedPrior = store.committedBelow(epoch).isDefined
-          // RE-DELIVERED ids: batch docs whose INDEX STATE the store
-          // already holds, probed against the doc-id-bucketed SHINGLE
-          // chain — the right notion: a sub-shingle-length doc has no
-          // index rows to supersede (and no edges, hence no
-          // dependents), so its verdict supersede rides on plain LWW.
-          // retired = removed ∪ re-delivered: ONE tombstone delta
-          // retracts their old rows from all three chains at once.
-          val ret = store.retirements(bss, epoch, committedPrior, shingles, removals,
-            arrived.select(col("doc_id")))
-          val retired = ret.retired
-          // capped mode's eager checkpoints (the touched-bucket df
-          // table and the advanced hot set), registered as they are
-          // created so the epoch's finally releases them on every
-          // path — including a failure between the two
-          var capRelease: List[DataFrame] = Nil
-          try {
-            ndLap(s"retire probe (epoch $epoch)")
-            // the epoch's tombstone aggregate, shared by every probe
-            // in the batch
-            store.withEpochTombstones(ret, epoch) { tombAgg =>
-              // O(|batch|) text work: shingle + sign + band ONLY the
-              // arrival, then append both state deltas
-              val batchSh = Dedup.shingleHashSets(arrived).persist()
-              try {
-                // persisted: consumed 3× (store write, bucket collect,
-                // probe join) — without the cache each consumer re-runs
-                // the 128-perm minhash over the batch
-                val batchBands = Dedup.bandRows(Dedup.minhashSignatures(batchSh))
-                  .persist()
-                // the epoch's three independent non-committing deltas —
-                // tombstone, shingle and band — as ONE concurrent group
-                // (r20, guide §2.6 / VERDICT r19 #4): tombAgg is
-                // in-memory, and every chain read of any of the three
-                // runs after this barrier; the committing verdict write
-                // stays strictly last. Concurrent cache materialization
-                // of batchSh/batchBands is block-manager-locked.
-                concurrentWrites(store.tombstoneWrite(ret, epoch) ++ Seq(
-                  () => store.writeDelta(shingles, epoch, batchSh),
-                  () => store.writeDelta(bands, epoch, batchBands)))
-                ndLap(s"store deltas (epoch $epoch, parallel)")
-                // the parallel-group replay pin: die BETWEEN the
-                // concurrent non-committing store group and everything
-                // that reads it back. The replay must re-derive the
-                // same deltas and overwrite each idempotently whatever
-                // subset order the pool landed them in.
-                crash.fire(epoch, LoopHooks.AfterStores, "post-stores pre-verdict")
-                // ---- CAPPED mode: advance the hot band-bucket set,
-                // delta-stably (VERDICT r15 #2 — the maxShingleDf
-                // crossing machinery applied to the LSH index). Only
-                // delta docs change a bucket's df: the shift is a
-                // delta-sized signed aggregate (+1 per batch band row,
-                // −1 per retired doc's OLD band row, rebuilt from its
-                // stored shingle set resolved at the PRIOR epoch — the
-                // epoch's own tombstone kills exactly the rows whose
-                // bands the shift must subtract), df_new one
-                // touched-restricted bucket-pruned count over the
-                // chain (which already holds this epoch's delta), and
-                // df_prior = df_new − shift. A pair a crossing adds or
-                // retracts collides INSIDE the crossing bucket, so
-                // both endpoints are bucket members — the blast radius
-                // recomputed against the new hot set further below.
-                val capState: Option[(DataFrame, DataFrame)] = maxBandDf.map { cap =>
-                  val oldBands =
-                    if (!ret.any || !committedPrior)
-                      batchBands.select(col("band_id"), col("band_hash")).limit(0)
-                    else Dedup.bandRows(Dedup.minhashSignatures(
-                        store.liveFor(bss, shingles, epoch - 1, ret.prior, retired)))
-                      .select(col("band_id"), col("band_hash"))
-                  // PERSISTED (r18, VERDICT r17 #5): the shift subtree
-                  // contains oldBands' chain read + 128-perm minhash,
-                  // and it has two consumers — the bucket collect and
-                  // the touched checkpoint; released as soon as touched
-                  // is checkpointed.
-                  val shift = batchBands
-                    .select(col("band_id"), col("band_hash"), lit(1L).as("d"))
-                    .unionByName(oldBands.withColumn("d", lit(-1L)))
-                    .groupBy(col("band_id"), col("band_hash"))
-                    .agg(sum(col("d")).as("shift"))
-                    .persist()
-                  val touched = try {
-                    val dfNew = store.liveFor(bss, bands, epoch, tombAgg,
-                        shift.select(col("band_id"), col("band_hash")))
-                      .groupBy(col("band_id"), col("band_hash"))
-                      .agg(count(lit(1)).as("df_new"))
-                    // a touched bucket fully drained by retirements has
-                    // no chain row left — df_new 0, not a dropped key
-                    shift.join(dfNew,
-                        Seq("band_id", "band_hash"), "left")
-                      .na.fill(0L, Seq("df_new"))
-                      .withColumn("df_prior", col("df_new") - col("shift"))
-                      .localCheckpoint(true)
-                  } finally shift.unpersist(blocking = false)
-                  capRelease ::= touched
-                  ndLap(s"cap df shift (epoch $epoch)")
-                  val hotPrior = store.priorSnapshot(bss, hotBands, epoch)
-                    .getOrElse(batchBands.select(col("band_id"), col("band_hash")).limit(0))
-                  // hot(e) = (hot(e−1) minus touched) ∪ (touched with
-                  // df_new > cap) — exact by induction, the
-                  // streamIncrementalClean hot-advance rule. Written
-                  // BEFORE the committing verdict write so every
-                  // committed epoch has its snapshot. The snapshot
-                  // FILE is the materialization (r18): every later
-                  // consumer (the cold-side anti-join, next epoch's
-                  // hotPrior) reads the bounded parquet back.
-                  store.writeDelta(hotBands, epoch, hotPrior
-                    .join(touched.select(col("band_id"), col("band_hash")),
-                      Seq("band_id", "band_hash"), "left_anti")
-                    .unionByName(touched.filter(col("df_new") > cap)
-                      .select(col("band_id"), col("band_hash"))))
-                  val hotNext = store.delta(bss, hotBands, epoch)
-                  hooks.record(LoopHooks.CapCrossings, epoch) {
-                    // ONE agg job, not a count per direction (r18)
-                    val r = touched.agg(
-                      coalesce(sum(when(col("df_prior") <= cap &&
-                        col("df_new") > cap, 1L).otherwise(0L)), lit(0L)),
-                      coalesce(sum(when(col("df_prior") > cap &&
-                        col("df_new") <= cap, 1L).otherwise(0L)), lit(0L))).head()
-                    (r.getLong(0), r.getLong(1))
-                  }
-                  ndLap(s"cap hot advance (epoch $epoch)")
-                  (touched, hotNext)
-                }
-                // the one capped join shape: band rows in hot buckets
-                // die in a broadcast anti-join on the PROBE side —
-                // bucket-level hotness means the index side of a hot
-                // bucket can never be reached, so one anti-join
-                // suffices (the Dedup.coldBands discipline)
-                def coldSide(bandRows: DataFrame): DataFrame = capState match {
-                  case Some((_, hot)) => bandRows.join(broadcast(hot),
-                    Seq("band_id", "band_hash"), "left_anti")
-                  case None => bandRows
-                }
-                // candidates: the in-memory batch bands probe the
-                // stored chain, which includes their own epoch so
-                // intra-batch pairs count. The index scan is pruned to
-                // the buckets the batch's band hashes land in
-                val allBands = store.live(bss, bands, epoch, tombAgg,
-                  Some(store.bucketsOf(bands, batchBands)))
-                val cand = // eager checkpoint: batchBands fully consumed after
-                  try Dedup.nearDupCandidates(coldSide(batchBands), allBands)
-                    .localCheckpoint(true) // delta-sized; read 3× below
-                  finally batchBands.unpersist(blocking = false)
-                ndLap(s"candidate probe (epoch $epoch)")
-                try {
-                  // verify against ONLY the partners' shingle sets: the
-                  // per-epoch cache is delta-sized
-                  val candIds = cand.select(col("a").as("doc_id"))
-                    .union(cand.select(col("b").as("doc_id"))).distinct()
-                  val shNeeded = store.liveFor(bss, shingles, epoch, tombAgg, candIds).persist()
-                  val edges = Dedup.nearDupVerify(cand, shNeeded)
-                  // per-doc best NEW neighbor this epoch (min over the
-                  // smaller side; min_by ties impossible — pairs distinct)
-                  val newBest = edges.groupBy(col("b").as("doc_id"))
-                    .agg(min(col("a")).as("partner_id"),
-                      min_by(col("jaccard"), col("a")).as("jaccard"))
-                    .persist()
-                  try {
-                    // batch docs: their FULL neighbor set is this
-                    // epoch's edges (both members of every pair are in
-                    // the probed index by now)
-                    val batchVerdict = arrived.select(col("doc_id"))
-                      .join(newBest, Seq("doc_id"), "left")
-                    // PRIOR verdicts are fetched BUCKET-PRUNED per
-                    // consumer instead of LWW-resolving the whole chain
-                    // once per epoch (VERDICT r12 #2): each fetch reads
-                    // only the requested ids' buckets and semi-joins the
-                    // exact ids BEFORE the LWW aggregate. The
-                    // `PriorFetch` meter accumulates what they read.
-                    var fetchedIds = 0L
-                    var fetchedRows = 0L
-                    def priorLwwFor(ids: DataFrame): DataFrame = {
-                      val rows = store.liveFor(bss, verdict, epoch - 1, tombAgg, ids)
-                      // meter-only extra jobs (ADVICE r13): an unmetered
-                      // run never runs these two counts
-                      if (hooks.wants(LoopHooks.PriorFetch)) {
-                        fetchedIds += ids.count(); fetchedRows += rows.count()
-                      }
-                      store.latest(verdict, rows)
-                    }
-                    // prior docs whose verdict this batch's ADDS lower —
-                    // the candidate ids; their chain fetch is FUSED with
-                    // the removal blast radius's below (r20, VERDICT r19
-                    // #1): LWW resolution is independent per doc_id, so
-                    // ONE fetch of the UNION of the two id sets,
-                    // materialized once and restricted per leg, is
-                    // row-for-row identical per leg.
-                    val candsOpt: Option[DataFrame] =
-                      if (!committedPrior) None
-                      else Some(newBest.join(arrived.select(col("doc_id")),
-                        Seq("doc_id"), "left_anti"))
-                    // the RETIREMENT blast radius's candidate ids: docs
-                    // with ANY chain row naming a retired partner, in
-                    // ONE map-only broadcast-semi pass over the chain
-                    // (no shuffle, no text; the distinct shuffles only
-                    // the candidate set). Released once recomputeIds
-                    // below is checkpointed.
-                    var touchIdsRelease: Option[DataFrame] = None
-                    val touchIdsOpt: Option[DataFrame] =
-                      if (!ret.any || !committedPrior) None
-                      else {
-                        val touchIds = store.rows(bss, verdict, Some(epoch - 1))
-                          .join(broadcast(retired
-                              .select(col("doc_id").as("partner_id"))),
-                            Seq("partner_id"), "left_semi")
-                          .select(col("doc_id")).distinct()
-                          .persist()
-                        touchIdsRelease = Some(touchIds)
-                        Some(touchIds)
-                      }
-                    // the fused union fetch: ONLY when both legs are
-                    // live (touchIdsOpt ⇒ committedPrior ⇒ candsOpt);
-                    // eagerly checkpointed — blast-radius-sized —
-                    // because its two consumers materialize at different
-                    // points of the epoch. Released after the verdict
-                    // write. A non-retirement epoch keeps the single
-                    // inline lazy fetch: materializing it there would
-                    // ADD a job.
-                    var priorFetchedRelease: Option[DataFrame] = None
-                    val priorFetchedUnion: Option[DataFrame] =
-                      for { cands <- candsOpt; touchIds <- touchIdsOpt } yield {
-                        val f = priorLwwFor(cands.select(col("doc_id"))
-                            .unionByName(touchIds).distinct())
-                          .localCheckpoint(true)
-                        priorFetchedRelease = Some(f)
-                        f
-                      }
-                    val priorUpdates = candsOpt match {
-                      case None => batchVerdict.limit(0)
-                      case Some(cands) =>
-                        // extra union rows (touch-only ids) die in this
-                        // inner join on the candidate ids
-                        val fetched = priorFetchedUnion.getOrElse(
-                          priorLwwFor(cands.select(col("doc_id"))))
-                        cands
-                          .join(fetched
-                              .select(col("doc_id"),
-                                col("partner_id").as("old_partner")),
-                            Seq("doc_id"))
-                          .filter(col("old_partner").isNull ||
-                            col("partner_id") < col("old_partner"))
-                          .select(col("doc_id"), col("partner_id"), col("jaccard"))
-                    }
-                    // the RETIREMENT blast radius: prior docs whose
-                    // current partner was removed OR re-delivered this
-                    // epoch (either can erase the edge) — each
-                    // re-verdicted against the stored index. Removed
-                    // docs are excluded (the tombstone is their
-                    // retraction) and so are batch docs (batchVerdict is
-                    // authoritative for them).
-                    val removalAffected: Option[DataFrame] =
-                      for { fetched <- priorFetchedUnion; touchIds <- touchIdsOpt } yield {
-                        // the union fetch restricted back to this leg's
-                        // ids (defined exactly when touchIdsOpt is)
-                        fetched.join(touchIds, Seq("doc_id"), "left_semi")
-                          .join(retired.select(col("doc_id").as("partner_id")),
-                            Seq("partner_id"), "left_semi")
-                          .join(removals, Seq("doc_id"), "left_anti")
-                          .join(arrived.select(col("doc_id")),
-                            Seq("doc_id"), "left_anti")
-                          .select(col("doc_id"))
-                      }
-                    // CAPPED: the crossing buckets' MEMBER docs join the
-                    // blast radius — an up-crossing retracts every pair
-                    // through its bucket, a down-crossing resurfaces
-                    // them, and in both directions the pair's two
-                    // endpoints are members of the bucket itself.
-                    val crossingAffected: Option[DataFrame] =
-                      for { (touched, _) <- capState; cap <- maxBandDf } yield {
-                        val crossKeys = touched.filter(
-                            (col("df_prior") <= cap && col("df_new") > cap) ||
-                            (col("df_prior") > cap && col("df_new") <= cap))
-                          .select(col("band_id"), col("band_hash"))
-                        store.liveFor(bss, bands, epoch, tombAgg, crossKeys)
-                          .select(col("doc_id")).distinct()
-                          .join(removals, Seq("doc_id"), "left_anti")
-                          .join(arrived.select(col("doc_id")),
-                            Seq("doc_id"), "left_anti")
-                      }
-                    // ONE recompute over the union: a doc affected by
-                    // both a retirement and a crossing gets a single
-                    // authoritative full re-verdict
-                    val recomputeIds: Option[DataFrame] =
-                      (removalAffected.toSeq ++ crossingAffected.toSeq)
-                        .reduceOption(_ unionByName _)
-                        .map(_.distinct().localCheckpoint(true))
-                    touchIdsRelease.foreach(_.unpersist(blocking = false))
-                    ndLap(s"blast-radius ids (epoch $epoch)")
-                    val recomputeUpdates: Option[DataFrame] =
-                      recomputeIds.map { affected =>
-                        val affSh = store.liveFor(bss, shingles, epoch, tombAgg, affected).persist()
-                        try {
-                          val affBands = Dedup.bandRows(
-                            Dedup.minhashSignatures(affSh)).persist()
-                          try {
-                            val idxBands = store.live(bss, bands, epoch, tombAgg,
-                              Some(store.bucketsOf(bands, affBands)))
-                            val cand2 = Dedup.nearDupCandidates(
-                                coldSide(affBands), idxBands)
-                              .localCheckpoint(true)
-                            try {
-                              val candIds2 = cand2.select(col("a").as("doc_id"))
-                                .union(cand2.select(col("b").as("doc_id"))).distinct()
-                              val sh2 = store.liveFor(bss, shingles, epoch, tombAgg, candIds2)
-                              val best2 = Dedup.nearDupVerify(cand2, sh2)
-                                .groupBy(col("b").as("doc_id"))
-                                .agg(min(col("a")).as("partner_id"),
-                                  min_by(col("jaccard"), col("a")).as("jaccard"))
-                              // restrict to the affected docs: a pair
-                              // whose larger side is NOT affected carries
-                              // no verdict change
-                              affected.join(best2, Seq("doc_id"), "left")
-                                .select(col("doc_id"), col("partner_id"),
-                                  col("jaccard"))
-                                .localCheckpoint(true)
-                            } finally graft.operators.Corpus.releaseCheckpoint(cand2)
-                          } finally affBands.unpersist(blocking = false)
-                        } finally affSh.unpersist(blocking = false)
-                      }
-                    ndLap(s"blast-radius recompute (epoch $epoch)")
-                    // a recomputed doc's row is authoritative; drop any
-                    // same-epoch priorUpdates row for it (one row per
-                    // doc per epoch is the chain's invariant)
-                    val priorUpdatesFinal = recomputeIds
-                      .fold(priorUpdates)(ids =>
-                        priorUpdates.join(ids, Seq("doc_id"), "left_anti"))
-                    // CAPPED mode's worst replay point (spec hook): the
-                    // epoch's hot snapshot is on disk, the committing
-                    // verdict write never ran (the end-of-epoch hook
-                    // defers to this one in capped mode)
-                    crash.fire(epoch, LoopHooks.EpochEnd, "post-hot-write pre-verdict",
-                      maxBandDf.isDefined)
-                    // the verdict delta commits the epoch (last write)
-                    try store.writeDelta(verdict, epoch, recomputeUpdates
-                      .fold(batchVerdict.unionByName(priorUpdatesFinal))(
-                        batchVerdict.unionByName(priorUpdatesFinal).unionByName(_)))
-                    finally {
-                      recomputeUpdates.foreach(
-                        graft.operators.Corpus.releaseCheckpoint)
-                      recomputeIds.foreach(
-                        graft.operators.Corpus.releaseCheckpoint)
-                      // the fused prior fetch's last consumer is the
-                      // verdict write just above
-                      priorFetchedRelease.foreach(
-                        graft.operators.Corpus.releaseCheckpoint)
-                    }
-                    ndLap(s"verdict write (epoch $epoch)")
-                    hooks.record(LoopHooks.PriorFetch, epoch)((fetchedIds, fetchedRows))
-                  } finally {
-                    newBest.unpersist(blocking = false)
-                    shNeeded.unpersist(blocking = false)
-                  }
-                } finally graft.operators.Corpus.releaseCheckpoint(cand)
-              } finally batchSh.unpersist(blocking = false)
-            }
-          } finally {
-            arrived.unpersist(blocking = false)
-            removals.unpersist(blocking = false)
-            ret.release()
-            capRelease.foreach(graft.operators.Corpus.releaseCheckpoint)
+      LoopPlan(st.stream, Seq(
+        Arrival.standard(1)(flood.map(_._1).foldLeft(
+          docs.filter(col("doc_id") % 5 =!= 0).unionByName(shadows)
+            .unionByName(stale))(_ unionByName _)),
+        // arrival 2 additionally tops the planted flood over the
+        // cap in capped mode (the up-crossing epoch)
+        Arrival.standard(2)(flood.map(_._2).foldLeft(docs.filter(col("doc_id") % 5 === 0))(
+          _ unionByName _)),
+        // arrival 3: RETRACT the shadows (tombstone-only rows, text
+        // NULL) — and in capped mode EVERY flood copy with them
+        // (the down-crossing epoch) — the converged relation must
+        // equal the batch twin over `documents` alone
+        Arrival.standard(3)(flood.map(_._3).foldLeft(shadows)(_ unionByName _)
+          .withColumn("text", lit(null).cast("string")))),
+        // consumer view: tombstones first, then LWW — keep iff no
+        // partner; removed docs are absent entirely
+        "resolved verdict view", () => store.resolved(spark, verdict)
+          .select(col("doc_id"), col("partner_id").isNull.as("keep"),
+            col("partner_id"), col("jaccard"))
+          .orderBy(col("doc_id"))) { case (batch, Epoch(bss, epoch, scope)) =>
+        // per-epoch DETAIL laps (r18, VERDICT r17 #5): detail-prefixed
+        // like the clean loop's closure marks — the bench split
+        // excludes them structurally, the soak profile table keeps
+        // them as stage rows
+        val ndLap = graft.operators.Snapshot.incrLap(detail = true)
+        store.recover()
+        // removals (text IS NULL) vs adds — see the query doc
+        val removals = scope.persist(batch.filter(col("text").isNull)
+          .select(col("doc_id")))
+        val arrived = scope.persist(batch.filter(col("text").isNotNull)
+          .select(col("doc_id"), col("text")))
+        // gate on COMMITTED prior state, not `epoch == 0`: a reused
+        // streaming checkpoint over a recreated store starts at
+        // epoch > 0 with an empty store (ADVICE r10)
+        val committedPrior = store.committedBelow(epoch).isDefined
+        // RE-DELIVERED ids: batch docs whose INDEX STATE the store
+        // already holds, probed against the doc-id-bucketed SHINGLE
+        // chain — the right notion: a sub-shingle-length doc has no
+        // index rows to supersede (and no edges, hence no
+        // dependents), so its verdict supersede rides on plain LWW.
+        // retired = removed ∪ re-delivered: ONE tombstone delta
+        // retracts their old rows from all three chains at once.
+        val ret = store.retirements(bss, epoch, committedPrior, shingles, removals,
+          arrived.select(col("doc_id")), scope)
+        val retired = ret.retired
+        ndLap(s"retire probe (epoch $epoch)")
+        // the epoch's tombstone aggregate, shared by every probe in
+        // the batch
+        val tombAgg = store.epochTombstones(ret, epoch, scope)
+        // O(|batch|) text work: shingle + sign + band ONLY the
+        // arrival, then append both state deltas
+        val batchSh = scope.persist(Dedup.shingleHashSets(arrived))
+        // persisted: consumed 3× (store write, bucket collect, probe
+        // join) — without the cache each consumer re-runs the
+        // 128-perm minhash over the batch
+        val batchBands = scope.persist(Dedup.bandRows(Dedup.minhashSignatures(batchSh)))
+        // the epoch's three independent non-committing deltas —
+        // tombstone, shingle and band — as ONE concurrent group
+        // (r20, guide §2.6 / VERDICT r19 #4): tombAgg is in-memory,
+        // and every chain read of any of the three runs after this
+        // barrier; the committing verdict write stays strictly last.
+        // Concurrent cache materialization of batchSh/batchBands is
+        // block-manager-locked.
+        concurrentWrites(store.tombstoneWrite(ret, epoch) ++ Seq(
+          () => store.writeDelta(shingles, epoch, batchSh),
+          () => store.writeDelta(bands, epoch, batchBands)))
+        ndLap(s"store deltas (epoch $epoch, parallel)")
+        // the parallel-group replay pin: die BETWEEN the concurrent
+        // non-committing store group and everything that reads it
+        // back. The replay must re-derive the same deltas and
+        // overwrite each idempotently whatever subset order the pool
+        // landed them in.
+        crash.fire(epoch, LoopHooks.AfterStores, "post-stores pre-verdict")
+        // ---- CAPPED mode: advance the hot band-bucket set,
+        // delta-stably (VERDICT r15 #2 — the maxShingleDf crossing
+        // machinery applied to the LSH index). Only delta docs change
+        // a bucket's df: the shift is a delta-sized signed aggregate
+        // (+1 per batch band row, −1 per retired doc's OLD band row,
+        // rebuilt from its stored shingle set resolved at the PRIOR
+        // epoch — the epoch's own tombstone kills exactly the rows
+        // whose bands the shift must subtract), df_new one
+        // touched-restricted bucket-pruned count over the chain (which
+        // already holds this epoch's delta), and df_prior = df_new −
+        // shift. A pair a crossing adds or retracts collides INSIDE
+        // the crossing bucket, so both endpoints are bucket members —
+        // the blast radius recomputed against the new hot set further
+        // below.
+        val capState: Option[(DataFrame, DataFrame)] = maxBandDf.map { cap =>
+          val oldBands =
+            if (!ret.any || !committedPrior)
+              batchBands.select(col("band_id"), col("band_hash")).limit(0)
+            else Dedup.bandRows(Dedup.minhashSignatures(
+                store.liveFor(bss, shingles, epoch - 1, ret.prior, retired)))
+              .select(col("band_id"), col("band_hash"))
+          // PERSISTED (r18, VERDICT r17 #5): the shift subtree
+          // contains oldBands' chain read + 128-perm minhash, and it
+          // has two consumers — the bucket collect and the touched
+          // checkpoint
+          val shift = scope.persist(batchBands
+            .select(col("band_id"), col("band_hash"), lit(1L).as("d"))
+            .unionByName(oldBands.withColumn("d", lit(-1L)))
+            .groupBy(col("band_id"), col("band_hash"))
+            .agg(sum(col("d")).as("shift")))
+          val dfNew = store.liveFor(bss, bands, epoch, tombAgg,
+              shift.select(col("band_id"), col("band_hash")))
+            .groupBy(col("band_id"), col("band_hash"))
+            .agg(count(lit(1)).as("df_new"))
+          // a touched bucket fully drained by retirements has no chain
+          // row left — df_new 0, not a dropped key
+          val touched = scope.checkpoint(shift.join(dfNew,
+              Seq("band_id", "band_hash"), "left")
+            .na.fill(0L, Seq("df_new"))
+            .withColumn("df_prior", col("df_new") - col("shift")))
+          ndLap(s"cap df shift (epoch $epoch)")
+          val hotPrior = store.priorSnapshot(bss, hotBands, epoch)
+            .getOrElse(batchBands.select(col("band_id"), col("band_hash")).limit(0))
+          // hot(e) = (hot(e−1) minus touched) ∪ (touched with df_new >
+          // cap) — exact by induction, the streamIncrementalClean
+          // hot-advance rule. Written BEFORE the committing verdict
+          // write so every committed epoch has its snapshot. The
+          // snapshot FILE is the materialization (r18): every later
+          // consumer (the cold-side anti-join, next epoch's hotPrior)
+          // reads the bounded parquet back.
+          store.writeDelta(hotBands, epoch, hotPrior
+            .join(touched.select(col("band_id"), col("band_hash")),
+              Seq("band_id", "band_hash"), "left_anti")
+            .unionByName(touched.filter(col("df_new") > cap)
+              .select(col("band_id"), col("band_hash"))))
+          val hotNext = store.delta(bss, hotBands, epoch)
+          hooks.record(LoopHooks.CapCrossings, epoch) {
+            // ONE agg job, not a count per direction (r18)
+            val r = touched.agg(
+              coalesce(sum(when(col("df_prior") <= cap &&
+                col("df_new") > cap, 1L).otherwise(0L)), lit(0L)),
+              coalesce(sum(when(col("df_prior") > cap &&
+                col("df_new") <= cap, 1L).otherwise(0L)), lit(0L))).head()
+            (r.getLong(0), r.getLong(1))
           }
+          ndLap(s"cap hot advance (epoch $epoch)")
+          (touched, hotNext)
+        }
+        // the one capped join shape: band rows in hot buckets die in a
+        // broadcast anti-join on the PROBE side — bucket-level hotness
+        // means the index side of a hot bucket can never be reached,
+        // so one anti-join suffices (the Dedup.coldBands discipline)
+        def coldSide(bandRows: DataFrame): DataFrame = capState match {
+          case Some((_, hot)) => bandRows.join(broadcast(hot),
+            Seq("band_id", "band_hash"), "left_anti")
+          case None => bandRows
+        }
+        // candidates: the in-memory batch bands probe the stored
+        // chain, which includes their own epoch so intra-batch pairs
+        // count. The index scan is pruned to the buckets the batch's
+        // band hashes land in
+        val allBands = store.live(bss, bands, epoch, tombAgg,
+          Some(store.bucketsOf(bands, batchBands)))
+        // eager checkpoint: delta-sized, read 3× below
+        val cand = scope.checkpoint(Dedup.nearDupCandidates(coldSide(batchBands), allBands))
+        ndLap(s"candidate probe (epoch $epoch)")
+        // verify against ONLY the partners' shingle sets: the
+        // per-epoch cache is delta-sized
+        val candIds = cand.select(col("a").as("doc_id"))
+          .union(cand.select(col("b").as("doc_id"))).distinct()
+        val shNeeded = scope.persist(store.liveFor(bss, shingles, epoch, tombAgg, candIds))
+        val edges = Dedup.nearDupVerify(cand, shNeeded)
+        // per-doc best NEW neighbor this epoch (min over the smaller
+        // side; min_by ties impossible — pairs distinct)
+        val newBest = scope.persist(edges.groupBy(col("b").as("doc_id"))
+          .agg(min(col("a")).as("partner_id"),
+            min_by(col("jaccard"), col("a")).as("jaccard")))
+        // batch docs: their FULL neighbor set is this epoch's edges
+        // (both members of every pair are in the probed index by now)
+        val batchVerdict = arrived.select(col("doc_id"))
+          .join(newBest, Seq("doc_id"), "left")
+        // PRIOR verdicts are fetched BUCKET-PRUNED per consumer
+        // instead of LWW-resolving the whole chain once per epoch
+        // (VERDICT r12 #2): each fetch reads only the requested ids'
+        // buckets and semi-joins the exact ids BEFORE the LWW
+        // aggregate. The `PriorFetch` meter accumulates what they read.
+        var fetchedIds = 0L
+        var fetchedRows = 0L
+        def priorLwwFor(ids: DataFrame): DataFrame = {
+          val rows = store.liveFor(bss, verdict, epoch - 1, tombAgg, ids)
+          // meter-only extra jobs (ADVICE r13): an unmetered run never
+          // runs these two counts
+          if (hooks.wants(LoopHooks.PriorFetch)) {
+            fetchedIds += ids.count(); fetchedRows += rows.count()
+          }
+          store.latest(verdict, rows)
+        }
+        // prior docs whose verdict this batch's ADDS lower — the
+        // candidate ids; their chain fetch is FUSED with the removal
+        // blast radius's below (r20, VERDICT r19 #1): LWW resolution
+        // is independent per doc_id, so ONE fetch of the UNION of the
+        // two id sets, materialized once and restricted per leg, is
+        // row-for-row identical per leg.
+        val candsOpt: Option[DataFrame] =
+          if (!committedPrior) None
+          else Some(newBest.join(arrived.select(col("doc_id")),
+            Seq("doc_id"), "left_anti"))
+        // the RETIREMENT blast radius's candidate ids: docs with ANY
+        // chain row naming a retired partner, in ONE map-only
+        // broadcast-semi pass over the chain (no shuffle, no text; the
+        // distinct shuffles only the candidate set)
+        val touchIdsOpt: Option[DataFrame] =
+          if (!ret.any || !committedPrior) None
+          else Some(scope.persist(store.rows(bss, verdict, Some(epoch - 1))
+            .join(broadcast(retired
+                .select(col("doc_id").as("partner_id"))),
+              Seq("partner_id"), "left_semi")
+            .select(col("doc_id")).distinct()))
+        // the fused union fetch: ONLY when both legs are live
+        // (touchIdsOpt ⇒ committedPrior ⇒ candsOpt); eagerly
+        // checkpointed — blast-radius-sized — because its two
+        // consumers materialize at different points of the epoch. A
+        // non-retirement epoch keeps the single inline lazy fetch:
+        // materializing it there would ADD a job.
+        val priorFetchedUnion: Option[DataFrame] =
+          for { cands <- candsOpt; touchIds <- touchIdsOpt } yield
+            scope.checkpoint(priorLwwFor(cands.select(col("doc_id"))
+              .unionByName(touchIds).distinct()))
+        val priorUpdates = candsOpt match {
+          case None => batchVerdict.limit(0)
+          case Some(cands) =>
+            // extra union rows (touch-only ids) die in this inner join
+            // on the candidate ids
+            val fetched = priorFetchedUnion.getOrElse(
+              priorLwwFor(cands.select(col("doc_id"))))
+            cands
+              .join(fetched
+                  .select(col("doc_id"),
+                    col("partner_id").as("old_partner")),
+                Seq("doc_id"))
+              .filter(col("old_partner").isNull ||
+                col("partner_id") < col("old_partner"))
+              .select(col("doc_id"), col("partner_id"), col("jaccard"))
+        }
+        // the RETIREMENT blast radius: prior docs whose current
+        // partner was removed OR re-delivered this epoch (either can
+        // erase the edge) — each re-verdicted against the stored
+        // index. Removed docs are excluded (the tombstone is their
+        // retraction) and so are batch docs (batchVerdict is
+        // authoritative for them).
+        val removalAffected: Option[DataFrame] =
+          for { fetched <- priorFetchedUnion; touchIds <- touchIdsOpt } yield {
+            // the union fetch restricted back to this leg's ids
+            // (defined exactly when touchIdsOpt is)
+            fetched.join(touchIds, Seq("doc_id"), "left_semi")
+              .join(retired.select(col("doc_id").as("partner_id")),
+                Seq("partner_id"), "left_semi")
+              .join(removals, Seq("doc_id"), "left_anti")
+              .join(arrived.select(col("doc_id")),
+                Seq("doc_id"), "left_anti")
+              .select(col("doc_id"))
+          }
+        // CAPPED: the crossing buckets' MEMBER docs join the blast
+        // radius — an up-crossing retracts every pair through its
+        // bucket, a down-crossing resurfaces them, and in both
+        // directions the pair's two endpoints are members of the
+        // bucket itself.
+        val crossingAffected: Option[DataFrame] =
+          for { (touched, _) <- capState; cap <- maxBandDf } yield {
+            val crossKeys = touched.filter(
+                (col("df_prior") <= cap && col("df_new") > cap) ||
+                (col("df_prior") > cap && col("df_new") <= cap))
+              .select(col("band_id"), col("band_hash"))
+            store.liveFor(bss, bands, epoch, tombAgg, crossKeys)
+              .select(col("doc_id")).distinct()
+              .join(removals, Seq("doc_id"), "left_anti")
+              .join(arrived.select(col("doc_id")),
+                Seq("doc_id"), "left_anti")
+          }
+        // ONE recompute over the union: a doc affected by both a
+        // retirement and a crossing gets a single authoritative full
+        // re-verdict
+        val recomputeIds: Option[DataFrame] =
+          (removalAffected.toSeq ++ crossingAffected.toSeq)
+            .reduceOption(_ unionByName _)
+            .map(ids => scope.checkpoint(ids.distinct()))
+        ndLap(s"blast-radius ids (epoch $epoch)")
+        val recomputeUpdates: Option[DataFrame] =
+          recomputeIds.map { affected =>
+            val affSh = scope.persist(store.liveFor(bss, shingles, epoch, tombAgg, affected))
+            val affBands = scope.persist(Dedup.bandRows(Dedup.minhashSignatures(affSh)))
+            val idxBands = store.live(bss, bands, epoch, tombAgg,
+              Some(store.bucketsOf(bands, affBands)))
+            val cand2 = scope.checkpoint(Dedup.nearDupCandidates(coldSide(affBands), idxBands))
+            val candIds2 = cand2.select(col("a").as("doc_id"))
+              .union(cand2.select(col("b").as("doc_id"))).distinct()
+            val sh2 = store.liveFor(bss, shingles, epoch, tombAgg, candIds2)
+            val best2 = Dedup.nearDupVerify(cand2, sh2)
+              .groupBy(col("b").as("doc_id"))
+              .agg(min(col("a")).as("partner_id"),
+                min_by(col("jaccard"), col("a")).as("jaccard"))
+            // restrict to the affected docs: a pair whose larger side
+            // is NOT affected carries no verdict change
+            scope.checkpoint(affected.join(best2, Seq("doc_id"), "left")
+              .select(col("doc_id"), col("partner_id"), col("jaccard")))
+          }
+        ndLap(s"blast-radius recompute (epoch $epoch)")
+        // a recomputed doc's row is authoritative; drop any same-epoch
+        // priorUpdates row for it (one row per doc per epoch is the
+        // chain's invariant)
+        val priorUpdatesFinal = recomputeIds
+          .fold(priorUpdates)(ids =>
+            priorUpdates.join(ids, Seq("doc_id"), "left_anti"))
+        // CAPPED mode's worst replay point (spec hook): the epoch's
+        // hot snapshot is on disk, the committing verdict write never
+        // ran (the end-of-epoch hook defers to this one in capped mode)
+        crash.fire(epoch, LoopHooks.EpochEnd, "post-hot-write pre-verdict",
+          maxBandDf.isDefined)
+        // the verdict delta commits the epoch (last write)
+        store.writeDelta(verdict, epoch, recomputeUpdates
+          .fold(batchVerdict.unionByName(priorUpdatesFinal))(
+            batchVerdict.unionByName(priorUpdatesFinal).unionByName(_)))
+        ndLap(s"verdict write (epoch $epoch)")
+        hooks.record(LoopHooks.PriorFetch, epoch)((fetchedIds, fetchedRows))
+        scope.afterRelease {
           // in-stream compaction of all three chains, plus capped
           // mode's hot-snapshot prune
           if (store.compact(bss, epoch, hooks))
@@ -2033,41 +1976,8 @@ object Events {
           // CAPPED runs defer to their own, strictly-worse point above.
           crash.fire(epoch, LoopHooks.EpochEnd, "post-write", maxBandDf.isEmpty)
         }
-        .start()
-      val dr = new ReplayingDrain(() => startQ(), crash)
-      try {
-        dr.drain()
-        outerLap("drain 1 (bootstrap epoch)")
-        // arrival 2 additionally tops the planted flood over the
-        // cap in capped mode (the up-crossing epoch)
-        flood.map(_._2).foldLeft(docs.filter(col("doc_id") % 5 === 0))(
-            _ unionByName _)
-          .stageArrival(src)
-        outerLap("stage arrival 2")
-        dr.drain()
-        outerLap("drain 2 (incremental epoch)")
-        // arrival 3: RETRACT the shadows (tombstone-only rows, text
-        // NULL) — and in capped mode EVERY flood copy with them
-        // (the down-crossing epoch) — the converged relation must
-        // equal the batch twin over `documents` alone
-        flood.map(_._3).foldLeft(shadows)(_ unionByName _)
-          .withColumn("text", lit(null).cast("string"))
-          .stageArrival(src)
-        outerLap("stage arrival 3")
-        dr.drain()
-        outerLap("drain 3 (removal epoch)")
-      } finally dr.finish("graft_neardup")
-      // consumer view: tombstones first, then LWW — keep iff no
-      // partner; removed docs are absent entirely
-      val verdicts = store.resolved(spark, verdict)
-        .select(col("doc_id"), col("partner_id").isNull.as("keep"),
-          col("partner_id"), col("jaccard"))
-        .orderBy(col("doc_id"))
-      val out = detach(spark, verdicts)
-      outerLap("consumer read-back (resolved verdict view)")
-      out
+      }
     }
-  }
 
   /** Oracle-checkable contract of [[ingestNearDup]] — the containment-
     * verdict pattern of `dedup_minhash_lsh_check` applied to the
@@ -2352,12 +2262,9 @@ object Events {
                    driftMaxCellShare: Option[Double] = None,
                    driftWaveArrival2: Boolean = false,
                    driftSecondWave: Boolean = false,
-                   hooks: LoopHooks = LoopHooks.none): DataFrame = {
-    import graft.operators.Similarity
-    val ss = loopSession(spark)
-    val staged = java.nio.file.Paths.get(s"$sfDir/embeddings.parquet")
-    val stagedBytes = java.nio.file.Files.size(staged)
-    withScratchDirs("graft_annstream", stagedBytes, "store") { (src, store, ckpt) =>
+                   hooks: LoopHooks = LoopHooks.none): DataFrame =
+    epochLoop(spark, sfDir, "graft_annstream", hooks, table = "embeddings") { st =>
+      import graft.operators.Similarity
       // Store layout and migration protocol: [[GenerationalStore]].
       // Generation g keeps `assign_g<g>` (the neighbor-id-bucketed
       // assignment chain; its delta commits the epoch),
@@ -2371,14 +2278,13 @@ object Events {
       // once the raw table's rows can be stale (a drifted wave).
       // Value schemas are explicit: a removal-only epoch assigns
       // nothing, and inference over an empty delta dir fails.
-      val outerLap = graft.operators.Snapshot.incrLap()
-      val emb = ss.read.parquet(staged.toString)
+      val emb = st.table
       val embeddingType = emb.schema("embedding").dataType
       val assignSchema = StructType(Seq(
         StructField("neighbor_id", LongType), StructField("cell", IntegerType)))
       val vectorsSchema = StructType(Seq(
         StructField("neighbor_id", LongType), StructField("embedding", embeddingType)))
-      val chains = new GenerationalStore(store, "neighbor_id",
+      val chains = new GenerationalStore(st.store, "neighbor_id",
         "assign", assignSchema, "cellstats", "vectors", vectorsSchema)
       // column selected BY NAME: a positional read would silently
       // return wrong vectors if the stored column order ever changed
@@ -2407,134 +2313,198 @@ object Events {
       }
       // the stream carries CORPUS vectors; the query set is static
       val corpus = emb.filter(col("vec_id") >= Similarity.NumQueries)
-      outerLap("setup") // pre-staging boundary (ADVICE r14, see clean loop)
-      corpus.filter(col("vec_id") % 5 =!= 0).stageArrival(src)
-      outerLap("stage arrival 1")
-      val stream = ss.readStream.schema(emb.schema).parquet(src.toString)
       val crash = hooks.crashPoint
-      def startQ(): StreamingQuery = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          val bss = batch.sparkSession
-          val roles = chains.beginEpoch(epoch)
-          val commitGen = roles.commit
-          // removals (embedding IS NULL) vs adds — see the query doc
-          val removals = batch.filter(col("embedding").isNull)
-            .select(col("vec_id").as("neighbor_id")).persist()
-          val arrived = batch.filter(col("embedding").isNotNull).persist()
-          val arrivedIds = arrived.select(col("vec_id").as("neighbor_id"))
-          // retired = removed ∪ RE-DELIVERED (r13): a batch vector
-          // the assignment chain already holds is superseded
-          // wholesale by the same tombstone (old rows die, the
-          // batch's own epoch-e rows survive)
-          val ret = chains.retirements(bss, epoch, commitGen, removals, arrivedIds)
-          try {
-            // gate on COMMITTED stored state, not `epoch == 0` (the
-            // ingestNearDup ADVICE-r10 rule): a reused streaming
-            // checkpoint over a recreated store starts at epoch > 0
-            // with no centroids — train on the first batch actually
-            // PROCESSED, which is what "first arrival" means there.
-            // A head-of-stream batch with NO adds (pure removal
-            // backlog) has nothing to train OR assign: the model
-            // waits for the first real arrival (r12 review).
-            val centroidsOpt: Option[Array[Array[Double]]] =
-              if (new java.io.File(s"${chains.genDir("centroids", commitGen)}/_SUCCESS").exists &&
-                  epoch != 0L) Some(loadCentroids(bss, commitGen))
-              // the adds probe runs only here: a loaded-model epoch
-              // pays no job for it
-              else if (!arrived.isEmpty) Some(trainCentroids(bss, arrived, commitGen))
-              else None
-            // the epoch's independent non-committing deltas — the
-            // tombstone, the assignment delta (schema-correct empty
-            // when there is nothing to assign) and, in MIGRATION
-            // mode, the corpus vector chain — as ONE concurrent
-            // group (r20, guide §2.6 / VERDICT r19 #4). No
-            // read-after-write edge: the stats delta reads the
-            // assignment delta back AFTER this barrier, the
-            // centroid train/store above stays sequential (the
-            // assign write consumes its result), and the committing
-            // stats write stays last. Crash subsets replay like the
-            // sequential prefixes did (idempotent overwrites).
-            concurrentWrites(chains.tombstoneWrite(ret, epoch) ++
-              Seq(() => chains.writeDelta(chains.primaryAt(commitGen), epoch,
-                centroidsOpt.fold(chains.empty(bss, chains.primaryAt(commitGen)))(c => Similarity.ivfAssign(arrived, c)))) ++
-              (if (driftMaxCellShare.isDefined) Seq(() =>
-                chains.writeDelta(chains.sourceChain, epoch,
-                  arrived.select(col("vec_id").as("neighbor_id"), col("embedding"))))
-              else Seq.empty))
-            crash.fire(epoch, LoopHooks.AfterStores, "post-stores pre-stats")
-            // generation `gen`'s per-epoch stats delta: THIS batch's
-            // per-cell counts, O(nCells) rows — never the corpus —
-            // PLUS negative counts for the RETIRED vectors' prior
-            // cells in that generation's chain (removed AND
-            // superseded re-deliveries — a re-assigned vector must
-            // leave its old cell's count). Shared by the commit
-            // chain and the migration target, so sum(n) over either
-            // chain is its live row count (the spec pins the
-            // `CellStats` meter against the one-shot live occupancy).
-            def statsDelta(gen: Int): DataFrame = {
-              val addStats = Similarity.ivfCellStats(chains.delta(bss, chains.primaryAt(gen), epoch))
-              addStats.unionByName(chains.retiredPriorRows(bss, gen, epoch, ret)
-                .fold(addStats.limit(0))(_.groupBy(col("cell")).agg((-count(lit(1))).as("n"))))
+      LoopPlan(st.stream, Seq(
+        Arrival.standard(1)(corpus.filter(col("vec_id") % 5 =!= 0)),
+        // arrival 2: the second half PLUS an early re-delivery of
+        // the %10==EarlyRedeliveryRem vectors (arrival-1 members,
+        // byte-identical) — their supersede tombstones land at
+        // epoch 1, so a compactEvery=1 run folds + consumes
+        // tombstones mid-stream (see EarlyRedeliveryRem).
+        // DRIFT-WAVE staging (the migrate variant): the second
+        // half arrives SHIFTED off the base distribution — the
+        // engineered drift that must trip the re-train — and the
+        // early-redelivery extra is dropped so the live corpus
+        // stays a closed-form function of the table (the check
+        // twin and the specs reconstruct it verbatim).
+        Arrival.standard(2)(if (driftWaveArrival2)
+          driftShift(corpus.filter(col("vec_id") % 5 === 0))
+        else corpus.filter(col("vec_id") % 5 === 0)
+          .unionByName(corpus.filter(
+            col("vec_id") % RedeliveryMod === EarlyRedeliveryRem))),
+        // arrival 3: REMOVE the %17 vectors (embedding-null rows —
+        // the upstream delete signal) and RE-deliver the %10 ones
+        // (identical embeddings — the supersede path must tombstone
+        // their old assignment rows and net the cellstats to zero,
+        // or the index holds the vector live in two cells); the
+        // maintained index must stop returning the removed ones.
+        // Every %10 id is a %5==0 id, so in drift mode the
+        // re-delivery carries the SHIFTED embedding — identical to
+        // what arrived, or the re-crawl would silently change the
+        // corpus.
+        Arrival.standard(3)(corpus.filter(col("vec_id") % AnnRemovalMod === 0)
+          .withColumn("embedding", lit(null).cast(embeddingType))
+          .unionByName {
+            val redel = corpus.filter(col("vec_id") % RedeliveryMod === 0 &&
+              col("vec_id") % AnnRemovalMod =!= 0)
+            if (driftWaveArrival2) driftShift(redel) else redel
+          })) ++ (if (!driftSecondWave) Nil else Seq(
+        // SECOND-WAVE staging (r17 — the repeatability leg, VERDICT
+        // r16 #1): a second engineered drift must carry the loop
+        // through v2→v3 on the SAME code path, with v1 retired in
+        // between. Arrival 4 re-delivers the live wave slice shifted
+        // to the OPPOSITE side (−shift from the original cloud —
+        // outside both the base cloud and generation 2's wave-1
+        // centroids, so generation 2's monitor trips exactly like
+        // generation 1's did).
+        Arrival.grouped()(driftShiftBy(
+          corpus.filter(col("vec_id") % 5 === 0 &&
+            col("vec_id") % AnnRemovalMod =!= 0), -DriftWaveShift)),
+        // arrival 5: identical re-delivery of the live
+        // %10==EarlyRedeliveryRem slice — drives the second
+        // migration's final chunk + cutover without changing the
+        // live corpus (closed-form reconstruction holds)
+        Arrival.grouped()(corpus.filter(col("vec_id") % RedeliveryMod === EarlyRedeliveryRem &&
+          col("vec_id") % AnnRemovalMod =!= 0)),
+        // arrival 6: one more identical re-delivery, one epoch PAST
+        // the second cutover — the migration marker is cleaned up
+        // (trip re-armed off generation 3's stats) and the
+        // compaction cadence retires generation 2's drained chains
+        Arrival.grouped(Some("drains 4-6 (second wave + cutover + retire)"))(
+          corpus.filter(col("vec_id") % RedeliveryMod === 7 &&
+            col("vec_id") % AnnRemovalMod =!= 0)))),
+        // query the maintained index: tombstone-resolved chain +
+        // frozen quantizer — a removed vector never reaches the
+        // probe. The CUTOVER is here: the query side reads the
+        // ACTIVE generation's chain and quantizer (the marker the
+        // completeness gate flips) — and in migration mode reranks
+        // against the LIVE vector chain (table rows are stale for a
+        // drifted wave), with the static query set still from the
+        // table.
+        "maintained-index top-k", { () =>
+          val qGen = chains.activeGeneration
+          val assigned = chains.resolved(spark, chains.primaryAt(qGen))
+          val embForQuery =
+            if (driftMaxCellShare.isEmpty) Tables.embeddings(spark, sfDir)
+            else Tables.embeddings(spark, sfDir)
+              .filter(col("vec_id") < Similarity.NumQueries)
+              .select(col("vec_id"), col("embedding"))
+              .unionByName(chains.resolved(spark, chains.sourceChain)
+                .select(col("neighbor_id").as("vec_id"), col("embedding")))
+          Similarity.ivfTopKFromIndex(
+            embForQuery, assigned, loadCentroids(spark, qGen), AnnK, AnnNprobe)
+        }) { case (batch, Epoch(bss, epoch, scope)) =>
+        val roles = chains.beginEpoch(epoch)
+        val commitGen = roles.commit
+        // removals (embedding IS NULL) vs adds — see the query doc
+        val removals = scope.persist(batch.filter(col("embedding").isNull)
+          .select(col("vec_id").as("neighbor_id")))
+        val arrived = scope.persist(batch.filter(col("embedding").isNotNull))
+        val arrivedIds = arrived.select(col("vec_id").as("neighbor_id"))
+        // retired = removed ∪ RE-DELIVERED (r13): a batch vector the
+        // assignment chain already holds is superseded wholesale by
+        // the same tombstone (old rows die, the batch's own epoch-e
+        // rows survive)
+        val ret = chains.retirements(bss, epoch, commitGen, removals, arrivedIds, scope)
+        // gate on COMMITTED stored state, not `epoch == 0` (the
+        // ingestNearDup ADVICE-r10 rule): a reused streaming
+        // checkpoint over a recreated store starts at epoch > 0 with
+        // no centroids — train on the first batch actually
+        // PROCESSED, which is what "first arrival" means there. A
+        // head-of-stream batch with NO adds (pure removal backlog)
+        // has nothing to train OR assign: the model waits for the
+        // first real arrival (r12 review).
+        val centroidsOpt: Option[Array[Array[Double]]] =
+          if (new java.io.File(s"${chains.genDir("centroids", commitGen)}/_SUCCESS").exists &&
+              epoch != 0L) Some(loadCentroids(bss, commitGen))
+          // the adds probe runs only here: a loaded-model epoch pays
+          // no job for it
+          else if (!arrived.isEmpty) Some(trainCentroids(bss, arrived, commitGen))
+          else None
+        // the epoch's independent non-committing deltas — the
+        // tombstone, the assignment delta (schema-correct empty when
+        // there is nothing to assign) and, in MIGRATION mode, the
+        // corpus vector chain — as ONE concurrent group (r20, guide
+        // §2.6 / VERDICT r19 #4). No read-after-write edge: the stats
+        // delta reads the assignment delta back AFTER this barrier,
+        // the centroid train/store above stays sequential (the assign
+        // write consumes its result), and the committing stats write
+        // stays last. Crash subsets replay like the sequential
+        // prefixes did (idempotent overwrites).
+        concurrentWrites(chains.tombstoneWrite(ret, epoch) ++
+          Seq(() => chains.writeDelta(chains.primaryAt(commitGen), epoch,
+            centroidsOpt.fold(chains.empty(bss, chains.primaryAt(commitGen)))(c => Similarity.ivfAssign(arrived, c)))) ++
+          (if (driftMaxCellShare.isDefined) Seq(() =>
+            chains.writeDelta(chains.sourceChain, epoch,
+              arrived.select(col("vec_id").as("neighbor_id"), col("embedding"))))
+          else Seq.empty))
+        crash.fire(epoch, LoopHooks.AfterStores, "post-stores pre-stats")
+        // generation `gen`'s per-epoch stats delta: THIS batch's
+        // per-cell counts, O(nCells) rows — never the corpus — PLUS
+        // negative counts for the RETIRED vectors' prior cells in
+        // that generation's chain (removed AND superseded
+        // re-deliveries — a re-assigned vector must leave its old
+        // cell's count). Shared by the commit chain and the migration
+        // target, so sum(n) over either chain is its live row count
+        // (the spec pins the `CellStats` meter against the one-shot
+        // live occupancy).
+        def statsDelta(gen: Int): DataFrame = {
+          val addStats = Similarity.ivfCellStats(chains.delta(bss, chains.primaryAt(gen), epoch))
+          addStats.unionByName(chains.retiredPriorRows(bss, gen, epoch, ret)
+            .fold(addStats.limit(0))(_.groupBy(col("cell")).agg((-count(lit(1))).as("n"))))
+        }
+        chains.writeAdditive(commitGen, epoch, statsDelta(commitGen))
+        // ---- IVF re-train / cutover (VERDICT r15 #1; repeatable and
+        // scalar-gated r17) ---- the consumer the drift monitor exists
+        // for. Trip: the commit generation's summed stats chain's
+        // max-cell share over the threshold. Response: train
+        // generation T = S+1 ONCE on a bounded deterministic sample of
+        // the LIVE corpus, then build T's chains in the background
+        // (arrivals plus one bucket-cursor chunk of old vectors per
+        // epoch) and flip the query side on the completeness gate.
+        if (driftMaxCellShare.isDefined)
+          chains.migrationEpoch(bss, epoch, roles, ret, hooks, scope) { m =>
+            val mig = m.target {
+              val share = Similarity.maxCellShare(
+                chains.additiveRows(bss, commitGen, epoch)
+                  .groupBy(col("cell")).agg(sum(col("n")).as("n"))
+                  .filter(col("n") > 0))
+              m.note ++= f"share=$share%.3f "
+              m.lap(s"migration drift poll (epoch $epoch)")
+              share > driftMaxCellShare.get
             }
-            chains.writeAdditive(commitGen, epoch, statsDelta(commitGen))
-            // ---- IVF re-train / cutover (VERDICT r15 #1; repeatable
-            // and scalar-gated r17) ---- the consumer the drift
-            // monitor exists for. Trip: the commit generation's
-            // summed stats chain's max-cell share over the
-            // threshold. Response: train generation T = S+1 ONCE on
-            // a bounded deterministic sample of the LIVE corpus,
-            // then build T's chains in the background (arrivals plus
-            // one bucket-cursor chunk of old vectors per epoch) and
-            // flip the query side on the completeness gate.
-            if (driftMaxCellShare.isDefined)
-              chains.migrationEpoch(bss, epoch, roles, ret, hooks) { m =>
-                val mig = m.target {
-                  val share = Similarity.maxCellShare(
-                    chains.additiveRows(bss, commitGen, epoch)
-                      .groupBy(col("cell")).agg(sum(col("n")).as("n"))
-                      .filter(col("n") > 0))
-                  m.note ++= f"share=$share%.3f "
-                  m.lap(s"migration drift poll (epoch $epoch)")
-                  share > driftMaxCellShare.get
-                }
-                mig.foreach { case (t, m0) =>
-                  // generation T: trained at the trip epoch on the
-                  // live corpus — replay of m0 retrains identically
-                  val vT =
-                    if (epoch == m0) {
-                      val c = trainCentroids(bss, m.liveSource()
-                        .select(col("neighbor_id").as("vec_id"), col("embedding")), t)
-                      m.note ++= s"g$t-trained "
-                      m.lap(s"migration train (epoch $epoch)")
-                      c
-                    } else loadCentroids(bss, t)
-                  // the epoch's T delta: its own arrivals + the
-                  // cursor's chunk of OLD vectors
-                  val chunkVecs = m.chunk(t, m0, MigrateBucketsPerEpoch, arrivedIds)
-                  chains.writeDelta(chains.primaryAt(t), epoch,
-                    Similarity.ivfAssign(arrived, vT)
-                      .unionByName(Similarity.ivfAssign(
-                        chunkVecs.select(col("neighbor_id").as("vec_id"),
-                          col("embedding")), vT)))
-                  m.lap(s"migration chunk re-assign (epoch $epoch)")
-                  // T's own stats delta: the gate's right-hand
-                  // side, and the chain the NEXT migration's trip
-                  // check polls once T is active
-                  chains.writeAdditive(t, epoch, statsDelta(t))
-                  m.lap(s"migration target stats (epoch $epoch)")
-                  m.gate(t)
-                }
-              }
-          } finally {
-            arrived.unpersist(blocking = false)
-            removals.unpersist(blocking = false)
-            ret.release()
+            mig.foreach { case (t, m0) =>
+              // generation T: trained at the trip epoch on the live
+              // corpus — replay of m0 retrains identically
+              val vT =
+                if (epoch == m0) {
+                  val c = trainCentroids(bss, m.liveSource()
+                    .select(col("neighbor_id").as("vec_id"), col("embedding")), t)
+                  m.note ++= s"g$t-trained "
+                  m.lap(s"migration train (epoch $epoch)")
+                  c
+                } else loadCentroids(bss, t)
+              // the epoch's T delta: its own arrivals + the cursor's
+              // chunk of OLD vectors
+              val chunkVecs = m.chunk(t, m0, MigrateBucketsPerEpoch, arrivedIds)
+              chains.writeDelta(chains.primaryAt(t), epoch,
+                Similarity.ivfAssign(arrived, vT)
+                  .unionByName(Similarity.ivfAssign(
+                    chunkVecs.select(col("neighbor_id").as("vec_id"),
+                      col("embedding")), vT)))
+              m.lap(s"migration chunk re-assign (epoch $epoch)")
+              // T's own stats delta: the gate's right-hand side, and
+              // the chain the NEXT migration's trip check polls once T
+              // is active
+              chains.writeAdditive(t, epoch, statsDelta(t))
+              m.lap(s"migration target stats (epoch $epoch)")
+              m.gate(t)
+            }
           }
-          // in-stream compaction (r13): at 100 TB the assign chain
-          // and its tombstones would otherwise grow one delta per
-          // epoch forever
+        scope.afterRelease {
+          // in-stream compaction (r13): at 100 TB the assign chain and
+          // its tombstones would otherwise grow one delta per epoch
+          // forever
           chains.compact(bss, commitGen, epoch, hooks)
           hooks.record(LoopHooks.Generations, epoch)(chains.generations)
           hooks.record(LoopHooks.DeltaRows, epoch)(
@@ -2557,110 +2527,8 @@ object Events {
           // already-written store
           crash.fire(epoch, LoopHooks.EpochEnd, "post-write")
         }
-        .start()
-      val dr = new ReplayingDrain(() => startQ(), crash)
-      try {
-        dr.drain()
-        outerLap("drain 1 (bootstrap epoch)")
-        // arrival 2: the second half PLUS an early re-delivery of
-        // the %10==EarlyRedeliveryRem vectors (arrival-1 members,
-        // byte-identical) — their supersede tombstones land at
-        // epoch 1, so a compactEvery=1 run folds + consumes
-        // tombstones mid-stream (see EarlyRedeliveryRem).
-        // DRIFT-WAVE staging (the migrate variant): the second
-        // half arrives SHIFTED off the base distribution — the
-        // engineered drift that must trip the re-train — and the
-        // early-redelivery extra is dropped so the live corpus
-        // stays a closed-form function of the table (the check
-        // twin and the specs reconstruct it verbatim).
-        (if (driftWaveArrival2)
-          driftShift(corpus.filter(col("vec_id") % 5 === 0))
-        else corpus.filter(col("vec_id") % 5 === 0)
-          .unionByName(corpus.filter(
-            col("vec_id") % RedeliveryMod === EarlyRedeliveryRem)))
-          .stageArrival(src)
-        outerLap("stage arrival 2")
-        dr.drain()
-        outerLap("drain 2 (incremental epoch)")
-        // arrival 3: REMOVE the %17 vectors (embedding-null rows —
-        // the upstream delete signal) and RE-deliver the %10 ones
-        // (identical embeddings — the supersede path must tombstone
-        // their old assignment rows and net the cellstats to zero,
-        // or the index holds the vector live in two cells); the
-        // maintained index must stop returning the removed ones.
-        // Every %10 id is a %5==0 id, so in drift mode the
-        // re-delivery carries the SHIFTED embedding — identical to
-        // what arrived, or the re-crawl would silently change the
-        // corpus.
-        corpus.filter(col("vec_id") % AnnRemovalMod === 0)
-          .withColumn("embedding", lit(null).cast(embeddingType))
-          .unionByName {
-            val redel = corpus.filter(col("vec_id") % RedeliveryMod === 0 &&
-              col("vec_id") % AnnRemovalMod =!= 0)
-            if (driftWaveArrival2) driftShift(redel) else redel
-          }
-          .stageArrival(src)
-        outerLap("stage arrival 3")
-        dr.drain()
-        outerLap("drain 3 (removal epoch)")
-        if (driftSecondWave) {
-          // SECOND-WAVE staging (r17 — the repeatability leg,
-          // VERDICT r16 #1): a second engineered drift must carry
-          // the loop through v2→v3 on the SAME code path, with v1
-          // retired in between. Arrival 4 re-delivers the live
-          // wave slice shifted to the OPPOSITE side (−shift from
-          // the original cloud — outside both the base cloud and
-          // generation 2's wave-1 centroids, so generation 2's
-          // monitor trips exactly like generation 1's did).
-          driftShiftBy(
-            corpus.filter(col("vec_id") % 5 === 0 &&
-              col("vec_id") % AnnRemovalMod =!= 0), -DriftWaveShift)
-            .stageArrival(src)
-          dr.drain()
-          // arrival 5: identical re-delivery of the live
-          // %10==EarlyRedeliveryRem slice — drives the second
-          // migration's final chunk + cutover without changing the
-          // live corpus (closed-form reconstruction holds)
-          corpus.filter(col("vec_id") % RedeliveryMod === EarlyRedeliveryRem &&
-              col("vec_id") % AnnRemovalMod =!= 0)
-            .stageArrival(src)
-          dr.drain()
-          // arrival 6: one more identical re-delivery, one epoch
-          // PAST the second cutover — the migration marker is
-          // cleaned up (trip re-armed off generation 3's stats)
-          // and the compaction cadence retires generation 2's
-          // drained chains
-          corpus.filter(col("vec_id") % RedeliveryMod === 7 &&
-              col("vec_id") % AnnRemovalMod =!= 0)
-            .stageArrival(src)
-          dr.drain()
-          outerLap("drains 4-6 (second wave + cutover + retire)")
-        }
-      } finally dr.finish("graft_annstream")
-      // query the maintained index: tombstone-resolved chain +
-      // frozen quantizer — a removed vector never reaches the
-      // probe. The CUTOVER is here: the query side reads the
-      // ACTIVE generation's chain and quantizer (the marker the
-      // completeness gate flips) — and in migration mode reranks
-      // against the LIVE vector chain (table rows are stale for a
-      // drifted wave), with the static query set still from the
-      // table.
-      val qGen = chains.activeGeneration
-      val assigned = chains.resolved(spark, chains.primaryAt(qGen))
-      val embForQuery =
-        if (driftMaxCellShare.isEmpty) Tables.embeddings(spark, sfDir)
-        else Tables.embeddings(spark, sfDir)
-          .filter(col("vec_id") < Similarity.NumQueries)
-          .select(col("vec_id"), col("embedding"))
-          .unionByName(chains.resolved(spark, chains.sourceChain)
-            .select(col("neighbor_id").as("vec_id"), col("embedding")))
-      val topk = Similarity.ivfTopKFromIndex(
-        embForQuery, assigned, loadCentroids(spark, qGen), AnnK, AnnNprobe)
-      val out = detach(spark, topk)
-      outerLap("consumer read-back (maintained-index top-k)")
-      out
+      }
     }
-  }
 
   /** Oracle-checkable contract of [[ingestAnnIvf]] (the
     * `ann_recall_check` pattern): the ranked list itself is hash- and
@@ -2838,12 +2706,9 @@ object Events {
                      driftPosRateJump: Option[Double] = None,
                      labelShiftArrival2: Boolean = false,
                      labelSecondWave: Boolean = false,
-                     hooks: LoopHooks = LoopHooks.none): DataFrame = {
-    import graft.operators.Classifier
-    val ss = loopSession(spark)
-    val staged = java.nio.file.Paths.get(s"$sfDir/documents.parquet")
-    val stagedBytes = java.nio.file.Files.size(staged)
-    withScratchDirs("graft_classify", stagedBytes, "store") { (src, store, ckpt) =>
+                     hooks: LoopHooks = LoopHooks.none): DataFrame =
+    epochLoop(spark, sfDir, "graft_classify", hooks) { st =>
+      import graft.operators.Classifier
       // Store layout and migration protocol: [[GenerationalStore]].
       // Generation g keeps `scores_g<g>` (the doc-id-bucketed score
       // chain; its delta commits the epoch), `model_g<g>` (its frozen
@@ -2866,13 +2731,12 @@ object Events {
         StructField("split", org.apache.spark.sql.types.StringType),
         StructField("prob", org.apache.spark.sql.types.DoubleType),
         StructField("pred", org.apache.spark.sql.types.BooleanType)))
-      val outerLap = graft.operators.Snapshot.incrLap()
-      val docs = ss.read.parquet(staged.toString)
+      val docs = st.table
       // the feature chain's value schema, derived at setup
       // (analysis-only)
       val featsSchema = Classifier.featurized(
         docs.limit(0).select(col("doc_id"), col("text"))).schema
-      val chains = new GenerationalStore(store, "doc_id",
+      val chains = new GenerationalStore(st.store, "doc_id",
         "scores", scoreSchema, "counts", "feats", featsSchema)
       def modelDirG(g: Int): String = chains.genDir("model", g)
       def posRatePath(g: Int): java.nio.file.Path = chains.genPath("posrate", g)
@@ -2880,257 +2744,334 @@ object Events {
       // negative-id shadow copies, staged in arrival 2 — AFTER the
       // model froze on arrival 1, so the fitted weights equal the
       // batch twin's — and retracted in arrival 3 (query doc)
-      val shadows = docs.filter(col("doc_id") % ShadowMod === ShadowRem)
-        .withColumn("doc_id", -(col("doc_id") + lit(1L)))
-      outerLap("setup") // pre-staging boundary (ADVICE r14, see clean loop)
-      docs.filter(col("doc_id") % 5 =!= 0)
-        .stageArrival(src)
-      outerLap("stage arrival 1")
-      val stream = ss.readStream.schema(docs.schema).parquet(src.toString)
+      val (shadows, _) = shadowsAndStale(docs)
+      // MIGRATE staging (see the driftPosRateJump doc): arrivals at
+      // their LIVE text, after the first label shift (%5==0) and after
+      // the second (%5==0 or %5==1) — withColumn, not the 2-column
+      // [[classifyShifted2Corpus]] projection: staged files must carry
+      // the full documents schema
+      def liveText(df: DataFrame): DataFrame =
+        df.withColumn("text", when(col("doc_id") % 5 === 0,
+          concat(col("text"), lit(LabelShiftSuffix)))
+          .otherwise(col("text")))
+      def liveText2(df: DataFrame): DataFrame =
+        df.withColumn("text",
+          when(col("doc_id") % 5 === 0 || col("doc_id") % 5 === 1,
+            concat(col("text"), lit(LabelShiftSuffix)))
+            .otherwise(col("text")))
       val crash = hooks.crashPoint
-      def startQ(): StreamingQuery = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          val bss = batch.sparkSession
-          import bss.implicits._
-          // external interference with the durable store
-          // (marker/baseline deletion) injected at an epoch boundary
-          // — the window a co-located operator or cleanup job would
-          // hit; the defensive guards below must fail LOUDLY, never
-          // silently disarm (ADVICE r18 medium's falsifiability leg)
-          hooks.tamper(epoch, store)
-          val roles = chains.beginEpoch(epoch)
-          val commitGen = roles.commit
-          // removals (text IS NULL): tombstone-only, no scoring
-          // work. RE-DELIVERED ids (r13): batch docs the score chain
-          // already holds — the same tombstone supersedes their old
-          // rows wholesale (the batch's own epoch-e scores survive;
-          // without this the consumer emitted duplicate rows for a
-          // re-scored doc, VERDICT r12 #1). Scoring stays per-doc
-          // independent: the tombstone IS the entire update, no
-          // blast radius.
-          val removalsC = batch.filter(col("text").isNull)
-            .select(col("doc_id"))
-          val addIds = batch.filter(col("text").isNotNull)
-            .select(col("doc_id"))
-          val ret = chains.retirements(bss, epoch, commitGen, removalsC, addIds)
-          val feats = Classifier.featurized(
-            batch.filter(col("text").isNotNull)
-              .select(col("doc_id"), col("text"))).persist()
-          try {
-            // the epoch's independent non-committing deltas — the
-            // tombstone and, in migration mode, the live corpus
-            // FEATURE chain (the store the background re-scoring
-            // reads old docs from — features, not text: scoring
-            // consumes featurized rows, so the chain never
-            // re-tokenizes) — as ONE concurrent group (r20, guide
-            // §2.6 / VERDICT r19 #4). The model fit/score below
-            // consumes the persisted in-memory `feats`, every chain
-            // read of either dir runs after this barrier, and the
-            // committing scores write stays last.
-            concurrentWrites(chains.tombstoneWrite(ret, epoch) ++
-              (if (driftPosRateJump.isDefined) Seq(() =>
-                chains.writeDelta(chains.sourceChain, epoch, feats)) else Seq.empty))
-            crash.fire(epoch, LoopHooks.AfterStores, "post-stores pre-scores")
-            // committed-state gate, not `epoch == 0` — see
-            // ingestAnnIvf's note (reused-checkpoint starts).
-            // The store/load pair carries the sparse-weight
-            // sentinel contract (Classifier.storeModel's doc —
-            // VERDICT r11 "what's wrong" #4). A head-of-stream
-            // batch with NO adds (pure removal backlog) has
-            // nothing to train or score: the model waits for the
-            // first real arrival (r12 review).
-            val (modelOpt, trainedNow) =
-              if (new java.io.File(s"${modelDirG(commitGen)}/_SUCCESS").exists &&
-                  epoch != 0L)
-                // resident across epochs (r19): the generation's
-                // model is frozen once trained, yet was re-read
-                // from parquet every epoch
-                (Some(FrozenStoreMemo.cached(modelDirG(commitGen))(
-                  Classifier.loadModel(bss, modelDirG(commitGen)))), false)
-              else if (!feats.isEmpty) {
-                val m = Classifier.fit(feats)
-                Classifier.storeModel(bss, m, modelDirG(commitGen))
-                // the training epoch, durable (see trainedPathG) —
-                // idempotent under a replay of this epoch
+      val first = Arrival.standard(1)(docs.filter(col("doc_id") % 5 =!= 0))
+      val later =
+        if (!labelShiftArrival2) Seq(
+          // arrival 2 also EARLY-re-delivers the %10==EarlyRedeliveryRem
+          // docs (arrival-1 members, identical text): their supersede
+          // tombstones land at epoch 1, so compactEvery=1 folds +
+          // consumes tombstones mid-stream (see EarlyRedeliveryRem)
+          Arrival.standard(2)(docs.filter(col("doc_id") % 5 === 0).unionByName(shadows)
+            .unionByName(docs.filter(
+              col("doc_id") % RedeliveryMod === EarlyRedeliveryRem))),
+          // arrival 3: RETRACT the shadows (text-null rows) — the
+          // tombstone is the whole update, scoring has no blast
+          // radius — and RE-deliver the %10 docs with identical text
+          // (the frozen model re-scores them identically; the
+          // supersede must tombstone their old rows or the consumer
+          // emits duplicates)
+          Arrival.standard(3)(shadows.withColumn("text", lit(null).cast("string"))
+            .unionByName(docs.filter(col("doc_id") % RedeliveryMod === 0))))
+        else Seq(
+          // the label-shifted wave, a designated re-label arrival, and
+          // two identical-live-text re-deliveries driving the
+          // background chunks, the cutover, the marker cleanup and the
+          // drained-generation retirement. No shadows/removals here —
+          // the converged corpus must stay a closed-form function of
+          // the table (documents with the %5==0 slice's text
+          // label-shifted), so the check twin and the specs
+          // reconstruct it verbatim.
+          // arrival 2 — the WAVE: every doc gains the shift suffix, so
+          // the delta's pred-positive rate jumps off the stored
+          // baseline and the monitor must trip
+          Arrival.grouped()(docs.filter(col("doc_id") % 5 === 0)
+            .withColumn("text", concat(col("text"), lit(LabelShiftSuffix)))),
+          // arrival 3 — the RE-LABEL delivery: a mixed deterministic
+          // slice (%3==0 — both splits, so the fit has a train side)
+          // re-delivered at its LIVE text: generation 2's labeled
+          // sample
+          Arrival.grouped()(liveText(docs.filter(col("doc_id") % ReLabelMod === 0))),
+          // arrival 4: identical re-delivery — final chunk + cutover
+          // (the trip check is suspended while the migration is in
+          // flight, so this slice's composition is free)
+          Arrival.grouped()(liveText(docs.filter(
+            col("doc_id") % RedeliveryMod === EarlyRedeliveryRem))),
+          // arrival 5: one epoch past the cutover — marker cleanup
+          // (re-armed poll) + drained-generation retirement. A UNIFORM
+          // slice (%3==1), like the re-label slice the baseline was
+          // measured on: the post-shift corpus is bimodal, so only a
+          // composition-representative arrival reads near the baseline
+          // — which is exactly what the re-armed check must stay QUIET
+          // on (a skewed slice deviating is the monitor working, not a
+          // defect)
+          Arrival.grouped(Some("drains 2-5 (wave, re-label, cutover, retire)"))(
+            liveText(docs.filter(col("doc_id") % ReLabelMod === 1)))) ++
+          (if (!labelSecondWave) Nil else Seq(
+            // SECOND-WAVE staging (VERDICT r18 #5 — the classifier
+            // instance of the ANN repeatability leg): a second
+            // engineered label shift must carry the loop through g2→g3
+            // on the SAME code path, with generation 1 retired in
+            // between. Arrival 6 shifts the %5==1 slice — re-delivered
+            // at NEW text, so generation 2's re-armed monitor reads a
+            // delta pred-positive rate far above ITS OWN baseline (the
+            // re-label arrival's composition-representative rate) and
+            // trips exactly like generation 1's did on wave 1.
+            Arrival.grouped()(docs.filter(col("doc_id") % 5 === 1)
+              .withColumn("text", concat(col("text"), lit(LabelShiftSuffix)))),
+            // arrival 7 — generation 3's designated re-label delivery:
+            // the same deterministic %3==0 slice at its LIVE
+            // (twice-shifted) text; g3 trains here and its baseline is
+            // measured on exactly these rows
+            Arrival.grouped()(liveText2(docs.filter(col("doc_id") % ReLabelMod === 0))),
+            // arrival 8: identical re-delivery at live text — drives
+            // the second migration's final chunk + cutover without
+            // changing the corpus (the closed-form reconstruction the
+            // check twin and specs rely on)
+            Arrival.grouped()(liveText2(docs.filter(
+              col("doc_id") % RedeliveryMod === EarlyRedeliveryRem))),
+            // arrival 9: one epoch past the second cutover —
+            // migration-marker cleanup (trip re-armed off generation
+            // 3's baseline) + generation 2's chains retired on the
+            // compaction cadence. A uniform %3 slice, like arrival 5:
+            // only a composition-representative delivery reads near
+            // the baseline, which is what the re-armed check must stay
+            // quiet on.
+            Arrival.grouped(Some("drains 6-9 (second wave + cutover + retire)"))(
+              liveText2(docs.filter(col("doc_id") % ReLabelMod === 1)))))
+      // consumer: the ACTIVE generation's tombstone-resolved chain —
+      // removed docs absent; post-cutover this is the migrated
+      // generation's scoring
+      LoopPlan(st.stream, first +: later, "resolved score view", () =>
+        chains.resolved(spark, chains.primaryAt(chains.activeGeneration))
+          .select(col("doc_id"), col("label"), col("split"), col("prob"), col("pred"))
+          .orderBy(col("doc_id"))) { case (batch, Epoch(bss, epoch, scope)) =>
+        import bss.implicits._
+        // external interference with the durable store
+        // (marker/baseline deletion) injected at an epoch boundary —
+        // the window a co-located operator or cleanup job would hit;
+        // the defensive guards below must fail LOUDLY, never silently
+        // disarm (ADVICE r18 medium's falsifiability leg)
+        hooks.tamper(epoch, st.store)
+        val roles = chains.beginEpoch(epoch)
+        val commitGen = roles.commit
+        // removals (text IS NULL): tombstone-only, no scoring work.
+        // RE-DELIVERED ids (r13): batch docs the score chain already
+        // holds — the same tombstone supersedes their old rows
+        // wholesale (the batch's own epoch-e scores survive; without
+        // this the consumer emitted duplicate rows for a re-scored
+        // doc, VERDICT r12 #1). Scoring stays per-doc independent: the
+        // tombstone IS the entire update, no blast radius.
+        val removalsC = batch.filter(col("text").isNull)
+          .select(col("doc_id"))
+        val addIds = batch.filter(col("text").isNotNull)
+          .select(col("doc_id"))
+        val ret = chains.retirements(bss, epoch, commitGen, removalsC, addIds, scope)
+        val feats = scope.persist(Classifier.featurized(
+          batch.filter(col("text").isNotNull)
+            .select(col("doc_id"), col("text"))))
+        // the epoch's independent non-committing deltas — the
+        // tombstone and, in migration mode, the live corpus FEATURE
+        // chain (the store the background re-scoring reads old docs
+        // from — features, not text: scoring consumes featurized
+        // rows, so the chain never re-tokenizes) — as ONE concurrent
+        // group (r20, guide §2.6 / VERDICT r19 #4). The model
+        // fit/score below consumes the persisted in-memory `feats`,
+        // every chain read of either dir runs after this barrier, and
+        // the committing scores write stays last.
+        concurrentWrites(chains.tombstoneWrite(ret, epoch) ++
+          (if (driftPosRateJump.isDefined) Seq(() =>
+            chains.writeDelta(chains.sourceChain, epoch, feats)) else Seq.empty))
+        crash.fire(epoch, LoopHooks.AfterStores, "post-stores pre-scores")
+        // committed-state gate, not `epoch == 0` — see ingestAnnIvf's
+        // note (reused-checkpoint starts). The store/load pair carries
+        // the sparse-weight sentinel contract (Classifier.storeModel's
+        // doc — VERDICT r11 "what's wrong" #4). A head-of-stream batch
+        // with NO adds (pure removal backlog) has nothing to train or
+        // score: the model waits for the first real arrival (r12
+        // review).
+        val (modelOpt, trainedNow) =
+          if (new java.io.File(s"${modelDirG(commitGen)}/_SUCCESS").exists &&
+              epoch != 0L)
+            // resident across epochs (r19): the generation's model is
+            // frozen once trained, yet was re-read from parquet every
+            // epoch
+            (Some(FrozenStoreMemo.cached(modelDirG(commitGen))(
+              Classifier.loadModel(bss, modelDirG(commitGen)))), false)
+          else if (!feats.isEmpty) {
+            val m = Classifier.fit(feats)
+            Classifier.storeModel(bss, m, modelDirG(commitGen))
+            // the training epoch, durable (see trainedPathG) —
+            // idempotent under a replay of this epoch
+            writeGenMarker(trainedPathG(commitGen), s"$commitGen@$epoch")
+            (Some(m), true)
+          } else (None, false)
+        // scoring via the handle form: the per-epoch model broadcast
+        // is DESTROYED once the delta is written — score()'s
+        // GC-released broadcast would otherwise accumulate one per
+        // epoch for the loop's lifetime (ADVICE r11). No model: a
+        // schema-correct empty delta still commits the epoch.
+        val scoredOpt = modelOpt.map(Classifier.scoreWithHandle(feats, _))
+        try chains.writeDelta(chains.primaryAt(commitGen), epoch,
+          scoredOpt.fold(chains.empty(bss, chains.primaryAt(commitGen)))(_._1))
+        finally scoredOpt.foreach(_._2.destroy())
+        // ---- classifier re-train / cutover (r17, VERDICT r16 top
+        // ask — see the driftPosRateJump doc) ----
+        if (driftPosRateJump.isDefined)
+          chains.migrationEpoch(bss, epoch, roles, ret, hooks, scope) { m =>
+            // ONE persisted read of the commit generation's epoch
+            // delta serves its count delta, the baseline write and the
+            // drift rate (r17 review: three separate directory reads
+            // of the same delta)
+            val commitDelta = scope.persist(chains.delta(bss, chains.primaryAt(commitGen), epoch))
+            // ONE agg job for the delta's two scalars (r19: the count
+            // and the pred-positive count previously ran as separate
+            // jobs per epoch — same cached relation, fused like the
+            // crossing meters)
+            val commitRow = commitDelta.agg(
+              count(lit(1)),
+              coalesce(sum(when(col("pred"), 1L).otherwise(0L)), lit(0L))).head()
+            val (nCommitDelta, nCommitPred) =
+              (commitRow.getLong(0), commitRow.getLong(1))
+            // a generation's 1-row additive count delta: +this epoch's
+            // delta rows (`added` — counted off the caller's persisted
+            // delta, never a re-open of the parquet it just wrote;
+            // VERDICT r17 #3), − the retired docs' live rows in THAT
+            // generation's chain
+            def countsDelta(gen: Int, added: Long): DataFrame =
+              Seq((0, added - chains.retiredPriorRows(bss, gen, epoch, ret)
+                .fold(0L)(_.count()))).toDF("cell", "n")
+            chains.writeAdditive(commitGen, epoch, countsDelta(commitGen, nCommitDelta))
+            // the active model's drift baseline: its pred-positive
+            // rate on ITS OWN labeled training arrival — written once
+            // beside the model (the observable a deployment compares
+            // epoch rates against)
+            def writePosRate(gen: Int, deltaDf: DataFrame): Unit = {
+              // ONE agg job over the arrival-restricted delta (r19):
+              // count + pred-count previously ran as two jobs against
+              // a persist whose only consumers they were — the semi
+              // gate folds into the single pass
+              val r = deltaDf.join(addIds, Seq("doc_id"), "left_semi")
+                .agg(count(lit(1)),
+                  coalesce(sum(when(col("pred"), 1L).otherwise(0L)), lit(0L)))
+                .head()
+              if (r.getLong(0) > 0)
+                writeGenMarker(posRatePath(gen),
+                  (r.getLong(1).toDouble / r.getLong(0)).toString)
+            }
+            // written on the training epoch — and REPAIRED only on a
+            // genuine REPLAY of it (ADVICE r17/r18): bootstrap
+            // training that crashed between storeModel and this write
+            // replays through the LOAD branch (trainedNow false), and
+            // without the repair the trip check would be permanently
+            // unarmed. The r17 repair fired on ANY epoch that found
+            // the file missing, which silently rebaselined an
+            // externally deleted file to the current epoch's rate and
+            // made the trip-check throw below unreachable (ADVICE r18
+            // medium). The training epoch is durable (trainedPathG,
+            // written beside the model), so the replay test is exact:
+            // marker epoch == this epoch. A marker ABSENT with a
+            // stored model is only reachable inside the training
+            // epoch's own pre-commit crash window (crash between
+            // storeModel and the marker write), so that replay repairs
+            // the marker too; on any later epoch the marker pins the
+            // real training epoch and blocks the repair, letting the
+            // throw fire.
+            val trainedEpochCommit =
+              readGenMarker(trainedPathG(commitGen)).map(_._2)
+            if (modelOpt.isDefined &&
+                (trainedNow ||
+                  (!java.nio.file.Files.exists(posRatePath(commitGen)) &&
+                    trainedEpochCommit.forall(_ == epoch)))) {
+              if (!trainedNow && trainedEpochCommit.isEmpty)
                 writeGenMarker(trainedPathG(commitGen), s"$commitGen@$epoch")
-                (Some(m), true)
-              } else (None, false)
-            // scoring via the handle form: the per-epoch model
-            // broadcast is DESTROYED once the delta is written —
-            // score()'s GC-released broadcast would otherwise
-            // accumulate one per epoch for the loop's lifetime
-            // (ADVICE r11). No model: a schema-correct empty delta
-            // still commits the epoch.
-            val scoredOpt = modelOpt.map(Classifier.scoreWithHandle(feats, _))
-            try chains.writeDelta(chains.primaryAt(commitGen), epoch,
-              scoredOpt.fold(chains.empty(bss, chains.primaryAt(commitGen)))(_._1))
-            finally scoredOpt.foreach(_._2.destroy())
-            // ---- classifier re-train / cutover (r17, VERDICT r16
-            // top ask — see the driftPosRateJump doc) ----
-            if (driftPosRateJump.isDefined)
-              chains.migrationEpoch(bss, epoch, roles, ret, hooks) { m =>
-                // ONE persisted read of the commit generation's
-                // epoch delta serves its count delta, the baseline
-                // write and the drift rate (r17 review: three
-                // separate directory reads of the same delta)
-                val commitDelta = chains.delta(bss, chains.primaryAt(commitGen), epoch).persist()
-                // ONE agg job for the delta's two scalars (r19: the
-                // count and the pred-positive count previously ran
-                // as separate jobs per epoch — same cached relation,
-                // fused like the crossing meters)
-                val commitRow = commitDelta.agg(
-                  count(lit(1)),
-                  coalesce(sum(when(col("pred"), 1L).otherwise(0L)), lit(0L))).head()
-                val (nCommitDelta, nCommitPred) =
-                  (commitRow.getLong(0), commitRow.getLong(1))
-                // a generation's 1-row additive count delta: +this
-                // epoch's delta rows (`added` — counted off the
-                // caller's persisted delta, never a re-open of the
-                // parquet it just wrote; VERDICT r17 #3), − the
-                // retired docs' live rows in THAT generation's chain
-                def countsDelta(gen: Int, added: Long): DataFrame =
-                  Seq((0, added - chains.retiredPriorRows(bss, gen, epoch, ret)
-                    .fold(0L)(_.count()))).toDF("cell", "n")
-                chains.writeAdditive(commitGen, epoch, countsDelta(commitGen, nCommitDelta))
-                // the active model's drift baseline: its pred-
-                // positive rate on ITS OWN labeled training arrival
-                // — written once beside the model (the observable a
-                // deployment compares epoch rates against)
-                def writePosRate(gen: Int, deltaDf: DataFrame): Unit = {
-                  // ONE agg job over the arrival-restricted delta
-                  // (r19): count + pred-count previously ran as two
-                  // jobs against a persist whose only consumers they
-                  // were — the semi gate folds into the single pass
-                  val r = deltaDf.join(addIds, Seq("doc_id"), "left_semi")
-                    .agg(count(lit(1)),
-                      coalesce(sum(when(col("pred"), 1L).otherwise(0L)), lit(0L)))
-                    .head()
-                  if (r.getLong(0) > 0)
-                    writeGenMarker(posRatePath(gen),
-                      (r.getLong(1).toDouble / r.getLong(0)).toString)
-                }
-                // written on the training epoch — and REPAIRED only
-                // on a genuine REPLAY of it (ADVICE r17/r18):
-                // bootstrap training that crashed between storeModel
-                // and this write replays through the LOAD branch
-                // (trainedNow false), and without the repair the
-                // trip check would be permanently unarmed. The r17
-                // repair fired on ANY epoch that found the file
-                // missing, which silently rebaselined an externally
-                // deleted file to the current epoch's rate and made
-                // the trip-check throw below unreachable (ADVICE
-                // r18 medium). The training epoch is durable
-                // (trainedPathG, written beside the model), so the
-                // replay test is exact: marker epoch == this epoch.
-                // A marker ABSENT with a stored model is only
-                // reachable inside the training epoch's own
-                // pre-commit crash window (crash between storeModel
-                // and the marker write), so that replay repairs the
-                // marker too; on any later epoch the marker pins the
-                // real training epoch and blocks the repair, letting
-                // the throw fire.
-                val trainedEpochCommit =
-                  readGenMarker(trainedPathG(commitGen)).map(_._2)
-                if (modelOpt.isDefined &&
-                    (trainedNow ||
-                      (!java.nio.file.Files.exists(posRatePath(commitGen)) &&
-                        trainedEpochCommit.forall(_ == epoch)))) {
-                  if (!trainedNow && trainedEpochCommit.isEmpty)
-                    writeGenMarker(trainedPathG(commitGen), s"$commitGen@$epoch")
-                  writePosRate(commitGen, commitDelta)
-                }
-                // this epoch's observed delta pred-positive rate —
-                // the alarm input (None on a scoring-free epoch)
-                val rateE =
-                  if (nCommitDelta == 0) None
-                  else Some(nCommitPred.toDouble / nCommitDelta)
-                commitDelta.unpersist(blocking = false)
-                val mig = m.target {
-                  modelOpt.isDefined && rateE.exists { rate =>
-                    // a scored delta means this epoch had adds, so the
-                    // baseline write (or its replay repair) above has
-                    // already run — absence here is external marker
-                    // deletion, and silently not tripping would
-                    // disarm the monitor FOREVER: fail loudly instead
-                    // (ADVICE r17)
-                    if (!java.nio.file.Files.exists(posRatePath(commitGen)))
-                      throw new IllegalStateException(
-                        s"drift baseline missing at ${posRatePath(commitGen)} " +
-                          "with a stored model and a scored delta — the " +
-                          "monitor would be permanently unarmed")
-                    val base = new String(java.nio.file.Files
-                      .readAllBytes(posRatePath(commitGen)), "UTF-8").trim.toDouble
-                    m.note ++= f"rate=$rate%.3f base=$base%.3f "
-                    m.lap(s"migration drift poll (epoch $epoch)")
-                    math.abs(rate - base) > driftPosRateJump.get
-                  }
-                }
-                mig.foreach { case (t, m0) =>
-                  // the RE-LABEL CONTRACT: generation T trains on
-                  // the first arrival AFTER the trip (the alarm is
-                  // the signal a deployment ships a labeled sample
-                  // in response to), mirroring the bootstrap's
-                  // "first arrival is the labeled sample" rule. The
-                  // training epoch is recorded durably (trained_gT
-                  // marker) so the backfill cursor is a pure
-                  // function of epoch − t0; a replay of t0 retrains
-                  // on its own arrival and overwrites idempotently.
-                  val t0Opt = readGenMarker(trainedPathG(t)).map(_._2)
-                  if (t0Opt.isEmpty && (epoch == m0 || feats.isEmpty)) {
-                    m.note ++= "awaiting-relabel "
-                  } else {
-                    val (mT, t0) =
-                      if (t0Opt.isEmpty || t0Opt.contains(epoch)) {
-                        val fitted = Classifier.fit(feats)
-                        Classifier.storeModel(bss, fitted, modelDirG(t))
-                        writeGenMarker(trainedPathG(t), s"$t@$epoch")
-                        m.note ++= s"g$t-trained "
-                        m.lap(s"migration train (epoch $epoch)")
-                        (fitted, epoch)
-                      } else
-                        (FrozenStoreMemo.cached(modelDirG(t))(
-                          Classifier.loadModel(bss, modelDirG(t))), t0Opt.get)
-                    // the epoch's T delta: its own arrivals + the
-                    // cursor's chunk of OLD docs' stored features
-                    val chunkFeats = m.chunk(t, t0, MigrateBucketsPerEpoch, addIds)
-                    // ONE model broadcast scores arrivals + chunk;
-                    // the scored delta is PERSISTED (the commit
-                    // path's commitDelta treatment, VERDICT r17 #3)
-                    // so its count delta and training-epoch baseline
-                    // read the cache, never re-opening the parquet
-                    // the epoch just wrote
-                    val (scoredTRaw, bcT) = Classifier.scoreWithHandle(
-                      feats.unionByName(
-                        chunkFeats.select(feats.columns.map(col): _*)), mT)
-                    val scoredT = scoredTRaw.persist()
-                    try {
-                      chains.writeDelta(chains.primaryAt(t), epoch, scoredT)
-                      m.lap(s"migration chunk re-score (epoch $epoch)")
-                      chains.writeAdditive(t, epoch, countsDelta(t, scoredT.count()))
-                      m.lap(s"migration target counts (epoch $epoch)")
-                      // T's own drift baseline, off its training
-                      // arrival alone (the chunk is old-corpus mix —
-                      // not the steady-state observable)
-                      if (t0 == epoch) writePosRate(t, scoredT)
-                    } finally {
-                      bcT.destroy()
-                      scoredT.unpersist(blocking = false)
-                    }
-                    m.gate(t)
-                  }
-                }
+              writePosRate(commitGen, commitDelta)
+            }
+            // this epoch's observed delta pred-positive rate — the
+            // alarm input (None on a scoring-free epoch)
+            val rateE =
+              if (nCommitDelta == 0) None
+              else Some(nCommitPred.toDouble / nCommitDelta)
+            val mig = m.target {
+              modelOpt.isDefined && rateE.exists { rate =>
+                // a scored delta means this epoch had adds, so the
+                // baseline write (or its replay repair) above has
+                // already run — absence here is external marker
+                // deletion, and silently not tripping would disarm the
+                // monitor FOREVER: fail loudly instead (ADVICE r17)
+                if (!java.nio.file.Files.exists(posRatePath(commitGen)))
+                  throw new IllegalStateException(
+                    s"drift baseline missing at ${posRatePath(commitGen)} " +
+                      "with a stored model and a scored delta — the " +
+                      "monitor would be permanently unarmed")
+                val base = new String(java.nio.file.Files
+                  .readAllBytes(posRatePath(commitGen)), "UTF-8").trim.toDouble
+                m.note ++= f"rate=$rate%.3f base=$base%.3f "
+                m.lap(s"migration drift poll (epoch $epoch)")
+                math.abs(rate - base) > driftPosRateJump.get
               }
-          } finally {
-            feats.unpersist(blocking = false)
-            ret.release()
+            }
+            mig.foreach { case (t, m0) =>
+              // the RE-LABEL CONTRACT: generation T trains on the first
+              // arrival AFTER the trip (the alarm is the signal a
+              // deployment ships a labeled sample in response to),
+              // mirroring the bootstrap's "first arrival is the
+              // labeled sample" rule. The training epoch is recorded
+              // durably (trained_gT marker) so the backfill cursor is a
+              // pure function of epoch − t0; a replay of t0 retrains on
+              // its own arrival and overwrites idempotently.
+              val t0Opt = readGenMarker(trainedPathG(t)).map(_._2)
+              if (t0Opt.isEmpty && (epoch == m0 || feats.isEmpty)) {
+                m.note ++= "awaiting-relabel "
+              } else {
+                val (mT, t0) =
+                  if (t0Opt.isEmpty || t0Opt.contains(epoch)) {
+                    val fitted = Classifier.fit(feats)
+                    Classifier.storeModel(bss, fitted, modelDirG(t))
+                    writeGenMarker(trainedPathG(t), s"$t@$epoch")
+                    m.note ++= s"g$t-trained "
+                    m.lap(s"migration train (epoch $epoch)")
+                    (fitted, epoch)
+                  } else
+                    (FrozenStoreMemo.cached(modelDirG(t))(
+                      Classifier.loadModel(bss, modelDirG(t))), t0Opt.get)
+                // the epoch's T delta: its own arrivals + the cursor's
+                // chunk of OLD docs' stored features
+                val chunkFeats = m.chunk(t, t0, MigrateBucketsPerEpoch, addIds)
+                // ONE model broadcast scores arrivals + chunk; the
+                // scored delta is PERSISTED (the commit path's
+                // commitDelta treatment, VERDICT r17 #3) so its count
+                // delta and training-epoch baseline read the cache,
+                // never re-opening the parquet the epoch just wrote
+                val (scoredTRaw, bcT) = Classifier.scoreWithHandle(
+                  feats.unionByName(
+                    chunkFeats.select(feats.columns.map(col): _*)), mT)
+                val scoredT = scope.persist(scoredTRaw)
+                try {
+                  chains.writeDelta(chains.primaryAt(t), epoch, scoredT)
+                  m.lap(s"migration chunk re-score (epoch $epoch)")
+                  chains.writeAdditive(t, epoch, countsDelta(t, scoredT.count()))
+                  m.lap(s"migration target counts (epoch $epoch)")
+                  // T's own drift baseline, off its training arrival
+                  // alone (the chunk is old-corpus mix — not the
+                  // steady-state observable)
+                  if (t0 == epoch) writePosRate(t, scoredT)
+                } finally bcT.destroy()
+                m.gate(t)
+              }
+            }
           }
+        scope.afterRelease {
           // in-stream compaction (r13): the score chain folds
           // tombstone-resolved (supersede tombstones leave one live
           // row per doc — no LWW needed) with its bucket layout
-          // preserved; in migration mode with the feature chain,
-          // the target's score chain and the count chains
+          // preserved; in migration mode with the feature chain, the
+          // target's score chain and the count chains
           chains.compact(bss, commitGen, epoch, hooks)
           hooks.record(LoopHooks.Generations, epoch)(chains.generations)
           hooks.record(LoopHooks.ScoreDelta, epoch) {
@@ -3141,144 +3082,8 @@ object Events {
           // already-written store on restart
           crash.fire(epoch, LoopHooks.EpochEnd, "post-write")
         }
-        .start()
-      val dr = new ReplayingDrain(() => startQ(), crash)
-      try {
-        dr.drain()
-        outerLap("drain 1 (bootstrap epoch)")
-        if (labelShiftArrival2) {
-          // MIGRATE staging (see the driftPosRateJump doc): the
-          // label-shifted wave, a designated re-label arrival, and
-          // two identical-live-text re-deliveries driving the
-          // background chunks, the cutover, the marker cleanup and
-          // the drained-generation retirement. No shadows/removals
-          // here — the converged corpus must stay a closed-form
-          // function of the table (documents with the %5==0 slice's
-          // text label-shifted), so the check twin and the specs
-          // reconstruct it verbatim.
-          def liveText(df: DataFrame): DataFrame =
-            df.withColumn("text", when(col("doc_id") % 5 === 0,
-              concat(col("text"), lit(LabelShiftSuffix)))
-              .otherwise(col("text")))
-          // arrival 2 — the WAVE: every doc gains the shift suffix,
-          // so the delta's pred-positive rate jumps off the stored
-          // baseline and the monitor must trip
-          docs.filter(col("doc_id") % 5 === 0)
-            .withColumn("text", concat(col("text"), lit(LabelShiftSuffix)))
-            .stageArrival(src)
-          dr.drain()
-          // arrival 3 — the RE-LABEL delivery: a mixed
-          // deterministic slice (%3==0 — both splits, so the fit
-          // has a train side) re-delivered at its LIVE text:
-          // generation 2's labeled sample
-          liveText(docs.filter(col("doc_id") % ReLabelMod === 0)).stageArrival(src)
-          dr.drain()
-          // arrival 4: identical re-delivery — final chunk + cutover
-          // (the trip check is suspended while the migration is in
-          // flight, so this slice's composition is free)
-          liveText(docs.filter(
-            col("doc_id") % RedeliveryMod === EarlyRedeliveryRem))
-            .stageArrival(src)
-          dr.drain()
-          // arrival 5: one epoch past the cutover — marker cleanup
-          // (re-armed poll) + drained-generation retirement. A
-          // UNIFORM slice (%3==1), like the re-label slice the
-          // baseline was measured on: the post-shift corpus is
-          // bimodal, so only a composition-representative arrival
-          // reads near the baseline — which is exactly what the
-          // re-armed check must stay QUIET on (a skewed slice
-          // deviating is the monitor working, not a defect)
-          liveText(docs.filter(col("doc_id") % ReLabelMod === 1))
-            .stageArrival(src)
-          dr.drain()
-          outerLap("drains 2-5 (wave, re-label, cutover, retire)")
-          if (labelSecondWave) {
-            // SECOND-WAVE staging (VERDICT r18 #5 — the classifier
-            // instance of the ANN repeatability leg): a second
-            // engineered label shift must carry the loop through
-            // g2→g3 on the SAME code path, with generation 1
-            // retired in between. Arrival 6 shifts the %5==1 slice
-            // — re-delivered at NEW text, so generation 2's
-            // re-armed monitor reads a delta pred-positive rate
-            // far above ITS OWN baseline (the re-label arrival's
-            // composition-representative rate) and trips exactly
-            // like generation 1's did on wave 1.
-            // arrivals at LIVE post-wave-2 text — withColumn (not
-            // the 2-column [[classifyShifted2Corpus]] projection):
-            // staged files must carry the full documents schema
-            def liveText2(df: DataFrame): DataFrame =
-              df.withColumn("text",
-                when(col("doc_id") % 5 === 0 || col("doc_id") % 5 === 1,
-                  concat(col("text"), lit(LabelShiftSuffix)))
-                  .otherwise(col("text")))
-            docs.filter(col("doc_id") % 5 === 1)
-              .withColumn("text", concat(col("text"), lit(LabelShiftSuffix)))
-              .stageArrival(src)
-            dr.drain()
-            // arrival 7 — generation 3's designated re-label
-            // delivery: the same deterministic %3==0 slice at its
-            // LIVE (twice-shifted) text; g3 trains here and its
-            // baseline is measured on exactly these rows
-            liveText2(docs.filter(col("doc_id") % ReLabelMod === 0))
-              .stageArrival(src)
-            dr.drain()
-            // arrival 8: identical re-delivery at live text —
-            // drives the second migration's final chunk + cutover
-            // without changing the corpus (the closed-form
-            // reconstruction the check twin and specs rely on)
-            liveText2(docs.filter(
-              col("doc_id") % RedeliveryMod === EarlyRedeliveryRem))
-              .stageArrival(src)
-            dr.drain()
-            // arrival 9: one epoch past the second cutover —
-            // migration-marker cleanup (trip re-armed off
-            // generation 3's baseline) + generation 2's chains
-            // retired on the compaction cadence. A uniform %3
-            // slice, like arrival 5: only a composition-
-            // representative delivery reads near the baseline,
-            // which is what the re-armed check must stay quiet on.
-            liveText2(docs.filter(col("doc_id") % ReLabelMod === 1))
-              .stageArrival(src)
-            dr.drain()
-            outerLap("drains 6-9 (second wave + cutover + retire)")
-          }
-        } else {
-          // arrival 2 also EARLY-re-delivers the %10==EarlyRedeliveryRem
-          // docs (arrival-1 members, identical text): their supersede
-          // tombstones land at epoch 1, so compactEvery=1 folds +
-          // consumes tombstones mid-stream (see EarlyRedeliveryRem)
-          docs.filter(col("doc_id") % 5 === 0).unionByName(shadows)
-            .unionByName(docs.filter(
-              col("doc_id") % RedeliveryMod === EarlyRedeliveryRem))
-            .stageArrival(src)
-          outerLap("stage arrival 2")
-          dr.drain()
-          outerLap("drain 2 (incremental epoch)")
-          // arrival 3: RETRACT the shadows (text-null rows) — the
-          // tombstone is the whole update, scoring has no blast
-          // radius — and RE-deliver the %10 docs with identical text
-          // (the frozen model re-scores them identically; the
-          // supersede must tombstone their old rows or the consumer
-          // emits duplicates)
-          shadows.withColumn("text", lit(null).cast("string"))
-            .unionByName(docs.filter(col("doc_id") % RedeliveryMod === 0))
-            .stageArrival(src)
-          outerLap("stage arrival 3")
-          dr.drain()
-          outerLap("drain 3 (removal epoch)")
-        }
-      } finally dr.finish("graft_classify")
-      // consumer: the ACTIVE generation's tombstone-resolved chain —
-      // removed docs absent; post-cutover this is the migrated
-      // generation's scoring
-      val scored = chains.resolved(spark, chains.primaryAt(chains.activeGeneration))
-        .select(col("doc_id"), col("label"), col("split"), col("prob"), col("pred"))
-        .orderBy(col("doc_id"))
-      val out = detach(spark, scored)
-      outerLap("consumer read-back (resolved score view)")
-      out
+      }
     }
-  }
 
   /** Oracle-checkable contract of [[ingestClassify]] — the
     * `text_classifier_check` invariants read off the STREAMED relation:
@@ -3493,6 +3298,20 @@ object Events {
     * by construction: the doc's final text equals the raw table's, so
     * every batch-SQL oracle is untouched. */
   private[graft] val IdenticalRedeliveryMod = 9L
+
+  /** The staging's two planted frames over `docs`, one definition for
+    * the clean, neardup and classify scripts: the negative-id SHADOW
+    * copies of the `% ShadowMod == ShadowRem` docs (doc_id = -(id+1),
+    * the smallest id in its cluster, so a shadow usurps its original's
+    * canonical slot and becomes its verdict partner until retracted),
+    * and STALE drafts of the `% RedeliveryMod == 0` docs (text
+    * suffixed; a later arrival re-delivers the true text, so the
+    * wholesale-supersede path runs under the batch-twin oracle). */
+  private def shadowsAndStale(docs: DataFrame): (DataFrame, DataFrame) =
+    (docs.filter(col("doc_id") % ShadowMod === ShadowRem)
+      .withColumn("doc_id", -(col("doc_id") + lit(1L))),
+      docs.filter(col("doc_id") % RedeliveryMod === 0)
+        .withColumn("text", concat(col("text"), lit(" [stale draft]"))))
   /** The `maxShingleDf` cap of the CAPPED streamed clean query
     * (`stream_incremental_clean_capped`) — ONE definition interpolated
     * into both the loop invocation and its DuckDB oracle

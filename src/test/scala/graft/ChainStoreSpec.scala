@@ -2,8 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import graft.streaming.{Chain, ChainStore, Fold, GenerationalStore, LoopHooks, Retirements,
-  Roles}
+import graft.streaming.{Chain, ChainStore, EpochScope, Fold, GenerationalStore, LoopHooks,
+  Retirements, Roles}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (markers, roles, drained-generation retirement, the generation
   * listing, the chunk cursor) and the plain store's recovery sweep,
   * commit gate and snapshot prune are file-level only, with no Spark
-  * session; one leg compacts a small store through Spark. */
+  * session; one leg compacts a small store through Spark, and one
+  * checks that an epoch scope releases the frames it holds. */
 class ChainStoreSpec extends AnyFunSuite {
   private val schema = StructType(Seq(StructField("k", LongType)))
 
@@ -274,5 +275,29 @@ class ChainStoreSpec extends AnyFunSuite {
       assert(!Files.exists(dir.resolve("tombstones")) ||
         entries(dir.resolve("tombstones")).isEmpty, "the folded tombstones are consumed")
     }
+  }
+
+  test("an epoch scope releases every frame it holds, whether its body returns or throws") {
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    def held(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    val boom = new IllegalStateException("epoch body failed")
+    // persists two frames and checkpoints one, materializing all three;
+    // returns the persistent RDDs it saw before the scope closed
+    def body(scope: EpochScope, fail: Boolean): Set[Int] = {
+      scope.persist(spark.range(0, 11).toDF("a")).count()
+      scope.persist(spark.range(0, 13).toDF("b")).count()
+      scope.checkpoint(spark.range(0, 17).toDF("c"))
+      val inside = held()
+      if (fail) throw boom
+      inside
+    }
+    val before = held()
+    val thrown = intercept[IllegalStateException](EpochScope.around(body(_, fail = true)))
+    assert(thrown eq boom, "the scope must rethrow the body's own exception")
+    assert(held() == before, s"a throwing body left ${held() -- before} persisted")
+    val inside = EpochScope.around(body(_, fail = false))
+    assert((inside -- before).size == 3, s"the body should hold three frames, held ${inside -- before}")
+    assert(held() == before, s"a returning body left ${held() -- before} persisted")
   }
 }

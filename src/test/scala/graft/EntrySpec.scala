@@ -178,4 +178,78 @@ class EntrySpec extends AnyFunSuite {
       finally walk.close()
     assert(sites.isEmpty, s"chain paths outside ChainStore.scala: ${sites.mkString(", ")}")
   }
+
+  test("the streaming loops run on one harness and release no frame by hand") {
+    // EpochStep: only the harness (`def epochLoop`) starts a
+    // foreachBatch query or builds a ReplayingDrain, and the five loop
+    // bodies register their frames in the epoch's scope instead of
+    // persisting, checkpointing or releasing them by hand
+    // (`releaseCheckpoint` also as a function value). Code only
+    // (comment lines blanked, trailing line comments cut); a def's
+    // extent is found bracket-aware: from its name through its `=` to
+    // the first line end outside every bracket once the body has begun.
+    import scala.jdk.CollectionConverters._
+    def code(f: java.nio.file.Path): String =
+      java.nio.file.Files.readAllLines(f).asScala.map { line =>
+        val t = line.trim
+        if (Seq("//", "/*", "*").exists(t.startsWith)) "" else line.split(" //")(0)
+      }.mkString("\n")
+    def extent(src: String, name: String): Option[(Int, Int)] = {
+      val start = src.indexOf(s"def $name(")
+      if (start < 0) None
+      else {
+        var depth = 0
+        var i = start
+        var inBody = false
+        var begun = false
+        var end = -1
+        while (end < 0 && i < src.length) {
+          val c = src(i)
+          c match {
+            case '(' | '[' | '{' => depth += 1; if (inBody) begun = true
+            case ')' | ']' | '}' => depth -= 1
+            case '=' if depth == 0 && !inBody && !src.startsWith("=>", i) => inBody = true
+            case '\n' if depth == 0 && begun => end = i
+            case _ if inBody && !c.isWhitespace => begun = true
+            case _ => ()
+          }
+          i += 1
+        }
+        Some((start, if (end < 0) src.length else end))
+      }
+    }
+    def lineOf(src: String, at: Int): Int = src.substring(0, at).count(_ == '\n') + 1
+    def sites(f: java.nio.file.Path, src: String, from: Int, until: Int, tokens: Seq[String]) =
+      tokens.flatMap { tok =>
+        Iterator.iterate(src.indexOf(tok, from))(i => src.indexOf(tok, i + 1))
+          .takeWhile(i => i >= 0 && i < until).map(i => s"$f:${lineOf(src, i)} $tok")
+      }
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/streaming"))
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
+      finally walk.close()
+    val outsideHarness = files.flatMap { f =>
+      val src = code(f)
+      val (hs, he) = extent(src, "epochLoop").getOrElse((0, 0))
+      sites(f, src, 0, src.length, Seq("foreachBatch", "new ReplayingDrain"))
+        .filterNot { site =>
+          val line = site.split(" ").head.split(":").last.toInt
+          line >= lineOf(src, hs) && line <= lineOf(src, he) && he > hs
+        }
+    }
+    val loops = Seq("streamIncrementalClean", "changelogLoop", "ingestNearDup", "ingestAnnIvf",
+      "ingestClassify")
+    val byHand = files.flatMap { f =>
+      val src = code(f)
+      loops.flatMap(extent(src, _)).flatMap { case (from, until) =>
+        sites(f, src, from, until,
+          Seq(".persist()", "localCheckpoint(", "unpersist(", "releaseCheckpoint"))
+      }
+    }
+    val harness = files.exists(f => extent(code(f), "epochLoop").isDefined)
+    assert(harness && outsideHarness.isEmpty && byHand.isEmpty,
+      s"harness `def epochLoop` ${if (harness) "found" else "missing"}; " +
+        s"streams started outside it: ${outsideHarness.mkString(", ")}; " +
+        s"frames released by hand in loop bodies: ${byHand.mkString(", ")}")
+  }
 }

@@ -335,12 +335,14 @@ class SnapshotSpec extends AnyFunSuite {
     // edge re-forms — and the naive seed set is provably EMPTY (7's
     // prior cluster is a singleton of a now-absent doc), so an
     // uncapped-style closure would carry the stale split forever. Each
-    // epoch's output must equal the from-scratch capped ledger
-    // row-for-row, and feeds back as the next epoch's prior (ledger
-    // in, ledger out).
+    // epoch runs the chain form the capped loop runs (the prior hot set
+    // derived from the old snapshot's postings); its recomputed delta ∪
+    // the prior rows the delta cannot touch must equal the from-scratch
+    // capped ledger row-for-row, and feeds back as the next epoch's
+    // prior (ledger in, ledger out).
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    import graft.operators.Corpus
+    import graft.operators.{Corpus, Dedup}
     val cap = 2
     val nearDup = "alpha beta gamma delta epsilon zeta eta"
     val fillers = (3L to 6L).map(i => i -> s"f${i}a f${i}b f${i}c f${i}d f${i}e f${i}f")
@@ -349,13 +351,25 @@ class SnapshotSpec extends AnyFunSuite {
     val e1 = (Seq(1L -> nearDup, 2L -> nearDup) ++ fillers ++ hotDoc).toDF("doc_id", "text")
     val e2 = e0 // doc 7 removed again
 
+    // the next full ledger, eagerly checkpointed (the caller releases it)
     def cappedNext(prior: org.apache.spark.sql.DataFrame,
                    oldDocs: org.apache.spark.sql.DataFrame,
-                   newDocs: org.apache.spark.sql.DataFrame) =
-      Snapshot.incrementalLedgerFromStoredState(
-        prior, Snapshot.manifest(oldDocs), Snapshot.manifest(newDocs),
-        Snapshot.postings(newDocs), newDocs,
-        Snapshot.ShingleDfCap(cap, Snapshot.postings(oldDocs)), 25)
+                   newDocs: org.apache.spark.sql.DataFrame) = {
+      val idx = Snapshot.InMemoryPostings(Snapshot.postings(newDocs))
+      val (delta, hotNext) = Snapshot.incrementalLedgerDeltaCheckpointedCapped(
+        prior, Snapshot.manifest(oldDocs), Snapshot.manifest(newDocs), idx,
+        ids => newDocs.join(ids, Seq("doc_id"), "left_semi"), 25, cap,
+        Dedup.hotShingles(Snapshot.postings(oldDocs), cap),
+        ids => Snapshot.postings(oldDocs).join(ids, Seq("doc_id"), "left_semi"), idx.forDocs)
+      val deltaIds = Snapshot.diff(Snapshot.manifest(oldDocs), Snapshot.manifest(newDocs))
+        .select(col("doc_id"))
+      val next = delta.unionByName(
+        prior.join(delta.select(col("doc_id")), Seq("doc_id"), "left_anti")
+          .join(deltaIds, Seq("doc_id"), "left_anti"))
+        .localCheckpoint(true)
+      Seq(delta, hotNext).foreach(Corpus.releaseCheckpoint)
+      next
+    }
     def fromScratch(docs: org.apache.spark.sql.DataFrame) =
       Corpus.ledger(docs, Some(cap)).orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
     def naiveSeeds(prior: org.apache.spark.sql.DataFrame,
@@ -378,7 +392,7 @@ class SnapshotSpec extends AnyFunSuite {
     assert(!Set(1L, 2L).subsetOf(naiveSeeds(ledger0, e0, e1)),
       "engineered premise broken: docs 1,2 must be OUTSIDE the naive seed set at epoch 1")
 
-    val next1 = cappedNext(ledger0, e0, e1).localCheckpoint(true)
+    val next1 = cappedNext(ledger0, e0, e1)
     val got1 = next1.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
     assert(got1 == fromScratch(e1),
       "epoch 1 (crossing UP via an added holder): capped incremental diverged")
@@ -394,6 +408,6 @@ class SnapshotSpec extends AnyFunSuite {
       "epoch 2 (crossing DOWN via a removed holder): capped incremental diverged")
     assert(got2.find(_.head == 2L).get(1) == 1L,
       "epoch 2 premise: the 1-2 cluster should have re-formed")
-    Seq(ledger0, next1).foreach(Corpus.releaseCheckpoint)
+    Seq(ledger0, next1, next2).foreach(Corpus.releaseCheckpoint)
   }
 }
