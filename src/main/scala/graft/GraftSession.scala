@@ -82,8 +82,8 @@ object GraftSession {
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val s = configure(SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // The CC loops deterministically unpersist superseded localCheckpoint
-    // frames (Corpus.releaseCheckpoint); Spark WARNs on every such
+    // The CC loops deterministically unpersist superseded checkpoint
+    // frames (graft.Scope.release); Spark WARNs on every such
     // unpersist that the truncated lineage can't recompute — intended
     // there, and at one line per round per query it drowns bench/verify
     // logs. Quiet that single logger; real errors still surface.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -123,102 +123,101 @@ object Bpe {
     * round — the job-count evidence the spec asserts on.
     */
   def train(docs: DataFrame, numMerges: Int = 50, batchSize: Int = 1,
-            roundsProbe: Option[scala.collection.mutable.Buffer[Int]] = None): Seq[Merge] = {
-    var shapes = wordShapes(docs).localCheckpoint(true)
-    val merges = scala.collection.mutable.ListBuffer.empty[Merge]
-    // every multi-char symbol in the relation is some earlier merge's
-    // result string (or the word marker): the set a candidate's result
-    // must MISS for the no-risen-pairs argument below to hold
-    val priorResults = scala.collection.mutable.Set[String](EndWord)
-    var exhausted = false
-    // finally-release: a throw mid-round (executor loss, cancelled job)
-    // must not leave the current shapes checkpoint pinned — the same
-    // throw-path discipline as connectedComponents
-    try while (merges.size < numMerges && !exhausted) {
-      val want = math.min(batchSize, numMerges - merges.size)
-      // deep fetch (batching only): the guard needs the truncation
-      // horizon low in the Zipf tail for the head to clear it, and the
-      // whole-fetch conflict scan needs tie-count conflicts visible; a
-      // few KB of driver collect buys both. Serial training (want=1)
-      // uses only the head row — fetch exactly that.
-      val fetch = if (want == 1) 1 else math.max(want * 64, 256)
-      val top = shapes
-        .select(col("freq"), explode(pairsOf(col("shape"))).as("p"))
-        .groupBy(col("p.0").as("left"), col("p.1").as("right"))
-        .agg(sum(col("freq")).as("pfreq"))
-        .orderBy(col("pfreq").desc, col("left"), col("right"))
-        .limit(fetch)
-        .collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val truncated = top.length == fetch
-        val horizon = if (truncated) top.last.getLong(2) else 0L
-        val rows = top.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        val selected = scala.collection.mutable.ListBuffer.empty[(String, String, Long)]
-        val selectedPairs = scala.collection.mutable.Set.empty[(String, String)]
-        val used = scala.collection.mutable.Set.empty[String]
-        val createdSyms = scala.collection.mutable.Set.empty[String]
-        def pick(l: String, r: String, f: Long): Unit = {
-          selected += ((l, r, f)); selectedPairs += ((l, r))
-          used += l; used += r
-          // the merge RESULT is a symbol too: a pre-existing pair that
-          // mentions it (possible when another split already built the
-          // same string) gains occurrences when this merge applies, so
-          // it must count as a conflict, not a disjoint candidate
-          createdSyms += (l + r); used += (l + r)
-        }
-        pick(rows.head._1, rows.head._2, rows.head._3) // the classic m=1 step
-        // RESULT-COLLISION stop: if a selected merge's result string
-        // already exists as a symbol (an earlier merge built the same
-        // string through a different split — the only way a multi-char
-        // symbol pre-exists), pre-existing pairs mentioning it GAIN
-        // occurrences when the merge applies, and those gains compound
-        // across a batch beyond any fixed multiple of the conflict max
-        // (a pair between TWO colliding results rises by up to three
-        // neighbors' counts). No cheap bound survives, so the batch
-        // closes at the collision; the head pick itself is always legal
-        // (it IS the serial step).
-        var stop = priorResults(rows.head._1 + rows.head._2)
-        var pos = 1
-        while (!stop && selected.size < want && pos < rows.length) {
-          val (l, r, f) = rows(pos)
-          if (used(l) || used(r)) pos += 1 // conflict row — scanned below
-          else if (priorResults(l + r) || createdSyms(l + r)) stop = true
-          else {
-            // Threat bound — the highest count any pair can carry when
-            // serial BPE recounts after applying the selection, scanned
-            // over the WHOLE fetch (a tie-count conflict can sort AFTER
-            // the candidate in lex order, so a running prefix max is not
-            // enough). With every selected result string brand-new (the
-            // collision stop above), NO pre-existing pair mentions a
-            // created symbol, so nothing rises: untouched pairs keep
-            // their counts (≤ base visible, ≤ horizon unfetched) and
-            // brand-new pairs (x, l+r) inherit ≤ one conflicting
-            // neighbor's count (every occurrence contains an (x, l) or
-            // (r, y) occurrence) — all ≤ m.
-            val conflicts = rows.filter { case (cl, cr, _) =>
-              !selectedPairs((cl, cr)) && (used(cl) || used(cr))
-            }
-            val base = if (conflicts.isEmpty) 0L else conflicts.map(_._3).max
-            val m = math.max(base, horizon)
-            if (f > m) { pick(l, r, f); pos += 1 }
-            else stop = true // serial recount could outrank this candidate
+            roundsProbe: Option[scala.collection.mutable.Buffer[Int]] = None): Seq[Merge] =
+    // a throw mid-round (executor loss, cancelled job) must not leave the
+    // current shapes checkpoint pinned — the scope releases it either way
+    Scope.around { scope =>
+      var shapes = scope.checkpoint(wordShapes(docs))
+      val merges = scala.collection.mutable.ListBuffer.empty[Merge]
+      // every multi-char symbol in the relation is some earlier merge's
+      // result string (or the word marker): the set a candidate's result
+      // must MISS for the no-risen-pairs argument below to hold
+      val priorResults = scala.collection.mutable.Set[String](EndWord)
+      var exhausted = false
+      while (merges.size < numMerges && !exhausted) {
+        val want = math.min(batchSize, numMerges - merges.size)
+        // deep fetch (batching only): the guard needs the truncation
+        // horizon low in the Zipf tail for the head to clear it, and the
+        // whole-fetch conflict scan needs tie-count conflicts visible; a
+        // few KB of driver collect buys both. Serial training (want=1)
+        // uses only the head row — fetch exactly that.
+        val fetch = if (want == 1) 1 else math.max(want * 64, 256)
+        val top = shapes
+          .select(col("freq"), explode(pairsOf(col("shape"))).as("p"))
+          .groupBy(col("p.0").as("left"), col("p.1").as("right"))
+          .agg(sum(col("freq")).as("pfreq"))
+          .orderBy(col("pfreq").desc, col("left"), col("right"))
+          .limit(fetch)
+          .collect()
+        if (top.isEmpty) exhausted = true
+        else {
+          val truncated = top.length == fetch
+          val horizon = if (truncated) top.last.getLong(2) else 0L
+          val rows = top.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+          val selected = scala.collection.mutable.ListBuffer.empty[(String, String, Long)]
+          val selectedPairs = scala.collection.mutable.Set.empty[(String, String)]
+          val used = scala.collection.mutable.Set.empty[String]
+          val createdSyms = scala.collection.mutable.Set.empty[String]
+          def pick(l: String, r: String, f: Long): Unit = {
+            selected += ((l, r, f)); selectedPairs += ((l, r))
+            used += l; used += r
+            // the merge RESULT is a symbol too: a pre-existing pair that
+            // mentions it (possible when another split already built the
+            // same string) gains occurrences when this merge applies, so
+            // it must count as a conflict, not a disjoint candidate
+            createdSyms += (l + r); used += (l + r)
           }
+          pick(rows.head._1, rows.head._2, rows.head._3) // the classic m=1 step
+          // RESULT-COLLISION stop: if a selected merge's result string
+          // already exists as a symbol (an earlier merge built the same
+          // string through a different split — the only way a multi-char
+          // symbol pre-exists), pre-existing pairs mentioning it GAIN
+          // occurrences when the merge applies, and those gains compound
+          // across a batch beyond any fixed multiple of the conflict max
+          // (a pair between TWO colliding results rises by up to three
+          // neighbors' counts). No cheap bound survives, so the batch
+          // closes at the collision; the head pick itself is always legal
+          // (it IS the serial step).
+          var stop = priorResults(rows.head._1 + rows.head._2)
+          var pos = 1
+          while (!stop && selected.size < want && pos < rows.length) {
+            val (l, r, f) = rows(pos)
+            if (used(l) || used(r)) pos += 1 // conflict row — scanned below
+            else if (priorResults(l + r) || createdSyms(l + r)) stop = true
+            else {
+              // Threat bound — the highest count any pair can carry when
+              // serial BPE recounts after applying the selection, scanned
+              // over the WHOLE fetch (a tie-count conflict can sort AFTER
+              // the candidate in lex order, so a running prefix max is not
+              // enough). With every selected result string brand-new (the
+              // collision stop above), NO pre-existing pair mentions a
+              // created symbol, so nothing rises: untouched pairs keep
+              // their counts (≤ base visible, ≤ horizon unfetched) and
+              // brand-new pairs (x, l+r) inherit ≤ one conflicting
+              // neighbor's count (every occurrence contains an (x, l) or
+              // (r, y) occurrence) — all ≤ m.
+              val conflicts = rows.filter { case (cl, cr, _) =>
+                !selectedPairs((cl, cr)) && (used(cl) || used(cr))
+              }
+              val base = if (conflicts.isEmpty) 0L else conflicts.map(_._3).max
+              val m = math.max(base, horizon)
+              if (f > m) { pick(l, r, f); pos += 1 }
+              else stop = true // serial recount could outrank this candidate
+            }
+          }
+          selected.foreach { case (l, r, f) => merges += Merge(merges.size, l, r, f) }
+          priorResults ++= createdSyms
+          roundsProbe.foreach(_ += selected.size)
+          val next = scope.checkpoint(shapes
+            .select(selected.foldLeft(col("shape")) { case (c, (l, r, _)) =>
+              replace(c, lit(S + l + S + S + r + S), lit(S + l + r + S))
+            }.as("shape"), col("freq")))
+          scope.release(shapes)
+          shapes = next
         }
-        selected.foreach { case (l, r, f) => merges += Merge(merges.size, l, r, f) }
-        priorResults ++= createdSyms
-        roundsProbe.foreach(_ += selected.size)
-        val next = shapes
-          .select(selected.foldLeft(col("shape")) { case (c, (l, r, _)) =>
-            replace(c, lit(S + l + S + S + r + S), lit(S + l + r + S))
-          }.as("shape"), col("freq"))
-          .localCheckpoint(true)
-        Corpus.releaseCheckpoint(shapes)
-        shapes = next
       }
-    } finally Corpus.releaseCheckpoint(shapes)
-    merges.toList
-  }
+      merges.toList
+    }
 
   /** CORPUS-WIDE tokenization with a learned merge table (VERDICT r5
     * #4, re-shaped per VERDICT r6 #3): docs → (doc_id, tokens array,

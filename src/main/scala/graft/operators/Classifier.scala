@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -112,44 +112,41 @@ object Classifier {
     * the driver applies the step and re-broadcasts — the MLlib
     * linear-model shape, with the same depth-2 combine as [[Pca.fit]].
     */
-  def fit(featurized: DataFrame, dim: Int = Dim, iters: Int = Iters): LrModel = {
+  def fit(featurized: DataFrame, dim: Int = Dim, iters: Int = Iters): LrModel = Scope.around { scope =>
     val spark = featurized.sparkSession
-    val rows = featurized.filter(col("split") === "train")
+    val rows = scope.persist(featurized.filter(col("split") === "train")
       .select(col("label").cast("double"), col("idx"))
-      .rdd.map(r => (r.getDouble(0), r.getSeq[Int](1).toArray))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var w = new Array[Double](dim + 1)
-      var nTrain = 0L
-      for (_ <- 0 until iters) {
-        val bc = spark.sparkContext.broadcast(w)
-        val (grad, n) = rows.treeAggregate((new Array[Double](dim + 1), 0L))(
-          seqOp = { case ((g, cnt), (y, idx)) =>
-            val wv = bc.value
-            var m = wv(dim); var i = 0
-            while (i < idx.length) { m += wv(idx(i)); i += 1 }
-            val d = 1.0 / (1.0 + math.exp(-m)) - y
-            i = 0
-            while (i < idx.length) { g(idx(i)) += d; i += 1 }
-            g(dim) += d
-            (g, cnt + 1)
-          },
-          combOp = { case ((g1, n1), (g2, n2)) =>
-            var i = 0; while (i < g1.length) { g1(i) += g2(i); i += 1 }
-            (g1, n1 + n2)
-          },
-          depth = 2)
-        bc.destroy()
-        nTrain = n
-        require(n > 0, "text_classifier: empty train split")
-        val w2 = w.clone()
-        var i = 0
-        while (i < dim) { w2(i) -= Lr * (grad(i) / n + L2 * w(i)); i += 1 }
-        w2(dim) -= Lr * (grad(dim) / n) // no L2 on the bias
-        w = w2
-      }
-      LrModel(w, dim, nTrain)
-    } finally rows.unpersist(blocking = false)
+      .rdd.map(r => (r.getDouble(0), r.getSeq[Int](1).toArray)), StorageLevel.MEMORY_AND_DISK)
+    var w = new Array[Double](dim + 1)
+    var nTrain = 0L
+    for (_ <- 0 until iters) {
+      val bc = spark.sparkContext.broadcast(w)
+      val (grad, n) = rows.treeAggregate((new Array[Double](dim + 1), 0L))(
+        seqOp = { case ((g, cnt), (y, idx)) =>
+          val wv = bc.value
+          var m = wv(dim); var i = 0
+          while (i < idx.length) { m += wv(idx(i)); i += 1 }
+          val d = 1.0 / (1.0 + math.exp(-m)) - y
+          i = 0
+          while (i < idx.length) { g(idx(i)) += d; i += 1 }
+          g(dim) += d
+          (g, cnt + 1)
+        },
+        combOp = { case ((g1, n1), (g2, n2)) =>
+          var i = 0; while (i < g1.length) { g1(i) += g2(i); i += 1 }
+          (g1, n1 + n2)
+        },
+        depth = 2)
+      bc.destroy()
+      nTrain = n
+      require(n > 0, "text_classifier: empty train split")
+      val w2 = w.clone()
+      var i = 0
+      while (i < dim) { w2(i) -= Lr * (grad(i) / n + L2 * w(i)); i += 1 }
+      w2(dim) -= Lr * (grad(dim) / n) // no L2 on the bias
+      w = w2
+    }
+    LrModel(w, dim, nTrain)
   }
 
   /** Broadcast-model scoring: `(doc_id, label, split, prob, pred)` for

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,23 +33,6 @@ object Corpus {
     * place that knows the per-round numbers.
     */
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Deterministically release a `localCheckpoint(true)`-backed frame's
-    * cached blocks. `Dataset.unpersist` can't do it (checkpoint blocks
-    * are RDD-level cache, not CacheManager entries) and the ContextCleaner
-    * only reclaims them on a driver GC — with driver heaps sized for
-    * 100 TB coordination that can be never, leaving O(rounds) superseded
-    * label/edge copies pinned in the block manager. Falls through
-    * silently for frames that aren't checkpoint-backed. Spark WARNs that
-    * the truncated lineage can't recompute after unpersisting — here
-    * that's the point (the frame is never read again); GraftSession
-    * quiets that one logger.
-    */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   // ---------------------------------------------------------------- splits
 
@@ -128,7 +111,7 @@ object Corpus {
   /** Connected components by iterative min-label propagation over an
     * undirected edge list (`src`, `dst`): every vertex converges to the
     * smallest vertex id reachable from it. Each round is one shuffle
-    * join (edges ⋈ labels) + one min-aggregate, and `localCheckpoint`
+    * join (edges ⋈ labels) + one min-aggregate, and a checkpoint
     * truncates lineage so round N's plan doesn't embed rounds 1..N-1.
     * Rounds needed = graph diameter — right for near-dup graphs, whose
     * components are tiny cliques/chains (dup clusters), ~2-4 rounds. For
@@ -136,22 +119,30 @@ object Corpus {
     * small-star formulation (Kiveris et al., "Connected Components in
     * MapReduce"), which converges in O(log n) rounds of the same
     * join+min shape.
+    *
+    * The one block set the returned labels read (the final round's
+    * labels, or the empty edge set) is kept in `scope`: the session
+    * leaves it to GC, a long-running loop's scope releases it once the
+    * labels are consumed. Everything else is released before this
+    * returns, and on a throw.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
-                          ckptOut: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true) // edge set is read every round — materialize once
+                          scope: Scope = Scope.session): DataFrame = scope.around { s =>
+    // edge set is read every round — materialize once
+    val sym = s.checkpoint(edges.select(col("src"), col("dst"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst"))))
     // Dup-free corpora (empty pair graph) skip the label machinery
     // entirely — the checkpointed edge set answers isEmpty as a limit-1
     // probe, and the result is the empty labeled-vertex relation.
-    if (sym.isEmpty) {
-      ckptOut.foreach(_ += sym) // the result READS sym: it survives
-      return sym.select(col("src").as("id"), col("src").as("label"))
-    }
-    var lastCkpt = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
+    if (sym.isEmpty) s.keep(sym).select(col("src").as("id"), col("src").as("label"))
+    else minLabels(sym, maxIter, s)
+  }
+
+  /** [[connectedComponents]]' label rounds over the non-empty
+    * checkpointed edge set `sym`, held in `s`. */
+  private def minLabels(sym: DataFrame, maxIter: Int, s: Scope): DataFrame = {
+    var lastCkpt = s.checkpoint(sym.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
     var labels = lastCkpt
     if (log.isInfoEnabled)
       log.info(s"connectedComponents: ${sym.count()} directed edges, " +
@@ -162,16 +153,15 @@ object Corpus {
       val msgs = sym
         .join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("m_id")).agg(min(col("label")).as("nbr_min"))
-      val next = labels
+      val next = s.checkpoint(labels
         .join(msgs, labels("id") === msgs("m_id"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"),
-          (coalesce(col("nbr_min"), col("label")) < col("label")).as("chg"))
-        .localCheckpoint(true)
+          (coalesce(col("nbr_min"), col("label")) < col("label")).as("chg")))
       changed = next.filter(col("chg")).count()
       // `next` is materialized — drop the superseded round's checkpoint
       // blocks so resident label copies stay at 2, not O(rounds)
-      releaseCheckpoint(lastCkpt)
+      s.release(lastCkpt)
       lastCkpt = next
       labels = next.select(col("id"), col("label"))
       iter += 1
@@ -182,27 +172,22 @@ object Corpus {
     }
     // the returned labels read only the final round's checkpoint; the
     // edge set is no longer referenced by anything
-    releaseCheckpoint(sym)
+    s.release(sym)
     // Returning non-converged labels would be a SILENT wrong answer
     // (docs of one component split across several cluster ids, diverging
     // from the oracle's transitive closure). Fail loudly instead: the
     // caller raises maxIter, or — for adversarial long-path graphs at
     // scale — switches to the large-star/small-star formulation. The
-    // final checkpoint is released first: the message tells the caller
-    // to RETRY, and each failed attempt must not pin another label set.
-    if (changed > 0) {
-      releaseCheckpoint(lastCkpt)
+    // scope releases the final checkpoint as the throw passes: the
+    // message tells the caller to RETRY, and each failed attempt must
+    // not pin another label set.
+    if (changed > 0)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
           s"($changed labels still changing) — raise maxIter (rounds needed = " +
           "component diameter) or use the large-star/small-star formulation " +
           "for long-path graphs")
-    }
-    // the ONE block set the returned relation still reads: a one-shot
-    // query lets the session reclaim it at exit, but a long-running
-    // LOOP must release it once the labels are consumed — `ckptOut`
-    // hands the loop that handle (Snapshot's checkpointed delta form)
-    ckptOut.foreach(_ += lastCkpt)
+    s.keep(lastCkpt) // the ONE block set the returned relation still reads
     labels
   }
 
@@ -228,17 +213,24 @@ object Corpus {
     * or adversarial; near-dup clique graphs converge in ~2 rounds either
     * way, which is why the min-label variant stays the default.
     */
-  def connectedComponentsStar(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    // vertex set up front: star rewriting drops self-loops, but a vertex
-    // appearing ONLY in self-loops is still a (singleton) component
-    val vertices = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().localCheckpoint(true)
-    if (vertices.isEmpty)
-      return vertices.select(col("id"), col("id").as("label"))
+  def connectedComponentsStar(edges: DataFrame, maxIter: Int = 50): DataFrame =
+    Scope.session.around { s =>
+      // vertex set up front: star rewriting drops self-loops, but a vertex
+      // appearing ONLY in self-loops is still a (singleton) component
+      val vertices = s.keep(s.checkpoint(edges.select(col("src").as("id"))
+        .union(edges.select(col("dst").as("id"))).distinct()))
+      if (vertices.isEmpty) vertices.select(col("id"), col("id").as("label"))
+      else starLabels(edges, vertices, maxIter, s)
+    }
+
+  /** [[connectedComponentsStar]]'s rounds over a non-empty vertex set;
+    * the edge-set copies are held in `s`, the final one kept. */
+  private def starLabels(edges: DataFrame, vertices: DataFrame, maxIter: Int,
+                         s: Scope): DataFrame = {
     // canonical undirected form: (u, v) with u > v, self-loops dropped
-    var e = edges
+    var e = s.checkpoint(edges
       .select(greatest(col("src"), col("dst")).as("u"), least(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint(true)
+      .filter(col("u") =!= col("v")).distinct())
     var eCount = e.count()
     log.info(s"connectedComponentsStar: $eCount canonical edges, maxIter=$maxIter")
     var converged = eCount == 0
@@ -256,35 +248,32 @@ object Corpus {
       // small-star on the large-star output (already canonical u > v):
       // node u and its smaller neighbors all re-point at min(N⁻(u) ∪ {u})
       val minsS = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val small = large.join(minsS, "u").select(col("v").as("a"), col("m").as("b"))
+      val small = s.checkpoint(large.join(minsS, "u").select(col("v").as("a"), col("m").as("b"))
         .union(minsS.select(col("u").as("a"), col("m").as("b")))
         .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-        .localCheckpoint(true)
+        .filter(col("u") =!= col("v")).distinct())
       val smallCount = small.count()
       // fixed point: same canonical edge set as last round (count gate
       // first; the except probe runs only when counts agree)
       converged = smallCount == eCount && small.exceptAll(e).isEmpty
       // superseded round's checkpoint blocks released — edge-set copies
       // in the block manager stay at 2, not O(rounds)
-      releaseCheckpoint(e)
+      s.release(e)
       e = small
       eCount = smallCount
       iter += 1
       log.info(s"connectedComponentsStar round $iter: $eCount edges" +
         (if (converged) " (fixed point)" else ""))
     }
-    if (!converged && eCount > 0) {
-      // retry-path hygiene: a retry recomputes from the raw edges, so
-      // nothing from this attempt may stay pinned
-      releaseCheckpoint(e)
-      releaseCheckpoint(vertices)
+    // retry-path hygiene: a retry recomputes from the raw edges, so the
+    // scope releases this attempt's vertices and edges as the throw passes
+    if (!converged && eCount > 0)
       throw new IllegalStateException(
         s"connectedComponentsStar did not reach a fixed point in $maxIter rounds " +
           s"($eCount edges) — rounds scale with log(largest component size), so " +
           "either the graph is vastly larger than maxIter allows for (raise it) " +
           "or an upstream bug is feeding a pathological edge set")
-    }
+    s.keep(e)
     // at the fixed point every edge is (vertex, its component minimum);
     // roots label themselves, edge-set dropouts (self-loop-only vertices)
     // are singletons
@@ -302,20 +291,18 @@ object Corpus {
     * dedup pass acts on. Docs with no near-dup partner don't appear
     * (singleton clusters are the identity and would dominate output).
     */
-  def dedupClusters(docs: DataFrame): DataFrame = {
+  def dedupClusters(docs: DataFrame): DataFrame = Scope.session.around { s =>
     // One shingle pass, persisted across the pair-join's two sides (the
     // self-join otherwise recomputes the shingle kernel per side); the
-    // CC loop materializes everything downstream eagerly (localCheckpoint
+    // CC loop materializes everything downstream eagerly (a checkpoint
     // per round), so the cache can be dropped before returning — the
-    // returned plan reads only the checkpointed label RDD.
-    val shingled = Dedup.shingleHashSets(docs).persist()
-    try
-      connectedComponents(
-        Dedup.ngramJaccardPairs(shingled)
-          .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")))
-        .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-        .orderBy(col("doc_id"))
-    finally shingled.unpersist(blocking = false)
+    // returned plan reads only the kept label checkpoint.
+    val shingled = s.persist(Dedup.shingleHashSets(docs))
+    connectedComponents(
+      Dedup.ngramJaccardPairs(shingled)
+        .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")), scope = s)
+      .select(col("id").as("doc_id"), col("label").as("cluster_id"))
+      .orderBy(col("doc_id"))
   }
 
   /** Cluster-size histogram over [[dedupClusters]] — the duplication-
@@ -351,18 +338,16 @@ object Corpus {
   def cleanCorpus(spark: SparkSession, d: String): DataFrame =
     cleanCorpusDocs(Tables.documents(spark, d))
 
-  def cleanCorpusDocs(docs: DataFrame): DataFrame = {
+  def cleanCorpusDocs(docs: DataFrame): DataFrame = Scope.session.around { s =>
     // dedupClusters minus its user-facing sort (the anti-join destroys
     // ordering anyway); shingle pass persisted, dropped once the CC loop
     // has materialized its labels
-    val shingled = Dedup.shingleHashSets(docs).persist()
-    val dropList = try
-      connectedComponents(
-        Dedup.ngramJaccardPairs(shingled)
-          .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")))
-        .filter(col("id") =!= col("label")) // canonical member survives
-        .select(col("id").as("doc_id"))
-    finally shingled.unpersist(blocking = false)
+    val shingled = s.persist(Dedup.shingleHashSets(docs))
+    val dropList = connectedComponents(
+      Dedup.ngramJaccardPairs(shingled)
+        .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")), scope = s)
+      .filter(col("id") =!= col("label")) // canonical member survives
+      .select(col("id").as("doc_id"))
     scoredDocs(docs)
       .join(dropList, Seq("doc_id"), "left_anti")
       .filter(col("quality") >= 0.75)
@@ -412,11 +397,8 @@ object Corpus {
     * capped-incremental equal to this from-scratch form row-for-row.
     */
   def ledger(docs: DataFrame, maxShingleDf: Option[Int] = None,
-             ckptOut: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame = {
-    val shingled = Dedup.shingleHashSets(docs).persist()
-    try ledgerFrom(docs, shingled, maxShingleDf, ckptOut)
-    finally shingled.unpersist(blocking = false)
-  }
+             scope: Scope = Scope.session): DataFrame =
+    scope.around(s => ledgerFrom(docs, s.persist(Dedup.shingleHashSets(docs)), maxShingleDf, s))
 
   /** [[ledger]]'s output schema as a VALUE — a stored-ledger chain
     * reader over possibly-zero-file delta dirs (a removal-only epoch's
@@ -440,15 +422,16 @@ object Corpus {
   /** [[ledger]] with a caller-owned shingle pass — so a caller that
     * already persisted `shingleHashSets` for these exact docs (the
     * incremental closure) doesn't pay the kernel twice. The CC labels
-    * materialize (checkpointed) before this returns; only the lazy
-    * scored/label join survives, which never reads `shingled`.
+    * materialize (checkpointed, kept in `scope`) before this returns;
+    * only the lazy scored/label join survives, which never reads
+    * `shingled`.
     */
   private[operators] def ledgerFrom(docs: DataFrame, shingled: DataFrame,
                                     maxShingleDf: Option[Int] = None,
-                                    ckptOut: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame =
+                                    scope: Scope = Scope.session): DataFrame =
     ledgerFromEdges(docs,
       Dedup.ngramJaccardPairs(shingled, maxShingleDf = maxShingleDf)
-        .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")), ckptOut)
+        .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")), scope)
 
   /** [[ledger]] with a caller-owned POSTING relation (`doc_id`, `nsh`,
     * `s` — [[Snapshot.postings]]' shape): the streamed clean loop's
@@ -459,10 +442,10 @@ object Corpus {
     * text either way. */
   private[graft] def ledgerFromPostings(docs: DataFrame, postings: DataFrame,
                                         maxShingleDf: Option[Int] = None,
-                                        ckptOut: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame =
+                                        scope: Scope = Scope.session): DataFrame =
     ledgerFromEdges(docs,
       Dedup.ngramJaccardPairsFromPostings(postings, maxShingleDf = maxShingleDf)
-        .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")), ckptOut)
+        .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")), scope)
 
   /** [[ledgerFrom]] with a caller-supplied near-dup edge relation
     * (`src`, `dst`; either orientation, duplicates tolerated — CC
@@ -470,13 +453,13 @@ object Corpus {
     * must not pay the pair join twice: the incremental closure's BFS
     * emits exactly the closure's complete edge set as a by-product of
     * traversal ([[Snapshot.incrementalCleanFrom]]). Same contract as
-    * [[ledgerFrom]]: CC labels materialize (checkpointed) before this
-    * returns; only the lazy scored/label join survives, which never
-    * reads `edges`.
+    * [[ledgerFrom]]: CC labels materialize (checkpointed, kept in
+    * `scope`) before this returns; only the lazy scored/label join
+    * survives, which never reads `edges`.
     */
   private[operators] def ledgerFromEdges(docs: DataFrame, edges: DataFrame,
-                                         ckptOut: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame = {
-    val labels = connectedComponents(edges, ckptOut = ckptOut)
+                                         scope: Scope = Scope.session): DataFrame = {
+    val labels = connectedComponents(edges, scope = scope)
     scoredDocs(docs)
       .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
@@ -371,7 +371,7 @@ object Dedup {
     */
   def minhashNearDupVerdict(docs: DataFrame, threshold: Double = DefaultThreshold,
                             maxBandDf: Option[Int] = None,
-                            ckptOut: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame = {
+                            scope: Scope = Scope.session): DataFrame = {
     // one shingle pass for signatures + both verify sides (see
     // ngramJaccard for the persist-not-checkpoint rationale)
     val shingled = shingleHashSets(docs).persist()
@@ -380,21 +380,16 @@ object Dedup {
     // kernel — r16 review) and release it at an eager pair-sized
     // checkpoint, since the lazily-returned verdict has no later
     // release point within this call. The checkpoint itself is the
-    // returned verdict's input, so it must OUTLIVE the call — `ckptOut`
-    // hands it back (the connectedComponents discipline, ADVICE r16):
-    // a repeat caller (soak gates, spec reruns) releases it via
-    // [[Corpus.releaseCheckpoint]] once the verdict is consumed; a
-    // one-shot caller may omit it and let session exit reclaim the
-    // single pair-sized block set.
+    // returned verdict's input, so it must OUTLIVE the call: it is kept
+    // in `scope` (the connectedComponents discipline, ADVICE r16) — a
+    // repeat caller (soak gates, spec reruns) passes a scope that
+    // releases it once the verdict is consumed; a one-shot caller
+    // leaves the single pair-sized block set to the session.
     val pairs = maxBandDf match {
-      case Some(cap) =>
-        val banded = bandRows(minhashSignatures(shingled)).persist()
-        try {
-          val p = lshPairsFromBanded(coldBands(banded, cap), shingled, threshold)
-            .localCheckpoint(true)
-          ckptOut.foreach(_ += p)
-          p
-        } finally banded.unpersist(blocking = false)
+      case Some(cap) => scope.around { s =>
+        val banded = s.persist(bandRows(minhashSignatures(shingled)))
+        s.keep(s.checkpoint(lshPairsFromBanded(coldBands(banded, cap), shingled, threshold)))
+      }
       case None => minhashLshPairs(shingled, threshold)
     }
     val best = pairs.groupBy(col("doc_id_2").as("doc_id"))

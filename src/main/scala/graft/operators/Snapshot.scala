@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -181,15 +181,12 @@ object Snapshot {
       * buckets (union of per-bucket cached chunks, each read once per
       * epoch no matter how many rounds touch it). */
     def forShinglesOf(frontierPost: DataFrame): DataFrame
-    /** Release whatever the probe cached (end of the closure's epoch). */
-    def release(): Unit
   }
 
   /** The batch-path probe: the persisted index itself, both sides. */
   private[graft] final case class InMemoryPostings(df: DataFrame) extends PostingsProbe {
     def forDocs(frontier: DataFrame): DataFrame = df.join(frontier, "doc_id")
     def forShinglesOf(frontierPost: DataFrame): DataFrame = df
-    def release(): Unit = ()
   }
 
   /** A probe under the `maxShingleDf` cap: every read drops rows whose
@@ -208,19 +205,18 @@ object Snapshot {
       inner.forDocs(frontier).join(broadcast(hot), Seq("s"), "left_anti")
     def forShinglesOf(frontierPost: DataFrame): DataFrame =
       inner.forShinglesOf(frontierPost).join(broadcast(hot), Seq("s"), "left_anti")
-    def release(): Unit = inner.release()
   }
 
   /** The cap-crossing machinery of the capped chain form
     * ([[incrementalLedgerDeltaCheckpointedCapped]]):
-    * given the epoch's delta ids, the UNCAPPED new-index probe, the
-    * delta docs' NEW posting rows (supplied by the caller — a
-    * maintained-index deployment reads its own just-written delta back
-    * rather than re-shingling the arrival; a caller without one passes
-    * `probe.forDocs(deltaIds)`), their OLD posting rows and the prior
-    * epoch's hot set, returns (extra closure seeds, the NEXT hot set as
-    * an eager checkpoint, the caches to unpersist once the closure has
-    * materialized its seeds).
+    * given the UNCAPPED new-index probe, the delta docs' NEW posting
+    * rows (supplied by the caller — a maintained-index deployment reads
+    * its own just-written delta back rather than re-shingling the
+    * arrival; a caller without one passes `probe.forDocs(deltaIds)`),
+    * their OLD posting rows and the prior epoch's hot set, returns
+    * (extra closure seeds, eagerly checkpointed in `scope`, and the NEXT
+    * hot set, lazy: the caller checkpoints it into the scope that
+    * outlives the call). Its caches are persisted in `scope` too.
     *
     * Only delta-doc shingles can change df, so: the df SHIFT per
     * shingle is a delta-sized aggregate (new delta holders − old delta
@@ -234,18 +230,17 @@ object Snapshot {
     * membership, touched shingles are re-decided from their exact
     * `df_new` — so hot(e) is exact by induction from an exact hot(0).
     */
-  private def capCrossings(deltaIds: DataFrame, postings: PostingsProbe,
-                           newDeltaPost: DataFrame,
-                           oldDeltaPost: DataFrame, hotPrior: DataFrame, maxDf: Int)
-      : (DataFrame, DataFrame, Seq[DataFrame]) = {
-    val deltaPost = newDeltaPost.select(col("s"), lit(1L).as("side"))
-      .unionByName(oldDeltaPost.select(col("s"), lit(-1L).as("side"))).persist()
+  private def capCrossings(postings: PostingsProbe, newDeltaPost: DataFrame,
+                           oldDeltaPost: DataFrame, hotPrior: DataFrame, maxDf: Int,
+                           scope: Scope): (DataFrame, DataFrame) = {
+    val deltaPost = scope.persist(newDeltaPost.select(col("s"), lit(1L).as("side"))
+      .unionByName(oldDeltaPost.select(col("s"), lit(-1L).as("side"))))
     val touchedS = deltaPost.select(col("s")).distinct()
     // all new-index rows of touched shingles — forShinglesOf only needs
     // the `s` column of its argument (bucket discovery), and its
     // superset result is then restricted to exactly the touched set
-    val touchedRows = postings.forShinglesOf(deltaPost)
-      .join(touchedS, Seq("s"), "left_semi").persist()
+    val touchedRows = scope.persist(postings.forShinglesOf(deltaPost)
+      .join(touchedS, Seq("s"), "left_semi"))
     // ONE aggregated row per touched shingle — df_new beside the
     // delta's shift — persisted SMALL (touched-shingle-count rows), so
     // the crossing filter and the hot advance both read this relation.
@@ -253,11 +248,10 @@ object Snapshot {
     // rows ran TWICE: once under the seed checkpoint via `crossing`,
     // once under the hot-snapshot checkpoint — the duplicated agg was
     // ~2s/epoch of the crossing stage's cost at sf0.1.
-    val touchedStats = deltaPost.groupBy(col("s")).agg(sum(col("side")).as("shift"))
+    val touchedStats = scope.persist(deltaPost.groupBy(col("s")).agg(sum(col("side")).as("shift"))
       .join(touchedRows.groupBy(col("s")).agg(count(lit(1)).as("df_new")), Seq("s"), "left")
       .select(col("s"), coalesce(col("df_new"), lit(0L)).as("df_new"),
-        (coalesce(col("df_new"), lit(0L)) - col("shift")).as("df_old"))
-      .persist()
+        (coalesce(col("df_new"), lit(0L)) - col("shift")).as("df_old")))
     val crossing = touchedStats
       .filter((col("df_old") > maxDf) =!= (col("df_new") > maxDf))
       .select(col("s"))
@@ -269,34 +263,18 @@ object Snapshot {
     // 7.9s vs the uncapped 1.4s at sf1). Materializing the (small,
     // crossing-holder-sized) id set here moves that work into the
     // crossing stage where it belongs — and runs it ONCE.
-    val extraSeeds =
-      try touchedRows.join(crossing, Seq("s"), "left_semi")
-        .select(col("doc_id")).distinct()
-        .localCheckpoint(true)
-      catch { case t: Throwable =>
-        Seq(deltaPost, touchedRows, touchedStats).foreach(_.unpersist(blocking = false))
-        throw t
-      }
-    // eager: the closure anti-joins the hot set EVERY round, and the
-    // stored-chain caller persists it as the epoch's hot snapshot.
-    // This checkpoint job is what materializes the caches — if it
-    // dies, no caller ever receives the caches seq, so the failure
-    // path must unpersist here (release-before-throw; r15 review).
-    // Both arms read the cached touchedStats: its domain is exactly
-    // the touched set (every touched shingle has a shift row; absent
-    // df_new coalesces to 0, which the > maxDf filter excludes), so
-    // the anti-join and the hot filter see the same sets the unfused
-    // touchedS/dfNew pair produced.
-    val hotNext =
-      try hotPrior.join(touchedStats.select(col("s")), Seq("s"), "left_anti")
-        .unionByName(touchedStats.filter(col("df_new") > maxDf).select(col("s")))
-        .localCheckpoint(true)
-      catch { case t: Throwable =>
-        Corpus.releaseCheckpoint(extraSeeds)
-        Seq(deltaPost, touchedRows, touchedStats).foreach(_.unpersist(blocking = false))
-        throw t
-      }
-    (extraSeeds, hotNext, Seq(deltaPost, touchedRows, touchedStats))
+    val extraSeeds = scope.checkpoint(touchedRows.join(crossing, Seq("s"), "left_semi")
+      .select(col("doc_id")).distinct())
+    // the caller checkpoints this eagerly: the closure anti-joins the
+    // hot set EVERY round, and the stored-chain caller persists it as
+    // the epoch's hot snapshot. Both arms read the cached touchedStats:
+    // its domain is exactly the touched set (every touched shingle has
+    // a shift row; absent df_new coalesces to 0, which the > maxDf
+    // filter excludes), so the anti-join and the hot filter see the
+    // same sets the unfused touchedS/dfNew pair produced.
+    val hotNext = hotPrior.join(touchedStats.select(col("s")), Seq("s"), "left_anti")
+      .unionByName(touchedStats.filter(col("df_new") > maxDf).select(col("s")))
+    (extraSeeds, hotNext)
   }
 
   /** BFS over the TRUE Jaccard pair graph from `seeds`, probing a
@@ -307,8 +285,9 @@ object Snapshot {
     * graph's connected components containing a seed, eagerly
     * checkpointed — plus the per-round edge relations, whose union is
     * the closure's COMPLETE `(src, dst)` pair set (each eagerly
-    * checkpointed; the caller releases them via
-    * [[Corpus.releaseCheckpoint]] once consumed).
+    * checkpointed). All of them are held in `scope`, which the caller
+    * owns: it drops the edges with [[Scope.release]] once consumed, and
+    * a throw (the non-convergence guard included) releases every round.
     *
     * Edge completeness: the dst side of each round's join is
     * deliberately UNRESTRICTED (not anti-joined against visited). Each
@@ -322,7 +301,7 @@ object Snapshot {
     * when DEBUG is on, so a default run starts no extra jobs.
     */
   private[graft] def pairGraphClosure(seeds: DataFrame, postings: PostingsProbe,
-                                      maxRounds: Int): (DataFrame, Seq[DataFrame]) = {
+                                      maxRounds: Int, scope: Scope): (DataFrame, Seq[DataFrame]) = {
     val debug = log.isDebugEnabled
     val lap = incrLap(detail = true)
     val roundEdges = scala.collection.mutable.ListBuffer.empty[DataFrame]
@@ -333,59 +312,45 @@ object Snapshot {
     // paying the full closure's materialization per hop; the union view
     // stores each closure doc's id exactly ONCE and still cuts lineage
     // at every leaf (each leaf is its own checkpoint).
-    val frontiers = scala.collection.mutable.ListBuffer(seeds.localCheckpoint(true))
+    val frontiers = scala.collection.mutable.ListBuffer(scope.checkpoint(seeds))
     def visitedView: DataFrame = frontiers.reduce(_ union _)
     lap(s"seeds${if (debug) s" (n=${frontiers.head.count()})" else ""}")
     var frontier = frontiers.head
     var rounds = 0
-    def releaseAll(): Unit = {
-      roundEdges.foreach(Corpus.releaseCheckpoint)
-      frontiers.foreach(Corpus.releaseCheckpoint)
-    }
-    try while (rounds < maxRounds && !frontier.isEmpty) {
+    while (rounds < maxRounds && !frontier.isEmpty) {
       // frontier-sized; persisted because it feeds BOTH the edge join
       // and (on a stored probe) the shingle-bucket discovery collect
-      val fp = postings.forDocs(frontier).persist()
-      val edges = try {
-        val fPost = fp
-          .select(col("doc_id").as("src"), col("nsh").as("n1"), col("s").as("fs"))
-        val cPost = postings.forShinglesOf(fp)
-          .select(col("doc_id").as("dst"), col("nsh").as("n2"), col("s"))
-        val jac = col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))
-        // the ONE shared length-filter predicate ([[Dedup.sizeRatioOk]];
-        // jac ≤ min/max, division form for boundary consistency):
-        // candidate rows of can't-pass pairs die inside the join instead
-        // of riding the (src,dst) agg shuffle — at sf1 this was the
-        // closure's cost center (VERDICT r14 #4, −62% measured).
-        fPost
-          .join(cPost, col("fs") === col("s") && col("src") =!= col("dst") &&
-            Dedup.sizeRatioOk(Dedup.DefaultThreshold))
-          .groupBy(col("src"), col("dst"))
-          .agg(count(lit(1)).as("inter"),
-            first(col("n1")).as("n1"), first(col("n2")).as("n2"))
-          .filter(jac >= Dedup.DefaultThreshold)
-          .select(col("src"), col("dst"))
-          .localCheckpoint(true) // eager: fp is consumed by the time it returns
-      } finally fp.unpersist(blocking = false)
+      val fp = scope.persist(postings.forDocs(frontier))
+      val fPost = fp
+        .select(col("doc_id").as("src"), col("nsh").as("n1"), col("s").as("fs"))
+      val cPost = postings.forShinglesOf(fp)
+        .select(col("doc_id").as("dst"), col("nsh").as("n2"), col("s"))
+      val jac = col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))
+      // the ONE shared length-filter predicate ([[Dedup.sizeRatioOk]];
+      // jac ≤ min/max, division form for boundary consistency):
+      // candidate rows of can't-pass pairs die inside the join instead
+      // of riding the (src,dst) agg shuffle — at sf1 this was the
+      // closure's cost center (VERDICT r14 #4, −62% measured).
+      val edges = scope.checkpoint(fPost
+        .join(cPost, col("fs") === col("s") && col("src") =!= col("dst") &&
+          Dedup.sizeRatioOk(Dedup.DefaultThreshold))
+        .groupBy(col("src"), col("dst"))
+        .agg(count(lit(1)).as("inter"),
+          first(col("n1")).as("n1"), first(col("n2")).as("n2"))
+        .filter(jac >= Dedup.DefaultThreshold)
+        .select(col("src"), col("dst")))
+      scope.release(fp) // eager edges: fp is consumed
       roundEdges += edges
-      val nextFrontier = edges.select(col("dst").as("doc_id")).distinct()
-        .join(visitedView, Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
+      val nextFrontier = scope.checkpoint(edges.select(col("dst").as("doc_id")).distinct()
+        .join(visitedView, Seq("doc_id"), "left_anti"))
       frontiers += nextFrontier
       frontier = nextFrontier
       rounds += 1
       lap(s"closure round $rounds${if (debug) s" (frontier=${frontier.count()})" else ""}")
-    } catch { case t: Throwable =>
-      // a mid-round failure (join, checkpoint, probe read) must not
-      // strand the rounds already checkpointed
-      releaseAll(); throw t
     }
     if (!frontier.isEmpty) {
-      // release-before-throw (the connectedComponents discipline):
-      // localCheckpoint blocks are reclaimed only on driver GC, and the
-      // message invites a raise-and-retry — each failed attempt must
-      // not pin another O(rounds) block set
-      releaseAll()
+      // the message invites a raise-and-retry, and the caller's scope
+      // releases this attempt's rounds as the throw passes
       throw new IllegalStateException(
         s"pair-graph closure did not converge in $maxRounds rounds — " +
           "a near-dup chain is deeper than maxRounds; raise it (the " +
@@ -398,10 +363,8 @@ object Snapshot {
     // without re-materializing (and without releasing it).
     if (frontiers.size == 1) (frontiers.head, roundEdges.toList)
     else {
-      val closed =
-        try visitedView.localCheckpoint(true)
-        catch { case t: Throwable => releaseAll(); throw t }
-      frontiers.foreach(Corpus.releaseCheckpoint)
+      val closed = scope.checkpoint(visitedView)
+      frontiers.foreach(scope.release)
       (closed, roundEdges.toList)
     }
   }
@@ -463,10 +426,10 @@ object Snapshot {
     * 100 TB full-recompute never runs.
     */
   def incrementalCleanFrom(oldDocs: DataFrame, newDocs: DataFrame,
-                           maxRounds: Int = 25): DataFrame = {
+                           maxRounds: Int = 25): DataFrame = Scope.session.around { scope =>
     val lap = incrLap(detail = true)
-    val prior = Corpus.ledger(oldDocs)
-      .localCheckpoint(true) // read 3× downstream (seeds, mates, carry) — one compute
+    // read 3× downstream (seeds, mates, carry) — one compute
+    val prior = scope.keep(scope.checkpoint(Corpus.ledger(oldDocs, scope = scope)))
     lap("prior ledger (harness-derived; stored in production)")
     incrementalCleanFromState(prior, manifest(oldDocs), newDocs, maxRounds)
   }
@@ -506,10 +469,8 @@ object Snapshot {
     // re-deriving the explode per round would re-shuffle every posting
     // each round; a stored-chain caller's parquet-backed index plays the
     // same role, re-SCANNED per round instead of recomputed).
-    val idx = postings(newDocs).persist()
-    try incrementalLedgerFromStoredState(
-      prior, oldManifest, manifest(newDocs), idx, newDocs, maxRounds)
-    finally idx.unpersist(blocking = false)
+    Scope.around(scope => incrementalLedgerFromStoredState(
+      prior, oldManifest, manifest(newDocs), scope.persist(postings(newDocs)), newDocs, maxRounds))
   }
 
   /** The stored POSTING-INDEX relation for `docs` — one row per doc ×
@@ -557,17 +518,18 @@ object Snapshot {
     */
   def incrementalLedgerFromStoredState(prior: DataFrame, oldManifest: DataFrame,
                                        newManifest: DataFrame, postings: DataFrame,
-                                       newDocs: DataFrame, maxRounds: Int = 25): DataFrame = {
-    val (recomputed, closure, deltaIds, _) =
-      recomputedLedgerRows(prior, oldManifest, newManifest, InMemoryPostings(postings),
-        ids => newDocs.join(ids, Seq("doc_id"), "left_semi"), maxRounds)
-    // carry forward every prior ledger row the delta provably cannot
-    // touch (not in the closure, not named by the delta)
-    val carried = prior
-      .join(closure, Seq("doc_id"), "left_anti")
-      .join(deltaIds, Seq("doc_id"), "left_anti")
-    recomputed.unionByName(carried)
-  }
+                                       newDocs: DataFrame, maxRounds: Int = 25): DataFrame =
+    Scope.session.around { scope =>
+      val (recomputed, closure, delta) =
+        recomputedLedgerRows(prior, oldManifest, newManifest, InMemoryPostings(postings),
+          ids => newDocs.join(ids, Seq("doc_id"), "left_semi"), maxRounds, scope)
+      // carry forward every prior ledger row the delta provably cannot
+      // touch (not in the closure, not named by the delta)
+      val carried = prior
+        .join(scope.keep(closure), Seq("doc_id"), "left_anti")
+        .join(scope.keep(delta).select(col("doc_id")), Seq("doc_id"), "left_anti")
+      recomputed.unionByName(carried)
+    }
 
   /** The CHANGELOG form of [[incrementalLedgerFromStoredState]], with
     * the checkpoint lifecycle CLOSED — what a continuously-running loop
@@ -587,35 +549,32 @@ object Snapshot {
     * manifest diff already knows, O(|delta|).
     *
     * Lifecycle: the recomputed rows materialize into ONE eager
-    * checkpoint, every intermediate block the computation pinned (the
-    * closure, the CC label set, the manifest diff) is released, and
-    * that single relation comes back — the caller consumes it (one
-    * write) and releases it with [[Corpus.releaseCheckpoint]]. Resident
-    * state per epoch: one delta-sized block set, not a growing chain.
+    * checkpoint in the caller's `scope`, and every intermediate block
+    * the computation pinned (the closure, the CC label set, the manifest
+    * diff) lives in a scope of this call's own, released once that
+    * checkpoint exists or when the call throws. The caller consumes the
+    * relation (one write) and its scope releases it. Resident state per
+    * epoch: one delta-sized block set, not a growing chain.
     *
-    * The posting index arrives as a [[PostingsProbe]] (a stored probe
-    * reads only the buckets the closure's frontiers touch; an in-memory
-    * index is [[InMemoryPostings]]) and the corpus text as `docsFor` — a
+    * The posting index arrives as a [[PostingsProbe]] opened in a scope
+    * this call ends right after the closure's recompute, so a probe's
+    * caches go before the result is materialized (a stored probe reads
+    * only the buckets the closure's frontiers touch; an in-memory index
+    * is [[InMemoryPostings]]), and the corpus text as `docsFor` — a
     * closure-ids → docs function, so the impl can prune the stored
     * corpus scan to the closure's doc-id buckets before the semi gate
     * instead of scanning every document's text per epoch.
     * [[graft.streaming.Events.streamIncrementalClean]] consumes this.
     */
   def incrementalLedgerDeltaCheckpointed(prior: DataFrame, oldManifest: DataFrame,
-                                         newManifest: DataFrame, postings: PostingsProbe,
+                                         newManifest: DataFrame, postings: Scope => PostingsProbe,
                                          docsFor: DataFrame => DataFrame,
-                                         maxRounds: Int): DataFrame = {
-    val (rec, closed, _, releasables) =
-      recomputedLedgerRows(prior, oldManifest, newManifest, postings, docsFor, maxRounds)
-    val out =
-      try rec.localCheckpoint(true)
-      catch { case t: Throwable =>
-        (closed +: releasables).foreach(Corpus.releaseCheckpoint)
-        throw t
-      }
-    (closed +: releasables).foreach(Corpus.releaseCheckpoint)
-    out
-  }
+                                         maxRounds: Int, scope: Scope = Scope.session): DataFrame =
+    Scope.around { own =>
+      val (rec, _, _) = own.around(ps =>
+        recomputedLedgerRows(prior, oldManifest, newManifest, postings(ps), docsFor, maxRounds, own))
+      scope.checkpoint(rec)
+    }
 
   /** The CAPPED stored-chain delta — [[incrementalLedgerDeltaCheckpointed]]
     * under `maxShingleDf`, with every read still delta-shaped: no
@@ -632,10 +591,11 @@ object Snapshot {
     * .StoredPostingsProbe]] forDocs trade, applied to the old view).
     *
     * Returns (the epoch's recomputed ledger rows, the NEXT hot set) —
-    * both eager checkpoints the caller consumes (one write each: the
-    * ledger delta and the epoch's hot snapshot, written BEFORE the
-    * committing ledger write) and then releases with
-    * [[Corpus.releaseCheckpoint]].
+    * both eager checkpoints in the caller's `scope`, which the caller
+    * consumes (one write each: the ledger delta and the epoch's hot
+    * snapshot, written BEFORE the committing ledger write) and its
+    * scope then releases. Intermediates and the probe's caches are
+    * released as in [[incrementalLedgerDeltaCheckpointed]].
     * [[graft.streaming.Events.streamIncrementalClean]]'s capped mode
     * consumes this per micro-batch; spec-pinned equal to the batch
     * `Corpus.ledger(corpus, cap)` the same way the uncapped loop is
@@ -659,96 +619,69 @@ object Snapshot {
     */
   def incrementalLedgerDeltaCheckpointedCapped(
       prior: DataFrame, oldManifest: DataFrame, newManifest: DataFrame,
-      postings: PostingsProbe, docsFor: DataFrame => DataFrame,
+      postings: Scope => PostingsProbe, docsFor: DataFrame => DataFrame,
       maxRounds: Int, maxDf: Int, hotPrior: DataFrame,
       oldPostingsFor: DataFrame => DataFrame,
-      newPostingsFor: DataFrame => DataFrame): (DataFrame, DataFrame) = {
-    val lap = incrLap(detail = true)
-    val delta = diff(oldManifest, newManifest).localCheckpoint(true)
-    lap("manifest diff")
-    var hotNext: DataFrame = null
-    var extraSeeds: DataFrame = null
-    var caches: Seq[DataFrame] = Nil
-    try {
+      newPostingsFor: DataFrame => DataFrame,
+      scope: Scope = Scope.session): (DataFrame, DataFrame) =
+    scope.around(res => Scope.around { own =>
+      val lap = incrLap(detail = true)
+      val delta = own.checkpoint(diff(oldManifest, newManifest))
+      lap("manifest diff")
       val deltaIds = delta.select(col("doc_id"))
-      // NEW-side delta postings: a maintained-index caller already WROTE
-      // this epoch's posting rows to its chain before calling here (the
-      // index-maintenance contract), so `newPostingsFor` hands back that
-      // bounded delta (a file read + delta-id semi-join) instead of
-      // paying the kernel's SECOND shingle pass over the arrival text
-      // this epoch (the bootstrap "file is the materialization" rule,
-      // applied to the crossing stage; provably the same relation: the
-      // delta ids' corpus rows at this epoch ARE the arrival's, and
-      // removed ids have no rows either way). A caller without a stored
-      // delta passes `postings.forDocs`.
-      val (extra, hot, c) =
-        capCrossings(deltaIds, postings, newPostingsFor(deltaIds),
-          oldPostingsFor(deltaIds), hotPrior, maxDf)
-      hotNext = hot; extraSeeds = extra; caches = c
-      // own mark: the hot-advance + crossing-seed checkpoints
-      // materialized the crossing machinery here — without this the
-      // core's first "manifest diff" mark would absorb it and
-      // misattribute the capped mode's cost
-      lap("cap crossings (hot advance)")
-      val (rec, closed, _, releasables) = recomputedLedgerRowsFromDelta(
-        prior, newManifest, CappedPostings(postings, hotNext), docsFor,
-        maxRounds, lap, delta, Some(extraSeeds))
-      // the crossing seeds folded into the closure's seeds checkpoint
-      Corpus.releaseCheckpoint(extraSeeds)
-      val out =
-        try rec.localCheckpoint(true)
-        catch { case t: Throwable =>
-          (closed +: releasables).foreach(Corpus.releaseCheckpoint)
-          throw t
-        }
-      (closed +: releasables).foreach(Corpus.releaseCheckpoint)
-      (out, hotNext)
-    } catch { case t: Throwable =>
-      // releaseCheckpoint is idempotent (rdd.unpersist), so the paths
-      // that already released `delta` via `releasables` are safe here
-      Corpus.releaseCheckpoint(delta)
-      if (hotNext != null) Corpus.releaseCheckpoint(hotNext)
-      if (extraSeeds != null) Corpus.releaseCheckpoint(extraSeeds)
-      postings.release() // idempotent; the success path released inside
-      throw t
-    } finally caches.foreach(_.unpersist(blocking = false))
-  }
+      val (rec, hotNext) = own.around { ps =>
+        val probe = postings(ps)
+        // NEW-side delta postings: a maintained-index caller already WROTE
+        // this epoch's posting rows to its chain before calling here (the
+        // index-maintenance contract), so `newPostingsFor` hands back that
+        // bounded delta (a file read + delta-id semi-join) instead of
+        // paying the kernel's SECOND shingle pass over the arrival text
+        // this epoch (the bootstrap "file is the materialization" rule,
+        // applied to the crossing stage; provably the same relation: the
+        // delta ids' corpus rows at this epoch ARE the arrival's, and
+        // removed ids have no rows either way). A caller without a stored
+        // delta passes `postings.forDocs`.
+        val (extraSeeds, hot) = capCrossings(probe, newPostingsFor(deltaIds),
+          oldPostingsFor(deltaIds), hotPrior, maxDf, own)
+        val hotNext = res.keep(res.checkpoint(hot))
+        // own mark: the hot-advance + crossing-seed checkpoints
+        // materialized the crossing machinery here — without this the
+        // core's first "manifest diff" mark would absorb it and
+        // misattribute the capped mode's cost
+        lap("cap crossings (hot advance)")
+        val (rec, _) = recomputedLedgerRowsFromDelta(prior, newManifest,
+          CappedPostings(probe, hotNext), docsFor, maxRounds, lap, delta, Some(extraSeeds), own)
+        own.release(extraSeeds) // folded into the closure's seeds checkpoint
+        (rec, hotNext)
+      }
+      (res.keep(res.checkpoint(rec)), hotNext)
+    })
 
   /** Shared core of the two stored-state entry points: the recomputed
     * ledger rows for the delta's pair-graph closure, plus the closure
-    * and delta-id relations the full-ledger form fences its carry with,
-    * plus the checkpoint handles (manifest diff, CC label set) only the
-    * checkpointed form releases — the full form's result reads them
-    * lazily, so IT must leave them alive.
+    * and the manifest diff the full-ledger form fences its carry with.
+    * Every frame it makes is held in `scope`: the full form keeps the
+    * ones its lazy result reads, the checkpointed forms release them
+    * all once their result is materialized.
     */
   private def recomputedLedgerRows(prior: DataFrame, oldManifest: DataFrame,
                                    newManifest: DataFrame, postings: PostingsProbe,
-                                   docsFor: DataFrame => DataFrame, maxRounds: Int)
-      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
+                                   docsFor: DataFrame => DataFrame, maxRounds: Int,
+                                   scope: Scope): (DataFrame, DataFrame, DataFrame) = {
     val lap = incrLap(detail = true)
-    val delta = diff(oldManifest, newManifest)
-      .localCheckpoint(true) // delta-sized; read 2× (seeds + carry fence)
+    val delta = scope.checkpoint(diff(oldManifest, newManifest)) // delta-sized; read 2× (seeds + carry fence)
     lap("manifest diff")
-    // release-before-throw must cover the WHOLE body: a failure in the
-    // closure or the recompute otherwise strands this delta checkpoint
-    // (and per-attempt pinning in a retrying loop is exactly the leak
-    // incrementalLedgerDeltaCheckpointed exists to close)
-    try recomputedLedgerRowsFromDelta(prior, newManifest, postings, docsFor,
-      maxRounds, lap, delta)
-    catch { case t: Throwable =>
-      Corpus.releaseCheckpoint(delta)
-      postings.release() // failure path: the success path released inside
-      throw t
-    }
+    val (rec, closed) = recomputedLedgerRowsFromDelta(prior, newManifest, postings, docsFor,
+      maxRounds, lap, delta, None, scope)
+    (rec, closed, delta)
   }
 
   private def recomputedLedgerRowsFromDelta(prior: DataFrame, newManifest: DataFrame,
                                             postings: PostingsProbe,
                                             docsFor: DataFrame => DataFrame,
                                             maxRounds: Int, lap: String => Unit,
-                                            delta: DataFrame,
-                                            extraSeedIds: Option[DataFrame] = None)
-      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
+                                            delta: DataFrame, extraSeedIds: Option[DataFrame],
+                                            scope: Scope): (DataFrame, DataFrame) = {
     // the "manifest diff" lap is CALLER-owned: every caller builds the
     // delta checkpoint itself and marks right after it (the capped
     // chain form inserts a crossing mark in between — a mark here
@@ -773,39 +706,24 @@ object Snapshot {
     // Pair-graph closure over the new corpus (same 3-gram hash kernel
     // and the same Jaccard predicate as the ledger's pair join),
     // probing the supplied posting index each round.
-    val (recomputed, closure, ccCkpts) = {
-      val (closed, roundEdges) = pairGraphClosure(seeds, postings, maxRounds)
-      val ccOut = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      // exact recompute on the closed sub-corpus (complete components):
-      // LEFT SEMI against the id-only closure, so the corpus-with-text
-      // side is never shuffled — AQE broadcasts the delta-sized closure
-      // and the gate stays inside the scan (at steady-state churn the
-      // closure is a few percent of the corpus; an inner join here would
-      // exchange every document's text just to drop most of them). The
-      // pair graph is the BFS's accumulated edges — no second pair join,
-      // no second shingle pass. The ledger's CC labels checkpoint
-      // eagerly inside the call, so the lazy relation returned here
-      // never reads the unpersisted passes.
-      val rec =
-        try {
-          lap("pair-graph closure")
-          val allEdges = roundEdges.reduceOption(_ union _).getOrElse(
-            seeds.select(col("doc_id").as("src"), col("doc_id").as("dst")).limit(0))
-          Corpus.ledgerFromEdges(docsFor(closed), allEdges,
-            ckptOut = Some(ccOut))
-        } catch { case t: Throwable =>
-          // a CC failure inside the recompute must not strand the edge
-          // and closure checkpoints — NOR any CC label checkpoints the
-          // call already appended to ccOut before dying
-          (roundEdges ++ ccOut.toSeq :+ closed).foreach(Corpus.releaseCheckpoint)
-          throw t
-        }
-      lap("closure recompute (ledgerFromEdges)")
-      roundEdges.foreach(Corpus.releaseCheckpoint) // CC labels materialized
-      postings.release() // the probe's bucket caches are fully consumed
-      (rec, closed, ccOut.toSeq)
-    }
-    (recomputed, closure, deltaIds, delta +: ccCkpts)
+    val (closed, roundEdges) = pairGraphClosure(seeds, postings, maxRounds, scope)
+    // exact recompute on the closed sub-corpus (complete components):
+    // LEFT SEMI against the id-only closure, so the corpus-with-text
+    // side is never shuffled — AQE broadcasts the delta-sized closure
+    // and the gate stays inside the scan (at steady-state churn the
+    // closure is a few percent of the corpus; an inner join here would
+    // exchange every document's text just to drop most of them). The
+    // pair graph is the BFS's accumulated edges — no second pair join,
+    // no second shingle pass. The ledger's CC labels checkpoint
+    // eagerly inside the call (kept in `scope`), so the lazy relation
+    // returned here never reads the released edges.
+    lap("pair-graph closure")
+    val allEdges = roundEdges.reduceOption(_ union _).getOrElse(
+      seeds.select(col("doc_id").as("src"), col("doc_id").as("dst")).limit(0))
+    val rec = Corpus.ledgerFromEdges(docsFor(closed), allEdges, scope)
+    lap("closure recompute (ledgerFromEdges)")
+    roundEdges.foreach(scope.release) // CC labels materialized
+    (rec, closed)
   }
 
   /** The KEPT-set view of [[incrementalLedgerFromState]] — the
@@ -859,8 +777,8 @@ object Snapshot {
     // and recomputing the manifest diff per arm would scan both
     // snapshots twice (production passes a STORED delta here anyway);
     // the checkpointed |delta|-sized leaf is what AQE then broadcasts
-    val delta = snapshotDiff(docs).localCheckpoint(true)
-    applyDelta(oldSnapshot(docs), delta, docs)
+    Scope.session.around(scope =>
+      applyDelta(oldSnapshot(docs), scope.keep(scope.checkpoint(snapshotDiff(docs))), docs))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

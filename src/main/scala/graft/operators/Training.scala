@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -353,45 +353,44 @@ object Training {
     * makes FP rate a pure performance knob, so the result is exact and
     * hash-checkable.
     */
-  def decontamBloom(docs: DataFrame, n: Int = 5, fpp: Double = 0.01): DataFrame = {
-    val spark = docs.sparkSession
-    val ss = splitShingled(docs, n)
-    // test side: tiny by definition (the heldout benchmark), but
-    // DERIVING it scans the full corpus (split is content-hashed) — so
-    // materialize it ONCE with an eager localCheckpoint shared by all
-    // three consumers: the sizing count, the bloomFilter build, and the
-    // confirm join's broadcast below. A persist/unpersist-before-return
-    // dance would make the lazy confirm join re-scan the whole corpus at
-    // execution; the pinned blocks here are the sketch-sized test set,
-    // not the corpus.
-    val testShingles = ss.filter(col("split") === "test")
-      .select(explode(col("shingles")).as("s")).distinct()
-      .localCheckpoint(true)
-    val nTest = testShingles.count()
-    // Spark's stat.bloomFilter NPEs on an EMPTY relation (the sketch
-    // aggregate produces no row to read back) — and an empty test
-    // split means no contamination is possible anyway
-    if (nTest == 0) {
-      Corpus.releaseCheckpoint(testShingles)
-      return docs.select(col("doc_id"), lit(0L).as("n_shared_shingles")).limit(0)
+  def decontamBloom(docs: DataFrame, n: Int = 5, fpp: Double = 0.01): DataFrame =
+    Scope.session.around { scope =>
+      val spark = docs.sparkSession
+      val ss = splitShingled(docs, n)
+      // test side: tiny by definition (the heldout benchmark), but
+      // DERIVING it scans the full corpus (split is content-hashed) — so
+      // materialize it ONCE with an eager checkpoint shared by all three
+      // consumers: the sizing count, the bloomFilter build, and the
+      // confirm join's broadcast below. A persist/unpersist-before-return
+      // dance would make the lazy confirm join re-scan the whole corpus at
+      // execution; the pinned blocks here are the sketch-sized test set,
+      // not the corpus.
+      val testShingles = scope.checkpoint(ss.filter(col("split") === "test")
+        .select(explode(col("shingles")).as("s")).distinct())
+      val nTest = testShingles.count()
+      // Spark's stat.bloomFilter NPEs on an EMPTY relation (the sketch
+      // aggregate produces no row to read back) — and an empty test
+      // split means no contamination is possible anyway
+      if (nTest == 0) docs.select(col("doc_id"), lit(0L).as("n_shared_shingles")).limit(0)
+      else {
+        val bfB = spark.sparkContext.broadcast(testShingles.stat.bloomFilter("s", nTest, fpp))
+        // finally-release: once the frame is constructed (analysis is
+        // eager) the probe call is resolved into the plan and the registry
+        // entry — which strongly pins the sketch — must go, INCLUDING when
+        // analysis itself throws (a leaked entry would outlive the failed
+        // query)
+        try {
+          ss.filter(col("split") === "train")
+            // map-only corpus gate, native + codegen'd
+            .filter(graft.functions.BloomProbe.anyContain(spark, col("shingles"), bfB))
+            .select(col("doc_id"), explode(col("shingles")).as("s"))
+            .join(broadcast(scope.keep(testShingles)), "s") // exact confirm: FPs drop here
+            .groupBy(col("doc_id"))
+            .agg(count(lit(1)).as("n_shared_shingles"))
+            .orderBy(col("doc_id"))
+        } finally graft.functions.BloomProbe.release(spark, bfB)
+      }
     }
-    val bf = testShingles.stat.bloomFilter("s", nTest, fpp)
-    val bfB = spark.sparkContext.broadcast(bf)
-    // finally-release: once the frame is constructed (analysis is eager)
-    // the probe call is resolved into the plan and the registry entry —
-    // which strongly pins the sketch — must go, INCLUDING when analysis
-    // itself throws (a leaked entry would outlive the failed query)
-    try {
-      ss.filter(col("split") === "train")
-        // map-only corpus gate, native + codegen'd
-        .filter(graft.functions.BloomProbe.anyContain(spark, col("shingles"), bfB))
-        .select(col("doc_id"), explode(col("shingles")).as("s"))
-        .join(broadcast(testShingles), "s") // exact confirm: FPs drop here
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_shared_shingles"))
-        .orderBy(col("doc_id"))
-    } finally graft.functions.BloomProbe.release(spark, bfB)
-  }
 
   /** SEMANTIC decontamination — the FOURTH family member, over
     * EMBEDDINGS instead of shingles: flag train docs whose embedding is
@@ -413,7 +412,7 @@ object Training {
     * pipeline subtracts (or audits) before training.
     */
   def decontamSemantic(spark: SparkSession, d: String,
-                       threshold: Double = 0.4): DataFrame = {
+                       threshold: Double = 0.4): DataFrame = Scope.session.around { scope =>
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val emb = Tables.embeddings(spark, d)
       .select(col("vec_id").as("doc_id"),
@@ -426,9 +425,8 @@ object Training {
     // the probe-side tasks (embeddingPairs' note)
     val train = Tables.spread(withSplit.filter(col("split") === "train"))
       .select(col("doc_id"), col("v"))
-    val test = withSplit.filter(col("split") === "test")
-      .select(col("doc_id").as("test_id"), col("v").as("vt"))
-      .localCheckpoint(true)
+    val test = scope.keep(scope.checkpoint(withSplit.filter(col("split") === "test")
+      .select(col("doc_id").as("test_id"), col("v").as("vt"))))
     train.crossJoin(broadcast(test))
       .select(col("doc_id"),
         round(graft.functions.CosineSim.cosineSim(col("v"), col("vt")), 6).as("cos_sim"))
@@ -463,23 +461,23 @@ object Training {
     * family applies at 100 TB if boilerplate shingles get hot; off here
     * because the exact oracle needs the uncapped join.
     */
-  def decontamFuzzy(docs: DataFrame, threshold: Double = 0.8, n: Int = 5): DataFrame = {
-    val tr = splitShingled(docs, n).filter(col("split") === "train")
-      .select(col("doc_id"), size(col("shingles")).as("n1"), explode(col("shingles")).as("s"))
-    val te = splitShingled(docs, n).filter(col("split") === "test")
-      .select(col("doc_id").as("test_id"), size(col("shingles")).as("n2"),
-        explode(col("shingles")).as("s"))
-      .localCheckpoint(true)
-    val jac = col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))
-    tr.join(broadcast(te), "s")
-      .groupBy(col("doc_id"), col("test_id"))
-      .agg(count(lit(1)).as("inter"), first(col("n1")).as("n1"), first(col("n2")).as("n2"))
-      .filter(jac >= threshold)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_near_dup_test_docs"),
-        max(round(jac, 6)).as("max_jaccard"))
-      .orderBy(col("doc_id"))
-  }
+  def decontamFuzzy(docs: DataFrame, threshold: Double = 0.8, n: Int = 5): DataFrame =
+    Scope.session.around { scope =>
+      val tr = splitShingled(docs, n).filter(col("split") === "train")
+        .select(col("doc_id"), size(col("shingles")).as("n1"), explode(col("shingles")).as("s"))
+      val te = scope.keep(scope.checkpoint(splitShingled(docs, n).filter(col("split") === "test")
+        .select(col("doc_id").as("test_id"), size(col("shingles")).as("n2"),
+          explode(col("shingles")).as("s"))))
+      val jac = col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))
+      tr.join(broadcast(te), "s")
+        .groupBy(col("doc_id"), col("test_id"))
+        .agg(count(lit(1)).as("inter"), first(col("n1")).as("n1"), first(col("n2")).as("n2"))
+        .filter(jac >= threshold)
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_near_dup_test_docs"),
+          max(round(jac, 6)).as("max_jaccard"))
+        .orderBy(col("doc_id"))
+    }
 
   // --------------------------------------------------------------- tf-idf
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -309,18 +309,17 @@ object Sdfs {
   def roundtrip(spark: SparkSession, sfDir: String, rows: Int = 1000): DataFrame = {
     val sdfs = new Sdfs(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_sdfs_rt").toString
-    // persist: 4 formats × (put + append) would otherwise re-execute the
-    // top-k over lineitem EIGHT times — the slice is computed once and
-    // every write reads the cached 1000 rows
-    val slice = Tables.lineitem(spark, sfDir)
-      .orderBy(col("l_orderkey"), col("l_linenumber")).limit(rows)
-      .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-        col("l_quantity"), col("l_returnflag"))
-      .persist()
-    val sliceSchema = "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
-      "l_quantity DOUBLE, l_returnflag STRING"
-    val textSlice = slice.select(concat_ws("|", slice.columns.map(col): _*).as("value"))
-    val results =
+    val results = Scope.around { scope =>
+      // persist: 4 formats × (put + append) would otherwise re-execute the
+      // top-k over lineitem EIGHT times — the slice is computed once and
+      // every write reads the cached 1000 rows
+      val slice = scope.persist(Tables.lineitem(spark, sfDir)
+        .orderBy(col("l_orderkey"), col("l_linenumber")).limit(rows)
+        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
+          col("l_quantity"), col("l_returnflag")))
+      val sliceSchema = "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+        "l_quantity DOUBLE, l_returnflag STRING"
+      val textSlice = slice.select(concat_ws("|", slice.columns.map(col): _*).as("value"))
       try sdfs.formats.map { fmt =>
         val path = s"$base/$fmt"
         val df = if (fmt == "text") textSlice else slice
@@ -334,7 +333,8 @@ object Sdfs {
         val expected = rows + 100L
         (fmt, expected, back, back == expected)
       }
-      finally { sdfs.del(base); slice.unpersist(blocking = false) }
+      finally sdfs.del(base)
+    }
     import spark.implicits._
     results.toDF("format", "rows_written", "rows_read", "parity").orderBy(col("format"))
   }

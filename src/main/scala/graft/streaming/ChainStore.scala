@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
+import graft.Scope
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
@@ -545,7 +546,7 @@ private[graft] class ChainStore(root: Path, keyCol: String, protected val declar
 
   /** The per-key max tombstone epoch up to `upTo`, persisted in `scope`
     * (shared by every probe of an epoch); None without tombstones. */
-  def tombstones(spark: SparkSession, upTo: Long, scope: EpochScope): Option[DataFrame] =
+  def tombstones(spark: SparkSession, upTo: Long, scope: Scope): Option[DataFrame] =
     tombstoneAggregate(spark, tombstoneDir, keyCol, Some(upTo)).map(scope.persist)
 
   /** The epoch's retired keys: the removals plus the RE-DELIVERED
@@ -558,7 +559,7 @@ private[graft] class ChainStore(root: Path, keyCol: String, protected val declar
     * `arrivalIds` is the arrivals' key column. Both caches are held in
     * `scope`. */
   def retirements(spark: SparkSession, epoch: Long, committed: Boolean, probe: Chain,
-                  removals: DataFrame, arrivalIds: DataFrame, scope: EpochScope): Retirements = {
+                  removals: DataFrame, arrivalIds: DataFrame, scope: Scope): Retirements = {
     val prior = tombstones(spark, epoch - 1, scope)
     val redelivered =
       if (!committed) removals.limit(0)
@@ -587,7 +588,7 @@ private[graft] class ChainStore(root: Path, keyCol: String, protected val declar
     * would otherwise seed duplicate keys on the first-ever retirement
     * epoch, fanning out every chain row of that key in the left_outer
     * liveness probes downstream. Without retirements it IS `prior`. */
-  def epochTombstones(r: Retirements, epoch: Long, scope: EpochScope): Option[DataFrame] =
+  def epochTombstones(r: Retirements, epoch: Long, scope: Scope): Option[DataFrame] =
     if (!r.any) r.prior
     else {
       val ours = r.retired.select(col(keyCol)).withColumn("tomb_epoch", lit(epoch))
@@ -812,7 +813,7 @@ private[graft] final class GenerationalStore(root: java.nio.file.Path, keyCol: S
   /** [[ChainStore.retirements]] probed against the commit generation's
     * chain. */
   def retirements(spark: SparkSession, epoch: Long, commitGen: Int,
-                  removals: DataFrame, arrivalIds: DataFrame, scope: EpochScope): Retirements =
+                  removals: DataFrame, arrivalIds: DataFrame, scope: Scope): Retirements =
     retirements(spark, epoch, committedBefore(commitGen, epoch), primaryAt(commitGen),
       removals, arrivalIds, scope)
 
@@ -844,7 +845,7 @@ private[graft] final class GenerationalStore(root: java.nio.file.Path, keyCol: S
     * (prior ⊕ this epoch's retirements, held in `scope`), a note for the
     * `Migration` meter and a stage lap. */
   def migrationEpoch(spark: SparkSession, epoch: Long, roles: Roles, r: Retirements,
-                     hooks: LoopHooks, scope: EpochScope)(body: Migration => Unit): Unit = {
+                     hooks: LoopHooks, scope: Scope)(body: Migration => Unit): Unit = {
     val m = new Migration(spark, epoch, roles, epochTombstones(r, epoch, scope), hooks)
     body(m)
     hooks.record(LoopHooks.Migration, epoch)(m.note.toString.trim)

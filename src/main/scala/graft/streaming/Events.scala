@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -517,7 +517,12 @@ object Events {
     * staged table, the raw stream watching the arrivals, its store dir
     * and a scope held for the whole run. */
   private final case class Staging(ss: SparkSession, table: DataFrame, stream: DataFrame,
-                                   store: java.nio.file.Path, scope: EpochScope)
+                                   store: java.nio.file.Path, scope: Scope)
+
+  /** One epoch of a streaming loop, as the harness hands it to the loop's
+    * body: the micro-batch's session, the epoch number and the epoch's
+    * release scope. */
+  private final case class Epoch(ss: SparkSession, n: Long, scope: Scope)
 
   /** What a loop's setup hands back to [[epochLoop]]: the streaming query
     * (the raw stream or an aggregate of it), the arrival script, the
@@ -541,7 +546,7 @@ object Events {
     *  3. The `foreachBatch` query on the checkpoint dir (Append, or
     *     Update for an aggregated stream), drained after every arrival by
     *     a [[ReplayingDrain]] built from `hooks`. Each micro-batch runs
-    *     the body inside [[EpochScope.around]], so every frame the epoch
+    *     the body inside [[Scope.around]], so every frame the epoch
     *     registers is released when the body returns or throws.
     *  4. The consumer view, [[detach]]ed onto the caller's session, with
     *     its "consumer read-back (…)" lap; frames in the run's own scope
@@ -554,7 +559,7 @@ object Events {
     val ss = loopSession(spark)
     val staged = java.nio.file.Paths.get(s"$sfDir/$table.parquet")
     withScratchDirs(name, java.nio.file.Files.size(staged), middle) { (src, store, ckpt) =>
-      EpochScope.around { runScope =>
+      Scope.around { runScope =>
         // stage-lap timer: the marks land in graft.Laps when Bench
         // collects, splitting the query's cost into setup, staging,
         // drains and read-back
@@ -569,7 +574,7 @@ object Events {
           .outputMode(mode)
           .option("checkpointLocation", ckpt.toString)
           .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            EpochScope.around(scope => plan.body(batch, Epoch(batch.sparkSession, epoch, scope)))
+            Scope.around(scope => plan.body(batch, Epoch(batch.sparkSession, epoch, scope)))
           }
           .start(), hooks)
         try plan.arrivals.zipWithIndex.foreach { case (a, i) =>
@@ -957,36 +962,31 @@ object Events {
     * and oracle-checkable — FP rate stays a pure performance knob, the
     * decontamBloom pairing discipline carried into streaming.
     */
-  def ingestDecontam(spark: SparkSession, sfDir: String): DataFrame = {
+  def ingestDecontam(spark: SparkSession, sfDir: String): DataFrame = Scope.around { scope =>
     val docsPath = s"$sfDir/documents.parquet"
-    val (testShingles, bfB) = testBloom(spark, docsPath)
-    try {
-      runBounded(spark, sfDir, StatePartitions, OutputMode.Complete, "graft_idecon",
-        finish = df => confirmSuspects(df, docsPath),
-        table = "documents")(docs => decontamGate(docs, bfB))
-    } finally graft.operators.Corpus.releaseCheckpoint(testShingles)
+    val bfB = testBloom(spark, docsPath, scope)
+    runBounded(spark, sfDir, StatePartitions, OutputMode.Complete, "graft_idecon",
+      finish = df => confirmSuspects(df, docsPath),
+      table = "documents")(docs => decontamGate(docs, bfB))
   }
 
   /** Static pre-stream side of the decontam gate: the heldout TEST
-    * shingle set (eager-checkpointed; caller releases) and its Bloom
-    * sketch broadcast — fixed benchmark artifacts, built once no matter
-    * how long the stream runs. None when the test split is empty (no
+    * shingle set (eager-checkpointed in `scope`) and its Bloom sketch
+    * broadcast — fixed benchmark artifacts, built once no matter how
+    * long the stream runs. None when the test split is empty (no
     * contamination possible; `stat.bloomFilter` NPEs on empty input).
     */
-  private def testBloom(spark: SparkSession, docsPath: String)
-      : (DataFrame, Option[org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]]) = {
+  private def testBloom(spark: SparkSession, docsPath: String, scope: Scope)
+      : Option[org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]] = {
     import graft.operators.Corpus
-    val testShingles = spark.read.parquet(docsPath)
+    val testShingles = scope.checkpoint(spark.read.parquet(docsPath)
       .filter(Corpus.splitOfBucket(Corpus.splitBucket(col("text"))) === "test")
       .select(explode(
         graft.functions.ShingleFunctions.shingleHashes(col("text"), 5)).as("s"))
-      .distinct().localCheckpoint(true)
+      .distinct())
     val nTest = testShingles.count()
-    val bfB =
-      if (nTest == 0) None
-      else Some(spark.sparkContext.broadcast(
-        testShingles.stat.bloomFilter("s", nTest, 0.01)))
-    (testShingles, bfB)
+    if (nTest == 0) None
+    else Some(spark.sparkContext.broadcast(testShingles.stat.bloomFilter("s", nTest, 0.01)))
   }
 
   /** The per-batch decontam+dedup aggregate both sink twins run: train
@@ -1067,9 +1067,7 @@ object Events {
     val docsPath = s"$sfDir/documents.parquet"
     changelogLoop(spark, sfDir, "graft_idecon_files", hooks) { (stream, runScope) =>
       // the test-shingle checkpoint lives for the whole run
-      val (testShingles, bfB) = testBloom(stream.sparkSession, docsPath)
-      runScope.adopt(testShingles)
-      decontamGate(stream, bfB)
+      decontamGate(stream, testBloom(stream.sparkSession, docsPath, runScope))
     } { (store, chain, ss) =>
       // consumer view: LWW per key across the delta chain, then the
       // exact confirm drops Bloom false positives — on the loop's
@@ -1281,7 +1279,7 @@ object Events {
         // schema-correct empty state via the machinery itself —
         // bootstrap then flows through the one verified code path
         val prior = scope.persist(priorEpochOpt.fold(
-          Corpus.ledger(arrived.limit(0), ckptOut = scope.ckptOut))(
+          Corpus.ledger(arrived.limit(0), scope = scope))(
           e => store.resolved(bss, ledger, Some(e))))
         val priorManifest = scope.persist(priorEpochOpt.fold(
           Snapshot.manifest(arrived.limit(0)))(e => store.resolved(bss, manifest, Some(e))))
@@ -1337,7 +1335,7 @@ object Events {
           // the bootstrap leaves the session as clean as every later
           // epoch does
           store.writeDelta(ledger, epoch, Corpus.ledgerFromPostings(arrived,
-            postingsBack, maxShingleDf, ckptOut = scope.ckptOut))
+            postingsBack, maxShingleDf, scope))
           lap(s"epoch $epoch: ledger bootstrap (batch compute commits)")
         } else {
           // delta-scoped ledger update over the STORED chains —
@@ -1355,20 +1353,21 @@ object Events {
             store.liveFor(bss, corpus, epoch, tombAggE, ids)
           // the stored probe: the closure reads only the buckets
           // its frontiers touch, each at most once per epoch, and
-          // the ledger call releases its bucket chunks inside
-          val probe = new StoredPostingsProbe(docsFor,
-            buckets => store.live(bss, postings, epoch, tombAggE, Some(buckets)))
+          // the ledger call opens it in the scope that releases its
+          // bucket chunks once the closure's recompute is done
+          val probe = (ps: Scope) => new StoredPostingsProbe(docsFor,
+            buckets => store.live(bss, postings, epoch, tombAggE, Some(buckets)), ps)
           // the CHECKPOINTED delta form: a long-running loop
           // must not pin another blast-radius of intermediate
-          // checkpoint blocks every epoch — this one hands back
-          // a single relation, released with the scope.
+          // checkpoint blocks every epoch — this one registers
+          // a single relation in the scope.
           // CAPPED mode runs the capped twin, which also
           // advances the epoch's hot-shingle snapshot from the
           // prior committed one + the delta's cap crossings.
           val (deltaRows, hotNextOpt) = maxShingleDf match {
             case None =>
-              (scope.adopt(Snapshot.incrementalLedgerDeltaCheckpointed(
-                prior, priorManifest, nextManifest, probe, docsFor, 25)), None)
+              (Snapshot.incrementalLedgerDeltaCheckpointed(
+                prior, priorManifest, nextManifest, probe, docsFor, 25, scope), None)
             case Some(capDf) =>
               // prior hot snapshot: the latest committed epoch's
               // (an epoch-0 bootstrap always wrote one); the
@@ -1398,8 +1397,8 @@ object Events {
                 store.delta(bss, postings, epoch).join(ids, Seq("doc_id"), "left_semi")
               val (d, h) = Snapshot.incrementalLedgerDeltaCheckpointedCapped(
                 prior, priorManifest, nextManifest, probe, docsFor,
-                25, capDf, hotPrior, oldPostingsFor, newPostingsFor)
-              (scope.adopt(d), Some(scope.adopt(h)))
+                25, capDf, hotPrior, oldPostingsFor, newPostingsFor, scope)
+              (d, Some(h))
           }
           // HASH-UNCHANGED re-deliveries (ADVICE r12, high):
           // the manifest diff classifies a same-(doc_id, h)
@@ -1495,7 +1494,7 @@ object Events {
     * `DeltaRows` meter counts each delta's rows. `consume` builds the
     * consumer view from the store (and the loop's session). */
   private def changelogLoop(spark: SparkSession, sfDir: String, name: String, hooks: LoopHooks)(
-      aggregate: (DataFrame, EpochScope) => DataFrame)(
+      aggregate: (DataFrame, Scope) => DataFrame)(
       consume: (ChainStore, Chain, SparkSession) => DataFrame): DataFrame =
     epochLoop(spark, sfDir, name, hooks, middle = "sink", mode = OutputMode.Update) { st =>
       val changed = aggregate(st.stream, st.scope)
@@ -3386,9 +3385,11 @@ object Events {
     *    [[graft.operators.Snapshot.PostingsProbe.forShinglesOf]]'s
     *    contract — the closure joins on shingle equality, and a row
     *    whose shingle is outside the requested buckets cannot match.
+    *    The chunks are persisted in `scope`, which the closure's caller
+    *    opens for the probe and ends once its recompute is done.
     */
   private[graft] final class StoredPostingsProbe(
-      docsFor: DataFrame => DataFrame, resolvedPruned: Seq[Int] => DataFrame)
+      docsFor: DataFrame => DataFrame, resolvedPruned: Seq[Int] => DataFrame, scope: Scope)
     extends graft.operators.Snapshot.PostingsProbe {
     private val chunks = scala.collection.mutable.ListBuffer.empty[DataFrame]
     private val covered = scala.collection.mutable.Set.empty[Int]
@@ -3398,7 +3399,7 @@ object Events {
       val want = collectBuckets(frontierPost, col("s"))
       val fresh = want.filterNot(covered)
       if (fresh.nonEmpty) {
-        chunks += resolvedPruned(fresh).persist()
+        chunks += scope.persist(resolvedPruned(fresh))
         covered ++= fresh
       }
       // Prune the cached union to THIS round's buckets (r15): a later
@@ -3414,7 +3415,6 @@ object Events {
         // empty-frontier round: a schema-correct empty scan (reads nothing)
         .getOrElse(resolvedPruned(Nil))
     }
-    def release(): Unit = chunks.foreach(_.unpersist(blocking = false))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

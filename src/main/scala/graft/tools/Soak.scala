@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Scope
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -467,9 +468,9 @@ object Soak {
       .filter(col("doc_id") === col("cluster_id") && col("quality") >= 0.75)
       .select(col("doc_id"), col("n_tokens"), col("quality"), col("lang_pred"))
     val cleanCols = Seq("n_tokens", "quality", "lang_pred")
-    val cleanBatch = keptView(None).persist()
-    val cleanCapBatch = keptView(Some(Events.CleanCapDf)).persist()
-    try {
+    Scope.around { scope =>
+      val cleanBatch = scope.persist(keptView(None))
+      val cleanCapBatch = scope.persist(keptView(Some(Events.CleanCapDf)))
       val cleanGot = Events.streamIncrementalClean(spark, sf1)
       val nCleanGot = cleanGot.count()
       val cleanMismatch =
@@ -493,9 +494,6 @@ object Soak {
       // bug as vacuity; r15 review)
       if (Events.keyedMismatchCount(cleanCapBatch, cleanBatch, "doc_id", cleanCols) == 0)
         failures ::= s"cap ${Events.CleanCapDf} does not bite at sf1 — capped gate vacuous"
-    } finally {
-      cleanBatch.unpersist(blocking = false)
-      cleanCapBatch.unpersist(blocking = false)
     }
     // the band-capped near-dup loop's convergence gate (r16): verbatim
     // equality with the CAPPED batch twin over the sf1 corpus — the
@@ -508,13 +506,9 @@ object Soak {
     // release the capped verdict's pair checkpoint once compared — a
     // soak calls this per scale and an unreleased checkpoint pins a
     // pair-sized RDD for the process lifetime (ADVICE r16)
-    val ndCkpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
-    val ndCapMismatch =
-      try Events.keyedMismatchCount(ndCapGot,
-        graft.operators.Dedup.minhashNearDupVerdict(
-          docs1, maxBandDf = ndCap, ckptOut = Some(ndCkpts)),
-        "doc_id", Seq("keep", "partner_id", "jaccard"))
-      finally ndCkpts.foreach(graft.operators.Corpus.releaseCheckpoint)
+    val ndCapMismatch = Scope.around(scope => Events.keyedMismatchCount(ndCapGot,
+      graft.operators.Dedup.minhashNearDupVerdict(docs1, maxBandDf = ndCap, scope = scope),
+      "doc_id", Seq("keep", "partner_id", "jaccard")))
     if (nNdCapGot == 0 || ndCapMismatch != 0)
       failures ::= s"stream_ingest_neardup_capped sf1 diverged from the capped batch twin " +
         s"($ndCapMismatch mismatched docs of $nNdCapGot streamed)"

@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import graft.streaming.{Chain, ChainStore, EpochScope, Fold, GenerationalStore, LoopHooks,
-  Retirements, Roles}
+import graft.streaming.{Chain, ChainStore, Fold, GenerationalStore, LoopHooks, Retirements,
+  Roles}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * listing, the chunk cursor) and the plain store's recovery sweep,
   * commit gate and snapshot prune are file-level only, with no Spark
   * session; one leg compacts a small store through Spark, and one
-  * checks that an epoch scope releases the frames it holds. */
+  * checks that a scope releases the frames it holds. */
 class ChainStoreSpec extends AnyFunSuite {
   private val schema = StructType(Seq(StructField("k", LongType)))
 
@@ -284,7 +285,7 @@ class ChainStoreSpec extends AnyFunSuite {
     val boom = new IllegalStateException("epoch body failed")
     // persists two frames and checkpoints one, materializing all three;
     // returns the persistent RDDs it saw before the scope closed
-    def body(scope: EpochScope, fail: Boolean): Set[Int] = {
+    def body(scope: Scope, fail: Boolean): Set[Int] = {
       scope.persist(spark.range(0, 11).toDF("a")).count()
       scope.persist(spark.range(0, 13).toDF("b")).count()
       scope.checkpoint(spark.range(0, 17).toDF("c"))
@@ -293,11 +294,54 @@ class ChainStoreSpec extends AnyFunSuite {
       inside
     }
     val before = held()
-    val thrown = intercept[IllegalStateException](EpochScope.around(body(_, fail = true)))
+    val thrown = intercept[IllegalStateException](Scope.around(body(_, fail = true)))
     assert(thrown eq boom, "the scope must rethrow the body's own exception")
     assert(held() == before, s"a throwing body left ${held() -- before} persisted")
-    val inside = EpochScope.around(body(_, fail = false))
+    val inside = Scope.around(body(_, fail = false))
     assert((inside -- before).size == 3, s"the body should hold three frames, held ${inside -- before}")
     assert(held() == before, s"a returning body left ${held() -- before} persisted")
+
+    // nested scopes: each child persists one frame and keeps a checkpoint
+    def frame(n: Int) = spark.range(0, n).toDF("x")
+    def child(scope: Scope, fail: Boolean): DataFrame = {
+      scope.persist(frame(19)).count()
+      val kept = scope.keep(scope.checkpoint(frame(23)))
+      assert((held() -- before).size >= 2, "the child should hold its two frames")
+      if (fail) throw boom
+      kept
+    }
+    Scope.around { parent =>
+      val thrownChild = intercept[IllegalStateException](parent.around(child(_, fail = true)))
+      assert(thrownChild eq boom, "a child scope must rethrow the body's own exception")
+      assert(held() == before,
+        s"a throwing child left ${held() -- before} persisted, its kept frame included")
+      val kept = parent.around(child(_, fail = false))
+      assert((held() -- before).size == 1,
+        s"a returning child should release its held frame and pin its kept one, held ${held() -- before}")
+      assert(kept.count() == 23, "the kept frame must stay readable until the parent's end")
+    }
+    assert(held() == before, s"the parent's end left ${held() -- before} persisted")
+
+    // release drops a frame once: the frame is pinned again by hand after
+    // the release, and the scope's end must not release it a second time
+    val released = Scope.around { scope =>
+      val f = scope.persist(frame(29))
+      f.count()
+      scope.release(f)
+      assert(held() == before, s"release left ${held() -- before} persisted")
+      f.persist().count()
+      f
+    }
+    assert(released.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the scope released an already released frame a second time")
+    released.unpersist(blocking = true)
+    assert(held() == before)
+
+    // the session root pins the kept frames of a returning child
+    val pinned = Scope.session.around(child(_, fail = false))
+    assert((held() -- before).size == 1,
+      s"Scope.session.around should pin exactly its kept frame, held ${held() -- before}")
+    Scope.session.release(pinned)
+    assert(held() == before, s"releasing the kept frame left ${held() -- before} persisted")
   }
 }

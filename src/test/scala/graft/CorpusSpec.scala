@@ -42,9 +42,13 @@ class CorpusSpec extends AnyFunSuite {
     // label is still changing — silent wrong output would split the
     // component across several cluster ids
     val chain = edges(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[IllegalStateException](
       Corpus.connectedComponents(chain, maxIter = 1))
     assert(e.getMessage.contains("did not converge"))
+    // a retry must not inherit this attempt's edge set or label rounds
+    val pinned = TestSpark.pinnedBeyond(before)
+    assert(pinned.isEmpty, s"the failed attempt left RDDs $pinned pinned")
   }
 
   test("connectedComponentsStar converges on a 1000-vertex path graph") {
@@ -59,9 +63,13 @@ class CorpusSpec extends AnyFunSuite {
 
   test("connectedComponentsStar throws rather than return a non-fixed-point edge set") {
     val chain = edges(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[IllegalStateException](
       Corpus.connectedComponentsStar(chain, maxIter = 1))
     assert(e.getMessage.contains("fixed point"))
+    // nor the star rounds' vertex and edge sets
+    val pinned = TestSpark.pinnedBeyond(before)
+    assert(pinned.isEmpty, s"the failed attempt left RDDs $pinned pinned")
   }
 
   test("connectedComponentsStar matches min-label CC on mixed graphs") {

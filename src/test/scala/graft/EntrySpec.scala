@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract gates on the `SparkEntry` surface itself (VERDICT r7 #3/#4):
@@ -75,7 +77,6 @@ class EntrySpec extends AnyFunSuite {
     // Deployment and bench settings only (README's table): a new A/B or
     // debug switch must not land unlisted. Comments count too, so a
     // stale mention of a deleted switch fails here as well.
-    import scala.jdk.CollectionConverters._
     val documented = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_WARM_DIR",
       "SPARK_GRAFT_CPUS", "SPARK_GRAFT_STATE_STORE", "SPARK_GRAFT_BENCH_OUT",
       "SPARK_GRAFT_BENCH_REPS", "SPARK_GRAFT_BENCH_BUDGET_SECS",
@@ -98,7 +99,6 @@ class EntrySpec extends AnyFunSuite {
     // def whose parameter lists name a mutable.Buffer or a crashAt*
     // option threads a spec hook through a production signature again.
     // Bracket-aware over every type and value parameter list of a def.
-    import scala.jdk.CollectionConverters._
     val defName = """\bdef\s+[\w$]+""".r
     def skipWs(src: String, i: Int): Int =
       if (i < src.length && src(i).isWhitespace) skipWs(src, i + 1) else i
@@ -141,7 +141,6 @@ class EntrySpec extends AnyFunSuite {
     // scaladoc keeps only the block nearest the definition, so the
     // first one's text silently documents nothing. Blank lines and line
     // comments between the two do not count as a definition.
-    import scala.jdk.CollectionConverters._
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
     val orphans =
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted.flatMap { f =>
@@ -162,7 +161,6 @@ class EntrySpec extends AnyFunSuite {
     // writes, the `_compact_` swap dirs) lives in one module; a loop that
     // spells a chain path by hand has a second copy of it. Code only:
     // doc and line comments may describe the layout.
-    import scala.jdk.CollectionConverters._
     val formatTokens = Seq("/batch=", "\"batch=\"", "partitionBy(", "_compact_")
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/streaming"))
     val sites =
@@ -179,51 +177,52 @@ class EntrySpec extends AnyFunSuite {
     assert(sites.isEmpty, s"chain paths outside ChainStore.scala: ${sites.mkString(", ")}")
   }
 
+  /** The source-lint legs scan code only: comment lines blanked,
+    * trailing line comments cut. A def's extent is found bracket-aware:
+    * from its name through its `=` to the first line end outside every
+    * bracket once the body has begun. */
+  private def code(f: java.nio.file.Path): String =
+    java.nio.file.Files.readAllLines(f).asScala.map { line =>
+      val t = line.trim
+      if (Seq("//", "/*", "*").exists(t.startsWith)) "" else line.split(" //")(0)
+    }.mkString("\n")
+  private def extent(src: String, name: String): Option[(Int, Int)] = {
+    val start = src.indexOf(s"def $name(")
+    if (start < 0) None
+    else {
+      var depth = 0
+      var i = start
+      var inBody = false
+      var begun = false
+      var end = -1
+      while (end < 0 && i < src.length) {
+        val c = src(i)
+        c match {
+          case '(' | '[' | '{' => depth += 1; if (inBody) begun = true
+          case ')' | ']' | '}' => depth -= 1
+          case '=' if depth == 0 && !inBody && !src.startsWith("=>", i) => inBody = true
+          case '\n' if depth == 0 && begun => end = i
+          case _ if inBody && !c.isWhitespace => begun = true
+          case _ => ()
+        }
+        i += 1
+      }
+      Some((start, if (end < 0) src.length else end))
+    }
+  }
+  private def lineOf(src: String, at: Int): Int = src.substring(0, at).count(_ == '\n') + 1
+  private def sites(f: java.nio.file.Path, src: String, from: Int, until: Int, tokens: Seq[String]) =
+    tokens.flatMap { tok =>
+      Iterator.iterate(src.indexOf(tok, from))(i => src.indexOf(tok, i + 1))
+        .takeWhile(i => i >= 0 && i < until).map(i => s"$f:${lineOf(src, i)} $tok")
+    }
+
   test("the streaming loops run on one harness and release no frame by hand") {
     // EpochStep: only the harness (`def epochLoop`) starts a
     // foreachBatch query or builds a ReplayingDrain, and the five loop
     // bodies register their frames in the epoch's scope instead of
     // persisting, checkpointing or releasing them by hand
-    // (`releaseCheckpoint` also as a function value). Code only
-    // (comment lines blanked, trailing line comments cut); a def's
-    // extent is found bracket-aware: from its name through its `=` to
-    // the first line end outside every bracket once the body has begun.
-    import scala.jdk.CollectionConverters._
-    def code(f: java.nio.file.Path): String =
-      java.nio.file.Files.readAllLines(f).asScala.map { line =>
-        val t = line.trim
-        if (Seq("//", "/*", "*").exists(t.startsWith)) "" else line.split(" //")(0)
-      }.mkString("\n")
-    def extent(src: String, name: String): Option[(Int, Int)] = {
-      val start = src.indexOf(s"def $name(")
-      if (start < 0) None
-      else {
-        var depth = 0
-        var i = start
-        var inBody = false
-        var begun = false
-        var end = -1
-        while (end < 0 && i < src.length) {
-          val c = src(i)
-          c match {
-            case '(' | '[' | '{' => depth += 1; if (inBody) begun = true
-            case ')' | ']' | '}' => depth -= 1
-            case '=' if depth == 0 && !inBody && !src.startsWith("=>", i) => inBody = true
-            case '\n' if depth == 0 && begun => end = i
-            case _ if inBody && !c.isWhitespace => begun = true
-            case _ => ()
-          }
-          i += 1
-        }
-        Some((start, if (end < 0) src.length else end))
-      }
-    }
-    def lineOf(src: String, at: Int): Int = src.substring(0, at).count(_ == '\n') + 1
-    def sites(f: java.nio.file.Path, src: String, from: Int, until: Int, tokens: Seq[String]) =
-      tokens.flatMap { tok =>
-        Iterator.iterate(src.indexOf(tok, from))(i => src.indexOf(tok, i + 1))
-          .takeWhile(i => i >= 0 && i < until).map(i => s"$f:${lineOf(src, i)} $tok")
-      }
+    // (`releaseCheckpoint` also as a function value). Code only.
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/streaming"))
     val files =
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
@@ -251,5 +250,30 @@ class EntrySpec extends AnyFunSuite {
       s"harness `def epochLoop` ${if (harness) "found" else "missing"}; " +
         s"streams started outside it: ${outsideHarness.mkString(", ")}; " +
         s"frames released by hand in loop bodies: ${byHand.mkString(", ")}")
+  }
+
+  test("main code checkpoints and releases frames only through graft.Scope") {
+    // One owner for every eager materialization and release: outside
+    // graft/Scope.scala no code line may eagerly checkpoint, release a
+    // checkpoint, thread a checkpoint out-buffer or unpersist a frame.
+    // The one exception is Tables.materializeAndRelease, the bounded
+    // verdict helper of the `_check` queries. The lazy
+    // `localCheckpoint()` pins are not lifetimes and stay allowed.
+    val tokens = Seq("localCheckpoint(true)", "releaseCheckpoint", "ckptOut", ".unpersist(")
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val files =
+      try walk.iterator().asScala
+        .filter(f => f.toString.endsWith(".scala") && !f.endsWith("graft/Scope.scala"))
+        .toSeq.sorted
+      finally walk.close()
+    val outside = files.flatMap { f =>
+      val src = code(f)
+      val allowed = if (f.endsWith("graft/Tables.scala")) extent(src, "materializeAndRelease") else None
+      sites(f, src, 0, src.length, tokens).filterNot { site =>
+        val line = site.split(" ").head.split(":").last.toInt
+        allowed.exists { case (from, until) => line >= lineOf(src, from) && line <= lineOf(src, until) }
+      }
+    }
+    assert(outside.isEmpty, s"frames materialized or released outside graft.Scope: ${outside.mkString(", ")}")
   }
 }

@@ -494,13 +494,14 @@ class PropertySpec extends AnyFunSuite {
         }
       } ++ (1 to 4).map(j => (maxId + j) -> s"retired document body number $j with padding")
       val oldDocs = old.toDF("doc_id", "text")
-      val prior = Corpus.ledger(oldDocs).localCheckpoint(true)
-      val got = Snapshot.incrementalLedgerFromState(prior, Snapshot.manifest(oldDocs), newDocs)
-        .orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
-      val want = Corpus.ledger(newDocs).orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
-      assert(got.nonEmpty && got == want,
-        s"trial $trial: incremental next ledger diverged from the from-scratch recompute")
-      Corpus.releaseCheckpoint(prior)
+      Scope.around { scope =>
+        val prior = scope.checkpoint(Corpus.ledger(oldDocs))
+        val got = Snapshot.incrementalLedgerFromState(prior, Snapshot.manifest(oldDocs), newDocs)
+          .orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
+        val want = Corpus.ledger(newDocs).orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
+        assert(got.nonEmpty && got == want,
+          s"trial $trial: incremental next ledger diverged from the from-scratch recompute")
+      }
     }
   }
 
@@ -543,70 +544,67 @@ class PropertySpec extends AnyFunSuite {
     val cur = scala.collection.mutable.LinkedHashMap.empty[Long, String]
     var nextId = 1L
     def currentDF() = cur.toSeq.toDF("doc_id", "text")
-    var oldDocs = currentDF() // empty at bootstrap
-    var prior = Corpus.ledger(oldDocs).localCheckpoint(true) // empty ledger
-    var hot = Snapshot.postings(oldDocs).select(col("s")).limit(0)
-      .localCheckpoint(true)
-    var hotSeen = 0L
-    var hotMoves = 0
-    var crossingsSeen = 0L
-    var prevHot: Option[Set[Long]] = None
-    for (epoch <- 0 to 3) {
-      if (epoch == 0) for (_ <- 1 to 10) { cur(nextId) = window(); nextId += 1 }
-      else {
-        for (id <- cur.keys.toSeq) rnd.nextInt(10) match {
-          case 0 | 1 | 2 => cur(id) = window() // 'changed'
-          case 3 => if (cur.size > 4) cur.remove(id) // 'removed'
-          case _ => ()
+    Scope.around { chain =>
+      var oldDocs = currentDF() // empty at bootstrap
+      var prior = chain.checkpoint(Corpus.ledger(oldDocs)) // empty ledger
+      var hot = chain.checkpoint(Snapshot.postings(oldDocs).select(col("s")).limit(0))
+      var hotSeen = 0L
+      var hotMoves = 0
+      var crossingsSeen = 0L
+      var prevHot: Option[Set[Long]] = None
+      for (epoch <- 0 to 3) {
+        if (epoch == 0) for (_ <- 1 to 10) { cur(nextId) = window(); nextId += 1 }
+        else {
+          for (id <- cur.keys.toSeq) rnd.nextInt(10) match {
+            case 0 | 1 | 2 => cur(id) = window() // 'changed'
+            case 3 => if (cur.size > 4) cur.remove(id) // 'removed'
+            case _ => ()
+          }
+          for (_ <- 0 to rnd.nextInt(2)) { cur(nextId) = window(); nextId += 1 } // 'added'
         }
-        for (_ <- 0 to rnd.nextInt(2)) { cur(nextId) = window(); nextId += 1 } // 'added'
+        val newDocs = currentDF()
+        val oldSnap = oldDocs
+        val idx = chain.persist(Snapshot.postings(newDocs))
+        val (deltaRows, hotNext) = Snapshot.incrementalLedgerDeltaCheckpointedCapped(
+          prior, Snapshot.manifest(oldSnap), Snapshot.manifest(newDocs),
+          _ => Snapshot.InMemoryPostings(idx),
+          ids => newDocs.join(ids, Seq("doc_id"), "left_semi"),
+          25, cap, hot,
+          ids => Snapshot.postings(oldSnap).join(ids, Seq("doc_id"), "left_semi"),
+          Snapshot.InMemoryPostings(idx).forDocs, chain)
+        // the advanced hot set must equal the from-scratch derivation —
+        // the induction's per-epoch exactness claim, checked directly
+        val wantHot = Dedup.hotShingles(idx, cap).collect().map(_.getLong(0)).toSet
+        val gotHot = hotNext.collect().map(_.getLong(0)).toSet
+        assert(gotHot == wantHot,
+          s"$label epoch $epoch: advanced hot set $gotHot != from-scratch $wantHot")
+        hotSeen += gotHot.size
+        if (prevHot.exists(_ != gotHot)) hotMoves += 1
+        prevHot = Some(gotHot)
+        // full next ledger = recomputed delta ∪ carried prior rows
+        // (closure ids == deltaRows ids; removed ids fenced by the delta)
+        val deltaIds = Snapshot.diff(Snapshot.manifest(oldSnap), Snapshot.manifest(newDocs))
+          .select(col("doc_id"))
+        val next = chain.checkpoint(deltaRows.unionByName(
+          prior.join(deltaRows.select(col("doc_id")), Seq("doc_id"), "left_anti")
+            .join(deltaIds, Seq("doc_id"), "left_anti")))
+        val got = next.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
+        val want = Corpus.ledger(newDocs, Some(cap)).orderBy(col("doc_id"))
+          .collect().map(_.toSeq).toSeq
+        assert(got.nonEmpty && got == want,
+          s"$label epoch $epoch (cap=$cap): capped chain-form ledger diverged")
+        if (epoch > 0) {
+          val (dOld, dNew) = (dfMap(oldSnap), dfMap(newDocs))
+          crossingsSeen += (dOld.keySet ++ dNew.keySet).count(s =>
+            (dOld.getOrElse(s, 0L) > cap) != (dNew.getOrElse(s, 0L) > cap))
+        }
+        Seq(idx, prior, hot, deltaRows).foreach(chain.release)
+        prior = next
+        hot = hotNext
+        oldDocs = newDocs
       }
-      val newDocs = currentDF()
-      val oldSnap = oldDocs
-      val idx = Snapshot.postings(newDocs).persist()
-      val (deltaRows, hotNext) = Snapshot.incrementalLedgerDeltaCheckpointedCapped(
-        prior, Snapshot.manifest(oldSnap), Snapshot.manifest(newDocs),
-        Snapshot.InMemoryPostings(idx),
-        ids => newDocs.join(ids, Seq("doc_id"), "left_semi"),
-        25, cap, hot,
-        ids => Snapshot.postings(oldSnap).join(ids, Seq("doc_id"), "left_semi"),
-        Snapshot.InMemoryPostings(idx).forDocs)
-      // the advanced hot set must equal the from-scratch derivation —
-      // the induction's per-epoch exactness claim, checked directly
-      val wantHot = Dedup.hotShingles(idx, cap).collect().map(_.getLong(0)).toSet
-      val gotHot = hotNext.collect().map(_.getLong(0)).toSet
-      assert(gotHot == wantHot,
-        s"$label epoch $epoch: advanced hot set $gotHot != from-scratch $wantHot")
-      hotSeen += gotHot.size
-      if (prevHot.exists(_ != gotHot)) hotMoves += 1
-      prevHot = Some(gotHot)
-      // full next ledger = recomputed delta ∪ carried prior rows
-      // (closure ids == deltaRows ids; removed ids fenced by the delta)
-      val deltaIds = Snapshot.diff(Snapshot.manifest(oldSnap), Snapshot.manifest(newDocs))
-        .select(col("doc_id"))
-      val next = deltaRows.unionByName(
-        prior.join(deltaRows.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .join(deltaIds, Seq("doc_id"), "left_anti"))
-        .localCheckpoint(true)
-      val got = next.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
-      val want = Corpus.ledger(newDocs, Some(cap)).orderBy(col("doc_id"))
-        .collect().map(_.toSeq).toSeq
-      assert(got.nonEmpty && got == want,
-        s"$label epoch $epoch (cap=$cap): capped chain-form ledger diverged")
-      if (epoch > 0) {
-        val (dOld, dNew) = (dfMap(oldSnap), dfMap(newDocs))
-        crossingsSeen += (dOld.keySet ++ dNew.keySet).count(s =>
-          (dOld.getOrElse(s, 0L) > cap) != (dNew.getOrElse(s, 0L) > cap))
-      }
-      idx.unpersist(blocking = false)
-      Seq(prior, hot).foreach(Corpus.releaseCheckpoint)
-      Corpus.releaseCheckpoint(deltaRows)
-      prior = next
-      hot = hotNext
-      oldDocs = newDocs
+      (hotSeen, hotMoves, crossingsSeen)
     }
-    Seq(prior, hot).foreach(Corpus.releaseCheckpoint)
-    (hotSeen, hotMoves, crossingsSeen)
   }
 
   test("capped incremental ledger equals the from-scratch capped ledger across random edit chains") {
@@ -677,30 +675,31 @@ class PropertySpec extends AnyFunSuite {
       }
     } ++ (1 to 3).map(j => (maxId + j) -> s"retired document body number $j with padding")
     val oldDocs = old.toDF("doc_id", "text")
-    val prior = Corpus.ledger(oldDocs).localCheckpoint(true)
-    val deltaRows = Snapshot.incrementalLedgerDeltaCheckpointed(
-      prior, Snapshot.manifest(oldDocs), Snapshot.manifest(newDocs),
-      Snapshot.InMemoryPostings(Snapshot.postings(newDocs)),
-      ids => newDocs.join(ids, Seq("doc_id"), "left_semi"), 25)
-    val valueCols = Seq("cluster_id", "n_tokens", "quality", "lang_pred")
-    val chain = prior.withColumn("batch", lit(0))
-      .unionByName(deltaRows.withColumn("batch", lit(1)))
-    val removed = Snapshot.manifest(oldDocs).select(col("doc_id"))
-      .join(newDocs.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    val resolved = chain.groupBy(col("doc_id"))
-      .agg(max_by(struct(valueCols.map(col): _*), col("batch")).as("v"))
-      .select(col("doc_id") +: valueCols.map(c => col(s"v.$c").as(c)): _*)
-      .join(removed, Seq("doc_id"), "left_anti")
-    val got = resolved.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
-    val want = Corpus.ledger(newDocs).orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
-    assert(got.nonEmpty && got == want, "resolved changelog chain diverged from full ledger")
-    // negative leg: skipping the retraction must resurface removed docs
-    val unretracted = chain.groupBy(col("doc_id"))
-      .agg(max_by(struct(valueCols.map(col): _*), col("batch")).as("v"))
-      .count()
-    assert(unretracted == want.size + 3,
-      s"retraction negative-check: expected ${want.size} + 3 retired rows, got $unretracted")
-    Seq(deltaRows, prior).foreach(Corpus.releaseCheckpoint)
+    Scope.around { scope =>
+      val prior = scope.checkpoint(Corpus.ledger(oldDocs))
+      val deltaRows = Snapshot.incrementalLedgerDeltaCheckpointed(
+        prior, Snapshot.manifest(oldDocs), Snapshot.manifest(newDocs),
+        _ => Snapshot.InMemoryPostings(Snapshot.postings(newDocs)),
+        ids => newDocs.join(ids, Seq("doc_id"), "left_semi"), 25, scope)
+      val valueCols = Seq("cluster_id", "n_tokens", "quality", "lang_pred")
+      val chain = prior.withColumn("batch", lit(0))
+        .unionByName(deltaRows.withColumn("batch", lit(1)))
+      val removed = Snapshot.manifest(oldDocs).select(col("doc_id"))
+        .join(newDocs.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      val resolved = chain.groupBy(col("doc_id"))
+        .agg(max_by(struct(valueCols.map(col): _*), col("batch")).as("v"))
+        .select(col("doc_id") +: valueCols.map(c => col(s"v.$c").as(c)): _*)
+        .join(removed, Seq("doc_id"), "left_anti")
+      val got = resolved.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
+      val want = Corpus.ledger(newDocs).orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
+      assert(got.nonEmpty && got == want, "resolved changelog chain diverged from full ledger")
+      // negative leg: skipping the retraction must resurface removed docs
+      val unretracted = chain.groupBy(col("doc_id"))
+        .agg(max_by(struct(valueCols.map(col): _*), col("batch")).as("v"))
+        .count()
+      assert(unretracted == want.size + 3,
+        s"retraction negative-check: expected ${want.size} + 3 retired rows, got $unretracted")
+    }
   }
 
   test("stored-state chains converge to the from-scratch ledger across 4 chained edit epochs") {
@@ -789,59 +788,50 @@ class PropertySpec extends AnyFunSuite {
         .select(col("doc_id") +: valueCols.map(c => col(s"v.$c").as(c)): _*)
     }
 
-    def runEpoch(e: Int, batch: DataFrame, removedIds: Seq[Long]): Long = {
-      val (prior, priorManifest) =
-        if (e == 0) (Corpus.ledger(batch.limit(0)), Snapshot.manifest(batch.limit(0)))
-        else (resolvedLedger(), resolve(manifestChain.toSeq))
-      val priorCk = prior.localCheckpoint(true)
-      val priorManifestCk = priorManifest.localCheckpoint(true)
-      try {
-        val batchManifest = Snapshot.manifest(batch).localCheckpoint(true)
-        try {
-          // tombstones exactly as the foreachBatch derives them: prior-
-          // manifest ids the batch re-delivers (a semi-join, O(|batch|))
-          // plus the source's out-of-band removal feed
-          val redelivered = priorManifestCk
-            .join(batchManifest.select(col("doc_id")), Seq("doc_id"), "left_semi")
-            .select(col("doc_id")).collect().map(_.getLong(0))
-          tombs ++= (redelivered ++ removedIds).map(_ -> e)
-          corpusChain += e -> batch
-          postingsChain += e -> Snapshot.postings(batch).localCheckpoint(true)
-          manifestChain += e -> batchManifest
-          val nextManifest = resolve(manifestChain.toSeq).localCheckpoint(true)
-          val postingsView = resolve(postingsChain.toSeq).persist()
-          try {
-            // the lifecycle-closed form the production loop runs — its
-            // intermediates are released inside, the result arrives as
-            // one eager checkpoint (released with the chain at the end)
-            val corpus = resolve(corpusChain.toSeq)
-            val delta = Snapshot.incrementalLedgerDeltaCheckpointed(
-              priorCk, priorManifestCk, nextManifest, Snapshot.InMemoryPostings(postingsView),
-              ids => corpus.join(ids, Seq("doc_id"), "left_semi"), 25)
-            // the production CARRY (ADVICE r12 high): a hash-unchanged
-            // re-delivery seeds no recompute row while this epoch's
-            // tombstone kills its older ledger rows — carry the prior
-            // row forward AT this epoch unless the recompute already
-            // re-emitted the doc (cluster neighborhood changed)
-            val unchangedIds = priorManifestCk
-              .join(batchManifest, Seq("doc_id", "h"), "left_semi")
-              .select(col("doc_id"))
-            val carried = priorCk.join(unchangedIds, Seq("doc_id"), "left_semi")
-              .join(delta.select(col("doc_id")), Seq("doc_id"), "left_anti")
-            val deltaAll = delta.unionByName(carried).localCheckpoint(true)
-            Corpus.releaseCheckpoint(delta)
-            ledgerChain += e -> deltaAll
-            deltaAll.count()
-          } finally {
-            postingsView.unpersist(blocking = false)
-            Corpus.releaseCheckpoint(nextManifest)
-          }
-        } // batchManifest stays referenced by manifestChain
-      } finally {
-        Corpus.releaseCheckpoint(priorCk)
-        Corpus.releaseCheckpoint(priorManifestCk)
+    // the chains' checkpoints live in `stored`, an epoch's own in `epoch`
+    def runEpoch(e: Int, batch: DataFrame, removedIds: Seq[Long], stored: Scope): Long =
+      Scope.around { epoch =>
+        val (prior, priorManifest) =
+          if (e == 0) (Corpus.ledger(batch.limit(0)), Snapshot.manifest(batch.limit(0)))
+          else (resolvedLedger(), resolve(manifestChain.toSeq))
+        val priorCk = epoch.checkpoint(prior)
+        val priorManifestCk = epoch.checkpoint(priorManifest)
+        // batchManifest stays referenced by manifestChain
+        val batchManifest = stored.checkpoint(Snapshot.manifest(batch))
+        // tombstones exactly as the foreachBatch derives them: prior-
+        // manifest ids the batch re-delivers (a semi-join, O(|batch|))
+        // plus the source's out-of-band removal feed
+        val redelivered = priorManifestCk
+          .join(batchManifest.select(col("doc_id")), Seq("doc_id"), "left_semi")
+          .select(col("doc_id")).collect().map(_.getLong(0))
+        tombs ++= (redelivered ++ removedIds).map(_ -> e)
+        corpusChain += e -> batch
+        postingsChain += e -> stored.checkpoint(Snapshot.postings(batch))
+        manifestChain += e -> batchManifest
+        val nextManifest = epoch.checkpoint(resolve(manifestChain.toSeq))
+        val postingsView = epoch.persist(resolve(postingsChain.toSeq))
+        // the lifecycle-closed form the production loop runs — its
+        // intermediates are released inside, the result arrives as
+        // one eager checkpoint in the epoch's scope
+        val corpus = resolve(corpusChain.toSeq)
+        val delta = Snapshot.incrementalLedgerDeltaCheckpointed(
+          priorCk, priorManifestCk, nextManifest, _ => Snapshot.InMemoryPostings(postingsView),
+          ids => corpus.join(ids, Seq("doc_id"), "left_semi"), 25, epoch)
+        // the production CARRY (ADVICE r12 high): a hash-unchanged
+        // re-delivery seeds no recompute row while this epoch's
+        // tombstone kills its older ledger rows — carry the prior
+        // row forward AT this epoch unless the recompute already
+        // re-emitted the doc (cluster neighborhood changed)
+        val unchangedIds = priorManifestCk
+          .join(batchManifest, Seq("doc_id", "h"), "left_semi")
+          .select(col("doc_id"))
+        val carried = priorCk.join(unchangedIds, Seq("doc_id"), "left_semi")
+          .join(delta.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        val deltaAll = stored.checkpoint(delta.unionByName(carried))
+        epoch.release(delta)
+        ledgerChain += e -> deltaAll
+        deltaAll.count()
       }
-    }
 
     def assertConverged(e: Int): Unit = {
       val gotCorpus = resolve(corpusChain.toSeq).orderBy(col("doc_id"))
@@ -855,60 +845,59 @@ class PropertySpec extends AnyFunSuite {
         s"epoch $e: resolved ledger chain diverged from the from-scratch recompute")
     }
 
-    // epoch 0: bootstrap — the whole corpus is one 'added' delta
-    runEpoch(0, currentDF(), Seq.empty)
-    assertConverged(0)
-    var nRemoved = 0; var nReadds = 0; var nChanged = 0; var nUnchangedRe = 0
+    // the chained checkpoints are released with `stored`
+    Scope.around { stored =>
+      // epoch 0: bootstrap — the whole corpus is one 'added' delta
+      runEpoch(0, currentDF(), Seq.empty, stored)
+      assertConverged(0)
+      var nRemoved = 0; var nReadds = 0; var nChanged = 0; var nUnchangedRe = 0
 
-    for (e <- 1 to 4) {
-      val current = toks.keys.toSeq.sorted
-      // re-add ONE previously-removed id with fresh text (tombstone-
-      // epoch ordering: its new rows must outlive its old tombstone)
-      val readds = everRemoved.toSeq.sorted.take(1).map { i =>
-        everRemoved -= i; toks(i) = freshTokens(s"e${e}readd$i"); i
+      for (e <- 1 to 4) {
+        val current = toks.keys.toSeq.sorted
+        // re-add ONE previously-removed id with fresh text (tombstone-
+        // epoch ordering: its new rows must outlive its old tombstone)
+        val readds = everRemoved.toSeq.sorted.take(1).map { i =>
+          everRemoved -= i; toks(i) = freshTokens(s"e${e}readd$i"); i
+        }
+        val removed = current.filter(_ => rnd.nextDouble() < 0.12)
+        removed.foreach { i => toks.remove(i); everRemoved += i }
+        val survivors = current.diff(removed)
+        val changedMinor = survivors.filter(_ => rnd.nextDouble() < 0.10)
+        changedMinor.foreach { i =>
+          val t = toks(i).clone(); t(rnd.nextInt(40)) = s"e${e}m$i"; toks(i) = t
+        }
+        val changedMajor = survivors.diff(changedMinor).filter(_ => rnd.nextDouble() < 0.08)
+        changedMajor.foreach { i => toks(i) = freshTokens(s"e${e}M$i") }
+        // the unchanged re-crawl wave: re-delivered with IDENTICAL text —
+        // reaches the ledger only through the carry (ADVICE r12 high)
+        val unchangedRe = survivors.diff(changedMinor).diff(changedMajor)
+          .filter(_ => rnd.nextDouble() < 0.10)
+        // chain links off random survivors (extends — possibly bridges —
+        // existing clusters) plus fresh singleton docs
+        val parents = rnd.shuffle(toks.keys.toSeq.sorted).take(3)
+        val links = parents.map { p =>
+          val t = toks(p).clone(); t(rnd.nextInt(40)) = s"e${e}x$p"; add(t)
+        }
+        val fresh = (1 to 2).map(_ => add(freshTokens(s"e${e}new${nextId}")))
+        val batchIds = (readds ++ changedMinor ++ changedMajor ++ unchangedRe ++
+          links ++ fresh).distinct
+        nRemoved += removed.size; nReadds += readds.size
+        nChanged += changedMinor.size + changedMajor.size
+        nUnchangedRe += unchangedRe.size
+        val deltaRows = runEpoch(e, docsDF(batchIds), removed, stored)
+        info(s"epoch $e: batch=${batchIds.size} removed=${removed.size} " +
+          s"readds=${readds.size} unchanged-re=${unchangedRe.size} " +
+          s"ledger-delta=$deltaRows corpus=${toks.size}")
+        assertConverged(e)
       }
-      val removed = current.filter(_ => rnd.nextDouble() < 0.12)
-      removed.foreach { i => toks.remove(i); everRemoved += i }
-      val survivors = current.diff(removed)
-      val changedMinor = survivors.filter(_ => rnd.nextDouble() < 0.10)
-      changedMinor.foreach { i =>
-        val t = toks(i).clone(); t(rnd.nextInt(40)) = s"e${e}m$i"; toks(i) = t
-      }
-      val changedMajor = survivors.diff(changedMinor).filter(_ => rnd.nextDouble() < 0.08)
-      changedMajor.foreach { i => toks(i) = freshTokens(s"e${e}M$i") }
-      // the unchanged re-crawl wave: re-delivered with IDENTICAL text —
-      // reaches the ledger only through the carry (ADVICE r12 high)
-      val unchangedRe = survivors.diff(changedMinor).diff(changedMajor)
-        .filter(_ => rnd.nextDouble() < 0.10)
-      // chain links off random survivors (extends — possibly bridges —
-      // existing clusters) plus fresh singleton docs
-      val parents = rnd.shuffle(toks.keys.toSeq.sorted).take(3)
-      val links = parents.map { p =>
-        val t = toks(p).clone(); t(rnd.nextInt(40)) = s"e${e}x$p"; add(t)
-      }
-      val fresh = (1 to 2).map(_ => add(freshTokens(s"e${e}new${nextId}")))
-      val batchIds = (readds ++ changedMinor ++ changedMajor ++ unchangedRe ++
-        links ++ fresh).distinct
-      nRemoved += removed.size; nReadds += readds.size
-      nChanged += changedMinor.size + changedMajor.size
-      nUnchangedRe += unchangedRe.size
-      val deltaRows = runEpoch(e, docsDF(batchIds), removed)
-      info(s"epoch $e: batch=${batchIds.size} removed=${removed.size} " +
-        s"readds=${readds.size} unchanged-re=${unchangedRe.size} " +
-        s"ledger-delta=$deltaRows corpus=${toks.size}")
-      assertConverged(e)
+      // the seed must have exercised every edit leg at least once —
+      // otherwise the chained run degenerates to the adds-only staging
+      // the streaming harness already covers (reseed if this ever trips)
+      assert(nRemoved > 0 && nReadds > 0 && nChanged > 0,
+        s"seed $seed staged no removals/re-adds/changes ($nRemoved/$nReadds/$nChanged)")
+      assert(nUnchangedRe > 0,
+        s"seed $seed staged no identical-text re-deliveries — the carry leg is vacuous, reseed")
     }
-    // the seed must have exercised every edit leg at least once —
-    // otherwise the chained run degenerates to the adds-only staging
-    // the streaming harness already covers (reseed if this ever trips)
-    assert(nRemoved > 0 && nReadds > 0 && nChanged > 0,
-      s"seed $seed staged no removals/re-adds/changes ($nRemoved/$nReadds/$nChanged)")
-    assert(nUnchangedRe > 0,
-      s"seed $seed staged no identical-text re-deliveries — the carry leg is vacuous, reseed")
-    // release the chained checkpoints
-    postingsChain.foreach { case (_, df) => Corpus.releaseCheckpoint(df) }
-    manifestChain.foreach { case (_, df) => Corpus.releaseCheckpoint(df) }
-    ledgerChain.foreach { case (_, df) => Corpus.releaseCheckpoint(df) }
   }
 
   test("near-dup ingest changelog converges to the batch verdict across random arrival, removal and re-delivery epochs") {
@@ -1009,7 +998,9 @@ class PropertySpec extends AnyFunSuite {
     // tombstone-only; the retirement blast radius (docs whose current
     // partner was removed or re-delivered) is re-verdicted from the
     // stored shingle sets against the live index.
-    def processEvent(e: Int, arrivalDocs: Seq[(Long, String)], removeIds: Set[Long]): Unit = {
+    // the chains' checkpoints live in `stored`, an event's own in `event`
+    def processEvent(e: Int, arrivalDocs: Seq[(Long, String)], removeIds: Set[Long],
+                     stored: Scope): Unit = Scope.around { event =>
       val redeliv = arrivalDocs.map(_._1).filter(current.contains).toSet
       redeliveredCount += redeliv.size; removedCount += removeIds.size
       val retiredIds = removeIds ++ redeliv
@@ -1018,37 +1009,32 @@ class PropertySpec extends AnyFunSuite {
       removeIds.foreach(current.remove)
       arrivalDocs.foreach { case (id, t) => current(id) = t }
       val batchDF = arrivalDocs.toDF("doc_id", "text")
-      val batchSh = Dedup.shingleHashSets(batchDF).localCheckpoint(true)
-      val batchBands = Dedup.bandRows(Dedup.minhashSignatures(batchSh))
-        .localCheckpoint(true)
+      val batchSh = stored.checkpoint(Dedup.shingleHashSets(batchDF))
+      val batchBands = stored.checkpoint(Dedup.bandRows(Dedup.minhashSignatures(batchSh)))
       shChain += e -> batchSh; bandChain += e -> batchBands
       val cand = Dedup.nearDupCandidates(batchBands, liveBands())
       val edges = Dedup.nearDupVerify(cand, liveSh())
-      val newBest = edges.groupBy(col("b").as("doc_id"))
-        .agg(min(col("a")).as("partner_id"), min_by(col("jaccard"), col("a")).as("jaccard"))
-        .localCheckpoint(true)
+      val newBest = event.checkpoint(edges.groupBy(col("b").as("doc_id"))
+        .agg(min(col("a")).as("partner_id"), min_by(col("jaccard"), col("a")).as("jaccard")))
       val batchVerdict = batchDF.select(col("doc_id")).join(newBest, Seq("doc_id"), "left")
       val priorRaw =
         if (!hadPrior) newBest.withColumn("old_partner", lit(null)).limit(0)
-        else newBest
+        else event.checkpoint(newBest
           .join(batchDF.select(col("doc_id")), Seq("doc_id"), "left_anti")
           .join(lww().select(col("doc_id"), col("partner_id").as("old_partner")), Seq("doc_id"))
-          .filter(col("old_partner").isNull || col("partner_id") < col("old_partner"))
-          .localCheckpoint(true)
+          .filter(col("old_partner").isNull || col("partner_id") < col("old_partner")))
       // a prior KEEP (old partner null) flipped to a drop by a later
       // smaller-id arrival — counted separately from mere partner
       // improvements of already-dropped docs
       keepRetractions += priorRaw.filter(col("old_partner").isNull).count()
-      val affCkpts = scala.collection.mutable.ListBuffer.empty[DataFrame]
       val affDelta =
         if (retiredIds.isEmpty || !hadPrior) batchVerdict.limit(0)
         else {
-          val affected = lww()
+          val affected = event.checkpoint(lww()
             .filter(col("partner_id").isin(retiredIds.toSeq: _*))
             .join(removeIds.toSeq.toDF("doc_id"), Seq("doc_id"), "left_anti")
             .join(batchDF.select(col("doc_id")), Seq("doc_id"), "left_anti")
-            .select(col("doc_id")).localCheckpoint(true)
-          affCkpts += affected
+            .select(col("doc_id")))
           val affSh = liveSh().join(affected, Seq("doc_id"), "left_semi")
           val affBands = Dedup.bandRows(Dedup.minhashSignatures(affSh))
           val cand2 = Dedup.nearDupCandidates(affBands, liveBands())
@@ -1056,21 +1042,15 @@ class PropertySpec extends AnyFunSuite {
             .groupBy(col("b").as("doc_id"))
             .agg(min(col("a")).as("partner_id"),
               min_by(col("jaccard"), col("a")).as("jaccard"))
-          val d2 = affected.join(best2, Seq("doc_id"), "left")
-            .select(col("doc_id"), col("partner_id"), col("jaccard"))
-            .localCheckpoint(true)
-          affCkpts += d2
+          val d2 = event.checkpoint(affected.join(best2, Seq("doc_id"), "left")
+            .select(col("doc_id"), col("partner_id"), col("jaccard")))
           reVerdicts += d2.count()
           restoredKeeps += d2.filter(col("partner_id").isNull).count()
           d2
         }
-      val delta = batchVerdict
+      val delta = stored.checkpoint(batchVerdict
         .unionByName(priorRaw.select(col("doc_id"), col("partner_id"), col("jaccard")))
-        .unionByName(affDelta)
-        .localCheckpoint(true)
-      graft.operators.Corpus.releaseCheckpoint(newBest)
-      graft.operators.Corpus.releaseCheckpoint(priorRaw)
-      affCkpts.foreach(graft.operators.Corpus.releaseCheckpoint)
+        .unionByName(affDelta))
       verdictChain += e -> delta
     }
     def partnersNow(): Seq[Long] = lww().filter(col("partner_id").isNotNull)
@@ -1082,65 +1062,65 @@ class PropertySpec extends AnyFunSuite {
     // first re-delivery byte-identical (the unchanged re-crawl), the
     // second a mutated copy (the edge-erasing kind). Removals pick a
     // current partner plus a bystander.
-    var e = 0
-    for ((arrival, k) <- arrivals.zipWithIndex) {
-      val redeliv: Seq[(Long, String)] =
-        if (k < 2) Seq.empty
-        else {
-          val ps = partnersNow().filterNot(id => arrival.exists(_._1 == id))
-          if (ps.isEmpty) Seq.empty
+    // the chains' checkpoints are released with `stored`
+    Scope.around { stored =>
+      var e = 0
+      for ((arrival, k) <- arrivals.zipWithIndex) {
+        val redeliv: Seq[(Long, String)] =
+          if (k < 2) Seq.empty
           else {
-            val id = ps(rnd.nextInt(ps.size))
-            val toks = current(id).split(" ")
-            // k==2 re-delivers BYTE-IDENTICAL (the unchanged re-crawl:
-            // the supersede must retire and re-add the same rows with
-            // no verdict drift), k==3 a mutated copy (the edge-erasing
-            // kind the retraction blast radius exists for)
-            if (k == 3) { toks(rnd.nextInt(toks.length)) = s"re${e}x"; mutatedRe += 1 }
-            else identicalRe += 1
-            Seq((id, toks.mkString(" ")))
+            val ps = partnersNow().filterNot(id => arrival.exists(_._1 == id))
+            if (ps.isEmpty) Seq.empty
+            else {
+              val id = ps(rnd.nextInt(ps.size))
+              val toks = current(id).split(" ")
+              // k==2 re-delivers BYTE-IDENTICAL (the unchanged re-crawl:
+              // the supersede must retire and re-add the same rows with
+              // no verdict drift), k==3 a mutated copy (the edge-erasing
+              // kind the retraction blast radius exists for)
+              if (k == 3) { toks(rnd.nextInt(toks.length)) = s"re${e}x"; mutatedRe += 1 }
+              else identicalRe += 1
+              Seq((id, toks.mkString(" ")))
+            }
+          }
+        processEvent(e, arrival ++ redeliv, Set.empty, stored)
+        checkEpoch(e); e += 1
+        if (k == 1 || k == 3) {
+          val ps = partnersNow()
+          if (ps.nonEmpty) {
+            val victim = ps(rnd.nextInt(ps.size))
+            // the bystander must not be one of the victim's dependents —
+            // removing the whole dependency pair would leave no one to
+            // re-verdict, voiding the leg this epoch exists for
+            val dependents = lww().filter(col("partner_id") === lit(victim))
+              .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+            val bystander = current.keys.toSeq
+              .filterNot(id => id == victim || dependents(id))
+            val picks = Set(victim) ++
+              (if (bystander.nonEmpty) Set(bystander(rnd.nextInt(bystander.size)))
+               else Set.empty[Long])
+            processEvent(e, Seq.empty, picks, stored)
+            checkEpoch(e); e += 1
           }
         }
-      processEvent(e, arrival ++ redeliv, Set.empty)
-      checkEpoch(e); e += 1
-      if (k == 1 || k == 3) {
-        val ps = partnersNow()
-        if (ps.nonEmpty) {
-          val victim = ps(rnd.nextInt(ps.size))
-          // the bystander must not be one of the victim's dependents —
-          // removing the whole dependency pair would leave no one to
-          // re-verdict, voiding the leg this epoch exists for
-          val dependents = lww().filter(col("partner_id") === lit(victim))
-            .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-          val bystander = current.keys.toSeq
-            .filterNot(id => id == victim || dependents(id))
-          val picks = Set(victim) ++
-            (if (bystander.nonEmpty) Set(bystander(rnd.nextInt(bystander.size)))
-             else Set.empty[Long])
-          processEvent(e, Seq.empty, picks)
-          checkEpoch(e); e += 1
-        }
       }
+      // the seed must actually exercise every leg
+      assert(docs.toDF("doc_id", "text")
+        .select(col("text")).distinct().count() < docs.size,
+        "no duplicate texts staged — vacuous corpus, reseed")
+      assert(keepRetractions > 0,
+        s"seed $seed never flipped a prior keep to a drop — reseed")
+      assert(reVerdicts > 0,
+        s"seed $seed never re-verdicted a retired partner's dependent — reseed")
+      assert(restoredKeeps > 0,
+        s"seed $seed never restored a keep through a retirement — reseed")
+      assert(redeliveredCount > 0,
+        s"seed $seed never re-delivered a doc — reseed")
+      assert(identicalRe > 0 && mutatedRe > 0,
+        s"seed $seed missed a re-delivery kind (identical=$identicalRe mutated=$mutatedRe) — reseed")
+      assert(removedCount > 0,
+        s"seed $seed never removed a doc — reseed")
     }
-    // the seed must actually exercise every leg
-    assert(docs.toDF("doc_id", "text")
-      .select(col("text")).distinct().count() < docs.size,
-      "no duplicate texts staged — vacuous corpus, reseed")
-    assert(keepRetractions > 0,
-      s"seed $seed never flipped a prior keep to a drop — reseed")
-    assert(reVerdicts > 0,
-      s"seed $seed never re-verdicted a retired partner's dependent — reseed")
-    assert(restoredKeeps > 0,
-      s"seed $seed never restored a keep through a retirement — reseed")
-    assert(redeliveredCount > 0,
-      s"seed $seed never re-delivered a doc — reseed")
-    assert(identicalRe > 0 && mutatedRe > 0,
-      s"seed $seed missed a re-delivery kind (identical=$identicalRe mutated=$mutatedRe) — reseed")
-    assert(removedCount > 0,
-      s"seed $seed never removed a doc — reseed")
-    (shChain ++ bandChain).foreach { case (_, df) =>
-      graft.operators.Corpus.releaseCheckpoint(df) }
-    verdictChain.foreach { case (_, df) => graft.operators.Corpus.releaseCheckpoint(df) }
   }
 
   test("additive-chain compaction survives random crash states without double-counting") {
@@ -1275,7 +1255,8 @@ class PropertySpec extends AnyFunSuite {
           .filter(col("te").isNull || col("batch") >= col("te")).drop("te")
       live.drop("batch")
     }
-    def runEpoch(e: Int, batch: Seq[(Long, Seq[Double])], removed: Seq[Long]): Unit = {
+    def runEpoch(e: Int, batch: Seq[(Long, Seq[Double])], removed: Seq[Long],
+                 stored: Scope): Unit = {
       // the production membership probe: batch ids whose assignment the
       // store holds LIVE (prior tombstones resolved first — a removed-
       // then-re-added id is NEW)
@@ -1294,8 +1275,8 @@ class PropertySpec extends AnyFunSuite {
         else resolvedAssign()
           .join(broadcast(retired.toDF("neighbor_id")), Seq("neighbor_id"), "left_semi")
           .groupBy(col("cell")).agg((-count(lit(1))).as("n"))
-      val delta = Similarity.ivfAssign(df(batch), centroids).localCheckpoint(true)
-      val stats = Similarity.ivfCellStats(delta).unionByName(neg).localCheckpoint(true)
+      val delta = stored.checkpoint(Similarity.ivfAssign(df(batch), centroids))
+      val stats = stored.checkpoint(Similarity.ivfCellStats(delta).unionByName(neg))
       retired.foreach(i => tomb(i) = e)
       removed.foreach(current.remove)
       batch.foreach { case (i, v) => current(i) = v }
@@ -1323,32 +1304,33 @@ class PropertySpec extends AnyFunSuite {
       assert(gotStats == wantStats,
         s"epoch $e: cellstats chain sum $gotStats != live occupancy $wantStats")
     }
-    runEpoch(0, first, Seq.empty)
-    assertConverged(0)
-    for (e <- 1 to 4) {
-      val live = current.keys.toSeq.sorted
-      val removed = rnd.shuffle(live).take(1 + rnd.nextInt(3))
-      val stay = live.diff(removed)
-      // re-embedded re-deliveries: supersede may move cells
-      val redeliv = rnd.shuffle(stay).take(1 + rnd.nextInt(3)).map { i =>
-        val before = Similarity.ivfAssign(df(Seq(i -> current(i))), centroids)
-          .collect().head.getInt(1)
-        val nv = vec()
-        val after = Similarity.ivfAssign(df(Seq(i -> nv)), centroids)
-          .collect().head.getInt(1)
-        if (before != after) nMovedCells += 1
-        i -> nv
+    // the chains' checkpoints are released with `stored`
+    Scope.around { stored =>
+      runEpoch(0, first, Seq.empty, stored)
+      assertConverged(0)
+      for (e <- 1 to 4) {
+        val live = current.keys.toSeq.sorted
+        val removed = rnd.shuffle(live).take(1 + rnd.nextInt(3))
+        val stay = live.diff(removed)
+        // re-embedded re-deliveries: supersede may move cells
+        val redeliv = rnd.shuffle(stay).take(1 + rnd.nextInt(3)).map { i =>
+          val before = Similarity.ivfAssign(df(Seq(i -> current(i))), centroids)
+            .collect().head.getInt(1)
+          val nv = vec()
+          val after = Similarity.ivfAssign(df(Seq(i -> nv)), centroids)
+            .collect().head.getInt(1)
+          if (before != after) nMovedCells += 1
+          i -> nv
+        }
+        val adds = (1 to 2).map { _ => nextId += 1; nextId -> vec() }
+        runEpoch(e, redeliv ++ adds, removed, stored)
+        assertConverged(e)
       }
-      val adds = (1 to 2).map { _ => nextId += 1; nextId -> vec() }
-      runEpoch(e, redeliv ++ adds, removed)
-      assertConverged(e)
+      assert(nRemoved > 0 && nRedelivered > 0,
+        s"seed $seed staged no removals/re-deliveries ($nRemoved/$nRedelivered)")
+      assert(nMovedCells > 0,
+        s"seed $seed: no re-embedded vector changed cell — the negative-delta leg is vacuous, reseed")
     }
-    assert(nRemoved > 0 && nRedelivered > 0,
-      s"seed $seed staged no removals/re-deliveries ($nRemoved/$nRedelivered)")
-    assert(nMovedCells > 0,
-      s"seed $seed: no re-embedded vector changed cell — the negative-delta leg is vacuous, reseed")
-    (assignChain ++ statsChain).foreach { case (_, d) =>
-      graft.operators.Corpus.releaseCheckpoint(d) }
   }
 
   test("classifier score chain converges to frozen-model scoring across random retirement epochs") {
@@ -1380,9 +1362,9 @@ class PropertySpec extends AnyFunSuite {
     bootstrap.foreach { case (i, t) => current(i) = t }
     def df(rows: Seq[(Long, String)]): DataFrame = rows.toDF("doc_id", "text")
     val model = Classifier.fit(Classifier.featurized(df(bootstrap)))
-    def scoreOf(rows: Seq[(Long, String)]): DataFrame = {
+    def scoreOf(rows: Seq[(Long, String)], scope: Scope): DataFrame = {
       val (scored, bc) = Classifier.scoreWithHandle(Classifier.featurized(df(rows)), model)
-      val out = scored.localCheckpoint(true)
+      val out = scope.checkpoint(scored)
       bc.destroy()
       out
     }
@@ -1399,7 +1381,7 @@ class PropertySpec extends AnyFunSuite {
           .filter(col("te").isNull || col("batch") >= col("te")).drop("te")
       live.drop("batch")
     }
-    def runEpoch(e: Int, batch: Seq[(Long, String)], removed: Seq[Long]): Unit = {
+    def runEpoch(e: Int, batch: Seq[(Long, String)], removed: Seq[Long], stored: Scope): Unit = {
       val liveBefore: Set[Long] =
         if (scoreChain.isEmpty) Set.empty
         else resolved().select(col("doc_id")).collect().map(_.getLong(0)).toSet
@@ -1408,17 +1390,16 @@ class PropertySpec extends AnyFunSuite {
       (removed ++ redelivered).foreach(i => tomb(i) = e)
       removed.foreach(current.remove)
       batch.foreach { case (i, t) => current(i) = t }
-      scoreChain += e -> scoreOf(batch)
+      scoreChain += e -> scoreOf(batch, stored)
     }
     def assertConverged(e: Int): Unit = {
       val got = resolved().orderBy(col("doc_id"))
         .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2),
           r.getDouble(3), r.getBoolean(4))).toSeq
-      val wantDf = scoreOf(current.toSeq.sortBy(_._1))
-      val want = wantDf.orderBy(col("doc_id"))
+      val want = Scope.around(scope => scoreOf(current.toSeq.sortBy(_._1), scope)
+        .orderBy(col("doc_id"))
         .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getString(2),
-          r.getDouble(3), r.getBoolean(4))).toSeq
-      graft.operators.Corpus.releaseCheckpoint(wantDf)
+          r.getDouble(3), r.getBoolean(4))).toSeq)
       assert(got.nonEmpty && got.size == want.size,
         s"epoch $e: ${got.size} live rows != ${want.size} live docs " +
           "(a superseded row survived or a doc vanished)")
@@ -1428,23 +1409,25 @@ class PropertySpec extends AnyFunSuite {
         assert(math.abs(g._4 - w._4) <= 1e-9, s"epoch $e: prob drifted: $g vs $w")
       }
     }
-    runEpoch(0, bootstrap, Seq.empty)
-    assertConverged(0)
-    var cursor = later
-    for (e <- 1 to 4) {
-      val live = current.keys.toSeq.sorted
-      val removed = rnd.shuffle(live).take(1 + rnd.nextInt(3))
-      val stay = live.diff(removed)
-      // re-delivered with CHANGED text — the frozen model re-scores
-      val redeliv = rnd.shuffle(stay).take(1 + rnd.nextInt(3))
-        .map(i => i -> (current(i) + s" appended epoch $e tail tokens"))
-      val (adds, rest) = cursor.splitAt(3)
-      cursor = rest
-      runEpoch(e, redeliv ++ adds, removed)
-      assertConverged(e)
+    // the score chain's checkpoints are released with `stored`
+    Scope.around { stored =>
+      runEpoch(0, bootstrap, Seq.empty, stored)
+      assertConverged(0)
+      var cursor = later
+      for (e <- 1 to 4) {
+        val live = current.keys.toSeq.sorted
+        val removed = rnd.shuffle(live).take(1 + rnd.nextInt(3))
+        val stay = live.diff(removed)
+        // re-delivered with CHANGED text — the frozen model re-scores
+        val redeliv = rnd.shuffle(stay).take(1 + rnd.nextInt(3))
+          .map(i => i -> (current(i) + s" appended epoch $e tail tokens"))
+        val (adds, rest) = cursor.splitAt(3)
+        cursor = rest
+        runEpoch(e, redeliv ++ adds, removed, stored)
+        assertConverged(e)
+      }
+      assert(nRemoved > 0 && nRedelivered > 0,
+        s"seed $seed staged no removals/re-deliveries ($nRemoved/$nRedelivered)")
     }
-    assert(nRemoved > 0 && nRedelivered > 0,
-      s"seed $seed staged no removals/re-deliveries ($nRemoved/$nRedelivered)")
-    scoreChain.foreach { case (_, d) => graft.operators.Corpus.releaseCheckpoint(d) }
   }
 }

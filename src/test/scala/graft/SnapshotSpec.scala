@@ -30,11 +30,8 @@ class SnapshotSpec extends AnyFunSuite {
       s.map(f => (f.name, f.dataType))
     assert(shape(graft.operators.Snapshot.manifest(tiny).schema) ==
       shape(graft.operators.Snapshot.ManifestSchema))
-    val ledgerCkpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
-    try assert(shape(graft.operators.Corpus.ledger(tiny,
-        ckptOut = Some(ledgerCkpts)).schema) ==
-      shape(graft.operators.Corpus.LedgerSchema))
-    finally ledgerCkpts.foreach(graft.operators.Corpus.releaseCheckpoint)
+    Scope.around(scope => assert(shape(graft.operators.Corpus.ledger(tiny,
+      scope = scope).schema) == shape(graft.operators.Corpus.LedgerSchema)))
   }
 
   test("diff classifies added / removed / changed and drops unchanged") {
@@ -149,9 +146,14 @@ class SnapshotSpec extends AnyFunSuite {
     // closure would silently under-recompute, so it must throw instead
     val oldS = corpus(1L -> textA, 2L -> textA)
     val newS = corpus(2L -> textA)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     intercept[IllegalStateException] {
       Snapshot.incrementalCleanFrom(oldS, newS, maxRounds = 0)
     }
+    // the harness-derived prior ledger, its CC labels and the closure's
+    // own checkpoints all go with the failed attempt
+    val pinned = TestSpark.pinnedBeyond(before)
+    assert(pinned.isEmpty, s"the failed attempt left RDDs $pinned pinned")
   }
 
   test("applyDelta round-trips an arbitrary mutated snapshot") {
@@ -201,20 +203,22 @@ class SnapshotSpec extends AnyFunSuite {
       .select(col("doc_id"),
         when(col("doc_id") % 7 === 0, concat(col("text"), lit(" [draft]")))
           .otherwise(col("text")).as("text"))
-    val prior = graft.operators.Corpus.ledger(old).localCheckpoint(true)
-    val got = Snapshot.incrementalLedgerFromState(prior, Snapshot.manifest(old), docs)
-      .orderBy(col("doc_id")).collect().toSeq
-    val want = graft.operators.Corpus.ledger(docs)
-      .orderBy(col("doc_id")).collect().toSeq
-    assert(got.nonEmpty && got == want)
-    graft.operators.Corpus.releaseCheckpoint(prior)
+    Scope.around { scope =>
+      val prior = scope.checkpoint(graft.operators.Corpus.ledger(old))
+      val got = Snapshot.incrementalLedgerFromState(prior, Snapshot.manifest(old), docs)
+        .orderBy(col("doc_id")).collect().toSeq
+      val want = graft.operators.Corpus.ledger(docs)
+        .orderBy(col("doc_id")).collect().toSeq
+      assert(got.nonEmpty && got == want)
+    }
   }
 
   test("checkpointed delta form pins no blocks once its result is released") {
     // The lifecycle contract a continuously-running loop depends on:
-    // after consuming and releasing incrementalLedgerDeltaCheckpointed's
-    // result, the persistent-RDD registry holds NOTHING the call
-    // created — no closure, CC label, manifest-diff or result blocks.
+    // after consuming incrementalLedgerDeltaCheckpointed's result and
+    // ending the scope it was registered in, the persistent-RDD registry
+    // holds NOTHING the call created — no closure, CC label,
+    // manifest-diff or result blocks.
     // (The baseline is taken AFTER the prior ledger is built: batch
     // one-shot entry points like Corpus.ledger legitimately leave their
     // label checkpoint to session exit.)
@@ -225,26 +229,28 @@ class SnapshotSpec extends AnyFunSuite {
       .select(col("doc_id"),
         when(col("doc_id") % 7 === 0, concat(col("text"), lit(" [draft]")))
           .otherwise(col("text")).as("text"))
-    val prior = Corpus.ledger(old).localCheckpoint(true)
-    val oldM = Snapshot.manifest(old).localCheckpoint(true)
-    val newM = Snapshot.manifest(docs).localCheckpoint(true)
-    val idx = Snapshot.postings(docs).persist()
-    idx.count() // materialize: the cache RDD must register BEFORE the baseline
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val delta = Snapshot.incrementalLedgerDeltaCheckpointed(prior, oldM, newM,
-      Snapshot.InMemoryPostings(idx), ids => docs.join(ids, Seq("doc_id"), "left_semi"), 25)
-    assert(delta.count() > 0)
-    Corpus.releaseCheckpoint(delta)
-    // releaseCheckpoint unpersists asynchronously — poll briefly
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    def leaked() = (spark.sparkContext.getPersistentRDDs.keySet -- before)
-      .filter(spark.sparkContext.getPersistentRDDs.contains)
-    while (leaked().nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-    assert(leaked().isEmpty, s"call left pinned RDDs: ${leaked().map(id =>
-      id -> spark.sparkContext.getPersistentRDDs(id).toDebugString
-        .linesIterator.take(6).mkString(" | "))}")
-    idx.unpersist(blocking = false)
-    Seq(prior, oldM, newM).foreach(Corpus.releaseCheckpoint)
+    Scope.around { state =>
+      val prior = state.checkpoint(Corpus.ledger(old))
+      val oldM = state.checkpoint(Snapshot.manifest(old))
+      val newM = state.checkpoint(Snapshot.manifest(docs))
+      val idx = state.persist(Snapshot.postings(docs))
+      idx.count() // materialize: the cache RDD must register BEFORE the baseline
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      Scope.around { scope =>
+        val delta = Snapshot.incrementalLedgerDeltaCheckpointed(prior, oldM, newM,
+          _ => Snapshot.InMemoryPostings(idx), ids => docs.join(ids, Seq("doc_id"), "left_semi"),
+          25, scope)
+        assert(delta.count() > 0)
+      }
+      // the scope unpersists asynchronously — poll briefly
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def leaked() = (spark.sparkContext.getPersistentRDDs.keySet -- before)
+        .filter(spark.sparkContext.getPersistentRDDs.contains)
+      while (leaked().nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(leaked().isEmpty, s"call left pinned RDDs: ${leaked().map(id =>
+        id -> spark.sparkContext.getPersistentRDDs(id).toDebugString
+          .linesIterator.take(6).mkString(" | "))}")
+    }
   }
 
   test("incrementalLedgerFromStoredState runs entirely off parquet-backed state") {
@@ -289,12 +295,13 @@ class SnapshotSpec extends AnyFunSuite {
     // and change nothing.
     import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val prior = graft.operators.Corpus.ledger(docs).localCheckpoint(true)
-    val next = Snapshot.incrementalLedgerFromState(prior, Snapshot.manifest(docs), docs)
-      .orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
-    val want = prior.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
-    assert(next.nonEmpty && next == want)
-    graft.operators.Corpus.releaseCheckpoint(prior)
+    Scope.around { scope =>
+      val prior = scope.checkpoint(graft.operators.Corpus.ledger(docs))
+      val next = Snapshot.incrementalLedgerFromState(prior, Snapshot.manifest(docs), docs)
+        .orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
+      val want = prior.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
+      assert(next.nonEmpty && next == want)
+    }
   }
 
   test("pair-graph closure ignores corpus-ubiquitous shingles (degeneracy pin)") {
@@ -313,14 +320,16 @@ class SnapshotSpec extends AnyFunSuite {
       .select(col("doc_id"), size(col("shingles")).as("nsh"),
         explode(col("shingles")).as("s"))
     val seeds = Seq(1L).toDF("doc_id")
-    val (closed, edges) = Snapshot.pairGraphClosure(seeds, Snapshot.InMemoryPostings(postings), 25)
-    assert(closed.collect().map(_.getLong(0)).toSet == Set(1L, 2L),
-      "closure must be the seed's true near-dup component, not every doc sharing a stop-gram")
-    // and the rounds' edges are exactly that component's pair set
-    val pairs = edges.flatMap(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L)) && pairs.subsetOf(Set((1L, 2L), (2L, 1L))),
-      s"accumulated edges should cover exactly the 1-2 pair, got $pairs")
-    (closed +: edges).foreach(graft.operators.Corpus.releaseCheckpoint)
+    Scope.around { scope =>
+      val (closed, edges) =
+        Snapshot.pairGraphClosure(seeds, Snapshot.InMemoryPostings(postings), 25, scope)
+      assert(closed.collect().map(_.getLong(0)).toSet == Set(1L, 2L),
+        "closure must be the seed's true near-dup component, not every doc sharing a stop-gram")
+      // and the rounds' edges are exactly that component's pair set
+      val pairs = edges.flatMap(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs.contains((1L, 2L)) && pairs.subsetOf(Set((1L, 2L), (2L, 1L))),
+        s"accumulated edges should cover exactly the 1-2 pair, got $pairs")
+    }
   }
 
   test("capped incremental ledger survives engineered cap crossings outside the naive closure") {
@@ -351,24 +360,22 @@ class SnapshotSpec extends AnyFunSuite {
     val e1 = (Seq(1L -> nearDup, 2L -> nearDup) ++ fillers ++ hotDoc).toDF("doc_id", "text")
     val e2 = e0 // doc 7 removed again
 
-    // the next full ledger, eagerly checkpointed (the caller releases it)
+    // the next full ledger, eagerly checkpointed in `scope`
     def cappedNext(prior: org.apache.spark.sql.DataFrame,
                    oldDocs: org.apache.spark.sql.DataFrame,
-                   newDocs: org.apache.spark.sql.DataFrame) = {
+                   newDocs: org.apache.spark.sql.DataFrame, scope: Scope) = Scope.around { epoch =>
       val idx = Snapshot.InMemoryPostings(Snapshot.postings(newDocs))
-      val (delta, hotNext) = Snapshot.incrementalLedgerDeltaCheckpointedCapped(
-        prior, Snapshot.manifest(oldDocs), Snapshot.manifest(newDocs), idx,
+      val (delta, _) = Snapshot.incrementalLedgerDeltaCheckpointedCapped(
+        prior, Snapshot.manifest(oldDocs), Snapshot.manifest(newDocs), _ => idx,
         ids => newDocs.join(ids, Seq("doc_id"), "left_semi"), 25, cap,
         Dedup.hotShingles(Snapshot.postings(oldDocs), cap),
-        ids => Snapshot.postings(oldDocs).join(ids, Seq("doc_id"), "left_semi"), idx.forDocs)
+        ids => Snapshot.postings(oldDocs).join(ids, Seq("doc_id"), "left_semi"), idx.forDocs,
+        epoch)
       val deltaIds = Snapshot.diff(Snapshot.manifest(oldDocs), Snapshot.manifest(newDocs))
         .select(col("doc_id"))
-      val next = delta.unionByName(
+      scope.checkpoint(delta.unionByName(
         prior.join(delta.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .join(deltaIds, Seq("doc_id"), "left_anti"))
-        .localCheckpoint(true)
-      Seq(delta, hotNext).foreach(Corpus.releaseCheckpoint)
-      next
+          .join(deltaIds, Seq("doc_id"), "left_anti")))
     }
     def fromScratch(docs: org.apache.spark.sql.DataFrame) =
       Corpus.ledger(docs, Some(cap)).orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
@@ -384,30 +391,31 @@ class SnapshotSpec extends AnyFunSuite {
         .collect().map(_.getLong(0)).toSet
     }
 
-    val ledger0 = Corpus.ledger(e0, Some(cap)).localCheckpoint(true)
-    // the engineered premise: 1,2 clustered at epoch 0, split at epoch 1
-    val cluster0 = ledger0.filter(col("doc_id") === 2L).select(col("cluster_id"))
-      .collect().head.getLong(0)
-    assert(cluster0 == 1L, s"epoch 0 premise: doc 2 should cluster under 1, got $cluster0")
-    assert(!Set(1L, 2L).subsetOf(naiveSeeds(ledger0, e0, e1)),
-      "engineered premise broken: docs 1,2 must be OUTSIDE the naive seed set at epoch 1")
+    Scope.around { scope =>
+      val ledger0 = scope.checkpoint(Corpus.ledger(e0, Some(cap)))
+      // the engineered premise: 1,2 clustered at epoch 0, split at epoch 1
+      val cluster0 = ledger0.filter(col("doc_id") === 2L).select(col("cluster_id"))
+        .collect().head.getLong(0)
+      assert(cluster0 == 1L, s"epoch 0 premise: doc 2 should cluster under 1, got $cluster0")
+      assert(!Set(1L, 2L).subsetOf(naiveSeeds(ledger0, e0, e1)),
+        "engineered premise broken: docs 1,2 must be OUTSIDE the naive seed set at epoch 1")
 
-    val next1 = cappedNext(ledger0, e0, e1)
-    val got1 = next1.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
-    assert(got1 == fromScratch(e1),
-      "epoch 1 (crossing UP via an added holder): capped incremental diverged")
-    assert(got1.find(_.head == 2L).get(1) == 2L,
-      "epoch 1 premise: the 1-2 cluster should have split under the capped graph")
+      val next1 = cappedNext(ledger0, e0, e1, scope)
+      val got1 = next1.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
+      assert(got1 == fromScratch(e1),
+        "epoch 1 (crossing UP via an added holder): capped incremental diverged")
+      assert(got1.find(_.head == 2L).get(1) == 2L,
+        "epoch 1 premise: the 1-2 cluster should have split under the capped graph")
 
-    assert(naiveSeeds(next1, e1, e2).isEmpty,
-      "engineered premise broken: epoch 2's naive seed set must be EMPTY " +
-        "(removed doc with a singleton prior cluster)")
-    val next2 = cappedNext(next1, e1, e2)
-    val got2 = next2.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
-    assert(got2 == fromScratch(e2),
-      "epoch 2 (crossing DOWN via a removed holder): capped incremental diverged")
-    assert(got2.find(_.head == 2L).get(1) == 1L,
-      "epoch 2 premise: the 1-2 cluster should have re-formed")
-    Seq(ledger0, next1, next2).foreach(Corpus.releaseCheckpoint)
+      assert(naiveSeeds(next1, e1, e2).isEmpty,
+        "engineered premise broken: epoch 2's naive seed set must be EMPTY " +
+          "(removed doc with a singleton prior cluster)")
+      val next2 = cappedNext(next1, e1, e2, scope)
+      val got2 = next2.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
+      assert(got2 == fromScratch(e2),
+        "epoch 2 (crossing DOWN via a removed holder): capped incremental diverged")
+      assert(got2.find(_.head == 2L).get(1) == 1L,
+        "epoch 2 premise: the 1-2 cluster should have re-formed")
+    }
   }
 }

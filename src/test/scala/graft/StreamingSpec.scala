@@ -1040,13 +1040,11 @@ class StreamingSpec extends AnyFunSuite {
       .collect().toSeq
     val crossings = hooks(LoopHooks.CapCrossings)
     val hotProbe = hooks(LoopHooks.SnapshotDirs)
-    // ckptOut: release the capped twin's pair checkpoint once
+    // scope: release the capped twin's pair checkpoint once
     // collected — spec suites call this repeatedly (ADVICE r16)
-    val twinCkpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
-    val batch =
-      try Dedup.minhashNearDupVerdict(Tables.documents(spark, TestSpark.sf),
-        maxBandDf = Some(Dedup.BandCapDf), ckptOut = Some(twinCkpts)).collect().toSeq
-      finally twinCkpts.foreach(graft.operators.Corpus.releaseCheckpoint)
+    val batch = Scope.around(scope => Dedup.minhashNearDupVerdict(
+      Tables.documents(spark, TestSpark.sf), maxBandDf = Some(Dedup.BandCapDf), scope = scope)
+      .collect().toSeq)
     assert(streamed.nonEmpty && streamed == batch,
       "capped streamed verdicts diverged from the capped batch twin")
     // non-vacuity meters: the cap must actually CROSS, both ways, at
@@ -1093,13 +1091,10 @@ class StreamingSpec extends AnyFunSuite {
           if (r.isNullAt(2)) -1L else r.getLong(2))).toSeq
       val streamed = rows(Events.ingestNearDup(spark, dir.toString,
         maxBandDf = Some(Dedup.BandCapDf)))
-      // ckptOut: release the capped twin's pair checkpoint once
+      // scope: release the capped twin's pair checkpoint once
       // collected (ADVICE r16)
-      val twinCkpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
-      val cappedTwin =
-        try rows(Dedup.minhashNearDupVerdict(table,
-          maxBandDf = Some(Dedup.BandCapDf), ckptOut = Some(twinCkpts)))
-        finally twinCkpts.foreach(graft.operators.Corpus.releaseCheckpoint)
+      val cappedTwin = Scope.around(scope => rows(Dedup.minhashNearDupVerdict(table,
+        maxBandDf = Some(Dedup.BandCapDf), scope = scope)))
       val uncappedTwin = rows(Dedup.minhashNearDupVerdict(table))
       assert(streamed.nonEmpty && streamed == cappedTwin,
         s"flooded-corpus capped stream diverged: $streamed vs $cappedTwin")
@@ -1128,13 +1123,11 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = Events.ingestNearDup(spark, TestSpark.sf,
       maxBandDf = Some(Dedup.BandCapDf), hooks = new LoopHooks(crash = Some(LoopHooks.Crash(1L))))
       .collect().toSeq
-    // ckptOut: release the capped twin's pair checkpoint once collected
+    // scope: release the capped twin's pair checkpoint once collected
     // (ADVICE r16 — same as the suite's other capped twin calls)
-    val twinCkpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.sql.DataFrame]
-    val batch =
-      try Dedup.minhashNearDupVerdict(Tables.documents(spark, TestSpark.sf),
-        maxBandDf = Some(Dedup.BandCapDf), ckptOut = Some(twinCkpts)).collect().toSeq
-      finally twinCkpts.foreach(graft.operators.Corpus.releaseCheckpoint)
+    val batch = Scope.around(scope => Dedup.minhashNearDupVerdict(
+      Tables.documents(spark, TestSpark.sf), maxBandDf = Some(Dedup.BandCapDf), scope = scope)
+      .collect().toSeq)
     assert(streamed.nonEmpty && streamed == batch,
       "crash-replayed capped neardup loop diverged from the capped batch twin")
   }
@@ -1703,26 +1696,27 @@ class StreamingSpec extends AnyFunSuite {
           tombAgg, "doc_id")
           .join(ids, Seq("doc_id"), "left_semi")
       val seeds = Seq(7L).toDF("doc_id")
-      val (cMem, eMem) = Snapshot.pairGraphClosure(seeds, Snapshot.InMemoryPostings(resolved), 25)
       // the loops' chunk function: the shingle-bucketed chain's live rows
       // in the requested buckets, resolved through the epoch's aggregate
       val byShChain = Chain("by_shingle", resolved.schema, bucketBy = Some("s"))
       val byShStore = new ChainStore(dir, "doc_id", Seq(byShChain))
       val chunk: Seq[Int] => org.apache.spark.sql.DataFrame =
         b => byShStore.live(spark, byShChain, 1L, tombAgg, Some(b))
-      val stored = new Events.StoredPostingsProbe(docsFor, chunk)
-      val (cSt, eSt) = Snapshot.pairGraphClosure(seeds, stored, 25)
-      val memSet = cMem.collect().map(_.getLong(0)).toSet
-      val stSet = cSt.collect().map(_.getLong(0)).toSet
-      // the component: 7 → its near-dup mates 1 and 2 — 2 ONLY because
-      // the tombstone retired its stale epoch-0 postings
-      assert(memSet == Set(1L, 2L, 7L), s"in-memory closure wrong: $memSet")
-      assert(stSet == memSet, s"stored probe diverged: $stSet vs $memSet")
-      val memEdges = eMem.flatMap(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
-      val stEdges = eSt.flatMap(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(stEdges == memEdges, s"edge sets diverged: $stEdges vs $memEdges")
-      ((cMem +: eMem) ++ (cSt +: eSt)).foreach(graft.operators.Corpus.releaseCheckpoint)
-      stored.release()
+      Scope.around { scope =>
+        val (cMem, eMem) =
+          Snapshot.pairGraphClosure(seeds, Snapshot.InMemoryPostings(resolved), 25, scope)
+        val stored = new Events.StoredPostingsProbe(docsFor, chunk, scope)
+        val (cSt, eSt) = Snapshot.pairGraphClosure(seeds, stored, 25, scope)
+        val memSet = cMem.collect().map(_.getLong(0)).toSet
+        val stSet = cSt.collect().map(_.getLong(0)).toSet
+        // the component: 7 → its near-dup mates 1 and 2 — 2 ONLY because
+        // the tombstone retired its stale epoch-0 postings
+        assert(memSet == Set(1L, 2L, 7L), s"in-memory closure wrong: $memSet")
+        assert(stSet == memSet, s"stored probe diverged: $stSet vs $memSet")
+        val memEdges = eMem.flatMap(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
+        val stEdges = eSt.flatMap(_.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(stEdges == memEdges, s"edge sets diverged: $stEdges vs $memEdges")
+      }
       // (B) poison every bucket a {7}-frontier probe does not need; the
       // pruned reads must succeed, an unpruned control read must not
       val needDoc = Seq(7L).toDF("doc_id")
@@ -1736,12 +1730,12 @@ class StreamingSpec extends AnyFunSuite {
           .foreach(d => java.nio.file.Files.write(
             d.toPath.resolve("part-poison.parquet"), "NOT PARQUET".getBytes))
       poison(corpus, needDoc); poison(bySh, needSh)
-      val probe2 = new Events.StoredPostingsProbe(docsFor, chunk)
-      val fp = probe2.forDocs(Seq(7L).toDF("doc_id")).persist()
-      assert(fp.select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSeq == Seq(7L))
-      assert(probe2.forShinglesOf(fp).collect().nonEmpty) // reads only needed buckets
-      fp.unpersist(blocking = false)
-      probe2.release()
+      Scope.around { scope =>
+        val probe2 = new Events.StoredPostingsProbe(docsFor, chunk, scope)
+        val fp = scope.persist(probe2.forDocs(Seq(7L).toDF("doc_id")))
+        assert(fp.select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSeq == Seq(7L))
+        assert(probe2.forShinglesOf(fp).collect().nonEmpty) // reads only needed buckets
+      }
       intercept[Throwable] {
         spark.read.schema(docsSchema).parquet(corpus).collect()
       }
