@@ -5,11 +5,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** The owner of every frame main code materializes: the one place a
-  * frame is eagerly checkpointed ([[checkpoint]], `localCheckpoint(true)`)
-  * or released. A frame is registered where it is made — [[persist]],
-  * [[checkpoint]] — and released by the scope, in reverse order, when
-  * the scope ends: a persisted frame with `unpersist(blocking = false)`,
+/** The owner of every frame main code releases: the one place a frame
+  * is eagerly checkpointed ([[checkpoint]], `localCheckpoint(true)`) or
+  * released. (A lazy `.persist()` a one-shot query's result reads and
+  * nothing releases stays outside, left to the ContextCleaner.) A
+  * frame is registered where it is made — [[persist]], [[checkpoint]] —
+  * and released by the scope, in reverse order, when the scope ends: a
+  * persisted frame with `unpersist(blocking = false)`,
   * a checkpoint by unpersisting its RDD. `Dataset.unpersist` cannot
   * release a checkpoint (its blocks are RDD-level cache, not a
   * CacheManager entry), and the ContextCleaner reclaims one only on a
@@ -63,7 +65,7 @@ final class Scope private (private val parent: Option[Scope], private val tracks
   /** `df.localCheckpoint(true)`, released with the scope. */
   def checkpoint(df: DataFrame): DataFrame = {
     val c = df.localCheckpoint(true)
-    hold(c, () => Scope.drop(c))
+    hold(c, () => Scope.unpersistCheckpoint(c))
   }
 
   /** Mark a frame this scope holds as read by the lazy result of the
@@ -73,12 +75,13 @@ final class Scope private (private val parent: Option[Scope], private val tracks
     df
   }
 
-  /** Drop `df` now. A frame this scope holds leaves it, so it is
-    * released once; any other frame is released by its plan (a
-    * checkpoint's RDD, else the cache entry). */
-  def release(df: DataFrame): Unit = frames.find(_.of eq df) match {
-    case Some(f) => frames = frames.filterNot(_ eq f); f.drop()
-    case None => Scope.drop(df)
+  /** Drop `df`, a frame this scope holds, now: it leaves the scope, so
+    * it is released once. */
+  def release(df: DataFrame): Unit = {
+    val f = frames.find(_.of eq df)
+    require(f.isDefined, "Scope.release: the frame is not held by this scope")
+    frames = frames.filterNot(_ eq f.get)
+    f.get.drop()
   }
 
   /** Run `body` in a child scope (see the class doc). */
@@ -115,8 +118,7 @@ object Scope {
     out
   }
 
-  private def drop(df: DataFrame): Unit = df.queryExecution.logical match {
+  private def unpersistCheckpoint(c: DataFrame): Unit = c.queryExecution.logical match {
     case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-    case _ => df.unpersist(blocking = false)
   }
 }

@@ -777,8 +777,7 @@ object Snapshot {
     // and recomputing the manifest diff per arm would scan both
     // snapshots twice (production passes a STORED delta here anyway);
     // the checkpointed |delta|-sized leaf is what AQE then broadcasts
-    Scope.session.around(scope =>
-      applyDelta(oldSnapshot(docs), scope.keep(scope.checkpoint(snapshotDiff(docs))), docs))
+    applyDelta(oldSnapshot(docs), Scope.session.checkpoint(snapshotDiff(docs)), docs)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

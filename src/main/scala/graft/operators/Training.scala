@@ -412,7 +412,7 @@ object Training {
     * pipeline subtracts (or audits) before training.
     */
   def decontamSemantic(spark: SparkSession, d: String,
-                       threshold: Double = 0.4): DataFrame = Scope.session.around { scope =>
+                       threshold: Double = 0.4): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val emb = Tables.embeddings(spark, d)
       .select(col("vec_id").as("doc_id"),
@@ -425,8 +425,8 @@ object Training {
     // the probe-side tasks (embeddingPairs' note)
     val train = Tables.spread(withSplit.filter(col("split") === "train"))
       .select(col("doc_id"), col("v"))
-    val test = scope.keep(scope.checkpoint(withSplit.filter(col("split") === "test")
-      .select(col("doc_id").as("test_id"), col("v").as("vt"))))
+    val test = Scope.session.checkpoint(withSplit.filter(col("split") === "test")
+      .select(col("doc_id").as("test_id"), col("v").as("vt")))
     train.crossJoin(broadcast(test))
       .select(col("doc_id"),
         round(graft.functions.CosineSim.cosineSim(col("v"), col("vt")), 6).as("cos_sim"))
@@ -461,23 +461,22 @@ object Training {
     * family applies at 100 TB if boilerplate shingles get hot; off here
     * because the exact oracle needs the uncapped join.
     */
-  def decontamFuzzy(docs: DataFrame, threshold: Double = 0.8, n: Int = 5): DataFrame =
-    Scope.session.around { scope =>
-      val tr = splitShingled(docs, n).filter(col("split") === "train")
-        .select(col("doc_id"), size(col("shingles")).as("n1"), explode(col("shingles")).as("s"))
-      val te = scope.keep(scope.checkpoint(splitShingled(docs, n).filter(col("split") === "test")
-        .select(col("doc_id").as("test_id"), size(col("shingles")).as("n2"),
-          explode(col("shingles")).as("s"))))
-      val jac = col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))
-      tr.join(broadcast(te), "s")
-        .groupBy(col("doc_id"), col("test_id"))
-        .agg(count(lit(1)).as("inter"), first(col("n1")).as("n1"), first(col("n2")).as("n2"))
-        .filter(jac >= threshold)
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_near_dup_test_docs"),
-          max(round(jac, 6)).as("max_jaccard"))
-        .orderBy(col("doc_id"))
-    }
+  def decontamFuzzy(docs: DataFrame, threshold: Double = 0.8, n: Int = 5): DataFrame = {
+    val tr = splitShingled(docs, n).filter(col("split") === "train")
+      .select(col("doc_id"), size(col("shingles")).as("n1"), explode(col("shingles")).as("s"))
+    val te = Scope.session.checkpoint(splitShingled(docs, n).filter(col("split") === "test")
+      .select(col("doc_id").as("test_id"), size(col("shingles")).as("n2"),
+        explode(col("shingles")).as("s")))
+    val jac = col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))
+    tr.join(broadcast(te), "s")
+      .groupBy(col("doc_id"), col("test_id"))
+      .agg(count(lit(1)).as("inter"), first(col("n1")).as("n1"), first(col("n2")).as("n2"))
+      .filter(jac >= threshold)
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_near_dup_test_docs"),
+        max(round(jac, 6)).as("max_jaccard"))
+      .orderBy(col("doc_id"))
+  }
 
   // --------------------------------------------------------------- tf-idf
 

@@ -323,12 +323,14 @@ class ChainStoreSpec extends AnyFunSuite {
     assert(held() == before, s"the parent's end left ${held() -- before} persisted")
 
     // release drops a frame once: the frame is pinned again by hand after
-    // the release, and the scope's end must not release it a second time
+    // the release, and the scope's end must not release it a second time;
+    // a frame the scope does not hold is refused
     val released = Scope.around { scope =>
       val f = scope.persist(frame(29))
       f.count()
       scope.release(f)
       assert(held() == before, s"release left ${held() -- before} persisted")
+      intercept[IllegalArgumentException](scope.release(frame(31)))
       f.persist().count()
       f
     }
@@ -341,7 +343,9 @@ class ChainStoreSpec extends AnyFunSuite {
     val pinned = Scope.session.around(child(_, fail = false))
     assert((held() -- before).size == 1,
       s"Scope.session.around should pin exactly its kept frame, held ${held() -- before}")
-    Scope.session.release(pinned)
+    pinned.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = true)
+    }
     assert(held() == before, s"releasing the kept frame left ${held() -- before} persisted")
   }
 }

@@ -215,10 +215,12 @@ class SnapshotSpec extends AnyFunSuite {
 
   test("checkpointed delta form pins no blocks once its result is released") {
     // The lifecycle contract a continuously-running loop depends on:
-    // after consuming incrementalLedgerDeltaCheckpointed's result and
-    // ending the scope it was registered in, the persistent-RDD registry
-    // holds NOTHING the call created — no closure, CC label,
-    // manifest-diff or result blocks.
+    // after consuming and releasing incrementalLedgerDeltaCheckpointed's
+    // result — while the scope it was registered in is still open — the
+    // persistent-RDD registry holds NOTHING the call created: no
+    // closure, CC label, manifest-diff or result blocks. The call
+    // registers only its result in the caller's scope; an intermediate
+    // held there until the scope's end would show up here.
     // (The baseline is taken AFTER the prior ledger is built: batch
     // one-shot entry points like Corpus.ledger legitimately leave their
     // label checkpoint to session exit.)
@@ -241,15 +243,16 @@ class SnapshotSpec extends AnyFunSuite {
           _ => Snapshot.InMemoryPostings(idx), ids => docs.join(ids, Seq("doc_id"), "left_semi"),
           25, scope)
         assert(delta.count() > 0)
+        scope.release(delta)
+        // the release unpersists asynchronously — poll briefly
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        def leaked() = (spark.sparkContext.getPersistentRDDs.keySet -- before)
+          .filter(spark.sparkContext.getPersistentRDDs.contains)
+        while (leaked().nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+        assert(leaked().isEmpty, s"call left pinned RDDs: ${leaked().map(id =>
+          id -> spark.sparkContext.getPersistentRDDs(id).toDebugString
+            .linesIterator.take(6).mkString(" | "))}")
       }
-      // the scope unpersists asynchronously — poll briefly
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      def leaked() = (spark.sparkContext.getPersistentRDDs.keySet -- before)
-        .filter(spark.sparkContext.getPersistentRDDs.contains)
-      while (leaked().nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-      assert(leaked().isEmpty, s"call left pinned RDDs: ${leaked().map(id =>
-        id -> spark.sparkContext.getPersistentRDDs(id).toDebugString
-          .linesIterator.take(6).mkString(" | "))}")
     }
   }
 
