@@ -19,14 +19,11 @@ object GraftSession {
   /** Cluster-mode builder: same engine config minus the local-only knobs.
     * Master/deploy come from spark-submit; shuffle partitions are left to
     * the cluster default + AQE coalescing (set them per-job when the
-    * fact-table size is known). Call this (or [[registerFunctions]] on an
-    * existing session) before using graft's native functions.
+    * fact-table size is known). graft's native functions need no setup:
+    * they work on this session or any other.
     */
-  def cluster(appName: String = "graft"): SparkSession = {
-    val s = configureCommon(SparkSession.builder().appName(appName)).getOrCreate()
-    registerFunctions(s)
-    s
-  }
+  def cluster(appName: String = "graft"): SparkSession =
+    configureCommon(SparkSession.builder().appName(appName)).getOrCreate()
 
   /** One resolver for every state-store knob (the env var here, the JVM
     * property in the streaming harness) — both accept `rocksdb` or a
@@ -89,33 +86,6 @@ object GraftSession {
     // logs. Quiet that single logger; real errors still surface.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
-    registerFunctions(s)
     s
-  }
-
-  /** Register graft's native Catalyst expressions with a session.
-    * Idempotent AND quiet: re-registering an existing function logs a
-    * "replaced a previously registered function" WARN per function per
-    * call, which at one registration per query turns bench/verify logs
-    * into noise. Presence is checked PER registration (ADVICE r3): a
-    * single marker function would leave the session permanently
-    * half-registered — with no error and no retry — if any registration
-    * after the marker's ever threw once.
-    */
-  def registerFunctions(s: SparkSession): Unit = {
-    import graft.functions._
-    val regs: Seq[(Seq[String], SparkSession => Unit)] = Seq(
-      Seq(CosineSim.Name) -> (CosineSim.register _),
-      Seq(SimHashAgg.Name) -> (SimHashAgg.register _),
-      Seq(TopKAgg.Name) -> (TopKAgg.register _),
-      Seq(RollingHash.Name) -> (RollingHash.register _),
-      Seq(ShingleFunctions.ShingleName, ShingleFunctions.ShingleSeqName,
-        ShingleFunctions.SimHashName, ShingleFunctions.MinHashName) -> (ShingleFunctions.register _),
-      Seq(TokenStats.Name) -> (TokenStats.register _),
-      Seq(WordTokens.Name) -> (WordTokens.register _),
-      Seq(RepetitionStats.Name) -> (RepetitionStats.register _),
-      Seq(LshBuckets.Name) -> (LshBuckets.register _))
-    for ((names, reg) <- regs if !names.forall(s.catalog.functionExists))
-      reg(s)
   }
 }

@@ -10,10 +10,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. Each entry
-    * (re-)registers graft's native functions on the session it's given —
-    * idempotent, so callers that didn't build their session through
-    * [[GraftSession]] still resolve the custom expressions.
+  /** One entry per implemented operator from SURVEY.md §2. Every entry
+    * runs on any session, including one not built through
+    * [[GraftSession]]: graft's native functions need no registration.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     (Relational.queries ++ TextAnalysis.queries ++ Classifier.queries ++ Dedup.queries ++ Corpus.queries ++ Training.queries ++ Similarity.queries ++
@@ -25,9 +24,6 @@ object SparkEntry {
           MapleJuice.grep(Tables.documents(s, d), "spark|dup")),
         "mj_partition_hash" -> ((s, d) =>
           MapleJuice.hashPartitionCheck(s, Tables.lineitem(s, d), "l_orderkey"))))
-      .map { case (name, fn) =>
-        name -> ((s: SparkSession, d: String) => { GraftSession.registerFunctions(s); fn(s, d) })
-      }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops

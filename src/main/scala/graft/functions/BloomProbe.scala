@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Native `bloom_any_contain(array<long>)` — does ANY element of the
@@ -23,13 +24,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * The sketch travels as a `Broadcast[BloomFilter]` captured by the
   * expression — shipped once per executor (not per task), fetched once
   * per expression instance (lazily in both the interpreted and codegen
-  * paths). A Catalyst expression cannot receive driver-built sketch
-  * state through the function registry's (Seq[Expression] => Expression)
-  * builders, so [[BloomProbe.anyContain]] registers a builder CLOSING
-  * OVER the broadcast under a name keyed by the broadcast id —
-  * re-registration for the same sketch is idempotent, and distinct
-  * sketches never collide. One registry entry lives per sketch per
-  * session: the same lifetime as the broadcast itself.
+  * paths). The plan that holds the expression holds the sketch: nothing
+  * else references it.
   */
 case class BloomAnyContain(child: Expression, bloom: Broadcast[BloomFilter])
     extends UnaryExpression {
@@ -84,33 +80,16 @@ case class BloomAnyContain(child: Expression, bloom: Broadcast[BloomFilter])
 
 object BloomProbe {
 
-  /** Column API: `anyContain(shingles, sketch)` — registers a builder
-    * bound to this sketch under a broadcast-id-keyed name and resolves
-    * it through the session's FunctionRegistry (the public path from a
-    * custom Expression to a Column; the direct Column constructors are
-    * all private[sql] in Spark 4).
-    *
-    * The builder closure strongly pins the sketch, so the entry MUST
-    * NOT outlive its use: callers invoke [[release]] as soon as the
-    * consuming DataFrame is built — DataFrame analysis is EAGER, so by
-    * then the call has resolved into a concrete [[BloomAnyContain]]
-    * node and the registry entry is dead weight. Without the release, a
-    * long-lived session invoking the probe repeatedly would accumulate
-    * MB-scale sketches the ContextCleaner can never collect.
+  /** Column API: `anyContain(shingles, sketch)`. The Column carries the
+    * sketch's broadcast inside its [[BloomAnyContain]] node and touches
+    * no session state, so `spark` is unused; it stays in the signature
+    * because graftbench's `Layers` calls it.
     */
-  def anyContain(spark: SparkSession, arr: Column, bloom: Broadcast[BloomFilter]): Column = {
-    val name = s"graft_bloom_any_b${bloom.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BloomAnyContain(exprs.head, bloom), "scala_udf")
-    org.apache.spark.sql.functions.call_function(name, arr)
-  }
+  def anyContain(spark: SparkSession, arr: Column, bloom: Broadcast[BloomFilter]): Column =
+    column(BloomAnyContain(expression(arr), bloom))
 
-  /** Drop the registry entry for `bloom`'s probe. Call after every
-    * DataFrame using [[anyContain]]'s Column has been CONSTRUCTED
-    * (analysis is eager; execution may happen any time later — the
-    * resolved plan holds its own reference to the sketch).
+  /** A no-op: [[anyContain]] leaves nothing in the session to drop. Kept
+    * only because graftbench's `Layers` still calls it.
     */
-  def release(spark: SparkSession, bloom: Broadcast[BloomFilter]): Unit =
-    spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(s"graft_bloom_any_b${bloom.id}"))
+  def release(spark: SparkSession, bloom: Broadcast[BloomFilter]): Unit = ()
 }

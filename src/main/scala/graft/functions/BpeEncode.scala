@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass BPE application state: the learned merge table in rank
@@ -165,10 +166,6 @@ object BpeCodec {
   * `Broadcast[BpeCodec]` (not per task in the serialized plan), the
   * expression stays inside whole-stage codegen, and per-row work is the
   * single-pass priority-merge encode.
-  *
-  * Registry plumbing mirrors [[BloomAnyContain]]: a builder closing
-  * over the broadcast under a broadcast-id-keyed name, released by the
-  * caller once the consuming DataFrame is analyzed.
   */
 case class BpeEncodeExpr(child: Expression, codec: Broadcast[BpeCodec])
     extends UnaryExpression {
@@ -207,22 +204,10 @@ case class BpeEncodeExpr(child: Expression, codec: Broadcast[BpeCodec])
 
 object BpeEncode {
 
-  /** Column API: `tokens(text, codecBc)` — same broadcast-id-keyed
-    * temp-function dance as [[BloomProbe.anyContain]] (the public path
-    * from a custom Expression to a Column in Spark 4). Call [[release]]
-    * once every consuming DataFrame is constructed.
+  /** Column API: `tokens(text, codecBc)`; the Column carries the codec's
+    * broadcast inside its [[BpeEncodeExpr]] node, like
+    * [[BloomProbe.anyContain]].
     */
-  def tokens(spark: SparkSession, text: Column, codec: Broadcast[BpeCodec]): Column = {
-    val name = s"graft_bpe_encode_b${codec.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BpeEncodeExpr(exprs.head, codec), "scala_udf")
-    org.apache.spark.sql.functions.call_function(name, text)
-  }
-
-  /** Drop the registry entry for `codec`'s encoder (analysis is eager;
-    * resolved plans keep their own reference to the broadcast).
-    */
-  def release(spark: SparkSession, codec: Broadcast[BpeCodec]): Unit =
-    spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(s"graft_bpe_encode_b${codec.id}"))
+  def tokens(text: Column, codec: Broadcast[BpeCodec]): Column =
+    column(BpeEncodeExpr(expression(text), codec))
 }

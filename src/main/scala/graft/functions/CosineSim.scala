@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native cosine similarity over two array<double> columns.
@@ -82,17 +83,7 @@ object CosineSim {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  val Name = "graft_cosine_sim"
-
-  /** Expose through the session's FunctionRegistry (the public path from
-    * a custom Expression to the Column API in Spark 4; done once per
-    * session by [[graft.GraftSession]]).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
-
   /** Column API: cosine_sim(a, b) for array<double> columns. */
   def cosineSim(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function(Name, a, b)
+    column(CosineSim(expression(a), expression(b)))
 }

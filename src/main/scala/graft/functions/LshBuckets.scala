@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Random-hyperplane LSH bucket ids for an array<double> vector:
@@ -90,20 +91,6 @@ object LshBuckets {
     new GenericArrayData(out)
   }
 
-  val Name = "graft_lsh_buckets"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => {
-        import org.apache.spark.sql.catalyst.expressions.IntegerLiteral
-        (exprs(1), exprs(2)) match {
-          case (IntegerLiteral(t), IntegerLiteral(b)) => LshBucketsExpr(exprs(0), t, b)
-          case other => throw new IllegalArgumentException(
-            s"$Name tables/bits must be integer literals, got $other")
-        }
-      }, "scala_udf")
-
   def lshBuckets(vec: Column, tables: Int, bits: Int): Column =
-    org.apache.spark.sql.functions.call_function(Name, vec,
-      org.apache.spark.sql.functions.lit(tables), org.apache.spark.sql.functions.lit(bits))
+    column(LshBucketsExpr(expression(vec), tables, bits))
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -72,14 +73,8 @@ object RepetitionStats {
     StructField("n_trigrams", LongType, nullable = false),
     StructField("n_dup_trigrams", LongType, nullable = false)))
 
-  val Name = "graft_repetition_stats"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => RepetitionStatsExpr(exprs.head), "scala_udf")
-
   def repetitionStats(text: Column): Column =
-    org.apache.spark.sql.functions.call_function(Name, text)
+    column(RepetitionStatsExpr(expression(text)))
 }
 
 case class RepetitionStatsExpr(child: Expression) extends UnaryExpression {

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -53,12 +54,5 @@ object RollingHash {
     acc
   }
 
-  val Name = "graft_rolling_hash"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => RollingHashExpr(exprs.head), "scala_udf")
-
-  def rollingHash(c: Column): Column =
-    org.apache.spark.sql.functions.call_function(Name, c)
+  def rollingHash(c: Column): Column = column(RollingHashExpr(expression(c)))
 }

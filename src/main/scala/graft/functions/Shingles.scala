@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -252,48 +253,17 @@ case class SimHashExpr(child: Expression) extends UnaryExpression {
 }
 
 object ShingleFunctions {
-  import org.apache.spark.sql.catalyst.expressions.IntegerLiteral
 
   val ShingleName = "graft_shingle_hashes"
-  val ShingleSeqName = "graft_shingle_hash_seq"
-  val SimHashName = "graft_simhash"
-  val MinHashName = "graft_minhash_sig"
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ShingleName, exprs => exprs(1) match {
-        case IntegerLiteral(n) => ShingleHashesExpr(exprs(0), n)
-        case other => throw new IllegalArgumentException(
-          s"$ShingleName n must be an integer literal, got $other")
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ShingleSeqName, exprs => exprs(1) match {
-        case IntegerLiteral(n) => ShingleHashSeqExpr(exprs(0), n)
-        case other => throw new IllegalArgumentException(
-          s"$ShingleSeqName n must be an integer literal, got $other")
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SimHashName, exprs => SimHashExpr(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MinHashName, exprs => exprs(1) match {
-        case IntegerLiteral(p) => MinHashSigExpr(exprs(0), p)
-        case other => throw new IllegalArgumentException(
-          s"$MinHashName numPerms must be an integer literal, got $other")
-      }, "scala_udf")
-  }
 
   def shingleHashes(text: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function(
-      ShingleName, text, org.apache.spark.sql.functions.lit(n))
+    column(ShingleHashesExpr(expression(text), n))
 
   def shingleHashSeq(text: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function(
-      ShingleSeqName, text, org.apache.spark.sql.functions.lit(n))
+    column(ShingleHashSeqExpr(expression(text), n))
 
-  def simhash(text: Column): Column =
-    org.apache.spark.sql.functions.call_function(SimHashName, text)
+  def simhash(text: Column): Column = column(SimHashExpr(expression(text)))
 
   def minhashSig(shingles: Column, numPerms: Int): Column =
-    org.apache.spark.sql.functions.call_function(
-      MinHashName, shingles, org.apache.spark.sql.functions.lit(numPerms))
+    column(MinHashSigExpr(expression(shingles), numPerms))
 }

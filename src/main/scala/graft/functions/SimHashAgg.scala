@@ -2,10 +2,11 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** 64-bit SimHash as a native typed aggregate: input is a 64-bit token
@@ -79,13 +80,7 @@ case class SimHashAgg(
 }
 
 object SimHashAgg {
-  val Name = "graft_simhash_agg"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => SimHashAgg(exprs.head).toAggregateExpression(), "scala_udf")
-
   /** Aggregate Column: simhash of the group's 64-bit token hashes. */
   def simhashAgg(tokenHash: Column): Column =
-    org.apache.spark.sql.functions.call_function(Name, tokenHash)
+    column(SimHashAgg(expression(tokenHash)).toAggregateExpression())
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -53,14 +54,7 @@ object TokenStats {
     StructField("de_hits", LongType, nullable = false),
     StructField("fr_hits", LongType, nullable = false)))
 
-  val Name = "graft_token_stats"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => TokenStatsExpr(exprs.head), "scala_udf")
-
-  def tokenStats(text: Column): Column =
-    org.apache.spark.sql.functions.call_function(Name, text)
+  def tokenStats(text: Column): Column = column(TokenStatsExpr(expression(text)))
 }
 
 case class TokenStatsExpr(child: Expression) extends UnaryExpression {

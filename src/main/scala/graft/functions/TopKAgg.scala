@@ -2,11 +2,12 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Bounded top-k aggregate over (score double, id long) pairs, ordered by
@@ -121,22 +122,7 @@ object TopKAgg {
     }
   }
 
-  val Name = "graft_topk_agg"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => {
-        val k = exprs(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, IntegerType) =>
-            v.asInstanceOf[Int]
-          case other => throw new IllegalArgumentException(
-            s"$Name k must be an integer literal, got $other")
-        }
-        TopKAgg(exprs(0), exprs(1), k).toAggregateExpression()
-      }, "scala_udf")
-
   /** Aggregate Column: top-k (score, id) entries of the group, ranked. */
   def topKAgg(score: Column, id: Column, k: Int): Column =
-    org.apache.spark.sql.functions.call_function(
-      Name, score, id, org.apache.spark.sql.functions.lit(k))
+    column(TopKAgg(expression(score), expression(id), k).toAggregateExpression())
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.NativeColumn.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -81,12 +82,7 @@ object WordTokens {
 
   val Name = "graft_wc_tokens"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => WordTokensExpr(exprs.head), "scala_udf")
-
-  def wordTokens(text: Column): Column =
-    org.apache.spark.sql.functions.call_function(Name, text)
+  def wordTokens(text: Column): Column = column(WordTokensExpr(expression(text)))
 }
 
 /** array<string> of a string's wc_maple-sanitized words; null for null. */

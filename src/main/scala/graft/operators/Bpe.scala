@@ -234,16 +234,10 @@ object Bpe {
     * three-way spec witness.
     */
   def tokenize(docs: DataFrame, merges: Seq[Merge]): DataFrame = {
-    val spark = docs.sparkSession
-    val bc = spark.sparkContext.broadcast(graft.functions.BpeCodec(merges))
-    val out = Tables.spread(docs)
-      .select(col("doc_id"),
-        graft.functions.BpeEncode.tokens(spark, col("text"), bc).as("tokens"))
+    val bc = docs.sparkSession.sparkContext.broadcast(graft.functions.BpeCodec(merges))
+    Tables.spread(docs)
+      .select(col("doc_id"), graft.functions.BpeEncode.tokens(col("text"), bc).as("tokens"))
       .withColumn("n_bpe_tokens", size(col("tokens")).cast("long"))
-    // analysis is eager: the call has resolved into a concrete
-    // BpeEncodeExpr node; drop the registry entry (BloomProbe pattern)
-    graft.functions.BpeEncode.release(spark, bc)
-    out
   }
 
   /** The superseded replace-chain tokenize (spec witness only): every

@@ -88,17 +88,16 @@ object Corpus {
 
   /** Corpus vocabulary: term frequency + document frequency per token
     * (wc_maple sanitize semantics — /root/reference/mje/src/wc_maple.cpp:10-21
-    * — strip non-alnum, split on whitespace), top-k by frequency.
+    * — strip non-alnum, split on whitespace, in one native byte pass:
+    * [[graft.functions.WordTokens]]), top-k by frequency.
     * One explode feeding ONE shuffle: count and distinct-doc count come
     * from the same (word, doc_id) pre-aggregation, and the final top-k is
     * TakeOrderedAndProject, so no global sort of the vocabulary ever runs.
     */
   def vocabTopK(docs: DataFrame, k: Int = 1000): DataFrame = {
-    val words = Tables.spread(docs) // regex+explode kernel: fan out a 1-split corpus
+    val words = Tables.spread(docs) // tokenize+explode kernel: fan out a 1-split corpus
       .select(col("doc_id"),
-        explode(filter(
-          split(regexp_replace(col("text"), "[^0-9a-zA-Z\\s]", ""), "\\s+"),
-          w => w =!= lit(""))).as("word"))
+        explode(graft.functions.WordTokens.wordTokens(col("text"))).as("word"))
     words
       .groupBy(col("word"), col("doc_id")).agg(count(lit(1)).as("n")) // map-side combinable
       .groupBy(col("word")).agg(sum(col("n")).as("cnt"), count(lit(1)).as("doc_freq"))

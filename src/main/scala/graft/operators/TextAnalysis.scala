@@ -123,7 +123,8 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
 
   /** Conjunctive keyword search: docs containing ALL query terms
-    * (wc_maple sanitize term space, same as `vocab_topk`). Formulated as
+    * (wc_maple sanitize term space via [[graft.functions.WordTokens]],
+    * same as `vocab_topk`). Formulated as
     * a posting-list intersection — explode to (doc, term) postings, keep
     * only the query terms, group by doc requiring |terms| distinct hits.
     * At 100 TB the postings relation is what a search deployment
@@ -135,9 +136,7 @@ object TextAnalysis {
   def search(docs: DataFrame, terms: Seq[String] = Seq("the", "data")): DataFrame =
     Tables.spread(docs)
       .select(col("doc_id"),
-        explode(filter(
-          split(regexp_replace(col("text"), "[^0-9a-zA-Z\\s]", ""), "\\s+"),
-          w => w =!= lit(""))).as("word"))
+        explode(graft.functions.WordTokens.wordTokens(col("text"))).as("word"))
       .filter(col("word").isin(terms: _*))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("word")).as("n_matched"))

@@ -374,21 +374,14 @@ object Training {
       if (nTest == 0) docs.select(col("doc_id"), lit(0L).as("n_shared_shingles")).limit(0)
       else {
         val bfB = spark.sparkContext.broadcast(testShingles.stat.bloomFilter("s", nTest, fpp))
-        // finally-release: once the frame is constructed (analysis is
-        // eager) the probe call is resolved into the plan and the registry
-        // entry — which strongly pins the sketch — must go, INCLUDING when
-        // analysis itself throws (a leaked entry would outlive the failed
-        // query)
-        try {
-          ss.filter(col("split") === "train")
-            // map-only corpus gate, native + codegen'd
-            .filter(graft.functions.BloomProbe.anyContain(spark, col("shingles"), bfB))
-            .select(col("doc_id"), explode(col("shingles")).as("s"))
-            .join(broadcast(scope.keep(testShingles)), "s") // exact confirm: FPs drop here
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_shared_shingles"))
-            .orderBy(col("doc_id"))
-        } finally graft.functions.BloomProbe.release(spark, bfB)
+        ss.filter(col("split") === "train")
+          // map-only corpus gate, native + codegen'd
+          .filter(graft.functions.BloomProbe.anyContain(spark, col("shingles"), bfB))
+          .select(col("doc_id"), explode(col("shingles")).as("s"))
+          .join(broadcast(scope.keep(testShingles)), "s") // exact confirm: FPs drop here
+          .groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("n_shared_shingles"))
+          .orderBy(col("doc_id"))
       }
     }
 
@@ -481,8 +474,9 @@ object Training {
   // --------------------------------------------------------------- tf-idf
 
   /** Per-doc top-`k` terms by TF-IDF (wc_maple sanitize semantics —
-    * /root/reference/mje/src/wc_maple.cpp:10-21 — so the term space
-    * matches `vocab_topk`): score = tf · ln(N/df), ROUNDED to 6dp BEFORE
+    * /root/reference/mje/src/wc_maple.cpp:10-21, via
+    * [[graft.functions.WordTokens]] — so the term space matches
+    * `vocab_topk`): score = tf · ln(N/df), ROUNDED to 6dp BEFORE
     * ranking so Spark and the oracle rank identical values identically
     * (ties broken by word). Two hash-aggs (doc,word) → (word), one join
     * back on `word` — the key the agg already shuffled on — N broadcast
@@ -490,11 +484,9 @@ object Training {
     * every stage is full-width, nothing global.
     */
   def tfidfTopTerms(docs: DataFrame, k: Int = 3): DataFrame = {
-    val words = Tables.spread(docs) // regex+explode kernel: fan out a 1-split corpus
+    val words = Tables.spread(docs) // tokenize+explode kernel: fan out a 1-split corpus
       .select(col("doc_id"),
-        explode(filter(
-          split(regexp_replace(col("text"), "[^0-9a-zA-Z\\s]", ""), "\\s+"),
-          w => w =!= lit(""))).as("word"))
+        explode(graft.functions.WordTokens.wordTokens(col("text"))).as("word"))
     val tf = words.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
     val docFreq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))

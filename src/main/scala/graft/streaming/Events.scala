@@ -76,27 +76,19 @@ object Events {
     * so a concurrent batch query on the caller's session can never be
     * planned with the temporary value (ADVICE r2 — the old save/restore
     * of the session-global conf raced with other users of the session).
-    *
-    * A child session has its OWN temp-function registry, so graft's
-    * native functions are registered here, once, on whichever session
-    * is returned. Every foreachBatch micro-batch session is a
-    * `cloneSession()` of the streaming query's session and inherits its
-    * registry, so the loops never re-register per batch (StreamingSpec
-    * pins the inheritance).
+    * graft's native functions need nothing from the child: their Columns
+    * carry their own expressions (StreamingSpec runs one in a
+    * foreachBatch micro-batch).
     */
   private def sessionFor(spark: SparkSession, n: Option[Int],
-                         extraConf: Map[String, String] = Map.empty): SparkSession = {
-    val ss =
-      if (n.isEmpty && extraConf.isEmpty) spark
-      else {
-        val child = spark.newSession()
-        n.foreach(p => child.conf.set("spark.sql.shuffle.partitions", p.toString))
-        extraConf.foreach { case (k, v) => child.conf.set(k, v) }
-        child
-      }
-    graft.GraftSession.registerFunctions(ss)
-    ss
-  }
+                         extraConf: Map[String, String] = Map.empty): SparkSession =
+    if (n.isEmpty && extraConf.isEmpty) spark
+    else {
+      val child = spark.newSession()
+      n.foreach(p => child.conf.set("spark.sql.shuffle.partitions", p.toString))
+      extraConf.foreach { case (k, v) => child.conf.set(k, v) }
+      child
+    }
 
   /** The state-store partition count every stateful query pins (see
     * [[sessionFor]]). */
@@ -993,11 +985,7 @@ object Events {
     * split only (content-hash, stateless), word-5-gram shingles, Bloom
     * SUSPECT probe (native, codegen'd), exact dedup keyed on md5(text)
     * carrying `max(suspect)` — one flag of extra state per distinct
-    * text. Finally-release of the probe registration (the decontamBloom
-    * discipline): once the frame is constructed the resolved plan keeps
-    * its own sketch reference — and if analysis THROWS, the registry
-    * entry must still go, or it pins the broadcast for the session's
-    * lifetime.
+    * text.
     */
   private def decontamGate(docs: DataFrame,
       bfB: Option[org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]]): DataFrame = {
@@ -1009,13 +997,11 @@ object Events {
         graft.functions.ShingleFunctions.shingleHashes(col("text"), 5))
     val suspect = bfB.fold(lit(false))(b =>
       graft.functions.BloomProbe.anyContain(ss, col("shingles"), b))
-    try
-      withSh
-        .withColumn("suspect", suspect.cast("int"))
-        .groupBy(md5(col("text").cast("binary")).as("text_hash"))
-        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_arrivals"),
-          max(col("suspect")).as("suspect"))
-    finally bfB.foreach(b => graft.functions.BloomProbe.release(ss, b))
+    withSh
+      .withColumn("suspect", suspect.cast("int"))
+      .groupBy(md5(col("text").cast("binary")).as("text_hash"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_arrivals"),
+        max(col("suspect")).as("suspect"))
   }
 
   /** Exact confirm, batch-side, SUSPECT-sized — shared by both decontam
@@ -1023,8 +1009,7 @@ object Events {
     * kernel must not run over the whole corpus here: each side shingles
     * only the docs it needs (suspects after a cheap md5 gate; test docs
     * after the split filter), so the confirm cost follows the
-    * contamination rate, not the corpus. `df` belongs to a session
-    * [[sessionFor]] returned, whose registry the kernel resolves in.
+    * contamination rate, not the corpus.
     */
   private def confirmSuspects(df: DataFrame, docsPath: String): DataFrame = {
     import graft.operators.Corpus
@@ -1070,8 +1055,7 @@ object Events {
       decontamGate(stream, testBloom(stream.sparkSession, docsPath, runScope))
     } { (store, chain, ss) =>
       // consumer view: LWW per key across the delta chain, then the
-      // exact confirm drops Bloom false positives — on the loop's
-      // session, whose registry the confirm's shingle kernel resolves in
+      // exact confirm drops Bloom false positives
       confirmSuspects(store.resolved(ss, chain), docsPath)
     }
   }

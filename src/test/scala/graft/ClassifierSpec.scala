@@ -9,7 +9,6 @@ class ClassifierSpec extends AnyFunSuite {
 
   test("featurizer: hashed indices in range and distinct, label counts real occurrences") {
     import spark.implicits._
-    GraftSession.registerFunctions(spark)
     val docs = Seq(
       (1L, Option("spark join spark")),          // two occurrences → positive
       (2L, Option("spark only once here")),      // one occurrence → negative
@@ -34,7 +33,6 @@ class ClassifierSpec extends AnyFunSuite {
   }
 
   test("trained model clears both accuracy floors; an untrained model fails them") {
-    GraftSession.registerFunctions(spark)
     val feats = Classifier.featurized(Tables.documents(spark, TestSpark.sf)).persist()
     try {
       val model = Classifier.fit(feats)
@@ -75,7 +73,6 @@ class ClassifierSpec extends AnyFunSuite {
   }
 
   test("scoring is a broadcast-model map: no exchange in the plan") {
-    GraftSession.registerFunctions(spark)
     val feats = Classifier.featurized(Tables.documents(spark, TestSpark.sf))
     val zero = Classifier.LrModel(new Array[Double](Classifier.Dim + 1), Classifier.Dim, 0L)
     val plan = Classifier.score(feats, zero).queryExecution.executedPlan.toString

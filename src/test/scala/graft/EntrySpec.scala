@@ -276,4 +276,29 @@ class EntrySpec extends AnyFunSuite {
     }
     assert(outside.isEmpty, s"frames materialized or released outside graft.Scope: ${outside.mkString(", ")}")
   }
+
+  test("main code resolves no function by name and only NativeColumn reaches Spark's classic API") {
+    // every graft Column is built straight from its Catalyst expression
+    // through org.apache.spark.sql.graft.NativeColumn, so no code line
+    // registers, calls or drops a function by name, and no other file
+    // names org.apache.spark.sql.classic. Code only.
+    val shim = "org/apache/spark/sql/graft/NativeColumn.scala"
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
+      finally walk.close()
+    val byName = files.flatMap { f =>
+      val src = code(f)
+      sites(f, src, 0, src.length, Seq("registerFunctions", "call_function",
+        "createOrReplaceTempFunction", "dropFunction", "functionRegistry"))
+    }
+    val classic = files.filterNot(_.endsWith(shim)).flatMap { f =>
+      val src = code(f)
+      sites(f, src, 0, src.length, Seq("org.apache.spark.sql.classic"))
+    }
+    assert(files.exists(_.endsWith(shim)) && byName.isEmpty && classic.isEmpty,
+      s"shim ${if (files.exists(_.endsWith(shim))) "found" else "missing"}; " +
+        s"functions resolved by name: ${byName.mkString(", ")}; " +
+        s"classic API outside the shim: ${classic.mkString(", ")}")
+  }
 }

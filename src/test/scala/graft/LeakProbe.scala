@@ -15,7 +15,6 @@ object LeakProbe {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.registerFunctions(spark)
     val sf = "/root/testdata/sf0.001"
     def leakReport(tag: String)(run: => Unit): Unit = {
       val sc = spark.sparkContext

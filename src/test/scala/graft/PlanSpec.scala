@@ -72,7 +72,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("tfidf top-k ranks via WindowGroupLimit, never a global sort of the term space") {
-    GraftSession.registerFunctions(spark)
     val plan = planOf("tfidf_topterms")
     // rank-limit pushdown: per-doc partial top-k before the exchange
     assert(plan.contains("WindowGroupLimit"), s"no rank-limit pushdown:\n$plan")
@@ -81,7 +80,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("pack_sequences: the only unpartitioned window runs over the offsets relation") {
-    GraftSession.registerFunctions(spark)
     val df = graft.operators.Training.packSequences(
       Tables.documents(spark, TestSpark.sf))
     val plan = df.queryExecution.executedPlan.toString
@@ -370,7 +368,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("no batch query plans an undocumented cross product") {
-    GraftSession.registerFunctions(spark)
     // documented broadcast-cross cases: the capped exact-verify kernel
     // (dedup_embedding), the brute ANN baseline's broadcast query set,
     // and 1-row scalar broadcasts (tfidf's N, mj_partition_hash's

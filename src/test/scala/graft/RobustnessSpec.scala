@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pin that chain end-to-end per operator family.
   */
 class RobustnessSpec extends AnyFunSuite {
-  private lazy val spark = { val s = TestSpark.spark; GraftSession.registerFunctions(s); s }
+  private lazy val spark = TestSpark.spark
 
   private def docsWithNull = {
     import spark.implicits._

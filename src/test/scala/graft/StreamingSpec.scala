@@ -1537,36 +1537,41 @@ class StreamingSpec extends AnyFunSuite {
       s"second delta not incremental: ${emitted(1L)} of ${fromFiles.size} keys")
   }
 
-  test("a foreachBatch session inherits every function registered once on its stream's session") {
-    // the loops register graft's native functions once, on the session
-    // sessionFor returns, never per micro-batch: each batch runs on a
-    // clone of the stream's session, and the clone copies its registry
+  test("a foreachBatch micro-batch runs graft columns with nothing registered") {
+    // the loops' micro-batches run on a clone of the stream's session, and
+    // neither session holds a graft function: each graft Column carries
+    // its own expression
     val ss = spark.newSession()
-    def names = ss.catalog.listFunctions().collect().map(_.name).toSet
-    val before = names
-    GraftSession.registerFunctions(ss)
-    val registered = names -- before
-    assert(Set(graft.functions.WordTokens.Name, graft.functions.ShingleFunctions.MinHashName)
-      .subsetOf(registered), s"registered: $registered")
-    val dir = java.nio.file.Files.createTempDirectory("graft_fn_inherit")
+    def graftFns(s: org.apache.spark.sql.SparkSession) =
+      s.catalog.listFunctions().collect().map(_.name).filter(_.startsWith("graft_")).toSet
+    assert(graftFns(ss).isEmpty)
+    val dir = java.nio.file.Files.createTempDirectory("graft_fn_batch")
     try {
       val in = dir.resolve("in").toString
-      ss.range(3).write.parquet(in)
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Set[String])]()
-      val q = ss.readStream.schema("id LONG").parquet(in).writeStream
+      ss.range(3).selectExpr("concat('a b ', id) AS text").write.parquet(in)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Set[String], Seq[String])]()
+      val q = ss.readStream.schema("text STRING").parquet(in).writeStream
         .option("checkpointLocation", dir.resolve("ckpt").toString)
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           val bss = batch.sparkSession
-          seen.add((bss ne ss, registered.filterNot(bss.catalog.functionExists)))
+          val words = batch
+            .select(explode(graft.functions.WordTokens.wordTokens(col("text"))).as("w"))
+            .filter(size(graft.functions.ShingleFunctions.minhashSig(
+              graft.functions.ShingleFunctions.shingleHashes(col("w"), 1), 4)) === 4)
+            .collect().map(_.getString(0)).toSeq
+          seen.add((bss ne ss, graftFns(bss), words))
           ()
         }
         .start()
       try q.processAllAvailable() finally q.stop()
       assert(!seen.isEmpty, "no micro-batch ran")
-      seen.forEach { case (cloned, missing) =>
+      seen.forEach { case (cloned, fns, _) =>
         assert(cloned, "the batch ran on the stream's own session, not a clone")
-        assert(missing.isEmpty, s"batch session lacks $missing")
+        assert(fns.isEmpty, s"batch session holds $fns")
       }
+      import scala.jdk.CollectionConverters._
+      assert(seen.asScala.toSeq.flatMap(_._3).sorted ==
+        Seq("0", "1", "2", "a", "a", "a", "b", "b", "b"))
     } finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())

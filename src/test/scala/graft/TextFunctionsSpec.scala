@@ -76,13 +76,13 @@ class TextFunctionsSpec extends AnyFunSuite {
       (3L, Some(Seq.empty[Long])),  // empty array → false
       (4L, None)                    // null array → null → row dropped by filter
     ).toDF("id", "arr")
-    // the release contract: the registry entry goes as soon as the
-    // consuming frame is BUILT (analysis is eager); execution afterwards
-    // must still work off the resolved plan
+    // the probe Column carries its sketch in its own expression: building
+    // the gated frame leaves the session's function catalog unchanged
+    def functions = spark.catalog.listFunctions().collect().map(_.name).toSet
+    val before = functions
     val gatedDf = df.filter(graft.functions.BloomProbe.anyContain(spark, col("arr"), bfB))
       .select(col("id"))
-    graft.functions.BloomProbe.release(spark, bfB)
-    assert(!spark.catalog.functionExists(s"graft_bloom_any_b${bfB.id}"))
+    assert(functions == before)
     val gated = gatedDf.collect().map(_.getLong(0)).toSet
     assert(gated == Set(1L))
     // interpreted path (no codegen): same verdicts
@@ -95,6 +95,50 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(expr.eval(row(Seq(1L, 2L))) == false)
     assert(expr.eval(row(Seq.empty)) == false)
     assert(expr.eval(org.apache.spark.sql.catalyst.InternalRow(null)) == null)
+  }
+
+  test("every native builder gives the same rows on a bare child session") {
+    import graft.functions._
+    def base(s: org.apache.spark.sql.SparkSession) = s.createDataFrame(Seq(
+      (1L, Option("the cat sat on the mat, the cat sat"), Seq(1.0, 0.5, -2.0), 0.9),
+      (2L, Option("Spark's byte-level tokenizer: once more!"), Seq(0.1, 0.2, 0.3), 0.4),
+      (3L, Option(""), Seq(-1.0, 0.0, 2.5), 0.4),
+      (4L, None, Seq(0.3, -0.7, 0.2), 0.1))).toDF("id", "text", "vec", "score")
+    val bf = org.apache.spark.util.sketch.BloomFilter.create(100, 0.01)
+    base(spark).filter(col("id") === 1L)
+      .select(explode(ShingleFunctions.shingleHashes(col("text"), 3)))
+      .collect().foreach(r => bf.putLong(r.getLong(0)))
+    val bfB = spark.sparkContext.broadcast(bf)
+    val codec = spark.sparkContext.broadcast(BpeCodec(Seq(
+      graft.operators.Bpe.Merge(0, "t", "h", 1L), graft.operators.Bpe.Merge(1, "th", "e", 1L))))
+    val t = col("text")
+    val cases: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "wordTokens" -> (_.select(col("id"), WordTokens.wordTokens(t))),
+      "tokenStats" -> (_.select(col("id"), TokenStats.tokenStats(t))),
+      "rollingHash" -> (_.select(col("id"), RollingHash.rollingHash(t))),
+      "repetitionStats" -> (_.select(col("id"), RepetitionStats.repetitionStats(t))),
+      "shingleHashes" -> (_.select(col("id"), ShingleFunctions.shingleHashes(t, 3))),
+      "shingleHashSeq" -> (_.select(col("id"), ShingleFunctions.shingleHashSeq(t, 2))),
+      "simhash" -> (_.select(col("id"), ShingleFunctions.simhash(t))),
+      "minhashSig" -> (_.select(col("id"),
+        ShingleFunctions.minhashSig(ShingleFunctions.shingleHashes(t, 3), 16))),
+      "cosineSim" -> (_.select(col("id"), CosineSim.cosineSim(col("vec"), col("vec")))),
+      "lshBuckets" -> (_.select(col("id"), LshBuckets.lshBuckets(col("vec"), 4, 6))),
+      "anyContain" -> (df => df.select(col("id"), BloomProbe.anyContain(
+        df.sparkSession, ShingleFunctions.shingleHashes(t, 3), bfB))),
+      "bpeTokens" -> (_.select(col("id"), BpeEncode.tokens(t, codec))),
+      "simhashAgg" -> (_.groupBy(col("score"))
+        .agg(SimHashAgg.simhashAgg(ShingleFunctions.simhash(t)))),
+      "topKAgg" -> (_.groupBy(col("score"))
+        .agg(TopKAgg.topKAgg(col("score"), col("id"), 1))))
+    val bare = spark.newSession()
+    assert(!bare.catalog.listFunctions().collect().exists(_.name.startsWith("graft_")))
+    cases.foreach { case (name, build) =>
+      def rows(s: org.apache.spark.sql.SparkSession) = build(base(s)).collect().map(_.toString).sorted.toSeq
+      val want = rows(spark)
+      assert(want.size >= 3, s"$name: $want")
+      assert(rows(bare) == want, name)
+    }
   }
 
   test("repetitionStats counters on a hand-checked doc") {

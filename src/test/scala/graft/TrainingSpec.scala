@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and partitioning-invariance of the two-phase packing prefix sum.
   */
 class TrainingSpec extends AnyFunSuite {
-  private lazy val spark = { val s = TestSpark.spark; GraftSession.registerFunctions(s); s }
+  private lazy val spark = TestSpark.spark
   private lazy val docs = Tables.documents(spark, TestSpark.sf)
 
   test("stratified sampling keeps unsampled languages whole and halves en deterministically") {
