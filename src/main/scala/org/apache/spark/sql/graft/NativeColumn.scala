@@ -13,8 +13,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * clone or a caller's own session alike, and plans exactly as the same
   * expression reached by name through a function registry.
   *
-  * Code that wildcard-imports `org.apache.spark.sql._` sees this package
-  * as `graft`; write `_root_.graft` there for graft's own packages.
+  * In code that wildcard-imports `org.apache.spark.sql._`, the name
+  * `graft` can resolve to this package; write `_root_.graft` there.
   */
 object NativeColumn {
 

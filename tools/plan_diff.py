@@ -9,7 +9,7 @@ Before comparing, every plan is masked so that only the plan itself
 counts, not the JVM that printed it:
 
   - expression ids (`#123`), `plan_id=`s and RDD ids (`RDD[45]`);
-  - lambda class names and object addresses (`$$Lambda$12/0x...@1f2e`);
+  - lambda class numbers and object addresses (`$$Lambda$12/0x...@1f2e`);
   - scratch paths under /tmp and /dev/shm, and Spark's random dir names;
   - the source file and line of an RDD's call site (`at Scope.scala:67`).
 
@@ -30,9 +30,8 @@ import re
 import sys
 
 MASKS = [
-    (re.compile(r"\$\$Lambda\$?[\w$]*/0x[0-9a-f]+@[0-9a-f]+"), "$$Lambda@ADDR"),
-    (re.compile(r"\$\$Lambda\$\d+"), "$$Lambda"),
-    (re.compile(r"@[0-9a-f]{5,}\b"), "@ADDR"),
+    (re.compile(r"Lambda\$\d+/0x[0-9a-f]+"), "Lambda"),
+    (re.compile(r"@[0-9a-f]+\b"), "@ADDR"),
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
@@ -89,15 +88,6 @@ def canon_expand_args(args):
     return "[" + ", ".join(projs) + "], [" + ", ".join(c[-1] for c in cols) + "]"
 
 
-def canon_list(line, prefix):
-    body = line[len(prefix):]
-    try:
-        items = split_top(unbracket(body))
-    except AssertionError:
-        return line
-    return prefix + "[" + ", ".join(sorted(items)) + "]"
-
-
 def normalize(text):
     lines, node = [], None
     for raw in text.splitlines():
@@ -107,11 +97,8 @@ def normalize(text):
             node = m.group(1)
         elif not line:
             node = None
-        if node == "Expand":
-            if line.startswith("Arguments: "):
-                line = "Arguments: " + canon_expand_args(line[len("Arguments: "):])
-            elif line.startswith("Output ["):
-                line = canon_list(line, line[:line.index("]: ") + 3])
+        if node == "Expand" and line.startswith("Arguments: "):
+            line = "Arguments: " + canon_expand_args(line[len("Arguments: "):])
         lines.append(line)
     return lines
 
