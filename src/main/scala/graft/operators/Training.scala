@@ -474,7 +474,7 @@ object Training {
   // --------------------------------------------------------------- tf-idf
 
   /** Per-doc top-`k` terms by TF-IDF (wc_maple sanitize semantics —
-    * /root/reference/mje/src/wc_maple.cpp:10-21, via
+    * the reference's mje/src/wc_maple.cpp:10-21, via
     * [[graft.functions.WordTokens]] — so the term space matches
     * `vocab_topk`): score = tf · ln(N/df), ROUNDED to 6dp BEFORE
     * ranking so Spark and the oracle rank identical values identically
