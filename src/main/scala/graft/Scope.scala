@@ -28,8 +28,9 @@ import org.apache.spark.storage.StorageLevel
   * end up:
   *
   *  - [[Scope.around]] releases everything when its body returns or
-  *    throws — a streaming epoch, a soak gate, a spec, or a call's own
-  *    intermediates;
+  *    throws — a streaming epoch, a soak gate, a spec, a call's own
+  *    intermediates, or a `_check` query's shared passes
+  *    ([[Tables.verdict]] collects the bounded verdict inside it);
   *  - [[Scope.session]] releases nothing and keeps no reference, so a
   *    one-shot query's kept frames stay readable and the ContextCleaner
   *    reclaims them once the result is gone.

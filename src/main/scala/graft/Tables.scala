@@ -18,20 +18,23 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
-  /** Eagerly compute a BOUNDED verdict relation, release the cached
-    * shared passes that fed it, and return the rows as a local relation
-    * with the original schema. The `_check` queries return 1-4 verdict
-    * rows, so — unlike the lazy pair relations, which have no
-    * post-materialization point — they CAN unpersist deterministically
-    * (ADVICE r6): direct library callers no longer accumulate cached
-    * blocks across repeated check invocations, independent of the
-    * session-level clearCache hooks in Bench/Verify.
+  /** A BOUNDED verdict relation, computed now: run `body` in
+    * [[Scope.around]], collect the relation it returns (at most 1000
+    * rows — the `_check` queries return 1-6), release every frame the
+    * body registered on its scope, and return the rows as a local
+    * relation with the body's schema. A body that throws, or returns
+    * too many rows, releases its frames too. So a check's shared passes
+    * never outlive the call, whether its caller is a one-shot query, a
+    * spec rerunning it, or a library caller in a loop.
     */
-  def materializeAndRelease(df: DataFrame, cached: DataFrame*): DataFrame = {
-    val rows = df.collect()
-    require(rows.length <= 1000,
-      s"materializeAndRelease is for bounded verdict relations, got ${rows.length} rows")
-    cached.foreach(_.unpersist())
+  def verdict(body: Scope => DataFrame): DataFrame = {
+    val (rows, df) = Scope.around { s =>
+      val df = body(s)
+      val rows = df.collect()
+      require(rows.length <= 1000,
+        s"Tables.verdict is for bounded verdict relations, got ${rows.length} rows")
+      (rows, df)
+    }
     df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 

@@ -16,12 +16,10 @@ object Verify {
       if (only.isEmpty) m else m.view.filterKeys(only).toMap
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    // memoize the oracle relations shared across check twins within
-    // this ONE run (VERDICT r17 #5) — parquet-backed, so it survives
-    // the between-query clearCache below; Bench never enables it
-    // (each bench query is measured cold by design)
-    graft.streaming.Events.OracleMemo.enable()
-    try selected(SparkEntry.queries).foreach { case (name, fn) =>
+    // every query runs cold, as in Bench: nothing computed for one
+    // query is reused by another (a check's own shared passes are
+    // released when its verdict is collected, Tables.verdict)
+    selected(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -30,7 +28,7 @@ object Verify {
       // release lazily-returned operators' shared-pass caches between
       // queries (ADVICE r5) — same hook as Bench
       spark.catalog.clearCache()
-    } finally graft.streaming.Events.OracleMemo.clear()
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -254,8 +254,6 @@ case class SimHashExpr(child: Expression) extends UnaryExpression {
 
 object ShingleFunctions {
 
-  val ShingleName = "graft_shingle_hashes"
-
   def shingleHashes(text: Column, n: Int): Column =
     column(ShingleHashesExpr(expression(text), n))
 

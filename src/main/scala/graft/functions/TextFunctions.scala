@@ -30,15 +30,6 @@ object TextFunctions {
     size(filter(toks, t => t.isin(stoplist.map(lit): _*))).cast("double") /
       nullif(size(toks), lit(0)).cast("double")
 
-  /** Mean token length = non-whitespace chars / token count. */
-  def avgTokenLen(text: Column, toks: Column): Column =
-    length(regexp_replace(text, "\\s", "")).cast("double") /
-      nullif(size(toks), lit(0)).cast("double")
-
-  /** Number of hits from `words` among tokens (for language scoring). */
-  def hitCount(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isin(words.map(lit): _*))).cast("long")
-
   /** BPE-ish subword pieces: letter runs, digit runs, single punct marks —
     * the pre-tokenization split most BPE vocabularies start from.
     */

@@ -230,22 +230,28 @@ object Classifier {
     * accuracy ≥ [[HoldoutFloor]]. The floors are falsifiable: an
     * untrained (zero-weight) model scores 0.5 everywhere and fails
     * both (ClassifierSpec pins the flip). */
-  def classifyCheck(spark: SparkSession, d: String): DataFrame = {
-    val scored = classify(spark, d).persist()
+  def classifyCheck(spark: SparkSession, d: String): DataFrame =
+    Tables.verdict(s => floorVerdict(s.persist(classify(spark, d)), TrainFloor, HoldoutFloor))
+
+  /** The one-row floor verdict of a scored relation (`label, split,
+    * prob, pred`), shared by [[classifyCheck]] and the streamed check
+    * twins: `n_docs`, the `n_train`/`n_holdout` split counts,
+    * `n_label_pos`, `n_prob_oob` (probabilities outside [0,1]), and the
+    * train/holdout accuracies against `trainFloor`/`holdoutFloor`. */
+  private[graft] def floorVerdict(scored: DataFrame, trainFloor: Double,
+                                  holdoutFloor: Double): DataFrame = {
+    def n(c: Column): Column = sum(when(c, 1L).otherwise(0L))
     def accOf(split: String): Column =
-      sum(when(col("split") === split && col("pred") === col("label"), 1L)
-        .otherwise(0L)).cast("double") /
-        sum(when(col("split") === split, 1L).otherwise(0L))
-    val verdict = scored.agg(
+      n(col("split") === split && col("pred") === col("label")).cast("double") /
+        n(col("split") === split)
+    scored.agg(
       count(lit(1)).as("n_docs"),
-      sum(when(col("split") === "train", 1L).otherwise(0L)).as("n_train"),
-      sum(when(col("split") === "holdout", 1L).otherwise(0L)).as("n_holdout"),
-      sum(when(col("label"), 1L).otherwise(0L)).as("n_label_pos"),
-      sum(when(col("prob") < 0.0 || col("prob") > 1.0, 1L).otherwise(0L))
-        .as("n_prob_oob"),
-      (accOf("train") >= TrainFloor).as("train_acc_ok"),
-      (accOf("holdout") >= HoldoutFloor).as("holdout_acc_ok"))
-    Tables.materializeAndRelease(verdict, scored)
+      n(col("split") === "train").as("n_train"),
+      n(col("split") === "holdout").as("n_holdout"),
+      n(col("label")).as("n_label_pos"),
+      n(col("prob") < 0.0 || col("prob") > 1.0).as("n_prob_oob"),
+      (accOf("train") >= trainFloor).as("train_acc_ok"),
+      (accOf("holdout") >= holdoutFloor).as("holdout_acc_ok"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

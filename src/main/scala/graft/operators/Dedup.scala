@@ -418,17 +418,17 @@ object Dedup {
     * recall collapse hash-mismatches the row.
     */
   def minhashLshCheck(docs: DataFrame, threshold: Double = DefaultThreshold,
-                      recallFloor: Double = 0.9): DataFrame = {
+                      recallFloor: Double = 0.9): DataFrame = Tables.verdict { s =>
     // ONE shingle pass feeds the sketch path AND the exact side — the
     // kernel is the dominant cost and the whole point of the check is
     // comparing the two paths over identical shingle sets
-    val shingled = shingleHashSets(docs).persist()
+    val shingled = s.persist(shingleHashSets(docs))
     val lsh = minhashLshPairs(shingled, threshold)
       .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("lsh_jaccard"))
     val exact = ngramJaccardPairs(shingled, threshold)
       .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("exact_jaccard"))
     val both = col("lsh_jaccard").isNotNull && col("exact_jaccard").isNotNull
-    val verdict = lsh.join(exact, Seq("doc_id_1", "doc_id_2"), "full_outer")
+    lsh.join(exact, Seq("doc_id_1", "doc_id_2"), "full_outer")
       .agg(
         count(col("exact_jaccard")).as("n_exact_pairs"),
         coalesce(sum(when(col("lsh_jaccard").isNotNull && col("exact_jaccard").isNull, 1L)
@@ -437,8 +437,6 @@ object Dedup {
           .otherwise(0L)), lit(0L)).as("n_jaccard_mismatch"),
         (coalesce(sum(when(both, 1L).otherwise(0L)), lit(0L)) >=
           lit(recallFloor) * count(col("exact_jaccard"))).as("recall_ok"))
-    // 1-row verdict: materialize now, release the shared shingle pass
-    Tables.materializeAndRelease(verdict, shingled)
   }
 
   /** `maxBandDf` cap the capped LSH queries and the streamed capped
@@ -501,26 +499,24 @@ object Dedup {
     */
   def minhashLshCappedCheck(docs: DataFrame, threshold: Double = DefaultThreshold,
                             maxBandDf: Int = BandCapDf,
-                            recallFloor: Double = 0.85): DataFrame = {
+                            recallFloor: Double = 0.85): DataFrame = Tables.verdict { s =>
     val base = docs.select(col("doc_id"), col("text"))
     val aug = base.unionByName(templateFlood(docs, BandFloodCopies))
-    val shingled = shingleHashSets(aug).persist()
+    val shingled = s.persist(shingleHashSets(aug))
     // ONE band pass feeds the capped and the uncapped joins (the
     // signature kernel is the dominant cost), and the two PAIR
     // relations are persisted too — each is consumed by several
     // verdict aggregates below, and an uncached reference would re-run
     // its candidate+verify (or inverted-index) joins per consumer
-    // (r16 review: ~4× the necessary join cost). All released at the
-    // 1-row materialization point.
-    val banded = bandRows(minhashSignatures(shingled)).persist()
-    val capped = lshPairsFromBanded(coldBands(banded, maxBandDf), shingled, threshold)
-      .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("capped_jaccard"))
-      .persist()
+    // (r16 review: ~4× the necessary join cost). All released once the
+    // 1-row verdict is collected.
+    val banded = s.persist(bandRows(minhashSignatures(shingled)))
+    val capped = s.persist(lshPairsFromBanded(coldBands(banded, maxBandDf), shingled, threshold)
+      .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("capped_jaccard")))
     val uncapped = lshPairsFromBanded(banded, shingled, threshold)
       .select(col("doc_id_1"), col("doc_id_2"))
-    val exact = ngramJaccardPairs(shingled, threshold)
-      .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("exact_jaccard"))
-      .persist()
+    val exact = s.persist(ngramJaccardPairs(shingled, threshold)
+      .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("exact_jaccard")))
     // the template's text GROUP (flood members + the template + any
     // natural byte-dups of it) — the ids whose pairs the cap drops;
     // the template scan is derived once (shared with the flood above)
@@ -530,7 +526,7 @@ object Dedup {
       .join(tmplIds.select(col("doc_id").as("doc_id_1")), Seq("doc_id_1"), "left_anti")
       .join(tmplIds.select(col("doc_id").as("doc_id_2")), Seq("doc_id_2"), "left_anti")
     val cappedVsExact = capped.join(exact, Seq("doc_id_1", "doc_id_2"), "left_outer")
-    val verdict = cappedVsExact.agg(
+    cappedVsExact.agg(
         coalesce(sum(when(col("exact_jaccard").isNull, 1L).otherwise(0L)), lit(0L))
           .as("n_false_pairs"),
         coalesce(sum(when(col("exact_jaccard").isNotNull &&
@@ -553,8 +549,6 @@ object Dedup {
         col("n_plant_pairs_emitted"),
         (col("n_capped_pairs") < col("n_uncapped_pairs")).as("cap_binds"),
         (col("n_recalled") >= lit(recallFloor) * col("n_exact_non_tmpl")).as("recall_ok"))
-    // 1-row verdict: materialize now, release all four shared passes
-    Tables.materializeAndRelease(verdict, shingled, banded, capped, exact)
   }
 
   /** 64-bit SimHash per doc over its token multiset: bit i of the
@@ -615,7 +609,7 @@ object Dedup {
     * in the oracle.)
     */
   def simhashCheck(docs: DataFrame, maxHamming: Int = 3,
-                   sampleMod: Int = SimhashPlantMod): DataFrame = {
+                   sampleMod: Int = SimhashPlantMod): DataFrame = Tables.verdict { s =>
     val base = docs.filter(col("text").rlike("\\S")).select(col("doc_id"), col("text"))
     // planted ids start past the corpus's own id space — a fixed offset
     // would collide with natural ids at 100 TB id ranges, silently
@@ -628,20 +622,24 @@ object Dedup {
       .groupBy(md5(col("text").cast("binary")).as("h"))
       .agg(collect_list(col("doc_id")).as("ids"))
       .filter(size(col("ids")) >= 2)
-    val exactPairs = groups
+    val exactPairs = s.persist(groups
       .select(explode(col("ids")).as("doc_id_1"), col("ids"))
       .select(col("doc_id_1"), explode(col("ids")).as("doc_id_2"))
-      .filter(col("doc_id_1") < col("doc_id_2"))
-      .persist()
-    val missed = exactPairs.join(
-      simhash(aug, maxHamming).select(col("doc_id_1"), col("doc_id_2")),
-      Seq("doc_id_1", "doc_id_2"), "left_anti")
-    val verdict = exactPairs.agg(count(lit(1)).as("n_exact_dup_pairs"))
+      .filter(col("doc_id_1") < col("doc_id_2")))
+    containmentVerdict(exactPairs, simhash(aug, maxHamming), Seq("doc_id_1", "doc_id_2"))
+  }
+
+  /** The one-row containment verdict [[simhashCheck]] and
+    * [[semanticCheck]] share: `exact` is the exact-duplicate pair
+    * relation, `found` the operator's emitted pairs, both keyed by
+    * `keys`; `n_missed` counts the exact pairs `found` lacks. */
+  private def containmentVerdict(exact: DataFrame, found: DataFrame,
+                                 keys: Seq[String]): DataFrame = {
+    val missed = exact.join(found.select(keys.map(col): _*), keys, "left_anti")
+    exact.agg(count(lit(1)).as("n_exact_dup_pairs"))
       .crossJoin(missed.agg(count(lit(1)).as("n_missed")))
       .select(col("n_exact_dup_pairs"), col("n_missed"),
         (col("n_missed") === 0).as("all_found"))
-    // 1-row verdict: materialize now, release the exact-pair cache
-    Tables.materializeAndRelease(verdict, exactPairs)
   }
 
   /** Embedding cosine near-dup pairs (exact). Declarative broadcast
@@ -749,7 +747,7 @@ object Dedup {
     */
   def semanticCheck(embeddings: DataFrame, threshold: Double = 0.4,
                     nCells: Int = 8, sampleMod: Int = SemanticPlantMod,
-                    maxSample: Int = 4096): DataFrame = {
+                    maxSample: Int = 4096): DataFrame = Tables.verdict { s =>
     val base = embeddings.select(col("vec_id"), col("embedding"))
     // planted ids start past the corpus's own id space — a fixed offset
     // would collide with natural ids at 100 TB id ranges (same guard as
@@ -758,20 +756,11 @@ object Dedup {
     val aug = base.unionAll(base.filter(col("vec_id") % sampleMod === 0)
       .crossJoin(broadcast(off))
       .select((col("vec_id") + col("off")).as("vec_id"), col("embedding")))
-    val ident = aug.as("x").join(aug.as("y"),
+    val ident = s.persist(aug.as("x").join(aug.as("y"),
         col("x.embedding") === col("y.embedding") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-      .persist()
-    val missed = ident.join(
-      semanticPairs(aug, threshold, nCells, maxSample = maxSample)
-        .select(col("id_a"), col("id_b")),
-      Seq("id_a", "id_b"), "left_anti")
-    val verdict = ident.agg(count(lit(1)).as("n_exact_dup_pairs"))
-      .crossJoin(missed.agg(count(lit(1)).as("n_missed")))
-      .select(col("n_exact_dup_pairs"), col("n_missed"),
-        (col("n_missed") === 0).as("all_found"))
-    // 1-row verdict: materialize now, release the exact-pair cache
-    Tables.materializeAndRelease(verdict, ident)
+      .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b")))
+    containmentVerdict(ident, semanticPairs(aug, threshold, nCells, maxSample = maxSample),
+      Seq("id_a", "id_b"))
   }
 
   // ------------------------------------------------- substring-level spans

@@ -67,12 +67,6 @@ object MapleJuice {
       implicit kv: Encoder[(K, V)]): Dataset[(K, V)] =
     pairs.groupByKey(_._1).reduceGroups((a, b) => (a._1, reduce(a._2, b._2))).map(_._2)
 
-  /** Declarative juice: groupBy + Column aggregates (preferred — codegen'd,
-    * map-side combined, AQE-coalesced). `keyed` must have a column `key`.
-    */
-  def juiceAgg(keyed: DataFrame, aggs: Column*): DataFrame =
-    keyed.groupBy(col("key")).agg(aggs.head, aggs.tail: _*)
-
   /** The reference's whole job submission (maple exe + partitioner +
     * juice exe — /root/reference/src/mj_master.cpp) as one call: map
     * phase, optional explicit repartition, reduce phase. When
@@ -174,16 +168,4 @@ object MapleJuice {
       .agg(countDistinct(col("pid")).as("n_pids"), count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_keys"), sum(col("n")).as("total_rows"),
         count(when(col("n_pids") > 1, 1)).as("keys_split_across_partitions"))
-
-  /** Partition-skew stats after a hash repartition (partition count,
-    * min/max rows per partition). Partitioner- and parallelism-dependent
-    * by nature, so diagnostic-only — the invariant checking lives in
-    * [[hashPartitionCheck]].
-    */
-  def hashPartitionStats(df: DataFrame, keyCol: String): DataFrame =
-    df.repartition(col(keyCol))
-      .select(spark_partition_id().as("pid"))
-      .groupBy(col("pid")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_partitions"), min(col("n")).as("min_rows"),
-        max(col("n")).as("max_rows"))
 }

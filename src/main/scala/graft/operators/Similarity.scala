@@ -577,12 +577,12 @@ object Similarity {
       "ivf_incr" -> 0.7)
 
   def recallCheck(embeddings: DataFrame,
-                  floorOverrides: Map[String, Double] = Map.empty): DataFrame = {
+                  floorOverrides: Map[String, Double] = Map.empty): DataFrame = Tables.verdict { s =>
     // overrides MERGE with the defaults: a partial map must not leave
     // the unnamed variants with floor 0.0 (an unfalsifiable verdict)
     val floors = DefaultRecallFloors ++ floorOverrides
     // one brute pass feeds every variant's hit join AND the denominator
-    val b = bruteTopK(embeddings).select(col("query_id"), col("neighbor_id")).persist()
+    val b = s.persist(bruteTopK(embeddings).select(col("query_id"), col("neighbor_id")))
     // the maintained-index variant: centroids trained on 4/5 of the
     // corpus, the last fifth APPENDED via the frozen-centroid kernel —
     // the incremental path queried exactly as a deployment would
@@ -601,7 +601,7 @@ object Similarity {
     val floorOf = floors.foldLeft(lit(0.0)) { case (acc, (n, f)) =>
       when(col("variant") === n, f).otherwise(acc)
     }
-    val verdict = tagged
+    tagged
       .join(b.withColumn("hit", lit(1L)), Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("variant"))
       .agg(count(lit(1)).as("n_rows"), coalesce(sum(col("hit")), lit(0L)).as("hits"))
@@ -609,8 +609,6 @@ object Similarity {
       .select(col("variant"), col("n_rows"),
         (col("hits") >= floorOf * col("n_brute")).as("recall_ok"))
       .orderBy(col("variant"))
-    // 6-row verdict (one per variant): materialize, release the brute pass
-    Tables.materializeAndRelease(verdict, b)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

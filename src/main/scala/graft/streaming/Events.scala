@@ -1989,56 +1989,6 @@ object Events {
     nearDupContainmentVerdict(spark, sfDir, streamed, Nil)
   }
 
-  /** Session-scoped memo of the exact n-gram-Jaccard pair relation the
-    * two near-dup containment verdicts share (VERDICT r17 #5): within
-    * one [[graft.Verify]] run, `stream_ingest_neardup_check` and
-    * `stream_ingest_neardup_capped_check` each recompute
-    * [[graft.operators.Dedup.ngramJaccard]] over the SAME `documents`
-    * table. Enabled, the memo materializes that relation once per
-    * sfDir into a scratch parquet and serves every later caller a
-    * plain file read — a parquet file, not a cached plan, so it
-    * survives Verify's between-query `clearCache`. DISABLED by
-    * default and never enabled by [[graft.Bench]]: the bench measures
-    * each query cold by design (the r7 clearCache adjudication —
-    * colder is fairer), so cross-query reuse there would be
-    * cache-warming, not speed. */
-  private[graft] object OracleMemo {
-    @volatile private var root: Option[java.nio.file.Path] = None
-    private val paths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    def enable(): Unit = synchronized {
-      if (root.isEmpty)
-        root = Some(java.nio.file.Files.createTempDirectory("graft_oracle_memo"))
-    }
-    def clear(): Unit = synchronized {
-      root.foreach(deleteDirQuietly)
-      paths.clear()
-      root = None
-    }
-    /** Whether the memo is serving (spec observability only). */
-    private[graft] def enabled: Boolean = root.isDefined
-    /** Memo key = (relation identity, sfDir) — the `kind` tag is part
-      * of the key AND the scratch-dir name, so a second distinct
-      * relation memoized for the same sfDir can never alias the first
-      * caller's data, and two concurrent first-calls for different
-      * keys write to deterministically distinct dirs (ADVICE r18: the
-      * old dir name came from `paths.size()` inside computeIfAbsent —
-      * racy — and the key ignored the compute identity entirely). */
-    private[graft] def memo(spark: SparkSession, kind: String, sfDir: String)
-                           (compute: => DataFrame): DataFrame = root match {
-      case None => compute
-      case Some(r) =>
-        val p = paths.computeIfAbsent(s"$kind|$sfDir", key => {
-          val dir = r.resolve(key.replaceAll("[^A-Za-z0-9._-]", "_")).toString
-          compute.write.mode("overwrite").parquet(dir)
-          dir
-        })
-        spark.read.parquet(p)
-    }
-    def exactPairs(spark: SparkSession, sfDir: String)
-                  (compute: => DataFrame): DataFrame =
-      memo(spark, "exact_pairs", sfDir)(compute)
-  }
-
   /** The containment-verdict aggregate [[ingestNearDupCheck]] and
     * [[ingestNearDupCappedCheck]] share over an already-converged
     * streamed verdict relation — ONE definition, so the capped twin's
@@ -2046,50 +1996,53 @@ object Events {
     * (the capped twin's mid-stream cap-bite meters) append after the
     * shared fields. */
   private def nearDupContainmentVerdict(spark: SparkSession, sfDir: String,
-                                        streamed: DataFrame, extra: Seq[Column]): DataFrame = {
-    import graft.operators.Dedup
-    // the check's own cost (the exact pair relation + containment
-    // joins) gets a lap of its own, so the bench split doesn't lump
-    // the oracle side into "other"
-    val oracleLap = graft.operators.Snapshot.incrLap()
-    val docs = Tables.documents(spark, sfDir)
-    val exact = OracleMemo.exactPairs(spark, sfDir)(Dedup.ngramJaccard(docs))
-      .select(col("doc_id_1").as("partner_id"), col("doc_id_2").as("doc_id"),
-        col("jaccard").as("exact_jaccard"))
-      .persist()
-    val dups = streamed.filter(!col("keep"))
-      .select(col("doc_id"), col("partner_id"), col("jaccard"))
-      .join(exact, Seq("doc_id", "partner_id"), "left")
-    val h = md5(col("text").cast("binary"))
-    // pigeonhole holds only inside the sketch's domain: a doc with
-    // fewer than 3 tokens has no 3-shingle, hence no signature — and
-    // its identical-text mate is equally signature-less, so neither
-    // side can be flagged; same-token-count texts exclude together
-    val followers = docs
-      .filter(size(filter(split(col("text"), "\\s+"), t => t =!= lit(""))) >= 3)
-      .select(col("doc_id"), h.as("h"))
-    val exactDupFollowers = followers
-      .join(followers.groupBy(col("h")).agg(min(col("doc_id")).as("first_id")), "h")
-      .filter(col("doc_id") > col("first_id")).select(col("doc_id"))
-    val verdict = streamed.agg(count(lit(1)).as("n_docs"))
-      .crossJoin(broadcast(exact.select(col("doc_id")).distinct()
-        .agg(count(lit(1)).as("n_exact_neardup_docs"))))
-      .crossJoin(broadcast(dups.agg(
-        coalesce(sum(when(col("exact_jaccard").isNull, 1L).otherwise(0L)), lit(0L))
-          .as("n_false_dups"),
-        coalesce(sum(when(col("exact_jaccard").isNotNull &&
-          col("jaccard") =!= col("exact_jaccard"), 1L).otherwise(0L)), lit(0L))
-          .as("n_jaccard_mismatch"),
-        count(lit(1)).as("n_dups"))))
-      .crossJoin(broadcast(exactDupFollowers
-        .join(streamed.filter(col("keep")), Seq("doc_id"), "left_semi")
-        .agg(count(lit(1)).as("n_exact_dup_missed"))))
-      .select(Seq(col("n_docs"), col("n_exact_neardup_docs"), col("n_false_dups"),
-        col("n_jaccard_mismatch"), col("n_exact_dup_missed"),
-        (col("n_dups") >= lit(NearDupRecallFloor) * col("n_exact_neardup_docs"))
-          .as("recall_ok")) ++ extra: _*)
-    val out = Tables.materializeAndRelease(verdict, exact)
-    oracleLap("oracle verify (exact pair containment)")
+                                        streamed: DataFrame, extra: Seq[Column]): DataFrame =
+    oracleVerify("exact pair containment") { s =>
+      val docs = Tables.documents(spark, sfDir)
+      val exact = s.persist(graft.operators.Dedup.ngramJaccard(docs)
+        .select(col("doc_id_1").as("partner_id"), col("doc_id_2").as("doc_id"),
+          col("jaccard").as("exact_jaccard")))
+      val dups = streamed.filter(!col("keep"))
+        .select(col("doc_id"), col("partner_id"), col("jaccard"))
+        .join(exact, Seq("doc_id", "partner_id"), "left")
+      val h = md5(col("text").cast("binary"))
+      // pigeonhole holds only inside the sketch's domain: a doc with
+      // fewer than 3 tokens has no 3-shingle, hence no signature — and
+      // its identical-text mate is equally signature-less, so neither
+      // side can be flagged; same-token-count texts exclude together
+      val followers = docs
+        .filter(size(filter(split(col("text"), "\\s+"), t => t =!= lit(""))) >= 3)
+        .select(col("doc_id"), h.as("h"))
+      val exactDupFollowers = followers
+        .join(followers.groupBy(col("h")).agg(min(col("doc_id")).as("first_id")), "h")
+        .filter(col("doc_id") > col("first_id")).select(col("doc_id"))
+      streamed.agg(count(lit(1)).as("n_docs"))
+        .crossJoin(broadcast(exact.select(col("doc_id")).distinct()
+          .agg(count(lit(1)).as("n_exact_neardup_docs"))))
+        .crossJoin(broadcast(dups.agg(
+          coalesce(sum(when(col("exact_jaccard").isNull, 1L).otherwise(0L)), lit(0L))
+            .as("n_false_dups"),
+          coalesce(sum(when(col("exact_jaccard").isNotNull &&
+            col("jaccard") =!= col("exact_jaccard"), 1L).otherwise(0L)), lit(0L))
+            .as("n_jaccard_mismatch"),
+          count(lit(1)).as("n_dups"))))
+        .crossJoin(broadcast(exactDupFollowers
+          .join(streamed.filter(col("keep")), Seq("doc_id"), "left_semi")
+          .agg(count(lit(1)).as("n_exact_dup_missed"))))
+        .select(Seq(col("n_docs"), col("n_exact_neardup_docs"), col("n_false_dups"),
+          col("n_jaccard_mismatch"), col("n_exact_dup_missed"),
+          (col("n_dups") >= lit(NearDupRecallFloor) * col("n_exact_neardup_docs"))
+            .as("recall_ok")) ++ extra: _*)
+    }
+
+  /** A check twin's oracle side: its bounded verdict ([[Tables.verdict]])
+    * timed as one lap, `oracle verify (<what>)`, so the bench split
+    * doesn't lump the oracle side into "other". The loop the verdict
+    * reads has already run, outside the lap. */
+  private def oracleVerify(what: String)(body: Scope => DataFrame): DataFrame = {
+    val lap = graft.operators.Snapshot.incrLap()
+    val out = Tables.verdict(body)
+    lap(s"oracle verify ($what)")
     out
   }
 
@@ -2524,26 +2477,40 @@ object Events {
   def ingestAnnCheck(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Similarity
     val streamed = ingestAnnIvf(spark, sfDir) // local relation (detached)
-    val oracleLap = graft.operators.Snapshot.incrLap()
-    // brute baseline over the LIVE corpus: the staging's third arrival
-    // removed the %17 vectors, and the recall contract is against exact
-    // search over the same corpus the index now holds (queries < NumQueries
-    // are never removed)
-    val live = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") < Similarity.NumQueries || col("vec_id") % AnnRemovalMod =!= 0)
-    val b = Similarity.bruteTopK(live)
-      .select(col("query_id"), col("neighbor_id")).persist()
-    val verdict = streamed.agg(count(lit(1)).as("n_rows"))
+    oracleVerify("brute-force recall") { s =>
+      // brute baseline over the LIVE corpus: the staging's third arrival
+      // removed the %17 vectors, and the recall contract is against exact
+      // search over the same corpus the index now holds (queries <
+      // NumQueries are never removed)
+      val live = Tables.embeddings(spark, sfDir)
+        .filter(col("vec_id") < Similarity.NumQueries || col("vec_id") % AnnRemovalMod =!= 0)
+      annRecallVerdict(s, streamed, live, Nil)
+    }
+  }
+
+  /** The brute-force recall verdict both ANN check twins end in:
+    * `n_rows` of the streamed top-k, then `extra`, then `recall_ok` —
+    * its hits against exact top-[[AnnK]] search over `live` clear
+    * [[AnnRecallFloor]]. */
+  private def annRecallVerdict(s: Scope, streamed: DataFrame, live: DataFrame,
+                               extra: Seq[Column]): DataFrame = {
+    val b = s.persist(graft.operators.Similarity.bruteTopK(live, AnnK)
+      .select(col("query_id"), col("neighbor_id")))
+    streamed.agg(count(lit(1)).as("n_rows"))
       .crossJoin(broadcast(streamed.select(col("query_id"), col("neighbor_id"))
         .join(b, Seq("query_id", "neighbor_id"), "left_semi")
         .agg(count(lit(1)).as("hits"))))
       .crossJoin(broadcast(b.agg(count(lit(1)).as("n_brute"))))
-      .select(col("n_rows"),
-        (col("hits") >= lit(AnnRecallFloor) * col("n_brute")).as("recall_ok"))
-    val out = Tables.materializeAndRelease(verdict, b)
-    oracleLap("oracle verify (brute-force recall)")
-    out
+      .select(col("n_rows") +: extra :+
+        (col("hits") >= lit(AnnRecallFloor) * col("n_brute")).as("recall_ok"): _*)
   }
+
+  /** `drift_tripped` / `cutover_done` off a migrating loop's
+    * [[LoopHooks.Migration]] meter: the monitor fired at a
+    * post-bootstrap epoch, and the query side flipped. */
+  private def migrationFlags(probe: Seq[(Long, String)]): Seq[Column] = Seq(
+    lit(probe.exists { case (e, m) => e >= 1 && m.contains("trip") }).as("drift_tripped"),
+    lit(probe.exists(_._2.contains("cutover"))).as("cutover_done"))
 
   /** Oracle-checkable contract of the MIGRATING loop (VERDICT r15 #1,
     * the `stream_ingest_ann_migrate` twin): runs [[ingestAnnIvf]] with
@@ -2572,34 +2539,21 @@ object Events {
     val streamed = ingestAnnIvf(spark, sfDir, driftMaxCellShare = Some(DriftMaxCellShareDefault),
       driftWaveArrival2 = true, hooks = hooks) // local relation (detached)
     val probe = hooks(LoopHooks.Migration)
-    val oracleLap = graft.operators.Snapshot.incrLap()
-    val emb = Tables.embeddings(spark, sfDir)
-    val corpus = emb.filter(col("vec_id") >= Similarity.NumQueries)
-    val wave = driftShift(corpus.filter(col("vec_id") % 5 === 0))
-    val m0Corpus = corpus.filter(col("vec_id") % 5 =!= 0).unionByName(wave)
-    val finalCorpus = m0Corpus.filter(col("vec_id") % AnnRemovalMod =!= 0)
-    val embLive = emb.filter(col("vec_id") < Similarity.NumQueries)
-      .unionByName(finalCorpus)
-    val v2 = Similarity.ivfTrain(m0Corpus.orderBy(col("vec_id")))
-    val fresh = Similarity.ivfTopKFromIndex(embLive,
-      Similarity.ivfAssign(finalCorpus, v2), v2, AnnK, AnnNprobe)
-    val b = Similarity.bruteTopK(embLive, AnnK)
-      .select(col("query_id"), col("neighbor_id")).persist()
-    val tripped = probe.exists { case (e, s) => e >= 1 && s.contains("trip") }
-    val cutover = probe.exists(_._2.contains("cutover"))
-    val sameAsFresh = streamed.collect().toSeq == fresh.collect().toSeq
-    val verdict = streamed.agg(count(lit(1)).as("n_rows"))
-      .crossJoin(broadcast(streamed.select(col("query_id"), col("neighbor_id"))
-        .join(b, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))))
-      .crossJoin(broadcast(b.agg(count(lit(1)).as("n_brute"))))
-      .select(col("n_rows"), lit(tripped).as("drift_tripped"),
-        lit(cutover).as("cutover_done"),
-        lit(sameAsFresh).as("migrated_equals_fresh"),
-        (col("hits") >= lit(AnnRecallFloor) * col("n_brute")).as("recall_ok"))
-    val out = Tables.materializeAndRelease(verdict, b)
-    oracleLap("oracle verify (fresh-v2 equality + brute recall)")
-    out
+    oracleVerify("fresh-v2 equality + brute recall") { s =>
+      val emb = Tables.embeddings(spark, sfDir)
+      val corpus = emb.filter(col("vec_id") >= Similarity.NumQueries)
+      val wave = driftShift(corpus.filter(col("vec_id") % 5 === 0))
+      val m0Corpus = corpus.filter(col("vec_id") % 5 =!= 0).unionByName(wave)
+      val finalCorpus = m0Corpus.filter(col("vec_id") % AnnRemovalMod =!= 0)
+      val embLive = emb.filter(col("vec_id") < Similarity.NumQueries)
+        .unionByName(finalCorpus)
+      val v2 = Similarity.ivfTrain(m0Corpus.orderBy(col("vec_id")))
+      val fresh = Similarity.ivfTopKFromIndex(embLive,
+        Similarity.ivfAssign(finalCorpus, v2), v2, AnnK, AnnNprobe)
+      val sameAsFresh = streamed.collect().toSeq == fresh.collect().toSeq
+      annRecallVerdict(s, streamed, embLive,
+        migrationFlags(probe) :+ lit(sameAsFresh).as("migrated_equals_fresh"))
+    }
   }
 
   /** Continuous SCORED ingestion with the trained text filter held as
@@ -2728,20 +2682,6 @@ object Events {
       // model froze on arrival 1, so the fitted weights equal the
       // batch twin's — and retracted in arrival 3 (query doc)
       val (shadows, _) = shadowsAndStale(docs)
-      // MIGRATE staging (see the driftPosRateJump doc): arrivals at
-      // their LIVE text, after the first label shift (%5==0) and after
-      // the second (%5==0 or %5==1) — withColumn, not the 2-column
-      // [[classifyShifted2Corpus]] projection: staged files must carry
-      // the full documents schema
-      def liveText(df: DataFrame): DataFrame =
-        df.withColumn("text", when(col("doc_id") % 5 === 0,
-          concat(col("text"), lit(LabelShiftSuffix)))
-          .otherwise(col("text")))
-      def liveText2(df: DataFrame): DataFrame =
-        df.withColumn("text",
-          when(col("doc_id") % 5 === 0 || col("doc_id") % 5 === 1,
-            concat(col("text"), lit(LabelShiftSuffix)))
-            .otherwise(col("text")))
       val crash = hooks.crashPoint
       val first = Arrival.standard(1)(docs.filter(col("doc_id") % 5 =!= 0))
       val later =
@@ -2779,11 +2719,11 @@ object Events {
           // slice (%3==0 — both splits, so the fit has a train side)
           // re-delivered at its LIVE text: generation 2's labeled
           // sample
-          Arrival.grouped()(liveText(docs.filter(col("doc_id") % ReLabelMod === 0))),
+          Arrival.grouped()(classifyShiftedCorpus(docs.filter(col("doc_id") % ReLabelMod === 0))),
           // arrival 4: identical re-delivery — final chunk + cutover
           // (the trip check is suspended while the migration is in
           // flight, so this slice's composition is free)
-          Arrival.grouped()(liveText(docs.filter(
+          Arrival.grouped()(classifyShiftedCorpus(docs.filter(
             col("doc_id") % RedeliveryMod === EarlyRedeliveryRem))),
           // arrival 5: one epoch past the cutover — marker cleanup
           // (re-armed poll) + drained-generation retirement. A UNIFORM
@@ -2794,7 +2734,7 @@ object Events {
           // on (a skewed slice deviating is the monitor working, not a
           // defect)
           Arrival.grouped(Some("drains 2-5 (wave, re-label, cutover, retire)"))(
-            liveText(docs.filter(col("doc_id") % ReLabelMod === 1)))) ++
+            classifyShiftedCorpus(docs.filter(col("doc_id") % ReLabelMod === 1)))) ++
           (if (!labelSecondWave) Nil else Seq(
             // SECOND-WAVE staging (VERDICT r18 #5 — the classifier
             // instance of the ANN repeatability leg): a second
@@ -2811,13 +2751,14 @@ object Events {
             // the same deterministic %3==0 slice at its LIVE
             // (twice-shifted) text; g3 trains here and its baseline is
             // measured on exactly these rows
-            Arrival.grouped()(liveText2(docs.filter(col("doc_id") % ReLabelMod === 0))),
+            Arrival.grouped()(classifyShiftedCorpus(
+              docs.filter(col("doc_id") % ReLabelMod === 0), waves = 2)),
             // arrival 8: identical re-delivery at live text — drives
             // the second migration's final chunk + cutover without
             // changing the corpus (the closed-form reconstruction the
             // check twin and specs rely on)
-            Arrival.grouped()(liveText2(docs.filter(
-              col("doc_id") % RedeliveryMod === EarlyRedeliveryRem))),
+            Arrival.grouped()(classifyShiftedCorpus(docs.filter(
+              col("doc_id") % RedeliveryMod === EarlyRedeliveryRem), waves = 2)),
             // arrival 9: one epoch past the second cutover —
             // migration-marker cleanup (trip re-armed off generation
             // 3's baseline) + generation 2's chains retired on the
@@ -2826,7 +2767,7 @@ object Events {
             // the baseline, which is what the re-armed check must stay
             // quiet on.
             Arrival.grouped(Some("drains 6-9 (second wave + cutover + retire)"))(
-              liveText2(docs.filter(col("doc_id") % ReLabelMod === 1)))))
+              classifyShiftedCorpus(docs.filter(col("doc_id") % ReLabelMod === 1), waves = 2))))
       // consumer: the ACTIVE generation's tombstone-resolved chain —
       // removed docs absent; post-cutover this is the migrated
       // generation's scoring
@@ -3078,45 +3019,26 @@ object Events {
     * same floor. */
   def ingestClassifyCheck(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Classifier
-    val streamed = ingestClassify(spark, sfDir).persist()
-    val oracleLap = graft.operators.Snapshot.incrLap()
-    def accOf(split: String): Column =
-      sum(when(col("split") === split && col("pred") === col("label"), 1L)
-        .otherwise(0L)).cast("double") /
-        sum(when(col("split") === split, 1L).otherwise(0L))
-    val verdict = streamed.agg(
-      count(lit(1)).as("n_docs"),
-      sum(when(col("label"), 1L).otherwise(0L)).as("n_label_pos"),
-      sum(when(col("prob") < 0.0 || col("prob") > 1.0, 1L).otherwise(0L))
-        .as("n_prob_oob"),
-      (accOf("train") >= Classifier.TrainFloor).as("train_acc_ok"),
-      (accOf("holdout") >= Classifier.HoldoutFloor).as("holdout_acc_ok"))
-    val out = graft.Tables.materializeAndRelease(verdict, streamed)
-    oracleLap("oracle verify (floors + prob bounds)")
-    out
+    val streamed = ingestClassify(spark, sfDir)
+    oracleVerify("floors + prob bounds") { s =>
+      Classifier.floorVerdict(s.persist(streamed), Classifier.TrainFloor, Classifier.HoldoutFloor)
+        .drop("n_train", "n_holdout")
+    }
   }
 
-  /** The classifier migrate staging's closed-form truth: the SHIFTED
-    * corpus — `documents` with the wave slice's text label-shifted —
-    * which IS the converged live corpus (arrivals 3-5 re-deliver live
-    * text verbatim). ONE definition for the check twin, the spec's
-    * fresh-v2 reconstruction and the oracle's CTE (interpolated from
-    * the same [[LabelShiftSuffix]]). */
-  private[graft] def classifyShiftedCorpus(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      when(col("doc_id") % 5 === 0, concat(col("text"), lit(LabelShiftSuffix)))
-        .otherwise(col("text")).as("text"))
-
-  /** The SECOND-wave staging's closed-form truth (VERDICT r18 #5):
-    * after wave 2 the %5==1 slice carries the shift suffix too, so the
-    * converged live corpus is `documents` with BOTH wave slices
-    * shifted. ONE definition for the staging's live-text re-deliveries
-    * and the spec/soak fresh-g3 reconstruction. */
-  private[graft] def classifyShifted2Corpus(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      when(col("doc_id") % 5 === 0 || col("doc_id") % 5 === 1,
+  /** The classifier migrate staging's label shift and its closed-form
+    * truth: `docs` with the text of the first `waves` wave slices
+    * (%5==0, then %5==1) suffixed by [[LabelShiftSuffix]]. The staging
+    * writes it as the arrivals' LIVE text (full schema); over
+    * `documents` it IS the converged live corpus after `waves` waves
+    * (the later arrivals re-deliver live text verbatim), which the
+    * check twin, the specs and the soak rebuild from it. ONE
+    * definition; the oracle's CTE interpolates the same suffix. */
+  private[graft] def classifyShiftedCorpus(docs: DataFrame, waves: Int = 1): DataFrame =
+    docs.withColumn("text",
+      when((0 until waves).map(r => col("doc_id") % 5 === r).reduce(_ || _),
         concat(col("text"), lit(LabelShiftSuffix)))
-        .otherwise(col("text")).as("text"))
+        .otherwise(col("text")))
 
   /** Accuracy floors for the MIGRATED classifier (the `_migrate_check`
     * twin): generation 2 trains on the designated re-label slice — a
@@ -3157,39 +3079,26 @@ object Events {
     import graft.operators.Classifier
     val hooks = new LoopHooks(meters = Set(LoopHooks.Migration))
     val streamed = ingestClassify(spark, sfDir, driftPosRateJump = Some(DriftPosRateJumpDefault),
-      labelShiftArrival2 = true, hooks = hooks).persist()
+      labelShiftArrival2 = true, hooks = hooks)
     val probe = hooks(LoopHooks.Migration)
-    val oracleLap = graft.operators.Snapshot.incrLap()
-    val shifted = classifyShiftedCorpus(Tables.documents(spark, sfDir))
-    val freshModel = Classifier.fit(
-      Classifier.featurized(shifted.filter(col("doc_id") % ReLabelMod === 0)))
-    val fresh = Classifier.score(Classifier.featurized(shifted), freshModel)
-    // join-shaped equality, ONE mismatch-count scalar to the driver
-    // (VERDICT r17 #1 — the old shape collected both relations as
-    // corpus-width driver arrays); non-emptiness off the persisted
-    // streamed relation, so the check can't pass vacuously
-    val equalsFresh = streamed.limit(1).count() > 0 &&
-      scoredMismatchCount(streamed, fresh) == 0L
-    val tripped = probe.exists { case (e, s) => e >= 1 && s.contains("trip") }
-    val cutover = probe.exists(_._2.contains("cutover"))
-    def accOf(split: String): Column =
-      sum(when(col("split") === split && col("pred") === col("label"), 1L)
-        .otherwise(0L)).cast("double") /
-        sum(when(col("split") === split, 1L).otherwise(0L))
-    val verdict = streamed.agg(
-      count(lit(1)).as("n_docs"),
-      sum(when(col("label"), 1L).otherwise(0L)).as("n_label_pos"),
-      sum(when(col("prob") < 0.0 || col("prob") > 1.0, 1L).otherwise(0L))
-        .as("n_prob_oob"),
-      (accOf("train") >= MigrateTrainFloor).as("train_acc_ok"),
-      (accOf("holdout") >= MigrateHoldoutFloor).as("holdout_acc_ok"))
-      .select(col("n_docs"), col("n_label_pos"), col("n_prob_oob"),
-        lit(tripped).as("drift_tripped"), lit(cutover).as("cutover_done"),
-        lit(equalsFresh).as("migrated_equals_fresh"),
-        col("train_acc_ok"), col("holdout_acc_ok"))
-    val out = graft.Tables.materializeAndRelease(verdict, streamed)
-    oracleLap("oracle verify (fresh-g2 equality + floors)")
-    out
+    oracleVerify("fresh-g2 equality + floors") { s =>
+      val live = s.persist(streamed)
+      val shifted = classifyShiftedCorpus(Tables.documents(spark, sfDir))
+        .select(col("doc_id"), col("text"))
+      val freshModel = Classifier.fit(
+        Classifier.featurized(shifted.filter(col("doc_id") % ReLabelMod === 0)))
+      val fresh = Classifier.score(Classifier.featurized(shifted), freshModel)
+      // join-shaped equality, ONE mismatch-count scalar to the driver
+      // (VERDICT r17 #1 — the old shape collected both relations as
+      // corpus-width driver arrays); non-emptiness off the persisted
+      // streamed relation, so the check can't pass vacuously
+      val equalsFresh = live.limit(1).count() > 0 &&
+        scoredMismatchCount(live, fresh) == 0L
+      Classifier.floorVerdict(live, MigrateTrainFloor, MigrateHoldoutFloor)
+        .select(Seq(col("n_docs"), col("n_label_pos"), col("n_prob_oob")) ++
+          migrationFlags(probe) ++ Seq(lit(equalsFresh).as("migrated_equals_fresh"),
+          col("train_acc_ok"), col("holdout_acc_ok")): _*)
+    }
   }
 
   /** Distributed verbatim-equality over two scored classifier relations

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import graft.streaming.{Chain, ChainStore, Fold, GenerationalStore, LoopHooks, Retirements,
   Roles}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, sum}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * listing, the chunk cursor) and the plain store's recovery sweep,
   * commit gate and snapshot prune are file-level only, with no Spark
   * session; one leg compacts a small store through Spark, and one
-  * checks that a scope releases the frames it holds. */
+  * checks that a scope, and the bounded verdict built on one, releases
+  * the frames it holds. */
 class ChainStoreSpec extends AnyFunSuite {
   private val schema = StructType(Seq(StructField("k", LongType)))
 
@@ -347,5 +348,32 @@ class ChainStoreSpec extends AnyFunSuite {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = true)
     }
     assert(held() == before, s"releasing the kept frame left ${held() -- before} persisted")
+
+    // Tables.verdict, the `_check` queries' bounded verdict, runs its body
+    // in a root scope: a throwing body releases its frames and rethrows,
+    // a body over the 1000-row bound fails it and releases them, and a
+    // returning body's rows come back as a local relation with its schema
+    val thrownVerdict = intercept[IllegalStateException](Tables.verdict { s =>
+      s.persist(frame(37)).count()
+      throw boom
+    })
+    assert(thrownVerdict eq boom, "Tables.verdict must rethrow the body's own exception")
+    assert(held() == before, s"a throwing verdict body left ${held() -- before} persisted")
+    val unbounded = intercept[IllegalArgumentException](
+      Tables.verdict(s => s.persist(frame(1001))))
+    assert(unbounded.getMessage.contains("got 1001 rows"), unbounded.getMessage)
+    assert(held() == before, s"an unbounded verdict body left ${held() -- before} persisted")
+    var relation: DataFrame = null
+    val verdict = Tables.verdict { s =>
+      val f = s.persist(frame(41))
+      relation = f.agg(count(col("x")).as("n"), sum(col("x")).as("total"))
+      relation
+    }
+    assert(held() == before, s"a returning verdict body left ${held() -- before} persisted")
+    assert(verdict.schema == relation.schema, s"verdict schema ${verdict.schema}")
+    assert(verdict.collect().toSeq == Seq(org.apache.spark.sql.Row(41L, 820L)))
+    assert(verdict.queryExecution.logical.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "the verdict must not read the frames its body released")
   }
 }

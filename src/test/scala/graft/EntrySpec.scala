@@ -255,10 +255,10 @@ class EntrySpec extends AnyFunSuite {
   test("main code checkpoints and releases frames only through graft.Scope") {
     // One owner for every eager materialization and release: outside
     // graft/Scope.scala no code line may eagerly checkpoint, release a
-    // checkpoint, thread a checkpoint out-buffer or unpersist a frame.
-    // The one exception is Tables.materializeAndRelease, the bounded
-    // verdict helper of the `_check` queries. The lazy
-    // `localCheckpoint()` pins are not lifetimes and stay allowed.
+    // checkpoint, thread a checkpoint out-buffer or unpersist a frame;
+    // the `_check` queries' bounded verdicts release through it too
+    // (Tables.verdict). The lazy `localCheckpoint()` pins are not
+    // lifetimes and stay allowed.
     val tokens = Seq("localCheckpoint(true)", "releaseCheckpoint", "ckptOut", ".unpersist(")
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
     val files =
@@ -268,13 +268,25 @@ class EntrySpec extends AnyFunSuite {
       finally walk.close()
     val outside = files.flatMap { f =>
       val src = code(f)
-      val allowed = if (f.endsWith("graft/Tables.scala")) extent(src, "materializeAndRelease") else None
-      sites(f, src, 0, src.length, tokens).filterNot { site =>
-        val line = site.split(" ").head.split(":").last.toInt
-        allowed.exists { case (from, until) => line >= lineOf(src, from) && line <= lineOf(src, until) }
-      }
+      sites(f, src, 0, src.length, tokens)
     }
     assert(outside.isEmpty, s"frames materialized or released outside graft.Scope: ${outside.mkString(", ")}")
+  }
+
+  test("the six batch _check queries leave the persistent-RDD set as they found it") {
+    // each check persists its shared passes in Tables.verdict's scope,
+    // which releases them once the verdict rows are collected
+    val checks = Seq("dedup_minhash_lsh_check", "dedup_minhash_lsh_capped_check",
+      "dedup_simhash_check", "dedup_semantic_check", "ann_recall_check",
+      "text_classifier_check")
+    val leaks = checks.flatMap { name =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val rows = SparkEntry.queries(name)(spark, TestSpark.sf).collect()
+      val pinned = TestSpark.pinnedBeyond(before)
+      if (rows.nonEmpty && pinned.isEmpty) None
+      else Some(s"$name: ${rows.length} rows, RDDs $pinned pinned")
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
   }
 
   test("main code resolves no function by name and only NativeColumn reaches Spark's classic API") {

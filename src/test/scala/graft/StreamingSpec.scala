@@ -408,6 +408,7 @@ class StreamingSpec extends AnyFunSuite {
   private def classifyMigrateFreshBuild(): Seq[(Long, Boolean, String, Double, Boolean)] = {
     import graft.operators.Classifier
     val shifted = Events.classifyShiftedCorpus(Tables.documents(spark, TestSpark.sf))
+      .select(col("doc_id"), col("text"))
     val freshModel = Classifier.fit(
       Classifier.featurized(shifted.filter(col("doc_id") % Events.ReLabelMod === 0)))
     Classifier.score(Classifier.featurized(shifted), freshModel)
@@ -644,7 +645,8 @@ class StreamingSpec extends AnyFunSuite {
       s"completeness gate read more than the count chains (corpus $corpusN): $gate")
     // post-second-cutover scores equal a fresh generation-3 build over
     // the closed-form twice-shifted corpus
-    val shifted2 = Events.classifyShifted2Corpus(Tables.documents(spark, TestSpark.sf))
+    val shifted2 = Events.classifyShiftedCorpus(Tables.documents(spark, TestSpark.sf), waves = 2)
+      .select(col("doc_id"), col("text"))
     val fresh = Classifier.score(Classifier.featurized(shifted2),
       Classifier.fit(Classifier.featurized(
         shifted2.filter(col("doc_id") % Events.ReLabelMod === 0))))
@@ -902,49 +904,6 @@ class StreamingSpec extends AnyFunSuite {
       Tables.documents(spark, TestSpark.sf)).collect().toSeq
     assert(got.nonEmpty && got == want,
       "post-stores pre-verdict crash replay diverged from the batch twin")
-  }
-
-  test("OracleMemo: disabled by default, one compute per (kind, sfDir), distinct keys get distinct files, clear() removes the scratch") {
-    // VERDICT r18 #6: the memo changes Verify's oracle dataflow (it is
-    // enabled ONLY by graft.Verify, which clears it in a finally;
-    // nothing in graft.Bench references it, so a bench run's oracle
-    // path always computes fresh — pinned here as disabled-by-default).
-    import spark.implicits._
-    val memo = Events.OracleMemo
-    memo.clear() // pristine even if a prior leg enabled it
-    assert(!memo.enabled, "memo must be disabled by default")
-    var n = 0
-    def compute(tag: String) = { n += 1; Seq((tag, n)).toDF("tag", "n") }
-    memo.exactPairs(spark, "/tmp/sfA")(compute("a"))
-    memo.exactPairs(spark, "/tmp/sfA")(compute("a"))
-    assert(n == 2, "disabled memo must compute fresh on every call")
-    memo.enable()
-    try {
-      assert(memo.enabled)
-      n = 0
-      val a = memo.exactPairs(spark, "/tmp/sfA")(compute("a"))
-      memo.exactPairs(spark, "/tmp/sfA")(compute("a"))
-      assert(n == 1, "enabled memo must compute once per sfDir")
-      // a second sfDir and a second RELATION for the same sfDir each
-      // get their own memo file (ADVICE r18: the old dir name was the
-      // racy paths.size(), and the key ignored the compute identity)
-      val b = memo.exactPairs(spark, "/tmp/sfB")(compute("b"))
-      val c = memo.memo(spark, "other_relation", "/tmp/sfA")(compute("c"))
-      assert(n == 3)
-      assert(a.select("tag").head().getString(0) == "a" &&
-        b.select("tag").head().getString(0) == "b" &&
-        c.select("tag").head().getString(0) == "c",
-        "distinct memo keys aliased one scratch file")
-      val memoDir = java.nio.file.Paths
-        .get(new java.net.URI(a.inputFiles.head)).getParent
-      assert(java.nio.file.Files.isDirectory(memoDir))
-      memo.clear()
-      assert(!java.nio.file.Files.exists(memoDir),
-        "clear() left the memo scratch dir behind")
-      // post-clear calls compute fresh again (Verify's finally path)
-      memo.exactPairs(spark, "/tmp/sfA")(compute("a"))
-      assert(n == 4)
-    } finally memo.clear()
   }
 
   test("stream_ingest_classify converges to the batch-trained scoring, appends only deltas") {
@@ -1581,9 +1540,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("an Events loop runs on a session that never registered graft's functions") {
     // the decontam loop's Bloom gate and exact confirm both call the
-    // shingle kernel; the loop registers it on its own session
+    // shingle kernel, a native Column that needs no registration
     val bare = spark.newSession()
-    assert(!bare.catalog.functionExists(graft.functions.ShingleFunctions.ShingleName))
     val got = Events.ingestDecontamToFiles(bare, TestSpark.sf).collect().toSeq
     val want = Events.ingestDecontam(spark, TestSpark.sf).collect().toSeq
     assert(got.nonEmpty && got == want)
