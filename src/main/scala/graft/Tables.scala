@@ -27,14 +27,11 @@ object Tables {
     * never outlive the call, whether its caller is a one-shot query, a
     * spec rerunning it, or a library caller in a loop.
     */
-  def verdict(body: Scope => DataFrame): DataFrame = {
-    val (rows, df) = Scope.around { s =>
-      val df = body(s)
-      val rows = df.collect()
-      require(rows.length <= 1000,
-        s"Tables.verdict is for bounded verdict relations, got ${rows.length} rows")
-      (rows, df)
-    }
+  def verdict(body: Scope => DataFrame): DataFrame = Scope.around { s =>
+    val df = body(s)
+    val rows = df.collect()
+    require(rows.length <= 1000,
+      s"Tables.verdict is for bounded verdict relations, got ${rows.length} rows")
     df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 

@@ -3084,7 +3084,6 @@ object Events {
     oracleVerify("fresh-g2 equality + floors") { s =>
       val live = s.persist(streamed)
       val shifted = classifyShiftedCorpus(Tables.documents(spark, sfDir))
-        .select(col("doc_id"), col("text"))
       val freshModel = Classifier.fit(
         Classifier.featurized(shifted.filter(col("doc_id") % ReLabelMod === 0)))
       val fresh = Classifier.score(Classifier.featurized(shifted), freshModel)

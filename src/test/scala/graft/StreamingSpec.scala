@@ -408,7 +408,6 @@ class StreamingSpec extends AnyFunSuite {
   private def classifyMigrateFreshBuild(): Seq[(Long, Boolean, String, Double, Boolean)] = {
     import graft.operators.Classifier
     val shifted = Events.classifyShiftedCorpus(Tables.documents(spark, TestSpark.sf))
-      .select(col("doc_id"), col("text"))
     val freshModel = Classifier.fit(
       Classifier.featurized(shifted.filter(col("doc_id") % Events.ReLabelMod === 0)))
     Classifier.score(Classifier.featurized(shifted), freshModel)
@@ -646,7 +645,6 @@ class StreamingSpec extends AnyFunSuite {
     // post-second-cutover scores equal a fresh generation-3 build over
     // the closed-form twice-shifted corpus
     val shifted2 = Events.classifyShiftedCorpus(Tables.documents(spark, TestSpark.sf), waves = 2)
-      .select(col("doc_id"), col("text"))
     val fresh = Classifier.score(Classifier.featurized(shifted2),
       Classifier.fit(Classifier.featurized(
         shifted2.filter(col("doc_id") % Events.ReLabelMod === 0))))

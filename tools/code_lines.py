@@ -3,11 +3,11 @@
 entirely comment. Block comments (`/* ... */`, scaladoc included) are
 skipped whole; a line with code before or after a comment counts.
 
-    python3 tools/code_lines.py src/main                 # one total
-    python3 tools/code_lines.py --files src/main/scala/graft/streaming
+    python3 tools/code_lines.py src/main
+    python3 tools/code_lines.py src/main/scala/graft/streaming/Events.scala
 
-Each argument is a file or a directory (searched for *.scala). With
-`--files`, one `<count> <path>` line per file precedes the total.
+Each argument is a file or a directory (searched for *.scala); the
+script prints one total over all of them.
 """
 import argparse
 import os
@@ -54,7 +54,6 @@ def scala_files(path):
 def main():
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("paths", nargs="+")
-    p.add_argument("--files", action="store_true", help="print a count per file")
     a = p.parse_args()
     total = 0
     for path in a.paths:
@@ -62,10 +61,7 @@ def main():
             sys.exit(f"no such file or directory: {path}")
         for f in scala_files(path):
             with open(f, encoding="utf-8") as fh:
-                n = code_lines(fh.read())
-            if a.files:
-                print(f"{n} {f}")
-            total += n
+                total += code_lines(fh.read())
     print(total)
 
 
